@@ -62,7 +62,7 @@ object Bench {
     * — the same consolidation the session conf got in r14 (Harness).
     * Per-step economics are documented inline below. */
   def warmPreTimingState(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      jitWarmupDir: String, tag: String = "bench"): Unit = {
+      tag: String = "bench"): Unit = {
     // Untimed warm-up: read every table once so footer caching, reader
     // JIT, and codegen infrastructure aren't billed to the first measured
     // query.
@@ -177,10 +177,10 @@ object Bench {
     locally {
       val t0 = System.nanoTime()
       SparkEntry.queries.foreach { case (name, fn) =>
-        try fn(spark, jitWarmupDir).queryExecution.toRdd.count()
+        try fn(spark, sfDir).queryExecution.toRdd.count()
         catch { case _: Throwable => () }
       }
-      System.err.println(f"[$tag] JIT warm-up pass ($jitWarmupDir, untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      System.err.println(f"[$tag] JIT warm-up pass ($sfDir, untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
   }
 
@@ -206,23 +206,12 @@ object Bench {
     // Session conf lives in core.Harness — ONE certified base for every
     // harness main (the r14 drift class: Bench silently lacked the UTC
     // time zone the other mains certified). Bench's deltas: env-sized
-    // cores, the codegen-cache A/B override (SPARK_GRAFT_CODEGEN_CACHE
-    // exists solely for the paired same-host receipt; the production
-    // value is the certified 2000 default), and the RAM-backed
-    // measurement scratch.
-    val spark = graft.core.Harness.session(cpus,
-      codegenCache = Some(sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000")),
-      measurementScratch = shm)
+    // cores and the RAM-backed measurement scratch.
+    val spark = graft.core.Harness.session(cpus, measurementScratch = shm)
     // The full untimed setup — table warm-up, one-time seeds/memos, the
     // registry JIT pass — lives in warmPreTimingState (one body, shared
     // with Profile's JITPASS mode; per-step economics documented there).
-    // SPARK_GRAFT_JIT_WARMUP_DIR exists SOLELY for the one-time paired
-    // protocol receipt (ADVICE r16 #2): set it to /root/testdata/sf0.001
-    // to reproduce the pre-r16 warm-up protocol on the same binary and
-    // window, so the protocol delta in value_first is separable from
-    // code-driven deltas. The production default is the measured fixture.
-    warmPreTimingState(spark, sfDir,
-      jitWarmupDir = sys.env.getOrElse("SPARK_GRAFT_JIT_WARMUP_DIR", sfDir))
+    warmPreTimingState(spark, sfDir)
     // The warm map below remains the per-entry steady-state receipt.
     // toRdd.count() consumes the query's own physical plan, forcing every
     // output column to materialize — df.count() would let the optimizer

@@ -17,34 +17,21 @@ object Profile {
     // Session conf lives in core.Harness (one certified base for all
     // mains). Profile's deltas: big driver results (streaming entries
     // verify through a memory sink; at 100x an O(input)-output entry
-    // like s_scd2 trips the 1g collect cap), the GRAFT_CHANGELOG A/B
-    // hook, the measurement scratch, and — preserved from its
-    // pre-consolidation conf — the DEFAULT codegen cache: Profile times
-    // a handful of plans per run, far under the default 100, so the
-    // sweep-sized 2000 is Bench/Verify's concern, not Profile's.
+    // like s_scd2 trips the 1g collect cap), the measurement scratch,
+    // and the DEFAULT codegen cache: Profile times a handful of plans
+    // per run, far under the default 100, so the sweep-sized 2000 is
+    // Bench/Verify's concern, not Profile's.
     val spark = graft.core.Harness.session("32",
       bigDriverResults = true,
-      changelog = sys.env.getOrElse("GRAFT_CHANGELOG", "true"),
       codegenCache = None,
       measurementScratch = shm)
     // SPARK_GRAFT_JITPASS=1 replicates Bench's pre-timing state so a
     // first-timed-run cost seen ONLY inside Bench sweeps can be
-    // reproduced and decomposed in isolation. Since r17 this CALLS
-    // Bench's own warmPreTimingState (ADVICE r16 #3: the previous
-    // inline copy had drifted back to the r15 protocol — sf0.001
-    // warm-up, no ensure* steps — after r16 moved the real warm-up to
-    // the measured fixture); one body, no drift. The legacy r15
-    // protocol remains reproducible via SPARK_GRAFT_JIT_WARMUP_DIR.
-    // GRAFT_SMALL_STATE_WIDTH: paired-receipt hook for the streaming
-    // small-fixture state width (spark.graft.stream.smallStateWidth) —
-    // same A/B role as GRAFT_CHANGELOG above.
-    sys.env.get("GRAFT_SMALL_STATE_WIDTH").foreach(v =>
-      spark.conf.set("spark.graft.stream.smallStateWidth", v))
-    if (sys.env.contains("SPARK_GRAFT_JITPASS")) {
-      Bench.warmPreTimingState(spark, sfDir,
-        jitWarmupDir = sys.env.getOrElse("SPARK_GRAFT_JIT_WARMUP_DIR", sfDir),
-        tag = "profile")
-    }
+    // reproduced and decomposed in isolation. It CALLS Bench's own
+    // warmPreTimingState (ADVICE r16 #3: an inline copy had drifted from
+    // the real protocol); one body, no drift.
+    if (sys.env.contains("SPARK_GRAFT_JITPASS"))
+      Bench.warmPreTimingState(spark, sfDir, tag = "profile")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to 2).foreach { i =>

@@ -12,45 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.sql.shuffle.partitions` sized to ~2-3x total cores.
   */
 object Engine {
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Production state store (VERDICT r8 #1): RocksDB spills state to
-      // local disk, so stateful streaming queries (sessionization, dedup,
-      // stateful counts) hold O(keys) state off-heap instead of degrading
-      // the JVM heap — measured 54.4 s vs 117 s (and repeat-run-stable vs
-      // degrading 298/362 s) on the 100x session receipt. The default
-      // HDFSBacked (heap) provider remains available via
-      // SessionConf.scoped for A/B runs (Receipts "session").
-      // Codegen-cache sized to the workload (static conf, default 100):
-      // the registry compiles ~209 distinct plans, so the default cache
-      // LRU-evicts across a sweep — the class of recompile that forced
-      // the canary's own re-warm-up at >155 plans. Sweep totals measured
-      // noise-dominated either way; this is the root-cause fix for the
-      // eviction class, and how a production deployment running this
-      // query surface would size the cache.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit the per-batch CHANGELOG instead of
-      // a full RocksDB snapshot — the recommended production pairing for the
-      // RocksDB provider, and what keeps its per-micro-batch constant cost
-      // flat at small state sizes.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      // Local fixtures are single small parquet files; without a small
-      // split cap every scan is one task. Production deployments override
-      // per cluster (default 128m is right for real file sizes).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
+    Harness.start(sessionConf(master, shufflePartitions))
+
+  /** The engine session's conf: the certified base (core.Harness — UTC,
+    * RocksDB state store with changelog checkpointing, the sized codegen
+    * cache, the 4m fixture split cap) plus the engine's app name and an
+    * explicit AQE on. Pure, so specs can pin it without a session.
+    */
+  def sessionConf(master: String, shufflePartitions: Int): Map[String, String] =
+    Harness.conf(master, shufflePartitions) ++ Map(
+      "spark.app.name" -> "graft",
+      "spark.sql.adaptive.enabled" -> "true")
 
   /** Config-driven bootstrap (R9): the reference loads kafkaConfig.conf
     * via Typesafe Config and wires it into the environment
@@ -114,6 +87,30 @@ object Tables {
       if (name == "events") normalizeEventsTs(df)
       else df
     }
+  }
+
+  /** Seed-cache tag for the fixture table `<sfDir>/<name>.parquet`: the
+    * directory of a marker-gated seed derived from that table. It is
+    * `<version>-<hex(sfDir hash ^ mtime)>-<hex(length)>`, so a regenerated
+    * fixture lands in a fresh seed directory and never adopts a stale one;
+    * bump `version` when the seed's own layout changes. A fixture laid
+    * out as a DIRECTORY (ScaleGen replicas) uses the newest mtime and the
+    * summed length over the directory and every file beneath it — the
+    * directory's own mtime does not move when a part file is rewritten in
+    * place. A single-file fixture uses the file's own mtime and length.
+    */
+  def fixtureTag(version: String, sfDir: String, name: String): String = {
+    val f = new java.io.File(sfDir, s"$name.parquet")
+    val (mtime, len) =
+      if (f.isDirectory) {
+        def files(d: java.io.File): Seq[java.io.File] =
+          Option(d.listFiles()).toSeq.flatten
+            .flatMap(c => if (c.isDirectory) files(c) else Seq(c))
+        val fs = files(f)
+        ((f +: fs).map(_.lastModified()).max, fs.map(_.length()).sum)
+      } else (f.lastModified(), f.length())
+    s"$version-" + java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ mtime) +
+      "-" + java.lang.Long.toHexString(len)
   }
 
   /** Normalize every ts layout to session-zone TimestampType at

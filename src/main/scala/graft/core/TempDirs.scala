@@ -20,7 +20,7 @@ object TempDirs {
   }
 
   /** Optional scratch root (`-Dgraft.tmp.root=...`): the measurement
-    * harnesses (Bench/Profile/Receipts) point it at the RAM-backed
+    * harnesses (Bench/Profile) point it at the RAM-backed
     * local dir (/dev/shm) so per-run scratch copies, checkpoints, and
     * state stores ride the local-disk class a production executor node
     * has, instead of this host's shared noisy-neighbor /tmp device —

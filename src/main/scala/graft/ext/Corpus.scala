@@ -12,13 +12,14 @@ import graft.core.{QueryDef, QueryModule, Tables}
   * batches": benchmark decontamination, token packing into fixed-budget
   * sequences, TF-IDF term weighting, and target-mixture resampling.
   *
-  * Scale design: decontamination shuffles 16-byte gram digests (never the
-  * text); packing is a per-shard (source-partitioned) window, so shards
-  * pack in parallel instead of through one global running sum; TF-IDF's
-  * shuffles are vocabulary-sized after map-side partial aggregation; the
-  * mixture sampler is a row-local integer-hash threshold against
-  * broadcast per-source rates. Nothing here carries a document body
-  * through an exchange except the sampler's pass-through of selected rows.
+  * Scale design: decontamination shuffles 8-byte xxhash64 gram digests
+  * (never the text); packing is a per-shard (source-partitioned) window,
+  * so shards pack in parallel instead of through one global running sum;
+  * TF-IDF's shuffles are vocabulary-sized after map-side partial
+  * aggregation; the mixture sampler is a row-local integer-hash threshold
+  * against broadcast per-source rates. Nothing here carries a document
+  * body through an exchange except the sampler's pass-through of selected
+  * rows.
   */
 object Corpus extends QueryModule {
 
@@ -367,12 +368,12 @@ object Corpus extends QueryModule {
     * hash aggregate PARTIALLY aggregates map-side, so despite the ×dim
     * row amplification only (tasks × labels × dim) scalar buffers ever
     * cross the exchange. Measured against a typed Aggregator carrying a
-    * dim-length array buffer per group (`Receipts centroids`): the
-    * codegen'd explode shape won at every fixture scale, including
-    * row-cardinality group counts (0.54 s vs 1.30 s warm at 100×) —
-    * the per-row object encoder costs more than the wider hash state
-    * saves, so "functions, not UDFs" holds even for array-valued
-    * aggregation.
+    * dim-length array buffer per group (Udafs.CentroidAgg; SURVEY §2.2's
+    * q_embed_centroids row): the codegen'd explode shape won at every
+    * fixture scale, including row-cardinality group counts (0.54 s vs
+    * 1.30 s warm at 100×) — the per-row object encoder costs more than
+    * the wider hash state saves, so "functions, not UDFs" holds even for
+    * array-valued aggregation.
     */
   private def embedCentroids(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "embeddings")

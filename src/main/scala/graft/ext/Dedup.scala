@@ -171,9 +171,9 @@ object Dedup extends QueryModule {
     * arithmetic and the fixture's ~100-token docs need a width the oracle
     * actually exercises. The registry entry uses this default; spansOf /
     * spansOfNaive take the width as a parameter — DedupSpec pins
-    * staged==naive and exact boundaries at width 50, and `Receipts span`
-    * receipts the production width over a long-document fixture
-    * (`Receipts longdocs`).
+    * staged==naive and exact boundaries at width 50, and SURVEY §14
+    * ("Production-width span dedup receipt") records the production width
+    * over the long-document fixture `ScaleGen longdocs` writes.
     */
   private val SpanGram = 8
 
@@ -195,10 +195,10 @@ object Dedup extends QueryModule {
     * pos' - pos <= SpanGram).
     *
     * Scale shape: the duplicated-digest aggregate and the semi-join both
-    * shuffle (digest16, doc_id, pos) — never text; the island merge is
-    * one thin (doc_id, pos)-rows window per doc. Docs shorter than
-    * SpanGram words have no full shingle and are skipped (they are
-    * exact-dedup's job, not span removal's).
+    * shuffle (8-byte xxhash64 digest, doc_id, pos) — never text; the
+    * island merge is one thin (doc_id, pos)-rows window per doc. Docs
+    * shorter than SpanGram words have no full shingle and are skipped
+    * (they are exact-dedup's job, not span removal's).
     */
   private def dedupSpans(spark: SparkSession, sfDir: String): DataFrame =
     spansOf(Tables(spark, sfDir, "documents"))
@@ -586,14 +586,8 @@ object Dedup extends QueryModule {
 
   private val MinhashRoot = "/tmp/graft_minhash"
 
-  /** Fixture tag: path + ms mtime + byte length (the IVF index's
-    * regeneration-proof scheme).
-    */
-  private def minhashTag(sfDir: String): String = {
-    val f = new java.io.File(sfDir, "documents.parquet")
-    "v1-" + java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ f.lastModified()) +
-      "-" + java.lang.Long.toHexString(f.length())
-  }
+  /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
+  private def minhashTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "documents")
 
   private[graft] def readBatchManifest(dir: String): Seq[Long] = {
     val s = new String(java.nio.file.Files.readAllBytes(

@@ -372,14 +372,9 @@ object Multimodal extends QueryModule {
   /** The dirs a complete phash layout comprises (manifest aside). */
   private[graft] val PhashLayoutSubs = Seq("postings")
 
-  private def phashIndexTag(sfDir: String): String = {
-    val f = new java.io.File(sfDir, "documents.parquet")
-    val len =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-    "v1-" + java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ f.lastModified()) +
-      "-" + java.lang.Long.toHexString(len)
-  }
+  /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
+  private def phashIndexTag(sfDir: String): String =
+    Tables.fixtureTag("v1", sfDir, "documents")
 
   /** (doc_id, ph) signatures of a (doc_id, text) frame — blob synthesis +
     * phash64 fused in one mapPartitions pass; the blob dies in the task.

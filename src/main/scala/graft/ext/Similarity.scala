@@ -1711,24 +1711,16 @@ object Similarity extends QueryModule {
     */
   private[graft] val IvfDriftThreshold = 4.0
 
-  /** Stable per-fixture tag (same scheme as the blob/bucketed seeds):
-    * source dir + fixture mtime at MILLISECOND resolution + byte length,
-    * so a regenerated fixture — even one rewritten in place within the
-    * same second — never reuses a stale index (the layout-drift failure
-    * mode the events fixture has actually exhibited across rounds).
+  /** Per-fixture seed tag (core.Tables.fixtureTag over embeddings).
+    * "v6": PQ codes are RESIDUAL-encoded (IVFADC, r11) — probes against a
+    * v5 whole-vector-coded layout would ADC-score garbage. Earlier: v5
+    * added the manifest's build-time audited ADC error (the range margin
+    * derives from it), v4 moved PQ codes to the Ks=256 codebook, v3 added
+    * metadata columns (label) for filtered probes, v2 the PQ `code`
+    * column + `codebooks/`. The version prefix keeps an earlier seeded
+    * dir from being adopted with the wrong schema/codebook.
     */
-  private def ivfTag(sfDir: String): String = {
-    val f = new java.io.File(sfDir, "embeddings.parquet")
-    // "v6": PQ codes are RESIDUAL-encoded (IVFADC, r11) — probes against
-    // a v5 whole-vector-coded layout would ADC-score garbage. Earlier:
-    // v5 added the manifest's build-time audited ADC error (the range
-    // margin derives from it), v4 moved PQ codes to the Ks=256 codebook,
-    // v3 added metadata columns (label) for filtered probes, v2 the PQ
-    // `code` column + `codebooks/`. The version prefix keeps an earlier
-    // seeded dir from being adopted with the wrong schema/codebook.
-    "v6-" + java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ f.lastModified()) +
-      "-" + java.lang.Long.toHexString(f.length())
-  }
+  private def ivfTag(sfDir: String): String = Tables.fixtureTag("v6", sfDir, "embeddings")
 
   /** Commit record for the persisted postings layout. Probes read ONLY
     * `batch_id` partitions listed in `batches`; a writer publishes a
@@ -2317,8 +2309,9 @@ object Similarity extends QueryModule {
     * applied once per fixture (disclosed untimed seed economics, like
     * the base seed); the entries then time their OPERATORS (compact /
     * delete + probe) against per-run copies. Streamed appends stay
-    * timed in s_ann_ingest, and `Receipts ivfappend` prices a single
-    * batch append.
+    * timed in s_ann_ingest; a single batch append's price is in SURVEY
+    * §14 (round-8 addendum: 1.28 s for 2000 vectors into the 200k-vector
+    * index).
     */
   private[graft] def ensureAppendedIvfSeed(spark: SparkSession, sfDir: String): String = {
     val e = Tables(spark, sfDir, "embeddings")
@@ -2805,7 +2798,7 @@ object Similarity extends QueryModule {
   /** Sub-quantizer size. 256 codes per sub-space (the faiss-standard 8
     * bits) at the same M=8 is the same 8 B/vector storage as the earlier
     * Ks=16 — 16× finer sub-quantizers for free; measured worst-case ADC
-    * recall@10 at nprobe=4 rose 0.63 → see `Receipts recall` (r10).
+    * recall@10 at nprobe=4 rose 0.63 → 0.913 (SURVEY §16, "PQ Ks=256").
     */
   private[graft] val PqKs = 256
   /** Candidate multiplier for the exact re-rank of ADC-ranked codes. */

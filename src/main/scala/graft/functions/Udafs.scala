@@ -98,9 +98,10 @@ object Udafs {
 
   /** Element-wise mean of an embedding column as a typed Aggregator —
     * kept as the measured ALTERNATIVE behind q_embed_centroids' design
-    * choice (`Receipts centroids`), not its implementation. The buffer
-    * is one dim-length double vector + count (map-side combine, narrow
-    * hash state: one entry per group vs posexplode's dim entries).
+    * choice (SURVEY §2.2's q_embed_centroids row), not its
+    * implementation. The buffer is one dim-length double vector + count
+    * (map-side combine, narrow hash state: one entry per group vs
+    * posexplode's dim entries).
     * Measured crossover: at FEW groups the typed path edges ahead
     * (encoder cost amortizes, hash table narrow), but at row-cardinality
     * group counts it loses 3× to the fully codegen'd posexplode +

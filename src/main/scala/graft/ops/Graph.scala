@@ -550,8 +550,10 @@ object Graph extends QueryModule {
     * The round count is the other lever: each round also POINTER-JUMPS
     * (adopts the label of the current label via one node-sized
     * self-join), so rounds = O(log diameter) instead of O(diameter) —
-    * `Receipts cc` pins it: a 2^14-node path (diameter 16383, plain
-    * propagation's worst case) converges in exactly 15 rounds. The
+    * GraphSpec's "ccOn: pointer jumping converges in O(log d) rounds"
+    * pins the bound, and SURVEY §17 (round-11 continuation 4) records a
+    * 2^14-node path (diameter 16383, plain propagation's worst case)
+    * converging in exactly 15 rounds. The
     * label-frame shuffles are width-sized by [[ccPartitionsFor]]
     * (node-sized frames under the session's fact-sized partition count
     * are pure scheduling floor at fixture scale).
@@ -645,17 +647,10 @@ object Graph extends QueryModule {
 
   private val CcSeedRoot = "/tmp/graft_cc"
 
-  /** Fixture tag for the persisted base labels (mtime+length catches
-    * driver-regenerated testdata, like the index seeds).
+  /** Fixture tag for the persisted graph seeds (cc, pagerank, lpa) —
+    * all derived from lineitem.
     */
-  private def ccTag(sfDir: String): String = {
-    val f = new java.io.File(sfDir, "lineitem.parquet")
-    val len =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-    "v1-" + java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ f.lastModified()) +
-      "-" + java.lang.Long.toHexString(len)
-  }
+  private def ccTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "lineitem")
 
   /** Marker-gated persisted base labels: the qty≤[[CcMaxQty]] subgraph's
     * fixpoint labels, computed once per fixture — the same disclosed
@@ -907,7 +902,7 @@ object Graph extends QueryModule {
 
   /** Zip per-round LPA labels into the (node, l1..lk) seed frame
     * [[lpaMergeBatch]] expects — THE implementation (r15: it used to
-    * exist in three copies — [[ensureLpaLabelsSeed]], Receipts' ring
+    * exist in three copies — [[ensureLpaLabelsSeed]], a ring-graph
     * receipt, GraphSpec's in-memory twin).
     */
   private[graft] def lpaSeedFrame(labels: Seq[DataFrame]): DataFrame =

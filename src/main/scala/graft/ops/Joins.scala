@@ -143,9 +143,8 @@ object Joins extends QueryModule {
       .orderBy("s_suppkey", "c_custkey")
   }
 
-  /** The naive pure-theta twin (BroadcastNestedLoopJoin) — receipt
-    * apparatus for q_join_range_binned's O(n·m) baseline, like
-    * Scalars.mathProjection.
+  /** The naive pure-theta twin (BroadcastNestedLoopJoin) — the O(n·m)
+    * baseline q_join_range_binned must match row-for-row (JoinsSpec).
     */
   private[graft] def joinRangeNaive(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "supplier").select(col("s_suppkey"), col("s_acctbal"))

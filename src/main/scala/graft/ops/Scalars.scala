@@ -57,10 +57,11 @@ object Scalars extends QueryModule {
   /** The q_math_funcs projection WITHOUT the oracle-determinism global
     * ORDER BY — the form a production sink consumes (sinks don't need
     * total order; the sort is a range exchange + full sort over every
-    * output row, THE scale cost of the oracle form — measured 84-99 s of
-    * its 100x time). Exposed for the at-scale receipt (Receipts math).
+    * output row, THE scale cost of the oracle form — SURVEY §14's
+    * "q_math_funcs production-form receipt at 100×" row: 128.9 s oracle
+    * form vs 58.7 s without the sort).
     */
-  private[graft] def mathProjection(spark: SparkSession, sfDir: String): DataFrame =
+  private def mathProjection(spark: SparkSession, sfDir: String): DataFrame =
     // spread (r17): the BigDecimal HALF_UP rounds are the projection's
     // cost and sit scan-side; the rebalanced exchange also gets REUSED by
     // the oracle orderBy's range-sampling pass, so the scan+projection no
@@ -79,25 +80,6 @@ object Scalars extends QueryModule {
         (col("l_linenumber") % 3).as("ln_mod"),
         round(sqrt(col("l_extendedprice")), 4).as("price_sqrt"),
         round(pow(col("l_tax"), 2), 6).as("tax_sq"))
-
-  /** mathProjection with the per-row HALF_UP round() calls removed (raw
-    * doubles) — isolates the java.math.BigDecimal cost of bit-matching
-    * DuckDB's decimal rounding, the second scale cost named in the
-    * q_math_funcs attribution. A production pipeline defers display
-    * rounding to the consumer or rounds post-aggregation.
-    */
-  private[graft] def mathProjectionNoRound(spark: SparkSession, sfDir: String): DataFrame =
-    Tables(spark, sfDir, "lineitem")
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        (floor(col("l_extendedprice") * lit(1.1) * lit(100)).cast(DoubleType) / lit(100.0))
-          .as("price_up"),
-        abs(col("l_discount") - lit(0.05)).as("disc_dev"),
-        ceil(col("l_quantity")).as("qty_ceil"),
-        floor(col("l_quantity")).as("qty_floor"),
-        (col("l_linenumber") % 3).as("ln_mod"),
-        sqrt(col("l_extendedprice")).as("price_sqrt"),
-        pow(col("l_tax"), 2).as("tax_sq"))
 
   private def jsonFuncs(spark: SparkSession, sfDir: String): DataFrame = {
     // json_get (graft.functions.JsonGet): linear-scan field extraction in

@@ -84,9 +84,9 @@ object Streaming extends QueryModule {
   private def smallStateWidth(spark: SparkSession): Int = {
     val key = "spark.graft.stream.smallStateWidth"
     val raw = spark.conf.get(key, "8")
-    // trim (ADVICE r17 #2): a value sourced from the GRAFT_SMALL_STATE_WIDTH
-    // env hook can carry incidental shell whitespace ('8\n'); the intent is
-    // unambiguous, so resolve it rather than failing at entry.
+    // trim (ADVICE r17 #2): a value sourced from a shell (`--conf` or an
+    // env-templated conf file) can carry incidental whitespace ('8\n');
+    // the intent is unambiguous, so resolve it rather than failing at entry.
     val n = try raw.trim.toInt catch {
       case _: NumberFormatException =>
         throw new IllegalArgumentException(
@@ -175,15 +175,12 @@ object Streaming extends QueryModule {
     * entry's own input every run billed input synthesis to the operator.
     * Same disclosed untimed one-time-input economics as q_jdbc_snapshot's
     * embedded-Derby import (the R15 endpoint stand-in); Bench warms it in
-    * its explicit ensure* section. Fixture tag = events.parquet
-    * mtime+length (the index seeds' regeneration-proof scheme).
+    * its explicit ensure* section. Seed tag: core.Tables.fixtureTag over
+    * events.
     */
   private[graft] def ensureCanalTopic(spark: SparkSession, sfDir: String): String = {
-    val f = new java.io.File(sfDir, "events.parquet")
-    val tag = "v1-" + java.lang.Long.toHexString(
-      (sfDir.hashCode.toLong << 24) ^ f.lastModified()) +
-      "-" + java.lang.Long.toHexString(f.length())
-    val dir = new java.io.File("/tmp/graft_canal_topic", tag)
+    val dir = new java.io.File("/tmp/graft_canal_topic",
+      graft.core.Tables.fixtureTag("v1", sfDir, "events"))
     val marker = new java.io.File(dir, "_SEEDED")
     if (!marker.exists()) {
       graft.core.Warehouse.deleteRecursively(dir)

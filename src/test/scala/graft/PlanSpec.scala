@@ -216,8 +216,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
   }
 
   test("q_decontaminate never shuffles document text") {
-    // The semi-join and count exchange md5 digests + doc ids; the raw text
-    // column must be consumed scan-side.
+    // The semi-join and count exchange 8-byte xxhash64 gram digests + doc
+    // ids; the raw text column must be consumed scan-side.
     assertNoColsOnExchanges(plan("q_decontaminate"), Seq("text"))
   }
 
@@ -229,8 +229,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
 
   test("q_dedup_spans shuffles digests and positions, never text or token arrays") {
     // Both shuffles (dup-digest aggregate, position semi-join) and the
-    // island-merge window must carry (digest16, doc_id, pos) rows only —
-    // the shingle text and the split token array die scan-side.
+    // island-merge window must carry (8-byte xxhash64 digest, doc_id, pos)
+    // rows only — the shingle text and the split token array die scan-side.
     assertNoColsOnExchanges(plan("q_dedup_spans"), Seq("text", "w"))
   }
 

@@ -11,31 +11,16 @@ trait SparkTest {
 }
 
 object SparkTest {
+  /** The shared spec session's conf, pinned by HarnessSpec. */
+  val conf: Map[String, String] =
+    graft.core.Harness.conf("local[4]", 4, splitSmallFiles = false)
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same production state store as Engine.session: specs certify the
-      // configuration that runs at scale (RocksDB), not the heap default.
-      // Codegen-cache sized to the workload (static conf, default 100):
-      // the registry compiles ~209 distinct plans, so the default cache
-      // LRU-evicts across a sweep — the class of recompile that forced
-      // the canary's own re-warm-up at >155 plans. Sweep totals measured
-      // noise-dominated either way; this is the root-cause fix for the
-      // eviction class, and how a production deployment running this
-      // query surface would size the cache.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit the per-batch CHANGELOG instead of
-      // a full RocksDB snapshot — the recommended production pairing for the
-      // RocksDB provider, and what keeps its per-micro-batch constant cost
-      // flat at small state sizes.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // The certified conf (core.Harness) at spec width: the production
+    // RocksDB state store and codegen-cache sizing, so specs certify the
+    // configuration that runs at scale. No 4m split cap — spec inputs
+    // are tiny.
+    val s = graft.core.Harness.start(conf)
     // The registry's four DELIBERATE metadata-scale global windows
     // (skyline's per-price frontier, string-index's category rank,
     // hybrid-rank's two ≤100-row RRF lists) would spam WindowExec's
