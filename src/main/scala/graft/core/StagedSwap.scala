@@ -2,13 +2,14 @@ package graft.core
 
 /** Crash-safe in-place replacement of a persisted index layout — the
   * staged-rename + atomic-manifest protocol appends/deletes/compactions
-  * already follow, extended to whole-layout rebuilds.
+  * already follow, extended to whole-layout rebuilds. Its one caller is
+  * [[PersistedIndex.rebuild]], so every index family (MinHash, pHash,
+  * semdedup, IVF) rebuilds through it.
   *
-  * The rebuilds (`ivfIndexRebuild`, `semdedupIndexRebuild`,
-  * `minhashIndexRebuild`) previously rewrote the live layout dirs with
-  * `mode("overwrite")` BEFORE committing the fresh manifest, so a crash
-  * mid-rebuild could leave the old manifest referencing destroyed batch
-  * dirs. Here instead `build(stageDir)` writes a COMPLETE fresh layout
+  * Rewriting the live layout dirs with `mode("overwrite")` BEFORE
+  * committing the fresh manifest would let a crash mid-rebuild leave the
+  * old manifest referencing destroyed batch dirs. Here instead
+  * `build(stageDir)` writes a COMPLETE fresh layout
   * (every `subs` dir plus `manifest.json`) into a sibling dot-staging
   * directory while the live layout stays untouched; the swap then
   * renames each live sub-dir aside and the staged one in, and finally
@@ -20,8 +21,8 @@ package graft.core
   *    dir is GC'd by [[recover]] on the next mutation.
   *  - mid-swap: the live manifest still references the OLD layout and
   *    every displaced sub-dir sits intact in the aside dir; [[recover]]
-  *    (run under the writer lease at the start of every swap, and by the
-  *    index families' other mutators) moves them back. Until that runs,
+  *    (run under the writer lease by every [[PersistedIndex]] mutator
+  *    before it reads anything) moves them back. Until that runs,
   *    a reader may see a torn old/new dir mix — the window is a few
   *    renames wide, and single-writer local form accepts it; the 100 TB
   *    deployment shape is the same staging with a POINTER swap, where

@@ -25,15 +25,16 @@ object Warehouse {
   /** Clone an immutable marker-gated seed template into a fresh scratch
     * dir for one run's mutations, dropping the `_SEEDED` marker so the
     * copy is never mistaken for a template. No Spark jobs. The one
-    * shared definition of the template-scratch idiom every index family
-    * and receipt uses.
+    * shared definition of the template-scratch idiom the lifecycle
+    * entries of every index family use.
     *
     * HARDLINKS, not byte copies (r13 bench reclaim): every index
-    * mutation in the codebase writes NEW files — appends and deletes
-    * stage fresh directories and atomically rename them, compaction and
-    * StagedSwap rebuilds unlink old directories (safe: the template
-    * keeps its own link), and manifest commits replace the directory
-    * entry via tmp + ATOMIC_MOVE without touching the linked inode.
+    * mutation (core.PersistedIndex) writes NEW files — appends and
+    * deletes stage fresh directories and atomically rename them,
+    * compaction and StagedSwap rebuilds unlink old directories (safe:
+    * the template keeps its own link), and manifest commits replace the
+    * directory entry via tmp + ATOMIC_MOVE without touching the linked
+    * inode.
     * Nothing ever modifies a parquet or manifest file in place, so the
     * template cannot be corrupted through a link. Falls back to a byte
     * copy per file if the filesystem refuses links.
@@ -76,21 +77,31 @@ object Warehouse {
     * carries fixture mtime+length, so staleness invalidates derived
     * templates exactly as it invalidates bases.
     */
-  def ensureDerivedSeed(baseSeedDir: String, suffix: String)(build: String => Unit): String = {
-    val dir = new java.io.File(baseSeedDir + "-" + suffix)
+  def ensureDerivedSeed(baseSeedDir: String, suffix: String)(build: String => Unit): String =
+    ensureSeed(new java.io.File(baseSeedDir + "-" + suffix)) { dir =>
+      copyRecursively(new java.io.File(baseSeedDir), new java.io.File(dir))
+      new java.io.File(dir, "_SEEDED").delete()
+      build(dir)
+    }
+
+  /** The marker-gated seed body every one-time seed shares: unless
+    * `dir/_SEEDED` exists, clear `dir`, recreate it, run `build(dir)`,
+    * and only then write the marker — so a crashed partial build is
+    * redone on the next call. Returns `dir`'s path. The caller's `dir`
+    * carries the fixture tag, so a regenerated fixture seeds afresh.
+    */
+  def ensureSeed(dir: java.io.File)(build: String => Unit): String = {
     val marker = new java.io.File(dir, "_SEEDED")
     if (!marker.exists()) {
       deleteRecursively(dir)
-      copyRecursively(new java.io.File(baseSeedDir), dir)
-      new java.io.File(dir, "_SEEDED").delete()
+      dir.mkdirs()
       build(dir.getPath)
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
     }
     dir.getPath
   }
 
-  /** Shared recursive delete (also used by the Derby seed dir). */
+  /** Shared recursive delete. */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {
       val children = f.listFiles()

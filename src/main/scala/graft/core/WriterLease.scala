@@ -1,10 +1,11 @@
 package graft.core
 
-/** Single-writer enforcement for the persisted index layouts (IVF,
-  * MinHash band-postings, semdedup members).
+/** Single-writer enforcement for the persisted index layouts (MinHash
+  * and pHash postings, semdedup members, IVF postings), taken by every
+  * [[PersistedIndex]] mutator.
   *
-  * Every mutation of an index directory — append, delete, compact —
-  * assumes exactly one writer: batch-id allocation scans the directory,
+  * Every mutation of an index directory — append, delete, compact,
+  * rebuild — assumes exactly one writer: batch-id allocation scans the directory,
   * and compaction GCs the dirs it merged. The manifest gate already
   * makes READERS immune to concurrent writers (probes only see
   * committed batch ids), but two concurrent WRITERS could allocate the

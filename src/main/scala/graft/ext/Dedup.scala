@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
 
 /** Deduplication family for training-data curation over `documents`:
   * exact (content-hash groupBy), n-gram Jaccard on a bounded candidate
@@ -580,294 +580,105 @@ object Dedup extends QueryModule {
   // (O(batch) signatures), equi-joins its band buckets against the
   // postings, and exact-Jaccard-verifies the surviving candidates — so
   // per-batch cost scales with the batch and its collisions, never the
-  // corpus. Same commit protocol as the IVF index (cf. Similarity):
-  // batch_id partitions + an atomically-replaced manifest probes filter
-  // on, so a crashed append is invisible.
+  // corpus. The commit protocol is core.PersistedIndex's: batch_id
+  // partitions + an atomically-replaced manifest probes filter on, so a
+  // crashed append is invisible.
 
   private val MinhashRoot = "/tmp/graft_minhash"
 
   /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
   private def minhashTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "documents")
 
-  private[graft] def readBatchManifest(dir: String): Seq[Long] = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "manifest.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    "\"batches\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map(_.toLong).toSeq).getOrElse(Seq.empty)
-  }
-
-  /** Committed DELETE batches (doc-id tombstones) — same ledger shape as
-    * the IVF index's `tombstone_batches`. Absent field reads as empty,
-    * so pre-delete manifests stay valid.
+  /** The band-postings index on the shared lifecycle: `postings/`
+    * partitioned by batch_id, tombstones keyed by doc id.
     */
-  private[graft] def readTombstoneManifest(dir: String): Seq[Long] = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "manifest.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    "\"tombstone_batches\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map(_.toLong).toSeq).getOrElse(Seq.empty)
-  }
+  private[graft] val MinhashStore = PersistedIndex("minhash", "postings", "doc_id")
 
-  /** Idempotency ledger for streaming ingest — the IVF manifest's
-    * `ingest_keys` scheme: an append carrying a key already in the
-    * ledger is a committed replay and must be a no-op. Absent field
-    * reads as empty, so pre-ingest manifests stay valid.
-    */
-  private[graft] def readIngestKeys(dir: String): Seq[String] = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "manifest.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    "\"ingest_keys\":\"([^\"]*)\"".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').toSeq).getOrElse(Seq.empty)
-  }
-
-  private[graft] def writeBatchManifest(dir: String, batches: Seq[Long],
-      tombstones: Seq[Long] = Seq.empty,
-      ingestKeys: Seq[String] = Seq.empty): Unit = {
-    val tmp = new java.io.File(dir, ".manifest.tmp").toPath
-    java.nio.file.Files.write(tmp,
-      (s"""{"batches":[${batches.mkString(",")}],""" +
-        s""""tombstone_batches":[${tombstones.mkString(",")}],""" +
-        s""""ingest_keys":"${ingestKeys.mkString(",")}"}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, new java.io.File(dir, "manifest.json").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  /** Record a DELETE batch of doc ids (takedowns): stage the id list,
-    * atomically rename into `tombstones/batch_id=N`, commit by manifest
-    * swap — the IVF index's delete protocol. Probes anti-join index-side
-    * candidates against the committed tombstones; compaction drops the
-    * tombstoned postings physically and clears the ledger.
+  /** Record a DELETE batch of doc ids (takedowns) — the template's
+    * tombstone ledger. Probes anti-join index-side candidates against
+    * it; compaction drops the tombstoned postings physically.
     */
   private[graft] def minhashIndexDelete(spark: SparkSession, dir: String,
       ids: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "minhash delete") {
-      graft.core.StagedSwap.recover(dir, MinhashLayoutSubs)
-    val batches = readBatchManifest(dir)
-    val tombs = readTombstoneManifest(dir)
-    val root = new java.io.File(dir, "tombstones")
-    root.mkdirs()
-    val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".tombstone_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    ids.select(col("doc_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(root, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeBatchManifest(dir, batches, tombs :+ newId, readIngestKeys(dir))
-    }
+    MinhashStore.delete(dir, ids)
 
-  /** Anti-join index-side rows (column `dup_of` = indexed doc id)
-    * against the committed tombstones; no-op when none are committed.
-    */
-  private def filterMinhashTombstones(spark: SparkSession, dir: String,
-      rows: DataFrame): DataFrame = {
-    val tombs = readTombstoneManifest(dir)
-    if (tombs.isEmpty) rows
-    else rows.join(
-      spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-        .where(col("batch_id").isin(tombs: _*))
-        .select(col("doc_id").as("dup_of")),
-      Seq("dup_of"), "left_anti")
-  }
-
-  /** Write the band-postings index over `docs`: one (band, bh, doc_id)
-    * row per band per REPRESENTATIVE (exact-duplicate groups collapse to
+  /** Band postings of a (doc_id, text) frame: one (band, bh, doc_id) row
+    * per band per REPRESENTATIVE (exact-duplicate groups collapse to
     * their min-id member first — identical text hashes to identical
     * signatures, so extra members add postings without adding recall).
+    * Seed, append and rebuild all band through here, so `append ==
+    * rebuild` (DedupSpec) holds even when an ingest batch carries
+    * internal exact duplicates.
+    */
+  private def minhashPostings(docs: DataFrame): DataFrame = {
+    val d = docs.select(col("doc_id"), col("text"))
+    bandBuckets(minhashSignatures(StagedDedup.representatives(d, StagedDedup.exactGroups(d))))
+  }
+
+  /** Write the band-postings index over `docs` as the single batch 0.
     * `keepIngestKeys` rides in the single manifest commit so a rebuild
-    * preserves the idempotency ledger (the IVF `writeIvfIndex` contract).
+    * preserves the idempotency ledger.
     */
   private[graft] def writeMinhashIndex(spark: SparkSession, dir: String,
       docs: DataFrame, keepIngestKeys: Seq[String] = Seq.empty): Unit = {
-    val d = docs.select(col("doc_id"), col("text"))
-    val reps = StagedDedup.representatives(d, StagedDedup.exactGroups(d))
-    bandBuckets(minhashSignatures(reps))
+    minhashPostings(docs)
       .withColumn("batch_id", lit(0L))
       .write.mode("overwrite").partitionBy("batch_id")
       .parquet(new java.io.File(dir, "postings").getPath)
-    writeBatchManifest(dir, Seq(0L), ingestKeys = keepIngestKeys)
+    PersistedIndex.writeManifest(dir, PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
   }
 
   /** Full re-band of the index from the doc store — the lifecycle op a
     * banding-parameter change or accumulated takedown debt eventually
-    * forces (the MinHash twin of `ivfIndexRebuild`). The band postings
-    * are one-way hashes, so unlike the IVF index the content cannot be
-    * re-derived from the index itself: the SURVIVING doc ids (committed
-    * postings anti-joined against the tombstone ledger) are point-looked-
-    * up in `corpus` — the same by-id doc-store contract
+    * forces. The band postings are one-way hashes, so unlike the IVF
+    * index the content cannot be re-derived from the index itself: the
+    * SURVIVING doc ids (committed postings minus the tombstone ledger)
+    * are point-looked-up in `corpus` — the same by-id doc-store contract
     * [[probeMinhashIndex]]'s verification leg already uses — and
-    * [[writeMinhashIndex]] re-bands them in place. A rebuild is thereby
-    * also a materializing compaction (tombstoned docs drop physically,
-    * ledger resets with the single manifest commit, ingest keys
-    * preserved so a pre-rebuild micro-batch replay stays a no-op), and
-    * it collapses CROSS-BATCH exact duplicates that per-batch appends
-    * could not see. In-place is the single-writer local form; a 100 TB
-    * deployment stages a sibling directory and swaps a pointer, with
-    * this exact content contract.
+    * re-banded. A rebuild is thereby also a materializing compaction,
+    * and it collapses CROSS-BATCH exact duplicates that per-batch
+    * appends could not see.
     */
   private[graft] def minhashIndexRebuild(spark: SparkSession, dir: String,
       corpus: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "minhash rebuild") {
-      val committed = readBatchManifest(dir)
-      val surviving = filterMinhashTombstones(spark, dir, spark.read
-        .parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(committed: _*))
-        .select(col("doc_id").as("dup_of")))
-        .select(col("dup_of").as("doc_id")).distinct()
-      // Snapshot BEFORE the swap below — the rebuild must never lazily
-      // read the postings it is about to replace.
-      val content = corpus.join(surviving, Seq("doc_id"))
+    MinhashStore.rebuild(spark, dir) { live =>
+      corpus.join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
         .select(col("doc_id"), col("text"))
-        .localCheckpoint(true)
-      // Staged layout + atomic manifest commit: crash-safe like the IVF
-      // rebuild (StagedSwap's contract).
-      graft.core.StagedSwap.swapInPlace(dir, MinhashLayoutSubs) { stage =>
-        writeMinhashIndex(spark, stage, content,
-          keepIngestKeys = readIngestKeys(dir))
-      }
-      graft.core.Warehouse.deleteRecursively(new java.io.File(dir, "tombstones"))
+    } { (content, stage, keys) =>
+      writeMinhashIndex(spark, stage, content, keepIngestKeys = keys)
     }
-
-  /** The dirs a complete minhash layout comprises (manifest aside). */
-  private[graft] val MinhashLayoutSubs = Seq("postings")
 
   /** One-time seed of the persisted index over the sub-400 corpus slice
     * (marker-gated, untimed economics like the Derby/IVF seeds).
     */
-  private[graft] def ensureMinhashIndex(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File(MinhashRoot, minhashTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
-      writeMinhashIndex(spark, dir.getPath,
+  private[graft] def ensureMinhashIndex(spark: SparkSession, sfDir: String): String =
+    Warehouse.ensureSeed(new java.io.File(MinhashRoot, minhashTag(sfDir))) { dir =>
+      writeMinhashIndex(spark, dir,
         Tables(spark, sfDir, "documents").filter(col("doc_id") < 400))
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
     }
-    dir.getPath
-  }
 
-  /** Append an ingest batch's band postings as a new batch_id partition:
-    * staged into a dot-directory (invisible to partition discovery),
-    * atomically renamed, then committed by atomically replacing the
-    * manifest — the IVF index's crash-safe protocol. Ids allocate past
-    * the max directory ON DISK so an orphan is never adopted.
-    *
-    * The batch collapses to exact-duplicate representatives BEFORE
-    * banding — the same collapse [[writeMinhashIndex]] applies — so
-    * `append == rebuild` (DedupSpec) holds even when the ingest batch
-    * carries internal exact duplicates: identical text hashes to
-    * identical signatures, so non-representative members would add
-    * postings rows without adding recall.
+  /** Append an ingest batch's band postings as a new batch. At-least-
+    * once callers (foreachBatch replays after a crash between manifest
+    * commit and checkpoint) pass the micro-batch's batchId as the key:
+    * a key already in the committed ledger makes the replay a no-op.
     */
   private[graft] def minhashIndexAppend(spark: SparkSession, dir: String,
       newDocs: DataFrame, ingestKey: Option[String] = None): Unit =
-    graft.core.WriterLease.withLease(dir, "minhash append") {
-      graft.core.StagedSwap.recover(dir, MinhashLayoutSubs)
-    // At-least-once callers (foreachBatch replays after a crash between
-    // manifest commit and checkpoint) pass the micro-batch's batchId as
-    // the key: a key already in the committed ledger means this batch's
-    // postings are already published — the replay is a no-op. Read
-    // UNDER the lease, so the check is authoritative.
-    val ledger = readIngestKeys(dir)
-    if (!ingestKey.exists(ledger.contains)) {
-    val committed = readBatchManifest(dir)
-    val postingsRoot = new java.io.File(dir, "postings")
-    val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".staging_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    val d = newDocs.select(col("doc_id"), col("text"))
-    val reps = StagedDedup.representatives(d, StagedDedup.exactGroups(d))
-    bandBuckets(minhashSignatures(reps))
-      .write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // Preserve any committed tombstones — an append must not resurrect
-    // deleted docs; extend the ingest-key ledger so a replay of THIS
-    // batch is a no-op.
-    writeBatchManifest(dir, committed :+ newId, readTombstoneManifest(dir),
-      ledger ++ ingestKey)
+    MinhashStore.append(dir, ingestKey) { (path, m) =>
+      minhashPostings(newDocs).write.mode("overwrite").parquet(path)
+      m
     }
-  }
 
-  /** Compact the committed band-postings batches into one — the same
-    * lifecycle operation (and the same commit protocol in reverse) as
-    * the IVF index's `ivfIndexCompact`: every ingest append adds a
-    * `batch_id` directory of small files, and the probe's bucket join
-    * opens all of them; the rewrite stages the merged postings, renames
-    * atomically, swaps the manifest to the single merged batch, then GCs
-    * the unreferenced dirs. Probes are row-identical before/after
-    * (postings are the same rows; DedupSpec pins it).
-    *
-    * SINGLE WRITER: compaction assumes no concurrent appender (the same
-    * assumption the id allocation makes — a production deployment takes
-    * a writer lock or runs compaction from the one ingest job). GC is
-    * restricted to the batch ids that were COMMITTED at compact start:
-    * an in-flight append's renamed-but-uncommitted directory is never
-    * deleted, it just survives as the orphan the manifest gate already
-    * ignores.
+  /** Compact the committed band-postings batches into one: every ingest
+    * append adds a `batch_id` directory of small files, and the probe's
+    * bucket join opens all of them. Probes are row-identical
+    * before/after (postings are the same rows; DedupSpec pins it).
     */
   private[graft] def minhashIndexCompact(spark: SparkSession, dir: String): Unit =
-    graft.core.WriterLease.withLease(dir, "minhash compact") {
-      graft.core.StagedSwap.recover(dir, MinhashLayoutSubs)
-    val committed = readBatchManifest(dir)
-    val tombs = readTombstoneManifest(dir)
-    if (committed.size > 1 || tombs.nonEmpty) {
-    val postingsRoot = new java.io.File(dir, "postings")
-    val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".compact_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    // The rewrite materializes pending deletions: tombstoned docs'
-    // postings drop physically and the swapped manifest clears the
-    // tombstone ledger.
-    val merged = spark.read.parquet(postingsRoot.getPath)
-      .where(col("batch_id").isin(committed: _*))
-    val dropped =
-      if (tombs.isEmpty) merged
-      else merged.join(
-        spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-          .where(col("batch_id").isin(tombs: _*)).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    dropped
-      .drop("batch_id")
-      .coalesce(8)
-      .write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // Tombstones are materialized (ledger clears); ingest keys are NOT —
-    // a pre-compaction micro-batch that replays after the compact must
-    // still be recognized as committed.
-    writeBatchManifest(dir, Seq(newId), ingestKeys = readIngestKeys(dir))
-    committed.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(postingsRoot, s"batch_id=$id"))
+    MinhashStore.compact(spark, dir) { (rows, path, m) =>
+      rows.coalesce(8).write.mode("overwrite").parquet(path)
+      m
     }
-    tombs.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(new java.io.File(dir, "tombstones"), s"batch_id=$id"))
-    }
-    }
-  }
 
   /** Probe the persisted index with an ingest batch: batch-side
     * signatures + banding (O(batch) hashing — the corpus is never
@@ -880,11 +691,8 @@ object Dedup extends QueryModule {
     */
   private[graft] def probeMinhashIndex(spark: SparkSession, dir: String,
       batch: DataFrame, corpus: DataFrame, tap: Option[String] = None): DataFrame = {
-    val committed = readBatchManifest(dir)
-    val postings = filterMinhashTombstones(spark, dir, spark.read
-      .parquet(new java.io.File(dir, "postings").getPath)
-      .where(col("batch_id").isin(committed: _*))
-      .select(col("band"), col("bh"), col("doc_id").as("dup_of")))
+    val postings = MinhashStore.live(spark, dir, PersistedIndex.readManifest(dir))
+      .select(col("band"), col("bh"), col("doc_id").as("dup_of"))
     val cands = bandBuckets(minhashSignatures(batch.select(col("doc_id"), col("text"))))
       .join(postings, Seq("band", "bh"))
       .select(col("doc_id"), col("dup_of")).distinct()
@@ -919,7 +727,7 @@ object Dedup extends QueryModule {
   private def minhashDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_minhash_del")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_del")
     val docs = Tables(spark, sfDir, "documents")
     val batch = docs.filter(col("doc_id") >= 400)
     val victimRow = probeMinhashIndex(spark, dir, batch, docs)
@@ -940,7 +748,7 @@ object Dedup extends QueryModule {
     */
   private def minhashCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_minhash_compact")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_compact")
     val docs = Tables(spark, sfDir, "documents")
     minhashIndexAppend(spark, dir, docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
     minhashIndexCompact(spark, dir)
@@ -963,7 +771,7 @@ object Dedup extends QueryModule {
   private def minhashRebuild(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_minhash_rebuild")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_rebuild")
     val docs = Tables(spark, sfDir, "documents")
     minhashIndexAppend(spark, dir, docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
     val probeBatch = docs.filter(col("doc_id") >= 450)
@@ -991,7 +799,7 @@ object Dedup extends QueryModule {
     */
   private def minhashIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_minhash_ingest")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_ingest")
     val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
       .filter(col("doc_id") >= 400 && col("doc_id") < 450)
     val q = stream.writeStream

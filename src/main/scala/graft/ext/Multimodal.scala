@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
 
 /** Multimodal columns: image/audio/video handled as opaque `binary`
   * columns with typed metadata, processed in per-partition batches
@@ -141,14 +141,9 @@ object Multimodal extends QueryModule {
 
   private val BlobRoot = "/tmp/graft_blobs"
 
-  /** Stable per-fixture tag (same scheme as the bucketed-layout seed):
-    * source dir + fixture mtime, so regenerated fixtures never reuse
-    * stale blobs.
-    */
-  private def blobTag(sfDir: String): String = {
-    val m = new java.io.File(sfDir, "documents.parquet").lastModified() / 1000
-    java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ m)
-  }
+  /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
+  private[graft] def blobTag(sfDir: String): String =
+    Tables.fixtureTag("v1", sfDir, "documents")
 
   /** One-time blob landing zone per fixture (marker-gated, untimed
     * economics like the Derby/bucketed seeds): every 10th document's
@@ -159,12 +154,7 @@ object Multimodal extends QueryModule {
     */
   private[graft] def ensureBlobDir(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val dir = new java.io.File(BlobRoot, blobTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
-      val path = dir.getPath
+    Warehouse.ensureSeed(new java.io.File(BlobRoot, blobTag(sfDir))) { path =>
       Tables(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
@@ -177,10 +167,7 @@ object Multimodal extends QueryModule {
             ()
           }
         }
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
     }
-    dir.getPath
   }
 
   /** Raw-file ingestion through Spark's `binaryFile` source — the real
@@ -363,14 +350,16 @@ object Multimodal extends QueryModule {
   // [[phashBandedPairs]], which the tap oracle exploits: it recomputes
   // the probe as the full probe×index Hamming filter over the tapped
   // signatures, so a banding RECALL bug (not just a scoring bug)
-  // hash-mismatches. Manifest plumbing is shared with the MinHash index
-  // (Dedup.readBatchManifest et al. — one commit protocol across every
-  // index family).
+  // hash-mismatches. The lifecycle (manifest, appends, takedowns,
+  // compaction, rebuild) is core.PersistedIndex's, shared by every index
+  // family.
 
   private val PhashIndexRoot = "/tmp/graft_phash"
 
-  /** The dirs a complete phash layout comprises (manifest aside). */
-  private[graft] val PhashLayoutSubs = Seq("postings")
+  /** The postings index on the shared lifecycle, tombstones keyed by
+    * doc id.
+    */
+  private[graft] val PhashStore = PersistedIndex("phash", "postings", "doc_id")
 
   /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
   private def phashIndexTag(sfDir: String): String =
@@ -430,171 +419,56 @@ object Multimodal extends QueryModule {
       .withColumn("batch_id", lit(0L))
       .write.mode("overwrite").partitionBy("batch_id")
       .parquet(new java.io.File(dir, "postings").getPath)
-    Dedup.writeBatchManifest(dir, Seq(0L), ingestKeys = keepIngestKeys)
+    PersistedIndex.writeManifest(dir, PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
   }
 
   /** One-time seed over the sub-400 corpus slice (marker-gated, untimed
     * economics like the MinHash/IVF/Derby seeds).
     */
-  private[graft] def ensurePhashIndex(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File(PhashIndexRoot, phashIndexTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
-      writePhashIndex(spark, dir.getPath,
+  private[graft] def ensurePhashIndex(spark: SparkSession, sfDir: String): String =
+    Warehouse.ensureSeed(new java.io.File(PhashIndexRoot, phashIndexTag(sfDir))) { dir =>
+      writePhashIndex(spark, dir,
         Tables(spark, sfDir, "documents").filter(col("doc_id") < 400))
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
     }
-    dir.getPath
-  }
 
-  /** Append an ingest batch's postings as a new batch_id partition —
-    * staged dot-directory, atomic rename, manifest commit, ingest-key
-    * ledger: byte-for-byte the MinHash/IVF append protocol.
+  /** Append an ingest batch's postings as a new batch (a replayed
+    * `ingestKey` is a committed no-op).
     */
   private[graft] def phashIndexAppend(spark: SparkSession, dir: String,
       newDocs: DataFrame, ingestKey: Option[String] = None): Unit =
-    graft.core.WriterLease.withLease(dir, "phash append") {
-      graft.core.StagedSwap.recover(dir, PhashLayoutSubs)
-      val ledger = Dedup.readIngestKeys(dir)
-      if (!ingestKey.exists(ledger.contains)) {
-        val committed = Dedup.readBatchManifest(dir)
-        val postingsRoot = new java.io.File(dir, "postings")
-        val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-          .map(_.getName.stripPrefix("batch_id=").toLong)
-        val newId = (onDisk :+ 0L).max + 1
-        val staging = new java.io.File(dir, s".staging_batch_$newId")
-        graft.core.Warehouse.deleteRecursively(staging)
-        phashPostings(sigsOf(spark, newDocs))
-          .write.mode("overwrite").parquet(staging.getPath)
-        java.nio.file.Files.move(staging.toPath,
-          new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        Dedup.writeBatchManifest(dir, committed :+ newId,
-          Dedup.readTombstoneManifest(dir), ledger ++ ingestKey)
-      }
+    PhashStore.append(dir, ingestKey) { (path, m) =>
+      phashPostings(sigsOf(spark, newDocs)).write.mode("overwrite").parquet(path)
+      m
     }
 
-  /** Takedown: tombstone a doc-id batch (staged + atomic rename +
-    * manifest swap — the shared delete protocol).
-    */
+  /** Takedown: tombstone a doc-id batch. */
   private[graft] def phashIndexDelete(spark: SparkSession, dir: String,
       ids: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "phash delete") {
-      graft.core.StagedSwap.recover(dir, PhashLayoutSubs)
-      val batches = Dedup.readBatchManifest(dir)
-      val tombs = Dedup.readTombstoneManifest(dir)
-      val root = new java.io.File(dir, "tombstones")
-      root.mkdirs()
-      val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName.stripPrefix("batch_id=").toLong)
-      val newId = (onDisk :+ 0L).max + 1
-      val staging = new java.io.File(dir, s".tombstone_batch_$newId")
-      graft.core.Warehouse.deleteRecursively(staging)
-      ids.select(col("doc_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-      java.nio.file.Files.move(staging.toPath,
-        new java.io.File(root, s"batch_id=$newId").toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      Dedup.writeBatchManifest(dir, batches, tombs :+ newId,
-        Dedup.readIngestKeys(dir))
-    }
+    PhashStore.delete(dir, ids)
 
-  /** Compact the committed postings batches into one — the shared
-    * lifecycle op (staged merged rewrite, atomic rename, manifest swap
-    * to the single batch, GC of only the batch ids committed at start;
-    * tombstones materialize physically and their ledger clears, ingest
-    * keys survive so pre-compaction replays stay no-ops). Probes are
-    * row-identical before/after — MultimodalSpec pins it.
+  /** Compact the committed postings batches into one; tombstones
+    * materialize physically. Probes are row-identical before/after —
+    * MultimodalSpec pins it.
     */
   private[graft] def phashIndexCompact(spark: SparkSession, dir: String): Unit =
-    graft.core.WriterLease.withLease(dir, "phash compact") {
-      graft.core.StagedSwap.recover(dir, PhashLayoutSubs)
-      val committed = Dedup.readBatchManifest(dir)
-      val tombs = Dedup.readTombstoneManifest(dir)
-      if (committed.size > 1 || tombs.nonEmpty) {
-        val postingsRoot = new java.io.File(dir, "postings")
-        val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-          .map(_.getName.stripPrefix("batch_id=").toLong)
-        val newId = (onDisk :+ 0L).max + 1
-        val staging = new java.io.File(dir, s".compact_batch_$newId")
-        graft.core.Warehouse.deleteRecursively(staging)
-        val merged = spark.read.parquet(postingsRoot.getPath)
-          .where(col("batch_id").isin(committed: _*))
-        val dropped =
-          if (tombs.isEmpty) merged
-          else merged.join(
-            spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-              .where(col("batch_id").isin(tombs: _*)).select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-        dropped
-          .drop("batch_id")
-          .coalesce(8)
-          .write.mode("overwrite").parquet(staging.getPath)
-        java.nio.file.Files.move(staging.toPath,
-          new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        Dedup.writeBatchManifest(dir, Seq(newId),
-          ingestKeys = Dedup.readIngestKeys(dir))
-        committed.foreach { id =>
-          graft.core.Warehouse.deleteRecursively(
-            new java.io.File(postingsRoot, s"batch_id=$id"))
-        }
-        tombs.foreach { id =>
-          graft.core.Warehouse.deleteRecursively(
-            new java.io.File(new java.io.File(dir, "tombstones"), s"batch_id=$id"))
-        }
-      }
+    PhashStore.compact(spark, dir) { (rows, path, m) =>
+      rows.coalesce(8).write.mode("overwrite").parquet(path)
+      m
     }
 
   /** Rebuild the postings index from the SURVIVING corpus content — the
-    * pHash leg of the shared from-scratch protocol
-    * ([[Dedup.minhashIndexRebuild]], the IVF/semdedup rebuilds): the op
-    * that pays off after enough appends/tombstones fragment the index,
-    * or after a signature-extraction change. Surviving ids come from
-    * the committed postings minus the tombstone ledger; their content
-    * re-hashes from the corpus; the new single-batch layout stages
-    * under [[graft.core.StagedSwap]] and commits atomically (a crash
-    * mid-rebuild leaves the old index fully probe-able). Ingest keys
-    * survive — a pre-rebuild replay stays a no-op — and the tombstone
-    * ledger clears (the rebuild materializes every takedown).
+    * op that pays off after enough appends/tombstones fragment the index,
+    * or after a signature-extraction change. Surviving ids come from the
+    * committed postings minus the tombstone ledger; their content
+    * re-hashes from the corpus into a single batch.
     */
   private[graft] def phashIndexRebuild(spark: SparkSession, dir: String,
       corpus: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "phash rebuild") {
-      // Heal any crashed PREVIOUS swap before reading manifest/postings —
-      // without this, a crash mid-swap (postings moved aside, manifest
-      // not yet) would have this rebuild read a half-swapped layout or
-      // miss the postings dir entirely. Every sibling op (append/delete/
-      // compact) recovers first for the same reason.
-      graft.core.StagedSwap.recover(dir, PhashLayoutSubs)
-      val committed = Dedup.readBatchManifest(dir)
-      val surviving0 = spark.read
-        .parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(committed: _*))
-        .select(col("doc_id")).distinct()
-      val tombs = Dedup.readTombstoneManifest(dir)
-      val surviving =
-        if (tombs.isEmpty) surviving0
-        else surviving0.join(
-          spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-            .where(col("batch_id").isin(tombs: _*)).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      // Snapshot BEFORE the swap below — the rebuild must never lazily
-      // read the postings it is about to replace.
-      val content = corpus.join(surviving, Seq("doc_id"))
+    PhashStore.rebuild(spark, dir) { live =>
+      corpus.join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
         .select(col("doc_id"), col("text"))
-        .localCheckpoint(true)
-      graft.core.StagedSwap.swapInPlace(dir, PhashLayoutSubs) { stage =>
-        writePhashIndex(spark, stage, content,
-          keepIngestKeys = Dedup.readIngestKeys(dir))
-      }
-      graft.core.Warehouse.deleteRecursively(new java.io.File(dir, "tombstones"))
+    } { (content, stage, keys) =>
+      writePhashIndex(spark, stage, content, keepIngestKeys = keys)
     }
 
   /** Probe the committed postings with a (doc_id, ph) signature batch:
@@ -606,19 +480,8 @@ object Multimodal extends QueryModule {
     */
   private[graft] def probePhashIndex(spark: SparkSession, dir: String,
       probeSigs: DataFrame, tap: Option[String] = None): DataFrame = {
-    val committed = Dedup.readBatchManifest(dir)
-    val postings0 = spark.read
-      .parquet(new java.io.File(dir, "postings").getPath)
-      .where(col("batch_id").isin(committed: _*))
+    val postings = PhashStore.live(spark, dir, PersistedIndex.readManifest(dir))
       .select(col("band"), col("bv"), col("doc_id").as("dup_of"), col("ph").as("ph_i"))
-    val tombs = Dedup.readTombstoneManifest(dir)
-    val postings =
-      if (tombs.isEmpty) postings0
-      else postings0.join(
-        spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-          .where(col("batch_id").isin(tombs: _*))
-          .select(col("doc_id").as("dup_of")),
-        Seq("dup_of"), "left_anti")
     val tapped = tap.fold(probeSigs) { n =>
       OracleTap(spark, n,
         probeSigs.select(col("doc_id"), col("ph"), lit("probe").as("side"))
@@ -652,7 +515,7 @@ object Multimodal extends QueryModule {
   private def phashDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seed = ensurePhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_phash_del")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_del")
     val docs = Tables(spark, sfDir, "documents")
     val probe = sigsOf(spark, docs.filter(col("doc_id") >= 400))
       .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 400), PhashProbeMod))
@@ -674,7 +537,7 @@ object Multimodal extends QueryModule {
   private def phashCompact(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seed = ensurePhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_phash_compact")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_compact")
     val docs = Tables(spark, sfDir, "documents")
     phashIndexAppend(spark, dir,
       docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
@@ -699,7 +562,7 @@ object Multimodal extends QueryModule {
   private def phashRebuild(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val seed = ensurePhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_phash_rebuild")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_rebuild")
     val docs = Tables(spark, sfDir, "documents")
     phashIndexAppend(spark, dir,
       docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
@@ -723,7 +586,7 @@ object Multimodal extends QueryModule {
     */
   private def phashIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val seed = ensurePhashIndex(spark, sfDir)
-    val dir = graft.core.Warehouse.scratchFromSeed(seed, "graft_phash_ingest")
+    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_ingest")
     val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
       .filter(col("doc_id") >= 400 && col("doc_id") < 450)
     val q = stream.writeStream

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
 import graft.functions.SimHash64
 
 /** Similarity search over `embeddings` (64-dim float vectors) and
@@ -815,7 +815,8 @@ object Similarity extends QueryModule {
           .toDF("cell", "centroid")
           .coalesce(1).write.mode("overwrite")
           .parquet(new java.io.File(dir, "centroids").getPath)
-        Dedup.writeBatchManifest(dir, Seq(0L), ingestKeys = keepIngestKeys)
+        PersistedIndex.writeManifest(dir,
+          PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
       } finally { cells.unpersist(); () }
     } finally { ec.unpersist(); () }
   }
@@ -846,16 +847,7 @@ object Similarity extends QueryModule {
   private[graft] def semdedupIndexIngest(spark: SparkSession, dir: String,
       batch: DataFrame, tau: Double, tap: Option[String] = None,
       ingestKey: Option[String] = None, dryRun: Boolean = false): DataFrame = {
-    // A dry run mutates nothing — no lease (it must be runnable against
-    // the immutable marker-gated seed templates without ever writing).
-    def leased[T](f: => T): T =
-      if (dryRun) f
-      else graft.core.WriterLease.withLease(dir, "semdedup ingest") {
-        graft.core.StagedSwap.recover(dir, SemdedupLayoutSubs); f
-      }
-    leased {
-    val replay = dryRun || ingestKey.exists(Dedup.readIngestKeys(dir).contains)
-    val committed = Dedup.readBatchManifest(dir)
+    def run(publish: Option[PersistedIndex.Stage => Unit]): DataFrame = {
     val cents = spark.read.parquet(new java.io.File(dir, "centroids").getPath)
       .orderBy("cell").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
@@ -870,12 +862,10 @@ object Similarity extends QueryModule {
       // Committed tombstones drop out of the member read BEFORE any
       // dominance pair forms: a taken-down member must not dominate
       // (suppress) newly arriving vectors.
-      val members = filterSemdedupTombstones(spark, dir, spark.read
-        .parquet(new java.io.File(dir, "members").getPath)
-        .where(col("batch_id").isin(committed: _*) &&
-          col("cell_grp").isin(touchedGrps: _*))
+      val members = SemdedupStore.live(spark, dir, PersistedIndex.readManifest(dir),
+          Some(col("cell_grp").isin(touchedGrps: _*)))
         .join(broadcast(assigned.select(col("cell")).distinct()), Seq("cell"))
-        .select(col("vec_id"), col("embedding"), col("cell")))
+        .select(col("vec_id"), col("embedding"), col("cell"))
       // Same-rounded-cosine contract as semdedupPruneCells: both engines
       // compare the 4-decimal value against tau.
       def dominated(lower: DataFrame, upper: DataFrame): DataFrame =
@@ -895,162 +885,72 @@ object Similarity extends QueryModule {
             lit(true).as("is_batch")))))
       // Publish the batch (all members, removed or not — dominance reads
       // every lower-id member, exactly like the full recompute).
-      if (!replay) {
-      val root = new java.io.File(dir, "members")
-      val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName.stripPrefix("batch_id=").toLong)
-      val newId = (onDisk :+ 0L).max + 1
-      val staging = new java.io.File(dir, s".staging_batch_$newId")
-      graft.core.Warehouse.deleteRecursively(staging)
-      assigned.join(removedIds.withColumn("removed", lit(true)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("embedding"), col("cell"),
-          coalesce(col("removed"), lit(false)).as("removed"))
-        .withColumn("cell_grp", pmod(col("cell"), lit(SemdedupCellGroups)))
-        .repartition(col("cell_grp"))
-        .write.mode("overwrite").partitionBy("cell_grp")
-        .parquet(staging.getPath)
-      java.nio.file.Files.move(staging.toPath,
-        new java.io.File(root, s"batch_id=$newId").toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // Preserve the tombstone ledger — a publish must not resurrect
-      // taken-down members (the .copy-don't-rewrite manifest discipline
-      // every index here follows) — and extend the ingest-key ledger so
-      // a replay of THIS batch skips the publish.
-      Dedup.writeBatchManifest(dir, committed :+ newId,
-        Dedup.readTombstoneManifest(dir),
-        Dedup.readIngestKeys(dir) ++ ingestKey)
-      }
+      publish.foreach(_ { (path, m) =>
+        assigned.join(removedIds.withColumn("removed", lit(true)), Seq("vec_id"), "left")
+          .select(col("vec_id"), col("embedding"), col("cell"),
+            coalesce(col("removed"), lit(false)).as("removed"))
+          .withColumn("cell_grp", pmod(col("cell"), lit(SemdedupCellGroups)))
+          .repartition(col("cell_grp"))
+          .write.mode("overwrite").partitionBy("cell_grp")
+          .parquet(path)
+        m
+      })
       out.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
         .orderBy("vec_id")
         .localCheckpoint(true)
     } finally { assigned.unpersist(); () }
     }
+    // A dry run mutates nothing — no lease, no publish (it must be
+    // runnable against the immutable marker-gated seed templates).
+    if (dryRun) run(None) else SemdedupStore.appendWith(dir, ingestKey)(run)
   }
 
-  /** Anti-join members against the committed vec-id tombstones — the
-    * minhash/IVF probe discipline applied to the dedup-state index.
+  /** The members index on the shared lifecycle: `members/` partitioned
+    * by (batch_id, cell_grp) beside the fixed `centroids/` quantizer,
+    * tombstones keyed by vec id.
     */
-  private def filterSemdedupTombstones(spark: SparkSession, dir: String,
-      members: DataFrame): DataFrame = {
-    val tombs = Dedup.readTombstoneManifest(dir)
-    if (tombs.isEmpty) members
-    else members.join(
-      spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-        .where(col("batch_id").isin(tombs: _*)).select(col("vec_id")),
-      Seq("vec_id"), "left_anti")
-  }
+  private[graft] val SemdedupStore =
+    PersistedIndex("semdedup", "members", "vec_id", aux = Seq("centroids"))
 
-  /** Takedown on the semdedup index: publish a vec-id tombstone batch
-    * under `tombstones/batch_id=N` (staged rename + manifest-ledger
-    * commit — the IVF/minhash delete protocol, O(delete batch), never a
-    * members rewrite). Ingests anti-join committed members against the
-    * ledger, so a deleted member stops dominating new arrivals;
-    * HISTORICAL removed flags stay frozen (the same monotone-ingest
-    * invariant the index already documents — a full rebuild recomputes
-    * them). Compaction materializes the drop physically.
+  /** Takedown on the semdedup index: a vec-id tombstone batch —
+    * O(delete batch), never a members rewrite. Ingests read members
+    * minus the ledger, so a deleted member stops dominating new
+    * arrivals; HISTORICAL removed flags stay frozen (the same
+    * monotone-ingest invariant the index already documents — a full
+    * rebuild recomputes them). Compaction materializes the drop.
     */
   private[graft] def semdedupIndexDelete(spark: SparkSession, dir: String,
       ids: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "semdedup delete") {
-      graft.core.StagedSwap.recover(dir, SemdedupLayoutSubs)
-    val batches = Dedup.readBatchManifest(dir)
-    val tombs = Dedup.readTombstoneManifest(dir)
-    val root = new java.io.File(dir, "tombstones")
-    root.mkdirs()
-    val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".tombstone_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    ids.select(col("vec_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(root, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Dedup.writeBatchManifest(dir, batches, tombs :+ newId,
-      Dedup.readIngestKeys(dir))
-    }
+    SemdedupStore.delete(dir, ids)
 
-  /** Compact the semdedup index: rewrite all committed member batches
-    * into ONE batch (cell_grp-partitioned like every batch), physically
-    * dropping tombstoned members, swap the manifest (ledger cleared),
-    * GC the replaced dirs — the minhash/IVF compaction protocol on the
-    * members layout. Ingests are dominance-identical before/after
-    * (same surviving member set; SemDedupSpec pins it).
+  /** Compact the semdedup index: all committed member batches into ONE
+    * (cell_grp-partitioned like every batch), tombstoned members dropped.
+    * Ingests are dominance-identical before/after (same surviving
+    * member set; SemDedupSpec pins it).
     */
   private[graft] def semdedupIndexCompact(spark: SparkSession, dir: String): Unit =
-    graft.core.WriterLease.withLease(dir, "semdedup compact") {
-      graft.core.StagedSwap.recover(dir, SemdedupLayoutSubs)
-    val committed = Dedup.readBatchManifest(dir)
-    val tombs = Dedup.readTombstoneManifest(dir)
-    if (committed.size > 1 || tombs.nonEmpty) {
-    val root = new java.io.File(dir, "members")
-    val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".compact_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    filterSemdedupTombstones(spark, dir,
-      spark.read.parquet(root.getPath)
-        .where(col("batch_id").isin(committed: _*)))
-      .drop("batch_id")
-      .repartition(col("cell_grp"))
-      .write.mode("overwrite").partitionBy("cell_grp")
-      .parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(root, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Dedup.writeBatchManifest(dir, Seq(newId),
-      ingestKeys = Dedup.readIngestKeys(dir))
-    committed.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(root, s"batch_id=$id"))
+    SemdedupStore.compact(spark, dir) { (rows, path, m) =>
+      rows.repartition(col("cell_grp"))
+        .write.mode("overwrite").partitionBy("cell_grp")
+        .parquet(path)
+      m
     }
-    tombs.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(new java.io.File(dir, "tombstones"), s"batch_id=$id"))
-    }
-    }
-  }
 
   /** Full retrain of the semdedup index from its own surviving content —
     * the remedy the ingest/delete docstrings promise for the frozen-
-    * historical-flags invariant: read the committed, tombstone-filtered
-    * members, snapshot them (localCheckpoint — the rebuild must never
-    * lazily read what it is about to overwrite), and re-run
-    * [[writeSemdedupIndex]] in place: fresh quantizer, dominance flags
-    * RECOMPUTED from scratch over the surviving set — a member that was
-    * suppressed only by a since-deleted dominator comes back kept —
-    * single batch, tombstone ledger reset with the ingest keys preserved
-    * in the one manifest commit (a pre-rebuild micro-batch replay must
-    * stay a no-op). A rebuild is thereby also a materializing
-    * compaction. In-place is the single-writer local form; a 100 TB
-    * deployment stages a sibling directory and swaps a pointer, with
-    * this exact content contract.
+    * historical-flags invariant: re-run [[writeSemdedupIndex]] over the
+    * committed, tombstone-filtered members: fresh quantizer, dominance
+    * flags RECOMPUTED from scratch over the surviving set — a member
+    * that was suppressed only by a since-deleted dominator comes back
+    * kept — single batch, tombstone ledger reset, ingest keys preserved
+    * (a pre-rebuild micro-batch replay must stay a no-op).
     */
   private[graft] def semdedupIndexRebuild(spark: SparkSession, dir: String,
       tau: Double): Unit =
-    graft.core.WriterLease.withLease(dir, "semdedup rebuild") {
-      val committed = Dedup.readBatchManifest(dir)
-      val content = filterSemdedupTombstones(spark, dir, spark.read
-        .parquet(new java.io.File(dir, "members").getPath)
-        .where(col("batch_id").isin(committed: _*)))
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true)
-      // Staged layout + atomic manifest commit: crash-safe like the IVF
-      // rebuild (StagedSwap's contract).
-      graft.core.StagedSwap.swapInPlace(dir, SemdedupLayoutSubs) { stage =>
-        writeSemdedupIndex(spark, stage, content, tau,
-          keepIngestKeys = Dedup.readIngestKeys(dir))
-      }
-      graft.core.Warehouse.deleteRecursively(new java.io.File(dir, "tombstones"))
+    SemdedupStore.rebuild(spark, dir)(_.select(col("vec_id"), col("embedding"))) {
+      (content, stage, keys) =>
+        writeSemdedupIndex(spark, stage, content, tau, keepIngestKeys = keys)
     }
-
-  /** The dirs a complete semdedup layout comprises (manifest aside). */
-  private[graft] val SemdedupLayoutSubs = Seq("members", "centroids")
 
   /** Fixture-deterministic purge-cell discovery for q_semdedup_delete,
     * computed once per seed and cached beside its marker (disclosed
@@ -1117,16 +1017,10 @@ object Similarity extends QueryModule {
     val e = Tables(spark, sfDir, "embeddings")
     val maxId = embeddingsStats(spark, sfDir)._1
     val cut = maxId * 9 / 10
-    val dir = new java.io.File(SemdedupRoot, ivfTag(sfDir) + s"-cut$cut")
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
-      writeSemdedupIndex(spark, dir.getPath, e.filter(col("vec_id") < cut), tau = 0.4)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+    val dir = Warehouse.ensureSeed(new java.io.File(SemdedupRoot, ivfTag(sfDir) + s"-cut$cut")) {
+      writeSemdedupIndex(spark, _, e.filter(col("vec_id") < cut), tau = 0.4)
     }
-    (dir.getPath, cut)
+    (dir, cut)
   }
 
   private def semdedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1173,7 +1067,7 @@ object Similarity extends QueryModule {
       .start()
     q.awaitTermination()
     val members = spark.read.parquet(new java.io.File(dir, "members").getPath)
-    val streamed = Dedup.readBatchManifest(dir).filter(_ != 0L)
+    val streamed = PersistedIndex.readManifest(dir).batches.filter(_ != 0L)
     val batchRows = members.where(col("batch_id").isin(streamed: _*))
     val touched = batchRows.select(col("cell")).distinct()
     val seedMembers = members.where(col("batch_id") === 0L)
@@ -1187,7 +1081,7 @@ object Similarity extends QueryModule {
   }
 
   private def scratchSemdedupCopy(seedDir: String, prefix: String): String =
-    graft.core.Warehouse.scratchFromSeed(seedDir, prefix)
+    Warehouse.scratchFromSeed(seedDir, prefix)
 
   /** The semdedup index's compaction lifecycle as an entry: scratch from
     * the seed, ingest the arriving decile (a second batch_id dir),
@@ -1205,7 +1099,7 @@ object Similarity extends QueryModule {
     val e = Tables(spark, sfDir, "embeddings")
     val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
     val mid = cut + (embeddingsStats(spark, sfDir)._1 - cut) / 2
-    graft.core.Warehouse.ensureDerivedSeed(seedDir, "ingested1") { d =>
+    Warehouse.ensureDerivedSeed(seedDir, "ingested1") { d =>
       semdedupIndexIngest(spark, d,
         e.filter(col("vec_id") >= cut && col("vec_id") < mid), tau = 0.4)
         .queryExecution.toRdd.count()
@@ -1220,7 +1114,7 @@ object Similarity extends QueryModule {
   private[graft] def ensureVictimsDeletedSemdedupSeed(spark: SparkSession, sfDir: String): String = {
     val (seedDir, _) = ensureSemdedupIndex(spark, sfDir)
     val (vCachePath, _) = ensureRebuildCaches(spark, seedDir)
-    graft.core.Warehouse.ensureDerivedSeed(seedDir, "victims-deleted") { d =>
+    Warehouse.ensureDerivedSeed(seedDir, "victims-deleted") { d =>
       semdedupIndexDelete(spark, d, spark.read.parquet(vCachePath))
     }
   }
@@ -1722,11 +1616,9 @@ object Similarity extends QueryModule {
     */
   private def ivfTag(sfDir: String): String = Tables.fixtureTag("v6", sfDir, "embeddings")
 
-  /** Commit record for the persisted postings layout. Probes read ONLY
-    * `batch_id` partitions listed in `batches`; a writer publishes a
-    * batch by atomically replacing this file AFTER the batch directory is
-    * fully in place, so a crashed append leaves an orphan directory no
-    * probe ever reads (the durability hole a bare `mode("append")` had).
+  /** The IVF view of the postings layout's commit record
+    * ([[PersistedIndex.Manifest]] — batches, tombstones and ingest keys
+    * are the template's; the rest rides as the manifest's extra fields).
     * `cellCounts` (postings per non-empty cell) makes the drift sentinel
     * INCREMENTAL: an append counts only its own batch (O(batch + C)) and
     * merges into the stored counts — never a re-scan of the committed
@@ -1735,81 +1627,47 @@ object Similarity extends QueryModule {
     * restamped at every publish; once appends skew it past
     * [[IvfDriftThreshold]], `rebuildNeeded` tells the operator the fixed
     * quantizer no longer fits the data distribution and a full retrain
-    * ([[writeIvfIndex]]) is due.
-    *
-    * `ingestKeys` is the idempotency ledger for streaming ingest:
-    * [[ivfIndexAppend]] with an `ingestKey` already in the ledger is a
-    * no-op, so an at-least-once replay (foreachBatch re-delivering a
-    * micro-batch whose append committed but whose streaming checkpoint
-    * didn't) cannot commit the same vectors twice. Keys survive
-    * compaction (the merged batch carries the same rows).
-    *
-    * `tombstoneBatches` lists committed DELETE batches (parquet id
-    * lists under `tombstones/batch_id=N`, published with the same
-    * staged-rename + manifest-commit protocol as appends). Probes
-    * anti-join candidates against the committed tombstones; compaction
-    * physically drops tombstoned postings and clears the ledger. A
-    * tombstone suppresses its vec_id until the next compaction
-    * materializes the deletion — re-adding a deleted id is an
-    * append AFTER that compaction (the documented takedown contract).
+    * ([[writeIvfIndex]]) is due. `adcErr`/`adcErrLadder` are the
+    * build-time audited ADC error the range search's margin derives
+    * from.
     */
   final case class IvfManifest(batches: Seq[Long], imbalance: Double,
       rebuildNeeded: Boolean, cellCounts: Map[Int, Long],
       ingestKeys: Seq[String] = Seq.empty,
       tombstoneBatches: Seq[Long] = Seq.empty,
       adcErr: Double = 0.0,
-      adcErrLadder: Seq[(Double, Double)] = Seq.empty)
+      adcErrLadder: Seq[(Double, Double)] = Seq.empty) {
 
-  private[graft] def readIvfManifest(dir: String): IvfManifest = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "manifest.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val batches = "\"batches\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map(_.toLong).toSeq).getOrElse(Seq.empty)
-    val imb = "\"imbalance\":([0-9.]+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toDouble).getOrElse(1.0)
-    val rebuild = "\"rebuild_needed\":(true|false)".r.findFirstMatchIn(s)
-      .exists(_.group(1) == "true")
-    val counts = "\"cell_counts\":\"([^\"]*)\"".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map { kv =>
-        val Array(c, n) = kv.split(':'); c.toInt -> n.toLong
-      }.toMap).getOrElse(Map.empty)
-    val keys = "\"ingest_keys\":\"([^\"]*)\"".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').toSeq).getOrElse(Seq.empty)
-    val tombs = "\"tombstone_batches\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map(_.toLong).toSeq).getOrElse(Seq.empty)
-    val adcErr = "\"adc_err\":([0-9.]+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toDouble).getOrElse(0.0)
-    val ladder = "\"adc_err_ladder\":\"([^\"]*)\"".r.findFirstMatchIn(s)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').toSeq.map { kv =>
-        val Array(t, e) = kv.split(':'); (t.toDouble, e.toDouble)
-      }).getOrElse(Seq.empty)
-    IvfManifest(batches, imb, rebuild, counts, keys, tombs, adcErr, ladder)
+    def core: PersistedIndex.Manifest = {
+      def pairs[A, B](kv: Seq[(A, B)]) = kv.map { case (a, b) => s"$a:$b" }.mkString("\"", ",", "\"")
+      PersistedIndex.Manifest(batches, tombstoneBatches, ingestKeys,
+        scala.collection.immutable.ListMap(
+          "imbalance" -> imbalance.toString,
+          "rebuild_needed" -> rebuildNeeded.toString,
+          "cell_counts" -> pairs(cellCounts.toSeq.sorted),
+          "adc_err" -> adcErr.toString,
+          "adc_err_ladder" -> pairs(adcErrLadder)))
+    }
   }
 
-  private[graft] def writeIvfManifest(dir: String, m: IvfManifest): Unit = {
-    val counts = m.cellCounts.toSeq.sorted
-      .map { case (c, n) => s"$c:$n" }.mkString(",")
-    val json = s"""{"batches":[${m.batches.mkString(",")}],""" +
-      s""""imbalance":${m.imbalance},"rebuild_needed":${m.rebuildNeeded},""" +
-      s""""cell_counts":"$counts",""" +
-      s""""ingest_keys":"${m.ingestKeys.mkString(",")}",""" +
-      s""""tombstone_batches":[${m.tombstoneBatches.mkString(",")}],""" +
-      s""""adc_err":${m.adcErr},""" +
-      s""""adc_err_ladder":"${m.adcErrLadder.map { case (t, e) => s"$t:$e" }.mkString(",")}"}"""
-    val tmp = new java.io.File(dir, ".manifest.tmp").toPath
-    java.nio.file.Files.write(tmp, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // rename(2) is atomic on one filesystem: readers see the old manifest
-    // or the new one, never a torn write.
-    java.nio.file.Files.move(tmp, new java.io.File(dir, "manifest.json").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+  object IvfManifest {
+    def of(m: PersistedIndex.Manifest): IvfManifest = {
+      def pairs(k: String): Seq[(String, String)] =
+        m.extra.get(k).map(_.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+          .map(_.split(',').toSeq.map { kv => val Array(a, b) = kv.split(':'); (a, b) })
+          .getOrElse(Seq.empty)
+      IvfManifest(m.batches,
+        m.extra.get("imbalance").fold(1.0)(_.toDouble),
+        m.extra.get("rebuild_needed").contains("true"),
+        pairs("cell_counts").map { case (c, n) => c.toInt -> n.toLong }.toMap,
+        m.ingestKeys, m.tombstones,
+        m.extra.get("adc_err").fold(0.0)(_.toDouble),
+        pairs("adc_err_ladder").map { case (t, e) => (t.toDouble, e.toDouble) })
+    }
   }
+
+  private[graft] def readIvfManifest(dir: String): IvfManifest =
+    IvfManifest.of(PersistedIndex.readManifest(dir))
 
   /** Per-cell postings counts of an assigned corpus (bounded collect: C
     * rows — the sentinel's unit of account).
@@ -1872,17 +1730,10 @@ object Similarity extends QueryModule {
     * same-quantizer-equivalent.
     */
   private[graft] def ensureIvfIndex(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File(IvfRoot, ivfTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
+    Warehouse.ensureSeed(new java.io.File(IvfRoot, ivfTag(sfDir))) { dir =>
       val e = Tables(spark, sfDir, "embeddings")
-      writeIvfIndex(spark, dir.getPath, e, train = Some(e.filter(col("vec_id") =!= 0)))
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+      writeIvfIndex(spark, dir, e, train = Some(e.filter(col("vec_id") =!= 0)))
     }
-    dir.getPath
   }
 
   private val IvfSeedRoot = "/tmp/graft_ivf_seed"
@@ -1928,17 +1779,11 @@ object Similarity extends QueryModule {
     val e = Tables(spark, sfDir, "embeddings")
     val maxId = embeddingsStats(spark, sfDir)._1
     val cut = maxId * 9 / 10
-    val dir = new java.io.File(IvfSeedRoot, ivfTag(sfDir) + s"-cut$cut")
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
-      writeIvfIndex(spark, dir.getPath, e.filter(col("vec_id") < cut),
+    val dir = Warehouse.ensureSeed(new java.io.File(IvfSeedRoot, ivfTag(sfDir) + s"-cut$cut")) {
+      writeIvfIndex(spark, _, e.filter(col("vec_id") < cut),
         train = Some(e.filter(col("vec_id") < cut && col("vec_id") =!= 0)))
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
     }
-    (dir.getPath, cut)
+    (dir, cut)
   }
 
   /** Copy the immutable seed template into a fresh scratch dir for one
@@ -1946,7 +1791,7 @@ object Similarity extends QueryModule {
     * jobs, no quantizer retrain.
     */
   private[graft] def scratchIvfFromSeed(seedDir: String, prefix: String): String = {
-    val dir = graft.core.Warehouse.scratchFromSeed(seedDir, prefix)
+    val dir = Warehouse.scratchFromSeed(seedDir, prefix)
     scratchOrigin(dir) = seedDir
     dir
   }
@@ -2003,9 +1848,9 @@ object Similarity extends QueryModule {
       .parquet(new java.io.File(dir, "centroids").getPath)
     writeIvfCodebook(spark, dir, cb)
     val imb = cellImbalance(counts.values)
-    writeIvfManifest(dir, IvfManifest(Seq(0L), imb, imb > IvfDriftThreshold,
+    PersistedIndex.writeManifest(dir, IvfManifest(Seq(0L), imb, imb > IvfDriftThreshold,
       counts, ingestKeys = keepIngestKeys, adcErr = auditedErr,
-      adcErrLadder = auditedLadder))
+      adcErrLadder = auditedLadder).core)
   }
 
   private def writeIvfCodebook(spark: SparkSession, dir: String, cb: PqCodebook): Unit = {
@@ -2060,244 +1905,104 @@ object Similarity extends QueryModule {
     * here) reports when appends have drifted the cell sizes far enough
     * that a retrain (writeIvfIndex) is due. SimilaritySpec pins append ==
     * full rebuild with the same quantizer, crash-orphan invisibility, and
-    * the drift flag.
-    *
-    * Durability: the batch is STAGED into a dot-directory (invisible to
-    * partition discovery), atomically renamed into the postings layout,
-    * and only then committed by atomically replacing the manifest. A
-    * crash at any point leaves either nothing or an unreferenced batch
-    * directory that manifest-gated probes never read; batch ids are
-    * allocated past the max directory ON DISK (committed or orphaned), so
-    * an orphan can never be adopted by id collision.
-    *
-    * `ingestKey` makes the append IDEMPOTENT for at-least-once callers
-    * (streaming foreachBatch): a key already in the manifest's
-    * [[IvfManifest.ingestKeys]] ledger means this batch's append already
-    * committed, and the call is a no-op — the replayed micro-batch after
-    * a crash-between-commit-and-checkpoint cannot publish twice.
+    * the drift flag. Durability and the `ingestKey` replay rule are
+    * [[PersistedIndex.append]]'s.
     */
   private[graft] def ivfIndexAppend(spark: SparkSession, dir: String, batch: DataFrame,
       ingestKey: Option[String] = None): Unit =
-    graft.core.WriterLease.withLease(dir, "IVF append") {
-      graft.core.StagedSwap.recover(dir, IvfLayoutSubs)
-    val manifest = readIvfManifest(dir)
-    if (!ingestKey.exists(manifest.ingestKeys.contains)) {
-    val postingsRoot = new java.io.File(dir, "postings")
-    val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".staging_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = ivfBuildWith(batch, cents,
-      keep = IndexMetaCols.filter(batch.columns.contains))
-    // Codes use the PERSISTED codebook — fixed between rebuilds exactly
-    // like the coarse quantizer; the drift sentinel covers both (a
-    // distribution shift that skews cells also degrades the codebook, and
-    // the remedy is the same full retrain). Residual-encoded against the
-    // batch's own assigned cells.
-    val cb = readIvfCodebook(spark, dir)
-    assigned.cells
-      .withColumn("code", pqEncodeResidualUdf(cb, cents)(col("embedding"), col("cell")))
-      .withColumnRenamed("cell", "cell_id")
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(staging.getPath)
-    // Incremental sentinel: count ONLY the batch (O(batch + C)) and merge
-    // into the manifest's running counts — never a committed-postings
-    // re-scan, which would be O(n) per ingest batch. Counts come from
-    // the staged files' parquet footers: exact, driver-side, no second
-    // Spark pass over the rows just written.
-    val batchCounts = cellCountsFromLayout(spark, staging)
-    assigned.cells.unpersist()
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val committed = manifest.batches :+ newId
-    val merged = (manifest.cellCounts.keySet ++ batchCounts.keySet).map { c =>
-      c -> (manifest.cellCounts.getOrElse(c, 0L) + batchCounts.getOrElse(c, 0L))
-    }.toMap
-    val imb = cellImbalance(merged.values)
-    // copy() preserves the tombstone ledger — an append must not
-    // resurrect deleted ids.
-    writeIvfManifest(dir, manifest.copy(batches = committed, imbalance = imb,
-      rebuildNeeded = imb > IvfDriftThreshold, cellCounts = merged,
-      ingestKeys = manifest.ingestKeys ++ ingestKey))
+    IvfStore.append(dir, ingestKey) { (path, m) =>
+      val cents = readIvfCentroids(spark, dir)
+      val assigned = ivfBuildWith(batch, cents,
+        keep = IndexMetaCols.filter(batch.columns.contains))
+      // Codes use the PERSISTED codebook — fixed between rebuilds exactly
+      // like the coarse quantizer; the drift sentinel covers both (a
+      // distribution shift that skews cells also degrades the codebook,
+      // and the remedy is the same full retrain). Residual-encoded
+      // against the batch's own assigned cells.
+      val cb = readIvfCodebook(spark, dir)
+      assigned.cells
+        .withColumn("code", pqEncodeResidualUdf(cb, cents)(col("embedding"), col("cell")))
+        .withColumnRenamed("cell", "cell_id")
+        .write.mode("overwrite").partitionBy("cell_id")
+        .parquet(path)
+      // Incremental sentinel: count ONLY the batch (O(batch + C)) and
+      // merge into the manifest's running counts — never a committed-
+      // postings re-scan, which would be O(n) per ingest batch. Counts
+      // come from the staged files' parquet footers: exact, driver-side,
+      // no second Spark pass over the rows just written.
+      val batchCounts = cellCountsFromLayout(spark, new java.io.File(path))
+      assigned.cells.unpersist()
+      val manifest = IvfManifest.of(m)
+      val merged = (manifest.cellCounts.keySet ++ batchCounts.keySet).map { c =>
+        c -> (manifest.cellCounts.getOrElse(c, 0L) + batchCounts.getOrElse(c, 0L))
+      }.toMap
+      val imb = cellImbalance(merged.values)
+      manifest.copy(imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold,
+        cellCounts = merged).core
     }
-  }
 
   /** Record a DELETE batch — the takedown operation a real corpus needs
-    * (GDPR erasure, licensing removals, contaminated-shard pulls). The
-    * ids stage as a parquet list under a dot-directory, atomically
-    * rename into `tombstones/batch_id=N`, and commit by atomically
-    * replacing the manifest — the append protocol, applied to removals.
-    * Nothing in the postings layout is touched: deletion is O(delete
-    * batch), never a postings rewrite; probes anti-join candidates
-    * against the committed tombstones ([[tombstoneIds]]), and the next
-    * [[ivfIndexCompact]] materializes the deletion physically and
-    * clears the ledger. A crashed delete leaves an orphan id list no
-    * probe reads — the same crash story as appends.
+    * (GDPR erasure, licensing removals, contaminated-shard pulls).
+    * Deletion is O(delete batch), never a postings rewrite: probes
+    * anti-join candidates against the tombstone ledger at the CANDIDATE
+    * stage (before any shortlist limit, so deleted rows never consume
+    * ranking slots), and the next [[ivfIndexCompact]] materializes the
+    * deletion physically.
     */
   private[graft] def ivfIndexDelete(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    graft.core.WriterLease.withLease(dir, "IVF delete") {
-      graft.core.StagedSwap.recover(dir, IvfLayoutSubs)
-    val manifest = readIvfManifest(dir)
-    val root = new java.io.File(dir, "tombstones")
-    root.mkdirs()
-    val onDisk = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".tombstone_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    ids.select(col("vec_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(root, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeIvfManifest(dir, manifest.copy(
-      tombstoneBatches = manifest.tombstoneBatches :+ newId))
-    }
+    IvfStore.delete(dir, ids)
 
   /** Full quantizer retrain from the index's OWN committed content — the
-    * drift sentinel's documented remedy, self-contained: read the
-    * committed, tombstone-filtered postings (vec_id, embedding, meta),
-    * snapshot them (localCheckpoint — the rebuild must never lazily read
-    * what it is about to overwrite), and re-run [[writeIvfIndex]] in
-    * place: fresh centroids, fresh PQ codebook, single batch, clean
-    * sentinel. A rebuild is thereby also a materializing compaction
-    * (tombstoned ids drop out; the ledger resets with the manifest).
-    * In-place is the single-writer local form; a 100 TB deployment
-    * writes the rebuilt layout to a sibling directory and swaps a
-    * pointer, with this exact content contract.
+    * drift sentinel's documented remedy, self-contained: re-run
+    * [[writeIvfIndex]] over the committed, tombstone-filtered postings
+    * (vec_id, embedding, meta): fresh centroids, fresh PQ codebook,
+    * single batch, clean sentinel, ingest keys preserved.
     */
   private[graft] def ivfIndexRebuild(spark: SparkSession, dir: String): Unit =
-    graft.core.WriterLease.withLease(dir, "IVF rebuild") {
-      val manifest = readIvfManifest(dir)
-      val postings = spark.read
-        .parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*))
-      val keep = Seq("vec_id", "embedding") ++
-        IndexMetaCols.filter(postings.columns.contains)
-      val content = filterTombstones(spark, dir, manifest, postings)
-        .select(keep.map(col): _*)
-        .localCheckpoint(true)
+    IvfStore.rebuild(spark, dir) { live =>
+      live.select((Seq("vec_id", "embedding") ++
+        IndexMetaCols.filter(live.columns.contains)).map(col): _*)
+    } { (content, stage, keys) =>
       // A retrain invalidates any template-shared quantizer/codebook for
-      // the LIVE dir (the staged build only clears the stage path).
+      // the LIVE dir (writeIvfIndex only clears the stage path).
       scratchOrigin.remove(dir)
-      // Preserve the ingest-key ledger IN the rebuild's single manifest
-      // commit (the content already folds every committed micro-batch
-      // in — a pre-rebuild replay must stay a no-op, exactly as across
-      // compaction; a second manifest write would open a crash window
-      // that silently drops the ledger). The whole fresh layout stages
-      // in a sibling dot-directory and swaps in with the manifest rename
-      // as the commit point — a crash mid-rebuild never leaves the old
-      // manifest referencing destroyed dirs (StagedSwap's contract).
-      graft.core.StagedSwap.swapInPlace(dir, IvfLayoutSubs) { stage =>
-        writeIvfIndex(spark, stage, content, keepIngestKeys = manifest.ingestKeys)
-      }
-      // The fresh manifest references batch 0 with an empty tombstone
-      // ledger; the materialized tombstone id lists are orphans — GC.
-      graft.core.Warehouse.deleteRecursively(new java.io.File(dir, "tombstones"))
+      writeIvfIndex(spark, stage, content, keepIngestKeys = keys)
     }
 
-  /** The dirs a complete IVF layout comprises (manifest.json aside). */
-  private[graft] val IvfLayoutSubs = Seq("postings", "centroids", "codebooks")
-
-  /** The committed tombstoned ids as a DataFrame (empty-schema-free:
-    * None when no delete batch is committed, so the common no-deletes
-    * probe plan is untouched).
+  /** The postings index on the shared lifecycle: `postings/` partitioned
+    * by (batch_id, cell_id) beside the quantizer tables, tombstones keyed
+    * by vec id.
     */
-  private def tombstoneIds(spark: SparkSession, dir: String,
-      manifest: IvfManifest): Option[DataFrame] =
-    if (manifest.tombstoneBatches.isEmpty) None
-    else Some(spark.read.parquet(new java.io.File(dir, "tombstones").getPath)
-      .where(col("batch_id").isin(manifest.tombstoneBatches: _*))
-      .select(col("vec_id")))
-
-  /** Anti-join `rows` against the committed tombstones — applied at the
-    * CANDIDATE stage of every probe over this index (before any
-    * shortlist limit, so deleted rows never consume ranking slots).
-    * At scale the tombstone side is the small one; Catalyst broadcasts
-    * it and the filter rides the existing candidate scan.
-    */
-  private[graft] def filterTombstones(spark: SparkSession, dir: String,
-      manifest: IvfManifest, rows: DataFrame): DataFrame =
-    tombstoneIds(spark, dir, manifest)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
+  private[graft] val IvfStore =
+    PersistedIndex("IVF", "postings", "vec_id", aux = Seq("centroids", "codebooks"))
 
   /** Compact the committed batches into ONE batch partition — the index
     * lifecycle operation append-heavy ingest eventually needs: every
     * append adds a `batch_id` directory, and probes open
     * O(batches · nprobe) files, so a long-running ingest degrades probe
-    * IO until someone rewrites. The rewrite reuses the append's commit
-    * protocol in reverse: read all committed postings, stage the merged
-    * copy under a dot-directory (partitioned by cell_id, one file per
-    * cell instead of one per batch per cell), atomically rename, then
-    * atomically swap the manifest to reference ONLY the merged batch.
-    * A crash before the swap leaves an orphan and the old manifest —
-    * probes never see a half-compacted index; a crash after the swap
-    * leaves the old batch dirs unreferenced. Cleanup of unreferenced
-    * dirs runs after the swap (production would delay it by a
-    * reader-grace window, since an in-flight probe may hold the old
-    * manifest's batch list).
+    * IO until someone rewrites. The merged copy is partitioned by
+    * cell_id (one file per cell instead of one per batch per cell).
+    * Cleanup of the replaced dirs runs after the manifest swap
+    * (production would delay it by a reader-grace window, since an
+    * in-flight probe may hold the old manifest's batch list).
     *
-    * SINGLE WRITER: compaction assumes no concurrent appender (the same
-    * assumption the on-disk id allocation makes — a production
-    * deployment takes a writer lock or runs compaction from the one
-    * ingest job). GC is restricted to the batch ids COMMITTED at
-    * compact start: an in-flight append's renamed-but-uncommitted
-    * directory is never deleted, it just survives as the orphan the
-    * manifest gate already ignores.
-    *
-    * Quantizer, codes, counts, and the drift stat are untouched — the
-    * merged postings are byte-wise the same rows, so probes are
-    * row-identical before/after (spec-pinned).
+    * Quantizer and codes are untouched — the merged postings are the
+    * same rows minus tombstoned ones, so probes are row-identical
+    * before/after (spec-pinned); the drift counts restamp from the
+    * merged layout.
     */
   private[graft] def ivfIndexCompact(spark: SparkSession, dir: String): Unit =
-    graft.core.WriterLease.withLease(dir, "IVF compact") {
-      graft.core.StagedSwap.recover(dir, IvfLayoutSubs)
-    val manifest = readIvfManifest(dir)
-    if (manifest.batches.size > 1 || manifest.tombstoneBatches.nonEmpty) {
-    val postingsRoot = new java.io.File(dir, "postings")
-    val onDisk = Option(postingsRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val newId = (onDisk :+ 0L).max + 1
-    val staging = new java.io.File(dir, s".compact_batch_$newId")
-    graft.core.Warehouse.deleteRecursively(staging)
-    // The rewrite MATERIALIZES pending deletions: tombstoned postings
-    // are dropped physically, and the swapped manifest clears the
-    // tombstone ledger (probes then stop paying the anti-join).
-    filterTombstones(spark, dir, manifest,
-      spark.read.parquet(postingsRoot.getPath)
-        .where(col("batch_id").isin(manifest.batches: _*)))
-      .drop("batch_id")
-      .repartition(col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(staging.getPath)
-    // Post-drop sentinel counts from the staged footers (exact, driver-
-    // side — deletions change the per-cell sizes the drift stat reads).
-    val newCounts = cellCountsFromLayout(spark, staging)
-    val imb = cellImbalance(newCounts.values)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(postingsRoot, s"batch_id=$newId").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeIvfManifest(dir, manifest.copy(batches = Seq(newId),
-      imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold,
-      cellCounts = newCounts, tombstoneBatches = Seq.empty))
-    // GC of now-unreferenced batch + tombstone dirs — safe AFTER the
-    // manifest swap, and restricted to ids committed at compact start.
-    manifest.batches.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(postingsRoot, s"batch_id=$id"))
+    IvfStore.compact(spark, dir) { (rows, path, m) =>
+      rows.repartition(col("cell_id"))
+        .write.mode("overwrite").partitionBy("cell_id")
+        .parquet(path)
+      // Post-drop sentinel counts from the staged footers (exact, driver-
+      // side — deletions change the per-cell sizes the drift stat reads).
+      val counts = cellCountsFromLayout(spark, new java.io.File(path))
+      val imb = cellImbalance(counts.values)
+      IvfManifest.of(m).copy(imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold,
+        cellCounts = counts).core
     }
-    manifest.tombstoneBatches.foreach { id =>
-      graft.core.Warehouse.deleteRecursively(
-        new java.io.File(new java.io.File(dir, "tombstones"), s"batch_id=$id"))
-    }
-    }
-  }
 
   /** Build → append → compact → probe, end to end: the probe answers
     * from the COMPACTED single-batch layout, and its scored candidates
@@ -2316,7 +2021,7 @@ object Similarity extends QueryModule {
   private[graft] def ensureAppendedIvfSeed(spark: SparkSession, sfDir: String): String = {
     val e = Tables(spark, sfDir, "embeddings")
     val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
-    graft.core.Warehouse.ensureDerivedSeed(seed, "appended") { d =>
+    Warehouse.ensureDerivedSeed(seed, "appended") { d =>
       ivfIndexAppend(spark, d, e.filter(col("vec_id") >= cut))
     }
   }
@@ -2437,7 +2142,7 @@ object Similarity extends QueryModule {
   private[graft] def ensurePoisonedIvfSeed(spark: SparkSession, sfDir: String): String = {
     val e = Tables(spark, sfDir, "embeddings")
     val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
-    graft.core.Warehouse.ensureDerivedSeed(seed, "poisoned") { d =>
+    Warehouse.ensureDerivedSeed(seed, "poisoned") { d =>
       val crowd = e.filter(col("vec_id") === 1)
         .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
       val rnd = new scala.util.Random(13)
@@ -2490,10 +2195,8 @@ object Similarity extends QueryModule {
     val centroids = readIvfCentroids(spark, dir)
     val manifest = readIvfManifest(dir)
     val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val cells = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probed: _*)))
+    val cells = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probed: _*)))
     val scored = exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
       .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
         round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
@@ -2520,10 +2223,8 @@ object Similarity extends QueryModule {
     val centroids = readIvfCentroids(spark, dir)
     val manifest = readIvfManifest(dir)
     val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val cells = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probed: _*)))
+    val cells = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probed: _*)))
     val scored = exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
       .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
         round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
@@ -2592,9 +2293,7 @@ object Similarity extends QueryModule {
       nprobe: Int, k: Int, exclude: Option[Long] = None,
       tap: Option[String] = None): DataFrame = {
     val manifest = readIvfManifest(dir)
-    val postings = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*)))
+    val postings = IvfStore.live(spark, dir, manifest.core)
     val cells =
       if (m <= FilteredBruteFactor * k) postings
       else {
@@ -2677,10 +2376,8 @@ object Similarity extends QueryModule {
       .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
     val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val postings0 = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probedCells: _*)))
+    val postings0 = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probedCells: _*)))
     // The predicate lands INSIDE the pruned scan (PushedFilters), before
     // the anchor join — candidates outside it are never scored.
     val postings = labelValue.fold(postings0)(v => postings0.filter(col("label") === v))
@@ -2723,10 +2420,8 @@ object Similarity extends QueryModule {
       .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
     val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val postings = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probedCells: _*)))
+    val postings = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probedCells: _*)))
     val scored = postings.join(broadcast(anchorCells), Seq("cell_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -3173,10 +2868,8 @@ object Similarity extends QueryModule {
     val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
     val table = adcTable(cb, anchor)
     val dots = centDots(centroids, probed, anchor)
-    val pruned = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probed: _*)))
+    val pruned = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probed: _*)))
     val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
     // Bounded collect: the k·refine-candidate short list (ids only).
     val cand = base
@@ -3273,10 +2966,8 @@ object Similarity extends QueryModule {
     val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
     val table = adcTable(cb, anchor)
     val dots = centDots(centroids, probed, anchor)
-    val pruned = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probed: _*)))
+    val pruned = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probed: _*)))
     val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
     // Codes-only pre-filter. Survivor ids are usually bounded by
     // |result| + margin spillover — a driver-side id list gives the
@@ -3326,9 +3017,7 @@ object Similarity extends QueryModule {
       nprobe: Int, k: Int, refine: Int = PqRefine, exclude: Option[Long] = None,
       tap: Option[String] = None): DataFrame = {
     val manifest = readIvfManifest(dir)
-    val postings = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*)))
+    val postings = IvfStore.live(spark, dir, manifest.core)
     val scored =
       if (m <= FilteredBruteFactor * k) {
         // Selective: exact top-k over the filtered subset — identical to
@@ -3450,10 +3139,8 @@ object Similarity extends QueryModule {
       .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
     val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val postings = filterTombstones(spark, dir, manifest,
-      spark.read.parquet(new java.io.File(dir, "postings").getPath)
-        .where(col("batch_id").isin(manifest.batches: _*) &&
-          col("cell_id").isin(probedCells: _*)))
+    val postings = IvfStore.live(spark, dir, manifest.core,
+      Some(col("cell_id").isin(probedCells: _*)))
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("vec_id"))
     // Candidate stage: codes only — parquet column pruning never touches

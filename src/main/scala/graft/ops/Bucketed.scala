@@ -19,13 +19,12 @@ object Bucketed extends QueryModule {
   private val Buckets = 8
   private val BktRoot = "/tmp/graft_bkt"
 
-  /** Stable per-fixture tag: the source dir plus the source file's mtime,
-    * so a regenerated fixture at the same path never reuses stale buckets.
+  /** Per-fixture bucketed table name (core.Tables.fixtureTag over the
+    * source table, `-` mapped to `_` to stay an identifier), so a
+    * regenerated fixture at the same path never reuses stale buckets.
     */
-  private def tag(sfDir: String, tbl: String): String = {
-    val m = new java.io.File(sfDir, s"$tbl.parquet").lastModified() / 1000
-    java.lang.Long.toHexString((sfDir.hashCode.toLong << 24) ^ m)
-  }
+  private[graft] def tableName(sfDir: String, tbl: String): String =
+    s"${tbl}_bkt_" + Tables.fixtureTag("v1", sfDir, tbl).replace('-', '_')
 
   /** Make `table` available as a bucketed table, paying the bucketed WRITE
     * only on the first run per fixture per machine (marker-gated, same
@@ -73,8 +72,7 @@ object Bucketed extends QueryModule {
   private[graft] def seed(spark: SparkSession, sfDir: String): (String, String) = {
     // Table names carry a per-fixture tag so different scale factors in
     // one session (Verify vs specs) never reuse each other's buckets.
-    val t = tag(sfDir, "orders")
-    val (ot, ct) = (s"orders_bkt_$t", s"customer_bkt_$t")
+    val (ot, ct) = (tableName(sfDir, "orders"), tableName(sfDir, "customer"))
     ensureBucketed(spark, ot, "o_custkey", Tables(spark, sfDir, "orders"))
     ensureBucketed(spark, ct, "c_custkey", Tables(spark, sfDir, "customer"))
     (ot, ct)

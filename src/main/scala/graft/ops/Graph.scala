@@ -262,12 +262,8 @@ object Graph extends QueryModule {
   private[graft] def ensurePrRanksSeed(spark: SparkSession, sfDir: String): String = {
     // "sparse-" prefix: versions the seed content rule (r13 switched the
     // base graph to the qty ≤ CcMaxQty subgraph) independently of ccTag.
-    val dir = new java.io.File(PrSeedRoot, "sparse-" + ccTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    val path = new java.io.File(dir, "ranks").getPath
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
+    val dir = graft.core.Warehouse.ensureSeed(
+        new java.io.File(PrSeedRoot, "sparse-" + ccTag(sfDir))) { d =>
       val base = prBaseEdges(spark, sfDir)
       val Seq(r1, r2, r3) = prUnnormRanks(base, 3, eager = true)
       val deg = base.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
@@ -276,11 +272,9 @@ object Graph extends QueryModule {
         .join(r1.select(col("node"), col("r").as("r1")), "node")
         .join(r2.select(col("node"), col("r").as("r2")), "node")
         .join(r3.select(col("node"), col("r").as("r3")), "node")
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+        .write.mode("overwrite").parquet(new java.io.File(d, "ranks").getPath)
     }
-    path
+    new java.io.File(dir, "ranks").getPath
   }
 
   /** Delta-push incremental PageRank: fold a directed edge batch into the
@@ -658,18 +652,11 @@ object Graph extends QueryModule {
     * timed region is the MERGE, which is the operator.
     */
   private[graft] def ensureCcLabelsSeed(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File(CcSeedRoot, ccTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    val labelsPath = new java.io.File(dir, "labels").getPath
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
+    val dir = graft.core.Warehouse.ensureSeed(new java.io.File(CcSeedRoot, ccTag(sfDir))) { d =>
       val (labels, _) = ccOnSparse(spark, sfDir)
-      labels.write.mode("overwrite").parquet(labelsPath)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+      labels.write.mode("overwrite").parquet(new java.io.File(d, "labels").getPath)
     }
-    labelsPath
+    new java.io.File(dir, "labels").getPath
   }
 
   /** Incremental component merge: fold a batch of undirected edges
@@ -886,18 +873,12 @@ object Graph extends QueryModule {
     * neighbor-label lookups and l_k to decide what actually changed.
     */
   private[graft] def ensureLpaLabelsSeed(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File(LpaSeedRoot, "sparse-" + ccTag(sfDir))
-    val marker = new java.io.File(dir, "_SEEDED")
-    val path = new java.io.File(dir, "labels").getPath
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
-      dir.mkdirs()
+    val dir = graft.core.Warehouse.ensureSeed(
+        new java.io.File(LpaSeedRoot, "sparse-" + ccTag(sfDir))) { d =>
       lpaSeedFrame(lpaRoundLabels(prBaseEdges(spark, sfDir), 3, eager = true))
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+        .write.mode("overwrite").parquet(new java.io.File(d, "labels").getPath)
     }
-    path
+    new java.io.File(dir, "labels").getPath
   }
 
   /** Zip per-round LPA labels into the (node, l1..lk) seed frame

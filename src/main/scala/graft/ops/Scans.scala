@@ -105,30 +105,29 @@ object Sources {
   private val DerbyRoot = "/tmp/graft_derby"
   private val DerbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
-  private def derbyDir(sfDir: String): java.io.File =
-    new java.io.File(DerbyRoot, java.lang.Integer.toHexString(sfDir.hashCode))
+  /** Per-fixture seed dir (core.Tables.fixtureTag over events), so a
+    * fixture regenerated at the same path never serves the old import.
+    */
+  private[graft] def derbyDir(sfDir: String): java.io.File =
+    new java.io.File(DerbyRoot, Tables.fixtureTag("v1", sfDir, "events"))
 
   private def derbyUrl(sfDir: String): String =
     s"jdbc:derby:${derbyDir(sfDir).getPath}/events_db"
 
-  /** Bulk-import the events fixture into embedded Derby, once per sfDir
-    * per machine (fixture content is static; a marker file records a
-    * completed seed so a crashed partial write is redone). This is the
-    * reference's Sqoop full load (README.md:31) expressed as Spark's JDBC
-    * batch writer.
+  /** Bulk-import the events fixture into embedded Derby, once per
+    * fixture per machine (marker-gated, so a crashed partial write is
+    * redone). This is the reference's Sqoop full load (README.md:31)
+    * expressed as Spark's JDBC batch writer.
     */
   private def seedDerby(spark: SparkSession, sfDir: String): Unit = {
-    val dir = derbyDir(sfDir)
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (marker.exists()) return
-    if (dir.exists()) graft.core.Warehouse.deleteRecursively(dir)
-    Tables(spark, sfDir, "events")
-      .write.format("jdbc")
-      .option("url", derbyUrl(sfDir) + ";create=true")
-      .option("dbtable", "events")
-      .option("driver", DerbyDriver)
-      .mode("overwrite").save()
-    marker.createNewFile()
+    graft.core.Warehouse.ensureSeed(derbyDir(sfDir)) { _ =>
+      Tables(spark, sfDir, "events")
+        .write.format("jdbc")
+        .option("url", derbyUrl(sfDir) + ";create=true")
+        .option("dbtable", "events")
+        .option("driver", DerbyDriver)
+        .mode("overwrite").save()
+    }
     ()
   }
 

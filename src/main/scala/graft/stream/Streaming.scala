@@ -179,11 +179,8 @@ object Streaming extends QueryModule {
     * events.
     */
   private[graft] def ensureCanalTopic(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File("/tmp/graft_canal_topic",
-      graft.core.Tables.fixtureTag("v1", sfDir, "events"))
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
-      graft.core.Warehouse.deleteRecursively(dir)
+    graft.core.Warehouse.ensureSeed(new java.io.File("/tmp/graft_canal_topic",
+        graft.core.Tables.fixtureTag("v1", sfDir, "events"))) { dir =>
       graft.core.Tables(spark, sfDir, "events")
         .select(to_json(struct(
           col("event_id").as("id"),
@@ -197,11 +194,8 @@ object Streaming extends QueryModule {
             lit("user_id"), col("user_id").cast(StringType),
             lit("event_type"), col("event_type"),
             lit("value"), col("value").cast(StringType))).as("data"))).as("value"))
-        .write.mode("overwrite").text(dir.getPath)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      ()
+        .write.mode("overwrite").text(dir)
     }
-    dir.getPath
   }
 
   /** The reference's EXACT loop on the EXACT envelope (HdfsSink.java:55-125):

@@ -269,16 +269,16 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // Crash window: roll the manifest back to the pre-append commit —
     // the appended batch directory is still on disk but must be
     // invisible to probes (manifest-gated read).
-    graft.ext.Dedup.writeBatchManifest(dir, Seq(0L))
+    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L)))
     assert(probe().isEmpty, "uncommitted batch leaked into a probe")
     // Restore the commit: visible again.
-    graft.ext.Dedup.writeBatchManifest(dir, Seq(0L, 1L))
+    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L, 1L)))
     assert(probe() == Seq((300L, 202L)))
 
     // Compaction: merge the two batches into one — probe-identical,
     // single referenced + on-disk batch, idempotent re-run.
     graft.ext.Dedup.minhashIndexCompact(spark, dir)
-    assert(graft.ext.Dedup.readBatchManifest(dir).size == 1)
+    assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1)
     val dirs = Option(new java.io.File(dir, "postings").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -358,15 +358,15 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     def probe() = graft.ext.Dedup.probeMinhashIndex(spark, dir, probeDoc, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(probe() == Seq((300L, 202L)), s"streamed doc not probe-visible: ${probe()}")
-    assert(graft.ext.Dedup.readIngestKeys(dir).toSet == Set("stream-0", "stream-1"))
+    assert(graft.core.PersistedIndex.readManifest(dir).ingestKeys.toSet == Set("stream-0", "stream-1"))
     // At-least-once replay (crash between manifest commit and checkpoint
     // offset): re-appending under a committed key is a no-op — no new
     // batch, no postings growth.
-    val batchesBefore = graft.ext.Dedup.readBatchManifest(dir)
+    val batchesBefore = graft.core.PersistedIndex.readManifest(dir).batches
     val postingsBefore = spark.read.parquet(s"$dir/postings").count()
     graft.ext.Dedup.minhashIndexAppend(spark, dir,
       arriving.take(2).toDF("doc_id", "text"), ingestKey = Some("stream-0"))
-    assert(graft.ext.Dedup.readBatchManifest(dir) == batchesBefore,
+    assert(graft.core.PersistedIndex.readManifest(dir).batches == batchesBefore,
       "replayed ingestKey committed a duplicate batch")
     assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore)
     // The ledger survives compaction: a pre-compact micro-batch that
@@ -399,13 +399,13 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // Appends preserve the ledger (no resurrection via manifest rewrite).
     graft.ext.Dedup.minhashIndexAppend(spark, dir,
       Seq((200L, docText(200))).toDF("doc_id", "text"))
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).nonEmpty,
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.nonEmpty,
       "append wiped the tombstone ledger")
     assert(probe() == Set((301L, 5L)))
 
     // Compaction drops doc 3's postings physically and clears the ledger.
     graft.ext.Dedup.minhashIndexCompact(spark, dir)
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).isEmpty)
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty)
     assert(probe() == Set((301L, 5L)), "compaction changed the post-delete probe")
     val remaining = spark.read
       .parquet(new java.io.File(dir, "postings").getPath)
@@ -426,10 +426,10 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     graft.ext.Dedup.minhashIndexAppend(spark, dir, ingest.toDF("doc_id", "text"))
     // Simulate the in-flight appender: batch dir renamed into place,
     // manifest not yet swapped (ids 0,1 committed; 2 in flight).
-    val inFlight = graft.ext.Dedup.readBatchManifest(dir)
+    val inFlight = graft.core.PersistedIndex.readManifest(dir).batches
     graft.ext.Dedup.minhashIndexAppend(spark, dir,
       Seq((400L, docText(400))).toDF("doc_id", "text"))
-    graft.ext.Dedup.writeBatchManifest(dir, inFlight) // roll back the commit
+    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(inFlight)) // roll back the commit
     graft.ext.Dedup.minhashIndexCompact(spark, dir)
     val dirs = Option(new java.io.File(dir, "postings").listFiles())
       .getOrElse(Array.empty[java.io.File])

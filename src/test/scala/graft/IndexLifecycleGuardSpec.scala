@@ -1,0 +1,35 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Drift guard: the index lifecycle (writer lease, swap recovery, atomic
+  * renames, batch-id allocation) lives only in core.PersistedIndex, so
+  * no operator module can grow a fifth hand-rolled copy of it.
+  */
+class IndexLifecycleGuardSpec extends AnyFunSuite {
+
+  private val Lifecycle = Seq("StagedSwap.recover", "WriterLease.withLease",
+    "ATOMIC_MOVE", "startsWith(\"batch_id=\")")
+
+  private def sources(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .flatMap(f => if (f.isDirectory) sources(f.getPath) else Seq(f))
+      .filter(_.getName.endsWith(".scala"))
+
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("no lifecycle code under src/main/scala/graft/ext") {
+    val ext = sources("src/main/scala/graft/ext")
+    assert(ext.nonEmpty)
+    for (f <- ext; (line, i) <- read(f).linesIterator.zipWithIndex; p <- Lifecycle)
+      assert(!line.contains(p), s"${f.getName}:${i + 1} hand-rolls index lifecycle ($p)")
+  }
+
+  test("the guarded patterns are the ones the template uses") {
+    val template = read(new java.io.File("src/main/scala/graft/core/PersistedIndex.scala"))
+    Lifecycle.foreach(p =>
+      assert(template.contains(p), s"PersistedIndex no longer contains $p"))
+  }
+}

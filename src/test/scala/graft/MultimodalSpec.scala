@@ -113,9 +113,9 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     assert(incPairs.nonEmpty, "probe found no planted renditions")
 
     // replay no-op: same ingest key appends nothing
-    val before = graft.ext.Dedup.readBatchManifest(inc)
+    val before = graft.core.PersistedIndex.readManifest(inc).batches
     Multimodal.phashIndexAppend(spark, inc, b, ingestKey = Some("k1"))
-    assert(graft.ext.Dedup.readBatchManifest(inc) == before, "replay appended a batch")
+    assert(graft.core.PersistedIndex.readManifest(inc).batches == before, "replay appended a batch")
     assert(pairs(inc) == incPairs, "replay changed probe results")
 
     // delete: tombstone one victim; exactly its pairs vanish
@@ -128,13 +128,13 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // takedown materializes physically (tombstone ledger clears).
     Multimodal.phashIndexCompact(spark, inc)
     assert(pairs(inc) == after, "compaction changed probe results")
-    assert(graft.ext.Dedup.readBatchManifest(inc).size == 1, "compaction left several batches")
-    assert(graft.ext.Dedup.readTombstoneManifest(inc).isEmpty, "tombstone ledger not cleared")
+    assert(graft.core.PersistedIndex.readManifest(inc).batches.size == 1, "compaction left several batches")
+    assert(graft.core.PersistedIndex.readManifest(inc).tombstones.isEmpty, "tombstone ledger not cleared")
     val postingDirs = new java.io.File(inc, "postings").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("batch_id="))
     assert(postingDirs == 1, s"expected one physical batch dir, found $postingDirs")
     // and the ingest-key ledger survived (pre-compaction replays stay no-ops)
-    assert(graft.ext.Dedup.readIngestKeys(inc).contains("k1"))
+    assert(graft.core.PersistedIndex.readManifest(inc).ingestKeys.contains("k1"))
   }
 
   test("phash index rebuild: probe identical, single batch, ledgers correct, crash-safe") {
@@ -158,17 +158,17 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
 
     Multimodal.phashIndexRebuild(spark, dir, docs)
     assert(pairs(dir) == before, "rebuild changed probe results")
-    assert(graft.ext.Dedup.readBatchManifest(dir).size == 1, "rebuild left several batches")
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).isEmpty, "tombstone ledger not cleared")
+    assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1, "rebuild left several batches")
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty, "tombstone ledger not cleared")
     // takedown is physical: the victim's signature is gone from the postings
     val phys = spark.read.parquet(new java.io.File(dir, "postings").getPath)
       .filter(col("doc_id") === victim).count()
     assert(phys == 0L, "rebuild kept the tombstoned doc's postings")
     // ledger survival: a pre-rebuild replay stays a no-op
-    assert(graft.ext.Dedup.readIngestKeys(dir).contains("k1"))
-    val manifest = graft.ext.Dedup.readBatchManifest(dir)
+    assert(graft.core.PersistedIndex.readManifest(dir).ingestKeys.contains("k1"))
+    val manifest = graft.core.PersistedIndex.readManifest(dir).batches
     Multimodal.phashIndexAppend(spark, dir, b, ingestKey = Some("k1"))
-    assert(graft.ext.Dedup.readBatchManifest(dir) == manifest, "replay appended after rebuild")
+    assert(graft.core.PersistedIndex.readManifest(dir).batches == manifest, "replay appended after rebuild")
     assert(pairs(dir) == before, "replay changed probe results after rebuild")
 
     // crash-safety: a staged-but-uncommitted rebuild is invisible and
@@ -176,7 +176,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // orphan .rebuild.* stage with garbage postings, no aside twin).
     val staging = new java.io.File(dir, ".rebuild.crashed-spec")
     new java.io.File(staging, "postings").mkdirs()
-    graft.core.StagedSwap.recover(dir, Multimodal.PhashLayoutSubs)
+    graft.core.StagedSwap.recover(dir, Multimodal.PhashStore.subs)
     assert(!staging.exists(), "recover left the orphan staging dir")
     assert(pairs(dir) == before, "recovery changed probe results")
   }

@@ -102,7 +102,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // Crash window: roll the manifest back so batch 2 ([6000]) is an
     // ORPHAN. Another 5100-copy is still dominated — by batch 1's 5100,
     // which is committed...
-    graft.ext.Dedup.writeBatchManifest(dir, Seq(0L, 1L))
+    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L, 1L)))
     val got3 = Similarity.semdedupIndexIngest(spark, dir,
         Seq((7000L, freshContent.map(v => v + 2e-4f))).toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
@@ -110,7 +110,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // ...and with batch 1 de-committed too (only the seed visible), the
     // next 5100-copy must SURVIVE: if orphaned batch dirs leaked into the
     // member read, 5100/6000/7000 would dominate it.
-    graft.ext.Dedup.writeBatchManifest(dir, Seq(0L))
+    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L)))
     val got4 = Similarity.semdedupIndexIngest(spark, dir,
         Seq((8000L, freshContent.map(v => v + 3e-4f))).toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
@@ -142,19 +142,19 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // tombstoned members no longer dominate.
     val dir = copyOf("graft_semdedup_del_live")
     Similarity.semdedupIndexDelete(spark, dir, Seq(20L, 21L).toDF("vec_id"))
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).size == 1)
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.size == 1)
     assert(!ingest(dir, copy20)(5000L),
       "copy of the taken-down member 20 was still suppressed")
     // The ingest's publish must PRESERVE the tombstone ledger (no
     // resurrection via manifest rewrite).
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).size == 1,
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.size == 1,
       "ingest publish wiped the tombstone ledger")
     // Compaction: members physically dropped, ledger cleared, batches
     // merged — and a post-compaction ingest still sees the takedown.
     val memBefore = spark.read.parquet(s"$dir/members").count()
     Similarity.semdedupIndexCompact(spark, dir)
-    assert(graft.ext.Dedup.readBatchManifest(dir).size == 1)
-    assert(graft.ext.Dedup.readTombstoneManifest(dir).isEmpty, "ledger not cleared")
+    assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1)
+    assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty, "ledger not cleared")
     val mem = spark.read.parquet(s"$dir/members")
     assert(mem.count() == memBefore - 2, "tombstoned members not dropped physically")
     assert(mem.filter(col("vec_id").isin(20L, 21L)).count() == 0)
@@ -203,13 +203,13 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     q.awaitTermination()
     // Flags read back from the index: the committed truth.
     def flags(): Map[Long, Boolean] = {
-      val committed = graft.ext.Dedup.readBatchManifest(dir).filter(_ != 0L)
+      val committed = graft.core.PersistedIndex.readManifest(dir).batches.filter(_ != 0L)
       spark.read.parquet(s"$dir/members")
         .where(col("batch_id").isin(committed: _*))
         .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("removed")).toMap
     }
     // File-source order follows the two appends; guard the assumption.
-    assert(graft.ext.Dedup.readIngestKeys(dir).toSet == Set("stream-0", "stream-1"))
+    assert(graft.core.PersistedIndex.readManifest(dir).ingestKeys.toSet == Set("stream-0", "stream-1"))
     val got = flags()
     assert(got(5000L), "streamed near-copy of a seed member not suppressed")
     assert(!got(5001L), "streamed fresh unique wrongly suppressed")
@@ -217,14 +217,14 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     assert(!got(6001L))
     // Replay of micro-batch 0: identical flags returned, nothing
     // re-published (no new batch dir, member count unchanged).
-    val batchesBefore = graft.ext.Dedup.readBatchManifest(dir)
+    val batchesBefore = graft.core.PersistedIndex.readManifest(dir).batches
     val membersBefore = spark.read.parquet(s"$dir/members").count()
     val replayed = Similarity.semdedupIndexIngest(spark, dir,
         b1.toDF("vec_id", "embedding"), tau = Tau, ingestKey = Some("stream-0"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(replayed == Map(5000L -> true, 5001L -> false),
       s"replay flags diverged: $replayed")
-    assert(graft.ext.Dedup.readBatchManifest(dir) == batchesBefore,
+    assert(graft.core.PersistedIndex.readManifest(dir).batches == batchesBefore,
       "replay published a duplicate batch")
     assert(spark.read.parquet(s"$dir/members").count() == membersBefore)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Dedup, Similarity}
+import graft.ext.{Dedup, Multimodal, Similarity}
 
 /** Single-writer enforcement on the persisted index layouts: a live
   * concurrent writer fails fast, a crashed writer's stale lock is
@@ -36,7 +36,7 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     // With the lease free, the append proceeds — and releases.
     Dedup.minhashIndexAppend(spark, dir, batch)
     assert(!lockOf(dir).exists(), "lease not released after append")
-    assert(Dedup.readBatchManifest(dir).size == 2)
+    assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
 
   test("a stale lock left by a crashed writer is reclaimed") {
@@ -51,7 +51,7 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     // wedging forever.
     Dedup.minhashIndexAppend(spark, dir, Seq((100L, doc(100))).toDF("doc_id", "text"))
     assert(!lock.exists())
-    assert(Dedup.readBatchManifest(dir).size == 2)
+    assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
 
   test("release refuses to delete a lock it no longer owns (reclaimed mid-mutation)") {
@@ -186,5 +186,30 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     java.nio.file.Files.delete(lockOf(sdDir).toPath)
     Similarity.semdedupIndexDelete(spark, sdDir, Seq(1L).toDF("vec_id"))
     assert(!lockOf(sdDir).exists())
+
+    // The MinHash and pHash families: every mutator, rebuild included.
+    val docs = (0L until 8L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
+    val batch = Seq((100L, doc(100))).toDF("doc_id", "text")
+    val mhDir = graft.core.TempDirs.create("graft_lease_minhash_ops")
+    Dedup.writeMinhashIndex(spark, mhDir, docs)
+    val phDir = graft.core.TempDirs.create("graft_lease_phash_ops")
+    Multimodal.writePhashIndex(spark, phDir, docs)
+    val ops: Seq[(String, Seq[String => Unit])] = Seq(
+      mhDir -> Seq(
+        d => Dedup.minhashIndexAppend(spark, d, batch),
+        d => Dedup.minhashIndexDelete(spark, d, Seq(1L).toDF("doc_id")),
+        d => Dedup.minhashIndexCompact(spark, d),
+        d => Dedup.minhashIndexRebuild(spark, d, docs)),
+      phDir -> Seq(
+        d => Multimodal.phashIndexAppend(spark, d, batch),
+        d => Multimodal.phashIndexDelete(spark, d, Seq(1L).toDF("doc_id")),
+        d => Multimodal.phashIndexCompact(spark, d),
+        d => Multimodal.phashIndexRebuild(spark, d, docs)))
+    ops.foreach { case (dir, mutators) =>
+      java.nio.file.Files.write(lockOf(dir).toPath, "other 0".getBytes)
+      mutators.foreach(m => intercept[IllegalStateException] { m(dir) })
+      java.nio.file.Files.delete(lockOf(dir).toPath)
+      mutators.foreach { m => m(dir); assert(!lockOf(dir).exists()) }
+    }
   }
 }
