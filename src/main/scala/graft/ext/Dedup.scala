@@ -659,8 +659,9 @@ object Dedup extends QueryModule {
 
   /** Append an ingest batch's band postings as a new batch. At-least-
     * once callers (foreachBatch replays after a crash between manifest
-    * commit and checkpoint) pass the micro-batch's batchId as the key:
-    * a key already in the committed ledger makes the replay a no-op.
+    * commit and checkpoint) pass the micro-batch's ingest key (checkpoint
+    * + batchId): a key already in the committed ledger makes the replay
+    * a no-op.
     */
   private[graft] def minhashIndexAppend(spark: SparkSession, dir: String,
       newDocs: DataFrame, ingestKey: Option[String] = None): Unit =
@@ -787,30 +788,24 @@ object Dedup extends QueryModule {
   /** Streaming ingest into the persisted near-dup index — the MinHash
     * twin of `s_ann_ingest`: documents arrive as a stream, each
     * micro-batch publishes its band postings through
-    * [[minhashIndexAppend]]'s atomic staged-rename + manifest-commit in
-    * `foreachBatch`, keyed on the batchId so an at-least-once replay
-    * (crash between manifest commit and checkpoint) is a committed
-    * no-op. The seed index (docs < 400) comes from the immutable
-    * marker-gated template, copied to scratch so the canonical dir is
-    * never mutated; docs [400, 450) stream in; the final probe batch
-    * (docs ≥ 450) must surface near-dups AGAINST THE STREAMED DOCS —
-    * continuous corpus growth with the probe seeing every committed
-    * arrival.
+    * [[minhashIndexAppend]]'s atomic staged-rename + manifest-commit
+    * ([[graft.core.BoundedStream.appendStream]]), keyed on the checkpoint
+    * and batchId so an at-least-once replay (crash between manifest
+    * commit and checkpoint) is a committed no-op. The seed index
+    * (docs < 400) comes from the immutable marker-gated template, copied
+    * to scratch so the canonical dir is never mutated; docs [400, 450)
+    * stream in; the final probe batch (docs ≥ 450) must surface near-dups
+    * AGAINST THE STREAMED DOCS — continuous corpus growth with the probe
+    * seeing every committed arrival.
     */
   private def minhashIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val seed = ensureMinhashIndex(spark, sfDir)
     val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_ingest")
     val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
       .filter(col("doc_id") >= 400 && col("doc_id") < 450)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) minhashIndexAppend(spark, dir, b,
-          ingestKey = Some(s"stream-$batchId"))
-      }
-      .option("checkpointLocation", graft.core.TempDirs.create("graft_minhash_ingest_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
+      minhashIndexAppend(spark, dir, b, ingestKey = Some(key))
+    }
     val docs = Tables(spark, sfDir, "documents")
     probeMinhashIndex(spark, dir, docs.filter(col("doc_id") >= 450), docs,
       tap = Some("s_minhash_ingest_candidates"))

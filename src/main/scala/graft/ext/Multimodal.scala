@@ -579,25 +579,20 @@ object Multimodal extends QueryModule {
   /** Streaming ingest into the persisted pHash index — the multimodal
     * twin of `s_minhash_ingest`/`s_ann_ingest`: media objects arrive as
     * a stream, each micro-batch publishes its postings through
-    * [[phashIndexAppend]]'s atomic protocol in foreachBatch keyed on the
-    * batchId (at-least-once replays are committed no-ops); the final
-    * probe carries re-encodes OF THE STREAMED DOCS, so it must surface
-    * near-dups against the committed arrivals.
+    * [[phashIndexAppend]]'s atomic protocol, keyed on the checkpoint and
+    * batchId by [[graft.core.BoundedStream.appendStream]] (at-least-once
+    * replays are committed no-ops); the final probe carries re-encodes
+    * OF THE STREAMED DOCS, so it must surface near-dups against the
+    * committed arrivals.
     */
   private def phashIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val seed = ensurePhashIndex(spark, sfDir)
     val dir = Warehouse.scratchFromSeed(seed, "graft_phash_ingest")
     val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
       .filter(col("doc_id") >= 400 && col("doc_id") < 450)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) phashIndexAppend(spark, dir, b,
-          ingestKey = Some(s"stream-$batchId"))
-      }
-      .option("checkpointLocation", graft.core.TempDirs.create("graft_phash_ingest_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
+      phashIndexAppend(spark, dir, b, ingestKey = Some(key))
+    }
     val docs = Tables(spark, sfDir, "documents")
     val probe = sigsOf(spark, docs.filter(col("doc_id") >= 450))
       .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 450), PhashProbeMod))

@@ -1041,31 +1041,25 @@ object Similarity extends QueryModule {
     * streaming leg (IVF: `s_ann_ingest`, MinHash: `s_minhash_ingest`):
     * embeddings arrive as a stream; each micro-batch dominance-checks
     * against the committed members and publishes through
-    * [[semdedupIndexIngest]]'s staged-rename + manifest commit in
-    * `foreachBatch`, idempotent on the batchId (a replay recomputes
-    * identical flags and skips the publish). The declared output is the
-    * streamed batches' flags READ BACK from the index itself — the
-    * proof that the arrivals were committed — and the tap carries those
-    * rows plus the touched seed members, so DuckDB re-derives the whole
+    * [[semdedupIndexIngest]]'s staged-rename + manifest commit
+    * ([[graft.core.BoundedStream.appendStream]]), idempotent on the
+    * checkpoint and batchId (a replay recomputes identical flags and
+    * skips the publish). The declared output is the streamed batches'
+    * flags READ BACK from the index itself — the proof that the arrivals
+    * were committed — and the tap carries those rows plus the touched
+    * seed members, so DuckDB re-derives the whole
     * dominance leg.
     */
   private def semdedupStreamIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
     val dir = scratchSemdedupCopy(seedDir, "graft_semdedup_stream")
-    val q = graft.core.Tables.streamTable(spark, sfDir, "embeddings")
-      .filter(col("vec_id") >= cut)
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) {
-          semdedupIndexIngest(spark, dir, b, tau = 0.4,
-            ingestKey = Some(s"stream-$batchId")).queryExecution.toRdd.count()
-          ()
-        }
-      }
-      .option("checkpointLocation", graft.core.TempDirs.create("graft_semdedup_stream_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.core.BoundedStream.appendStream(
+        graft.core.Tables.streamTable(spark, sfDir, "embeddings").filter(col("vec_id") >= cut)) {
+      (b, key) =>
+        semdedupIndexIngest(spark, dir, b, tau = 0.4, ingestKey = Some(key))
+          .queryExecution.toRdd.count()
+        ()
+    }
     val members = spark.read.parquet(new java.io.File(dir, "members").getPath)
     val streamed = PersistedIndex.readManifest(dir).batches.filter(_ != 0L)
     val batchRows = members.where(col("batch_id").isin(streamed: _*))
@@ -2069,11 +2063,12 @@ object Similarity extends QueryModule {
     * exactly-once: atomicity comes from the append's staged-rename +
     * manifest commit (a micro-batch that crashes mid-append leaves an
     * orphan no probe reads), and idempotency from keying each append on
-    * the foreachBatch `batchId` — foreachBatch itself is only
-    * at-least-once, so a crash AFTER the manifest commit but BEFORE the
-    * streaming checkpoint records the offset replays the micro-batch,
-    * and the replay must (and does — ledger-gated, spec-pinned) land as
-    * a no-op instead of double-publishing the same vectors.
+    * its checkpoint and `batchId` ([[graft.core.BoundedStream.appendStream]])
+    * — foreachBatch itself is only at-least-once, so a crash AFTER the
+    * manifest commit but BEFORE the streaming checkpoint records the
+    * offset replays the micro-batch, and the replay must (and does —
+    * ledger-gated, spec-pinned) land as a no-op instead of
+    * double-publishing the same vectors.
     *
     * The stream mutates a scratch dir per run so repeated runs are
     * deterministic — a long-lived deployment would keep the checkpoint +
@@ -2101,15 +2096,9 @@ object Similarity extends QueryModule {
       writeIvfIndex(spark, dir, stat.filter(col("vec_id") < cut),
         train = Some(stat.filter(col("vec_id") < cut && col("vec_id") =!= 0)))
     val stream = stream0.filter(col("vec_id") >= cut)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) ivfIndexAppend(spark, dir, b,
-          ingestKey = Some(s"stream-$batchId"))
-      }
-      .option("checkpointLocation", graft.core.TempDirs.create("graft_ann_ingest_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
+      ivfIndexAppend(spark, dir, b, ingestKey = Some(key))
+    }
     probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = exclude, tap = tap)
   }
 

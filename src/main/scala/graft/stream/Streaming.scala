@@ -2,11 +2,10 @@ package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.cdc.Cdc
-import graft.core.{QueryDef, QueryModule}
+import graft.core.{BoundedStream, QueryDef, QueryModule, SessionConf, TempDirs}
 
 /** Structured Streaming re-expression of the reference pipeline
   * (HdfsSink.java:34-127) plus the declared windowed-aggregation surface
@@ -14,11 +13,12 @@ import graft.core.{QueryDef, QueryModule}
   *
   * Every `s_*` query here is a REAL streaming query — `readStream` over the
   * fixture parquet (the stand-in for the Kafka topic, R1), transforms, a
-  * sink, `Trigger.AvailableNow` — run to completion and its result returned
-  * as a DataFrame so the driver's oracle can check it. Bounded input makes
-  * streaming results deterministic, so six of the eight entries carry full
-  * DuckDB oracles (stream==batch equivalence, enforced by the driver, not
-  * just by a spec).
+  * sink, `Trigger.AvailableNow` — run to completion by
+  * [[graft.core.BoundedStream]] and its result returned as a DataFrame so
+  * the oracle can check it. Bounded input makes streaming results
+  * deterministic, so all 20 entries here (18 `s_*` and the 2 `q_*` batch
+  * twins) carry full DuckDB oracles (stream==batch equivalence, enforced
+  * by `graft.Verify`'s oracle check, not just by a spec).
   *
   * Scale notes: a file/Kafka source parallelizes by input split/partition;
   * windowed aggregation state is partitioned by (window, keys) in the state
@@ -46,79 +46,9 @@ object Streaming extends QueryModule {
       graft.core.Tables.streamTable(spark, sfDir, "events"))
   }
 
-  private def tmpDir(prefix: String): String =
-    graft.core.TempDirs.create(prefix)
-
-  /** Run `body` with a reduced shuffle-partition count, restoring after.
-    * Streaming aggregations allocate one state-store instance per shuffle
-    * partition per micro-batch; on the bounded smoke fixtures that fixed
-    * cost dominates, so the s_* queries run with a handful of state
-    * partitions. At production volume the session default (cores-scaled)
-    * applies — state partitioning is a deployment knob, not a semantic.
-    */
-  private def withFewPartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** See graft.core.SessionConf.scoped — a streaming query must not leak
-    * conf changes into later queries sharing the SparkSession.
-    */
-  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T =
-    graft.core.SessionConf.scoped(spark, key, value)(body)
-
-  /** Small-fixture state width: how many state partitions a bounded smoke
-    * run uses when the input is too small for the per-partition fixed cost
-    * (one state-store instance opened/committed per partition per
-    * micro-batch) to amortize. Conf-overridable (like the LPA frontier
-    * flag) so the value is a deployment knob with a receipted default, not
-    * a constant: the r17 paired receipt (OPTIMIZATION_r17.md) measured the
-    * stateful family at widths 8/4/2 on the same binary and window. The
-    * knob only ever applies to the SMALL branch of [[statePartitionsFor]]
-    * and the memory-sink default — past the 5 MB input threshold the
-    * session's full parallelism applies regardless, so production plans
-    * never see it.
-    */
-  private def smallStateWidth(spark: SparkSession): Int = {
-    val key = "spark.graft.stream.smallStateWidth"
-    val raw = spark.conf.get(key, "8")
-    // trim (ADVICE r17 #2): a value sourced from a shell (`--conf` or an
-    // env-templated conf file) can carry incidental whitespace ('8\n');
-    // the intent is unambiguous, so resolve it rather than failing at entry.
-    val n = try raw.trim.toInt catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a positive integer, got '$raw'")
-    }
-    require(n > 0, s"$key must be a positive integer, got '$raw'")
-    n
-  }
-
-  /** Run a streaming DataFrame to completion into a memory sink and return
-    * the sink contents. AvailableNow = process everything then stop — the
-    * batch-driven smoke mode; the same code runs continuously with a
-    * processing-time trigger in production. `partitions <= 0` (the
-    * default) resolves to [[smallStateWidth]].
-    */
-  private def runToMemory(df: DataFrame, mode: String, partitions: Int = 0): DataFrame =
-    withFewPartitions(df.sparkSession,
-      if (partitions > 0) partitions else smallStateWidth(df.sparkSession)) {
-      val name = "ms_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = df.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", tmpDir("graft_ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      df.sparkSession.table(name)
-    }
-
-  /** State partitioning is a deployment knob, not a semantic (see
-    * withFewPartitions): tiny driver fixtures want few state stores (the
-    * per-partition fixed cost dominates), scale fixtures want the
+  /** State partitioning is a deployment knob, not a semantic: tiny
+    * fixtures want few state stores (the per-partition fixed cost
+    * dominates; [[BoundedStream.SmallStateWidth]]), scale fixtures want the
     * session's full parallelism (sequential state ops dominate). Sized
     * from the events file so the same entry is honest at both — measured
     * on s_session at 20x: 8 partitions 64 s, 32 partitions restore the
@@ -127,7 +57,7 @@ object Streaming extends QueryModule {
   private def statePartitionsFor(spark: SparkSession, sfDir: String): Int = {
     val f = new java.io.File(s"$sfDir/events.parquet")
     if (f.isFile && f.length() > 5L * 1024 * 1024) spark.sparkContext.defaultParallelism
-    else smallStateWidth(spark)
+    else BoundedStream.SmallStateWidth
   }
 
   // ---- R1→R6: the reference pipeline, end to end ------------------------
@@ -139,30 +69,12 @@ object Streaming extends QueryModule {
     * reader of the sink directory sees, so the DuckDB oracle checks the
     * whole pipeline including the partitioned write.
     */
-  private def pipeline(spark: SparkSession, sfDir: String): DataFrame =
-    // dt comes back as a partition directory name; keep it a string
-    // (inference would turn "20240105" into an int). Scoped via withConf so
-    // later queries in the session see normal inference again (the final
-    // read's partition schema is inferred eagerly, before restore).
-    withConf(spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-    val out = tmpDir("graft_pipe")
+  private def pipeline(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.JsonGet.register(spark)
-    val shaped = streamEvents(spark, sfDir)
+    BoundedStream.dtCounts(streamEvents(spark, sfDir)
       .filter(expr("json_get(props, 'k')").isNotNull)
       .withColumn("dt", Cdc.eventTimeDt((unix_micros(col("ts")) / lit(1000L)).cast(LongType)))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("dt"))
-    val q = shaped.writeStream
-      .format("parquet")
-      .partitionBy("dt")
-      .option("path", out)
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
-      .groupBy(col("dt")).agg(count(lit(1)).as("n"))
-      .orderBy("dt")
+      .select(col("event_id"), col("user_id"), col("event_type"), col("dt")))
   }
 
   /** One-time per-fixture synthesis of the Canal "topic" (marker-gated
@@ -208,25 +120,11 @@ object Streaming extends QueryModule {
     * partition, so envelope parse, filter, flatten fan-out and the
     * partitioned write are all under the driver's differential check.
     */
-  private def cdcCanal(spark: SparkSession, sfDir: String): DataFrame =
-    withConf(spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-    val topicDir = ensureCanalTopic(spark, sfDir)
-    val outDir = tmpDir("graft_canal_out")
+  private def cdcCanal(spark: SparkSession, sfDir: String): DataFrame = {
     val parsed = Cdc.parseEnvelope(spark.readStream.schema(
-      StructType(Seq(StructField("value", StringType)))).text(topicDir))
-    val shaped = Cdc.flatten(Cdc.ddlFilter(parsed), Seq("user_id", "event_type", "value"))
-      .withColumn("dt", Cdc.eventTimeDt(col("es")))
-    val q = shaped.writeStream
-      .format("parquet").partitionBy("dt")
-      .option("path", outDir)
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
-      .groupBy(col("dt")).agg(count(lit(1)).as("n"))
-      .orderBy("dt")
+      StructType(Seq(StructField("value", StringType)))).text(ensureCanalTopic(spark, sfDir)))
+    BoundedStream.dtCounts(Cdc.flatten(Cdc.ddlFilter(parsed), Seq("user_id", "event_type", "value"))
+      .withColumn("dt", Cdc.eventTimeDt(col("es"))))
   }
 
   // ---- Windowed aggregation (R11 generalized to event-time windows) -----
@@ -250,14 +148,14 @@ object Streaming extends QueryModule {
     * stream, same oracle: the driver itself verifies stream==batch.
     */
   private def tumblingStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToMemory(tumblingAgg(streamEvents(spark, sfDir)), "complete")
+    BoundedStream.toMemory(tumblingAgg(streamEvents(spark, sfDir)), "complete")
       .orderBy("hour_start")
 
   /** Sliding window: 2-hour windows every hour — each event lands in two
     * windows. The oracle expands the two window-starts per event.
     */
   private def slidingStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToMemory(
+    BoundedStream.toMemory(
       streamEvents(spark, sfDir)
         .groupBy(window(col("ts"), "2 hours", "1 hour"))
         .agg(count(lit(1)).as("n")),
@@ -277,11 +175,11 @@ object Streaming extends QueryModule {
 
   /** Streaming session windows require a watermark; append mode emits a
     * session once the watermark passes its close. On bounded input the
-    * final watermark holds back the last session(s) per key, so this entry
-    * is rows-only (the batch twin above carries the oracle).
+    * final watermark holds back the last session(s) per key; the oracle
+    * (r9) applies the same watermark cutoff to the batch sessionization.
     */
   private def sessionStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToMemory(
+    BoundedStream.toMemory(
       streamEvents(spark, sfDir)
         .withWatermark("ts", "30 minutes")
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
@@ -301,13 +199,14 @@ object Streaming extends QueryModule {
     * proves the watermark survives the checkpoint (R6), and it removes the
     * wall-clock trigger polling that made this entry's bench time track
     * host latency instead of compute. Fixed synthetic rows (not sfDir
-    * tables), so rows-only — the exact output is asserted in StreamingSpec.
+    * tables); the oracle reads them from a tap, and the exact output is
+    * asserted in StreamingSpec.
     */
   private def watermarkLate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val in = tmpDir("graft_late_in")
-    val out = tmpDir("graft_late_out")
-    val ckpt = tmpDir("graft_ckpt")
+    val in = TempDirs.create("graft_late_in")
+    val out = TempDirs.create("graft_late_out")
+    val ckpt = TempDirs.create("graft_ckpt")
     def write(batch: Seq[(String, Double)], file: String): Unit =
       batch.toDF("ts_s", "value")
         .select(col("ts_s").cast(TimestampType).as("ts"), col("value"))
@@ -320,18 +219,11 @@ object Streaming extends QueryModule {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
-    val sink = (batch: DataFrame, _: Long) =>
-      batch.select(col("window.start").as("window_start"), col("n"))
-        .write.mode("append").parquet(out)
-    def runOnce(): Unit = withFewPartitions(spark, 4) {
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(sink)
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
+    def runOnce(): Unit =
+      BoundedStream.eachBatch(stream, ckpt, "update", width = Some(4)) { (batch, _) =>
+        batch.select(col("window.start").as("window_start"), col("n"))
+          .write.mode("append").parquet(out)
+      }
     runOnce() // batch 1: watermark advances to 11:50, committed to ckpt
     write(Seq(("2024-01-01 10:05:00", 99.0), ("2024-01-01 12:30:00", 1.0)), "b2")
     runOnce() // restart from ckpt: 10:05 is late vs the restored watermark -> dropped
@@ -353,13 +245,6 @@ object Streaming extends QueryModule {
 
   // ---- Streaming last-state upsert (R11→R14 moved to streaming) ---------
 
-  /** The reference's daily merge restore as a continuous pipeline: each
-    * micro-batch is compacted to latest-state per key (R11) and upserted
-    * into a parquet snapshot via a ts-aware FULL OUTER merge (R12-R14 —
-    * newer event time wins, so out-of-order batches cannot regress a key).
-    * On the bounded fixture the final snapshot equals the batch
-    * q_latest_state result, which is this entry's oracle.
-    */
   /** ts-aware FULL OUTER upsert: the delta row wins only when its event
     * time is newer than the snapshot's — or equal with a winning
     * `tiebreak` — so replayed or out-of-order batches cannot regress a
@@ -384,30 +269,18 @@ object Streaming extends QueryModule {
         when(deltaWins, col(s"t2.$c")).otherwise(col(s"t1.$c")).as(c)): _*)
   }
 
+  /** The reference's daily merge restore as a continuous pipeline: each
+    * micro-batch is compacted to latest-state per key (R11) and upserted
+    * into a parquet snapshot via a ts-aware FULL OUTER merge (R12-R14 —
+    * newer event time wins, so out-of-order batches cannot regress a key).
+    * On the bounded fixture the final snapshot equals the batch
+    * q_latest_state result, which is this entry's oracle.
+    */
   private def dedupStateful(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = tmpDir("graft_snap")
     val cols = Seq("user_id", "event_id", "event_type", "value", "ts")
-    var current: Option[String] = None
-    val q = streamEvents(spark, sfDir)
-      .select(cols.map(col): _*)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = Cdc.latestState(batch, "user_id", "ts", "event_id")
-        val merged = current match {
-          case None => delta
-          case Some(prev) =>
-            tsAwareMerge(batch.sparkSession.read.parquet(prev), delta,
-              "user_id", "ts", "event_id", cols)
-        }
-        val next = s"$root/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        current = Some(next)
-      }
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.getOrElse(sys.error("no batch ran")))
+    BoundedStream.foldSnapshots(streamEvents(spark, sfDir).select(cols.map(col): _*))(
+      Cdc.latestState(_, "user_id", "ts", "event_id"))(
+      tsAwareMerge(_, _, "user_id", "ts", "event_id", cols))
       .select(col("user_id"), col("event_id"), col("event_type"),
         round(col("value"), 2).as("value"), col("ts"))
       .orderBy("user_id")
@@ -422,38 +295,18 @@ object Streaming extends QueryModule {
     * uses. Oracle = the full recompute over all events, which the
     * incremental merge must equal exactly.
     */
-  private def mvRefreshStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = tmpDir("graft_smv")
-    var current: Option[String] = None
-    def partial(df: DataFrame): DataFrame = df
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .groupBy("dt", "event_type")
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    val q = streamEvents(spark, sfDir)
-      .select(col("event_type"), col("value"), col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = partial(batch)
-        val merged = current match {
-          case None => delta
-          case Some(prev) => batch.sparkSession.read.parquet(prev)
-            .unionByName(delta)
-            .groupBy("dt", "event_type")
-            .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
-        }
-        val next = s"$root/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        current = Some(next)
-      }
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.getOrElse(sys.error("no batch ran")))
+  private def mvRefreshStream(spark: SparkSession, sfDir: String): DataFrame =
+    BoundedStream.foldSnapshots(
+        streamEvents(spark, sfDir).select(col("event_type"), col("value"), col("ts")))(
+      _.withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+        .groupBy("dt", "event_type")
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value")))(
+      _.unionByName(_)
+        .groupBy("dt", "event_type")
+        .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value")))
       .select(col("dt"), col("event_type"), col("n"),
         round(col("sum_value"), 2).as("sum_value"))
       .orderBy("dt", "event_type")
-  }
 
   /** Streaming data-quality monitor — the continuous leg of the
     * q_dq_rules suite (every index family here has a streaming leg;
@@ -468,8 +321,6 @@ object Streaming extends QueryModule {
     * (n_violations, floor-6dp pass_ratio, passed).
     */
   private def dqMonitorStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = tmpDir("graft_sdq")
-    var current: Option[String] = None
     def verdicts(df: DataFrame): DataFrame = {
       def rule(name: String, viol: Column): Column =
         struct(lit(name).as("rule"), viol.as("v"))
@@ -487,27 +338,11 @@ object Streaming extends QueryModule {
           rule("range:value[0,100]", col("v_val")))).as("r"), col("n"))
         .select(col("r.rule").as("rule"), col("n"), col("r.v").as("v"))
     }
-    val q = streamEvents(spark, sfDir)
-      .select(col("event_type"), col("value"), col("user_id"), col("props"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = verdicts(batch)
-        val merged = current match {
-          case None => delta
-          case Some(prev) => batch.sparkSession.read.parquet(prev)
-            .unionByName(delta)
-            .groupBy("rule")
-            .agg(sum(col("n")).as("n"), sum(col("v")).as("v"))
-        }
-        val next = s"$root/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        current = Some(next)
-      }
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.getOrElse(sys.error("no batch ran")))
+    BoundedStream.foldSnapshots(streamEvents(spark, sfDir)
+        .select(col("event_type"), col("value"), col("user_id"), col("props")))(verdicts)(
+      _.unionByName(_)
+        .groupBy("rule")
+        .agg(sum(col("n")).as("n"), sum(col("v")).as("v")))
       .select(col("rule"), col("v").as("n_violations"),
         (floor((col("n") - col("v")) / col("n") * 1e6) / 1e6).as("pass_ratio"),
         (col("v") === 0).as("passed"))
@@ -525,32 +360,13 @@ object Streaming extends QueryModule {
     * ([[graft.ops.Quality.driftPsi]]) equals the full batch recompute,
     * which is the oracle (identical to q_dq_drift's).
     */
-  private def driftMonitorStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = tmpDir("graft_sdrift")
-    var current: Option[String] = None
-    val q = streamEvents(spark, sfDir)
-      .select(col("event_type"), col("value"), col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = graft.ops.Quality.driftCounts(batch)
-        val merged = current match {
-          case None => delta
-          case Some(prev) => batch.sparkSession.read.parquet(prev)
-            .unionByName(delta)
-            .groupBy("event_type", "bin")
-            .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-        }
-        val next = s"$root/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        current = Some(next)
-      }
-      .option("checkpointLocation", tmpDir("graft_ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.ops.Quality.driftPsi(spark,
-      spark.read.parquet(current.getOrElse(sys.error("no batch ran"))))
-  }
+  private def driftMonitorStream(spark: SparkSession, sfDir: String): DataFrame =
+    graft.ops.Quality.driftPsi(spark, BoundedStream.foldSnapshots(
+        streamEvents(spark, sfDir).select(col("event_type"), col("value"), col("ts")))(
+      graft.ops.Quality.driftCounts)(
+      _.unionByName(_)
+        .groupBy("event_type", "bin")
+        .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))))
 
   /** Streaming record linkage — the continuous leg of q_fuzzy_join:
     * dirty records ARRIVE as a stream and each micro-batch matches
@@ -591,21 +407,12 @@ object Streaming extends QueryModule {
     }
     val links = pass(Linkage.prefixKey).unionByName(pass(Linkage.suffixKey))
       .dropDuplicates("s_suppkey", "r_id", "lev")
-    runToMemory(links, "append")
+    BoundedStream.toMemory(links, "append")
       .orderBy("s_suppkey", "r_id")
   }
 
   // ---- Arbitrary stateful processing (mapGroupsWithState) ---------------
 
-  /** Per-key running state via `KeyValueGroupedDataset.mapGroupsWithState`
-    * — the arbitrary-state API (the declared surface SURVEY §2.2 maps the
-    * reference's keyed-state story to; every other s_* entry uses either
-    * built-in window state or foreachBatch). State per user: event count +
-    * latest ts. On bounded input the final state equals the batch
-    * GROUP BY, which is this entry's oracle. At scale state lives in the
-    * state store partitioned by key — one shuffle on user_id per batch,
-    * state size O(distinct keys).
-    */
   /** Streaming SCD Type-2 — live historization of the change stream via
     * `flatMapGroupsWithState` (the batch twin is Cdc.scd2Intervals): state
     * per entity is the one OPEN version; each arriving version closes its
@@ -647,7 +454,7 @@ object Streaming extends QueryModule {
           out.iterator
       }
       .toDF("user_id", "event_id", "event_type", "value", "valid_from", "valid_to")
-    runToMemory(emitted, "update", statePartitionsFor(spark, sfDir))
+    BoundedStream.toMemory(emitted, "update", statePartitionsFor(spark, sfDir))
       .groupBy(col("user_id"), col("event_id"), col("event_type"), col("value"),
         col("valid_from"))
       .agg(max(col("valid_to")).as("valid_to"))
@@ -710,7 +517,7 @@ object Streaming extends QueryModule {
           (user, st.takeWhile(_ != 0L).length)
       }
       .toDF("user_id", "max_step")
-    val perUser = runToMemory(updated, "update", statePartitionsFor(spark, sfDir))
+    val perUser = BoundedStream.toMemory(updated, "update", statePartitionsFor(spark, sfDir))
       .groupBy(col("user_id")).agg(max(col("max_step")).as("max_step"))
     steps.zipWithIndex.map { case (step, i) =>
       perUser.filter(col("max_step") >= i + 1)
@@ -719,6 +526,15 @@ object Streaming extends QueryModule {
     }.reduce(_.unionAll(_)).orderBy("step")
   }
 
+  /** Per-key running state via `KeyValueGroupedDataset.mapGroupsWithState`
+    * — the arbitrary-state API (the declared surface SURVEY §2.2 maps the
+    * reference's keyed-state story to; every other s_* entry uses either
+    * built-in window state or foreachBatch). State per user: event count +
+    * latest ts. On bounded input the final state equals the batch
+    * GROUP BY, which is this entry's oracle. At scale state lives in the
+    * state store partitioned by key — one shuffle on user_id per batch,
+    * state size O(distinct keys).
+    */
   private def statefulCount(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -744,7 +560,7 @@ object Streaming extends QueryModule {
       .toDF("user_id", "n_events", "last_ts")
     // Update mode re-emits a user's state every micro-batch; the final
     // state has the largest n (monotone), so max() folds re-emissions.
-    runToMemory(updated, "update", statePartitionsFor(spark, sfDir))
+    BoundedStream.toMemory(updated, "update", statePartitionsFor(spark, sfDir))
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"), max(col("last_ts")).as("last_ts"))
       .orderBy("user_id")
@@ -775,8 +591,8 @@ object Streaming extends QueryModule {
     // bounded run; a continuous deployment keeps it on so idle streams
     // still evict. (The append-mode AGGREGATIONS — session/tumbling —
     // need that batch to FLUSH results and keep it on.)
-    withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      runToMemory(doubled, "append", statePartitionsFor(spark, sfDir))
+    SessionConf.scoped(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      BoundedStream.toMemory(doubled, "append", statePartitionsFor(spark, sfDir))
     }
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -812,8 +628,8 @@ object Streaming extends QueryModule {
     // state (it emits nothing), so in a bounded run it is pure per-entry
     // floor. Off here; the LEFT OUTER twin below keeps it on — there the
     // no-data batch is what FLUSHES the null-extended unmatched tail.
-    withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      runToMemory(joined, "append", statePartitionsFor(spark, sfDir))
+    SessionConf.scoped(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      BoundedStream.toMemory(joined, "append", statePartitionsFor(spark, sfDir))
     }
       .orderBy("user_id", "click_id", "view_id")
   }
@@ -845,7 +661,7 @@ object Streaming extends QueryModule {
         "leftOuter")
       .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
         col("view_ts"), col("click_ts"))
-    runToMemory(joined, "append", statePartitionsFor(spark, sfDir))
+    BoundedStream.toMemory(joined, "append", statePartitionsFor(spark, sfDir))
       .orderBy("user_id", "view_id", "click_id")
   }
 
@@ -865,7 +681,7 @@ object Streaming extends QueryModule {
     val joined = streamEvents(spark, sfDir)
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("c_mktsegment"), col("value"))
-    runToMemory(joined, "append")
+    BoundedStream.toMemory(joined, "append")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .orderBy("c_mktsegment")

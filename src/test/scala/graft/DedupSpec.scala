@@ -379,6 +379,52 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     assert(probe() == Seq((300L, 202L)))
   }
 
+  test("minhash streaming ingest: a second stream on its own checkpoint is not dropped as a replay; a same-checkpoint replay stays a no-op") {
+    import spark.implicits._
+    import graft.core.{BoundedStream, PersistedIndex, TempDirs}
+    val dir = TempDirs.create("graft_minhash_two_streams")
+    graft.ext.Dedup.writeMinhashIndex(spark, dir,
+      (0L until 10L).map(i => (i, docText(i.toInt))).toDF("doc_id", "text"))
+    // One stream: its own source dir and its own fresh checkpoint, into
+    // the shared index through the s_minhash_ingest leg's body.
+    def ingest(src: String, ckpt: String): Unit =
+      BoundedStream.appendStream(spark.readStream.schema("doc_id LONG, text STRING")
+        .parquet(src), ckpt) { (b, key) =>
+        graft.ext.Dedup.minhashIndexAppend(spark, dir, b, ingestKey = Some(key))
+      }
+    def source(ids: Seq[Long]): String = {
+      val src = TempDirs.create("graft_minhash_two_streams_src")
+      ids.map(i => (i, docText(i.toInt))).toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(src)
+      src
+    }
+    def indexedDocs(): Set[Long] = {
+      val m = PersistedIndex.readManifest(dir)
+      spark.read.parquet(s"$dir/postings").where($"batch_id".isin(m.batches: _*))
+        .select("doc_id").distinct().as[Long].collect().toSet
+    }
+    ingest(source(Seq(200L, 201L)), TempDirs.create("graft_minhash_two_streams_ckpt"))
+    assert(PersistedIndex.readManifest(dir).batches == Seq(0L, 1L))
+    val src2 = source(Seq(300L, 301L))
+    val ckpt2 = TempDirs.create("graft_minhash_two_streams_ckpt")
+    ingest(src2, ckpt2) // batchId 0 again, under a new checkpoint
+    val m = PersistedIndex.readManifest(dir)
+    assert(m.batches == Seq(0L, 1L, 2L), s"second stream's batch dropped: $m")
+    assert(m.ingestKeys.distinct.size == 2, s"ingest keys collided: ${m.ingestKeys}")
+    assert(Set(200L, 201L, 300L, 301L).subsetOf(indexedDocs()),
+      s"streamed docs missing from the index: ${indexedDocs()}")
+    // Replay from the SAME checkpoint: drop its commit record (the crash
+    // window between manifest commit and checkpoint commit) and rerun.
+    val commit = new java.io.File(ckpt2, "commits/0")
+    assert(commit.delete(), "failed to remove the checkpoint commit")
+    new java.io.File(ckpt2, "commits/.0.crc").delete()
+    val postingsBefore = spark.read.parquet(s"$dir/postings").count()
+    ingest(src2, ckpt2)
+    assert(commit.exists(), "the replay did not re-commit batch 0")
+    assert(PersistedIndex.readManifest(dir) == m, "a same-checkpoint replay committed again")
+    assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore)
+  }
+
   test("minhashIndexDelete: tombstoned docs invisible pre- and post-compaction; ledger survives appends") {
     import spark.implicits._
     val base = (0L until 10L).map(i => (i, docText(i.toInt)))

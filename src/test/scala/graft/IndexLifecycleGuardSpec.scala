@@ -3,8 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guard: the index lifecycle (writer lease, swap recovery, atomic
-  * renames, batch-id allocation) lives only in core.PersistedIndex, so
-  * no operator module can grow a fifth hand-rolled copy of it.
+  * renames, batch-id allocation) lives only in core.PersistedIndex, and
+  * the bounded-stream run (writeStream, AvailableNow, checkpoint, await)
+  * only in core.BoundedStream, so no module can grow another hand-rolled
+  * copy of either.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
 
@@ -25,6 +27,20 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
     assert(ext.nonEmpty)
     for (f <- ext; (line, i) <- read(f).linesIterator.zipWithIndex; p <- Lifecycle)
       assert(!line.contains(p), s"${f.getName}:${i + 1} hand-rolls index lifecycle ($p)")
+  }
+
+  private val StreamRun = Seq(".writeStream", ".foreachBatch", "Trigger.AvailableNow()",
+    "\"checkpointLocation\"", ".awaitTermination()")
+
+  private val Runner = new java.io.File("src/main/scala/graft/core/BoundedStream.scala")
+
+  test("bounded streams run only through core.BoundedStream, which holds every run pattern") {
+    val main = sources("src/main/scala")
+    assert(main.contains(Runner))
+    for (f <- main if f != Runner; (line, i) <- read(f).linesIterator.zipWithIndex; p <- StreamRun)
+      assert(!line.contains(p), s"${f.getName}:${i + 1} hand-rolls a stream run ($p)")
+    val runner = read(Runner)
+    StreamRun.foreach(p => assert(runner.contains(p), s"BoundedStream no longer contains $p"))
   }
 
   test("the guarded patterns are the ones the template uses") {

@@ -59,38 +59,16 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   }
 
   test("stateful query output is state-width-agnostic (smallStateWidth is a knob, not a semantic)") {
-    // spark.graft.stream.smallStateWidth resizes the bounded-run state
+    // BoundedStream.toMemory's width sets the bounded-run state
     // partitioning (the r17 paired receipt measured widths 8/4/2); like
     // the provider above, it must never move one output row.
-    val narrow = graft.core.SessionConf.scoped(spark,
-      "spark.graft.stream.smallStateWidth", "3") {
-      SparkEntry.queries("s_stateful_count")(spark, sf).collect().toSeq
-    }
-    val default = SparkEntry.queries("s_stateful_count")(spark, sf).collect().toSeq
+    def perUser(width: Int) = graft.core.BoundedStream.toMemory(
+      Streaming.streamEvents(spark, sf).groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts")),
+      "complete", width).orderBy("user_id").collect().toSeq
+    val narrow = perUser(3)
+    val default = perUser(graft.core.BoundedStream.SmallStateWidth)
     assert(default.nonEmpty && default == narrow)
-  }
-
-  test("smallStateWidth rejects malformed values with a descriptive error") {
-    // Same contract as the LPA frontier flag (ADVICE r16 #4): a bad conf
-    // value must fail at entry with the key named, not deep in a batch.
-    val e = intercept[IllegalArgumentException] {
-      graft.core.SessionConf.scoped(spark,
-        "spark.graft.stream.smallStateWidth", "lots") {
-        SparkEntry.queries("s_stateful_count")(spark, sf).collect()
-      }
-    }
-    assert(e.getMessage.contains("spark.graft.stream.smallStateWidth"))
-  }
-
-  test("smallStateWidth tolerates incidental whitespace (ADVICE r17 #2)") {
-    // An env-sourced value like '8\n' (shell artifact) is unambiguous and
-    // must resolve rather than throw; output is identical to the default.
-    val padded = graft.core.SessionConf.scoped(spark,
-      "spark.graft.stream.smallStateWidth", " 8\n") {
-      SparkEntry.queries("s_stateful_count")(spark, sf).collect().toSeq
-    }
-    val default = SparkEntry.queries("s_stateful_count")(spark, sf).collect().toSeq
-    assert(default.nonEmpty && default == padded)
   }
 
   private val mergeCols = Seq("user_id", "event_id", "v", "ts")
@@ -316,13 +294,54 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // memory), and merges. The final MV must equal the full recompute:
     // if life 2 re-read file 1 the counts double; if it failed to recover
     // v0 the file-1 groups vanish — the equality catches both corruptions.
+    val mv = new MvFold("graft_mv")
+    import mv._
+    writeFile(Seq(("click", 1.0), ("click", 2.0), ("view", 5.0)), "f1")
+    mv.run() // life 1: MV v0 = {click: (2, 3.0), view: (1, 5.0)}, then "dies"
+    writeFile(Seq(("click", 10.0), ("buy", 7.0)), "f2")
+    mv.run() // life 2: must merge ONLY f2 into the recovered v0
+    val got = spark.read.parquet(latestMv().get)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == Set(("click", 3L, 13.0), ("view", 1L, 5.0), ("buy", 1L, 7.0)),
+      s"MV after restart must equal the full recompute; got $got")
+  }
+
+  test("s_mv_refresh MV fold replays a batch whose checkpoint commit was lost without double counting") {
+    // The crash window of the s_cdc_canal test, for the snapshot fold:
+    // batch 1 wrote its MV v1, but its checkpoint commit record did not
+    // land. The rerun replays batch 1 (same input, same batchId), which
+    // must rebuild v1 from v0 — not merge f2 into v1 a second time, and
+    // not start from an empty MV.
+    val mv = new MvFold("graft_mv_replay")
+    import mv._
+    writeFile(Seq(("click", 1.0), ("click", 2.0), ("view", 5.0)), "f1")
+    mv.run()
+    writeFile(Seq(("click", 10.0), ("buy", 7.0)), "f2")
+    mv.run()
+    val lastCommit = new java.io.File(ckpt, "commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
+    assert(lastCommit.getName == "1" && lastCommit.delete(),
+      "failed to remove the last checkpoint commit")
+    new java.io.File(lastCommit.getParentFile, s".${lastCommit.getName}.crc").delete()
+    mv.run() // replays batch 1
+    assert(lastCommit.exists(), "the replay did not re-commit batch 1")
+    val got = spark.read.parquet(latestMv().get)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == Set(("click", 3L, 13.0), ("view", 1L, 5.0), ("buy", 1L, 7.0)),
+      s"MV after a replay must equal the full recompute; got $got")
+  }
+
+  /** The s_mv_refresh fold (BoundedStream.foldSnapshots) over a parquet
+    * input dir, with a fixed MV root and checkpoint so it can be killed
+    * and resumed: each `run()` is one life of the query.
+    */
+  private class MvFold(prefix: String) {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("graft_mv_in").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_mv_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mv_ckpt").toString
-    val schema = StructType(Seq(
+    val in = java.nio.file.Files.createTempDirectory(s"${prefix}_in").toString
+    val root = java.nio.file.Files.createTempDirectory(s"${prefix}_tbl").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(s"${prefix}_ckpt").toString
+    private val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("value", DoubleType)))
     def writeFile(rows: Seq[(String, Double)], name: String): Unit =
       rows.toDF("event_type", "value")
@@ -333,35 +352,14 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       if (vs.isEmpty) None
       else Some(vs.maxBy(_.getName.drop(1).toLong).getAbsolutePath)
     }
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(s"$in/*")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val delta = batch.groupBy("event_type")
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-          val merged = latestMv() match {
-            case None => delta
-            case Some(prev) => batch.sparkSession.read.parquet(prev)
-              .unionByName(delta)
-              .groupBy("event_type")
-              .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
-          }
-          // overwrite of v$batchId keeps a replayed batch idempotent
-          merged.write.mode("overwrite").parquet(s"$root/v$batchId")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    writeFile(Seq(("click", 1.0), ("click", 2.0), ("view", 5.0)), "f1")
-    run() // life 1: MV v0 = {click: (2, 3.0), view: (1, 5.0)}, then "dies"
-    writeFile(Seq(("click", 10.0), ("buy", 7.0)), "f2")
-    run() // life 2: must merge ONLY f2 into the recovered v0
-    val got = spark.read.parquet(latestMv().get)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == Set(("click", 3L, 13.0), ("view", 1L, 5.0), ("buy", 1L, 7.0)),
-      s"MV after restart must equal the full recompute; got $got")
+    def run(): Unit =
+      graft.core.BoundedStream.foldSnapshots(
+          spark.readStream.schema(schema).parquet(s"$in/*"), root, ckpt)(
+        _.groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value")))(
+        _.unionByName(_)
+          .groupBy("event_type")
+          .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value")))
   }
 
   test("streaming envelope fuzz: hostile Canal topic dead-letters, never fails the query") {
