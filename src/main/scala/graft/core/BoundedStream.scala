@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 /** The one runner for bounded streams: every `s_*` entry and index
   * ingest leg starts its query here, with `Trigger.AvailableNow` (process
   * what the source holds, then stop) over the given checkpoint or a fresh
-  * [[TempDirs]] one, awaited and then stopped. Exactly-once is a
+  * [[TempDirs]] one, awaited, and stopped if still active. Exactly-once is a
   * checkpoint plus an idempotent sink; the sinks the callers share are
   * below. As the only `start()`, it is the one place to read progress.
   */
@@ -30,7 +30,9 @@ object BoundedStream {
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination() finally q.stop()
+      // AvailableNow ends the query itself; stopping an ended one logs a
+      // "Failed to cancel job group" WARN.
+      try q.awaitTermination() finally if (q.isActive) q.stop()
     }
   }
 

@@ -20,6 +20,14 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.shuffle.partitions` = core count (never the 200
   *    default on a local[32] box).
   *  - UI off (headless harness).
+  *  - `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`: the fork-free
+  *    local file system ([[LocalFs]]). Without `libhadoop`, Hadoop's
+  *    stock one forks `chmod` for every file, `.crc` and directory it
+  *    creates and `readlink` for every checkpoint-log rename, ~80
+  *    processes per micro-batch of the CDC sink. Hadoop caches a `FileSystem` per
+  *    scheme and user, not per conf, so the first `file:` instance a
+  *    JVM builds is the one every later caller gets.
   *  - `spark.sql.files.maxPartitionBytes=4m` unless disabled: the
   *    driver fixtures are single small parquet files; without a small
   *    split cap every scan is ONE task. Production overrides per
@@ -78,7 +86,9 @@ object Harness {
       "spark.master" -> master,
       "spark.sql.shuffle.partitions" -> partitions.toString,
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false") ++
+      "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> classOf[LocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs].getName) ++
       when(splitSmallFiles)("spark.sql.files.maxPartitionBytes" -> "4m") ++
       when(staticPlans)("spark.sql.adaptive.enabled" -> "false") ++
       when(bigDriverResults)("spark.driver.maxResultSize" -> "8g") ++

@@ -20,6 +20,8 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> "graft.core.LocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.files.maxPartitionBytes" -> "4m",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
@@ -51,6 +53,8 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> "graft.core.LocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
@@ -63,6 +67,8 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> "graft.core.LocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
