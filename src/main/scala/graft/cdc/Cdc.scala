@@ -19,8 +19,11 @@ import graft.core.{QueryDef, QueryModule, Tables}
   *  - FULL OUTER JOIN + COALESCE snapshot merge (README.md:222-252)
   *
   * All of it is Catalyst built-ins: `from_json`, `explode`, window
-  * functions, joins. Nothing here needs a custom rule — predicate pushdown,
-  * partition pruning on `dt`, and join selection come free from Catalyst.
+  * functions, joins. Partition pruning on `dt` and join selection come
+  * free from Catalyst. Predicate pushdown needs one guard: a filter pushed
+  * below an expensive projection evaluates that projection again, so the
+  * envelope parse is a one-row generator that no filter is pushed below
+  * (see [[parseEnvelope]]).
   */
 object Cdc extends QueryModule {
 
@@ -41,10 +44,21 @@ object Cdc extends QueryModule {
 
   /** Parse a DataFrame of raw Canal JSON strings (column `value`) into the
     * envelope columns. Mirrors the fastjson parse at HdfsSink.java:73.
+    *
+    * The parse is a one-row generator (`inline` of a one-element array),
+    * not a projection: Catalyst pushes filters through a `Project` by
+    * inlining its expressions, so [[ddlFilter]]'s `isDdl` test and the
+    * `size(data) > 0` filter `InferFiltersFromGenerate` adds for
+    * [[flatten]]'s explode would each run `from_json` again below the
+    * parse — three parses per envelope. No filter is pushed below a
+    * `Generate` that produces the column it reads, so each envelope is
+    * parsed once (CdcSpec pins one `JsonToStructs` in the plan). It also
+    * makes [[ddlFilter]] test the `isDdl` this parse returns: the pushed,
+    * schema-pruned parse read none from an envelope truncated inside
+    * `data`, so such a row was dropped although it parses as "false".
     */
   def parseEnvelope(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value"), canalSchema).as("env"))
-      .select(col("env.*"))
+    raw.select(inline(array(from_json(col("value"), canalSchema))))
 
   /** Drop DDL events — exact semantics of the reference filter
     * (HdfsSink.java:59-66): keep records whose `isDdl` field equals the

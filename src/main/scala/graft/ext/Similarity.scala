@@ -578,9 +578,6 @@ object Similarity extends QueryModule {
     */
   final case class IvfIndex(centroids: Array[Array[Float]], cells: DataFrame)
 
-  def ivfBuild(embeddings: DataFrame): IvfIndex =
-    ivfBuildWith(embeddings, seedCentroids(embeddings))
-
   /** Deterministic seed centroids: the C = max(4, sqrt(n)) lowest vec_ids. */
   private[graft] def seedCentroids(embeddings: DataFrame): Array[Array[Float]] = {
     val e = embeddings.select(col("vec_id"), col("embedding"))
@@ -1454,49 +1451,69 @@ object Similarity extends QueryModule {
     } finally { e.unpersist(); () }
   }
 
-  /** Probe the nprobe cells nearest to `query` (nearest-cell choice is a
-    * tiny driver-side loop over the collected centroids), brute-force
-    * cosine within them, top-k.
-    */
-  def ivfProbe(index: IvfIndex, query: Array[Float], nprobe: Int, k: Int,
-      tap: Option[String] = None): DataFrame = {
-    val probed: Seq[Int] = chooseCells(index.centroids, query, nprobe)
-    // The query vector rides as a typed array literal, so the in-cell
-    // cosine is the same codegen expression as every other call site
-    // (cosineKernel is symmetric in its norm terms — identical output).
-    val scored = index.cells
-      .filter(col("cell").isin(probed: _*))
-      .select(col("vec_id"), col("cell"),
-        round(cosineUdf(typedLit(query), col("embedding")), 4).as("cos_sim"))
-    // Partial-oracle tap (registry entries only): the scored candidate
-    // set — everything AFTER the seeded/quantized candidate generation —
-    // is the leg DuckDB recomputes independently (cosine from the
-    // embeddings table + ranking + top-k) and hash-matches.
-    tap.fold(scored)(n => OracleTap(index.cells.sparkSession, n, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+  // ---- One IVF query builder -------------------------------------------
+  //
+  // Every IVF retrieval here is ONE filter-and-refine probe over a
+  // cell-partitioned index, bounded by a pruning distance (the framing of
+  // "Incremental Based Framework for Efficient Top-K Similarity Search",
+  // EDBT 2020, and REPOSE, ICDE 2021): choose cells, scan their postings,
+  // score, cut. An entry only picks where the postings live, how many
+  // anchors ask, what the cut is, whether a label predicate applies, and
+  // whether candidates are scored exactly or by ADC codes then re-ranked.
+
+  /** The choices an IVF query ([[ivfQuery]]) is built from. */
+  object Ivf {
+    sealed trait Postings
+    /** The persisted index at `dir`: manifest-gated (only COMMITTED
+      * batch_ids, tombstones anti-joined) and partition-pruned on
+      * `cell_id`, so a probe never opens unprobed cells' files.
+      */
+    final case class Stored(spark: SparkSession, dir: String) extends Postings
+    /** An in-memory index over `corpus`: the quantizer (`quantizer`, else
+      * the seed sample) and PQ codebook are trained once per Frame; each
+      * query assigns its own cell table (the one-time n·C scan) and frees
+      * it once its answer no longer reads it, so repeated queries in one
+      * session do not accumulate cached DataFrames.
+      */
+    final case class Frame(corpus: DataFrame, quantizer: Option[Array[Array[Float]]] = None)
+        extends Postings {
+      lazy val centroids: Array[Array[Float]] = quantizer.getOrElse(seedCentroids(corpus))
+      lazy val codebook: PqCodebook = pqTrainResidual(seedCentroidsK(corpus, PqSample), centroids)
+    }
+
+    sealed trait Queries
+    /** One query vector; `exclude` skips its own posting when it was drawn
+      * from the corpus (a filter inside the pruned scan, not a second pass).
+      */
+    final case class Anchor(vec: Array[Float], exclude: Option[Long] = None) extends Queries
+    /** A query TABLE (`vec_id`, `embedding`) resolved in one job; every
+      * anchor skips its own posting.
+      */
+    final case class Anchors(df: DataFrame) extends Queries
+
+    sealed trait Result
+    final case class TopK(k: Int) extends Result
+    /** Every candidate with cosine ≥ tau — the faiss `range_search`
+      * analogue: output size follows the data, the contract a takedown
+      * sweep or a near-dup harvest wants.
+      */
+    final case class Range(tau: Double) extends Result
+
+    /** The metadata predicate `label = value`, matching `m` of `n` rows. */
+    final case class Label(value: Int, n: Long, m: Long)
+    object Label {
+      /** Measure the selectivity with one count each against `corpus`. */
+      def of(corpus: DataFrame, value: Int): Label =
+        Label(value, corpus.count(), corpus.filter(col("label") === value).count())
+    }
+
+    sealed trait Scorer
+    case object Exact extends Scorer
+    /** Score candidates from their 8-byte CODES via an ADC table, then
+      * re-rank the shortlist ([[pqShortlist]]) exactly.
+      */
+    final case class Adc(refine: Int = PqRefine) extends Scorer
   }
-
-  /** One-shot convenience: build + single probe (the spec's per-query
-    * loop builds once and probes many times instead).
-    */
-  def ivfSearch(embeddings: DataFrame, query: Array[Float], nprobe: Int, k: Int,
-      tap: Option[String] = None): DataFrame =
-    ivfProbe(ivfBuild(embeddings), query, nprobe, k, tap)
-
-  private def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    // Probe with the anchor vector (vec 0), like q_similarity_topk but
-    // scanning only the probed cells. Rows-only entry (cell contents
-    // depend on the quantizer); recall is pinned in SimilaritySpec on the
-    // planted corpus.
-    val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    ivfSearch(e.filter(col("vec_id") =!= 0), anchor, nprobe = 4, k = 10,
-      tap = Some("ann_ivf_scored"))
-  }
-
-  // ---- Filtered ANN: metadata predicate + vector top-k -----------------
 
   /** Brute-force cutover: when the predicate matches at most this many
     * candidates per result row (m <= factor·k), scanning the filtered
@@ -1517,77 +1534,263 @@ object Similarity extends QueryModule {
     math.min(cells, math.max(nprobe, math.ceil(nprobe / s).toInt))
   }
 
-  /** Filtered ANN — a metadata predicate (label = v) composed with vector
-    * top-k, the retrieval shape every filtered-RAG pipeline runs. The
-    * strategy is COST-BASED on the predicate's measured selectivity
-    * (one count — the same driver-side budget as the corpus-size count
-    * every LSH/IVF path here takes):
+  /** The IVF query plan builder — every IVF entry and spec probes through
+    * it. Output: `vec_id, cell, cos_sim` per anchor (batch: `query_id`
+    * first, plus `rnk` for top-k), cosine rounded to 4 dp, ordered by
+    * descending cosine then vec_id. `tap` writes the scored candidates
+    * (everything after the seeded/quantized candidate generation) for the
+    * entry's partial oracle ([[annOracle]]).
     *
-    *  - SELECTIVE (m <= [[FilteredBruteFactor]]·k): exact brute force
-    *    over the filtered subset. At any corpus size, a predicate
-    *    matching few rows is cheaper scanned exactly than probed — at
-    *    100 TB the label predicate pushes to the parquet scan
-    *    (PushedFilters / dictionary + row-group stats pruning) and the
-    *    m surviving rows flow through one TakeOrderedAndProject.
-    *  - BROAD: IVF probe with nprobe widened by the inverse selectivity
-    *    ([[widenedNprobe]]), post-filtering INSIDE the probed cells —
-    *    the filter composes with cell pruning, so candidate work stays
-    *    ~nprobe·(n/C) rows scanned of which ~s survive to scoring.
+    * Cell choice ([[chooseCells]]): the `nprobe` nearest cells, widened
+    * by the predicate's inverse selectivity ([[widenedNprobe]]). A single
+    * anchor chooses driver-side; a batch chooses executor-side (the
+    * centroid matrix and its coarse index ride in the UDF closure), and
+    * the union of probed cells (≤ min(Q·nprobe, C) ints, collected)
+    * statically prunes the postings scan.
     *
-    * Post-filter-with-widening vs pre-filter is exactly the trade
-    * documented for production vector stores (cf. the public faiss /
-    * pgvector filtered-search guidance); the cutover makes the choice
-    * from measured selectivity instead of guessing.
+    * Label predicate: it lands INSIDE the pruned scan (PartitionFilters ×
+    * PushedFilters compose), so candidates outside it are never scored.
+    * A single anchor whose predicate is SELECTIVE (m ≤
+    * [[FilteredBruteFactor]]·k) skips the quantizer: a label-pushdown
+    * scan of every cell (parquet dictionary/row-group stats drop
+    * non-matching row groups), exact scoring, exact recall — the
+    * pre-filter plan; an in-memory index marks those rows cell = -1. A
+    * batch needs no cutover: a tiny m widens every anchor to ALL cells,
+    * which is the same sweep, batched. Post-filter-with-widening vs
+    * pre-filter is the trade documented for production vector stores
+    * (cf. the public faiss / pgvector filtered-search guidance); the
+    * cutover makes the choice from measured selectivity.
+    *
+    * Batch: the (anchor × probed-cell) table — Q·nprobe rows —
+    * BROADCASTS onto the pruned postings on cell_id, so in-cell scoring
+    * runs where the postings live and the postings never shuffle; the
+    * per-anchor top-k is a row_number window, which Spark 4 executes as
+    * WindowGroupLimit (group-local top-k before the one exchange of Q·k
+    * rows). Cost scales with Q·nprobe·(n/C) candidate rows, not Q probes
+    * and not a Q×n cross product; per-anchor output is row-identical to
+    * the single-anchor query (SimilaritySpec pins it).
+    *
+    * ADC ([[Ivf.Adc]], the IVFADC layout): the candidate scan selects
+    * only (vec_id, cell_id, code), so parquet never materializes the
+    * 256-byte embedding column for scanned postings — 8 bytes of code
+    * per row, the 32× IO cut that makes a 100 TB probe stream codes, not
+    * vectors (PlanSpec pins the ReadSchema). Top-k keeps the
+    * [[pqShortlist]] best ADC scores and reads full vectors once more
+    * for those ids only (an `isin` the row-group stats prune on; a batch
+    * broadcasts the Q·shortlist rows back onto the pruned postings, its
+    * per-anchor ADC tables — ~1 KB each — riding in the scoring closure),
+    * then re-ranks exactly. Range pre-filters the codes at
+    * tau − [[adcMarginFor]] (THIS index's build-time audited ADC error,
+    * not a global constant) and applies the exact tau to the survivors:
+    * every returned row is exactly verified, and completeness within
+    * probed cells holds for any match whose ADC error is under the
+    * margin (SimilaritySpec: ADC range ≡ full-precision range). The audit
+    * is sampled, so the bound is empirical, not adversarial-proof:
+    * TAKEDOWN-GRADE completeness should use [[Ivf.Exact]], which prunes
+    * by partition only and verifies every candidate.
+    *
+    * At `nprobe = C` a range query IS the exact brute-force threshold
+    * scan (SimilaritySpec pins it); at small nprobe it inherits IVF's
+    * cell-recall economics.
     */
-  private[graft] def annFilteredSearch(e: DataFrame, anchor: Array[Float],
-      labelValue: Int, nprobe: Int, k: Int,
+  private[graft] def ivfQuery(postings: Ivf.Postings, queries: Ivf.Queries, result: Ivf.Result,
+      nprobe: Int, filter: Option[Ivf.Label] = None, scorer: Ivf.Scorer = Ivf.Exact,
       tap: Option[String] = None): DataFrame = {
-    val spark = e.sparkSession
-    val filtered = e.filter(col("label") === labelValue)
-    val m = filtered.count()
-    val (scored, cached) =
-      if (m <= FilteredBruteFactor * k) {
-        // Selective: exact top-k over the filtered subset (cell = -1
-        // marks the exact branch in the output/tap — no quantizer ran).
-        (filtered.select(col("vec_id"), lit(-1).as("cell"),
-          round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim")),
-          Option.empty[DataFrame])
-      } else {
-        val n = e.count()
-        val idx = ivfBuildWith(e, seedCentroids(e), keep = Seq("label"))
-        val np = widenedNprobe(nprobe, n, m, idx.centroids.length)
-        val probed: Seq[Int] = chooseCells(idx.centroids, anchor, np)
-        (idx.cells
-          .filter(col("cell").isin(probed: _*) && col("label") === labelValue)
-          .select(col("vec_id"), col("cell"),
-            round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim")),
-          Some(idx.cells))
-      }
-    val out = tap.fold(scored)(nm => OracleTap(spark, nm, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-    // Release the broad branch's cached cell table (writeIvfIndex's
-    // persist/unpersist discipline — repeated filtered queries in one
-    // session must not accumulate cached DataFrames). Tapped runs are
-    // already materialized to the tap path, so `out` no longer depends
-    // on the cache; untapped runs pin the k rows eagerly first.
-    cached.fold(out) { cells =>
-      val freed = if (tap.isDefined) out else out.localCheckpoint(true)
-      cells.unpersist()
-      freed
+    val live = openIvf(postings, scorer != Ivf.Exact, filter.map(_ => "label").toSeq)
+    def width: Int = {
+      val c = live.centroids.length
+      filter.fold(math.min(nprobe, c))(l => widenedNprobe(nprobe, l.n, l.m, c))
     }
+    def labelled(df: DataFrame) = filter.fold(df)(l => df.filter(col("label") === l.value))
+    val byCos = Seq(col("cos_sim").desc, col("vec_id"))
+    val out = queries match {
+      case Ivf.Anchor(vec, exclude) =>
+        val brute = result match {
+          case Ivf.TopK(k) => filter.exists(_.m <= FilteredBruteFactor * k)
+          case Ivf.Range(_) => false
+        }
+        val probed = if (brute) None else Some(chooseCells(live.centroids, vec, width))
+        val pruned = labelled(live.scan(probed))
+        val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
+        val candidates = (scorer, probed) match {
+          case (Ivf.Adc(refine), Some(cells)) =>
+            val adc = base.select(col("vec_id"),
+              adcResidualScoreUdf(adcTable(live.codebook, vec), centDots(live.centroids, cells, vec))(
+                col("cell_id").cast("int"), col("code")).as("adc"))
+            result match {
+              case Ivf.TopK(k) =>
+                // Bounded collect: the shortlist ids.
+                val ids = adc.orderBy(col("adc").desc, col("vec_id"))
+                  .limit(pqShortlist(k, refine, cells.length))
+                  .collect().map(_.getLong(0))
+                base.filter(col("vec_id").isin(ids: _*))
+              case Ivf.Range(tau) =>
+                // Survivor ids are usually bounded by |result| + margin
+                // spillover — a driver-side id list gives the second scan
+                // row-group point pushdown, like the top-k shortlist. But
+                // the spillover is data-sized at LOW tau, so the collect
+                // is capped: past [[RangeIsinCap]], a distributed
+                // semi-join (survivors broadcast when small, shuffled when
+                // not) — never a driver list that scales with the cells.
+                val passed = adc.filter(col("adc") >= lit(tau - live.adcMargin(tau)))
+                  .select(col("vec_id"))
+                val headIds = passed.limit(RangeIsinCap + 1).collect().map(_.getLong(0))
+                if (headIds.length <= RangeIsinCap) base.filter(col("vec_id").isin(headIds: _*))
+                else base.join(passed, Seq("vec_id"), "left_semi")
+            }
+          case _ => base
+        }
+        val scored = candidates.select(col("vec_id"), col("cell_id").cast("int").as("cell"),
+          round(cosineUdf(typedLit(vec), col("embedding")), 4).as("cos_sim"))
+        val tapped = tap.fold(scored)(n => OracleTap(live.spark, n, scored))
+        result match {
+          case Ivf.TopK(k) => tapped.orderBy(byCos: _*).limit(k)
+          case Ivf.Range(tau) => tapped.filter(col("cos_sim") >= tau).orderBy(byCos: _*)
+        }
+
+      case Ivf.Anchors(anchors) =>
+        val (cents, np) = (live.centroids, width)
+        // The group index builds once driver-side and rides in the closure
+        // with the centroid matrix, so per-anchor cell choice is
+        // sub-linear executor-side too.
+        val coarse = if (cents.length >= CoarseScanLimit) Some(coarseIndexFor(cents)) else None
+        val topCellsUdf = udf { (emb: Array[Float]) => chooseCells(cents, emb, np, coarse).toArray }
+        val anchorRows = anchors.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+        val anchorCells = anchorRows.withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
+        val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val postings = labelled(live.scan(Some(probedCells)))
+        def joined(p: DataFrame) = p.join(broadcast(anchorCells), Seq("cell_id"))
+          .filter(col("vec_id") =!= col("query_id"))
+        val candidates = (scorer, result) match {
+          case (Ivf.Exact, _) => joined(postings)
+          case (Ivf.Adc(refine), Ivf.TopK(k)) =>
+            // Driver-side per-anchor ADC tables + probed-cell dot constants
+            // (bounded: Q anchors × 1 KB tables, Q × nprobe doubles).
+            val tables: Map[Long, (Array[Array[Double]], Map[Int, Double])] =
+              anchorRows.collect().map { r =>
+                val q = r.getSeq[Float](1).toArray
+                r.getLong(0) -> (adcTable(live.codebook, q),
+                  centDots(cents, chooseCells(cents, q, np, coarse), q))
+              }.toMap
+            val adcUdf = udf { (qid: Long, cell: Int, code: Array[Byte]) =>
+              val (t, dots) = tables(qid)
+              adcSum(t, dots(cell), code)
+            }
+            val shortlist = joined(postings.select(col("vec_id"), col("cell_id"), col("code")))
+              .select(col("query_id"), col("q_emb"), col("vec_id"), col("cell_id"),
+                adcUdf(col("query_id"), col("cell_id").cast("int"), col("code")).as("adc"))
+              .withColumn("arnk", row_number().over(
+                Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))))
+              .filter(col("arnk") <= pqShortlist(k, refine, np))
+              .drop("adc", "arnk")
+            postings.select(col("vec_id"), col("cell_id"), col("embedding"))
+              .join(broadcast(shortlist), Seq("cell_id", "vec_id"))
+          case (Ivf.Adc(_), Ivf.Range(_)) =>
+            throw new UnsupportedOperationException("batched ADC range search")
+        }
+        val scored = candidates.select(col("query_id"), col("vec_id"),
+          col("cell_id").cast("int").as("cell"),
+          round(cosineUdf(col("q_emb"), col("embedding")), 4).as("cos_sim"))
+        // An exact batch taps every probed posting of every anchor, so it
+        // keeps the writer's parallelism; an ADC batch taps only the
+        // Q·shortlist re-ranked rows, one file like a single anchor's.
+        val tapped = tap.fold(scored)(n =>
+          OracleTap(live.spark, n, scored, single = scorer != Ivf.Exact))
+        result match {
+          case Ivf.TopK(k) =>
+            tapped.withColumn("rnk", row_number().over(
+                Window.partitionBy(col("query_id")).orderBy(byCos: _*)).cast(LongType))
+              .filter(col("rnk") <= k)
+              .orderBy(col("query_id"), col("rnk"))
+          case Ivf.Range(tau) =>
+            tapped.filter(col("cos_sim") >= tau).orderBy(col("query_id") +: byCos: _*)
+        }
+    }
+    live.release(out, tap.isDefined)
   }
 
+  /** One query's read of its postings: the quantizer, the live postings
+    * (`vec_id`, `cell_id`, `embedding`, plus `code` and `label` where the
+    * layout has them) restricted to the probed cells (None = every
+    * cell), the ADC range margin, and the cleanup once the answer stands
+    * alone.
+    */
+  private trait IvfLive {
+    def spark: SparkSession
+    def centroids: Array[Array[Float]]
+    def codebook: PqCodebook
+    def scan(cells: Option[Seq[Int]]): DataFrame
+    def adcMargin(tau: Double): Double
+    def release(out: DataFrame, tapped: Boolean): DataFrame
+  }
+
+  private def openIvf(postings: Ivf.Postings, adc: Boolean, keep: Seq[String]): IvfLive =
+    postings match {
+      case Ivf.Stored(s, dir) => new IvfLive {
+        val spark = s
+        lazy val centroids = readIvfCentroids(s, dir)
+        lazy val codebook = readIvfCodebook(s, dir)
+        lazy val manifest = readIvfManifest(dir)
+        def scan(cells: Option[Seq[Int]]) =
+          IvfStore.live(s, dir, manifest.core, cells.map(c => col("cell_id").isin(c: _*)))
+        def adcMargin(tau: Double) = adcMarginFor(manifest, tau)
+        def release(out: DataFrame, tapped: Boolean) = out
+      }
+      case f: Ivf.Frame => new IvfLive {
+        val spark = f.corpus.sparkSession
+        def centroids = f.centroids
+        def codebook = f.codebook
+        private var built = Option.empty[DataFrame]
+        def scan(cells: Option[Seq[Int]]) = cells match {
+          // No quantizer ran: cell = -1 marks the exact branch's rows.
+          case None => f.corpus.withColumn("cell_id", lit(-1))
+          case Some(c) =>
+            val table = built.getOrElse(ivfBuildWith(f.corpus, centroids, keep).cells)
+            built = Some(table)
+            val probed = table.filter(col("cell").isin(c: _*)).withColumnRenamed("cell", "cell_id")
+            if (!adc) probed
+            else probed.withColumn("code",
+              pqEncodeResidualUdf(codebook, centroids)(col("embedding"), col("cell_id")))
+        }
+        def adcMargin(tau: Double) =
+          throw new UnsupportedOperationException("ADC range search needs a persisted, audited index")
+        // Tapped answers are already materialized to the tap path; untapped
+        // ones pin their rows eagerly before the cell table goes.
+        def release(out: DataFrame, tapped: Boolean) = built.fold(out) { table =>
+          val freed = if (tapped) out else out.localCheckpoint(true)
+          table.unpersist()
+          freed
+        }
+      }
+    }
+
+  /** Row `id`'s embedding, read from the table. */
+  private def vecOf(e: DataFrame, id: Long): Array[Float] =
+    e.filter(col("vec_id") === id).head().getSeq[Float](e.columns.indexOf("embedding")).toArray
+
+  private def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
+    // Probe with the anchor vector (vec 0), like q_similarity_topk but
+    // scanning only the probed cells. Recall is pinned in SimilaritySpec
+    // on the planted corpus.
+    val e = Tables(spark, sfDir, "embeddings")
+    ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0)), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10),
+      nprobe = 4, tap = Some("ann_ivf_scored"))
+  }
+
+  /** Filtered ANN — a metadata predicate (label = v) composed with vector
+    * top-k, the retrieval shape every filtered-RAG pipeline runs, with
+    * the cost-based cutover of [[ivfQuery]]. label 3 ≈ 10% selectivity
+    * on the fixtures: sf0.01 lands on the selective branch (m ≈ 59 ≤
+    * 80), sf0.1+ on the widened probe — the driver's correctness gate
+    * certifies the exact branch, the bench + recall spec exercise the
+    * probe branch.
+    */
   private def annFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    // label 3 ≈ 10% selectivity on the fixtures: sf0.01 lands on the
-    // selective branch (m ≈ 59 ≤ 80), sf0.1+ on the widened probe — the
-    // driver's correctness gate certifies the exact branch, the bench +
-    // recall spec exercise the probe branch.
-    annFilteredSearch(e.filter(col("vec_id") =!= 0), anchor, labelValue = 3,
-      nprobe = 4, k = 10, tap = Some("ann_filtered_scored"))
+    val corpus = e.filter(col("vec_id") =!= 0)
+    ivfQuery(Ivf.Frame(corpus), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10), nprobe = 4,
+      filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_scored"))
   }
 
   // ---- Persisted IVF index: build once, probe many ---------------------
@@ -1754,10 +1957,7 @@ object Similarity extends QueryModule {
   private def embeddingsStats(spark: SparkSession, sfDir: String): (Long, Array[Float]) =
     fixtureStatCache.getOrElseUpdate(ivfTag(sfDir), {
       val e = Tables(spark, sfDir, "embeddings")
-      val maxId = e.agg(max(col("vec_id"))).head().getLong(0)
-      val anchor = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-      (maxId, anchor)
+      (e.agg(max(col("vec_id"))).head().getLong(0), vecOf(e, 0L))
     })
 
   /** Marker-gated IMMUTABLE seed template for the ingest/compact entries:
@@ -1878,7 +2078,7 @@ object Similarity extends QueryModule {
   }
 
   /** Read the persisted centroid table back as the quantizer matrix
-    * (bounded: C×Dim floats — the same collect budget as ivfProbe).
+    * (bounded: C×Dim floats — the same collect budget as an in-memory probe).
     */
   private[graft] def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
     scratchOrigin.get(dir) match {
@@ -2027,8 +2227,8 @@ object Similarity extends QueryModule {
     // compacted single-batch layout.
     val dir = scratchIvfFromSeed(ensureAppendedIvfSeed(spark, sfDir), "graft_ann_compact")
     ivfIndexCompact(spark, dir)
-    probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L),
-      tap = Some("ann_ivf_compact_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, tap = Some("ann_ivf_compact_scored"))
   }
 
   /** Template copy → append → DELETE the probe's current top-3 → probe:
@@ -2044,11 +2244,11 @@ object Similarity extends QueryModule {
     // takedown lifecycle itself: discovery probe, tombstone publish,
     // re-ranked probe.
     val dir = scratchIvfFromSeed(ensureAppendedIvfSeed(spark, sfDir), "graft_ann_delete")
-    val top3 = probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 3, exclude = Some(0L))
-      .collect().map(_.getLong(0)).toSeq
+    val top3 = ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)),
+      Ivf.TopK(3), nprobe = 4).collect().map(_.getLong(0)).toSeq
     ivfIndexDelete(spark, dir, top3.toDF("vec_id"))
-    probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L),
-      tap = Some("ann_ivf_delete_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, tap = Some("ann_ivf_delete_scored"))
   }
 
   // ---- Streaming ingest into the persisted index -----------------------
@@ -2099,7 +2299,7 @@ object Similarity extends QueryModule {
     graft.core.BoundedStream.appendStream(stream) { (b, key) =>
       ivfIndexAppend(spark, dir, b, ingestKey = Some(key))
     }
-    probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = exclude, tap = tap)
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude), Ivf.TopK(10), nprobe = 4, tap = tap)
   }
 
   private def annIngest(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2132,8 +2332,7 @@ object Similarity extends QueryModule {
     val e = Tables(spark, sfDir, "embeddings")
     val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
     Warehouse.ensureDerivedSeed(seed, "poisoned") { d =>
-      val crowd = e.filter(col("vec_id") === 1)
-        .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
+      val crowd = vecOf(e, 1L)
       val rnd = new scala.util.Random(13)
       // The poison must scale with the index: C ≈ √n cells ⇒ median
       // cell ≈ √n rows, and one crowded cell reads imbalance ≈
@@ -2169,79 +2368,26 @@ object Similarity extends QueryModule {
     ivfIndexRebuild(spark, dir)
     require(!readIvfManifest(dir).rebuildNeeded,
       "rebuild over the cleaned content did not clear the sentinel")
-    probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L),
-      tap = Some("ann_ivf_rebuild_scored"))
-  }
-
-  /** Probe the persisted index at `dir`: nearest-cell choice driver-side,
-    * manifest-gated + partition-pruned postings scan (only COMMITTED
-    * batch_ids, only probed cell_ids — both prune at the partition
-    * level), in-cell cosine top-k.
-    */
-  private[graft] def probeIvfIndex(spark: SparkSession, dir: String,
-      anchor: Array[Float], nprobe: Int, k: Int,
-      exclude: Option[Long] = None, tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val cells = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probed: _*)))
-    val scored = exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Radius (range) search against the persisted index — the faiss
-    * `range_search` analogue: ALL vectors with cosine ≥ `tau` inside the
-    * `nprobe` nearest cells, not a fixed top-k. Same partition-pruned
-    * scan + tombstone filter as [[probeIvfIndex]]; the only difference
-    * is the acceptance predicate (threshold instead of rank), so output
-    * size follows the data, which is the contract a takedown sweep or a
-    * near-dup harvest actually wants. At nprobe = C this IS the exact
-    * brute-force threshold scan (SimilaritySpec pins the equality); at
-    * small nprobe it inherits IVF's cell-recall economics. The tap
-    * carries every scored candidate, so the oracle re-derives the
-    * threshold subset wholesale from independent cosine recomputation.
-    */
-  private[graft] def rangeIvfIndex(spark: SparkSession, dir: String,
-      anchor: Array[Float], nprobe: Int, tau: Double,
-      exclude: Option[Long] = None, tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val cells = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probed: _*)))
-    val scored = exclude.fold(cells)(id => cells.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored))
-      .filter(col("cos_sim") >= tau)
-      .orderBy(col("cos_sim").desc, col("vec_id"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, tap = Some("ann_ivf_rebuild_scored"))
   }
 
   /** ANN probe against the PERSISTED index: nearest-cell choice over the
-    * collected centroid table (bounded: C×Dim floats, ~8 MB at n=1e9 —
-    * same budget as ivfProbe), then a partition-pruned postings scan
-    * (PartitionFilters on cell_id, pinned in PlanSpec) + in-cell cosine
-    * top-k. Output is row-identical to the in-memory q_ann_ivf: the
-    * persisted quantizer is trained on the same anchor-excluded corpus
-    * (ensureIvfIndex), so centroids, probed cells, and in-cell candidates
-    * coincide — SimilaritySpec pins the equivalence, so the persisted
-    * layout inherits the planted ≥0.9 recall pin.
+    * collected centroid table (bounded: C×Dim floats, ~8 MB at n=1e9),
+    * then a partition-pruned postings scan (PartitionFilters on cell_id,
+    * pinned in PlanSpec) + in-cell cosine top-k. Output is row-identical
+    * to the in-memory q_ann_ivf: the persisted quantizer is trained on
+    * the same anchor-excluded corpus (ensureIvfIndex), so centroids,
+    * probed cells, and in-cell candidates coincide — SimilaritySpec pins
+    * the equivalence, so the persisted layout inherits the planted ≥0.9
+    * recall pin. The anchor's own row is excluded inside the pruned scan
+    * (a filter before the top-k, not a second pass).
     */
   private def annIvfProbe(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    // The index holds the full corpus; the anchor's own row is excluded
-    // inside the pruned scan (a filter before the top-k, not a second
-    // pass).
-    probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L),
-      tap = Some("ann_ivf_probe_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, tap = Some("ann_ivf_probe_scored"))
   }
 
   /** Range (radius) retrieval on the persisted index: everything with
@@ -2254,185 +2400,36 @@ object Similarity extends QueryModule {
   private def annRange(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    rangeIvfIndex(spark, dir, anchor, nprobe = 8, tau = 0.25,
-      exclude = Some(0L), tap = Some("ann_range_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.Range(0.25),
+      nprobe = 8, tap = Some("ann_range_scored"))
   }
 
-  /** Filtered probe against the PERSISTED index — [[annFilteredSearch]]'s
+  /** Filtered probe against the PERSISTED index — q_ann_filtered's
     * cost-based strategy at the index layer, where the amortized-build
-    * economics actually hold:
-    *
-    *  - SELECTIVE predicate: a label-pushdown scan of the WHOLE postings
-    *    layout (no cell restriction — the pre-filter plan). Parquet
-    *    dictionary/row-group stats drop non-matching row groups at the
-    *    scan, the m survivors flow through one TakeOrderedAndProject,
-    *    and recall is exact.
-    *  - BROAD predicate: partition-pruned scan of [[widenedNprobe]] cells
-    *    with the label predicate INSIDE the pruned scan (PartitionFilters
-    *    × PushedFilters compose), in-cell cosine top-k.
-    *
-    * `m`/`n` (the predicate's selectivity) come from the caller — the
-    * registry entry measures them with one count against the source
-    * table, a production deployment reads them from table statistics.
+    * economics actually hold. The selectivity (m of n) is measured with
+    * one count each against the source table; a production deployment
+    * reads it from table statistics.
     */
-  private[graft] def probeIvfIndexFiltered(spark: SparkSession, dir: String,
-      anchor: Array[Float], labelValue: Int, n: Long, m: Long,
-      nprobe: Int, k: Int, exclude: Option[Long] = None,
-      tap: Option[String] = None): DataFrame = {
-    val manifest = readIvfManifest(dir)
-    val postings = IvfStore.live(spark, dir, manifest.core)
-    val cells =
-      if (m <= FilteredBruteFactor * k) postings
-      else {
-        val centroids = readIvfCentroids(spark, dir)
-        val np = widenedNprobe(nprobe, n, m, centroids.length)
-        val probed: Seq[Int] = chooseCells(centroids, anchor, np)
-        postings.where(col("cell_id").isin(probed: _*))
-      }
-    val base = cells.filter(col("label") === labelValue)
-    val scored = exclude.fold(base)(id => base.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(nm => OracleTap(spark, nm, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
   private def annFilteredProbe(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
     val corpus = e.filter(col("vec_id") =!= 0)
-    val n = corpus.count()
-    val m = corpus.filter(col("label") === 3).count()
-    probeIvfIndexFiltered(spark, dir, anchor, labelValue = 3, n = n, m = m,
-      nprobe = 4, k = 10, exclude = Some(0L), tap = Some("ann_filtered_probe_scored"))
-  }
-
-  /** Batched ANN retrieval against the persisted index — the shape a
-    * production RAG/retrieval pipeline actually runs (VERDICT r8
-    * "missing #2"): a query TABLE of Q anchors resolved in ONE job, not Q
-    * driver-side probe loops.
-    *
-    *  1. Each anchor picks its nprobe nearest cells executor-side (the
-    *     centroid matrix rides in the UDF closure — C×Dim floats, the
-    *     same budget every IVF path here has).
-    *  2. The union of probed cells (≤ min(Q·nprobe, C) ints — bounded,
-    *     collected) statically prunes the postings scan: PartitionFilters
-    *     on cell_id, so files outside the probed cells are never opened.
-    *  3. The (anchor × probed-cell) table — Q·nprobe rows — BROADCASTS
-    *     onto the pruned postings on cell_id; in-cell cosine runs where
-    *     the postings live. No postings shuffle.
-    *  4. Per-anchor top-k via a row_number window on (query_id), which
-    *     Spark 4 executes as WindowGroupLimit: per-partition group-local
-    *     top-k before the single bounded exchange of Q·k candidate rows.
-    *
-    * Cost scales with Q·nprobe·(n/C) candidate rows — NOT Q full probes
-    * and NOT a Q×n cross product. Per-anchor output is row-identical to
-    * probeIvfIndex run per anchor (SimilaritySpec pins it).
-    */
-  private[graft] def probeIvfIndexBatch(spark: SparkSession, dir: String,
-      anchors: DataFrame, nprobe: Int, k: Int,
-      tap: Option[String] = None,
-      labelValue: Option[Int] = None, counts: Option[(Long, Long)] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val manifest = readIvfManifest(dir)
-    // Filtered batch retrieval widens every anchor's probe by the
-    // predicate's inverse selectivity, exactly like the single-anchor
-    // path — which also subsumes the selective-predicate case: a tiny m
-    // clamps the width to ALL cells, i.e. a label-pushdown sweep with
-    // exact recall (the pre-filter plan, batched).
-    val np = labelValue match {
-      case Some(_) =>
-        val (n, m) = counts.getOrElse(
-          sys.error("filtered batch probe requires (n, m) selectivity counts"))
-        widenedNprobe(nprobe, n, m, centroids.length)
-      case None => math.min(nprobe, centroids.length)
-    }
-    // The group index builds once driver-side and rides in the closure
-    // with the centroid matrix, so per-anchor cell choice is sub-linear
-    // executor-side too.
-    val coarseIdx =
-      if (centroids.length >= CoarseScanLimit) Some(coarseIndexFor(centroids)) else None
-    val topCellsUdf = udf { (emb: Array[Float]) =>
-      chooseCells(centroids, emb, np, coarseIdx).toArray
-    }
-    val anchorCells = anchors
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
-    val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val postings0 = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probedCells: _*)))
-    // The predicate lands INSIDE the pruned scan (PushedFilters), before
-    // the anchor join — candidates outside it are never scored.
-    val postings = labelValue.fold(postings0)(v => postings0.filter(col("label") === v))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val scored = postings.join(broadcast(anchorCells), Seq("cell_id"))
-      // Anchors drawn from the corpus skip their own posting row — the
-      // batched twin of probeIvfIndex's `exclude`.
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(col("q_emb"), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored, single = false))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** Batched range (radius) retrieval: Q anchors' threshold matches in
-    * ONE job — [[probeIvfIndexBatch]]'s pruning/broadcast shape with
-    * [[rangeIvfIndex]]'s acceptance predicate in place of the rank
-    * window. The per-anchor output is row-identical to rangeIvfIndex run
-    * per anchor (spec-pinned); cost scales with Q·nprobe·(n/C) candidate
-    * rows and the output follows the data — the batched takedown-sweep /
-    * near-dup-harvest shape.
-    */
-  private[graft] def rangeIvfIndexBatch(spark: SparkSession, dir: String,
-      anchors: DataFrame, nprobe: Int, tau: Double,
-      tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val np = math.min(nprobe, centroids.length)
-    val coarseIdx =
-      if (centroids.length >= CoarseScanLimit) Some(coarseIndexFor(centroids)) else None
-    val topCellsUdf = udf { (emb: Array[Float]) =>
-      chooseCells(centroids, emb, np, coarseIdx).toArray
-    }
-    val anchorCells = anchors
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
-    val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val postings = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probedCells: _*)))
-    val scored = postings.join(broadcast(anchorCells), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(col("q_emb"), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored, single = false))
-      .filter(col("cos_sim") >= tau)
-      .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_probe_scored"))
   }
 
   private def annRangeBatch(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    rangeIvfIndexBatch(spark, dir, e.filter(col("vec_id") < 8),
-      nprobe = 8, tau = 0.25, tap = Some("ann_range_batch_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(e.filter(col("vec_id") < 8)), Ivf.Range(0.25),
+      nprobe = 8, tap = Some("ann_range_batch_scored"))
   }
 
   private def annIvfBatch(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     // Query table: the 8 lowest vec_ids stand in for a retrieval batch.
     val anchors = Tables(spark, sfDir, "embeddings").filter(col("vec_id") < 8)
-    probeIvfIndexBatch(spark, dir, anchors, nprobe = 4, k = 5,
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
       tap = Some("ann_ivf_batch_scored"))
   }
 
@@ -2443,12 +2440,8 @@ object Similarity extends QueryModule {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
     val corpus = e.filter(col("vec_id") =!= 0)
-    val n = corpus.count()
-    val m = corpus.filter(col("label") === 3).count()
-    val anchors = e.filter(col("vec_id") < 8)
-    probeIvfIndexBatch(spark, dir, anchors, nprobe = 4, k = 5,
-      tap = Some("ann_filtered_batch_scored"),
-      labelValue = Some(3), counts = Some((n, m)))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(e.filter(col("vec_id") < 8)), Ivf.TopK(5),
+      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_batch_scored"))
   }
 
   // ---- IVF-PQ: product-quantized postings ------------------------------
@@ -2656,25 +2649,25 @@ object Similarity extends QueryModule {
     }.toMap
   }
 
+  /** The ADC kernel: `base` plus one table lookup per sub-space code —
+    * M byte-indexed adds per posting instead of a Dim-float dot product.
+    */
+  private def adcSum(table: Array[Array[Double]], base: Double, code: Array[Byte]): Double = {
+    var s = base; var sub = 0
+    while (sub < code.length) { s += table(sub)(code(sub) & 0xFF); sub += 1 }
+    s
+  }
+
   private def adcResidualScoreUdf(table: Array[Array[Double]],
       dots: Map[Int, Double]) =
-    udf { (cell: Int, code: Array[Byte]) =>
-      var s = dots(cell); var sub = 0
-      while (sub < code.length) { s += table(sub)(code(sub) & 0xFF); sub += 1 }
-      s
-    }
+    udf { (cell: Int, code: Array[Byte]) => adcSum(table, dots(cell), code) }
 
   /** Residual-ADC approximate cosine of one coded posting — the spec's
     * unit handle on IVFADC quantization error.
     */
   private[graft] def adcApproxResidual(cb: PqCodebook, cents: Array[Array[Float]],
-      cell: Int, query: Array[Float], code: Array[Byte]): Double = {
-    val t = adcTable(cb, query)
-    var s = centDots(cents, Seq(cell), query)(cell)
-    var sub = 0
-    while (sub < code.length) { s += t(sub)(code(sub) & 0xFF); sub += 1 }
-    s
-  }
+      cell: Int, query: Array[Float], code: Array[Byte]): Double =
+    adcSum(adcTable(cb, query), centDots(cents, Seq(cell), query)(cell), code)
 
   /** Encode one vector: normalize, then per sub-space the nearest codebook
     * centroid's index. M bytes out.
@@ -2746,10 +2739,7 @@ object Similarity extends QueryModule {
           cdot += q(d).toDouble * cent(d)
           d += 1
         }
-        var adc = cdot; var sub = 0
-        val code = codes(i)
-        while (sub < code.length) { adc += table(sub)(code(sub) & 0xFF); sub += 1 }
-        val err = math.abs(adc - exact)
+        val err = math.abs(adcSum(table, cdot, codes(i)) - exact)
         if (err > worst) worst = err
         var l = 0
         while (l < AdcLadder.length) {
@@ -2770,111 +2760,8 @@ object Similarity extends QueryModule {
   /** ADC approximate cosine of one code against one query — the spec's
     * unit handle on quantization error.
     */
-  private[graft] def adcApprox(cb: PqCodebook, query: Array[Float], code: Array[Byte]): Double = {
-    val t = adcTable(cb, query)
-    var s = 0.0; var sub = 0
-    while (sub < code.length) { s += t(sub)(code(sub) & 0xFF); sub += 1 }
-    s
-  }
-
-  /** The in-memory IVF-PQ index: coarse cells carrying CODES, not
-    * vectors. `build` = one assignment+encode scan; each probe scores
-    * nprobe cells' codes via ADC and re-ranks a bounded short list with
-    * the exact kernel.
-    */
-  final case class IvfPqIndex(centroids: Array[Array[Float]], cb: PqCodebook,
-      codes: DataFrame)
-
-  /** Build with an explicit coarse quantizer (shared with q_ann_ivf so
-    * the two entries probe identical cells).
-    */
-  def ivfPqBuildWith(embeddings: DataFrame, centroids: Array[Array[Float]],
-      cb: PqCodebook): IvfPqIndex = {
-    val idx = ivfBuildWith(embeddings, centroids)
-    val codes = idx.cells
-      .select(col("vec_id"), col("cell"),
-        pqEncodeResidualUdf(cb, centroids)(col("embedding"), col("cell")).as("code"))
-      .persist()
-    IvfPqIndex(centroids, cb, codes)
-  }
-
-  def ivfPqBuild(embeddings: DataFrame): IvfPqIndex = {
-    val cents = seedCentroids(embeddings)
-    ivfPqBuildWith(embeddings, cents,
-      pqTrainResidual(seedCentroidsK(embeddings, PqSample), cents))
-  }
-
-  /** Probe: nearest-cell choice driver-side (like ivfProbe), ADC-score
-    * the probed cells' CODES (8 bytes/row scanned, no vector reads),
-    * keep the top k·refine by approximate cosine, then re-rank exactly.
-    * The re-rank reads full vectors for ≤ k·refine ids via an `isin`
-    * pushdown — bounded point lookups against the columnar corpus
-    * (row-group min/max stats prune the scan), never a second corpus
-    * pass.
-    */
-  def ivfPqProbe(index: IvfPqIndex, corpus: DataFrame, query: Array[Float],
-      nprobe: Int, k: Int, refine: Int = PqRefine,
-      tap: Option[String] = None): DataFrame = {
-    val probed: Seq[Int] = chooseCells(index.centroids, query, nprobe)
-    val table = adcTable(index.cb, query)
-    val dots = centDots(index.centroids, probed, query)
-    // Bounded collect: k·refine (id, cell) pairs — the candidate short
-    // list, same budget class as the centroid matrix.
-    val cand = index.codes
-      .filter(col("cell").isin(probed: _*))
-      .select(col("vec_id"), col("cell"),
-        adcResidualScoreUdf(table, dots)(col("cell"), col("code")).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(pqShortlist(k, refine, probed.length))
-      .collect().map(r => r.getLong(0) -> r.getInt(1))
-    val cellOf = cand.toMap
-    val cellUdf = udf { (id: Long) => cellOf(id) }
-    val scored = corpus
-      .filter(col("vec_id").isin(cand.map(_._1): _*))
-      .select(col("vec_id"), cellUdf(col("vec_id")).as("cell"),
-        round(cosineUdf(typedLit(query), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(corpus.sparkSession, n, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** ADC probe against the PERSISTED index: manifest-gated,
-    * partition-pruned (committed batch_ids × probed cell_ids) — and
-    * COLUMN-pruned: the candidate stage selects only (vec_id, cell_id,
-    * code), so parquet never materializes the 256-byte embedding column
-    * for scanned postings (8 bytes of code per row instead — the 32× IO
-    * cut that makes a 100 TB probe stream codes, not vectors). Full
-    * vectors are read once more for the ≤ k·refine short-list ids (same
-    * pruned partitions + an `isin` the row-group stats prune on), then
-    * exact-cosine re-ranked.
-    */
-  private[graft] def probeIvfPqIndex(spark: SparkSession, dir: String,
-      anchor: Array[Float], nprobe: Int, k: Int, refine: Int = PqRefine,
-      exclude: Option[Long] = None, tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val cb = readIvfCodebook(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val table = adcTable(cb, anchor)
-    val dots = centDots(centroids, probed, anchor)
-    val pruned = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probed: _*)))
-    val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
-    // Bounded collect: the k·refine-candidate short list (ids only).
-    val cand = base
-      .select(col("vec_id"), adcResidualScoreUdf(table, dots)(
-        col("cell_id").cast("int"), col("code")).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(pqShortlist(k, refine, probed.length))
-      .collect().map(_.getLong(0))
-    val scored = base
-      .filter(col("vec_id").isin(cand: _*))
-      .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
+  private[graft] def adcApprox(cb: PqCodebook, query: Array[Float], code: Array[Byte]): Double =
+    adcSum(adcTable(cb, query), 0.0, code)
 
   /** ADC approximation slack FLOOR for range pre-filtering: a true match
     * at exactly tau scores at least tau − margin under ADC, so the
@@ -2922,136 +2809,33 @@ object Similarity extends QueryModule {
     math.max(AdcRangeMargin, audited * AdcMarginHeadroom)
   }
 
-  /** Survivor-count ceiling for the driver-side isin path in
-    * [[rangeIvfPqIndex]]: under it, point pushdown; over it, the
+  /** Survivor-count ceiling for the driver-side isin path of an ADC
+    * range search ([[ivfQuery]]): under it, point pushdown; over it, the
     * distributed semi-join.
     */
   private[graft] val RangeIsinCap = 65536
 
-  /** ADC range search — faiss's IVFPQ `range_search` shape: the
-    * candidate scan reads CODES only (8 B/row — the same 32× IO cut as
-    * [[probeIvfPqIndex]]) and pre-filters at `tau - margin`, where the
-    * margin is [[adcMarginFor]] — derived from THIS index's build-time
-    * audited max ADC error, not a global constant; full vectors then
-    * load for the survivors (bounded by the result size plus the margin
-    * spillover — the same budget class as the returned result any range
-    * search materializes) and the EXACT cosine applies the declared
-    * tau. Every returned row is exactly-verified; completeness within
-    * probed cells holds for any match whose ADC error is under the
-    * margin (spec-pinned: the spec corpus' worst ADC error is well
-    * inside it, and the ADC range output is row-identical to the
-    * full-precision range). The audit is sampled, so the bound is
-    * empirical, not adversarial-proof: TAKEDOWN-GRADE completeness —
-    * "no true match may ever be missed" — should use the
-    * full-precision [[rangeIvfIndex]], which prunes by partition only
-    * and verifies every candidate exactly.
-    */
-  private[graft] def rangeIvfPqIndex(spark: SparkSession, dir: String,
-      anchor: Array[Float], nprobe: Int, tau: Double,
-      exclude: Option[Long] = None, tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val cb = readIvfCodebook(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val probed: Seq[Int] = chooseCells(centroids, anchor, nprobe)
-    val table = adcTable(cb, anchor)
-    val dots = centDots(centroids, probed, anchor)
-    val pruned = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probed: _*)))
-    val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
-    // Codes-only pre-filter. Survivor ids are usually bounded by
-    // |result| + margin spillover — a driver-side id list gives the
-    // second scan row-group point pushdown, like the ADC top-k's
-    // shortlist. But the spillover is data-sized at LOW tau, so the
-    // collect is capped: past the cap, fall back to a distributed
-    // semi-join (survivors broadcast when small, shuffled when not) —
-    // never a driver list that scales with the cell population.
-    val passed = base
-      .select(col("vec_id"), adcResidualScoreUdf(table, dots)(
-        col("cell_id").cast("int"), col("code")).as("adc"))
-      .filter(col("adc") >= lit(tau - adcMarginFor(manifest, tau)))
-      .select(col("vec_id"))
-    val headIds = passed.limit(RangeIsinCap + 1).collect().map(_.getLong(0))
-    val candidates =
-      if (headIds.length <= RangeIsinCap) base.filter(col("vec_id").isin(headIds: _*))
-      else base.join(passed, Seq("vec_id"), "left_semi")
-    val scored = candidates
-      .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored))
-      .filter(col("cos_sim") >= tau)
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-  }
-
   private def annRangePq(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val anchor = embeddingsStats(spark, sfDir)._2
-    rangeIvfPqIndex(spark, dir, anchor, nprobe = 8, tau = 0.25,
-      exclude = Some(0L), tap = Some("ann_range_pq_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.Range(0.25),
+      nprobe = 8, scorer = Ivf.Adc(), tap = Some("ann_range_pq_scored"))
   }
 
-  /** Filtered ADC probe — the last corner of the retrieval matrix
-    * (single/batch × full-precision/ADC × filtered/unfiltered), and the
-    * shape a production filtered-RAG probe actually runs at 100 TB:
-    * metadata predicate + CODES-ONLY candidate scan. Cost model is
-    * [[probeIvfIndexFiltered]]'s (measured selectivity picks exact brute
-    * force vs 1/s-widened probe); the broad branch composes all three
-    * prunes — partition (committed batches × probed cells), predicate
-    * (label inside pruned cells, row-group stats + dictionary), and
-    * COLUMN (candidates select vec_id+code: 8 bytes per surviving
-    * posting) — then ADC-shortlists and exact-cosine re-ranks the
-    * ≤ k·refine ids like [[probeIvfPqIndex]].
+  /** Filtered ADC probe — the filtered × ADC corner of the retrieval
+    * matrix, and the shape a production filtered-RAG probe runs at
+    * 100 TB: the selective cutover as for the full-precision filtered
+    * probe, else all three prunes — partition, label predicate, and
+    * column (the candidate scan reads vec_id + code) — then the ADC
+    * shortlist and exact re-rank.
     */
-  private[graft] def probeIvfPqIndexFiltered(spark: SparkSession, dir: String,
-      anchor: Array[Float], labelValue: Int, n: Long, m: Long,
-      nprobe: Int, k: Int, refine: Int = PqRefine, exclude: Option[Long] = None,
-      tap: Option[String] = None): DataFrame = {
-    val manifest = readIvfManifest(dir)
-    val postings = IvfStore.live(spark, dir, manifest.core)
-    val scored =
-      if (m <= FilteredBruteFactor * k) {
-        // Selective: exact top-k over the filtered subset — identical to
-        // the full-precision filtered probe's branch (ADC buys nothing
-        // when m rows fit one TakeOrderedAndProject).
-        val base = postings.filter(col("label") === labelValue)
-        exclude.fold(base)(id => base.filter(col("vec_id") =!= id))
-          .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-            round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-      } else {
-        val centroids = readIvfCentroids(spark, dir)
-        val cb = readIvfCodebook(spark, dir)
-        val np = widenedNprobe(nprobe, n, m, centroids.length)
-        val probed: Seq[Int] = chooseCells(centroids, anchor, np)
-        val table = adcTable(cb, anchor)
-        val dots = centDots(centroids, probed, anchor)
-        val pruned = postings.where(col("cell_id").isin(probed: _*))
-          .filter(col("label") === labelValue)
-        val base = exclude.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
-        // Bounded collect: the k·refine shortlist ids (codes-only scan).
-        val cand = base
-          .select(col("vec_id"), adcResidualScoreUdf(table, dots)(
-            col("cell_id").cast("int"), col("code")).as("adc"))
-          .orderBy(col("adc").desc, col("vec_id"))
-          .limit(pqShortlist(k, refine, np))
-          .collect().map(_.getLong(0))
-        base.filter(col("vec_id").isin(cand: _*))
-          .select(col("vec_id"), col("cell_id").cast("int").as("cell"),
-            round(cosineUdf(typedLit(anchor), col("embedding")), 4).as("cos_sim"))
-      }
-    tap.fold(scored)(nm => OracleTap(spark, nm, scored))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
   private def annFilteredPq(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
     val corpus = e.filter(col("vec_id") =!= 0)
-    val n = corpus.count()
-    val m = corpus.filter(col("label") === 3).count()
-    probeIvfPqIndexFiltered(spark, dir, anchor, labelValue = 3, n = n, m = m,
-      nprobe = 4, k = 10, exclude = Some(0L), tap = Some("ann_filtered_pq_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), scorer = Ivf.Adc(),
+      tap = Some("ann_filtered_pq_scored"))
   }
 
   /** q_ann_ivfpq_probe: the persisted twin of q_ann_ivfpq, probing the
@@ -3062,104 +2846,15 @@ object Similarity extends QueryModule {
   private def annIvfPqProbe(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    probeIvfPqIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L),
-      tap = Some("ann_ivfpq_probe_scored"))
-  }
-
-  /** Batched ADC retrieval — the PQ twin of [[probeIvfIndexBatch]],
-    * completing the retrieval matrix (single/batch × full-precision/ADC).
-    * Q anchors resolve in ONE job:
-    *
-    *  1. Per-anchor ADC lookup tables are built driver-side and ride in
-    *     the scoring closure — Q·M·Ks doubles (~1 KB per anchor; 1 MB at
-    *     Q=1000), the same bounded-broadcast budget class as the centroid
-    *     matrix. Computing tables once per anchor is the entire point of
-    *     ADC: scoring is then M byte-indexed adds per posting, not a
-    *     Dim-float dot product.
-    *  2. Executor-side per-anchor cell choice, union-of-cells static
-    *     partition pruning, broadcast of the (anchor × cell) table —
-    *     identical to the full-precision batch probe — but the candidate
-    *     scan selects only (vec_id, cell_id, code): 8 bytes per posting
-    *     streamed.
-    *  3. Per-anchor ADC top-(k·refine) via a row_number window
-    *     (WindowGroupLimit — bounded Q·k·refine candidate rows).
-    *  4. Exact re-rank: the shortlist (which still carries q_emb)
-    *     broadcasts back onto the pruned postings' full vectors on
-    *     (cell_id, vec_id); exact cosine, per-anchor top-k.
-    *
-    * Candidate-scan IO is Q·nprobe·(n/C) CODE rows (8 B each); vector
-    * bytes are read only for the Q·k·refine shortlist. Per-anchor output
-    * is row-identical to [[probeIvfPqIndex]] run per anchor
-    * (SimilaritySpec pins it).
-    */
-  private[graft] def probeIvfPqIndexBatch(spark: SparkSession, dir: String,
-      anchors: DataFrame, nprobe: Int, k: Int, refine: Int = PqRefine,
-      tap: Option[String] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, dir)
-    val cb = readIvfCodebook(spark, dir)
-    val manifest = readIvfManifest(dir)
-    val np = math.min(nprobe, centroids.length)
-    val coarseIdx =
-      if (centroids.length >= CoarseScanLimit) Some(coarseIndexFor(centroids)) else None
-    val topCellsUdf = udf { (emb: Array[Float]) =>
-      chooseCells(centroids, emb, np, coarseIdx).toArray
-    }
-    // Driver-side per-anchor ADC tables + per-anchor probed-cell dot
-    // constants (bounded: Q anchors × 1 KB tables, Q × nprobe doubles).
-    val anchorRows = anchors
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val collected = anchorRows.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val tables: Map[Long, Array[Array[Double]]] =
-      collected.map { case (id, q) => id -> adcTable(cb, q) }.toMap
-    val dots: Map[Long, Map[Int, Double]] =
-      collected.map { case (id, q) =>
-        id -> centDots(centroids, chooseCells(centroids, q, np, coarseIdx), q)
-      }.toMap
-    val adcBatchUdf = udf { (qid: Long, cell: Int, code: Array[Byte]) =>
-      val t = tables(qid)
-      var s = dots(qid)(cell); var sub = 0
-      while (sub < code.length) { s += t(sub)(code(sub) & 0xFF); sub += 1 }
-      s
-    }
-    val anchorCells = anchorRows
-      .withColumn("cell_id", explode(topCellsUdf(col("q_emb"))))
-    val probedCells: Seq[Int] = anchorCells.select(col("cell_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val postings = IvfStore.live(spark, dir, manifest.core,
-      Some(col("cell_id").isin(probedCells: _*)))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    // Candidate stage: codes only — parquet column pruning never touches
-    // the embedding column here.
-    val shortlist = postings.select(col("vec_id"), col("cell_id"), col("code"))
-      .join(broadcast(anchorCells), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("q_emb"), col("vec_id"), col("cell_id"),
-        adcBatchUdf(col("query_id"), col("cell_id").cast("int"), col("code")).as("adc"))
-      .withColumn("arnk", row_number().over(wAdc))
-      .filter(col("arnk") <= pqShortlist(k, refine, np))
-      .drop("adc", "arnk")
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val scored = postings.select(col("vec_id"), col("cell_id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("cell_id", "vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        col("cell_id").cast("int").as("cell"),
-        round(cosineUdf(col("q_emb"), col("embedding")), 4).as("cos_sim"))
-    tap.fold(scored)(n => OracleTap(spark, n, scored))
-      .withColumn("rnk", row_number().over(wExact).cast(LongType))
-      .filter(col("rnk") <= k)
-      .orderBy(col("query_id"), col("rnk"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
+      nprobe = 4, scorer = Ivf.Adc(), tap = Some("ann_ivfpq_probe_scored"))
   }
 
   private def annIvfPqBatch(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureIvfIndex(spark, sfDir)
     val anchors = Tables(spark, sfDir, "embeddings").filter(col("vec_id") < 8)
-    probeIvfPqIndexBatch(spark, dir, anchors, nprobe = 4, k = 5,
-      tap = Some("ann_ivfpq_batch_scored"))
+    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
+      scorer = Ivf.Adc(), tap = Some("ann_ivfpq_batch_scored"))
   }
 
   private def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
@@ -3169,12 +2864,8 @@ object Similarity extends QueryModule {
     // neighbors survive ADC's k·refine cut — SimilaritySpec pins planted
     // recall and the registry-level equivalence on the fixture.
     val e = Tables(spark, sfDir, "embeddings")
-    val anchor = e.filter(col("vec_id") === 0)
-      .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    val corpus = e.filter(col("vec_id") =!= 0)
-    val index = ivfPqBuild(corpus)
-    ivfPqProbe(index, corpus, anchor, nprobe = 4, k = 10,
-      tap = Some("ann_ivfpq_scored"))
+    ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0)), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10),
+      nprobe = 4, scorer = Ivf.Adc(), tap = Some("ann_ivfpq_scored"))
   }
 
   // ---- SimHash near-dup over documents --------------------------------
@@ -3279,35 +2970,48 @@ object Similarity extends QueryModule {
       .limit(10)
   }
 
-  /** Shared partial-oracle scaffolding for the single-anchor ANN entries
-    * (VERDICT r8 #6's tap pattern extended to the ANN family): the tapped
-    * candidate set's (vec_id, cell) is re-scored from scratch in DuckDB —
-    * cosine against the anchor (vec 0) from the embeddings table, rank,
-    * top-k. Only the seeded/quantized candidate GENERATION stays outside
-    * the oracle; scoring, ranking, and the k-cut are hash-matched.
+  /** The partial oracle of every IVF entry (VERDICT r8 #6's tap pattern
+    * extended to the ANN family), generated from the same choices the
+    * entry's [[ivfQuery]] makes: single or batch anchors, `TopK` or
+    * `Range`, and an optional label predicate. The tapped candidates'
+    * (query_id, vec_id, cell) are re-scored from scratch in DuckDB —
+    * cosine against the anchor row from the embeddings table (vec 0 for
+    * a single anchor) — then cut by rank or threshold. Only the
+    * seeded/quantized candidate GENERATION stays outside the oracle;
+    * scoring, ranking and the cut are hash-matched. With a label, each
+    * candidate is also re-verified against the predicate, so an
+    * out-of-predicate row the engine let through hash-mismatches instead
+    * of just re-ranking.
     */
-  /** The filtered twin of [[annScoredOracle]]: candidates are re-scored
-    * independently AND re-verified against the label predicate — an
-    * out-of-predicate candidate is dropped (row/hash mismatch), not just
-    * re-ranked.
-    */
-  private def annFilteredOracle(tapName: String, k: Int): String = s"""
-      WITH cand AS (SELECT vec_id, cell
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      anchor AS (SELECT embedding AS ae FROM embeddings WHERE vec_id = 0),
-      ok AS (SELECT c.vec_id, c.cell FROM cand c
-             JOIN embeddings e ON e.vec_id = c.vec_id AND e.label = 3),
+  private def annOracle(tapName: String, result: Ivf.Result, batch: Boolean = false,
+      label: Option[Int] = None): String = {
+    val query = if (batch) "query_id" else "0 AS query_id"
+    val verify = label.fold("")(v => s"\n               JOIN embeddings l ON l.vec_id = c.vec_id AND l.label = $v")
+    val cols = (if (batch) "query_id, " else "") + "vec_id, cell, cos_sim"
+    val (keep, rank) = result match {
+      case Ivf.TopK(k) => (s"rnk <= $k", if (batch) ", rnk" else "")
+      case Ivf.Range(tau) => (s"cos_sim >= $tau", "")
+    }
+    s"""
+      WITH cand AS (SELECT c.* FROM (SELECT $query, vec_id, cell
+                    FROM read_parquet('${OracleTap.Root}/$tapName/*.parquet')) c$verify),
       terms AS (
-        SELECT c.vec_id, c.cell,
-               CAST(e.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(a.ae[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM ok c JOIN embeddings e ON e.vec_id = c.vec_id, anchor a,
+        SELECT c.query_id, c.vec_id, c.cell,
+               CAST(ev.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
+               CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS y
+        FROM cand c JOIN embeddings ev ON ev.vec_id = c.vec_id
+                    JOIN embeddings eq ON eq.vec_id = c.query_id,
              range(1, 65) t(i)),
-      sims AS (SELECT vec_id, cell,
+      sims AS (SELECT query_id, vec_id, cell,
                       sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY vec_id, cell)
-      SELECT vec_id, cell, round(c, 4) + 0 AS cos_sim FROM sims
-      ORDER BY round(c, 4) DESC, vec_id LIMIT $k"""
+               FROM terms GROUP BY query_id, vec_id, cell),
+      ranked AS (SELECT query_id, vec_id, cell, round(c, 4) + 0 AS cos_sim,
+                        row_number() OVER (PARTITION BY query_id
+                                           ORDER BY round(c, 4) DESC, vec_id) AS rnk
+                 FROM sims)
+      SELECT $cols$rank FROM ranked
+      WHERE $keep ORDER BY query_id, rnk"""
+  }
 
   /** The shared semdedup dominance oracle over a (vec_id, cell,
     * is_batch) tap: DuckDB re-derives the ENTIRE incremental dominance
@@ -3337,123 +3041,16 @@ object Similarity extends QueryModule {
       WHERE tb.is_batch
       ORDER BY tb.vec_id"""
 
-  /** Range-search twin of [[annScoredOracle]]: same independent cosine
-    * recomputation over the tapped candidates, but the acceptance leg is
-    * the threshold predicate, not a rank limit — DuckDB re-derives the
-    * ENTIRE declared output (membership and order) from the tap.
-    */
-  private def annRangeOracle(tapName: String, tau: Double): String = s"""
-      WITH cand AS (SELECT vec_id, cell
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      anchor AS (SELECT embedding AS ae FROM embeddings WHERE vec_id = 0),
-      terms AS (
-        SELECT c.vec_id, c.cell,
-               CAST(e.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(a.ae[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id, anchor a,
-             range(1, 65) t(i)),
-      sims AS (SELECT vec_id, cell,
-                      sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY vec_id, cell)
-      SELECT vec_id, cell, round(c, 4) + 0 AS cos_sim FROM sims
-      WHERE round(c, 4) >= $tau
-      ORDER BY round(c, 4) DESC, vec_id"""
-
-  /** Batched range twin of [[annRangeOracle]]: per-anchor independent
-    * re-scoring of the tapped candidates, threshold predicate, total
-    * order — the ENTIRE declared output re-derived by DuckDB.
-    */
-  private def annRangeBatchOracle(tapName: String, tau: Double): String = s"""
-      WITH cand AS (SELECT query_id, vec_id, cell
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      terms AS (
-        SELECT c.query_id, c.vec_id, c.cell,
-               CAST(ev.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM cand c JOIN embeddings ev ON ev.vec_id = c.vec_id
-                    JOIN embeddings eq ON eq.vec_id = c.query_id,
-             range(1, 65) t(i)),
-      sims AS (SELECT query_id, vec_id, cell,
-                      sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY query_id, vec_id, cell)
-      SELECT query_id, vec_id, cell, round(c, 4) + 0 AS cos_sim FROM sims
-      WHERE round(c, 4) >= $tau
-      ORDER BY query_id, round(c, 4) DESC, vec_id"""
-
-  private def annScoredOracle(tapName: String, k: Int): String = s"""
-      WITH cand AS (SELECT vec_id, cell
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      anchor AS (SELECT embedding AS ae FROM embeddings WHERE vec_id = 0),
-      terms AS (
-        SELECT c.vec_id, c.cell,
-               CAST(e.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(a.ae[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id, anchor a,
-             range(1, 65) t(i)),
-      sims AS (SELECT vec_id, cell,
-                      sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY vec_id, cell)
-      SELECT vec_id, cell, round(c, 4) + 0 AS cos_sim FROM sims
-      ORDER BY round(c, 4) DESC, vec_id LIMIT $k"""
-
-  /** Batched + filtered: per-anchor re-score + re-rank, with candidates
-    * re-VERIFIED against the predicate like [[annFilteredOracle]].
-    */
-  private def annFilteredBatchOracle(tapName: String, k: Int): String = s"""
-      WITH cand0 AS (SELECT query_id, vec_id, cell
-                     FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      cand AS (SELECT c.query_id, c.vec_id, c.cell FROM cand0 c
-               JOIN embeddings e ON e.vec_id = c.vec_id AND e.label = 3),
-      terms AS (
-        SELECT c.query_id, c.vec_id, c.cell,
-               CAST(ev.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM cand c JOIN embeddings ev ON ev.vec_id = c.vec_id
-                    JOIN embeddings eq ON eq.vec_id = c.query_id,
-             range(1, 65) t(i)),
-      sims AS (SELECT query_id, vec_id, cell,
-                      sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY query_id, vec_id, cell),
-      ranked AS (SELECT query_id, vec_id, cell, round(c, 4) + 0 AS cos_sim,
-                        row_number() OVER (PARTITION BY query_id
-                                           ORDER BY round(c, 4) DESC, vec_id) AS rnk
-                 FROM sims)
-      SELECT query_id, vec_id, cell, cos_sim, rnk FROM ranked
-      WHERE rnk <= $k ORDER BY query_id, rnk"""
-
-  /** The batched twin: per-anchor re-score + row_number ≤ k from the
-    * tapped (query_id, vec_id, cell) candidates.
-    */
-  private def annBatchScoredOracle(tapName: String, k: Int): String = s"""
-      WITH cand AS (SELECT query_id, vec_id, cell
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
-      terms AS (
-        SELECT c.query_id, c.vec_id, c.cell,
-               CAST(ev.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
-               CAST(eq.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS y
-        FROM cand c JOIN embeddings ev ON ev.vec_id = c.vec_id
-                    JOIN embeddings eq ON eq.vec_id = c.query_id,
-             range(1, 65) t(i)),
-      sims AS (SELECT query_id, vec_id, cell,
-                      sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
-               FROM terms GROUP BY query_id, vec_id, cell),
-      ranked AS (SELECT query_id, vec_id, cell, round(c, 4) + 0 AS cos_sim,
-                        row_number() OVER (PARTITION BY query_id
-                                           ORDER BY round(c, 4) DESC, vec_id) AS rnk
-                 FROM sims)
-      SELECT query_id, vec_id, cell, cos_sim, rnk FROM ranked
-      WHERE rnk <= $k ORDER BY query_id, rnk"""
-
   override val defs: Map[String, QueryDef] = Map(
-    "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annScoredOracle("ann_ivf_probe_scored", 10))),
-    "q_ann_range" -> QueryDef(annRange, Some(annRangeOracle("ann_range_scored", 0.25))),
-    "q_ann_ivf_rebuild" -> QueryDef(annIvfRebuild, Some(annScoredOracle("ann_ivf_rebuild_scored", 10))),
-    "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annRangeBatchOracle("ann_range_batch_scored", 0.25))),
-    "q_ann_range_pq" -> QueryDef(annRangePq, Some(annRangeOracle("ann_range_pq_scored", 0.25))),
-    "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annBatchScoredOracle("ann_ivf_batch_scored", 5))),
-    "q_ann_ivfpq" -> QueryDef(annIvfPq, Some(annScoredOracle("ann_ivfpq_scored", 10))),
-    "q_ann_ivfpq_probe" -> QueryDef(annIvfPqProbe, Some(annScoredOracle("ann_ivfpq_probe_scored", 10))),
-    "q_ann_ivfpq_batch" -> QueryDef(annIvfPqBatch, Some(annBatchScoredOracle("ann_ivfpq_batch_scored", 5))),
+    "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annOracle("ann_ivf_probe_scored", Ivf.TopK(10)))),
+    "q_ann_range" -> QueryDef(annRange, Some(annOracle("ann_range_scored", Ivf.Range(0.25)))),
+    "q_ann_ivf_rebuild" -> QueryDef(annIvfRebuild, Some(annOracle("ann_ivf_rebuild_scored", Ivf.TopK(10)))),
+    "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annOracle("ann_range_batch_scored", Ivf.Range(0.25), batch = true))),
+    "q_ann_range_pq" -> QueryDef(annRangePq, Some(annOracle("ann_range_pq_scored", Ivf.Range(0.25)))),
+    "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annOracle("ann_ivf_batch_scored", Ivf.TopK(5), batch = true))),
+    "q_ann_ivfpq" -> QueryDef(annIvfPq, Some(annOracle("ann_ivfpq_scored", Ivf.TopK(10)))),
+    "q_ann_ivfpq_probe" -> QueryDef(annIvfPqProbe, Some(annOracle("ann_ivfpq_probe_scored", Ivf.TopK(10)))),
+    "q_ann_ivfpq_batch" -> QueryDef(annIvfPqBatch, Some(annOracle("ann_ivfpq_batch_scored", Ivf.TopK(5), batch = true))),
     "q_hybrid_rank" -> QueryDef(hybridRank, Some("""
       WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
@@ -3659,33 +3256,33 @@ object Similarity extends QueryModule {
                FROM terms GROUP BY vec_a, vec_b)
       SELECT vec_a, vec_b, round(c, 4) + 0 AS cos_sim FROM sims
       ORDER BY round(c, 4) DESC, vec_a, vec_b LIMIT 20""")),
-    "q_ann_ivf" -> QueryDef(annIvf, Some(annScoredOracle("ann_ivf_scored", 10))),
+    "q_ann_ivf" -> QueryDef(annIvf, Some(annOracle("ann_ivf_scored", Ivf.TopK(10)))),
     // Partial oracle: tapped scored candidates, re-scored independently —
     // and additionally VERIFIED against the predicate (the join keeps
     // only label-3 candidates, so an out-of-predicate row the engine let
     // into its top-k would hash-mismatch, not just re-rank).
     "q_ann_filtered" -> QueryDef(annFiltered,
-      Some(annFilteredOracle("ann_filtered_scored", 10))),
+      Some(annOracle("ann_filtered_scored", Ivf.TopK(10), label = Some(3)))),
     "q_ann_filtered_probe" -> QueryDef(annFilteredProbe,
-      Some(annFilteredOracle("ann_filtered_probe_scored", 10))),
+      Some(annOracle("ann_filtered_probe_scored", Ivf.TopK(10), label = Some(3)))),
     // Label-verifying oracle like the other filtered taps: DuckDB drops
     // any candidate whose label fails the predicate before re-scoring,
     // so a filter that leaked would hash-mismatch.
     "q_ann_filtered_pq" -> QueryDef(annFilteredPq,
-      Some(annFilteredOracle("ann_filtered_pq_scored", 10))),
+      Some(annOracle("ann_filtered_pq_scored", Ivf.TopK(10), label = Some(3)))),
     "q_ann_filtered_batch" -> QueryDef(annFilteredBatch,
-      Some(annFilteredBatchOracle("ann_filtered_batch_scored", 5))),
+      Some(annOracle("ann_filtered_batch_scored", Ivf.TopK(5), batch = true, label = Some(3)))),
     // Streaming ingest into the persisted ANN index; the probe's scored
     // candidates are tapped, so the oracle independently re-scores them —
     // including the rows that arrived THROUGH the stream.
-    "s_ann_ingest" -> QueryDef(annIngest, Some(annScoredOracle("s_ann_ingest_scored", 10))),
+    "s_ann_ingest" -> QueryDef(annIngest, Some(annOracle("s_ann_ingest_scored", Ivf.TopK(10)))),
     "q_ann_ivf_compact" -> QueryDef(annIvfCompact,
-      Some(annScoredOracle("ann_ivf_compact_scored", 10))),
+      Some(annOracle("ann_ivf_compact_scored", Ivf.TopK(10)))),
     // Partial oracle: the post-delete scored candidates are tapped;
     // DuckDB re-scores + re-ranks them independently. The tombstoned
     // ids' invisibility (pre- AND post-compaction) is spec-pinned.
     "q_ann_ivf_delete" -> QueryDef(annIvfDelete,
-      Some(annScoredOracle("ann_ivf_delete_scored", 10))),
+      Some(annOracle("ann_ivf_delete_scored", Ivf.TopK(10)))),
     // Partial oracle: the tapped per-iteration centroid matrices are the
     // declared boundary (the Lloyd update has no SQL twin); the
     // convergence trace itself — per-vector best-assignment cosine,

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.core.{QueryDef, QueryModule, Tables}
 
@@ -573,8 +574,13 @@ object Graph extends QueryModule {
     }
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl")).localCheckpoint(true)
-    var prev = Long.MinValue
-    var cur = labels.agg(sum(col("lbl"))).head().getLong(0)
+    // Labels only fall, so an unchanged label sum means no label changed.
+    // The sum is decimal: a bigint sum of ids past 2^63 throws under
+    // Spark 4's ANSI default.
+    def labelSum(l: DataFrame): java.math.BigDecimal =
+      l.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head().getDecimal(0)
+    var prev: java.math.BigDecimal = null
+    var cur = labelSum(labels)
     var rounds = 0
     while (cur != prev && rounds < maxRounds) {
       // One checkpointed step per round. (A paired variant — two lazy
@@ -584,7 +590,7 @@ object Graph extends QueryModule {
       // races/lock waits cost more than the action floor it saves.)
       labels = step(labels).localCheckpoint(true)
       prev = cur
-      cur = labels.agg(sum(col("lbl"))).head().getLong(0)
+      cur = labelSum(labels)
       rounds += 1
     }
     // No silent cap: with pointer jumping, maxRounds=64 covers any

@@ -159,4 +159,63 @@ class CdcSpec extends AnyFunSuite with SparkTest {
       .select(Cdc.eventTimeDt(col("es")).as("dt")).as[String].collect().head
     assert(edge.matches("\\+?\\d+"), edge)
   }
+
+  // ---- one parse per envelope -------------------------------------------
+  // parseEnvelope is a generator so that ddlFilter's isDdl test and the
+  // filter InferFiltersFromGenerate adds for flatten's explode are not
+  // pushed below it as extra from_json calls. Inputs come from text files:
+  // a Seq.toDF input is folded by ConvertToLocalRelation and never reaches
+  // the optimized, code-generated plan the pipeline runs.
+
+  private val steadyCols = Seq("id", "city", "province", "event_time")
+
+  private def steady(parsed: org.apache.spark.sql.DataFrame) =
+    Cdc.flatten(Cdc.ddlFilter(parsed), steadyCols).withColumn("dt", Cdc.eventTimeDt(col("es")))
+
+  private def textTopic(lines: Seq[String]): String = {
+    val dir = graft.core.TempDirs.create("graft_cdc_parse")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-0.txt"),
+      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    dir
+  }
+
+  test("parseEnvelope equals the plain from_json projection, alone, DDL-filtered and through the steady pipeline") {
+    def reference(raw: org.apache.spark.sql.DataFrame) =
+      raw.select(from_json(col("value"), Cdc.canalSchema).as("env")).select("env.*")
+    def bag(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    val handBuilt = Seq(EnvelopeFuzz.valid) ++
+      Seq(update, ddl, delete, nullPayload).map(_.replace("\n", " "))
+    val inputs = (1L to 10L).map(EnvelopeFuzz.corpus) :+ handBuilt
+    val diffs = inputs.zipWithIndex.flatMap { case (lines, i) =>
+      val raw = spark.read.text(textTopic(lines))
+      val ref = reference(raw).collect().toSeq
+      // The DDL step's reference is ddlFilter's definition applied to the
+      // reference rows: `ddlFilter(reference(raw))` is no reference, since
+      // Catalyst pushes its filter below the projection as a second,
+      // schema-pruned from_json, which reads no isDdl from an envelope
+      // truncated inside `data` that the full parse reads as "false".
+      Seq(
+        ("parse", Cdc.parseEnvelope(raw).collect().toSeq, ref),
+        ("ddl", Cdc.ddlFilter(Cdc.parseEnvelope(raw)).collect().toSeq,
+          ref.filter(_.getAs[String]("isDdl") == "false")),
+        ("steady", steady(Cdc.parseEnvelope(raw)).collect().toSeq,
+          steady(reference(raw)).collect().toSeq))
+        .collect { case (step, got, want) if bag(got) != bag(want) =>
+          s"input $i, step $step:\n  got:  ${bag(got)}\n  want: ${bag(want)}" }
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+    // Non-vacuity: the hand-built set reaches the end of the pipeline.
+    assert(steady(Cdc.parseEnvelope(spark.read.text(textTopic(handBuilt)))).count() == 4)
+  }
+
+  test("the steady pipeline parses each envelope once, over a file and a stream source") {
+    def parses(df: org.apache.spark.sql.DataFrame): Int =
+      spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+        .collect { case n => n.expressions.map(_.collect {
+          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j }.size).sum }
+        .sum
+    val dir = textTopic(Seq(EnvelopeFuzz.valid))
+    assert(parses(steady(Cdc.parseEnvelope(spark.read.text(dir)))) == 1)
+    assert(parses(steady(Cdc.parseEnvelope(spark.readStream.text(dir)))) == 1)
+  }
 }

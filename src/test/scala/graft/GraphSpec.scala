@@ -161,6 +161,17 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     assert(rounds <= 16, s"pointer jumping should need ~log2(199)+slack rounds, took $rounds")
   }
 
+  test("ccOn: ids near 2^62 converge without overflow, in the same rounds as small ids") {
+    // Two 2-node components from 2^62: the label sum passes 2^63, which a
+    // bigint convergence sum cannot hold under ANSI.
+    val small = Seq((0L, 1L), (2L, 3L))
+    val base = 1L << 62
+    val (smallLabels, smallRounds) = ccRun(small)
+    val (got, rounds) = ccRun(small.map { case (a, b) => (base + a, base + b) })
+    assert(got == smallLabels.map { case (n, l) => (base + n, base + l) })
+    assert(rounds == smallRounds)
+  }
+
   test("q_graph_cc histogram matches an independent union-find of the sparse fixture subgraph") {
     import spark.implicits._
     val base = 1000000L

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ext.Similarity.Ivf
+
 /** Physical-plan assertions — the properties that decide 100 TB behavior,
   * pinned so a refactor cannot silently regress them:
   * filter/projection pushdown into the parquet scan, broadcast of dim
@@ -487,7 +489,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     val anchor = e.filter(col("vec_id") === 0)
       .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
     val p = graft.ext.Similarity
-      .probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 10, exclude = Some(0L))
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(0L)), Ivf.TopK(10), nprobe = 4)
       .queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("cell_id") && pf.contains("IN"), p)
@@ -506,7 +508,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     val dir = graft.ext.Similarity.ensureIvfIndex(spark, sf)
     val anchors = graft.core.Tables(spark, sf, "embeddings").filter(col("vec_id") < 8)
     val p = graft.ext.Similarity
-      .probeIvfIndexBatch(spark, dir, anchors, nprobe = 4, k = 5)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4)
       .queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("cell_id") && pf.contains("IN"), p)
@@ -524,7 +526,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     val dir = graft.ext.Similarity.ensureIvfIndex(spark, sf)
     val anchors = graft.core.Tables(spark, sf, "embeddings").filter(col("vec_id") < 8)
     val p = graft.ext.Similarity
-      .probeIvfPqIndexBatch(spark, dir, anchors, nprobe = 4, k = 5)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
+        scorer = Ivf.Adc())
       .queryExecution.executedPlan.toString
     val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
     val codeScans = scans.filter(_.contains("code"))

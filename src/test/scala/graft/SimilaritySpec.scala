@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Similarity
+import graft.ext.Similarity.Ivf
 
 /** ANN LSH quality gate: on a corpus with PLANTED near-duplicate vectors
   * the banded multi-probe pipeline must recover (nearly) all of them —
@@ -132,10 +133,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // when quantization puts the pair in different cells AND nprobe
     // misses the twin cell — near-identical vectors almost always share a
     // nearest centroid.
-    val index = graft.ext.Similarity.ivfBuild(df)
+    val index = Ivf.Frame(df)
     val found = (0 until NPlanted).count { i =>
-      val hits = graft.ext.Similarity
-        .ivfProbe(index, lookup(1000L + i), nprobe = 4, k = 3)
+      val hits = Similarity
+        .ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4)
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
     }
@@ -157,9 +158,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(hist.last > hist.head + 0.01, s"no measurable improvement: $hist")
     // The refined index must still find every planted near-duplicate.
     val lookup = corpus.toMap
-    val index = Similarity.ivfBuildWith(df, refined)
+    val index = Ivf.Frame(df, Some(refined))
     val found = (0 until NPlanted).count { i =>
-      val hits = Similarity.ivfProbe(index, lookup(1000L + i), nprobe = 4, k = 3)
+      val hits = Similarity.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4)
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
     }
@@ -203,9 +204,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val labeled = corpus.map { case (id, emb) => (id, emb, (id % 10).toInt) }
     val df = labeled.toDF("vec_id", "embedding", "label")
     val anchor = corpus.head._2 // vec 0
+    val rest = df.filter(col("vec_id") =!= 0)
     val got = Similarity
-      .annFilteredSearch(df.filter(col("vec_id") =!= 0), anchor,
-        labelValue = 3, nprobe = 4, k = 10)
+      .ivfQuery(Ivf.Frame(rest), Ivf.Anchor(anchor), Ivf.TopK(10), nprobe = 4,
+        filter = Some(Ivf.Label.of(rest, 3)))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val truth = labeled
       .filter { case (id, _, l) => l == 3 && id != 0L }
@@ -216,7 +218,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // Every returned row satisfies the predicate by construction of the
     // ground truth — and the exact branch marks cell = -1 (no quantizer).
     assert(Similarity
-      .annFilteredSearch(df.filter(col("vec_id") =!= 0), anchor, 3, 4, 10)
+      .ivfQuery(Ivf.Frame(rest), Ivf.Anchor(anchor), Ivf.TopK(10), 4,
+        filter = Some(Ivf.Label.of(rest, 3)))
       .collect().forall(_.getInt(1) == -1))
   }
 
@@ -235,7 +238,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     var found = 0
     evens.foreach { i =>
       val rows = Similarity
-        .annFilteredSearch(df, lookup(1000L + i), labelValue = 3, nprobe = 4, k = 3)
+        .ivfQuery(Ivf.Frame(df), Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4,
+          filter = Some(Ivf.Label.of(df, 3)))
         .collect()
       // Predicate totality: nothing outside label 3 may appear (labels
       // here are even ids — 1000+i keeps the parity of i).
@@ -286,8 +290,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val cents = spark.read.parquet(s"$dir/centroids").orderBy("cell_id").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     val mem = Similarity
-      .ivfProbe(Similarity.ivfBuildWith(e.filter(col("vec_id") =!= 0), cents),
-        anchor, nprobe = 4, k = 10)
+      .ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0), Some(cents)),
+        Ivf.Anchor(anchor), Ivf.TopK(10), nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(got.nonEmpty && got == mem,
       s"persisted probe diverged from in-memory probe:\n  persisted: $got\n  in-memory: $mem")
@@ -313,8 +317,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // rounds HALF_UP to 4 dp; the twin must too).
     def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     val tau = 0.25
-    val got = Similarity.rangeIvfIndex(spark, dir, anchor, nprobe = cents,
-        tau = tau, exclude = Some(3L))
+    val got = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
+        Ivf.Range(tau), nprobe = cents)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val brute = corpus.filter(_._1 != 3L)
       .map { case (id, v) => (id, r4(cos(anchor, v))) }
@@ -325,8 +329,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // Recall: the planted twin (cos ~0.998) is the ONLY vector above 0.9,
     // and a narrow 4-cell probe must still surface it (same cell as its
     // near-identical source).
-    val tight = Similarity.rangeIvfIndex(spark, dir, anchor, nprobe = 4,
-        tau = 0.9, exclude = Some(3L))
+    val tight = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
+        Ivf.Range(0.9), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     assert(tight == Seq(1003L),
       s"narrow-probe range search missed the planted twin: $tight")
@@ -400,11 +404,11 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // must equal the full-precision range row-for-row, at a broad tau
     // (data-sized result) and at the planted-twin tau.
     Seq(0.25, 0.9).foreach { tau =>
-      val adc = Similarity.rangeIvfPqIndex(spark, dir, lookup(3L), nprobe = 8,
-          tau = tau, exclude = Some(3L))
+      val adc = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
+          Ivf.Range(tau), nprobe = 8, scorer = Ivf.Adc())
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-      val full = Similarity.rangeIvfIndex(spark, dir, lookup(3L), nprobe = 8,
-          tau = tau, exclude = Some(3L))
+      val full = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
+          Ivf.Range(tau), nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(adc == full,
         s"ADC range diverged from full-precision at tau=$tau:\n  adc: $adc\n  full: $full")
@@ -420,8 +424,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val nAnchors = 5
     val tau = 0.25
     val batchOut = Similarity
-      .rangeIvfIndexBatch(spark, dir, df.filter(col("vec_id") < nAnchors),
-        nprobe = 8, tau = tau)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
+        Ivf.Range(tau), nprobe = 8)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>
@@ -430,8 +434,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
       val single = Similarity
-        .rangeIvfIndex(spark, dir, lookup(i.toLong), nprobe = 8, tau = tau,
-          exclude = Some(i.toLong))
+        .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
+          Ivf.Range(tau), nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(batchOut.getOrElse(i.toLong, Seq.empty) == single,
         s"batched range for anchor $i diverged:\n  batch: ${batchOut.get(i.toLong)}\n  single: $single")
@@ -449,7 +453,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.writeIvfIndex(spark, dir, df)
     val nAnchors = 5
     val batchOut = Similarity
-      .probeIvfIndexBatch(spark, dir, df.filter(col("vec_id") < nAnchors), nprobe = 4, k = 5)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
+        Ivf.TopK(5), nprobe = 4)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>
@@ -458,8 +463,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
       val single = Similarity
-        .probeIvfIndex(spark, dir, lookup(i.toLong), nprobe = 4, k = 5,
-          exclude = Some(i.toLong))
+        .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
+          Ivf.TopK(5), nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(batchOut.get(i.toLong).contains(single),
         s"batched probe for anchor $i diverged:\n  batch: ${batchOut.get(i.toLong)}\n  single: $single")
@@ -478,8 +483,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val (n, m) = (520L, 260L)
     val nAnchors = 5
     val batchOut = Similarity
-      .probeIvfIndexBatch(spark, dir, df.filter(col("vec_id") < nAnchors),
-        nprobe = 4, k = 5, labelValue = Some(3), counts = Some((n, m)))
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
+        Ivf.TopK(5), nprobe = 4, filter = Some(Ivf.Label(3, n, m)))
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>
@@ -488,8 +493,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
       val single = Similarity
-        .probeIvfIndexFiltered(spark, dir, lookup(i.toLong), labelValue = 3,
-          n = n, m = m, nprobe = 4, k = 5, exclude = Some(i.toLong))
+        .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
+          Ivf.TopK(5), nprobe = 4, filter = Some(Ivf.Label(3, n, m)))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(single.forall(_._1 % 2 == 0), s"anchor $i: out-of-predicate row in $single")
       assert(batchOut.get(i.toLong).contains(single),
@@ -527,7 +532,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 1000))
     val lookup = corpus.toMap
     def probe(i: Int) = Similarity
-      .probeIvfIndex(spark, dir, lookup(1000L + i), nprobe = 4, k = 5)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(5), nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     def batchDirs() = Option(new java.io.File(dir, "postings").listFiles())
       .getOrElse(Array.empty[java.io.File])
@@ -573,7 +578,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.ivfIndexAppend(spark, dir, batch)
     val postAppend = java.nio.file.Files.readAllBytes(manifestPath)
     val lookup = corpus.toMap
-    def hits() = Similarity.probeIvfIndex(spark, dir, lookup(0L), nprobe = 4, k = 5)
+    def hits() = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits().contains(100000L), "committed append row should be visible")
     java.nio.file.Files.write(manifestPath, preAppend)
@@ -601,7 +606,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val m1 = Similarity.readIvfManifest(dir)
     assert(m1.ingestKeys == Seq("stream-7"))
     val lookup = corpus.toMap
-    def topIds() = Similarity.probeIvfIndex(spark, dir, lookup(0L), nprobe = 4, k = 5)
+    def topIds() = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     val before = topIds()
     // Replay the SAME micro-batch (same key): everything must be unchanged.
@@ -638,7 +643,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.ivfIndexAppend(spark, dir, twins)
     val lookup = corpus.toMap
     def topIds(k: Int = 5) = Similarity
-      .probeIvfIndex(spark, dir, lookup(0L), nprobe = 4, k = k, exclude = Some(0L))
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L), Some(0L)), Ivf.TopK(k), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     val before = topIds()
     assert(before.take(3).toSet == Set(100000L, 100001L, 100002L),
@@ -662,7 +667,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       s"next-best should lead and k stay filled: $after")
     // ADC probes honor tombstones too.
     val adc = Similarity
-      .probeIvfPqIndex(spark, dir, lookup(0L), nprobe = 4, k = 5, exclude = Some(0L))
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L), Some(0L)), Ivf.TopK(5), nprobe = 4,
+        scorer = Ivf.Adc())
       .collect().map(_.getLong(0)).toSeq
     assert(!adc.contains(100000L) && !adc.contains(100001L),
       s"tombstoned ids survived the ADC probe: $adc")
@@ -741,7 +747,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(m2.imbalance < m1.imbalance && !m2.rebuildNeeded,
       s"rebuild should restore balance: drifted=$m1 rebuilt=$m2")
     val lookup = corpus.toMap
-    val hits = Similarity.probeIvfIndex(spark, dir, lookup(1000L), nprobe = 4, k = 3)
+    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(0L), s"rebuilt index lost the planted neighbor of vec 1000: $hits")
   }
@@ -781,7 +787,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(Similarity.readIvfManifest(dir).batches == Seq(0L),
       "replayed ingestKey re-appended after rebuild")
     // Planted recall preserved by the retrained quantizer.
-    val hits = Similarity.probeIvfIndex(spark, dir, lookup(1000L), nprobe = 4, k = 3)
+    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(0L), s"rebuilt index lost the planted neighbor: $hits")
   }
@@ -808,9 +814,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     (0 until 5).foreach { i =>
       val anchor = lookup(i.toLong)
-      val appended = rows(Similarity.probeIvfIndex(spark, dir, anchor, nprobe = 4, k = 5))
-      val rebuilt = rows(Similarity.ivfProbe(
-        Similarity.ivfBuildWith(full, cents), anchor, nprobe = 4, k = 5))
+      val appended = rows(Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor),
+        Ivf.TopK(5), nprobe = 4))
+      val rebuilt = rows(Similarity.ivfQuery(Ivf.Frame(full, Some(cents)), Ivf.Anchor(anchor),
+        Ivf.TopK(5), nprobe = 4))
       assert(appended == rebuilt,
         s"probe $i diverged after append:\n  appended: $appended\n  rebuilt: $rebuilt")
       // Non-vacuity: the appended near-copy of vector i must surface.
@@ -919,14 +926,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   test("ivfPqProbe finds the planted near-duplicate of each probe vector") {
     import spark.implicits._
     val df = corpus.toDF("vec_id", "embedding")
-    val index = Similarity.ivfPqBuild(df)
+    val index = Ivf.Frame(df)
     val lookup = corpus.toMap
     val found = (0 until NPlanted).count { i =>
-      val hits = Similarity.ivfPqProbe(index, df, lookup(1000L + i), nprobe = 4, k = 3)
+      val hits = Similarity.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4,
+          scorer = Ivf.Adc())
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
     }
-    index.codes.unpersist()
     val recall = found.toDouble / NPlanted
     assert(recall >= 0.9, s"IVF-PQ recall $recall < 0.9")
   }
@@ -952,7 +959,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.writeIvfIndex(spark, dir, df)
     val nAnchors = 5
     val batchOut = Similarity
-      .probeIvfPqIndexBatch(spark, dir, df.filter(col("vec_id") < nAnchors), nprobe = 4, k = 5)
+      .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
+        Ivf.TopK(5), nprobe = 4, scorer = Ivf.Adc())
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>
@@ -961,8 +969,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
       val single = Similarity
-        .probeIvfPqIndex(spark, dir, lookup(i.toLong), nprobe = 4, k = 5,
-          exclude = Some(i.toLong))
+        .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
+          Ivf.TopK(5), nprobe = 4, scorer = Ivf.Adc())
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(batchOut.get(i.toLong).contains(single),
         s"batched ADC probe for anchor $i diverged:\n  batch: ${batchOut.get(i.toLong)}\n  single: $single")
@@ -979,7 +987,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.writeIvfIndex(spark, dir, a)
     Similarity.ivfIndexAppend(spark, dir, batch)
     val lookup = corpus.toMap
-    val hits = Similarity.probeIvfPqIndex(spark, dir, lookup(0L), nprobe = 4, k = 5)
+    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4,
+        scorer = Ivf.Adc())
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(300000L),
       s"appended row must survive the ADC shortlist + re-rank: $hits")
