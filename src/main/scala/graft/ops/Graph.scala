@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -32,54 +32,12 @@ object Graph extends QueryModule {
     */
   private val SuppBase = 1000000L
 
-  /** PageRank over the part↔supplier bipartite graph projected from
-    * lineitem (both directions, so every node has out-degree ≥ 1 and no
-    * dangling-mass correction is needed). Fixed [[Iters]] power
-    * iterations from the uniform vector with damping [[Damping]];
-    * output is the top 100 nodes by rank, normalized to rank·N so the
-    * interesting digits survive a fixed 6-decimal rounding.
+  /** Exact sum of node ids for the entries' checksums: decimal(38,0), so
+    * ids past 2^62 sum without the `ARITHMETIC_OVERFLOW` a bigint sum
+    * throws under Spark 4's ANSI default.
     */
-  /** Power-iterate PageRank over a directed edge DataFrame (`src`,
-    * `dst`), every node assumed to have out-degree ≥ 1 (callers
-    * symmetrize or pre-handle dangling mass). Returns (node, r) and the
-    * node count.
-    *
-    * The iteration chain stays LAZY: a fixed small iteration count
-    * compiles into one declarative plan (Catalyst sees all three
-    * contribution joins at once, AQE sizes every exchange), so the whole
-    * rank computation is a single job instead of one materialization per
-    * iteration — the per-iteration scheduling floor was 4× the actual
-    * compute at fixture scale. Long-horizon iterative jobs are where
-    * lineage growth, not data, becomes the killer; `checkpointEvery`
-    * truncates the plan at that cadence (node-sized, tiny) without
-    * changing values.
-    */
-  private[graft] def pagerankOn(edges0: DataFrame, iters: Int = Iters,
-      damping: Double = Damping, checkpointEvery: Int = 8): (DataFrame, Double) = {
-    // Reused by the degree aggregate and all `iters` contribution joins
-    // inside ONE action — persist so the lineitem projection runs once.
-    val edges = edges0.persist()
-    val nodes = edges.select(col("src").as("node")).distinct().persist()
-    val n = nodes.count().toDouble
-    // Out-degree rides ON the edge rows (joined once, outside the loop)
-    // so an iteration touches exactly edges + ranks.
-    val edgesDeg = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")), "src")
-      .persist()
-    var ranks = nodes.withColumn("r", lit(1.0 / n))
-    (1 to iters).foreach { i =>
-      val inflow = edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
-        .select(col("dst"), (col("r") / col("outdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("inflow"))
-      ranks = nodes.join(inflow, nodes("node") === inflow("dst"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("r"))
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(true)
-    }
-    (ranks, n)
-  }
+  private def idSum(ids: Column): Column =
+    sum(ids.cast(DecimalType(38, 0)))
 
   /** Session-scoped memo of the one-time edge projections the graph
     * family shares (VERDICT r13 #1a): every graph entry starts from one
@@ -144,17 +102,28 @@ object Graph extends QueryModule {
         .unionByName(bip.select((col("s") + lit(SuppBase)).as("src"), col("p").as("dst")))
     }
 
-  private def pagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ranks, n) = pagerankOn(bipartiteEdges(spark, sfDir))
+  /** PageRank over the part↔supplier bipartite graph projected from
+    * lineitem (both directions, so every node has out-degree ≥ 1 and no
+    * dangling-mass correction is needed). Fixed [[Iters]] power
+    * iterations with damping [[Damping]]; output is the top 100 nodes by
+    * rank·N (the unnormalized [[prUnnormRanks]] iteration, which IS
+    * rank·N) so the interesting digits survive a fixed 6-decimal rounding.
+    */
+  private def pagerank(spark: SparkSession, sfDir: String): DataFrame =
+    topRanks(prUnnormRanks(bipartiteEdges(spark, sfDir)).last)
+
+  /** The rank entries' output contract: the top 100 (node, r) rows as
+    * (node_type, node_id, r rounded to 6 dp).
+    */
+  private def topRanks(ranks: DataFrame): DataFrame =
     ranks.select(
       when(col("node") >= SuppBase, lit("supplier")).otherwise(lit("part"))
         .as("node_type"),
       when(col("node") >= SuppBase, col("node") - SuppBase).otherwise(col("node"))
         .as("node_id"),
-      round(col("r") * n, 6).as("norm_rank"))
+      round(col("r"), 6).as("norm_rank"))
       .orderBy(col("norm_rank").desc, col("node_type"), col("node_id"))
       .limit(100)
-  }
 
   /** Predicate carving the incremental-pagerank arrival batch out of
     * lineitem: rare on purpose (~1/50 · 1/97 of rows) so the delta
@@ -174,12 +143,24 @@ object Graph extends QueryModule {
     * EVERY rank on any node-count change, forcing a full recompute).
     * Returns the per-iteration rank frames r₁..r_iters (the seed persists
     * them all — round k of a delta fold needs r_{k−1} for its old-value
-    * side).
+    * side). Every node is assumed to have out-degree ≥ 1 (callers
+    * symmetrize or pre-handle dangling mass).
+    *
+    * By default the chain stays LAZY: a fixed small iteration count
+    * compiles into one declarative plan (Catalyst sees every contribution
+    * join at once, AQE sizes every exchange), so a single consumer's rank
+    * computation is one job instead of one materialization per iteration
+    * — the per-iteration scheduling floor was 4× the actual compute at
+    * fixture scale.
     */
   private[graft] def prUnnormRanks(edges0: DataFrame, iters: Int = Iters,
       damping: Double = Damping, eager: Boolean = false): Seq[DataFrame] = {
+    // Every iteration reads the node set (the teleport side of its left
+    // join) and the degree-weighted edges: persist both, so one action
+    // derives each once and the planner sees node-partitioned leaves
+    // (no per-iteration distinct shuffle).
     val edges = edges0.persist()
-    val nodes = edges.select(col("src").as("node")).distinct()
+    val nodes = edges.select(col("src").as("node")).distinct().persist()
     val edgesDeg = edges
       .join(edges.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")), "src")
       .persist()
@@ -188,8 +169,6 @@ object Graph extends QueryModule {
     // independent chains whose subtrees race the cold edge cache and
     // each re-derive the data-sized projection — per-iteration
     // localCheckpoint makes chain k build on k−1's materialization.
-    // Single-consumer callers keep the lazy one-job chain (pagerankOn's
-    // measured win).
     if (eager) edgesDeg.count()
     var ranks = nodes.withColumn("r", lit(1.0))
     val out = Seq.newBuilder[DataFrame]
@@ -206,9 +185,9 @@ object Graph extends QueryModule {
     // Eager mode: every returned frame is a checkpoint, so the edge
     // caches have served their purpose — release them now instead of
     // letting them ride the rest of the session. Lazy mode returns
-    // unevaluated chains that still reference the caches; its callers
-    // (specs, the receipt's one-shot recompute) own short-lived sessions.
-    if (eager) { edges.unpersist(blocking = false); edgesDeg.unpersist(blocking = false) }
+    // unevaluated chains that still reference the caches, which the
+    // caller's action reads.
+    if (eager) Seq(edges, nodes, edgesDeg).foreach(_.unpersist(blocking = false))
     out.result()
   }
 
@@ -278,6 +257,44 @@ object Graph extends QueryModule {
     new java.io.File(dir, "ranks").getPath
   }
 
+  /** The delta folds' one seed access ([[prMergeBatch]],
+    * [[lpaMergeBatch]]): the seed's `node` plus `cols` (source → alias)
+    * for exactly the nodes in `keys`.
+    *
+    * JOIN DISCIPLINE — the property the folds exist for: the node-sized
+    * seed is NEVER shuffled. Every seed access is this INNER probe
+    * `seed.join(broadcast(smallKeys))` (seed streams from cache, the
+    * frontier broadcasts) producing a frontier-sized lookup, and all
+    * outer/anti composition happens small-vs-small afterwards. First cut
+    * used left joins on the seed directly: the planner picked
+    * SortMergeJoin and the 2M-node ring receipt measured MORE shuffle
+    * records than the full recompute (40M vs 36M) — the probe drops the
+    * merge to batch-frontier-sized exchanges.
+    */
+  private def seedLookup(seed: DataFrame, keys: DataFrame, cols: (String, String)*): DataFrame =
+    seed.select(col("node") +: cols.map { case (c, a) => col(c).as(a) }: _*)
+      .join(broadcast(keys.select("node")), Seq("node"))
+
+  /** A delta fold's result: the seed's last-round column `seedCol`,
+    * overridden by `delta` (node, value) wherever the fold recomputed a
+    * node. Every round is checkpointed by now, so the fold's caches (the
+    * seed's and `caches`) are fully consumed — RELEASE them instead of
+    * letting them ride the rest of a 200+-entry sweep session. The
+    * returned frame references the seed exactly once, so dropping its
+    * cache costs one re-read of the node-sized parquet at action time, and
+    * it stays lazy so the broadcast-anti override remains visible to the
+    * plan golden (an eager checkpoint here would hide it). The override
+    * itself: the seed streams once against the broadcast delta, nothing
+    * shuffles.
+    */
+  private def overrideSeed(seed: DataFrame, seedCol: String, delta: DataFrame,
+      caches: DataFrame*): DataFrame = {
+    (seed +: caches).foreach(_.unpersist(blocking = false))
+    seed.select(col("node"), col(seedCol).as(delta.columns(1)))
+      .join(broadcast(delta), Seq("node"), "left_anti")
+      .unionByName(delta)
+  }
+
   /** Delta-push incremental PageRank: fold a directed edge batch into the
     * persisted per-iteration ranks WITHOUT re-iterating the graph.
     *
@@ -307,7 +324,7 @@ object Graph extends QueryModule {
     // Each push round joins the edge tables twice; persist so the
     // lineitem scan + distinct runs ONCE, not 2×rounds times (measured
     // 23 s → 3 s at 100× — without this the merge loses to the full
-    // recompute, whose pagerankOn persists for exactly the same reason).
+    // recompute, whose prUnnormRanks persists for exactly the same reason).
     // In production these are already-materialized bucketed tables.
     val baseEdges = baseEdges0.persist()
     val batch = batch0.persist()
@@ -315,21 +332,9 @@ object Graph extends QueryModule {
     val bdeg = batch.groupBy("src").agg(count(lit(1)).cast("double").as("bdeg"))
       .select(col("src").as("node"), col("bdeg"))
     val tSrcs = bdeg.select("node").persist()
-    // JOIN DISCIPLINE — the property the whole operator exists for: the
-    // node-sized seed is NEVER shuffled. Every seed access is an INNER
-    // probe `seed.join(broadcast(smallKeys))` (seed streams from cache,
-    // the frontier broadcasts) producing a frontier-sized lookup, and
-    // all outer/anti composition happens small-vs-small afterwards.
-    // First cut used left joins on the seed directly: planner picked
-    // SortMergeJoin and the 2M-node ring receipt measured MORE shuffle
-    // records than the full recompute (40M vs 36M) — the rewrite drops
-    // the merge to batch-frontier-sized exchanges.
-    def seedLookup(keys: DataFrame, cols: (String, String)*): DataFrame =
-      seed.select(col("node") +: cols.map { case (c, a) => col(c).as(a) }: _*)
-        .join(broadcast(keys.select("node")), Seq("node"))
     // The batch-sources seed lookup is FIXED across rounds — probe once
     // (one broadcast for the whole merge) and checkpoint the tiny result.
-    val tLook = seedLookup(tSrcs,
+    val tLook = seedLookup(seed, tSrcs,
       "outdeg" -> "outdeg", "r1" -> "r1", "r2" -> "r2", "r3" -> "r3")
       .localCheckpoint(true)
     // Previously-unseen endpoints (batch srcs absent from the seed): they
@@ -376,7 +381,7 @@ object Graph extends QueryModule {
       val touched = delta.unionByName(
         newNodes.join(delta.select("node"), Seq("node"), "left_anti")
           .select(col("node"), lit(0.0).as("delta")))
-      touched.join(seedLookup(touched, rk -> "r_seed", "outdeg" -> "outdeg"),
+      touched.join(seedLookup(seed, touched, rk -> "r_seed", "outdeg" -> "outdeg"),
           Seq("node"), "left")
         .select(col("node"),
           (coalesce(col("r_seed"), lit(1.0 - damping)) +
@@ -406,21 +411,8 @@ object Graph extends QueryModule {
     val chg1 = pushRound(s1, "r1").localCheckpoint(true)
     val chg2 = pushRound(srcSet(chg1, "r1"), "r2").localCheckpoint(true)
     val chg3 = pushRound(srcSet(chg2, "r2"), "r3").localCheckpoint(true)
-    // Every round is checkpointed, so the caches are fully consumed —
-    // RELEASE them here instead of letting them ride the rest of a
-    // 200+-entry sweep session. The returned frame references the seed
-    // exactly once, so dropping its cache costs one re-read of the
-    // node-sized parquet at action time (and keeps the final plan — the
-    // broadcast-anti override — visible to the plan golden, which an
-    // eager checkpoint here would hide).
-    baseEdges.unpersist(blocking = false)
-    batch.unpersist(blocking = false)
-    tSrcs.unpersist(blocking = false)
-    seed.unpersist(blocking = false)
-    // Broadcast-anti override: the seed streams once, nothing shuffles.
-    seed.select(col("node"), col("r3").as("r"))
-      .join(broadcast(chg3), Seq("node"), "left_anti")
-      .unionByName(chg3.select(col("node"), col("rp").as("r")))
+    overrideSeed(seed, "r3", chg3.select(col("node"), col("rp").as("r")),
+      baseEdges, batch, tSrcs)
   }
 
   private def pagerankIncremental(spark: SparkSession, sfDir: String): DataFrame = {
@@ -435,23 +427,31 @@ object Graph extends QueryModule {
     // (8 partitions, broadcast hints); AQE's per-shuffle query-stage
     // barriers only add serial waits across the merge's many tiny
     // stages (measured 0.8 s of the warm entry).
-    val ranks = graft.core.SessionConf.scoped(spark, "spark.sql.shuffle.partitions", "8") {
+    topRanks(graft.core.SessionConf.scoped(spark, "spark.sql.shuffle.partitions", "8") {
       graft.core.SessionConf.scoped(spark, "spark.sql.adaptive.enabled", "false") {
         prMergeBatch(seed, prBaseEdges(spark, sfDir), prBatchEdges(spark, sfDir))
       }
-    }
-    ranks.select(
-      when(col("node") >= SuppBase, lit("supplier")).otherwise(lit("part"))
-        .as("node_type"),
-      when(col("node") >= SuppBase, col("node") - SuppBase).otherwise(col("node"))
-        .as("node_id"),
-      round(col("r"), 6).as("norm_rank"))
-      .orderBy(col("norm_rank").desc, col("node_type"), col("node_id"))
-      .limit(100)
+    })
   }
 
   /** BFS depth bound: enough to cross the bipartite graph twice. */
   private val MaxHops = 4
+
+  /** Bounded-depth BFS min-hop distances from `source` (a 1-row
+    * (node BIGINT) frame) over a directed edge frame — returns
+    * (node, dist) for every node reached within `maxHops`.
+    */
+  private[graft] def bfsOn(edges: DataFrame, source: DataFrame, maxHops: Int): DataFrame = {
+    var reached: DataFrame = source.select(col("node"), lit(0).as("dist"))
+    (1 to maxHops).foreach { d =>
+      val frontier = reached.filter(col("dist") === d - 1).select(col("node"))
+      val next = frontier.join(edges, frontier("node") === edges("src"))
+        .select(col("dst").as("node"), lit(d).as("dist"))
+      reached = reached.unionByName(next).groupBy("node").agg(min(col("dist")).as("dist"))
+        .persist()
+    }
+    reached
+  }
 
   /** Single-source BFS / bounded shortest paths over the same bipartite
     * part↔supplier graph as q_pagerank: min-hop distance from the
@@ -480,22 +480,6 @@ object Graph extends QueryModule {
     * CTE with UNION-distinct semantics (level-set dedup, the same
     * bounded-rows property), then aggregates identically.
     */
-  /** Bounded-depth BFS min-hop distances from `source` (a 1-row
-    * (node BIGINT) frame) over a directed edge frame — returns
-    * (node, dist) for every node reached within `maxHops`.
-    */
-  private[graft] def bfsOn(edges: DataFrame, source: DataFrame, maxHops: Int): DataFrame = {
-    var reached: DataFrame = source.select(col("node"), lit(0).as("dist"))
-    (1 to maxHops).foreach { d =>
-      val frontier = reached.filter(col("dist") === d - 1).select(col("node"))
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"), lit(d).as("dist"))
-      reached = reached.unionByName(next).groupBy("node").agg(min(col("dist")).as("dist"))
-        .persist()
-    }
-    reached
-  }
-
   private[graft] def bfsLevels(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = bipartiteEdges(spark, sfDir).persist()
     val nodes = edges.select(col("src").as("node")).distinct()
@@ -508,7 +492,7 @@ object Graph extends QueryModule {
       .agg(
         count(lit(1)).as("n_nodes"),
         sum(when(col("node") >= SuppBase, 1L).otherwise(0L)).as("n_suppliers"),
-        sum(col("node")).as("sum_node_id"))
+        idSum(col("node")).as("sum_node_id"))
       .orderBy("dist")
   }
 
@@ -525,10 +509,10 @@ object Graph extends QueryModule {
     *
     * One round is label⋈edges + a min-aggregate — the same single
     * co-partitionable shuffle shape as pagerank/BFS — iterated until
-    * the EXACT fixpoint, detected by the label-sum invariant: labels
-    * only ever decrease, so Σlbl is strictly decreasing until
-    * convergence and one O(1)-row aggregate action per round is a
-    * sound (and cheap) stopping rule. Rounds = component diameter.
+    * the EXACT fixpoint: the first round that changes no label. Each
+    * round counts the labels it changed inside its own job
+    * (`Dataset.observe` on the step), so the stop test costs no action
+    * of its own. Rounds = component diameter.
     *
     * Each round's label frame localCheckpoints — NOT persist(): the
     * round plan references the previous labels twice (union + the
@@ -539,9 +523,8 @@ object Graph extends QueryModule {
     * RDD each round, so plan cost stays constant — the third point on
     * the lazy/persist/checkpoint ladder: lazy for single-reference
     * bounded chains (pagerank), persist for double-reference bounded
-    * chains (BFS), checkpoint for unbounded loops. Since the stopping
-    * rule needs an action per round anyway, the eager checkpoint job
-    * IS that round's work; the sum rides on the materialized frame.
+    * chains (BFS), checkpoint for unbounded loops. The eager checkpoint
+    * job IS that round's work, and the changed-label count rides on it.
     * The round count is the other lever: each round also POINTER-JUMPS
     * (adopts the label of the current label via one node-sized
     * self-join), so rounds = O(log diameter) instead of O(diameter) —
@@ -562,50 +545,51 @@ object Graph extends QueryModule {
     // ids). Doubles the compression distance per round, so rounds =
     // O(log diameter) instead of O(diameter); a fixpoint of the combined
     // operator is pointwise ≤ the plain propagation's, hence still the
-    // exact component minimum.
+    // exact component minimum. The step also carries each node's previous
+    // label as `old` through the propagation aggregate (no extra
+    // shuffle), so the round's job can count the labels it changed; a
+    // node new to the frame (no `old`) counts as changed.
     def step(l: DataFrame): DataFrame = {
       val prop = edges.join(l, edges("src") === l("node"))
-        .select(edges("dst").as("node"), col("lbl"))
-      val m = l.unionByName(prop)
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
+        .select(edges("dst").as("node"), col("lbl"),
+          lit(null).cast(l.schema("lbl").dataType).as("old"))
+      val m = l.select(col("node"), col("lbl"), col("lbl").as("old")).unionByName(prop)
+        .groupBy("node").agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
       val m2 = m.select(col("node").as("jnode"), col("lbl").as("jlbl"))
       m.join(m2, m("lbl") === m2("jnode"))
-        .select(m("node"), least(m("lbl"), col("jlbl")).as("lbl"))
+        .select(m("node"), least(m("lbl"), col("jlbl")).as("lbl"), m("old"))
     }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")).localCheckpoint(true)
-    // Labels only fall, so an unchanged label sum means no label changed.
-    // The sum is decimal: a bigint sum of ids past 2^63 throws under
-    // Spark 4's ANSI default.
-    def labelSum(l: DataFrame): java.math.BigDecimal =
-      l.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head().getDecimal(0)
-    var prev: java.math.BigDecimal = null
-    var cur = labelSum(labels)
+    // Materialize a (node, lbl[, old]) frame, counting the rows where
+    // `changed` holds inside the checkpoint job itself.
+    def checkpoint(l: DataFrame, changed: Column): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val out = l.observe(obs, count_if(changed).as("changed"))
+        .select("node", "lbl").localCheckpoint(true)
+      (out, obs.get("changed").asInstanceOf[Long])
+    }
+    // Round 0 labels every node with itself: all of them are new.
+    var (labels, changed) = checkpoint(
+      edges.select(col("src").as("node")).distinct().select(col("node"), col("node").as("lbl")),
+      lit(true))
     var rounds = 0
-    while (cur != prev && rounds < maxRounds) {
+    while (changed > 0 && rounds < maxRounds) {
       // One checkpointed step per round. (A paired variant — two lazy
       // steps per checkpoint, intermediate persist()ed — was measured
       // SLOWER at sf0.1: the pair's single job hits the lazily-cached
       // intermediate from two plan branches concurrently, and the cache
       // races/lock waits cost more than the action floor it saves.)
-      labels = step(labels).localCheckpoint(true)
-      prev = cur
-      cur = labelSum(labels)
+      val (next, n) = checkpoint(step(labels), col("old").isNull || col("lbl") =!= col("old"))
+      labels = next
+      changed = n
       rounds += 1
     }
     // No silent cap: with pointer jumping, maxRounds=64 covers any
     // physically possible diameter — if we ever get here non-converged,
     // failing beats emitting a wrong labeling.
-    require(cur == prev, s"ccOn did not reach fixpoint in $maxRounds rounds")
+    require(changed == 0, s"ccOn did not reach fixpoint in $maxRounds rounds")
     (labels, rounds)
   }
 
-  /** Component-size histogram of the sparse (quantity ≤ [[CcMaxQty]])
-    * part↔supplier co-supply graph: one row per distinct component
-    * size with the component count and an exact min-label checksum —
-    * the bounded output contract (component COUNT can be huge at
-    * 100 TB; distinct sizes cannot).
-    */
   /** Iteration shuffle width for the cc label frame. The frame is
     * node-sized, so fixture-scale rounds under the session's 32
     * shuffle partitions are pure scheduling floor (~0.7 s/round of
@@ -634,16 +618,27 @@ object Graph extends QueryModule {
     }
   }
 
-  private[graft] def ccHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val (labels, _) = ccOnSparse(spark, sfDir)
+  /** Component-size histogram of the sparse (quantity ≤ [[CcMaxQty]])
+    * part↔supplier co-supply graph: one row per distinct component
+    * size with the component count and an exact min-label checksum —
+    * the bounded output contract (component COUNT can be huge at
+    * 100 TB; distinct sizes cannot).
+    */
+  private[graft] def ccHistogram(spark: SparkSession, sfDir: String): DataFrame =
+    componentSizes(ccOnSparse(spark, sfDir)._1)
+
+  /** The output contract shared by the full and incremental cc entries:
+    * one row per distinct component size of a (node, lbl) labeling, with
+    * the component count and the exact min-label checksum.
+    */
+  private[graft] def componentSizes(labels: DataFrame): DataFrame =
     labels.groupBy(col("lbl"))
       .agg(count(lit(1)).as("component_size"))
       .groupBy("component_size")
       .agg(
         count(lit(1)).as("n_components"),
-        sum(col("lbl")).as("sum_min_label"))
+        idSum(col("lbl")).as("sum_min_label"))
       .orderBy("component_size")
-  }
 
   private val CcSeedRoot = "/tmp/graft_cc"
 
@@ -720,17 +715,10 @@ object Graph extends QueryModule {
       .filter(col("l_quantity") === 3.0)
       .select(col("l_partkey").as("a"), (col("l_suppkey") + lit(SuppBase)).as("b"))
       .distinct()
-    graft.core.SessionConf.scoped(spark, "spark.sql.shuffle.partitions",
+    componentSizes(graft.core.SessionConf.scoped(spark, "spark.sql.shuffle.partitions",
       ccPartitionsFor(spark, sfDir).toString) {
       ccMergeBatch(labels0, batch)
-    }
-      .groupBy(col("lbl"))
-      .agg(count(lit(1)).as("component_size"))
-      .groupBy("component_size")
-      .agg(
-        count(lit(1)).as("n_components"),
-        sum(col("lbl")).as("sum_min_label"))
-      .orderBy("component_size")
+    })
   }
 
   /** Quantity threshold for the triangle entry's co-supply graph (the
@@ -830,7 +818,7 @@ object Graph extends QueryModule {
     */
   private def lpaHistogram(labels: DataFrame): DataFrame =
     labels.groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).as("size"), sum(col("node")).as("member_checksum"))
+      .agg(count(lit(1)).as("size"), idSum(col("node")).as("member_checksum"))
       .orderBy(col("size").desc, col("community"))
 
   /** The per-round label frames l₁..l_rounds of synchronous LPA (the
@@ -913,7 +901,7 @@ object Graph extends QueryModule {
     * the DuckDB oracle recomputes all rounds from scratch over the
     * union graph and must hash-match.
     *
-    * Scale shape (the [[prMergeBatch]] join discipline): the seed is
+    * Scale shape (the [[seedLookup]] join discipline): the seed is
     * NEVER shuffled — every seed access is an inner probe against a
     * broadcast key set; the edge table is scanned with a broadcast
     * frontier filter (bucketed-by-dst edges prune to the frontier's
@@ -941,9 +929,6 @@ object Graph extends QueryModule {
       }
     }
     val unionEdges = baseEdges.unionByName(batch)
-    def seedLookup(keys: DataFrame, cols: (String, String)*): DataFrame =
-      seed.select(col("node") +: cols.map { case (c, a) => col(c).as(a) }: _*)
-        .join(broadcast(keys.select("node")), Seq("node"))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("dst").orderBy(col("c").desc, col("lbl"))
     // Batch endpoints: the batch is symmetric, so its src side is both.
@@ -964,7 +949,7 @@ object Graph extends QueryModule {
       val srcLbl =
         if (kPrev == 0) srcKeys.select(col("node"), col("node").as("lbl"))
         else srcKeys
-          .join(seedLookup(srcKeys, s"l$kPrev" -> "lbl_seed"), Seq("node"), "left")
+          .join(seedLookup(seed, srcKeys, s"l$kPrev" -> "lbl_seed"), Seq("node"), "left")
           .join(delta.select(col("node"), col("lbl").as("lbl_delta")), Seq("node"), "left")
           .select(col("node"), coalesce(col("lbl_delta"), col("lbl_seed")).as("lbl"))
       // srcLbl is frontier-neighborhood-sized by the A_k contract:
@@ -996,7 +981,7 @@ object Graph extends QueryModule {
     // analyzer lesson).
     def diff(recomputed: DataFrame, k: Int): DataFrame =
       recomputed
-        .join(seedLookup(recomputed, s"l$k" -> "l_seed"), Seq("node"), "left")
+        .join(seedLookup(seed, recomputed, s"l$k" -> "l_seed"), Seq("node"), "left")
         .filter(col("l_seed").isNull || col("lbl") =!= col("l_seed"))
         .select(col("node"), col("lbl"))
         .localCheckpoint(true)
@@ -1016,19 +1001,7 @@ object Graph extends QueryModule {
     val d1 = diff(recompute(tEnds, empty, 0), 1)
     val d2 = diff(recompute(nextAffected(d1), d1, 1), 2)
     val d3 = diff(recompute(nextAffected(d2), d2, 2), 3)
-    // Deltas are checkpointed — the caches are fully consumed. Release
-    // them; the returned frame references the seed once (one re-read of
-    // the node-sized parquet at action time) and stays lazy so the
-    // broadcast-anti override remains visible to the plan golden.
-    baseEdges.unpersist(blocking = false)
-    batch.unpersist(blocking = false)
-    seed.unpersist(blocking = false)
-    tEnds.unpersist(blocking = false)
-    // Override: the node-sized seed streams once against the broadcast
-    // delta; nothing shuffles.
-    seed.select(col("node"), col("l3").as("lbl"))
-      .join(broadcast(d3), Seq("node"), "left_anti")
-      .unionByName(d3)
+    overrideSeed(seed, "l3", d3, baseEdges, batch, tEnds)
   }
 
   /** The incremental entry: persisted per-round base labels + the same
@@ -1080,7 +1053,7 @@ object Graph extends QueryModule {
       l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym),
       $rounds
       SELECT lbl AS community, count(*) AS size,
-             CAST(sum(node) AS BIGINT) AS member_checksum
+             CAST(sum(node) AS DECIMAL(38,0)) AS member_checksum
       FROM l$LpaRounds GROUP BY lbl ORDER BY size DESC, community"""
   }
 
@@ -1100,7 +1073,7 @@ object Graph extends QueryModule {
       l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym),
       $rounds
       SELECT lbl AS community, count(*) AS size,
-             CAST(sum(node) AS BIGINT) AS member_checksum
+             CAST(sum(node) AS DECIMAL(38,0)) AS member_checksum
       FROM l$LpaRounds GROUP BY lbl ORDER BY size DESC, community"""
   }
 
@@ -1145,7 +1118,7 @@ object Graph extends QueryModule {
       comp AS (SELECT a AS node, min(b) AS lbl FROM reach GROUP BY a),
       sizes AS (SELECT lbl, count(*) AS component_size FROM comp GROUP BY lbl)
       SELECT component_size, count(*) AS n_components,
-             sum(lbl)::BIGINT AS sum_min_label
+             sum(lbl)::DECIMAL(38,0) AS sum_min_label
       FROM sizes GROUP BY component_size ORDER BY component_size""")),
     "q_graph_cc" -> QueryDef(ccHistogram, Some(s"""
       WITH RECURSIVE bip AS (
@@ -1163,7 +1136,7 @@ object Graph extends QueryModule {
       comp AS (SELECT a AS node, min(b) AS lbl FROM reach GROUP BY a),
       sizes AS (SELECT lbl, count(*) AS component_size FROM comp GROUP BY lbl)
       SELECT component_size, count(*) AS n_components,
-             sum(lbl)::BIGINT AS sum_min_label
+             sum(lbl)::DECIMAL(38,0) AS sum_min_label
       FROM sizes GROUP BY component_size ORDER BY component_size""")),
     "q_graph_bfs" -> QueryDef(bfsLevels, Some(s"""
       WITH RECURSIVE bip AS (
@@ -1184,7 +1157,7 @@ object Graph extends QueryModule {
              FROM nodes n LEFT JOIN md ON md.node = n.node)
       SELECT dist, count(*) AS n_nodes,
              count(*) FILTER (node >= $SuppBase)::BIGINT AS n_suppliers,
-             sum(node)::BIGINT AS sum_node_id
+             sum(node)::DECIMAL(38,0) AS sum_node_id
       FROM lv GROUP BY dist ORDER BY dist""")),
     "q_pagerank_incremental" -> QueryDef(pagerankIncremental, Some(s"""
       WITH bip AS (

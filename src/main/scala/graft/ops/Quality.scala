@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.core.{QueryDef, QueryModule, Tables}
 
@@ -125,7 +126,10 @@ object Quality extends QueryModule {
       .agg(
         count(lit(1)).as("n_rows"),
         min(col("l_orderkey")).as("min_orderkey"),
-        sum(col("l_orderkey") * 10 + col("l_linenumber")).as("key_checksum"))
+        // decimal(38,0) before the *10: a bigint key past ~9.2e17 (or a
+        // bigint sum past 2^63) throws ARITHMETIC_OVERFLOW under ANSI.
+        sum(col("l_orderkey").cast(DecimalType(38, 0)) * 10 + col("l_linenumber"))
+          .as("key_checksum"))
       .orderBy("reason")
   }
 
@@ -283,7 +287,8 @@ object Quality extends QueryModule {
                             ELSE rs END) AS u(reason))
       SELECT reason, count(*) AS n_rows,
              min(l_orderkey) AS min_orderkey,
-             sum(l_orderkey * 10 + l_linenumber)::BIGINT AS key_checksum
+             sum(l_orderkey::DECIMAL(38,0) * 10 + l_linenumber)::DECIMAL(38,0)
+               AS key_checksum
       FROM x GROUP BY reason ORDER BY reason""")),
     "q_dq_rules" -> QueryDef(dqRules, Some("""
       WITH n AS (SELECT count(*)::BIGINT AS n FROM lineitem),

@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Graph
 
-/** PageRank pins: DataFrame power iteration equals an independent local
-  * reference on controlled graphs, probability mass is conserved on the
-  * fixture graph, and the per-iteration plan is the one-shuffle shape.
+/** Graph family pins: PageRank's power iteration equals an independent
+  * local reference on controlled graphs and conserves mass on the fixture
+  * graph; BFS, cc and LPA match plain-Scala twins; the delta folds equal
+  * their from-scratch recomputes; ccOn's stop test costs no job of its
+  * own; id checksums are exact past 2^63.
   */
 class GraphSpec extends AnyFunSuite with SparkTest {
 
@@ -26,10 +28,14 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     r
   }
 
+  /** The unnormalized iteration IS rank·n: divide by n for the classic
+    * probabilities the local reference computes.
+    */
   private def runOn(edges: Seq[(Long, Long)], iters: Int): Map[Long, Double] = {
     import spark.implicits._
-    Graph.pagerankOn(edges.toDF("src", "dst"), iters = iters)._1
+    val ranks = Graph.prUnnormRanks(edges.toDF("src", "dst"), iters).last
       .collect().map(row => row.getLong(0) -> row.getDouble(1)).toMap
+    ranks.view.mapValues(_ / ranks.size).toMap
   }
 
   test("a symmetric cycle's rank is exactly uniform at every iteration count") {
@@ -57,9 +63,11 @@ class GraphSpec extends AnyFunSuite with SparkTest {
   }
 
   test("probability mass is conserved on the fixture bipartite graph") {
-    val ranks = Graph.pagerankOn(Graph.bipartiteEdges(spark, "/root/testdata/sf0.001"))._1
+    // Unnormalized ranks start at 1 per node, so the mass stays n.
+    val ranks = Graph.prUnnormRanks(Graph.bipartiteEdges(spark, "/root/testdata/sf0.001")).last
+    val n = ranks.count().toDouble
     val mass = ranks.agg(org.apache.spark.sql.functions.sum("r")).head().getDouble(0)
-    assert(math.abs(mass - 1.0) < 1e-9, s"rank mass drifted: $mass")
+    assert(math.abs(mass / n - 1.0) < 1e-9, s"rank mass drifted: $mass over $n nodes")
   }
 
   /** Independent local BFS — the spec twin for bfsOn. */
@@ -114,7 +122,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
       (d, ns.size.toLong, ns.count(_ >= base).toLong, ns.sum)
     }.toSeq.sortBy(_._1)
     val got = SparkEntry.queries("q_graph_bfs")(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDecimal(3).longValueExact)).toSeq
     assert(got == levels)
   }
 
@@ -172,6 +180,52 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     assert(rounds == smallRounds)
   }
 
+  test("ccOn: the stop test rides inside each round's job (fewer jobs per round)") {
+    import spark.implicits._
+    // A 64-node path takes 7 rounds. Each round is one checkpoint job plus
+    // the broadcast and shuffle-map jobs AQE submits for its exchanges: 6
+    // here, 44 jobs in all. A separate label-sum action per round (one
+    // shuffle-map job plus one result job under AQE) made it 8 per round,
+    // 60 in all.
+    val path = (0L until 63L).map(i => (i, i + 1L))
+    val edges = path.flatMap(e => Seq(e, e.swap)).toDF("src", "dst").localCheckpoint(true)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // Drain earlier events before counting; wait for this run's to land.
+    org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc, 10000)
+    sc.addSparkListener(listener)
+    val (labels, rounds) = try {
+      val out = Graph.ccOn(edges)
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc, 10000)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(labels.select("lbl").distinct().as[Long].collect().toSeq == Seq(0L))
+    assert(rounds == 7)
+    assert(jobs.get().toDouble / rounds < 7.0, s"${jobs.get()} jobs over $rounds rounds")
+  }
+
+  test("id checksums sum node ids from 2^62 exactly, past 2^63") {
+    import spark.implicits._
+    // Bigint sums of these ids throw ARITHMETIC_OVERFLOW under ANSI.
+    val base = 1L << 62
+    def exact(ids: Long*) = ids.map(java.math.BigDecimal.valueOf).reduce(_ add _)
+    // Two 2-node components: the min-label sum passes 2^63.
+    val cc = Seq((base, base + 1), (base + 2, base + 3))
+    val (labels, _) = Graph.ccOn(cc.flatMap(e => Seq(e, e.swap)).toDF("src", "dst"))
+    val sizes = Graph.componentSizes(labels).collect()
+    assert(sizes.map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSeq ==
+      Seq((2L, 2L, exact(base, base + 2))))
+    // One 3-clique community: the member sum passes 2^63.
+    val clique = Seq((base, base + 1), (base + 1, base + 2), (base, base + 2))
+    val lpa = Graph.labelPropOn(clique.flatMap(e => Seq(e, e.swap)).toDF("src", "dst")).collect()
+    assert(lpa.map(r => (r.getLong(1), r.getDecimal(2))).toSeq ==
+      Seq((3L, exact(base, base + 1, base + 2))))
+  }
+
   test("q_graph_cc histogram matches an independent union-find of the sparse fixture subgraph") {
     import spark.implicits._
     val base = 1000000L
@@ -186,7 +240,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
         (sz, comps.size.toLong, comps.keys.sum)
       }.toSeq.sortBy(_._1)
     val got = SparkEntry.queries("q_graph_cc")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2).longValueExact)).toSeq
     assert(got == expected)
   }
 
@@ -230,7 +284,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
         (sz, comps.size.toLong, comps.keys.sum)
       }.toSeq.sortBy(_._1)
     val got = SparkEntry.queries("q_graph_cc_incremental")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2).longValueExact)).toSeq
     assert(got == expected)
   }
 
@@ -260,7 +314,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     val und = clique(1L to 5L) ++ clique(11L to 15L) ++ Seq((15L, 21L), (21L, 22L))
     val sym = und ++ und.map(_.swap)
     val got = Graph.labelPropOn(sym.toDF("src", "dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2).longValueExact)).toSeq
     // Independent plain-Scala replay of the declared semantics:
     // 3 synchronous rounds, neighbor-majority, (count desc, label asc).
     val nbrs = sym.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -287,7 +341,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
   test("one iteration is one aggregation exchange over the contribution join") {
     import spark.implicits._
     val edges = (1L to 50L).map(i => (i, i % 7 + 1)).toDF("src", "dst")
-    val one = Graph.pagerankOn(edges, iters = 1)._1
+    val one = Graph.prUnnormRanks(edges, iters = 1).last
     // Lazy chain: pin the one-shuffle-per-iteration shape — exactly one
     // aggregation pair (partial+final) per iteration beyond the degree
     // aggregate, and a node-sized output of finite ranks.
@@ -411,10 +465,10 @@ class GraphSpec extends AnyFunSuite with SparkTest {
 
   test("q_lpa_incremental equals the from-scratch LPA rerun on the union graph") {
     val got = SparkEntry.queries("q_lpa_incremental")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2)))
     val union = Graph.prBaseEdges(spark, sf).unionByName(Graph.prBatchEdges(spark, sf))
     val expect = Graph.labelPropOn(union).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2)))
     assert(got.nonEmpty && got.sameElements(expect))
   }
 }

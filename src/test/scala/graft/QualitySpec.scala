@@ -68,7 +68,7 @@ class QualitySpec extends AnyFunSuite with SparkTest {
     val dir = graft.core.TempDirs.create("graft_quality_spec")
     lines.toDF().write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = SparkEntry.queries("q_dq_quarantine")(spark, dir).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDecimal(3).longValueExact))).toMap
     assert(got == Map(
       "accepted_values:l_returnflag" -> ((1L, 1L, 11L)),
       "range:l_quantity[1,50]" -> ((1L, 1L, 11L)),
