@@ -275,6 +275,50 @@ object Similarity extends QueryModule {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  // ---- One quantizer core ----------------------------------------------
+  //
+  // Every nearest-centroid choice here (IVF and semdedup assignment, the
+  // k-means assignment steps, PQ encoding, the coarse group index, probe
+  // cell choice) ranks candidates by ONE total order: the higher score
+  // first, ties to the lower id, and a NaN score — the cosine of a
+  // zero-norm vector — below every number (the rule `TopKAgg` applies to
+  // scores). [[argBest]] is the one argmax loop; [[TopCells]] keeps the
+  // top `np` under the same order.
+
+  /** Whether score `s` of id `i` ranks above score `t` of id `j`. */
+  private def outranks(s: Double, i: Int, t: Double, j: Int): Boolean =
+    if (s.isNaN) t.isNaN && i < j
+    else t.isNaN || s > t || (s == t && i < j)
+
+  /** The argmax kernel: the id in [0, n) whose `score` ranks first under
+    * [[outranks]] (0 when every score is NaN, or n is 0).
+    */
+  private[graft] def argBest(n: Int)(score: Int => Double): Int = {
+    var best = 0; var bestScore = Double.NaN; var j = 0
+    while (j < n) {
+      val s = score(j)
+      if (outranks(s, j, bestScore, best)) { best = j; bestScore = s }
+      j += 1
+    }
+    best
+  }
+
+  /** Nearest centroid by cosine: the linear argmax over `cents`. */
+  private[graft] def nearestCell(cents: Array[Array[Float]], v: Array[Float]): Int =
+    argBest(cents.length)(j => cosineKernel(cents(j), v))
+
+  /** The nearest-cell function of one centroid matrix: [[nearestCell]]
+    * below [[CoarseScanLimit]] centroids, the exact branch-and-bound over
+    * one prebuilt group index above it (the same answer; the index rides
+    * in the returned closure, so executor-side UDFs build it once).
+    */
+  private[graft] def nearestCellOf(cents: Array[Array[Float]]): Array[Float] => Int =
+    if (cents.length < CoarseScanLimit) v => nearestCell(cents, v)
+    else {
+      val ci = coarseIndexFor(cents)
+      v => topCellsExact(ci, cents, v, 1).head
+    }
+
   // ---- Sub-linear nearest-cell choice over the coarse quantizer --------
   //
   // Every probe picks its nprobe cells by scanning ALL C centroids —
@@ -287,10 +331,10 @@ object Similarity extends QueryModule {
   // the radius: the spherical triangle inequality), stop once the
   // nprobe-th best exact cosine beats every unexplored group's bound.
   // Outputs are row-identical to the linear scan BY CONSTRUCTION (the
-  // bound is conservative; ties break to the lower cell id exactly like
-  // the stable linear sort), so probes need no recall caveat — this is
-  // the exact-acceleration family (Elkan-style triangle-inequality
-  // k-means, FLANN's exact mode), not an approximation.
+  // bound is conservative; ties and NaNs rank by the one order above),
+  // so probes need no recall caveat — this is the exact-acceleration
+  // family (Elkan-style triangle-inequality k-means, FLANN's exact
+  // mode), not an approximation.
 
   /** Grouped centroid index: `groups(g)` lists member cell ids,
     * `gcents(g)` the (normalized) group center, `cosR`/`sinR` the
@@ -312,44 +356,17 @@ object Similarity extends QueryModule {
     val c = cents.length
     val g = math.max(1, math.ceil(math.sqrt(c.toDouble)).toInt)
     // Deterministic stride seeds over the centroid list, two spherical
-    // Lloyd iterations (assignment by max cosine, mean then renormalize;
-    // empty groups keep their center). O(C·√C·Dim) once per index build
-    // — amortized across every probe via [[coarseIndexFor]].
-    var gc: Array[Array[Float]] = Array.tabulate(g)(i => l2Normalize(cents(((i.toLong * c) / g).toInt)))
-    val assign = new Array[Int](c)
-    def assignAll(): Unit = {
-      var i = 0
-      while (i < c) {
-        var best = 0; var bestSim = Double.MinValue; var j = 0
-        while (j < g) {
-          val s = cosineKernel(gc(j), cents(i))
-          if (s > bestSim) { bestSim = s; best = j }
-          j += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-    }
-    for (_ <- 0 until 2) {
-      assignAll()
-      val dim = cents.head.length
-      val sums = Array.fill(g)(new Array[Double](dim))
-      val counts = new Array[Int](g)
-      var i = 0
-      while (i < c) {
-        val v = cents(i); val s = sums(assign(i)); counts(assign(i)) += 1
-        var d = 0; while (d < dim) { s(d) += v(d); d += 1 }
-        i += 1
-      }
-      gc = Array.tabulate(g) { j =>
-        if (counts(j) == 0) gc(j)
-        else l2Normalize(Array.tabulate(dim)(d => (sums(j)(d) / counts(j)).toFloat))
-      }
-    }
-    assignAll()
+    // Lloyd iterations (empty groups keep their center). O(C·√C·Dim)
+    // once per index build — amortized across every probe via
+    // [[coarseIndexFor]].
+    val gc = lloydLocal(cents,
+      Array.tabulate(g)(i => l2Normalize(cents(((i.toLong * c) / g).toInt))), 2)(
+      nearestCell, l2Normalize)
     val members = Array.fill(g)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    (0 until c).foreach(i => members(assign(i)) += i)
+    (0 until c).foreach(i => members(nearestCell(gc, cents(i))) += i)
     val radii = Array.tabulate(g) { j =>
+      // A NaN angle (a zero-norm centroid) makes the radius NaN, and a
+      // NaN radius never prunes its group (see topCellsExact).
       val r = members(j).foldLeft(0.0) { (m, i) =>
         math.max(m, math.acos(clampCos(cosineKernel(gc(j), cents(i)))))
       }
@@ -378,31 +395,25 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** Exact top-`nprobe` cells for `q` via the group index: explore
-    * groups in decreasing bound order, keep the running top-nprobe exact
-    * cosines, prune a group only when its bound is STRICTLY below the
-    * current nprobe-th best (so boundary ties always get explored), and
-    * return the explored candidates in the linear scan's exact order
-    * (descending sim, ties to the lower cell id).
-    */
-  /** Mutable top-`np` selector over (sim, index) with EXACTLY the
-    * stable-sort semantics of the historical
-    * `zipWithIndex.sortBy(-sim).take(np)`: total order (sim desc,
-    * index asc), INDEPENDENT of offer order — ties rank by the lower
-    * cell id even when offers arrive group-by-group. Primitive arrays,
-    * no boxing in the per-centroid hot loop.
+  /** Mutable top-`np` selector over (sim, index) under [[outranks]]: a
+    * total order once NaN has its rank (below every number), so the
+    * result is independent of offer order — ties rank by the lower cell
+    * id even when offers arrive group-by-group. Primitive arrays, no
+    * boxing in the per-centroid hot loop.
     */
   private final class TopCells(np: Int) {
     val sims = new Array[Double](np)
     val idxs = new Array[Int](np)
     var filled = 0
-    def worst: Double = if (filled < np) Double.NegativeInfinity else sims(filled - 1)
+    /** The score a group must reach to matter; -∞ while a slot is open
+      * or held by a NaN, which any candidate outranks.
+      */
+    def worst: Double =
+      if (filled < np || sims(filled - 1).isNaN) Double.NegativeInfinity else sims(filled - 1)
     def offer(i: Int, s: Double): Unit = {
-      if (filled == np &&
-        (s < sims(np - 1) || (s == sims(np - 1) && i > idxs(np - 1)))) return
+      if (filled == np && !outranks(s, i, sims(np - 1), idxs(np - 1))) return
       var p = 0
-      while (p < filled && (sims(p) > s || (sims(p) == s && idxs(p) < i))) p += 1
-      if (p >= np) return
+      while (p < filled && outranks(sims(p), idxs(p), s, i)) p += 1
       val last = math.min(filled, np - 1)
       var m = last
       while (m > p) { sims(m) = sims(m - 1); idxs(m) = idxs(m - 1); m -= 1 }
@@ -412,17 +423,25 @@ object Similarity extends QueryModule {
     def result: Seq[Int] = idxs.take(filled).toSeq
   }
 
+  /** Exact top-`nprobe` cells for `q` via the group index: explore
+    * groups in decreasing bound order, keep the running top-nprobe exact
+    * cosines, prune a group only when its bound is STRICTLY below the
+    * current nprobe-th best (so boundary ties always get explored), and
+    * return the candidates in the linear scan's exact order.
+    */
   private[graft] def topCellsExact(ci: CoarseIndex, cents: Array[Array[Float]],
       q: Array[Float], nprobe: Int): Seq[Int] = {
     val g = ci.gcents.length
     // Per-group upper bound cos(max(0, θ−r)) via the angle-difference
-    // identity — no trig in the probe path.
+    // identity — no trig in the probe path. A NaN angle or radius (a
+    // zero-norm query, center or member) fails `cq < cosR` and takes the
+    // trivial bound 1, so its group is never pruned.
     val bound = new Array[Double](g)
     var j = 0
     while (j < g) {
       val cq = clampCos(cosineKernel(ci.gcents(j), q))
       bound(j) =
-        if (cq >= ci.cosR(j)) 1.0
+        if (!(cq < ci.cosR(j))) 1.0
         else cq * ci.cosR(j) + math.sqrt(math.max(0.0, 1.0 - cq * cq)) * ci.sinR(j)
       j += 1
     }
@@ -430,11 +449,10 @@ object Similarity extends QueryModule {
     val top = new TopCells(nprobe)
     var bi = 0
     // Explore in decreasing bound order; stop once every unexplored
-    // group's bound is STRICTLY below the running nprobe-th best (so
-    // boundary ties always get explored). Members offer in ascending
-    // cell-id order within a group; cross-group order doesn't matter —
-    // the selector's (sim desc, index asc) ordering is total.
-    while (bi < g && (top.filled < nprobe || bound(order(bi)) >= top.worst)) {
+    // group's bound is STRICTLY below the running nprobe-th best.
+    // Cross-group offer order doesn't matter — the selector's order is
+    // total.
+    while (bi < g && bound(order(bi)) >= top.worst) {
       val members = ci.groups(order(bi))
       var mi = 0
       while (mi < members.length) {
@@ -448,10 +466,10 @@ object Similarity extends QueryModule {
   }
 
   /** Nearest-cell choice for one query — the single entry point every
-    * probe site uses. Linear scan below [[CoarseScanLimit]] centroids
-    * (identical output to the historical sortBy form), exact
-    * branch-and-bound above it; `ci` lets batch probes pass one
-    * prebuilt index into an executor-side closure.
+    * probe site uses. Linear scan below [[CoarseScanLimit]] centroids,
+    * exact branch-and-bound above it; `ci` lets batch probes pass one
+    * prebuilt index into an executor-side closure. At `nprobe` 1 this
+    * is [[nearestCell]]'s answer.
     */
   private[graft] def chooseCells(cents: Array[Array[Float]], q: Array[Float],
       nprobe: Int, ci: Option[CoarseIndex] = None): Seq[Int] = {
@@ -603,25 +621,17 @@ object Similarity extends QueryModule {
       .collect().map(_.getSeq[Float](1).toArray)
 
   /** Assign every vector to its nearest given centroid (one scan, no
-    * shuffle — the centroid matrix rides to executors in the UDF closure).
-    * `keep` carries additional metadata columns (e.g. `label`) into the
-    * cell table so filtered probes can predicate inside probed cells.
+    * shuffle — the centroid matrix rides to executors in the UDF closure,
+    * with its group index past [[CoarseScanLimit]] centroids; see
+    * [[nearestCellOf]]). `keep` carries additional metadata columns
+    * (e.g. `label`) into the cell table so filtered probes can predicate
+    * inside probed cells.
     */
   def ivfBuildWith(embeddings: DataFrame, centroids: Array[Array[Float]],
       keep: Seq[String] = Nil): IvfIndex = {
     val e = embeddings.select((Seq("vec_id", "embedding") ++ keep).map(col): _*)
-    val assignUdf = udf { (emb: Array[Float]) =>
-      var best = 0
-      var bestSim = Double.MinValue
-      var ci = 0
-      while (ci < centroids.length) {
-        val s = cosineKernel(centroids(ci), emb)
-        if (s > bestSim) { bestSim = s; best = ci }
-        ci += 1
-      }
-      best
-    }
-    IvfIndex(centroids, e.withColumn("cell", assignUdf(col("embedding"))).persist())
+    IvfIndex(centroids,
+      e.withColumn("cell", udf(nearestCellOf(centroids)).apply(col("embedding"))).persist())
   }
 
   // ---- k-means refinement of the IVF coarse quantizer -------------------
@@ -639,6 +649,21 @@ object Similarity extends QueryModule {
     */
   def kmeansRefine(embeddings: DataFrame, init: Array[Array[Float]], iters: Int,
       tap: Option[String] = None): (Array[Array[Float]], Seq[Double]) = {
+    val (cents, hist) = kmeansRefineBy(embeddings, None, Map(0 -> init), iters, tap)
+    (cents(0), hist)
+  }
+
+  /** The one distributed Lloyd loop. With a `group` column, the corpus is
+    * split by it: a row is assigned only among the centroids of its own
+    * group (`init(group)`), and each group's centroids are recomputed
+    * from its own rows — the two-level build's per-coarse-cell fine
+    * cells, at n·(k/√k) distances per scan. Without one, every row is in
+    * group 0. Empty cells keep their previous centroid. `tap` records
+    * group 0's centroids at each measured iteration.
+    */
+  private def kmeansRefineBy(embeddings: DataFrame, group: Option[String],
+      init: Map[Int, Array[Array[Float]]], iters: Int, tap: Option[String])
+      : (Map[Int, Array[Array[Float]]], Seq[Double]) = {
     var cents = init
     val hist = Seq.newBuilder[Double]
     // Partial-oracle tap (registry entry only): the centroid matrix in
@@ -647,37 +672,29 @@ object Similarity extends QueryModule {
     // pure relational algebra DuckDB re-derives from the embeddings
     // table. The Lloyd update itself stays the declared boundary.
     val tapRows = Seq.newBuilder[(Long, Int, Seq[Float])]
+    val grp = group.fold(lit(0))(col)
     for (iter <- 0 until iters) {
       tap.foreach { _ =>
-        cents.zipWithIndex.foreach { case (c, ci) =>
+        cents(0).zipWithIndex.foreach { case (c, ci) =>
           tapRows += ((iter.toLong, ci, c.toSeq))
         }
       }
-      val local = cents
-      val assignUdf = udf { (emb: Array[Float]) =>
-        var best = 0
-        var bestSim = Double.MinValue
-        var ci = 0
-        while (ci < local.length) {
-          val s = cosineKernel(local(ci), emb)
-          if (s > bestSim) { bestSim = s; best = ci }
-          ci += 1
-        }
-        (best, bestSim)
-      }
       val stats = embeddings
-        .select(col("embedding"), assignUdf(col("embedding")).as("a"))
-        .select(col("embedding"), col("a._1").as("cell"), col("a._2").as("sim"))
-        .groupBy("cell")
+        .select(group.map(col).toSeq ++ Seq(col("embedding"),
+          nearestInGroupUdf(cents)(grp, col("embedding")).as("a")): _*)
+        .select(group.map(col).toSeq ++ Seq(col("embedding"),
+          col("a._1").as("cell"), col("a._2").as("sim")): _*)
+        .groupBy(group.map(col).toSeq :+ col("cell"): _*)
         .agg(
           count(lit(1)).as("n"), sum(col("sim")).as("sum_sim"),
           array((0 until Dim).map(i => avg(col("embedding").getItem(i))): _*).as("mean"))
         .collect()
-      val total = stats.map(_.getLong(1)).sum
-      hist += stats.map(_.getDouble(2)).sum / math.max(1L, total)
-      val next = cents.map(_.clone())
+      val total = stats.map(_.getAs[Long]("n")).sum
+      hist += stats.map(_.getAs[Double]("sum_sim")).sum / math.max(1L, total)
+      val next = cents.map { case (g, arr) => g -> arr.map(_.clone()) }
       stats.foreach { r =>
-        next(r.getInt(0)) = r.getSeq[Double](3).map(_.toFloat).toArray
+        next(group.fold(0)(r.getAs[Int]))(r.getAs[Int]("cell")) =
+          r.getAs[Seq[Double]]("mean").map(_.toFloat).toArray
       }
       cents = next // empty cells keep their previous centroid
     }
@@ -689,6 +706,14 @@ object Similarity extends QueryModule {
     }
     (cents, hist.result())
   }
+
+  /** (nearest cell among the row's group's centroids, its cosine). */
+  private def nearestInGroupUdf(cents: Map[Int, Array[Array[Float]]]) =
+    udf { (g: Int, emb: Array[Float]) =>
+      val arr = cents(g)
+      val best = nearestCell(arr, emb)
+      (best, cosineKernel(arr(best), emb))
+    }
 
   // ---- SemDeDup: cluster-bounded semantic deduplication -----------------
 
@@ -750,19 +775,6 @@ object Similarity extends QueryModule {
     */
   private[graft] val SemdedupCellGroups = 128
 
-  /** Exact nearest-centroid assignment that stays cheap at large k: the
-    * same argmax as [[ivfBuildWith]]'s closure loop (ties to the lower
-    * cell), routed through [[chooseCells]] so past [[CoarseScanLimit]]
-    * centroids each row pays the grouped branch-and-bound instead of a
-    * linear k-scan. Row-identical to the linear loop by construction.
-    */
-  private def assignCellsExact(e: DataFrame, cents: Array[Array[Float]]): DataFrame = {
-    val ci = if (cents.length >= CoarseScanLimit) Some(coarseIndexFor(cents)) else None
-    val assignUdf = udf { (emb: Array[Float]) => chooseCells(cents, emb, 1, ci).head }
-    e.select(col("vec_id"), col("embedding"))
-      .withColumn("cell", assignUdf(col("embedding"))).persist()
-  }
-
   /** Build + persist the semdedup index over `e`: `centroids/` (the
     * fixed flat quantizer, k = n/targetCell — trained with two Lloyd
     * refinements while the n·k scans are affordable, raw min-wise-sample
@@ -798,7 +810,7 @@ object Similarity extends QueryModule {
             else ec
           kmeansRefine(train, seedCentroidsK(ec, k), iters = 2)._1
         }
-      val cells = assignCellsExact(ec, cents)
+      val cells = ivfBuildWith(ec, cents).cells
       try {
         val flags = semdedupPruneCells(cells, tau)
           .select(col("vec_id"), col("removed"))
@@ -848,7 +860,7 @@ object Similarity extends QueryModule {
     val cents = spark.read.parquet(new java.io.File(dir, "centroids").getPath)
       .orderBy("cell").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    val assigned = assignCellsExact(batch, cents)
+    val assigned = ivfBuildWith(batch, cents).cells
     try {
       val touched: Seq[Int] = assigned.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq
@@ -950,50 +962,45 @@ object Similarity extends QueryModule {
     }
 
   /** Fixture-deterministic purge-cell discovery for q_semdedup_delete,
-    * computed once per seed and cached beside its marker (disclosed
-    * untimed seed economics; the dry run mutates nothing).
+    * computed once per seed into the marker-gated sibling seed
+    * `<seedDir>-purge-cells` (disclosed untimed seed economics; the dry
+    * run mutates nothing). Kept out of the seed itself so scratch copies
+    * and derived seeds never carry it.
     */
   private[graft] def ensurePurgeCellsCache(spark: SparkSession, seedDir: String,
       batch: DataFrame): Seq[Long] = {
-    val cache = new java.io.File(seedDir, "_PURGE_CELLS")
-    if (cache.isFile) {
-      val s = new String(java.nio.file.Files.readAllBytes(cache.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      if (s.isEmpty) Seq.empty else s.split(',').map(_.toLong).toSeq
-    } else {
-      val cells = semdedupIndexIngest(spark, seedDir, batch, tau = 0.4,
-          dryRun = true)
+    val dir = Warehouse.ensureSeed(new java.io.File(seedDir + "-purge-cells")) { d =>
+      val cells = semdedupIndexIngest(spark, seedDir, batch, tau = 0.4, dryRun = true)
         .filter(col("removed")).select(col("cell")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      java.nio.file.Files.write(cache.toPath,
+      java.nio.file.Files.write(new java.io.File(d, "cells").toPath,
         cells.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      cells
+      ()
     }
+    val s = new String(java.nio.file.Files.readAllBytes(new java.io.File(dir, "cells").toPath),
+      java.nio.charset.StandardCharsets.UTF_8).trim
+    if (s.isEmpty) Seq.empty else s.split(',').map(_.toLong).toSeq
   }
 
   /** Seed-deterministic victim / previously-suppressed id caches for
-    * q_semdedup_rebuild (parquet — no driver collect), once per fixture.
+    * q_semdedup_rebuild (parquet — no driver collect), once per fixture,
+    * in the marker-gated sibling seed `<seedDir>-rebuild-caches`.
     * Returns (victimsPath, prevRemovedPath).
     */
   private[graft] def ensureRebuildCaches(spark: SparkSession,
       seedDir: String): (String, String) = {
-    val vCache = new java.io.File(seedDir, "_rebuild_victims")
-    val rCache = new java.io.File(seedDir, "_rebuild_prev_removed")
-    val okMarker = new java.io.File(seedDir, "_REBUILD_CACHE_OK")
-    if (!okMarker.isFile) {
+    val dir = Warehouse.ensureSeed(new java.io.File(seedDir + "-rebuild-caches")) { d =>
       val members = spark.read.parquet(new java.io.File(seedDir, "members").getPath)
       members.filter(col("removed")).select(col("vec_id"))
-        .coalesce(1).write.mode("overwrite").parquet(rCache.getPath)
+        .coalesce(1).write.mode("overwrite").parquet(new java.io.File(d, "prev_removed").getPath)
       members.filter(!col("removed"))
         .join(broadcast(members.filter(col("removed"))
           .select(col("cell")).distinct()), Seq("cell"))
         .groupBy(col("cell")).agg(min(col("vec_id")).as("vec_id"))
         .select(col("vec_id"))
-        .coalesce(1).write.mode("overwrite").parquet(vCache.getPath)
-      java.nio.file.Files.write(okMarker.toPath, Array.emptyByteArray)
-      ()
+        .coalesce(1).write.mode("overwrite").parquet(new java.io.File(d, "victims").getPath)
     }
-    (vCache.getPath, rCache.getPath)
+    (new java.io.File(dir, "victims").getPath, new java.io.File(dir, "prev_removed").getPath)
   }
 
   /** Warm both q_semdedup_delete / q_semdedup_rebuild discovery caches
@@ -1255,40 +1262,29 @@ object Similarity extends QueryModule {
     * (the seed window's ccell shuffle) is the same co-location the prune
     * stage needs anyway.
     *
-    * Fine-centroid state has TWO forms, switched on `joinAssign`
+    * The fine Lloyd loop has TWO forms, switched on `joinAssign`
     * (auto: k > [[JoinAssignCellLimit]]):
     *
-    *  - CLOSURE (small k): the k×Dim map (~256 B per cell) is
-    *    driver-resident and rides to tasks in the assignment UDF —
-    *    cheapest while the map fits a broadcast budget.
-    *  - JOIN (large k): the fine centroids live in a DataFrame keyed by
-    *    ccell and NEVER materialize on the driver — seeds, both Lloyd
-    *    recomputes, and the final assignment are joins of vectors
-    *    against centroids on ccell (each vector meets only its coarse
-    *    cell's ~√k fine centroids), with the per-vector argmax
-    *    collapsing MAP-SIDE (partial max_by) so the shuffle carries one
-    *    row per vector. This is the only shape that survives 10⁹+
-    *    vectors, where the fine-centroid table itself is GBs.
+    *  - CLOSURE (small k): [[kmeansRefineBy]] grouped on ccell — the k×Dim
+    *    map (~256 B per cell) is driver-resident and rides to tasks in
+    *    the assignment UDF, cheapest while the map fits a broadcast
+    *    budget.
+    *  - JOIN (large k, [[hierarchicalCellsJoin]]): the fine centroids
+    *    live in a DataFrame keyed by ccell and NEVER materialize on the
+    *    driver. This is the only shape that survives 10⁹+ vectors, where
+    *    the fine-centroid table itself is GBs.
     *
-    * Both paths are row-identical (SemDedupSpec forces and compares
-    * them): the same cosine kernel per (vector, centroid) pair, and
-    * ties broken to the LOWEST fine-cell id exactly like the closure's
-    * first-strictly-greater update.
+    * Both forms are row-identical (SemDedupSpec forces and compares
+    * them): the same cosine kernel per (vector, centroid) pair, ranked
+    * by the one cell order — ties to the LOWEST fine-cell id, a NaN
+    * cosine below every number.
     */
   private def hierarchicalCells(e: DataFrame, k: Int, targetCell: Int,
       joinAssign: Boolean = false): DataFrame = {
     val k1 = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
     val (coarse, _) = kmeansRefine(e, seedCentroidsK(e, k1), iters = 2)
-    val cAssign = udf { (emb: Array[Float]) =>
-      var best = 0; var bestSim = Double.MinValue; var ci = 0
-      while (ci < coarse.length) {
-        val s = cosineKernel(coarse(ci), emb)
-        if (s > bestSim) { bestSim = s; best = ci }
-        ci += 1
-      }
-      best
-    }
-    val assigned = e.withColumn("ccell", cAssign(col("embedding"))).persist()
+    val assigned = e.withColumn("ccell", udf(nearestCellOf(coarse)).apply(col("embedding")))
+      .persist()
     try {
       val w = Window.partitionBy("ccell").orderBy("vec_id")
       val seedDf = assigned
@@ -1298,84 +1294,59 @@ object Similarity extends QueryModule {
           ((col("rn") - 1) / targetCell).cast(IntegerType).as("fcell"),
           col("embedding").as("centroid"))
       if (joinAssign) hierarchicalCellsJoin(assigned, seedDf)
-      else hierarchicalCellsClosure(assigned, seedDf)
+      else {
+        val seeds = seedDf.collect().groupBy(_.getInt(0)).map { case (c, rows) =>
+          c -> rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
+        }
+        val (fine, _) = kmeansRefineBy(assigned, Some("ccell"), seeds, 2, None)
+        combinedCells(assigned.withColumn("fcell",
+          nearestInGroupUdf(fine)(col("ccell"), col("embedding"))("_1")))
+      }
     } finally { assigned.unpersist(); () }
   }
 
-  /** Closure-map fine assignment (small k): seeds collect to a driver
-    * map that rides in the assignment UDF.
+  /** Persisted (vec_id, embedding, cell) with the combined cell id:
+    * coarse in the high bits — fine ids stay below 2^20 until a single
+    * coarse cell holds 64M vectors.
     */
-  private def hierarchicalCellsClosure(assigned: DataFrame, seedDf: DataFrame): DataFrame = {
-    val seedRows = seedDf.collect()
-    var fine: Map[Int, Array[Array[Float]]] =
-      seedRows.groupBy(_.getInt(0)).map { case (c, rows) =>
-        c -> rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
-      }
-    def assignUdfFor(cents: Map[Int, Array[Array[Float]]]) =
-      udf { (c: Int, emb: Array[Float]) =>
-        val arr = cents(c)
-        var best = 0; var bestSim = Double.MinValue; var ci = 0
-        while (ci < arr.length) {
-          val s = cosineKernel(arr(ci), emb)
-          if (s > bestSim) { bestSim = s; best = ci }
-          ci += 1
-        }
-        best
-      }
-    for (_ <- 0 until 2) {
-      val fAssign = assignUdfFor(fine)
-      val stats = assigned
-        .select(col("ccell"), fAssign(col("ccell"), col("embedding")).as("fcell"),
-          col("embedding"))
-        .groupBy("ccell", "fcell")
-        .agg(array((0 until Dim).map(i => avg(col("embedding").getItem(i))): _*)
-          .as("mean"))
-        .collect()
-      val next = fine.map { case (c, arr) => c -> arr.map(_.clone()) }
-      stats.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).map(_.toFloat).toArray
-      }
-      fine = next
-    }
-    val fAssign = assignUdfFor(fine)
-    // Combined cell id: coarse in the high bits — fine ids stay below
-    // 2^20 until a single coarse cell holds 64M vectors.
-    val cells = assigned
+  private def combinedCells(fine: DataFrame): DataFrame = {
+    val cells = fine
       .select(col("vec_id"), col("embedding"),
-        (shiftleft(col("ccell").cast(LongType), 20) +
-          fAssign(col("ccell"), col("embedding"))).as("cell"))
+        (shiftleft(col("ccell").cast(LongType), 20) + col("fcell")).as("cell"))
       .persist()
     cells.count()
     cells
   }
 
-  /** Distributed fine assignment (large k): centroids stay in a
+  /** Distributed fine Lloyd loop (large k): centroids stay in a
     * ccell-keyed DataFrame end to end — no driver materialization, no
     * closure shipping. Each Lloyd pass and the final assignment is
     * vectors ⋈_ccell centroids → per-vector argmax (map-side partial
     * max_by, so the argmax shuffle carries ONE row per vector), and the
     * recompute updates only cells that received members, exactly like
-    * the closure path's clone-then-overwrite.
+    * the closure form's clone-then-overwrite.
     */
   private def hierarchicalCellsJoin(assigned: DataFrame, seedDf: DataFrame): DataFrame = {
     var fineDf = seedDf.persist()
     fineDf.count()
-    // Per-vector nearest fine centroid within the vector's coarse cell.
-    // Ties on the (deterministic, argument-symmetric) cosine break to
-    // the lowest fcell — `-fcell` in the max_by ordinal — matching the
-    // closure loop's strictly-greater update. The exploded
-    // vector×candidate intermediate is kept SKINNY (vec_id, fcell, sim
-    // — the embedding is consumed by the kernel in the same projection
-    // and dropped), and the argmax collapses map-side, so neither the
-    // explode nor its shuffle ever carries vector bytes; the vectors
-    // ride exactly once, in the final vec_id re-join.
+    // Per-vector nearest fine centroid within the vector's coarse cell,
+    // by the one cell order: Spark ranks NaN above every number, so the
+    // max_by ordinal leads with `not isnan(sim)` (a NaN cosine ranks
+    // below every number), then the cosine, then `-fcell` (ties to the
+    // lowest fcell). The exploded vector×candidate intermediate is kept
+    // SKINNY (vec_id, fcell, sim — the embedding is consumed by the
+    // kernel in the same projection and dropped), and the argmax
+    // collapses map-side, so neither the explode nor its shuffle ever
+    // carries vector bytes; the vectors ride exactly once, in the final
+    // vec_id re-join.
     def assignDf(fine: DataFrame): DataFrame = {
       val best = assigned
         .join(fine, Seq("ccell"))
         .select(col("vec_id"), col("fcell"),
           cosineUdf(col("embedding"), col("centroid")).as("sim"))
         .groupBy("vec_id")
-        .agg(max_by(col("fcell"), struct(col("sim"), -col("fcell"))).as("fcell"))
+        .agg(max_by(col("fcell"),
+          struct(!isnan(col("sim")), col("sim"), -col("fcell"))).as("fcell"))
       assigned.join(best, Seq("vec_id"))
     }
     for (_ <- 0 until 2) {
@@ -1391,11 +1362,7 @@ object Similarity extends QueryModule {
       fineDf.unpersist()
       fineDf = next
     }
-    val cells = assignDf(fineDf)
-      .select(col("vec_id"), col("embedding"),
-        (shiftleft(col("ccell").cast(LongType), 20) + col("fcell")).as("cell"))
-      .persist()
-    cells.count()
+    val cells = combinedCells(assignDf(fineDf))
     fineDf.unpersist()
     cells
   }
@@ -2511,37 +2478,34 @@ object Similarity extends QueryModule {
     s
   }
 
-  private def nearestL2(cents: Array[Array[Float]], p: Array[Float]): Int = {
-    var best = 0; var bestD = Double.MaxValue; var c = 0
-    while (c < cents.length) {
-      val d = l2sq(cents(c), p)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
+  /** Nearest centroid by L2 distance (the PQ sub-quantizers). */
+  private def nearestL2(cents: Array[Array[Float]], p: Array[Float]): Int =
+    argBest(cents.length)(c => -l2sq(cents(c), p))
 
-  /** Plain Lloyd on a driver-side point set (the PQ training sample:
-    * ≤ `PqSample` sub-vectors of `dsub` floats — microseconds of work).
-    * Deterministic: init = the first k points in sample order, and the
-    * sample itself is the min-wise uniform hash sample
-    * ([[seedCentroidsK]]), so same corpus ⇒ same codebook.
+  /** The one driver-side Lloyd loop, over a small point set (a PQ
+    * training sample's sub-vectors, or the IVF centroids the coarse group
+    * index clusters): `iters` rounds of assignment by `nearest`, then
+    * each cell's mean through `finish` (identity for L2, renormalization
+    * for spherical k-means); empty cells keep their centroid.
+    * Deterministic: same points and seeds ⇒ same centroids.
     */
-  private[graft] def lloydLocal(points: Array[Array[Float]], k: Int, iters: Int): Array[Array[Float]] = {
-    var cents = points.take(k).map(_.clone)
+  private[graft] def lloydLocal(points: Array[Array[Float]], seeds: Array[Array[Float]],
+      iters: Int)(nearest: (Array[Array[Float]], Array[Float]) => Int,
+      finish: Array[Float] => Array[Float] = identity): Array[Array[Float]] = {
+    var cents = seeds
     var it = 0
     while (it < iters) {
       val dim = points.head.length
       val sums = Array.fill(cents.length)(new Array[Double](dim))
       val counts = new Array[Int](cents.length)
       points.foreach { p =>
-        val c = nearestL2(cents, p)
+        val c = nearest(cents, p)
         counts(c) += 1
         var i = 0; while (i < dim) { sums(c)(i) += p(i); i += 1 }
       }
       cents = Array.tabulate(cents.length) { c =>
         if (counts(c) == 0) cents(c)
-        else { val s = sums(c); Array.tabulate(dim)(i => (s(i) / counts(c)).toFloat) }
+        else { val s = sums(c); finish(Array.tabulate(dim)(i => (s(i) / counts(c)).toFloat)) }
       }
       it += 1
     }
@@ -2554,23 +2518,10 @@ object Similarity extends QueryModule {
     */
   private[graft] val PqSample = 2048
 
-  /** Train the PQ codebook on a bounded deterministic sample (the same
-    * min-wise uniform hash sample the coarse quantizer seeds from —
-    * training on a sample is the standard practice; the codebook is a
-    * 4 KB object, the sample a few hundred KB, regardless of corpus
-    * size). One distributed TakeOrderedAndProject; Lloyd runs driver-side
-    * per sub-space.
-    */
-  private[graft] def pqTrain(embeddings: DataFrame, m: Int = PqM, ks: Int = PqKs,
-      sample: Int = PqSample, iters: Int = 10): PqCodebook =
-    pqTrainLocal(seedCentroidsK(embeddings, sample), m, ks, iters)
-
-  private[graft] def pqTrainLocal(sampleVecs: Array[Array[Float]], m: Int, ks: Int,
-      iters: Int): PqCodebook =
-    pqTrainOn(sampleVecs.map(l2Normalize), m, ks, iters)
-
-  /** Lloyd per sub-space over pre-transformed points (normalized whole
-    * vectors for plain PQ, coarse-centroid residuals for IVFADC).
+  /** Lloyd per sub-space over the coarse-centroid residuals of the
+    * training sample. Seeds are the first Ks points in sample order, and
+    * the sample itself is the min-wise uniform hash sample
+    * ([[seedCentroidsK]]), so same corpus ⇒ same codebook.
     */
   private def pqTrainOn(points: Array[Array[Float]], m: Int, ks: Int,
       iters: Int): PqCodebook = {
@@ -2586,7 +2537,7 @@ object Similarity extends QueryModule {
       new Thread(() => {
         val sv = points.map(v =>
           java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub))
-        cents(sub) = lloydLocal(sv, math.min(ks, sv.length), iters)
+        cents(sub) = lloydLocal(sv, sv.take(ks), iters)(nearestL2)
       })
     }
     threads.foreach(_.start())
@@ -2604,8 +2555,7 @@ object Similarity extends QueryModule {
   //   <q, x_norm> = <q, centroid_cell> + <q, r>
   // — the first term is one double per PROBED cell (nprobe of them,
   // computed driver-side), the second the usual ADC sum over the
-  // residual codebook's table. Plain whole-vector PQ kernels above
-  // remain for the kernel-level specs and non-IVF uses.
+  // residual codebook's table.
 
   /** Residual of a vector against its assigned coarse centroid. */
   private def residualOf(cent: Array[Float], v: Array[Float]): Array[Float] = {
@@ -2617,9 +2567,8 @@ object Similarity extends QueryModule {
   private[graft] def pqTrainResidual(sampleVecs: Array[Array[Float]],
       cents: Array[Array[Float]], m: Int = PqM, ks: Int = PqKs,
       iters: Int = 10): PqCodebook = {
-    val ci = if (cents.length >= CoarseScanLimit) Some(coarseIndexFor(cents)) else None
-    pqTrainOn(sampleVecs.map(v =>
-      residualOf(cents(chooseCells(cents, v, 1, ci).head), v)), m, ks, iters)
+    val nearest = nearestCellOf(cents)
+    pqTrainOn(sampleVecs.map(v => residualOf(cents(nearest(v)), v)), m, ks, iters)
   }
 
   private[graft] def pqEncodeResidual(cb: PqCodebook, cent: Array[Float],
@@ -2669,17 +2618,6 @@ object Similarity extends QueryModule {
       cell: Int, query: Array[Float], code: Array[Byte]): Double =
     adcSum(adcTable(cb, query), centDots(cents, Seq(cell), query)(cell), code)
 
-  /** Encode one vector: normalize, then per sub-space the nearest codebook
-    * centroid's index. M bytes out.
-    */
-  private[graft] def pqEncode(cb: PqCodebook, v: Array[Float]): Array[Byte] = {
-    val n = l2Normalize(v)
-    Array.tabulate(cb.m) { sub =>
-      val sv = java.util.Arrays.copyOfRange(n, sub * cb.dsub, (sub + 1) * cb.dsub)
-      nearestL2(cb.cents(sub), sv).toByte
-    }
-  }
-
 
   /** ADC lookup table for one query: `table(sub)(code)` = inner product of
     * the normalized query's sub-vector with that code's centroid, so
@@ -2712,9 +2650,8 @@ object Similarity extends QueryModule {
   private[graft] def pqAuditErr(cb: PqCodebook, cents: Array[Array[Float]],
       sampleVecs: Array[Array[Float]]): (Double, Seq[(Double, Double)]) = {
     if (sampleVecs.isEmpty) return (0.0, Seq.empty)
-    val ci = if (cents.length >= CoarseScanLimit) Some(coarseIndexFor(cents)) else None
     val normed = sampleVecs.map(l2Normalize)
-    val cells = sampleVecs.map(v => chooseCells(cents, v, 1, ci).head)
+    val cells = sampleVecs.map(nearestCellOf(cents))
     val codes = sampleVecs.indices.map(i =>
       pqEncodeResidual(cb, cents(cells(i)), sampleVecs(i))).toArray
     val stride = math.max(1, normed.length / 8)
@@ -2756,12 +2693,6 @@ object Similarity extends QueryModule {
 
   /** Ladder thresholds for the conditioned ADC-error audit. */
   private[graft] val AdcLadder: Array[Double] = Array(0.0, 0.25, 0.5, 0.75)
-
-  /** ADC approximate cosine of one code against one query — the spec's
-    * unit handle on quantization error.
-    */
-  private[graft] def adcApprox(cb: PqCodebook, query: Array[Float], code: Array[Byte]): Double =
-    adcSum(adcTable(cb, query), 0.0, code)
 
   /** ADC approximation slack FLOOR for range pre-filtering: a true match
     * at exactly tau scores at least tau − margin under ADC, so the

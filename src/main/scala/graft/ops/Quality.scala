@@ -89,7 +89,9 @@ object Quality extends QueryModule {
     // the PK, reproducible on both engines) gets one of five planted
     // corruption modes. The routing logic itself is exactly what a
     // production gate runs on the raw batch.
-    val sel = pmod(col("l_orderkey") * 31 + col("l_linenumber"), lit(97L))
+    // The key is reduced before the multiply, so no key can overflow it
+    // under ANSI (equal to pmod(key * 31 + line, 97) for every key).
+    val sel = pmod(pmod(col("l_orderkey"), lit(97L)) * 31 + col("l_linenumber"), lit(97L))
     val mode = pmod(col("l_orderkey") + col("l_linenumber"), lit(5L))
     val li = Tables(spark, sfDir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
@@ -254,19 +256,19 @@ object Quality extends QueryModule {
     "q_dq_quarantine" -> QueryDef(dqQuarantine, Some("""
       WITH c AS (
         SELECT l_orderkey, l_linenumber,
-               CASE WHEN (l_orderkey * 31 + l_linenumber) % 97 = 0
+               CASE WHEN ((l_orderkey % 97) * 31 + l_linenumber) % 97 = 0
                      AND (l_orderkey + l_linenumber) % 5 = 0
                     THEN NULL ELSE l_shipdate END AS l_shipdate,
-               CASE WHEN (l_orderkey * 31 + l_linenumber) % 97 = 0
+               CASE WHEN ((l_orderkey % 97) * 31 + l_linenumber) % 97 = 0
                      AND (l_orderkey + l_linenumber) % 5 = 1
                     THEN 999.0 ELSE l_quantity END AS l_quantity,
-               CASE WHEN (l_orderkey * 31 + l_linenumber) % 97 = 0
+               CASE WHEN ((l_orderkey % 97) * 31 + l_linenumber) % 97 = 0
                      AND (l_orderkey + l_linenumber) % 5 = 2
                     THEN 0.9 ELSE l_discount END AS l_discount,
-               CASE WHEN (l_orderkey * 31 + l_linenumber) % 97 = 0
+               CASE WHEN ((l_orderkey % 97) * 31 + l_linenumber) % 97 = 0
                      AND (l_orderkey + l_linenumber) % 5 = 3
                     THEN -1.0 ELSE l_extendedprice END AS l_extendedprice,
-               CASE WHEN (l_orderkey * 31 + l_linenumber) % 97 = 0
+               CASE WHEN ((l_orderkey % 97) * 31 + l_linenumber) % 97 = 0
                      AND (l_orderkey + l_linenumber) % 5 = 4
                     THEN 'X' ELSE l_returnflag END AS l_returnflag
         FROM lineitem),

@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guard: the index lifecycle (writer lease, swap recovery, atomic
-  * renames, batch-id allocation) lives only in core.PersistedIndex, and
-  * the bounded-stream run (writeStream, AvailableNow, checkpoint, await)
-  * only in core.BoundedStream, so no module can grow another hand-rolled
-  * copy of either.
+  * renames, batch-id allocation) lives only in core.PersistedIndex, the
+  * bounded-stream run (writeStream, AvailableNow, checkpoint, await)
+  * only in core.BoundedStream, and the nearest-centroid argmax only in
+  * Similarity.argBest, so no module can grow another hand-rolled copy
+  * of any of them.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
 
@@ -41,6 +42,26 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
       assert(!line.contains(p), s"${f.getName}:${i + 1} hand-rolls a stream run ($p)")
     val runner = read(Runner)
     StreamRun.foreach(p => assert(runner.contains(p), s"BoundedStream no longer contains $p"))
+  }
+
+  /** A running-best accumulator: `var best…`, or a score compared
+    * against `best…` (`if (s > bestSim)`, `if (d < bestD)`).
+    */
+  private val Argmax = """\bvar best\w*|[<>]=? *best\w*""".r
+
+  test("the nearest-centroid argmax loop lives only in Similarity.argBest") {
+    val kernelFile = new java.io.File("src/main/scala/graft/ext/Similarity.scala")
+    val kernel = read(kernelFile).linesIterator.indexWhere(_.contains("def argBest("))
+    assert(kernel >= 0, "Similarity.argBest is gone")
+    val hits = for {
+      f <- sources("src/main/scala/graft/ext")
+      (line, i) <- read(f).linesIterator.zipWithIndex
+      if Argmax.findFirstIn(line).isDefined
+    } yield (f, i, line)
+    assert(hits.nonEmpty, "argBest no longer holds the accumulator")
+    for ((f, i, line) <- hits)
+      assert(f == kernelFile && i > kernel && i <= kernel + 3,
+        s"${f.getName}:${i + 1} hand-rolls a nearest-centroid argmax: ${line.trim}")
   }
 
   test("the guarded patterns are the ones the template uses") {

@@ -76,6 +76,24 @@ class QualitySpec extends AnyFunSuite with SparkTest {
       "zz_total_quarantined" -> ((2L, 1L, 45L))))
   }
 
+  test("q_dq_quarantine: the contamination selector takes keys past 2.97e17 without overflow") {
+    // 3e17 * 31 overflows a bigint; the selector reduces the key mod 97
+    // first. (3e17 % 97) * 31 + 55 = 582 = 6 * 97, so (3e17, 55) is
+    // contaminated, in mode (3e17 + 55) % 5 = 0: its shipdate is nulled.
+    val k = 300000000000000000L
+    val lines = Seq(
+      QLine(k, 1, Some(10), Some(0.05), 100, "A", Some(D)),    // clean, uncontaminated
+      QLine(k, 55, Some(10), Some(0.05), 100, "A", Some(D)))   // contaminated -> shipdate
+    import spark.implicits._
+    val dir = graft.core.TempDirs.create("graft_quality_spec")
+    lines.toDF().write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val got = SparkEntry.queries("q_dq_quarantine")(spark, dir).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDecimal(3).longValueExact))).toMap
+    assert(got == Map(
+      "completeness:l_shipdate" -> ((1L, k, k * 10 + 55)),
+      "zz_total_quarantined" -> ((1L, k, k * 10 + 55))))
+  }
+
   test("a clean batch passes every rule with ratio exactly 1.0") {
     val lines = Seq(
       QLine(1, 1, Some(10), Some(0.05), 100, "A", Some(D)),

@@ -307,16 +307,20 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // the co-partitioned ccell join instead (VERDICT r9 #2). Same corpus
     // shape as the forced two-level test; both paths must produce the
     // SAME (vec_id -> cell) assignment — same kernel per pair, ties to
-    // the lowest fcell — and the prune contract must hold on the join
-    // path's cells.
+    // the lowest fcell, a NaN cosine below every number — and the prune
+    // contract must hold on the join path's cells.
     import spark.implicits._
     val rnd = new scala.util.Random(29)
     val base = (0 until 600).map { i =>
       (i.toLong, Array.fill(Dim)((rnd.nextDouble() * 2 - 1).toFloat))
     }
+    // A zero-norm row: its cosine to every centroid is NaN, so it lands
+    // in coarse cell 0, and its id is the lowest there, so it seeds fine
+    // cell 0 with a zero centroid — which no other row may then pick.
+    val zero = (-1L, new Array[Float](Dim))
     val big = base ++ (0 until NPlanted).map { i =>
       (2000L + i, base(i)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.02f))
-    }
+    } :+ zero
     val df = big.toDF("vec_id", "embedding")
     val closure = Similarity.semdedupCells(df, targetCell = 2).persist()
     val joined = Similarity.semdedupCells(df, targetCell = 2,
@@ -340,6 +344,46 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       assert(staged == naive,
         s"join-path staged!=naive on ${staged.keySet.filter(k => staged(k) != naive(k))}")
     } finally { closure.unpersist(); joined.unpersist(); () }
+  }
+
+  test("the discovery caches are marker-gated sibling seeds: a cache with no marker is rebuilt") {
+    import spark.implicits._
+    import graft.core.{TempDirs, Warehouse}
+    // The seed holds the planted copies (suppressed), and the batch
+    // carries fresh near-copies of base members (suppressed on ingest).
+    val rnd = new scala.util.Random(41)
+    val batch = (0 until 10).map { i =>
+      (5000L + i, corpus(i)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.02f))
+    }.toDF("vec_id", "embedding")
+    val seed = new java.io.File(TempDirs.create("graft_semdedup_caches"), "seed")
+    Warehouse.ensureSeed(seed) { d =>
+      Similarity.writeSemdedupIndex(spark, d, corpus.toDF("vec_id", "embedding"), tau = Tau)
+    }
+    val expected = Similarity.semdedupIndexIngest(spark, seed.getPath, batch, tau = Tau,
+        dryRun = true)
+      .filter(col("removed")).select(col("cell")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(expected.nonEmpty, "the planted copies must be suppressed somewhere")
+    val cells = Similarity.ensurePurgeCellsCache(spark, seed.getPath, batch)
+    assert(cells.toSet == expected)
+    val (victims, prevRemoved) = Similarity.ensureRebuildCaches(spark, seed.getPath)
+    def ids(path: String): Set[Long] = spark.read.parquet(path).collect().map(_.getLong(0)).toSet
+    val (v0, r0) = (ids(victims), ids(prevRemoved))
+    assert(r0.nonEmpty && v0.nonEmpty)
+    // Nothing lands in the seed itself, so no scratch copy carries a cache.
+    assert(seed.list().toSet == Set("members", "centroids", "manifest.json", "_SEEDED"),
+      seed.list().toSeq)
+    // Torn writes: the content is garbage or gone and no marker was
+    // written. Both caches must be rebuilt, not read back.
+    val purgeDir = new java.io.File(seed.getPath + "-purge-cells")
+    new java.io.File(purgeDir, "_SEEDED").delete()
+    java.nio.file.Files.write(new java.io.File(purgeDir, "cells").toPath, "7".getBytes)
+    assert(Similarity.ensurePurgeCellsCache(spark, seed.getPath, batch).toSet == expected)
+    val rebuildDir = new java.io.File(seed.getPath + "-rebuild-caches")
+    new java.io.File(rebuildDir, "_SEEDED").delete()
+    Warehouse.deleteRecursively(new java.io.File(victims))
+    val (victims2, prevRemoved2) = Similarity.ensureRebuildCaches(spark, seed.getPath)
+    assert(ids(victims2) == v0 && ids(prevRemoved2) == r0)
   }
 
   test("survivors are pairwise non-duplicate within every cell") {

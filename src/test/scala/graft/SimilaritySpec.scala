@@ -831,8 +831,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // exact triangle-inequality branch-and-bound over a grouped centroid
     // index instead of scanning all C. The bound is conservative, so the
     // output must be IDENTICAL to the linear scan — including tie
-    // behavior (duplicated centroids planted below) and edge widths
-    // (nprobe 1 and > group size).
+    // behavior (duplicated centroids planted below), edge widths
+    // (nprobe 1 and > group size), and zero-norm centroids and queries,
+    // whose NaN cosines rank below every number (the linear reference's
+    // sort puts NaN last).
     val rnd = new scala.util.Random(31)
     val dim = 16
     val c = 5000 // > CoarseScanLimit = 4096
@@ -842,21 +844,34 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       if (i >= 4990) cents0(i - 4990) // 10 duplicated centroids → exact ties
       else Array.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat)
     }
+    cents(123) = new Array[Float](dim)
     val ci = Similarity.buildCoarseIndex(cents)
-    def linear(q: Array[Float], np: Int): Seq[Int] = cents.zipWithIndex
+    def linear(cents: Array[Array[Float]], q: Array[Float], np: Int): Seq[Int] = cents.zipWithIndex
       .map { case (cent, i) => (i, Similarity.cosineKernel(cent, q)) }
       .sortBy(-_._2).take(np).map(_._1).toSeq
-    (0 until 200).foreach { qi =>
+    (0 until 201).foreach { qi =>
       val q =
         if (qi < 20) cents(rnd.nextInt(c)).map(v => v + 1e-4f) // near-centroid anchors
+        else if (qi == 200) new Array[Float](dim)
         else Array.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat)
       Seq(1, 4, 16, 100).foreach { np =>
         val exact = Similarity.topCellsExact(ci, cents, q, np)
-        val lin = linear(q, np)
+        val lin = linear(cents, q, np)
         assert(exact == lin,
           s"query $qi nprobe $np diverged:\n  b&b:    $exact\n  linear: $lin")
       }
+      assert(Similarity.nearestCell(cents, q) == linear(cents, q, 1).head, s"query $qi kernel")
     }
+    // Sims [0.1, 0.9, NaN] below CoarseScanLimit: the linear selector
+    // must not let the zero-norm cell's NaN displace the best cell.
+    val small = Array(Array(0.1f, math.sqrt(0.99).toFloat),
+      Array(0.9f, math.sqrt(0.19).toFloat), Array(0f, 0f))
+    val q = Array(1f, 0f)
+    Seq(1, 2, 3).foreach { np =>
+      assert(Similarity.chooseCells(small, q, np) == linear(small, q, np), s"nprobe $np")
+    }
+    assert(Similarity.chooseCells(small, q, 1) == Seq(1))
+    assert(Similarity.nearestCell(small, q) == 1)
   }
 
   // ---- IVF-PQ ----------------------------------------------------------
@@ -881,41 +896,54 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(pqShortlist(10, PqRefine, 9) == 120)
   }
 
-  test("pqTrain is deterministic and codes are M bytes") {
+  /** The IVFADC kernels' inputs on the spec corpus: the coarse quantizer
+    * the persisted index trains, the PQ training sample, and each
+    * vector's nearest cell.
+    */
+  private def residualSetup(): (Array[Array[Float]], Array[Array[Float]], Map[Long, Int]) = {
     import spark.implicits._
     val df = corpus.toDF("vec_id", "embedding")
-    val cb1 = Similarity.pqTrain(df)
-    val cb2 = Similarity.pqTrain(df)
+    val cents = Similarity.seedCentroids(df)
+    val sample = Similarity.seedCentroidsK(df, Similarity.PqSample)
+    (cents, sample, corpus.map { case (id, v) => id -> Similarity.nearestCell(cents, v) }.toMap)
+  }
+
+  test("pqTrainResidual is deterministic and codes are M bytes") {
+    val (cents, sample, cellOf) = residualSetup()
+    val cb1 = Similarity.pqTrainResidual(sample, cents)
+    val cb2 = Similarity.pqTrainResidual(sample, cents)
     assert(cb1.m == Similarity.PqM && cb1.dsub == Dim / Similarity.PqM)
     (0 until cb1.m).foreach { sub =>
       cb1.cents(sub).zip(cb2.cents(sub)).foreach { case (a, b) =>
         assert(a.sameElements(b), s"codebook sub-space $sub not deterministic")
       }
     }
-    val code = Similarity.pqEncode(cb1, corpus.head._2)
+    val (id, v) = corpus.head
+    val code = Similarity.pqEncodeResidual(cb1, cents(cellOf(id)), v)
     assert(code.length == Similarity.PqM,
       s"code must be ${Similarity.PqM} bytes, got ${code.length}")
-    assert(Similarity.pqEncode(cb1, corpus.head._2).sameElements(code),
+    assert(Similarity.pqEncodeResidual(cb1, cents(cellOf(id)), v).sameElements(code),
       "encoding must be deterministic")
   }
 
   test("ADC on codes alone ranks each planted twin's original at the top") {
-    // The pure quantization-quality gate (no IVF, no re-rank): encode the
-    // whole corpus, score every CODE against each planted copy's query
+    // The pure quantization-quality gate (no probe, no re-rank): encode
+    // the whole corpus, score every CODE against each planted copy's query
     // vector via the ADC table, and the true neighbor must rank in the
     // ADC top-3 — i.e. the 8-byte codes preserve the ranking signal the
     // probe's shortlist cut depends on. A broken ADC (constant scores,
     // wrong table indexing) fails here even though exact re-rank would
     // mask it downstream.
-    import spark.implicits._
-    val df = corpus.toDF("vec_id", "embedding")
-    val cb = Similarity.pqTrain(df)
-    val codes = corpus.map { case (id, v) => id -> Similarity.pqEncode(cb, v) }
+    val (cents, sample, cellOf) = residualSetup()
+    val cb = Similarity.pqTrainResidual(sample, cents)
+    val codes = corpus.map { case (id, v) =>
+      id -> Similarity.pqEncodeResidual(cb, cents(cellOf(id)), v)
+    }
     val lookup = corpus.toMap
     val found = (0 until NPlanted).count { i =>
       val q = lookup(1000L + i)
       val top = codes.filter(_._1 != 1000L + i)
-        .map { case (id, c) => (id, Similarity.adcApprox(cb, q, c)) }
+        .map { case (id, c) => (id, Similarity.adcApproxResidual(cb, cents, cellOf(id), q, c)) }
         .sortBy { case (id, s) => (-s, id) }.take(3).map(_._1)
       top.contains(i.toLong)
     }
