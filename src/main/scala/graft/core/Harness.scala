@@ -35,8 +35,37 @@ import org.apache.spark.sql.SparkSession
   *    ScaleGen disables it (it writes replicas; split width of the
   *    source read is irrelevant and the 10 tables are re-written
   *    partitioned anyway), and so does the spec session (tiny inputs).
+  *  - `spark.buffer.pageSize` on a `local` master ([[pageSizeFor]] this
+  *    JVM's max heap): the smallest power of two, at least 1 MiB, whose
+  *    8,192-entry Tungsten page table (`TaskMemoryManager`'s
+  *    `PAGE_TABLE_SIZE`; a task that needs page 8,193 throws) still
+  *    covers the whole heap, so one task can still address all of
+  *    execution memory. Spark's own default is the execution pool / cores
+  *    / 16, rounded up to a power of two (16 MiB at a 3 GiB heap on
+  *    `local[4]`). Sorts and hash maps hold their pages across young
+  *    collections, so big pages are promoted into the old generation,
+  *    which no collection empties during a run (perfbench's
+  *    `merge_restore` on a 4-vCPU VM ended with 419 MB there at 16 MiB
+  *    pages, 101 MB at 1 MiB, and peak RSS fell from 1,955 to
+  *    1,520 MB). Other masters keep Spark's size: their executors have
+  *    their own heaps.
   */
 object Harness {
+
+  /** Tungsten's page table size (`TaskMemoryManager.PAGE_TABLE_SIZE`). */
+  val PageTableSize = 8192
+
+  /** The certified Tungsten page size for a max heap of `heapBytes`:
+    * the smallest power of two, at least 1 MiB, such that
+    * [[PageTableSize]] pages cover the heap.
+    */
+  def pageSizeFor(heapBytes: Long): Long = {
+    var page = 1L << 20
+    while (PageTableSize * page < heapBytes) page <<= 1
+    page
+  }
+
+  private val LocalMaster = """local(\[.*\])?""".r
 
   /** The certified conf as a key→value map. Pure: no session is built.
     *
@@ -93,6 +122,8 @@ object Harness {
       when(staticPlans)("spark.sql.adaptive.enabled" -> "false") ++
       when(bigDriverResults)("spark.driver.maxResultSize" -> "8g") ++
       codegenCache.map("spark.sql.codegen.cache.maxEntries" -> _) ++
+      when(LocalMaster.matches(master))("spark.buffer.pageSize" ->
+        s"${pageSizeFor(Runtime.getRuntime.maxMemory) >> 20}m") ++
       when(certifiedStreaming)(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

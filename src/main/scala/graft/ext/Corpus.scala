@@ -34,6 +34,13 @@ object Corpus extends QueryModule {
     * text. Docs
     * shorter than 8 words contribute their whole text as one shingle
     * (the q_minhash_near_dup convention).
+    *
+    * Collision bound: with D distinct shingles corpus-wide, about
+    * D²/2⁶⁵ pairs of them share a 64-bit digest (~2.7·10⁴ at D = 10¹²).
+    * Each such pair is a possible false contamination flag: a document
+    * whose shingle only collides with an eval shingle is flagged and its
+    * `n_shared` counts the collision. At fixture scale (D < 10⁶) the
+    * expected count is below 10⁻⁷.
     */
   private def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     // spread (r17): the 8-gram digest explode is scan-side on both legs.

@@ -199,6 +199,14 @@ object Dedup extends QueryModule {
     * island merge is one thin (doc_id, pos)-rows window per doc. Docs
     * shorter than SpanGram words have no full shingle and are skipped
     * (they are exact-dedup's job, not span removal's).
+    *
+    * Collision bound: with D distinct shingles corpus-wide, about
+    * D²/2⁶⁵ pairs of them share a 64-bit digest (~2.7·10⁴ at D = 10¹²).
+    * Each such pair is a possible phantom span: a shingle that appears
+    * in one document only counts as duplicated when its digest collides
+    * with another document's, which adds or widens a span here and
+    * raises that document's `dup_frac` in [[dedupSpanStats]]. At fixture
+    * scale (D < 10⁶) the expected count is below 10⁻⁷.
     */
   private def dedupSpans(spark: SparkSession, sfDir: String): DataFrame =
     spansOf(Tables(spark, sfDir, "documents"))
@@ -296,7 +304,8 @@ object Dedup extends QueryModule {
     * is the exact covered-token count. dup_frac floor-truncates to 4
     * decimals (the cross-engine ratio convention); the flag compares the
     * truncated value, so it is deterministic across engines too. Scale
-    * cost: q_dedup_spans + one thin (doc_id, stats) aggregate.
+    * cost: q_dedup_spans + one thin (doc_id, stats) aggregate. Inherits
+    * the digest collision bound stated on [[dedupSpans]].
     */
   private def dedupSpanStats(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables(spark, sfDir, "documents")

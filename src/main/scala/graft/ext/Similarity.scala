@@ -875,12 +875,10 @@ object Similarity extends QueryModule {
           Some(col("cell_grp").isin(touchedGrps: _*)))
         .join(broadcast(assigned.select(col("cell")).distinct()), Seq("cell"))
         .select(col("vec_id"), col("embedding"), col("cell"))
-      // Same-rounded-cosine contract as semdedupPruneCells: both engines
-      // compare the 4-decimal value against tau.
       def dominated(lower: DataFrame, upper: DataFrame): DataFrame =
         lower.alias("a").join(upper.alias("b"),
           col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-          .where(round(cosineUdf(col("a.embedding"), col("b.embedding")), 4) >= tau)
+          .where(semdedupDup(tau))
           .select(col("b.vec_id").as("vec_id")).distinct()
       val removedIds = dominated(members, assigned)
         .unionByName(dominated(assigned, assigned)).distinct()
@@ -1367,18 +1365,28 @@ object Similarity extends QueryModule {
     cells
   }
 
+  /** The dominance test over a pair aliased `a` (lower id) and `b`.
+    * Threshold on the 4-decimal-rounded cosine: the oracle recomputes
+    * the same comparison, and rounding both sides makes the boundary
+    * robust to cross-engine double-summation jitter (the same contract
+    * every verified-cosine entry uses). Semantically inert at the
+    * production tau margins (near-dup ~0.99 vs random ~0). A zero-norm
+    * embedding's cosine is undefined (NaN), which Spark and DuckDB both
+    * rank above every number, so it is tested first: an undefined
+    * cosine is never a duplicate.
+    */
+  private def semdedupDup(tau: Double): Column = {
+    val c = cosineUdf(col("a.embedding"), col("b.embedding"))
+    !isnan(c) && round(c, 4) >= tau
+  }
+
   /** The prune stage over an assigned-cell corpus (dominance rule). */
   private[graft] def semdedupPruneCells(cells: DataFrame, tau: Double)
       : DataFrame = {
-    // Threshold on the 4-decimal-rounded cosine: the oracle recomputes
-    // the same comparison, and rounding both sides makes the boundary
-    // robust to cross-engine double-summation jitter (the same contract
-    // every verified-cosine entry uses). Semantically inert at the
-    // production tau margins (near-dup ~0.99 vs random ~0).
     val dup = cells.alias("a")
       .join(cells.alias("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .where(round(cosineUdf(col("a.embedding"), col("b.embedding")), 4) >= tau)
+      .where(semdedupDup(tau))
       .select(col("b.vec_id").as("vec_id")).distinct()
     cells
       .join(dup.withColumn("removed", lit(true)), Seq("vec_id"), "left")
@@ -2965,7 +2973,8 @@ object Similarity extends QueryModule {
                      range(1, 65) t2(i)),
       sims AS (SELECT va, vb, sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
                FROM terms GROUP BY va, vb),
-      dup AS (SELECT DISTINCT vb AS vec_id FROM sims WHERE round(c, 4) >= 0.4)
+      dup AS (SELECT DISTINCT vb AS vec_id FROM sims
+               WHERE NOT isnan(c) AND round(c, 4) >= 0.4)
       SELECT tb.vec_id, CAST(tb.cell AS BIGINT) AS cell,
              (d.vec_id IS NOT NULL) AS removed
       FROM t tb LEFT JOIN dup d ON d.vec_id = tb.vec_id
@@ -3040,7 +3049,8 @@ object Similarity extends QueryModule {
                      range(1, 65) t(i)),
       sims AS (SELECT va, vb, sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) AS c
                FROM terms GROUP BY va, vb),
-      dup AS (SELECT DISTINCT vb AS vec_id FROM sims WHERE round(c, 4) >= 0.4)
+      dup AS (SELECT DISTINCT vb AS vec_id FROM sims
+               WHERE NOT isnan(c) AND round(c, 4) >= 0.4)
       SELECT c2.vec_id, CAST(c2.cell AS BIGINT) AS cell,
              (d.vec_id IS NOT NULL) AS removed
       FROM cells c2 LEFT JOIN dup d ON d.vec_id = c2.vec_id

@@ -13,6 +13,9 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
   private val rocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** The Tungsten page every local map certifies for this JVM's heap. */
+  private val page = s"${Harness.pageSizeFor(Runtime.getRuntime.maxMemory) >> 20}m"
+
   test("Harness.session(cpus) with default deltas applies exactly the certified map") {
     // What Verify and the perfbench harness run.
     assert(Harness.conf("local[8]", 8) == Map(
@@ -24,6 +27,7 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.files.maxPartitionBytes" -> "4m",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.buffer.pageSize" -> page,
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
   }
@@ -45,6 +49,28 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       base + ("spark.local.dir" -> "/dev/shm/x/spark_local"))
   }
 
+  test("a master that is not local keeps Spark's own page size") {
+    for (master <- Seq("spark://head:7077", "yarn", "local-cluster[2,1,1024]")) {
+      assert(Harness.conf(master, 8) ==
+        (Harness.conf("local[8]", 8) - "spark.buffer.pageSize" + ("spark.master" -> master)))
+      assert(!Engine.sessionConf(master, 8).contains("spark.buffer.pageSize"), master)
+    }
+    for (master <- Seq("local", "local[*]", "local[4,2]"))
+      assert(Harness.conf(master, 8)("spark.buffer.pageSize") == page, master)
+  }
+
+  test("the page is the smallest power of two >= 1 MiB whose 8,192-page table covers the heap") {
+    val GiB = 1L << 30
+    val MiB = 1L << 20
+    for ((heap, want) <- Seq(3 * GiB -> MiB, 8 * GiB -> MiB, 32 * GiB -> 4 * MiB,
+        128 * GiB -> 16 * MiB, 8 * GiB + 1 -> 2 * MiB, 256 * MiB -> MiB)) {
+      val got = Harness.pageSizeFor(heap)
+      assert(got == want, s"heap $heap")
+      assert(Harness.PageTableSize * got >= heap, s"heap $heap")
+      assert(got == MiB || Harness.PageTableSize * (got / 2) < heap, s"heap $heap")
+    }
+  }
+
   test("Engine.session is the certified map plus app name and AQE on") {
     assert(Engine.sessionConf("local[*]", 32) == Map(
       "spark.master" -> "local[*]",
@@ -56,6 +82,7 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.hadoop.fs.file.impl" -> "graft.core.LocalFileSystem",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.buffer.pageSize" -> page,
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
       "spark.sql.files.maxPartitionBytes" -> "4m"))
@@ -70,11 +97,42 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
       "spark.hadoop.fs.file.impl" -> "graft.core.LocalFileSystem",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.LocalFs",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.buffer.pageSize" -> page,
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
     SparkTest.conf.foreach { case (k, v) =>
       assert(spark.sparkContext.getConf.get(k) == v, k)
     }
+  }
+
+  test("the spec session runs the certified page; sorts and groups across many pages match a driver reference") {
+    import org.apache.spark.sql.functions._
+    val pageBytes = org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
+    assert(pageBytes == Harness.pageSizeFor(Runtime.getRuntime.maxMemory))
+    // One input partition, so one sort task and one partial-aggregate
+    // task hold every row: 32 pages of 1 KiB payloads for the sort, 16
+    // pages of distinct 1 KiB grouping keys for the hash map, plus one
+    // row three pages wide (a page of its own in both).
+    val width = 1024
+    val n = (32 * pageBytes / width).toInt
+    val bigId = n / 3L
+    val big = 3 * pageBytes.toInt
+    def payload(id: Long): String = {
+      val g = (id % (n / 2)).toString
+      if (id == bigId) "y" * big else g + "x" * (width - g.length)
+    }
+    val rows = spark.range(0, n, 1, 1).select(col("id"),
+      pmod(col("id") * 7919, lit(n.toLong)).as("key"),
+      when(col("id") === bigId, repeat(lit("y"), big))
+        .otherwise(rpad(pmod(col("id"), lit(n / 2L)).cast("string"), width, "x"))
+        .as("payload"))
+    val sorted = rows.sortWithinPartitions(col("key").desc).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    val ids = 0L until n
+    assert(sorted == ids.map(id => (id, id * 7919 % n, payload(id))).sortBy(-_._2))
+    val grouped = rows.groupBy(col("payload")).agg(count(lit(1)), sum(col("id"))).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(grouped == ids.groupBy(payload).map { case (p, g) => (p, g.size.toLong, g.sum) }.toSet)
   }
 
   // ---- seed-cache fixture tags ---------------------------------------

@@ -403,4 +403,26 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       } assert(cos(emba, embb) < Tau, s"surviving near-dup pair ($ida,$idb)")
     } finally { cells.unpersist(); () }
   }
+
+  test("a zero-norm vector (undefined cosine) neither removes nor is removed, prune and ingest") {
+    import spark.implicits._
+    // One cell {1:(1,0), 2:(0,0), 3:(0,1)} (the first two of Dim
+    // coordinates) at tau 0.4: 1 and 3 are orthogonal and 2's cosine
+    // with either is NaN, which Spark ranks above every number, so a
+    // bare `>= tau` would remove 2 and 3.
+    def vec(xs: Float*): Array[Float] = xs.toArray ++ Array.fill(Dim - xs.size)(0f)
+    val (v1, v2, v3) = ((1L, vec(1f, 0f)), (2L, vec(0f, 0f)), (3L, vec(0f, 1f)))
+    val pruned = Similarity.semdedupPruneCells(Seq(v1, v2, v3)
+        .map { case (id, e) => (id, e, 0) }.toDF("vec_id", "embedding", "cell"), 0.4)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(pruned == Map(1L -> false, 2L -> false, 3L -> false))
+    // The ingest path: a one-vector seed trains the one centroid (1,0),
+    // so the batch lands in the seed's cell.
+    val dir = graft.core.TempDirs.create("graft_semdedup_zero_norm")
+    Similarity.writeSemdedupIndex(spark, dir, Seq(v1).toDF("vec_id", "embedding"), tau = 0.4)
+    val ingested = Similarity.semdedupIndexIngest(spark, dir,
+        Seq(v2, v3).toDF("vec_id", "embedding"), tau = 0.4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    assert(ingested.toSet == Set((2L, 0L, false), (3L, 0L, false)))
+  }
 }
