@@ -90,7 +90,7 @@ object Bench {
     catch { case _: Throwable => () }
     try { graft.ext.Similarity.ensureIvfIndex(spark, sfDir); () }
     catch { case _: Throwable => () }
-    try { graft.ext.Dedup.ensureMinhashIndex(spark, sfDir); () }
+    try { graft.ext.NearDup.MinhashIndex.ensure(spark, sfDir); () }
     catch { case _: Throwable => () }
     try { graft.ext.Similarity.ensureSemdedupIndex(spark, sfDir); () }
     catch { case _: Throwable => () }
@@ -109,7 +109,7 @@ object Bench {
     // per-iteration base ranks and the pHash postings-index seed.
     try { graft.ops.Graph.ensurePrRanksSeed(spark, sfDir); () }
     catch { case _: Throwable => () }
-    try { graft.ext.Multimodal.ensurePhashIndex(spark, sfDir); () }
+    try { graft.ext.NearDup.PhashIndex.ensure(spark, sfDir); () }
     catch { case _: Throwable => () }
     // Untimed: the DERIVED seed templates (base seed + a deterministic
     // setup mutation baked in) the lifecycle entries copy per run —

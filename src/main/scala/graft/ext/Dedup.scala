@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables}
 
 /** Deduplication family for training-data curation over `documents`:
   * exact (content-hash groupBy), n-gram Jaccard on a bounded candidate
@@ -378,7 +378,7 @@ object Dedup extends QueryModule {
   /** (doc_id, band, bh) — one row per band of each doc's signature. The
     * LSH bucket table in both its uses: self-joined for in-corpus
     * candidate pairs ([[lshCandidates]]) and PERSISTED as the postings of
-    * the incremental near-dup index ([[writeMinhashIndex]]).
+    * the incremental near-dup index ([[minhashPostings]]).
     */
   private[graft] def bandBuckets(sigs: DataFrame): DataFrame = {
     val bandCols = (0 until Bands).map { b =>
@@ -589,27 +589,9 @@ object Dedup extends QueryModule {
   // (O(batch) signatures), equi-joins its band buckets against the
   // postings, and exact-Jaccard-verifies the surviving candidates — so
   // per-batch cost scales with the batch and its collisions, never the
-  // corpus. The commit protocol is core.PersistedIndex's: batch_id
-  // partitions + an atomically-replaced manifest probes filter on, so a
-  // crashed append is invisible.
-
-  private val MinhashRoot = "/tmp/graft_minhash"
-
-  /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
-  private def minhashTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "documents")
-
-  /** The band-postings index on the shared lifecycle: `postings/`
-    * partitioned by batch_id, tombstones keyed by doc id.
-    */
-  private[graft] val MinhashStore = PersistedIndex("minhash", "postings", "doc_id")
-
-  /** Record a DELETE batch of doc ids (takedowns) — the template's
-    * tombstone ledger. Probes anti-join index-side candidates against
-    * it; compaction drops the tombstoned postings physically.
-    */
-  private[graft] def minhashIndexDelete(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit =
-    MinhashStore.delete(dir, ids)
+  // corpus. The index value and its lifecycle (seed, append, takedown,
+  // compaction, rebuild, and the entries' scenario) are
+  // NearDup.MinhashIndex / NearDup.lifecycle.
 
   /** Band postings of a (doc_id, text) frame: one (band, bh, doc_id) row
     * per band per REPRESENTATIVE (exact-duplicate groups collapse to
@@ -619,76 +601,10 @@ object Dedup extends QueryModule {
     * rebuild` (DedupSpec) holds even when an ingest batch carries
     * internal exact duplicates.
     */
-  private def minhashPostings(docs: DataFrame): DataFrame = {
+  private[graft] def minhashPostings(docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("text"))
     bandBuckets(minhashSignatures(StagedDedup.representatives(d, StagedDedup.exactGroups(d))))
   }
-
-  /** Write the band-postings index over `docs` as the single batch 0.
-    * `keepIngestKeys` rides in the single manifest commit so a rebuild
-    * preserves the idempotency ledger.
-    */
-  private[graft] def writeMinhashIndex(spark: SparkSession, dir: String,
-      docs: DataFrame, keepIngestKeys: Seq[String] = Seq.empty): Unit = {
-    minhashPostings(docs)
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .parquet(new java.io.File(dir, "postings").getPath)
-    PersistedIndex.writeManifest(dir, PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
-  }
-
-  /** Full re-band of the index from the doc store — the lifecycle op a
-    * banding-parameter change or accumulated takedown debt eventually
-    * forces. The band postings are one-way hashes, so unlike the IVF
-    * index the content cannot be re-derived from the index itself: the
-    * SURVIVING doc ids (committed postings minus the tombstone ledger)
-    * are point-looked-up in `corpus` — the same by-id doc-store contract
-    * [[probeMinhashIndex]]'s verification leg already uses — and
-    * re-banded. A rebuild is thereby also a materializing compaction,
-    * and it collapses CROSS-BATCH exact duplicates that per-batch
-    * appends could not see.
-    */
-  private[graft] def minhashIndexRebuild(spark: SparkSession, dir: String,
-      corpus: DataFrame): Unit =
-    MinhashStore.rebuild(spark, dir) { live =>
-      corpus.join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
-        .select(col("doc_id"), col("text"))
-    } { (content, stage, keys) =>
-      writeMinhashIndex(spark, stage, content, keepIngestKeys = keys)
-    }
-
-  /** One-time seed of the persisted index over the sub-400 corpus slice
-    * (marker-gated, untimed economics like the Derby/IVF seeds).
-    */
-  private[graft] def ensureMinhashIndex(spark: SparkSession, sfDir: String): String =
-    Warehouse.ensureSeed(new java.io.File(MinhashRoot, minhashTag(sfDir))) { dir =>
-      writeMinhashIndex(spark, dir,
-        Tables(spark, sfDir, "documents").filter(col("doc_id") < 400))
-    }
-
-  /** Append an ingest batch's band postings as a new batch. At-least-
-    * once callers (foreachBatch replays after a crash between manifest
-    * commit and checkpoint) pass the micro-batch's ingest key (checkpoint
-    * + batchId): a key already in the committed ledger makes the replay
-    * a no-op.
-    */
-  private[graft] def minhashIndexAppend(spark: SparkSession, dir: String,
-      newDocs: DataFrame, ingestKey: Option[String] = None): Unit =
-    MinhashStore.append(dir, ingestKey) { (path, m) =>
-      minhashPostings(newDocs).write.mode("overwrite").parquet(path)
-      m
-    }
-
-  /** Compact the committed band-postings batches into one: every ingest
-    * append adds a `batch_id` directory of small files, and the probe's
-    * bucket join opens all of them. Probes are row-identical
-    * before/after (postings are the same rows; DedupSpec pins it).
-    */
-  private[graft] def minhashIndexCompact(spark: SparkSession, dir: String): Unit =
-    MinhashStore.compact(spark, dir) { (rows, path, m) =>
-      rows.coalesce(8).write.mode("overwrite").parquet(path)
-      m
-    }
 
   /** Probe the persisted index with an ingest batch: batch-side
     * signatures + banding (O(batch) hashing — the corpus is never
@@ -701,7 +617,7 @@ object Dedup extends QueryModule {
     */
   private[graft] def probeMinhashIndex(spark: SparkSession, dir: String,
       batch: DataFrame, corpus: DataFrame, tap: Option[String] = None): DataFrame = {
-    val postings = MinhashStore.live(spark, dir, PersistedIndex.readManifest(dir))
+    val postings = NearDup.MinhashIndex.store.live(spark, dir, PersistedIndex.readManifest(dir))
       .select(col("band"), col("bh"), col("doc_id").as("dup_of"))
     val cands = bandBuckets(minhashSignatures(batch.select(col("doc_id"), col("text"))))
       .join(postings, Seq("band", "bh"))
@@ -719,106 +635,16 @@ object Dedup extends QueryModule {
       .orderBy(col("doc_id"), col("dup_of"))
   }
 
-  private def minhashIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureMinhashIndex(spark, sfDir)
-    val docs = Tables(spark, sfDir, "documents")
-    probeMinhashIndex(spark, dir, docs.filter(col("doc_id") >= 400), docs,
-      tap = Some("minhash_inc_candidates"))
-  }
-
-  /** Takedown on the near-dup index: copy the seeded index to scratch
-    * (the canonical marker-gated dir is never mutated), probe once to
-    * find the docs the ingest batch would match, DELETE the smallest
-    * matched index doc ([[minhashIndexDelete]] — tombstone ledger, same
-    * commit protocol as appends), and re-probe. The deleted doc's pairs
-    * MUST vanish while every other pair survives — the oracle
-    * re-verifies the post-delete candidates' Jaccard wholesale.
+  /** The lifecycle entries' probe: the documents from `from` on, Jaccard-
+    * verified against the index with `corpus` as the doc store.
     */
-  private def minhashDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_del")
-    val docs = Tables(spark, sfDir, "documents")
-    val batch = docs.filter(col("doc_id") >= 400)
-    val victimRow = probeMinhashIndex(spark, dir, batch, docs)
-      .agg(min(col("dup_of"))).head()
-    if (!victimRow.isNullAt(0))
-      minhashIndexDelete(spark, dir, Seq(victimRow.getLong(0)).toDF("doc_id"))
-    probeMinhashIndex(spark, dir, batch, docs,
-      tap = Some("minhash_del_candidates"))
-  }
+  private val minhashProbe = NearDup.Probe(
+    (docs, from) => docs.filter(col("doc_id") >= from),
+    (dir, batch, corpus, tap) => probeMinhashIndex(batch.sparkSession, dir, batch, corpus, tap))
 
-  /** The near-dup index's compaction lifecycle as an entry (the MinHash
-    * twin of `q_ann_ivf_compact`): scratch from the seed template,
-    * append an ingest batch (a second batch_id dir), COMPACT — one
-    * merged batch via the staged-rename + manifest-swap protocol — and
-    * probe. The probe must be row-identical to the pre-compact index
-    * (same postings rows, one directory), which the tapped candidates +
-    * DuckDB Jaccard re-verification certify.
-    */
-  private def minhashCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_compact")
-    val docs = Tables(spark, sfDir, "documents")
-    minhashIndexAppend(spark, dir, docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
-    minhashIndexCompact(spark, dir)
-    probeMinhashIndex(spark, dir, docs.filter(col("doc_id") >= 450), docs,
-      tap = Some("minhash_compact_candidates"))
-  }
-
-  /** The near-dup index's full-rebuild lifecycle as an entry (the
-    * MinHash twin of `q_ann_ivf_rebuild`): scratch from the seed
-    * template, append an ingest batch (a second batch_id dir), take down
-    * the smallest matched index doc (tombstone ledger), then REBUILD —
-    * re-band the surviving ids from the doc store in place, dropping the
-    * tombstoned doc physically, folding the appended batch into the
-    * single rebuilt batch, preserving the ingest-key ledger. The final
-    * probe answers near-dups over the rebuilt index — its tapped
-    * candidates let DuckDB re-verify the Jaccard leg wholesale, and
-    * DedupSpec pins rebuild == (compacted) append content minus the
-    * tombstoned doc.
-    */
-  private def minhashRebuild(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_rebuild")
-    val docs = Tables(spark, sfDir, "documents")
-    minhashIndexAppend(spark, dir, docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
-    val probeBatch = docs.filter(col("doc_id") >= 450)
-    val victimRow = probeMinhashIndex(spark, dir, probeBatch, docs)
-      .agg(min(col("dup_of"))).head()
-    if (!victimRow.isNullAt(0))
-      minhashIndexDelete(spark, dir, Seq(victimRow.getLong(0)).toDF("doc_id"))
-    minhashIndexRebuild(spark, dir, docs)
-    probeMinhashIndex(spark, dir, probeBatch, docs,
-      tap = Some("minhash_rebuild_candidates"))
-  }
-
-  /** Streaming ingest into the persisted near-dup index — the MinHash
-    * twin of `s_ann_ingest`: documents arrive as a stream, each
-    * micro-batch publishes its band postings through
-    * [[minhashIndexAppend]]'s atomic staged-rename + manifest-commit
-    * ([[graft.core.BoundedStream.appendStream]]), keyed on the checkpoint
-    * and batchId so an at-least-once replay (crash between manifest
-    * commit and checkpoint) is a committed no-op. The seed index
-    * (docs < 400) comes from the immutable marker-gated template, copied
-    * to scratch so the canonical dir is never mutated; docs [400, 450)
-    * stream in; the final probe batch (docs ≥ 450) must surface near-dups
-    * AGAINST THE STREAMED DOCS — continuous corpus growth with the probe
-    * seeing every committed arrival.
-    */
-  private def minhashIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val seed = ensureMinhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_minhash_ingest")
-    val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
-      .filter(col("doc_id") >= 400 && col("doc_id") < 450)
-    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
-      minhashIndexAppend(spark, dir, b, ingestKey = Some(key))
-    }
-    val docs = Tables(spark, sfDir, "documents")
-    probeMinhashIndex(spark, dir, docs.filter(col("doc_id") >= 450), docs,
-      tap = Some("s_minhash_ingest_candidates"))
-  }
+  private def minhashEntry(tap: String, steps: NearDup.Step*): QueryDef =
+    QueryDef(NearDup.lifecycle(NearDup.MinhashIndex, minhashProbe, tap, steps: _*),
+      Some(minhashTapOracle(tap)))
 
   /** The shared MinHash verification oracle over a (doc_id, dup_of)
     * candidate tap: DuckDB recomputes the word-set Jaccard verify leg,
@@ -845,27 +671,28 @@ object Dedup extends QueryModule {
     // Partial oracle: the banded candidate stage (batch × index-rep) is
     // tapped; DuckDB recomputes the word-set Jaccard verification,
     // threshold, and ordering from the tap + documents.
-    "q_minhash_incremental" -> QueryDef(minhashIncremental, Some(minhashTapOracle("minhash_inc_candidates"))),
+    "q_minhash_incremental" -> minhashEntry("minhash_inc_candidates"),
     // Partial oracle (same boundary as q_minhash_incremental): the
     // banded candidates of the post-stream probe — including pairs whose
     // index side ARRIVED THROUGH THE STREAM — are tapped; DuckDB
     // recomputes the Jaccard verification, threshold, and order.
-    "s_minhash_ingest" -> QueryDef(minhashIngest, Some(minhashTapOracle("s_minhash_ingest_candidates"))),
+    "s_minhash_ingest" -> minhashEntry("s_minhash_ingest_candidates", NearDup.Stream),
     // Partial oracle: the POST-COMPACTION banded candidates are tapped;
     // DuckDB recomputes the Jaccard verify leg — compaction must not
     // change a single pair.
-    "q_minhash_compact" -> QueryDef(minhashCompact, Some(minhashTapOracle("minhash_compact_candidates"))),
+    "q_minhash_compact" -> minhashEntry("minhash_compact_candidates", NearDup.Append, NearDup.Compact),
     // Partial oracle: the POST-DELETE banded candidates are tapped;
     // DuckDB re-verifies the Jaccard leg wholesale — the tombstoned
     // doc's absence flows through the hash-match, and its probe-level
     // invisibility (pre/post compaction) is DedupSpec-pinned.
-    "q_minhash_delete" -> QueryDef(minhashDelete, Some(minhashTapOracle("minhash_del_candidates"))),
+    "q_minhash_delete" -> minhashEntry("minhash_del_candidates", NearDup.Takedown),
     // Partial oracle: the POST-REBUILD banded candidates are tapped;
     // DuckDB re-verifies the Jaccard leg wholesale — the re-banded
     // index must still surface every surviving pair (appended docs
     // folded in, the tombstoned doc physically gone; DedupSpec pins the
     // content identity).
-    "q_minhash_rebuild" -> QueryDef(minhashRebuild, Some(minhashTapOracle("minhash_rebuild_candidates"))),
+    "q_minhash_rebuild" -> minhashEntry("minhash_rebuild_candidates",
+      NearDup.Append, NearDup.Takedown, NearDup.Rebuild),
     "q_dedup_clusters" -> QueryDef(dedupClusters, Some("""
       SELECT doc_id,
              min(doc_id) OVER (PARTITION BY ck) AS cluster_id,

@@ -225,8 +225,12 @@ object Multimodal extends QueryModule {
     h
   }
 
-  private val PhashBands = 4
-  private val PhashMaxHamming = 3
+  private[graft] val PhashMaxHamming = 3
+
+  /** Rendition id offset — clear of ScaleGen's copy·10⁹ replica
+    * shifts (base doc ids stay far below 5·10⁸).
+    */
+  private val RenditionOffset = 500000000L
 
   /** Perceptual-hash near-duplicate detection over the BINARY corpus —
     * the multimodal member of the dedup family (image/video near-dups
@@ -235,46 +239,16 @@ object Multimodal extends QueryModule {
     * [[phash64]].
     *
     * Scale shape: the blob dies at the scan (mapPartitions emits only
-    * (doc_id, 8-byte signature)); candidates come from LSH banding —
-    * [[PhashBands]] disjoint 16-bit bands, band-value equi-join — so
-    * pair work is bucket-bounded, never all-pairs. The threshold is
-    * chosen ≤ bands−1 ON PURPOSE: by pigeonhole, any pair within
-    * Hamming 3 has at least one of the 4 bands intact, so banding is
-    * provably LOSSLESS here — and the oracle exploits exactly that: it
-    * recomputes the result as the plain all-pairs Hamming filter over
-    * the tapped signatures, which means a banding recall bug (not just
-    * a scoring bug) hash-mismatches.
+    * (doc_id, 8-byte signature)); candidates come from the banded
+    * Hamming kernel ([[NearDup.hammingPairs]]: four disjoint 16-bit
+    * bands, band-value equi-join), so pair work is bucket-bounded, never
+    * all-pairs. The threshold is chosen ≤ bands−1 ON PURPOSE: by
+    * pigeonhole, any pair within Hamming 3 has at least one of the 4
+    * bands intact, so banding is provably LOSSLESS here — and the oracle
+    * exploits exactly that: it recomputes the result as the plain
+    * all-pairs Hamming filter over the tapped signatures, which means a
+    * banding recall bug (not just a scoring bug) hash-mismatches.
     */
-  /** Rendition id offset — clear of ScaleGen's copy·10⁹ replica
-    * shifts (base doc ids stay far below 5·10⁸).
-    */
-  private val RenditionOffset = 500000000L
-
-  /** Banded near-dup join over a (doc_id, ph) signature frame —
-    * factored out so the spec can feed constructed signatures and pin
-    * the pigeonhole recall guarantee directly.
-    */
-  private[graft] def phashBandedPairs(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until PhashBands).map(k =>
-      struct(lit(k).as("band"),
-        shiftright(col("ph"), k * 16).bitwiseAND(lit(65535L)).as("bv")))
-    val banded = sigs
-      .select(col("doc_id"), col("ph"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("doc_id"), col("ph"), col("b.band").as("band"), col("b.bv").as("bv"))
-    val l = banded.select(col("band"), col("bv"),
-      col("doc_id").as("da"), col("ph").as("pa"))
-    val r = banded.select(col("band").as("band_r"), col("bv").as("bv_r"),
-      col("doc_id").as("db"), col("ph").as("pb"))
-    l.join(r, col("band") === col("band_r") && col("bv") === col("bv_r") &&
-        col("da") < col("db"))
-      .select(col("da"), col("db"), col("pa"), col("pb"))
-      .distinct() // a pair sharing several bands surfaces once
-      .select(col("da"), col("db"),
-        bit_count(col("pa").bitwiseXOR(col("pb"))).cast(LongType).as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .orderBy("da", "db")
-  }
-
   private def mmPhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // The fixture corpus carries no re-encoded copies, so every 10th
@@ -319,11 +293,11 @@ object Multimodal extends QueryModule {
         col("a.ph") === col("b.ph") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
         lit(0L).as("hamming"))
-    val repPairs = phashBandedPairs(
-      reps.select(col("rep").as("doc_id"), col("ph")))
+    val repPairs = NearDup.hammingPairs(
+      reps.select(col("rep").as("doc_id"), col("ph")), "ph", PhashMaxHamming)
     val cross = repPairs
-      .join(reps.select(col("rep").as("da"), col("ph").as("pha")), "da")
-      .join(reps.select(col("rep").as("db"), col("ph").as("phb")), "db")
+      .join(reps.select(col("rep").as("doc_a"), col("ph").as("pha")), "doc_a")
+      .join(reps.select(col("rep").as("doc_b"), col("ph").as("phb")), "doc_b")
       .join(tapped.select(col("ph").as("pha"), col("doc_id").as("ma")), "pha")
       .join(tapped.select(col("ph").as("phb"), col("doc_id").as("mb")), "phb")
       .select(least(col("ma"), col("mb")).as("da"),
@@ -335,35 +309,21 @@ object Multimodal extends QueryModule {
   //
   // q_mm_phash_dedup answers the one-shot batch question; this is the
   // ingest-time one — "is this arriving media object a re-encode of
-  // anything already ingested" — against a PERSISTED band-postings index,
-  // the same production lifecycle the MinHash (text) and semdedup
-  // (embedding) modalities already carry: staged-rename appends under a
-  // writer lease, an atomically-replaced manifest gating probe visibility,
-  // an ingest-key ledger making at-least-once replays no-ops, and a
-  // tombstone ledger for takedowns. The postings row is
+  // anything already ingested" — against a PERSISTED band-postings index
+  // (NearDup.PhashIndex), the same production lifecycle the MinHash
+  // (text) and semdedup (embedding) modalities carry: staged-rename
+  // appends under a writer lease, an atomically-replaced manifest gating
+  // probe visibility, an ingest-key ledger making at-least-once replays
+  // no-ops, and a tombstone ledger for takedowns. The postings row is
   // (band, bv, doc_id, ph): 16-bit band values for the equi-join plus the
   // full 64-bit signature, so the Hamming verify is INDEX-LOCAL — unlike
   // the MinHash probe, no doc-store lookup is needed and the blob itself
   // is never touched after signature extraction. A probe hashes only the
   // batch (O(batch) signatures) and bucket-joins the committed postings;
-  // threshold ≤ bands−1 keeps the pigeonhole-losslessness of
-  // [[phashBandedPairs]], which the tap oracle exploits: it recomputes
-  // the probe as the full probe×index Hamming filter over the tapped
-  // signatures, so a banding RECALL bug (not just a scoring bug)
-  // hash-mismatches. The lifecycle (manifest, appends, takedowns,
-  // compaction, rebuild) is core.PersistedIndex's, shared by every index
-  // family.
-
-  private val PhashIndexRoot = "/tmp/graft_phash"
-
-  /** The postings index on the shared lifecycle, tombstones keyed by
-    * doc id.
-    */
-  private[graft] val PhashStore = PersistedIndex("phash", "postings", "doc_id")
-
-  /** Per-fixture seed tag (core.Tables.fixtureTag over documents). */
-  private def phashIndexTag(sfDir: String): String =
-    Tables.fixtureTag("v1", sfDir, "documents")
+  // threshold ≤ bands−1 keeps the banding lossless, which the tap oracle
+  // exploits: it recomputes the probe as the full probe×index Hamming
+  // filter over the tapped signatures, so a banding RECALL bug (not just
+  // a scoring bug) hash-mismatches.
 
   /** (doc_id, ph) signatures of a (doc_id, text) frame — blob synthesis +
     * phash64 fused in one mapPartitions pass; the blob dies in the task.
@@ -397,207 +357,38 @@ object Multimodal extends QueryModule {
       .toDF("doc_id", "ph")
   }
 
-  /** Explode a (doc_id, ph) signature frame into its band postings
-    * (band, bv, doc_id, ph) — the persisted row.
-    */
-  private[graft] def phashPostings(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until PhashBands).map(k =>
-      struct(lit(k).as("band"),
-        shiftright(col("ph"), k * 16).bitwiseAND(lit(65535L)).as("bv")))
-    sigs.select(col("doc_id"), col("ph"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("b.band").as("band"), col("b.bv").as("bv"),
-        col("doc_id"), col("ph"))
-  }
-
-  /** Write the postings index over `docs` as the single batch 0 —
-    * the rebuild/seed writer (`keepIngestKeys` rides in the manifest
-    * commit like every index family's).
-    */
-  private[graft] def writePhashIndex(spark: SparkSession, dir: String,
-      docs: DataFrame, keepIngestKeys: Seq[String] = Seq.empty): Unit = {
-    phashPostings(sigsOf(spark, docs))
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .parquet(new java.io.File(dir, "postings").getPath)
-    PersistedIndex.writeManifest(dir, PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
-  }
-
-  /** One-time seed over the sub-400 corpus slice (marker-gated, untimed
-    * economics like the MinHash/IVF/Derby seeds).
-    */
-  private[graft] def ensurePhashIndex(spark: SparkSession, sfDir: String): String =
-    Warehouse.ensureSeed(new java.io.File(PhashIndexRoot, phashIndexTag(sfDir))) { dir =>
-      writePhashIndex(spark, dir,
-        Tables(spark, sfDir, "documents").filter(col("doc_id") < 400))
-    }
-
-  /** Append an ingest batch's postings as a new batch (a replayed
-    * `ingestKey` is a committed no-op).
-    */
-  private[graft] def phashIndexAppend(spark: SparkSession, dir: String,
-      newDocs: DataFrame, ingestKey: Option[String] = None): Unit =
-    PhashStore.append(dir, ingestKey) { (path, m) =>
-      phashPostings(sigsOf(spark, newDocs)).write.mode("overwrite").parquet(path)
-      m
-    }
-
-  /** Takedown: tombstone a doc-id batch. */
-  private[graft] def phashIndexDelete(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit =
-    PhashStore.delete(dir, ids)
-
-  /** Compact the committed postings batches into one; tombstones
-    * materialize physically. Probes are row-identical before/after —
-    * MultimodalSpec pins it.
-    */
-  private[graft] def phashIndexCompact(spark: SparkSession, dir: String): Unit =
-    PhashStore.compact(spark, dir) { (rows, path, m) =>
-      rows.coalesce(8).write.mode("overwrite").parquet(path)
-      m
-    }
-
-  /** Rebuild the postings index from the SURVIVING corpus content — the
-    * op that pays off after enough appends/tombstones fragment the index,
-    * or after a signature-extraction change. Surviving ids come from the
-    * committed postings minus the tombstone ledger; their content
-    * re-hashes from the corpus into a single batch.
-    */
-  private[graft] def phashIndexRebuild(spark: SparkSession, dir: String,
-      corpus: DataFrame): Unit =
-    PhashStore.rebuild(spark, dir) { live =>
-      corpus.join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
-        .select(col("doc_id"), col("text"))
-    } { (content, stage, keys) =>
-      writePhashIndex(spark, stage, content, keepIngestKeys = keys)
-    }
-
-  /** Probe the committed postings with a (doc_id, ph) signature batch:
-    * band the batch, equi-join on (band, bv), Hamming-verify from the
-    * postings' own signatures (no doc-store round trip), anti-join the
-    * tombstone ledger. The tap carries BOTH sides' distinct signatures
-    * (probe + surviving index) so DuckDB recomputes the probe as the
-    * full cross Hamming filter — losslessness of the banding included.
+  /** Probe the committed postings with a (doc_id, ph) signature batch
+    * through the banded Hamming kernel ([[NearDup.hammingProbe]]):
+    * Hamming-verified from the postings' own signatures (no doc-store
+    * round trip), tombstones anti-joined by the live read. The tap
+    * carries BOTH sides' distinct signatures (probe + surviving index)
+    * so DuckDB recomputes the probe as the full cross Hamming filter —
+    * losslessness of the banding included.
     */
   private[graft] def probePhashIndex(spark: SparkSession, dir: String,
       probeSigs: DataFrame, tap: Option[String] = None): DataFrame = {
-    val postings = PhashStore.live(spark, dir, PersistedIndex.readManifest(dir))
-      .select(col("band"), col("bv"), col("doc_id").as("dup_of"), col("ph").as("ph_i"))
+    val postings = NearDup.PhashIndex.store.live(spark, dir, PersistedIndex.readManifest(dir))
     val tapped = tap.fold(probeSigs) { n =>
       OracleTap(spark, n,
         probeSigs.select(col("doc_id"), col("ph"), lit("probe").as("side"))
-          .unionByName(postings.select(col("dup_of").as("doc_id"),
-            col("ph_i").as("ph"), lit("index").as("side")).distinct()))
+          .unionByName(postings.select(col("doc_id"), col("ph"),
+            lit("index").as("side")).distinct()))
         .filter(col("side") === "probe").select("doc_id", "ph")
     }
-    phashPostings(tapped)
-      .join(postings, Seq("band", "bv"))
-      .select(col("doc_id"), col("dup_of"), col("ph"), col("ph_i"))
-      .distinct()
-      .select(col("doc_id"), col("dup_of"),
-        bit_count(col("ph").bitwiseXOR(col("ph_i"))).cast(LongType).as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
+    NearDup.hammingProbe(tapped, postings, "ph", PhashMaxHamming)
       .orderBy("doc_id", "dup_of")
   }
 
-  /** Rendition-probe modulus: every 25th doc re-encodes, so the probe
+  /** The lifecycle entries' probe: the signatures of the documents from
+    * `from` on plus renditions of every 25th earlier doc, so the probe
     * carries a bounded planted-hit set next to the genuinely-new docs.
+    * A takedown probes it twice (victim pick + final), so it is pinned.
     */
-  private val PhashProbeMod = 25L
-
-  private def phashIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensurePhashIndex(spark, sfDir)
-    val docs = Tables(spark, sfDir, "documents")
-    val probe = sigsOf(spark, docs.filter(col("doc_id") >= 400))
-      .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 400), PhashProbeMod))
-    probePhashIndex(spark, dir, probe, tap = Some("phash_inc"))
-  }
-
-  private def phashDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = ensurePhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_del")
-    val docs = Tables(spark, sfDir, "documents")
-    val probe = sigsOf(spark, docs.filter(col("doc_id") >= 400))
-      .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 400), PhashProbeMod))
-      .localCheckpoint(true) // probed twice (victim pick + final)
-    val victimRow = probePhashIndex(spark, dir, probe).agg(min(col("dup_of"))).head()
-    if (!victimRow.isNullAt(0))
-      phashIndexDelete(spark, dir, Seq(victimRow.getLong(0)).toDF("doc_id"))
-    probePhashIndex(spark, dir, probe, tap = Some("phash_del"))
-  }
-
-  /** The pHash index's compaction lifecycle as an entry: scratch from
-    * the seed, append an ingest batch (second batch_id dir), take down
-    * the smallest matched index doc (tombstone ledger), COMPACT — the
-    * merged single batch materializes the takedown physically and
-    * clears the tombstone ledger — and probe. The probe must equal the
-    * pre-compact post-delete answer exactly, which the tapped
-    * signatures + DuckDB's full cross Hamming recompute certify.
-    */
-  private def phashCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = ensurePhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_compact")
-    val docs = Tables(spark, sfDir, "documents")
-    phashIndexAppend(spark, dir,
-      docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
-    val probe = sigsOf(spark, docs.filter(col("doc_id") >= 450))
-      .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 450), PhashProbeMod))
-      .localCheckpoint(true) // probed twice (victim pick + final)
-    val victimRow = probePhashIndex(spark, dir, probe).agg(min(col("dup_of"))).head()
-    if (!victimRow.isNullAt(0))
-      phashIndexDelete(spark, dir, Seq(victimRow.getLong(0)).toDF("doc_id"))
-    phashIndexCompact(spark, dir)
-    probePhashIndex(spark, dir, probe, tap = Some("phash_compact"))
-  }
-
-  /** The pHash index's from-scratch rebuild as an entry — completing
-    * the lifecycle matrix (every other index family carries one):
-    * scratch from the seed, append an ingest batch, take down the
-    * smallest matched index doc, then REBUILD from the surviving corpus
-    * content — the new single-batch index must answer the probe
-    * exactly like the fragmented post-delete index did, certified by
-    * the tapped signatures + DuckDB's full cross Hamming recompute.
-    */
-  private def phashRebuild(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = ensurePhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_rebuild")
-    val docs = Tables(spark, sfDir, "documents")
-    phashIndexAppend(spark, dir,
-      docs.filter(col("doc_id") >= 400 && col("doc_id") < 450))
-    val probe = sigsOf(spark, docs.filter(col("doc_id") >= 450))
-      .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 450), PhashProbeMod))
-      .localCheckpoint(true) // probed twice (victim pick + final)
-    val victimRow = probePhashIndex(spark, dir, probe).agg(min(col("dup_of"))).head()
-    if (!victimRow.isNullAt(0))
-      phashIndexDelete(spark, dir, Seq(victimRow.getLong(0)).toDF("doc_id"))
-    phashIndexRebuild(spark, dir, docs)
-    probePhashIndex(spark, dir, probe, tap = Some("phash_rebuild"))
-  }
-
-  /** Streaming ingest into the persisted pHash index — the multimodal
-    * twin of `s_minhash_ingest`/`s_ann_ingest`: media objects arrive as
-    * a stream, each micro-batch publishes its postings through
-    * [[phashIndexAppend]]'s atomic protocol, keyed on the checkpoint and
-    * batchId by [[graft.core.BoundedStream.appendStream]] (at-least-once
-    * replays are committed no-ops); the final probe carries re-encodes
-    * OF THE STREAMED DOCS, so it must surface near-dups against the
-    * committed arrivals.
-    */
-  private def phashIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val seed = ensurePhashIndex(spark, sfDir)
-    val dir = Warehouse.scratchFromSeed(seed, "graft_phash_ingest")
-    val stream = graft.core.Tables.streamTable(spark, sfDir, "documents")
-      .filter(col("doc_id") >= 400 && col("doc_id") < 450)
-    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
-      phashIndexAppend(spark, dir, b, ingestKey = Some(key))
-    }
-    val docs = Tables(spark, sfDir, "documents")
-    val probe = sigsOf(spark, docs.filter(col("doc_id") >= 450))
-      .unionByName(renditionSigsOf(spark, docs.filter(col("doc_id") < 450), PhashProbeMod))
-    probePhashIndex(spark, dir, probe, tap = Some("s_phash_ingest"))
-  }
+  private val phashProbe = NearDup.Probe(
+    (docs, from) => sigsOf(docs.sparkSession, docs.filter(col("doc_id") >= from))
+      .unionByName(renditionSigsOf(docs.sparkSession, docs.filter(col("doc_id") < from), 25L)),
+    (dir, batch, _, tap) => probePhashIndex(batch.sparkSession, dir, batch, tap),
+    pin = true)
 
   /** Shared tap oracle for the index probes: the full probe×index
     * Hamming filter (losslessness of the ≤ bands−1 banding makes it
@@ -612,12 +403,18 @@ object Multimodal extends QueryModule {
       WHERE bit_count(xor(p.ph, i.ph)) <= $PhashMaxHamming
       ORDER BY p.doc_id, dup_of"""
 
+  private def phashEntry(tap: String, steps: NearDup.Step*): QueryDef =
+    QueryDef(NearDup.lifecycle(NearDup.PhashIndex, phashProbe, tap, steps: _*),
+      Some(phashProbeOracle(tap)))
+
   override val defs: Map[String, QueryDef] = Map(
-    "q_phash_incremental" -> QueryDef(phashIncremental, Some(phashProbeOracle("phash_inc"))),
-    "q_phash_delete" -> QueryDef(phashDelete, Some(phashProbeOracle("phash_del"))),
-    "q_phash_compact" -> QueryDef(phashCompact, Some(phashProbeOracle("phash_compact"))),
-    "q_phash_rebuild" -> QueryDef(phashRebuild, Some(phashProbeOracle("phash_rebuild"))),
-    "s_phash_ingest" -> QueryDef(phashIngest, Some(phashProbeOracle("s_phash_ingest"))),
+    "q_phash_incremental" -> phashEntry("phash_inc"),
+    "q_phash_delete" -> phashEntry("phash_del", NearDup.Takedown),
+    "q_phash_compact" -> phashEntry("phash_compact",
+      NearDup.Append, NearDup.Takedown, NearDup.Compact),
+    "q_phash_rebuild" -> phashEntry("phash_rebuild",
+      NearDup.Append, NearDup.Takedown, NearDup.Rebuild),
+    "s_phash_ingest" -> phashEntry("s_phash_ingest", NearDup.Stream),
     "q_mm_phash_dedup" -> QueryDef(mmPhashDedup, Some(s"""
       WITH s AS (SELECT doc_id, ph
                  FROM read_parquet('/tmp/graft_oracle_aux/mm_phash/*.parquet'))

@@ -914,21 +914,16 @@ object Similarity extends QueryModule {
 
   /** The members index on the shared lifecycle: `members/` partitioned
     * by (batch_id, cell_grp) beside the fixed `centroids/` quantizer,
-    * tombstones keyed by vec id.
+    * tombstones keyed by vec id. A takedown (`SemdedupStore.delete`) is
+    * a vec-id tombstone batch — O(delete batch), never a members
+    * rewrite. Ingests read members minus the ledger, so a deleted member
+    * stops dominating new arrivals; HISTORICAL removed flags stay frozen
+    * until compaction (the same monotone-ingest invariant the index
+    * already documents — a full rebuild recomputes them). Compaction
+    * materializes the drop.
     */
   private[graft] val SemdedupStore =
     PersistedIndex("semdedup", "members", "vec_id", aux = Seq("centroids"))
-
-  /** Takedown on the semdedup index: a vec-id tombstone batch —
-    * O(delete batch), never a members rewrite. Ingests read members
-    * minus the ledger, so a deleted member stops dominating new
-    * arrivals; HISTORICAL removed flags stay frozen (the same
-    * monotone-ingest invariant the index already documents — a full
-    * rebuild recomputes them). Compaction materializes the drop.
-    */
-  private[graft] def semdedupIndexDelete(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit =
-    SemdedupStore.delete(dir, ids)
 
   /** Compact the semdedup index: all committed member batches into ONE
     * (cell_grp-partitioned like every batch), tombstoned members dropped.
@@ -1111,7 +1106,7 @@ object Similarity extends QueryModule {
     val (seedDir, _) = ensureSemdedupIndex(spark, sfDir)
     val (vCachePath, _) = ensureRebuildCaches(spark, seedDir)
     Warehouse.ensureDerivedSeed(seedDir, "victims-deleted") { d =>
-      semdedupIndexDelete(spark, d, spark.read.parquet(vCachePath))
+      SemdedupStore.delete(d, spark.read.parquet(vCachePath))
     }
   }
 
@@ -1157,7 +1152,7 @@ object Similarity extends QueryModule {
     val purgeCells = ensurePurgeCellsCache(spark, seedDir, batch)
     val dir = scratchSemdedupCopy(seedDir, "graft_semdedup_del")
     if (purgeCells.nonEmpty)
-      semdedupIndexDelete(spark, dir,
+      SemdedupStore.delete(dir,
         spark.read.parquet(new java.io.File(dir, "members").getPath)
           .where(col("cell").isin(purgeCells: _*)).select(col("vec_id")))
     semdedupIndexIngest(spark, dir, batch, tau = 0.4,
@@ -2110,17 +2105,6 @@ object Similarity extends QueryModule {
         cellCounts = merged).core
     }
 
-  /** Record a DELETE batch — the takedown operation a real corpus needs
-    * (GDPR erasure, licensing removals, contaminated-shard pulls).
-    * Deletion is O(delete batch), never a postings rewrite: probes
-    * anti-join candidates against the tombstone ledger at the CANDIDATE
-    * stage (before any shortlist limit, so deleted rows never consume
-    * ranking slots), and the next [[ivfIndexCompact]] materializes the
-    * deletion physically.
-    */
-  private[graft] def ivfIndexDelete(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    IvfStore.delete(dir, ids)
-
   /** Full quantizer retrain from the index's OWN committed content — the
     * drift sentinel's documented remedy, self-contained: re-run
     * [[writeIvfIndex]] over the committed, tombstone-filtered postings
@@ -2140,7 +2124,12 @@ object Similarity extends QueryModule {
 
   /** The postings index on the shared lifecycle: `postings/` partitioned
     * by (batch_id, cell_id) beside the quantizer tables, tombstones keyed
-    * by vec id.
+    * by vec id. A takedown (`IvfStore.delete`: GDPR erasure, licensing
+    * removals, contaminated-shard pulls) is O(delete batch), never a
+    * postings rewrite: probes anti-join candidates against the ledger at
+    * the CANDIDATE stage (before any shortlist limit, so deleted rows
+    * never consume ranking slots), and the next [[ivfIndexCompact]]
+    * materializes the deletion physically.
     */
   private[graft] val IvfStore =
     PersistedIndex("IVF", "postings", "vec_id", aux = Seq("centroids", "codebooks"))
@@ -2221,7 +2210,7 @@ object Similarity extends QueryModule {
     val dir = scratchIvfFromSeed(ensureAppendedIvfSeed(spark, sfDir), "graft_ann_delete")
     val top3 = ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)),
       Ivf.TopK(3), nprobe = 4).collect().map(_.getLong(0)).toSeq
-    ivfIndexDelete(spark, dir, top3.toDF("vec_id"))
+    IvfStore.delete(dir, top3.toDF("vec_id"))
     ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
       nprobe = 4, tap = Some("ann_ivf_delete_scored"))
   }
@@ -2291,7 +2280,7 @@ object Similarity extends QueryModule {
   /** The full drift lifecycle in one entry: a skewed synthetic ingest
     * (400 jittered copies of one corpus vector crowding a single cell)
     * trips the drift sentinel; the poisoning load is taken down
-    * ([[ivfIndexDelete]] — an O(batch) tombstone publish); then
+    * (`IvfStore.delete` — an O(batch) tombstone publish); then
     * [[ivfIndexRebuild]] retrains quantizer + codebook from the index's
     * own SURVIVING content — dropping the tombstoned rows physically —
     * and the sentinel clears deterministically (the cleaned content is
@@ -2327,7 +2316,7 @@ object Similarity extends QueryModule {
       ivfIndexAppend(spark, d, skewed)
       require(readIvfManifest(d).rebuildNeeded,
         "the skewed ingest did not trip the drift sentinel")
-      ivfIndexDelete(spark, d, skewed.select(col("vec_id")))
+      IvfStore.delete(d, skewed.select(col("vec_id")))
     }
   }
 
@@ -2809,29 +2798,16 @@ object Similarity extends QueryModule {
 
   // ---- SimHash near-dup over documents --------------------------------
 
+  private val SimhashMaxHamming = 6
+
   /** Naive single-stage SimHash pipeline (reference implementation for
     * the equivalence spec): band + verify every doc, including exact
     * copies.
     */
   private[graft] def simhashNearDupNaive(spark: SparkSession, sfDir: String): DataFrame = {
     SimHash64.register(spark)
-    val d = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr("simhash64(text)").as("sh"))
-    val chunks = d.select(col("doc_id"), col("sh"),
-      posexplode(array((0 until 4).map(c =>
-        shiftrightunsigned(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("chunk", "cv")))
-    chunks.alias("x")
-      .join(chunks.alias("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(
-        col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sh").as("sha"), col("y.sh").as("shb"))
-      .distinct()
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).cast(LongType).as("hamming"))
-      .filter(col("hamming") <= 6)
+    NearDup.hammingPairs(Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), expr("simhash64(text)").as("sh")), "sh", SimhashMaxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -2839,8 +2815,8 @@ object Similarity extends QueryModule {
     // Staged (see StagedDedup): byte-identical texts have identical
     // simhashes (Hamming 0), so exact groups collapse first and banding +
     // Hamming verify run on distinct-content representatives only.
-    // Candidates: reps sharing any 16-bit chunk of the 64-bit simhash
-    // (banding); verify: Hamming distance via bit_count(xor) <= 6.
+    // Candidates: reps sharing any 16-bit band of the 64-bit simhash;
+    // verify: Hamming distance <= 6 (NearDup's band kernel).
     // The signature table is tapped (OracleTap): given (doc_id, sh),
     // banding + Hamming + expansion are deterministic bit arithmetic
     // DuckDB recomputes independently — only the simhash64 kernel itself
@@ -2848,23 +2824,8 @@ object Similarity extends QueryModule {
     SimHash64.register(spark)
     StagedDedup.stagedPairs(
       Tables(spark, sfDir, "documents"), "hamming", lit(0L)) { reps =>
-      val d = OracleTap(spark, "simhash_rep_sigs",
-        reps.select(col("doc_id"), expr("simhash64(text)").as("sh")))
-      val chunks = d.select(col("doc_id"), col("sh"),
-        posexplode(array((0 until 4).map(c =>
-          shiftrightunsigned(col("sh"), c * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("chunk", "cv")))
-      chunks.alias("x")
-        .join(chunks.alias("y"),
-          col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(
-          col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.sh").as("sha"), col("y.sh").as("shb"))
-        .distinct()
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sha").bitwiseXOR(col("shb"))).cast(LongType).as("hamming"))
-        .filter(col("hamming") <= 6)
+      NearDup.hammingPairs(OracleTap(spark, "simhash_rep_sigs",
+        reps.select(col("doc_id"), expr("simhash64(text)").as("sh"))), "sh", SimhashMaxHamming)
     }
   }
 

@@ -222,7 +222,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     val exactCopy = (101L, base(5)._2)
     val unrelated = (102L, docText(999))
     val dir = graft.core.TempDirs.create("graft_minhash_spec")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
     val batch = Seq(nearCopy, exactCopy, unrelated).toDF("doc_id", "text")
     val corpus = (base ++ Seq(nearCopy, exactCopy, unrelated)).toDF("doc_id", "text")
     val got = graft.ext.Dedup.probeMinhashIndex(spark, dir, batch, corpus)
@@ -247,7 +247,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     val batchDf = probeDoc.toDF("doc_id", "text")
 
     val dir = graft.core.TempDirs.create("graft_minhash_append")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
     def probe() = graft.ext.Dedup.probeMinhashIndex(spark, dir, batchDf, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
@@ -255,13 +255,13 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     assert(probe().isEmpty)
 
     // Append the ingest batch: the probe must now surface the match...
-    graft.ext.Dedup.minhashIndexAppend(spark, dir, ingest1.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.append(dir, ingest1.toDF("doc_id", "text"))
     assert(probe() == Seq((300L, 202L)))
 
     // ...identically to a full rebuild over the union (same postings
     // semantics, index-once vs re-hash-everything economics).
     val rebuilt = graft.core.TempDirs.create("graft_minhash_rebuild")
-    graft.ext.Dedup.writeMinhashIndex(spark, rebuilt, (base ++ ingest1).toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(rebuilt, (base ++ ingest1).toDF("doc_id", "text"))
     val rebuiltRows = graft.ext.Dedup.probeMinhashIndex(spark, rebuilt, batchDf, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(probe() == rebuiltRows)
@@ -277,14 +277,14 @@ class DedupSpec extends AnyFunSuite with SparkTest {
 
     // Compaction: merge the two batches into one — probe-identical,
     // single referenced + on-disk batch, idempotent re-run.
-    graft.ext.Dedup.minhashIndexCompact(spark, dir)
+    graft.ext.NearDup.MinhashIndex.compact(spark, dir)
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1)
     val dirs = Option(new java.io.File(dir, "postings").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
     assert(dirs.length == 1, s"old batch dirs not GC'd: ${dirs.map(_.getName).mkString(",")}")
     assert(probe() == Seq((300L, 202L)), "compaction changed probe output")
-    graft.ext.Dedup.minhashIndexCompact(spark, dir)
+    graft.ext.NearDup.MinhashIndex.compact(spark, dir)
     assert(probe() == Seq((300L, 202L)))
   }
 
@@ -304,10 +304,10 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     val batchDf = probeDoc.toDF("doc_id", "text")
 
     val dir = graft.core.TempDirs.create("graft_minhash_dupbatch")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
-    graft.ext.Dedup.minhashIndexAppend(spark, dir, ingest.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.append(dir, ingest.toDF("doc_id", "text"))
     val rebuilt = graft.core.TempDirs.create("graft_minhash_dupbatch_rb")
-    graft.ext.Dedup.writeMinhashIndex(spark, rebuilt,
+    graft.ext.NearDup.MinhashIndex.write(rebuilt,
       (base ++ ingest).toDF("doc_id", "text"))
     def rows(d: String) = graft.ext.Dedup.probeMinhashIndex(spark, d, batchDf, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -330,7 +330,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     val base = (0L until 10L).map(i => (i, docText(i.toInt)))
     val arriving = (200L until 205L).map(i => (i, docText(i.toInt)))
     val dir = graft.core.TempDirs.create("graft_minhash_stream")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
     // Two source files + maxFilesPerTrigger=1 => TWO real micro-batches
     // through foreachBatch, each committing via minhashIndexAppend keyed
     // on its batchId.
@@ -344,7 +344,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) graft.ext.Dedup.minhashIndexAppend(spark, dir, b,
+        if (!b.isEmpty) graft.ext.NearDup.MinhashIndex.append(dir, b,
           ingestKey = Some(s"stream-$batchId"))
       }
       .option("checkpointLocation", graft.core.TempDirs.create("graft_minhash_stream_ckpt"))
@@ -364,15 +364,15 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // batch, no postings growth.
     val batchesBefore = graft.core.PersistedIndex.readManifest(dir).batches
     val postingsBefore = spark.read.parquet(s"$dir/postings").count()
-    graft.ext.Dedup.minhashIndexAppend(spark, dir,
+    graft.ext.NearDup.MinhashIndex.append(dir,
       arriving.take(2).toDF("doc_id", "text"), ingestKey = Some("stream-0"))
     assert(graft.core.PersistedIndex.readManifest(dir).batches == batchesBefore,
       "replayed ingestKey committed a duplicate batch")
     assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore)
     // The ledger survives compaction: a pre-compact micro-batch that
     // replays AFTER the compact is still recognized as committed.
-    graft.ext.Dedup.minhashIndexCompact(spark, dir)
-    graft.ext.Dedup.minhashIndexAppend(spark, dir,
+    graft.ext.NearDup.MinhashIndex.compact(spark, dir)
+    graft.ext.NearDup.MinhashIndex.append(dir,
       arriving.drop(2).toDF("doc_id", "text"), ingestKey = Some("stream-1"))
     assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore,
       "post-compaction replay re-committed a published batch")
@@ -382,47 +382,50 @@ class DedupSpec extends AnyFunSuite with SparkTest {
   test("minhash streaming ingest: a second stream on its own checkpoint is not dropped as a replay; a same-checkpoint replay stays a no-op") {
     import spark.implicits._
     import graft.core.{BoundedStream, PersistedIndex, TempDirs}
-    val dir = TempDirs.create("graft_minhash_two_streams")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir,
-      (0L until 10L).map(i => (i, docText(i.toInt))).toDF("doc_id", "text"))
-    // One stream: its own source dir and its own fresh checkpoint, into
-    // the shared index through the s_minhash_ingest leg's body.
-    def ingest(src: String, ckpt: String): Unit =
-      BoundedStream.appendStream(spark.readStream.schema("doc_id LONG, text STRING")
-        .parquet(src), ckpt) { (b, key) =>
-        graft.ext.Dedup.minhashIndexAppend(spark, dir, b, ingestKey = Some(key))
+    // Both document-postings families run the one shared index.
+    Seq(graft.ext.NearDup.MinhashIndex, graft.ext.NearDup.PhashIndex).foreach { ix =>
+      val name = s"graft_${ix.store.name}_two_streams"
+      val dir = TempDirs.create(name)
+      ix.write(dir, (0L until 10L).map(i => (i, docText(i.toInt))).toDF("doc_id", "text"))
+      // One stream: its own source dir and its own fresh checkpoint, into
+      // the shared index through the s_minhash_ingest leg's body.
+      def ingest(src: String, ckpt: String): Unit =
+        BoundedStream.appendStream(spark.readStream.schema("doc_id LONG, text STRING")
+          .parquet(src), ckpt) { (b, key) =>
+          ix.append(dir, b, ingestKey = Some(key))
+        }
+      def source(ids: Seq[Long]): String = {
+        val src = TempDirs.create(s"${name}_src")
+        ids.map(i => (i, docText(i.toInt))).toDF("doc_id", "text").coalesce(1)
+          .write.mode("append").parquet(src)
+        src
       }
-    def source(ids: Seq[Long]): String = {
-      val src = TempDirs.create("graft_minhash_two_streams_src")
-      ids.map(i => (i, docText(i.toInt))).toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(src)
-      src
-    }
-    def indexedDocs(): Set[Long] = {
+      def indexedDocs(): Set[Long] = {
+        val m = PersistedIndex.readManifest(dir)
+        spark.read.parquet(s"$dir/postings").where($"batch_id".isin(m.batches: _*))
+          .select("doc_id").distinct().as[Long].collect().toSet
+      }
+      ingest(source(Seq(200L, 201L)), TempDirs.create(s"${name}_ckpt"))
+      assert(PersistedIndex.readManifest(dir).batches == Seq(0L, 1L), ix.store.name)
+      val src2 = source(Seq(300L, 301L))
+      val ckpt2 = TempDirs.create(s"${name}_ckpt")
+      ingest(src2, ckpt2) // batchId 0 again, under a new checkpoint
       val m = PersistedIndex.readManifest(dir)
-      spark.read.parquet(s"$dir/postings").where($"batch_id".isin(m.batches: _*))
-        .select("doc_id").distinct().as[Long].collect().toSet
+      assert(m.batches == Seq(0L, 1L, 2L), s"${ix.store.name}: second stream's batch dropped: $m")
+      assert(m.ingestKeys.distinct.size == 2, s"${ix.store.name}: ingest keys collided: ${m.ingestKeys}")
+      assert(Set(200L, 201L, 300L, 301L).subsetOf(indexedDocs()),
+        s"${ix.store.name}: streamed docs missing from the index: ${indexedDocs()}")
+      // Replay from the SAME checkpoint: drop its commit record (the crash
+      // window between manifest commit and checkpoint commit) and rerun.
+      val commit = new java.io.File(ckpt2, "commits/0")
+      assert(commit.delete(), "failed to remove the checkpoint commit")
+      new java.io.File(ckpt2, "commits/.0.crc").delete()
+      val postingsBefore = spark.read.parquet(s"$dir/postings").count()
+      ingest(src2, ckpt2)
+      assert(commit.exists(), s"${ix.store.name}: the replay did not re-commit batch 0")
+      assert(PersistedIndex.readManifest(dir) == m, s"${ix.store.name}: a same-checkpoint replay committed again")
+      assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore, ix.store.name)
     }
-    ingest(source(Seq(200L, 201L)), TempDirs.create("graft_minhash_two_streams_ckpt"))
-    assert(PersistedIndex.readManifest(dir).batches == Seq(0L, 1L))
-    val src2 = source(Seq(300L, 301L))
-    val ckpt2 = TempDirs.create("graft_minhash_two_streams_ckpt")
-    ingest(src2, ckpt2) // batchId 0 again, under a new checkpoint
-    val m = PersistedIndex.readManifest(dir)
-    assert(m.batches == Seq(0L, 1L, 2L), s"second stream's batch dropped: $m")
-    assert(m.ingestKeys.distinct.size == 2, s"ingest keys collided: ${m.ingestKeys}")
-    assert(Set(200L, 201L, 300L, 301L).subsetOf(indexedDocs()),
-      s"streamed docs missing from the index: ${indexedDocs()}")
-    // Replay from the SAME checkpoint: drop its commit record (the crash
-    // window between manifest commit and checkpoint commit) and rerun.
-    val commit = new java.io.File(ckpt2, "commits/0")
-    assert(commit.delete(), "failed to remove the checkpoint commit")
-    new java.io.File(ckpt2, "commits/.0.crc").delete()
-    val postingsBefore = spark.read.parquet(s"$dir/postings").count()
-    ingest(src2, ckpt2)
-    assert(commit.exists(), "the replay did not re-commit batch 0")
-    assert(PersistedIndex.readManifest(dir) == m, "a same-checkpoint replay committed again")
-    assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore)
   }
 
   test("minhashIndexDelete: tombstoned docs invisible pre- and post-compaction; ledger survives appends") {
@@ -433,24 +436,24 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     val corpus = (base ++ probeDocs).toDF("doc_id", "text")
     val batchDf = probeDocs.toDF("doc_id", "text")
     val dir = graft.core.TempDirs.create("graft_minhash_delete")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
     def probe() = graft.ext.Dedup.probeMinhashIndex(spark, dir, batchDf, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(probe() == Set((300L, 3L), (301L, 5L)))
 
     // Takedown of doc 3: its postings must stop matching immediately.
-    graft.ext.Dedup.minhashIndexDelete(spark, dir, Seq(3L).toDF("doc_id"))
+    graft.ext.NearDup.MinhashIndex.store.delete(dir, Seq(3L).toDF("doc_id"))
     assert(probe() == Set((301L, 5L)), s"deleted doc still matches: ${probe()}")
 
     // Appends preserve the ledger (no resurrection via manifest rewrite).
-    graft.ext.Dedup.minhashIndexAppend(spark, dir,
+    graft.ext.NearDup.MinhashIndex.append(dir,
       Seq((200L, docText(200))).toDF("doc_id", "text"))
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.nonEmpty,
       "append wiped the tombstone ledger")
     assert(probe() == Set((301L, 5L)))
 
     // Compaction drops doc 3's postings physically and clears the ledger.
-    graft.ext.Dedup.minhashIndexCompact(spark, dir)
+    graft.ext.NearDup.MinhashIndex.compact(spark, dir)
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty)
     assert(probe() == Set((301L, 5L)), "compaction changed the post-delete probe")
     val remaining = spark.read
@@ -464,25 +467,26 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // ADVICE r9: GC used to delete every on-disk batch dir; an in-flight
     // append that renamed its staging dir but hadn't committed the
     // manifest would be destroyed. GC now touches only the ids that were
-    // committed at compact start.
+    // committed at compact start. Both document-postings families.
     val base = (0L until 10L).map(i => (i, docText(i.toInt)))
     val ingest = (200L until 205L).map(i => (i, docText(i.toInt)))
-    val dir = graft.core.TempDirs.create("graft_minhash_gcspare")
-    graft.ext.Dedup.writeMinhashIndex(spark, dir, base.toDF("doc_id", "text"))
-    graft.ext.Dedup.minhashIndexAppend(spark, dir, ingest.toDF("doc_id", "text"))
-    // Simulate the in-flight appender: batch dir renamed into place,
-    // manifest not yet swapped (ids 0,1 committed; 2 in flight).
-    val inFlight = graft.core.PersistedIndex.readManifest(dir).batches
-    graft.ext.Dedup.minhashIndexAppend(spark, dir,
-      Seq((400L, docText(400))).toDF("doc_id", "text"))
-    graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(inFlight)) // roll back the commit
-    graft.ext.Dedup.minhashIndexCompact(spark, dir)
-    val dirs = Option(new java.io.File(dir, "postings").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName).sorted
-    // The compacted batch plus the spared in-flight dir — nothing else.
-    assert(dirs.length == 2 && dirs.contains("batch_id=2"),
-      s"in-flight batch dir was GC'd (or old dirs leaked): ${dirs.mkString(",")}")
+    Seq(graft.ext.NearDup.MinhashIndex, graft.ext.NearDup.PhashIndex).foreach { ix =>
+      val dir = graft.core.TempDirs.create(s"graft_${ix.store.name}_gcspare")
+      ix.write(dir, base.toDF("doc_id", "text"))
+      ix.append(dir, ingest.toDF("doc_id", "text"))
+      // Simulate the in-flight appender: batch dir renamed into place,
+      // manifest not yet swapped (ids 0,1 committed; 2 in flight).
+      val inFlight = graft.core.PersistedIndex.readManifest(dir).batches
+      ix.append(dir, Seq((400L, docText(400))).toDF("doc_id", "text"))
+      graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(inFlight)) // roll back the commit
+      ix.compact(spark, dir)
+      val dirs = Option(new java.io.File(dir, "postings").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+        .map(_.getName).sorted
+      // The compacted batch plus the spared in-flight dir — nothing else.
+      assert(dirs.length == 2 && dirs.contains("batch_id=2"),
+        s"${ix.store.name}: in-flight batch dir was GC'd (or old dirs leaked): ${dirs.mkString(",")}")
+    }
   }
 }

@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Drift guard: the index lifecycle (writer lease, swap recovery, atomic
   * renames, batch-id allocation) lives only in core.PersistedIndex, the
   * bounded-stream run (writeStream, AvailableNow, checkpoint, await)
-  * only in core.BoundedStream, and the nearest-centroid argmax only in
-  * Similarity.argBest, so no module can grow another hand-rolled copy
-  * of any of them.
+  * only in core.BoundedStream, the nearest-centroid argmax only in
+  * Similarity.argBest, and the 64-bit Hamming band slice and the
+  * document-postings index stores only in ext.NearDup, so no module can
+  * grow another hand-rolled copy of any of them.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
 
@@ -62,6 +63,20 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
     for ((f, i, line) <- hits)
       assert(f == kernelFile && i > kernel && i <= kernel + 3,
         s"${f.getName}:${i + 1} hand-rolls a nearest-centroid argmax: ${line.trim}")
+  }
+
+  private val BandSlice = Seq("bitwiseAND(lit(0xFFFFL))", "bitwiseAND(lit(65535L))")
+
+  test("the 64-bit band slice lives only in NearDup; the document indexes are built there") {
+    val kernelFile = new java.io.File("src/main/scala/graft/ext/NearDup.scala")
+    assert(BandSlice.exists(read(kernelFile).contains), "NearDup no longer slices bands")
+    for (f <- sources("src/main/scala/graft/ext") if f != kernelFile;
+         (line, i) <- read(f).linesIterator.zipWithIndex; p <- BandSlice)
+      assert(!line.contains(p), s"${f.getName}:${i + 1} hand-rolls a Hamming band slice ($p)")
+    for (name <- Seq("Dedup.scala", "Multimodal.scala");
+         (line, i) <- read(new java.io.File("src/main/scala/graft/ext", name)).linesIterator.zipWithIndex)
+      assert(!line.contains("PersistedIndex("),
+        s"$name:${i + 1} builds its own index store; document indexes are NearDup.DocIndex values")
   }
 
   test("the guarded patterns are the ones the template uses") {

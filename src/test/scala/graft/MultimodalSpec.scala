@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Multimodal
+import graft.ext.{Multimodal, NearDup}
 
 /** Codec-level checks for the multimodal container stub: header fields
   * and payload survive the encode→decode round trip, including edge
@@ -42,7 +42,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     val s3 = s1 ^ (1L << 1) ^ (1L << 17) ^ (1L << 33) ^ (1L << 49)
     val s4 = s1 ^ 0x0FL
     val sigs = Seq((1L, s1), (2L, s2), (3L, s3), (4L, s4)).toDF("doc_id", "ph")
-    val got = Multimodal.phashBandedPairs(sigs).collect()
+    val got = NearDup.hammingPairs(sigs, "ph", Multimodal.PhashMaxHamming).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 3L)), got)
     // Brute-force equivalence on pseudo-random signatures: pigeonhole
@@ -53,7 +53,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
       (ia, a) <- rnd; (ib, b) <- rnd
       if ia < ib && java.lang.Long.bitCount(a ^ b) <= 3
     } yield (ia, ib, java.lang.Long.bitCount(a ^ b).toLong)
-    val banded = Multimodal.phashBandedPairs(rnd.toDF("doc_id", "ph")).collect()
+    val banded = NearDup.hammingPairs(rnd.toDF("doc_id", "ph"), "ph", Multimodal.PhashMaxHamming).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(banded == all.toSet)
   }
@@ -103,30 +103,30 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
 
     // append path: seed over A, append B
     val inc = mk("graft_phash_spec_inc")
-    Multimodal.writePhashIndex(spark, inc, a)
-    Multimodal.phashIndexAppend(spark, inc, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.write(inc, a)
+    NearDup.PhashIndex.append(inc, b, ingestKey = Some("k1"))
     // rebuild path: one index over A union B
     val full = mk("graft_phash_spec_full")
-    Multimodal.writePhashIndex(spark, full, a.unionByName(b))
+    NearDup.PhashIndex.write(full, a.unionByName(b))
     val incPairs = pairs(inc)
     assert(incPairs == pairs(full), "append != rebuild")
     assert(incPairs.nonEmpty, "probe found no planted renditions")
 
     // replay no-op: same ingest key appends nothing
     val before = graft.core.PersistedIndex.readManifest(inc).batches
-    Multimodal.phashIndexAppend(spark, inc, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(inc, b, ingestKey = Some("k1"))
     assert(graft.core.PersistedIndex.readManifest(inc).batches == before, "replay appended a batch")
     assert(pairs(inc) == incPairs, "replay changed probe results")
 
     // delete: tombstone one victim; exactly its pairs vanish
     val victim = incPairs.map(_._2).min
-    Multimodal.phashIndexDelete(spark, inc, Seq(victim).toDF("doc_id"))
+    NearDup.PhashIndex.store.delete(inc, Seq(victim).toDF("doc_id"))
     val after = pairs(inc)
     assert(after == incPairs.filterNot(_._2 == victim), "delete removed the wrong pairs")
 
     // compact: probe identical, postings fold to ONE batch dir, the
     // takedown materializes physically (tombstone ledger clears).
-    Multimodal.phashIndexCompact(spark, inc)
+    NearDup.PhashIndex.compact(spark, inc)
     assert(pairs(inc) == after, "compaction changed probe results")
     assert(graft.core.PersistedIndex.readManifest(inc).batches.size == 1, "compaction left several batches")
     assert(graft.core.PersistedIndex.readManifest(inc).tombstones.isEmpty, "tombstone ledger not cleared")
@@ -150,13 +150,13 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
       Multimodal.probePhashIndex(spark, dir, probe).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val dir = graft.core.TempDirs.create("graft_phash_spec_rb")
-    Multimodal.writePhashIndex(spark, dir, a)
-    Multimodal.phashIndexAppend(spark, dir, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.write(dir, a)
+    NearDup.PhashIndex.append(dir, b, ingestKey = Some("k1"))
     val victim = pairs(dir).map(_._2).min
-    Multimodal.phashIndexDelete(spark, dir, Seq(victim).toDF("doc_id"))
+    NearDup.PhashIndex.store.delete(dir, Seq(victim).toDF("doc_id"))
     val before = pairs(dir)
 
-    Multimodal.phashIndexRebuild(spark, dir, docs)
+    NearDup.PhashIndex.rebuild(dir, docs)
     assert(pairs(dir) == before, "rebuild changed probe results")
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1, "rebuild left several batches")
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty, "tombstone ledger not cleared")
@@ -167,7 +167,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // ledger survival: a pre-rebuild replay stays a no-op
     assert(graft.core.PersistedIndex.readManifest(dir).ingestKeys.contains("k1"))
     val manifest = graft.core.PersistedIndex.readManifest(dir).batches
-    Multimodal.phashIndexAppend(spark, dir, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(dir, b, ingestKey = Some("k1"))
     assert(graft.core.PersistedIndex.readManifest(dir).batches == manifest, "replay appended after rebuild")
     assert(pairs(dir) == before, "replay changed probe results after rebuild")
 
@@ -176,7 +176,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // orphan .rebuild.* stage with garbage postings, no aside twin).
     val staging = new java.io.File(dir, ".rebuild.crashed-spec")
     new java.io.File(staging, "postings").mkdirs()
-    graft.core.StagedSwap.recover(dir, Multimodal.PhashStore.subs)
+    graft.core.StagedSwap.recover(dir, NearDup.PhashIndex.store.subs)
     assert(!staging.exists(), "recover left the orphan staging dir")
     assert(pairs(dir) == before, "recovery changed probe results")
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{PersistedIndex, TempDirs, Warehouse}
-import graft.ext.{Dedup, Multimodal, Similarity}
+import graft.ext.{NearDup, Similarity}
 
 /** The shared index lifecycle, once per family: a rebuild that crashed
   * mid-swap must be repaired before the next rebuild reads anything, so
@@ -33,29 +33,29 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
     val docs = (0L until 96L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
     val emb = vecs.toDF("vec_id", "embedding")
     Seq(
-      Family("minhash", Dedup.MinhashStore,
-        d => Dedup.writeMinhashIndex(spark, d, docs.filter(col("doc_id") < 64)),
-        d => Dedup.minhashIndexAppend(spark, d, docs.filter(col("doc_id") >= 64)),
-        (d, id) => Dedup.minhashIndexDelete(spark, d, Seq(id).toDF("doc_id")),
-        d => Dedup.minhashIndexCompact(spark, d),
-        d => Dedup.minhashIndexRebuild(spark, d, docs)),
-      Family("phash", Multimodal.PhashStore,
-        d => Multimodal.writePhashIndex(spark, d, docs.filter(col("doc_id") < 64)),
-        d => Multimodal.phashIndexAppend(spark, d, docs.filter(col("doc_id") >= 64)),
-        (d, id) => Multimodal.phashIndexDelete(spark, d, Seq(id).toDF("doc_id")),
-        d => Multimodal.phashIndexCompact(spark, d),
-        d => Multimodal.phashIndexRebuild(spark, d, docs)),
+      Family("minhash", NearDup.MinhashIndex.store,
+        d => NearDup.MinhashIndex.write(d, docs.filter(col("doc_id") < 64)),
+        d => NearDup.MinhashIndex.append(d, docs.filter(col("doc_id") >= 64)),
+        (d, id) => NearDup.MinhashIndex.store.delete(d, Seq(id).toDF("doc_id")),
+        d => NearDup.MinhashIndex.compact(spark, d),
+        d => NearDup.MinhashIndex.rebuild(d, docs)),
+      Family("phash", NearDup.PhashIndex.store,
+        d => NearDup.PhashIndex.write(d, docs.filter(col("doc_id") < 64)),
+        d => NearDup.PhashIndex.append(d, docs.filter(col("doc_id") >= 64)),
+        (d, id) => NearDup.PhashIndex.store.delete(d, Seq(id).toDF("doc_id")),
+        d => NearDup.PhashIndex.compact(spark, d),
+        d => NearDup.PhashIndex.rebuild(d, docs)),
       Family("semdedup", Similarity.SemdedupStore,
         d => Similarity.writeSemdedupIndex(spark, d, emb.filter(col("vec_id") < 64), tau = 0.9),
         d => { Similarity.semdedupIndexIngest(spark, d, emb.filter(col("vec_id") >= 64),
           tau = 0.9).collect(); () },
-        (d, id) => Similarity.semdedupIndexDelete(spark, d, Seq(id).toDF("vec_id")),
+        (d, id) => Similarity.SemdedupStore.delete(d, Seq(id).toDF("vec_id")),
         d => Similarity.semdedupIndexCompact(spark, d),
         d => Similarity.semdedupIndexRebuild(spark, d, tau = 0.9)),
       Family("IVF", Similarity.IvfStore,
         d => Similarity.writeIvfIndex(spark, d, emb.filter(col("vec_id") < 64)),
         d => Similarity.ivfIndexAppend(spark, d, emb.filter(col("vec_id") >= 64)),
-        (d, id) => Similarity.ivfIndexDelete(spark, d, Seq(id).toDF("vec_id")),
+        (d, id) => Similarity.IvfStore.delete(d, Seq(id).toDF("vec_id")),
         d => Similarity.ivfIndexCompact(spark, d),
         d => Similarity.ivfIndexRebuild(spark, d)))
   }

@@ -141,7 +141,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // Take down members 20 and 21: their copies must now SURVIVE — the
     // tombstoned members no longer dominate.
     val dir = copyOf("graft_semdedup_del_live")
-    Similarity.semdedupIndexDelete(spark, dir, Seq(20L, 21L).toDF("vec_id"))
+    Similarity.SemdedupStore.delete(dir, Seq(20L, 21L).toDF("vec_id"))
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.size == 1)
     assert(!ingest(dir, copy20)(5000L),
       "copy of the taken-down member 20 was still suppressed")

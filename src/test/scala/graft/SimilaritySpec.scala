@@ -653,7 +653,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // swapped) must not affect probes.
     val manifestPath = new java.io.File(dir, "manifest.json").toPath
     val preDelete = java.nio.file.Files.readAllBytes(manifestPath)
-    Similarity.ivfIndexDelete(spark, dir, Seq(100000L, 100001L).toDF("vec_id"))
+    Similarity.IvfStore.delete(dir, Seq(100000L, 100001L).toDF("vec_id"))
     val postDelete = java.nio.file.Files.readAllBytes(manifestPath)
     java.nio.file.Files.write(manifestPath, preDelete)
     assert(topIds() == before, "uncommitted tombstones leaked into a probe")
@@ -760,7 +760,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Similarity.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 400))
     Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 400),
       ingestKey = Some("k1"))
-    Similarity.ivfIndexDelete(spark, dir, Seq(7L).toDF("vec_id"))
+    Similarity.IvfStore.delete(dir, Seq(7L).toDF("vec_id"))
     val lookup = corpus.toMap
     val rnd = new scala.util.Random(17)
     val skew = (0 until 400).map { i =>

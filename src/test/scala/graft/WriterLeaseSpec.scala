@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Dedup, Multimodal, Similarity}
+import graft.ext.{NearDup, Similarity}
 
 /** Single-writer enforcement on the persisted index layouts: a live
   * concurrent writer fails fast, a crashed writer's stale lock is
@@ -19,22 +19,22 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val docs = (0L until 8L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
     val dir = graft.core.TempDirs.create("graft_lease_minhash")
-    Dedup.writeMinhashIndex(spark, dir, docs)
+    NearDup.MinhashIndex.write(dir, docs)
     // Another writer holds the lease (fresh lock): every mutation must
     // refuse rather than allocate a colliding batch id or GC its work.
     java.nio.file.Files.write(lockOf(dir).toPath, "other 0".getBytes)
     val batch = Seq((100L, doc(100))).toDF("doc_id", "text")
     val eApp = intercept[IllegalStateException] {
-      Dedup.minhashIndexAppend(spark, dir, batch)
+      NearDup.MinhashIndex.append(dir, batch)
     }
     assert(eApp.getMessage.contains("single-writer"))
     intercept[IllegalStateException] {
-      Dedup.minhashIndexDelete(spark, dir, Seq(0L).toDF("doc_id"))
+      NearDup.MinhashIndex.store.delete(dir, Seq(0L).toDF("doc_id"))
     }
-    intercept[IllegalStateException] { Dedup.minhashIndexCompact(spark, dir) }
+    intercept[IllegalStateException] { NearDup.MinhashIndex.compact(spark, dir) }
     java.nio.file.Files.delete(lockOf(dir).toPath)
     // With the lease free, the append proceeds — and releases.
-    Dedup.minhashIndexAppend(spark, dir, batch)
+    NearDup.MinhashIndex.append(dir, batch)
     assert(!lockOf(dir).exists(), "lease not released after append")
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
@@ -43,13 +43,13 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val docs = (0L until 8L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
     val dir = graft.core.TempDirs.create("graft_lease_stale")
-    Dedup.writeMinhashIndex(spark, dir, docs)
+    NearDup.MinhashIndex.write(dir, docs)
     val lock = lockOf(dir)
     java.nio.file.Files.write(lock.toPath, "crashed 0".getBytes)
     assert(lock.setLastModified(System.currentTimeMillis() - 11L * 60 * 1000))
     // Past the staleness bar the next writer takes over instead of
     // wedging forever.
-    Dedup.minhashIndexAppend(spark, dir, Seq((100L, doc(100))).toDF("doc_id", "text"))
+    NearDup.MinhashIndex.append(dir, Seq((100L, doc(100))).toDF("doc_id", "text"))
     assert(!lock.exists())
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
@@ -171,40 +171,40 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     Similarity.writeIvfIndex(spark, ivfDir, vecs.toDF("vec_id", "embedding"))
     java.nio.file.Files.write(lockOf(ivfDir).toPath, "other 0".getBytes)
     intercept[IllegalStateException] {
-      Similarity.ivfIndexDelete(spark, ivfDir, Seq(1L).toDF("vec_id"))
+      Similarity.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
     }
     java.nio.file.Files.delete(lockOf(ivfDir).toPath)
-    Similarity.ivfIndexDelete(spark, ivfDir, Seq(1L).toDF("vec_id"))
+    Similarity.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
     assert(!lockOf(ivfDir).exists())
 
     val sdDir = graft.core.TempDirs.create("graft_lease_semdedup")
     Similarity.writeSemdedupIndex(spark, sdDir, vecs.toDF("vec_id", "embedding"), tau = 0.9)
     java.nio.file.Files.write(lockOf(sdDir).toPath, "other 0".getBytes)
     intercept[IllegalStateException] {
-      Similarity.semdedupIndexDelete(spark, sdDir, Seq(1L).toDF("vec_id"))
+      Similarity.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
     }
     java.nio.file.Files.delete(lockOf(sdDir).toPath)
-    Similarity.semdedupIndexDelete(spark, sdDir, Seq(1L).toDF("vec_id"))
+    Similarity.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
     assert(!lockOf(sdDir).exists())
 
     // The MinHash and pHash families: every mutator, rebuild included.
     val docs = (0L until 8L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
     val batch = Seq((100L, doc(100))).toDF("doc_id", "text")
     val mhDir = graft.core.TempDirs.create("graft_lease_minhash_ops")
-    Dedup.writeMinhashIndex(spark, mhDir, docs)
+    NearDup.MinhashIndex.write(mhDir, docs)
     val phDir = graft.core.TempDirs.create("graft_lease_phash_ops")
-    Multimodal.writePhashIndex(spark, phDir, docs)
+    NearDup.PhashIndex.write(phDir, docs)
     val ops: Seq[(String, Seq[String => Unit])] = Seq(
       mhDir -> Seq(
-        d => Dedup.minhashIndexAppend(spark, d, batch),
-        d => Dedup.minhashIndexDelete(spark, d, Seq(1L).toDF("doc_id")),
-        d => Dedup.minhashIndexCompact(spark, d),
-        d => Dedup.minhashIndexRebuild(spark, d, docs)),
+        d => NearDup.MinhashIndex.append(d, batch),
+        d => NearDup.MinhashIndex.store.delete(d, Seq(1L).toDF("doc_id")),
+        d => NearDup.MinhashIndex.compact(spark, d),
+        d => NearDup.MinhashIndex.rebuild(d, docs)),
       phDir -> Seq(
-        d => Multimodal.phashIndexAppend(spark, d, batch),
-        d => Multimodal.phashIndexDelete(spark, d, Seq(1L).toDF("doc_id")),
-        d => Multimodal.phashIndexCompact(spark, d),
-        d => Multimodal.phashIndexRebuild(spark, d, docs)))
+        d => NearDup.PhashIndex.append(d, batch),
+        d => NearDup.PhashIndex.store.delete(d, Seq(1L).toDF("doc_id")),
+        d => NearDup.PhashIndex.compact(spark, d),
+        d => NearDup.PhashIndex.rebuild(d, docs)))
     ops.foreach { case (dir, mutators) =>
       java.nio.file.Files.write(lockOf(dir).toPath, "other 0".getBytes)
       mutators.foreach(m => intercept[IllegalStateException] { m(dir) })
