@@ -80,25 +80,22 @@ object Bench {
     // bucketed JOIN itself is still timed cold like every other query.
     try graft.ops.Bucketed.seed(spark, sfDir)
     catch { case _: Throwable => () }
-    // Untimed for the same reason: the persisted ANN/minhash index seeds
-    // and the immutable IVF scratch-seed template (s_ann_ingest /
-    // q_ann_ivf_compact copy it per run) — one-time per-fixture LAYOUT
-    // writes, marker-gated under /tmp. The timed entries measure the
-    // steady-state operations (probe / append / stream / compact), not
-    // the one-time seed build a deployment pays once per corpus.
-    try { graft.ext.Similarity.ensureIvfScratchSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
+    // Untimed for the same reason: every index lifecycle entry's seed,
+    // baked template (the seed plus a fixture-deterministic setup
+    // mutation, e.g. q_ann_ivf_compact's appended decile) and discovery
+    // caches (q_semdedup_delete's purge cells, q_semdedup_rebuild's
+    // victims) — one-time per-fixture LAYOUT writes, marker-gated under
+    // /tmp (core.IndexLifecycle). The timed entries measure the
+    // operators (probe / append / stream / delete / compact / rebuild) on
+    // a per-run scratch copy, not the one-time setup a deployment pays
+    // once per corpus.
+    SparkEntry.queries.foreach {
+      case (_, s: graft.core.IndexLifecycle.Scenario) =>
+        try s.warm(spark, sfDir) catch { case _: Throwable => () }
+      case _ => ()
+    }
+    // Untimed, same economics: the probe entries' persisted IVF index.
     try { graft.ext.Similarity.ensureIvfIndex(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    try { graft.ext.NearDup.MinhashIndex.ensure(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    try { graft.ext.Similarity.ensureSemdedupIndex(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed: the fixture-deterministic discovery caches beside the
-    // semdedup seed (q_semdedup_delete's purge cells, q_semdedup_rebuild's
-    // victim/prev-removed sets) — one-time per fixture like the seeds;
-    // the timed entries measure takedown/rebuild, not discovery.
-    try graft.ext.Similarity.ensureSemdedupEntryCaches(spark, sfDir)
     catch { case _: Throwable => () }
     // Untimed: q_graph_cc_incremental's persisted base labels — the
     // one-time-per-fixture base labeling; the timed entry measures the
@@ -106,25 +103,17 @@ object Bench {
     try { graft.ops.Graph.ensureCcLabelsSeed(spark, sfDir); () }
     catch { case _: Throwable => () }
     // Untimed (r13, same economics): q_pagerank_incremental's persisted
-    // per-iteration base ranks and the pHash postings-index seed.
+    // per-iteration base ranks.
     try { graft.ops.Graph.ensurePrRanksSeed(spark, sfDir); () }
     catch { case _: Throwable => () }
-    try { graft.ext.NearDup.PhashIndex.ensure(spark, sfDir); () }
+    // Untimed, same economics: q_lpa_incremental's persisted base labels;
+    // the timed entry measures the incremental rounds.
+    try { graft.ops.Graph.ensureLpaLabelsSeed(spark, sfDir); () }
     catch { case _: Throwable => () }
-    // Untimed: the DERIVED seed templates (base seed + a deterministic
-    // setup mutation baked in) the lifecycle entries copy per run —
-    // q_ann_ivf_compact/_delete start from "appended", q_ann_ivf_rebuild
-    // from "poisoned" (skew + takedown), q_semdedup_compact from
-    // "ingested1", q_semdedup_rebuild from "victims-deleted". Same
-    // one-time economics as the base seeds; the timed entries measure
-    // the operators (compact/delete/rebuild + probes), not their setup.
-    try { graft.ext.Similarity.ensureAppendedIvfSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    try { graft.ext.Similarity.ensurePoisonedIvfSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    try { graft.ext.Similarity.ensureIngestedSemdedupSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    try { graft.ext.Similarity.ensureVictimsDeletedSemdedupSeed(spark, sfDir); () }
+    // Untimed: q_binary_ingest's synthesized blob objects — the INPUT
+    // the entry ingests (production's objects exist before the
+    // pipeline runs); the timed entry measures the binaryFile read.
+    try { graft.ext.Multimodal.ensureBlobDir(spark, sfDir); () }
     catch { case _: Throwable => () }
     // Untimed: the session-memoized graph edge projections (production's
     // materialized bucketed edge tables). Without this the FIRST graph

@@ -192,28 +192,13 @@ object Tables {
     * sweeps through r11 recorded ~0.05 s no-op timings for the
     * document/supplier/embedding streaming entries; caught r12).
     */
-  def streamTable(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    batchAndStream(spark, sfDir, s"$table.parquet")._2
-
-  /** The ONE implementation of the file-vs-directory dispatch (r15: it
-    * used to exist here AND inline in ext.Similarity.annIngestPipeline —
-    * the ScaleGen-directory bug class was fixed in two places). Resolves
-    * `leaf` (a literal file name or a glob) under `srcDir` to a
-    * (static read, stream read) pair over the same files: callers that
-    * need both — the ANN ingest pipeline seeds its index from the
-    * static half and streams the rest — must get them from one dispatch
-    * or the two halves can diverge on layout.
-    */
-  def batchAndStream(spark: SparkSession, srcDir: String,
-      leaf: String): (DataFrame, DataFrame) = {
-    val f = new java.io.File(srcDir, leaf)
-    if (f.isDirectory) {
-      val s = spark.read.parquet(f.getPath)
-      (s, spark.readStream.schema(s.schema).parquet(f.getPath))
-    } else {
-      val s = spark.read.option("pathGlobFilter", leaf).parquet(srcDir)
-      (s, spark.readStream.schema(s.schema)
-        .option("pathGlobFilter", leaf).parquet(srcDir))
-    }
+  def streamTable(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val leaf = s"$table.parquet"
+    val f = new java.io.File(sfDir, leaf)
+    if (f.isDirectory)
+      spark.readStream.schema(spark.read.parquet(f.getPath).schema).parquet(f.getPath)
+    else
+      spark.readStream.schema(spark.read.option("pathGlobFilter", leaf).parquet(sfDir).schema)
+        .option("pathGlobFilter", leaf).parquet(sfDir)
   }
 }

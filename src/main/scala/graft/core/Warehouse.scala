@@ -24,9 +24,9 @@ object Warehouse {
 
   /** Clone an immutable marker-gated seed template into a fresh scratch
     * dir for one run's mutations, dropping the `_SEEDED` marker so the
-    * copy is never mistaken for a template. No Spark jobs. The one
-    * shared definition of the template-scratch idiom the lifecycle
-    * entries of every index family use.
+    * copy is never mistaken for a template. No Spark jobs. Its one
+    * caller is [[IndexLifecycle.Scenario]], which copies a template per
+    * call for the lifecycle entries of every index family.
     *
     * HARDLINKS, not byte copies (r13 bench reclaim): every index
     * mutation (core.PersistedIndex) writes NEW files — appends and
@@ -69,11 +69,13 @@ object Warehouse {
   /** Marker-gated DERIVED seed: a base seed template plus a fixture-
     * deterministic mutation sequence, applied ONCE and cached as a
     * sibling template (`<base>-<suffix>`) — the same disclosed untimed
-    * seed economics as the base. Lifecycle entries whose operator under
-    * test comes AFTER a deterministic setup mutation (e.g. "append then
-    * COMPACT", "poison+takedown then REBUILD") copy this derived
-    * template per run, so the timed region is the operator itself, not
-    * the setup replayed identically every run. The base tag already
+    * seed economics as the base. Its one caller is
+    * [[IndexLifecycle.Scenario]], whose baked steps land here: an entry
+    * whose operator under test comes AFTER a deterministic setup
+    * mutation (e.g. "append then COMPACT", "poison+takedown then
+    * REBUILD") copies this derived template per run, so the timed region
+    * is the operator itself, not the setup replayed identically every
+    * run. The base tag already
     * carries fixture mtime+length, so staleness invalidates derived
     * templates exactly as it invalidates bases.
     */

@@ -274,8 +274,8 @@ object Corpus extends QueryModule {
     * Keys are floor-truncated to 6 dp before ranking with doc_id as the
     * full tiebreak, keeping the order off cross-engine pow() ulp
     * divergence.
-    */
-  /** Testable core of q_weighted_sample (CorpusSpec drives it with a
+    *
+    * Testable core of q_weighted_sample (CorpusSpec drives it with a
     * controlled heavy-doc corpus to pin the E-S inclusion law).
     */
   private[graft] def weightedSampleOf(docs: DataFrame, k: Int): DataFrame =

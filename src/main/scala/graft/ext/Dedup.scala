@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables}
+import graft.core.{IndexLifecycle, PersistedIndex, QueryDef, QueryModule, Tables}
+import graft.core.IndexLifecycle.{Compact, Rebuild, Step}
 
 /** Deduplication family for training-data curation over `documents`:
   * exact (content-hash groupBy), n-gram Jaccard on a bounded candidate
@@ -425,26 +426,6 @@ object Dedup extends QueryModule {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Staged near-dup pipeline (the 100 TB path), output-identical to the
-    * naive one:
-    *  1. collapse exact duplicates by content hash — within a group every
-    *     pair is Jaccard 1.0 BY IDENTITY (same text ⇒ same word set), so
-    *     those pairs are emitted arithmetically, never verified;
-    *  2. MinHash + LSH + Jaccard verify run only on one representative
-    *     per distinct content (dedup work scales with distinct docs, not
-    *     with copy count);
-    *  3. representative near-pairs expand back to member cross products
-    *     (identical text per group ⇒ the expanded pair's Jaccard equals
-    *     the representatives').
-    * On a 20× corpus where every doc has 19 exact copies this turns a
-    * ~1M-pair verify (278 s locally) into a ~250-pair verify.
-    */
-  /** LSH candidates + exact word-set Jaccard >= 0.8 verify over one
-    * representative per distinct content. Shared by the staged pair
-    * pipeline AND the graph clustering — the cluster components are
-    * defined over exactly this pair set (DedupSpec pins that), so the
-    * two must never drift apart.
-    */
   /** Exact word-set Jaccard >= 0.8 verification of an explicit candidate
     * pair set — the DETERMINISTIC leg of the pipeline, recomputable by
     * the DuckDB oracle from the same candidates (see OracleTap).
@@ -461,9 +442,29 @@ object Dedup extends QueryModule {
       .filter(col("jaccard") >= 0.8)
   }
 
+  /** LSH candidates + exact word-set Jaccard >= 0.8 verify over one
+    * representative per distinct content. Shared by the staged pair
+    * pipeline AND the graph clustering — the cluster components are
+    * defined over exactly this pair set (DedupSpec pins that), so the
+    * two must never drift apart.
+    */
   private def verifiedRepPairs(reps: DataFrame): DataFrame =
     verifyJaccard(lshCandidates(minhashSignatures(reps)), reps)
 
+  /** Staged near-dup pipeline (the 100 TB path), output-identical to the
+    * naive one:
+    *  1. collapse exact duplicates by content hash — within a group every
+    *     pair is Jaccard 1.0 BY IDENTITY (same text ⇒ same word set), so
+    *     those pairs are emitted arithmetically, never verified;
+    *  2. MinHash + LSH + Jaccard verify run only on one representative
+    *     per distinct content (dedup work scales with distinct docs, not
+    *     with copy count);
+    *  3. representative near-pairs expand back to member cross products
+    *     (identical text per group ⇒ the expanded pair's Jaccard equals
+    *     the representatives').
+    * On a 20× corpus where every doc has 19 exact copies this turns a
+    * ~1M-pair verify (278 s locally) into a ~250-pair verify.
+    */
   private def minhashNearDup(spark: SparkSession, sfDir: String): DataFrame =
     StagedDedup.stagedPairs(
       Tables(spark, sfDir, "documents"), "jaccard", lit(1.0)) { reps =>
@@ -590,8 +591,8 @@ object Dedup extends QueryModule {
   // postings, and exact-Jaccard-verifies the surviving candidates — so
   // per-batch cost scales with the batch and its collisions, never the
   // corpus. The index value and its lifecycle (seed, append, takedown,
-  // compaction, rebuild, and the entries' scenario) are
-  // NearDup.MinhashIndex / NearDup.lifecycle.
+  // compaction, rebuild) is NearDup.MinhashIndex; the entries' scenario
+  // is core.IndexLifecycle.
 
   /** Band postings of a (doc_id, text) frame: one (band, bh, doc_id) row
     * per band per REPRESENTATIVE (exact-duplicate groups collapse to
@@ -635,16 +636,16 @@ object Dedup extends QueryModule {
       .orderBy(col("doc_id"), col("dup_of"))
   }
 
-  /** The lifecycle entries' probe: the documents from `from` on, Jaccard-
-    * verified against the index with `corpus` as the doc store.
+  /** A lifecycle entry: `steps` timed, then the documents past the
+    * ingested ones Jaccard-verified against the index, with the corpus as
+    * the doc store.
     */
-  private val minhashProbe = NearDup.Probe(
-    (docs, from) => docs.filter(col("doc_id") >= from),
-    (dir, batch, corpus, tap) => probeMinhashIndex(batch.sparkSession, dir, batch, corpus, tap))
-
-  private def minhashEntry(tap: String, steps: NearDup.Step*): QueryDef =
-    QueryDef(NearDup.lifecycle(NearDup.MinhashIndex, minhashProbe, tap, steps: _*),
-      Some(minhashTapOracle(tap)))
+  private def minhashEntry(tap: String, steps: Step*): QueryDef = {
+    val from = NearDup.probeFrom(steps)
+    QueryDef(IndexLifecycle.Scenario(NearDup.MinhashIndex, tap, steps,
+      (r, t) => probeMinhashIndex(r.spark, r.dir, r.batch, r.corpus, t),
+      batch = _.corpus.filter(col("doc_id") >= from)), Some(minhashTapOracle(tap)))
+  }
 
   /** The shared MinHash verification oracle over a (doc_id, dup_of)
     * candidate tap: DuckDB recomputes the word-set Jaccard verify leg,
@@ -676,11 +677,11 @@ object Dedup extends QueryModule {
     // banded candidates of the post-stream probe — including pairs whose
     // index side ARRIVED THROUGH THE STREAM — are tapped; DuckDB
     // recomputes the Jaccard verification, threshold, and order.
-    "s_minhash_ingest" -> minhashEntry("s_minhash_ingest_candidates", NearDup.Stream),
+    "s_minhash_ingest" -> minhashEntry("s_minhash_ingest_candidates", NearDup.StreamIn),
     // Partial oracle: the POST-COMPACTION banded candidates are tapped;
     // DuckDB recomputes the Jaccard verify leg — compaction must not
     // change a single pair.
-    "q_minhash_compact" -> minhashEntry("minhash_compact_candidates", NearDup.Append, NearDup.Compact),
+    "q_minhash_compact" -> minhashEntry("minhash_compact_candidates", NearDup.Ingest, Compact),
     // Partial oracle: the POST-DELETE banded candidates are tapped;
     // DuckDB re-verifies the Jaccard leg wholesale — the tombstoned
     // doc's absence flows through the hash-match, and its probe-level
@@ -692,7 +693,7 @@ object Dedup extends QueryModule {
     // folded in, the tombstoned doc physically gone; DedupSpec pins the
     // content identity).
     "q_minhash_rebuild" -> minhashEntry("minhash_rebuild_candidates",
-      NearDup.Append, NearDup.Takedown, NearDup.Rebuild),
+      NearDup.Ingest, NearDup.Takedown, Rebuild),
     "q_dedup_clusters" -> QueryDef(dedupClusters, Some("""
       SELECT doc_id,
              min(doc_id) OVER (PARTITION BY ck) AS cluster_id,

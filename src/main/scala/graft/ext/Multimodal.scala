@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.{IndexLifecycle, PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.IndexLifecycle.{Compact, Rebuild, Step}
 
 /** Multimodal columns: image/audio/video handled as opaque `binary`
   * columns with typed metadata, processed in per-partition batches
@@ -379,17 +380,6 @@ object Multimodal extends QueryModule {
       .orderBy("doc_id", "dup_of")
   }
 
-  /** The lifecycle entries' probe: the signatures of the documents from
-    * `from` on plus renditions of every 25th earlier doc, so the probe
-    * carries a bounded planted-hit set next to the genuinely-new docs.
-    * A takedown probes it twice (victim pick + final), so it is pinned.
-    */
-  private val phashProbe = NearDup.Probe(
-    (docs, from) => sigsOf(docs.sparkSession, docs.filter(col("doc_id") >= from))
-      .unionByName(renditionSigsOf(docs.sparkSession, docs.filter(col("doc_id") < from), 25L)),
-    (dir, batch, _, tap) => probePhashIndex(batch.sparkSession, dir, batch, tap),
-    pin = true)
-
   /** Shared tap oracle for the index probes: the full probe×index
     * Hamming filter (losslessness of the ≤ bands−1 banding makes it
     * exactly the probe's answer).
@@ -403,18 +393,29 @@ object Multimodal extends QueryModule {
       WHERE bit_count(xor(p.ph, i.ph)) <= $PhashMaxHamming
       ORDER BY p.doc_id, dup_of"""
 
-  private def phashEntry(tap: String, steps: NearDup.Step*): QueryDef =
-    QueryDef(NearDup.lifecycle(NearDup.PhashIndex, phashProbe, tap, steps: _*),
-      Some(phashProbeOracle(tap)))
+  /** A lifecycle entry: `steps` timed, then a probe with the signatures
+    * of the documents past the ingested ones plus renditions of every
+    * 25th earlier doc, so it carries a bounded planted-hit set next to
+    * the genuinely-new docs. A takedown probes the batch too, so then it
+    * is pinned.
+    */
+  private def phashEntry(tap: String, steps: Step*): QueryDef = {
+    val from = NearDup.probeFrom(steps)
+    QueryDef(IndexLifecycle.Scenario(NearDup.PhashIndex, tap, steps,
+      (r, t) => probePhashIndex(r.spark, r.dir, r.batch, t),
+      batch = { r =>
+        val b = sigsOf(r.spark, r.corpus.filter(col("doc_id") >= from))
+          .unionByName(renditionSigsOf(r.spark, r.corpus.filter(col("doc_id") < from), 25L))
+        if (steps.contains(NearDup.Takedown)) b.localCheckpoint(true) else b
+      }), Some(phashProbeOracle(tap)))
+  }
 
   override val defs: Map[String, QueryDef] = Map(
     "q_phash_incremental" -> phashEntry("phash_inc"),
     "q_phash_delete" -> phashEntry("phash_del", NearDup.Takedown),
-    "q_phash_compact" -> phashEntry("phash_compact",
-      NearDup.Append, NearDup.Takedown, NearDup.Compact),
-    "q_phash_rebuild" -> phashEntry("phash_rebuild",
-      NearDup.Append, NearDup.Takedown, NearDup.Rebuild),
-    "s_phash_ingest" -> phashEntry("s_phash_ingest", NearDup.Stream),
+    "q_phash_compact" -> phashEntry("phash_compact", NearDup.Ingest, NearDup.Takedown, Compact),
+    "q_phash_rebuild" -> phashEntry("phash_rebuild", NearDup.Ingest, NearDup.Takedown, Rebuild),
+    "s_phash_ingest" -> phashEntry("s_phash_ingest", NearDup.StreamIn),
     "q_mm_phash_dedup" -> QueryDef(mmPhashDedup, Some(s"""
       WITH s AS (SELECT doc_id, ph
                  FROM read_parquet('/tmp/graft_oracle_aux/mm_phash/*.parquet'))

@@ -1,10 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{BoundedStream, PersistedIndex, Tables, Warehouse}
+import graft.core.{IndexFamily, IndexLifecycle, PersistedIndex, Tables, Warehouse}
+import graft.core.IndexLifecycle.{Run, Step}
 
 /** The near-duplicate core over `documents`, shared by the SimHash,
   * pHash and MinHash families:
@@ -17,13 +18,13 @@ import graft.core.{BoundedStream, PersistedIndex, Tables, Warehouse}
   *    through it. At a bound ≤ 3 the banding is lossless (pigeonhole:
   *    four bands, so at most three can differ); SimHash's bound of 6 is
   *    a recall trade-off.
-  *  - one document-postings index value per family ([[DocIndex]]): the
-  *    `core.PersistedIndex` store, its seed root and tag, and its
-  *    postings builder; the batch-0 writer, the `doc_id < 400` seed,
-  *    append, compaction and rebuild-from-corpus are written once here.
-  *  - one lifecycle scenario ([[lifecycle]]) that every
-  *    `q_/s_minhash_*` and `q_/s_phash_*` entry runs with its own steps
-  *    and its family's [[Probe]].
+  *  - one document-postings index family per signature ([[DocIndex]],
+  *    a `core.IndexFamily`): the `core.PersistedIndex` store, its seed
+  *    root and tag, and its postings builder; the batch-0 writer, the
+  *    `doc_id < 400` seed, append, compaction and rebuild-from-corpus are
+  *    written once here.
+  *  - the document steps of the `core.IndexLifecycle` scenario that every
+  *    `q_/s_minhash_*` and `q_/s_phash_*` entry declares.
   */
 object NearDup {
 
@@ -74,20 +75,24 @@ object NearDup {
         Seq("band", "bv"))
       .select(col("doc_id"), col("dup_of"), col(sig).as("sa"), col("sb")), maxHamming)
 
-  // ---- the document-postings index -------------------------------------
+  // ---- the document-postings index families ---------------------------
 
-  /** A persisted near-dup index over `documents`: `postings` maps a
-    * (doc_id, text) frame to the rows one batch persists. Every family
+  /** A persisted near-dup index family over `documents`: `postings` maps
+    * a (doc_id, text) frame to the rows one batch persists. Every family
     * seeds over `doc_id < 400` under `<root>/<fixture tag>`, and every
     * mutator runs `store`'s commit protocol.
     */
   final case class DocIndex(store: PersistedIndex, root: String,
-      postings: DataFrame => DataFrame) {
+      postings: DataFrame => DataFrame) extends IndexFamily {
 
-    /** Write the postings of `docs` as the single batch 0 — the seed and
-      * rebuild writer; `keepIngestKeys` rides in its one manifest commit.
+    val table = "documents"
+
+    def write(dir: String, docs: DataFrame): Unit = writeKeeping(dir, docs, Seq.empty)
+
+    /** The seed and rebuild writer: the postings of `docs` as the single
+      * batch 0; `keepIngestKeys` rides in its one manifest commit.
       */
-    def write(dir: String, docs: DataFrame, keepIngestKeys: Seq[String] = Seq.empty): Unit = {
+    private def writeKeeping(dir: String, docs: DataFrame, keepIngestKeys: Seq[String]): Unit = {
       postings(docs)
         .withColumn("batch_id", lit(0L))
         .write.mode("overwrite").partitionBy("batch_id")
@@ -99,16 +104,14 @@ object NearDup {
       * `<root>/<fixture tag of documents>` (marker-gated, untimed
       * economics like the Derby/IVF seeds).
       */
-    def ensure(spark: SparkSession, sfDir: String): String =
-      Warehouse.ensureSeed(new java.io.File(root, Tables.fixtureTag("v1", sfDir, "documents"))) { dir =>
+    def seed(spark: SparkSession, sfDir: String): (String, Long) =
+      (Warehouse.ensureSeed(new java.io.File(root, Tables.fixtureTag("v1", sfDir, "documents"))) { dir =>
         write(dir, Tables(spark, sfDir, "documents").filter(col("doc_id") < 400))
-      }
+      }, 400L)
 
-    /** Append an ingest batch's postings as a new batch. At-least-once
-      * callers pass the micro-batch's ingest key: a key already in the
-      * committed ledger makes the replay a no-op.
-      */
-    def append(dir: String, docs: DataFrame, ingestKey: Option[String] = None): Unit =
+    /** Postings are written in the batch's own session. */
+    def append(spark: SparkSession, dir: String, docs: DataFrame,
+        ingestKey: Option[String]): Unit =
       store.append(dir, ingestKey) { (path, m) =>
         postings(docs).write.mode("overwrite").parquet(path)
         m
@@ -135,7 +138,7 @@ object NearDup {
       store.rebuild(corpus.sparkSession, dir) { live =>
         corpus.join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
           .select(col("doc_id"), col("text"))
-      } { (content, stage, keys) => write(stage, content, keys) }
+      } { (content, stage, keys) => writeKeeping(stage, content, keys) }
   }
 
   /** MinHash band postings (band, bh, doc_id) under /tmp/graft_minhash. */
@@ -149,59 +152,26 @@ object NearDup {
   val PhashIndex: DocIndex = DocIndex(PersistedIndex("phash", "postings", "doc_id"),
     "/tmp/graft_phash", docs => bandRows(Multimodal.sigsOf(docs.sparkSession, docs), "ph"))
 
-  // ---- the lifecycle scenario ------------------------------------------
+  // ---- the document-index lifecycle steps ------------------------------
 
-  /** A family's near-dup probe over the documents from `from` on: `batch`
-    * builds what is probed, `run(dir, batch, corpus, tap)` answers it
-    * against an index directory with (doc_id, dup_of, …) rows. `pin`
-    * materializes a batch that a takedown probes twice.
-    */
-  final case class Probe(batch: (DataFrame, Long) => DataFrame,
-      run: (String, DataFrame, DataFrame, Option[String]) => DataFrame,
-      pin: Boolean = false)
+  private def ingested(r: Run): Column = r.slice(400, 450)
 
-  /** One step of a lifecycle scenario on a scratch copy of the seed. */
-  sealed trait Step
   /** Append documents [400, 450) as one batch. */
-  case object Append extends Step
-  /** Stream documents [400, 450) in, one keyed append per micro-batch. */
-  case object Stream extends Step
-  /** Delete the smallest index doc the probe matches. */
-  case object Takedown extends Step
-  case object Compact extends Step
-  case object Rebuild extends Step
+  val Ingest: Step = IndexLifecycle.Append(r => r.corpus.filter(ingested(r)))
 
-  /** The index lifecycle as a registry entry: with no steps, probe the
-    * seed in place; otherwise copy the seed to scratch (the marker-gated
-    * template is never mutated), run `steps` in order, and probe. The
-    * probe batch is the documents past the ingested ones (`doc_id >= 450`
-    * after an append or stream, else `>= 400`); its final answer is
-    * tapped as `tap` for the family's partial oracle.
-    */
-  def lifecycle(index: DocIndex, probe: Probe, tap: String, steps: Step*)(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val seed = index.ensure(spark, sfDir)
-    val dir = if (steps.isEmpty) seed
-      else Warehouse.scratchFromSeed(seed, s"graft_${index.store.name}_lifecycle")
-    val docs = Tables(spark, sfDir, "documents")
-    val ingested = col("doc_id") >= 400 && col("doc_id") < 450
-    lazy val batch = {
-      val b = probe.batch(docs, if (steps.exists(Seq(Append, Stream).contains)) 450L else 400L)
-      if (probe.pin && steps.contains(Takedown)) b.localCheckpoint(true) else b
-    }
-    steps.foreach {
-      case Append => index.append(dir, docs.filter(ingested))
-      case Stream =>
-        BoundedStream.appendStream(Tables.streamTable(spark, sfDir, "documents").filter(ingested)) {
-          (b, key) => index.append(dir, b, ingestKey = Some(key))
-        }
-      case Takedown =>
-        val victim = probe.run(dir, batch, docs, None).agg(min(col("dup_of"))).head()
-        if (!victim.isNullAt(0)) index.store.delete(dir, Seq(victim.getLong(0)).toDF("doc_id"))
-      case Compact => index.compact(spark, dir)
-      case Rebuild => index.rebuild(dir, docs)
-    }
-    probe.run(dir, batch, docs, Some(tap))
+  /** Stream documents [400, 450) in, one keyed append per micro-batch. */
+  val StreamIn: Step = IndexLifecycle.Stream(ingested)
+
+  /** Delete the smallest index doc the entry's untapped probe matches. */
+  val Takedown: Step = IndexLifecycle.Takedown { r =>
+    import r.spark.implicits._
+    val victim = r.probe(None).agg(min(col("dup_of"))).head()
+    if (victim.isNullAt(0)) None else Some(Seq(victim.getLong(0)).toDF("doc_id"))
   }
+
+  /** The first document an entry's probe batch holds: the ones past the
+    * ingested documents, if `steps` ingest any.
+    */
+  def probeFrom(steps: Seq[Step]): Long =
+    if (steps.exists(Seq(Ingest, StreamIn).contains)) 450L else 400L
 }

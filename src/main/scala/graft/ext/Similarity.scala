@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.IndexLifecycle.{Append, Bake, Compact, Rebuild, Run, Scenario, Stream, Takedown}
 import graft.functions.SimHash64
 
 /** Similarity search over `embeddings` (64-dim float vectors) and
@@ -586,15 +587,15 @@ object Similarity extends QueryModule {
     * partitioned-search mechanics (the 100 TB property) are identical,
     * and a seeded sample keeps every run reproducible. The collected
     * centroid set is broadcast-sized (C*dim floats, ~8 MB at n=1e9).
-    */
-  /** The IVF index: centroids + the cell-assigned corpus. INDEX BUILD is
+    *
+    * The build: centroids + the cell-assigned corpus. INDEX BUILD is
     * the one-time n * C assignment scan (in production: persist/write the
     * cell column alongside the vectors, refresh on ingest); every probe
     * afterwards touches only the probed cells. Keeping build and probe as
     * separate steps is what makes the per-query cost ~nprobe * sqrt(n),
     * not n * sqrt(n).
     */
-  final case class IvfIndex(centroids: Array[Array[Float]], cells: DataFrame)
+  final case class IvfBuild(centroids: Array[Array[Float]], cells: DataFrame)
 
   /** Deterministic seed centroids: the C = max(4, sqrt(n)) lowest vec_ids. */
   private[graft] def seedCentroids(embeddings: DataFrame): Array[Array[Float]] = {
@@ -628,9 +629,9 @@ object Similarity extends QueryModule {
     * inside probed cells.
     */
   def ivfBuildWith(embeddings: DataFrame, centroids: Array[Array[Float]],
-      keep: Seq[String] = Nil): IvfIndex = {
+      keep: Seq[String] = Nil): IvfBuild = {
     val e = embeddings.select((Seq("vec_id", "embedding") ++ keep).map(col): _*)
-    IvfIndex(centroids,
+    IvfBuild(centroids,
       e.withColumn("cell", udf(nearestCellOf(centroids)).apply(col("embedding"))).persist())
   }
 
@@ -838,8 +839,8 @@ object Similarity extends QueryModule {
     * (vec_id, cell, removed). The tap carries (vec_id, cell, is_batch)
     * for the batch AND the touched members, so DuckDB re-derives the
     * entire dominance leg independently.
-    */
-  /** `dryRun = true` computes the dominance flags WITHOUT publishing
+    *
+    * `dryRun = true` computes the dominance flags WITHOUT publishing
     * (and without a lease-relevant mutation) — the discovery pass a
     * takedown planner needs, at zero write cost.
     *
@@ -963,7 +964,7 @@ object Similarity extends QueryModule {
   private[graft] def ensurePurgeCellsCache(spark: SparkSession, seedDir: String,
       batch: DataFrame): Seq[Long] = {
     val dir = Warehouse.ensureSeed(new java.io.File(seedDir + "-purge-cells")) { d =>
-      val cells = semdedupIndexIngest(spark, seedDir, batch, tau = 0.4, dryRun = true)
+      val cells = semdedupIndexIngest(spark, seedDir, batch, SemdedupTau, dryRun = true)
         .filter(col("removed")).select(col("cell")).distinct()
         .collect().map(_.getLong(0)).toSeq
       java.nio.file.Files.write(new java.io.File(d, "cells").toPath,
@@ -996,206 +997,103 @@ object Similarity extends QueryModule {
     (new java.io.File(dir, "victims").getPath, new java.io.File(dir, "prev_removed").getPath)
   }
 
-  /** Warm both q_semdedup_delete / q_semdedup_rebuild discovery caches
-    * for a fixture — Bench calls this in its untimed seed section so the
-    * first TIMED run doesn't pay the one-time discovery.
-    */
-  private[graft] def ensureSemdedupEntryCaches(spark: SparkSession, sfDir: String): Unit = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
-    ensurePurgeCellsCache(spark, seedDir, e.filter(col("vec_id") >= cut))
-    ensureRebuildCaches(spark, seedDir)
-    ()
-  }
-
   private val SemdedupRoot = "/tmp/graft_semdedup"
+
+  /** The dominance threshold of every semdedup registry entry. */
+  private val SemdedupTau = 0.4
 
   private[graft] def ensureSemdedupIndex(spark: SparkSession, sfDir: String): (String, Long) = {
     val e = Tables(spark, sfDir, "embeddings")
     val maxId = embeddingsStats(spark, sfDir)._1
     val cut = maxId * 9 / 10
     val dir = Warehouse.ensureSeed(new java.io.File(SemdedupRoot, ivfTag(sfDir) + s"-cut$cut")) {
-      writeSemdedupIndex(spark, _, e.filter(col("vec_id") < cut), tau = 0.4)
+      writeSemdedupIndex(spark, _, e.filter(col("vec_id") < cut), tau = SemdedupTau)
     }
     (dir, cut)
   }
 
-  private def semdedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
-    // Each run ingests into a scratch COPY so repeated runs see the same
-    // pre-ingest state (the seed template is immutable, like the IVF
-    // scratch seed). r17: hardlink clone like every sibling lifecycle
-    // entry (the r13 reclaim) — this site was the one remaining byte
-    // copy; semdedupIndexIngest only ever stages new files and swaps
-    // manifests atomically, never mutates a linked inode.
-    val dir = scratchSemdedupCopy(seedDir, "graft_semdedup_inc")
-    semdedupIndexIngest(spark, dir, e.filter(col("vec_id") >= cut), tau = 0.4,
-      tap = Some("semdedup_inc_cells"))
+  /** The semdedup members as an index family: the seed holds the corpus
+    * below the 90th-percentile vec_id. An answer is an ingest that
+    * publishes, so every entry answers on a scratch copy; a replayed
+    * micro-batch recomputes identical flags and skips the publish.
+    */
+  private[graft] object SemdedupIndex extends IndexFamily {
+    def store: PersistedIndex = SemdedupStore
+    val table = "embeddings"
+    override val answerWrites = true
+    def seed(spark: SparkSession, sfDir: String): (String, Long) = ensureSemdedupIndex(spark, sfDir)
+    def write(dir: String, rows: DataFrame): Unit =
+      writeSemdedupIndex(rows.sparkSession, dir, rows, SemdedupTau)
+    def append(spark: SparkSession, dir: String, rows: DataFrame,
+        ingestKey: Option[String]): Unit = {
+      semdedupIndexIngest(spark, dir, rows, SemdedupTau, ingestKey = ingestKey)
+        .queryExecution.toRdd.count()
+      ()
+    }
+    def compact(spark: SparkSession, dir: String): Unit = semdedupIndexCompact(spark, dir)
+    def rebuild(dir: String, corpus: DataFrame): Unit =
+      semdedupIndexRebuild(corpus.sparkSession, dir, SemdedupTau)
   }
 
-  /** Streaming semantic-dedup ingest — the third index family's
-    * streaming leg (IVF: `s_ann_ingest`, MinHash: `s_minhash_ingest`):
-    * embeddings arrive as a stream; each micro-batch dominance-checks
-    * against the committed members and publishes through
-    * [[semdedupIndexIngest]]'s staged-rename + manifest commit
-    * ([[graft.core.BoundedStream.appendStream]]), idempotent on the
-    * checkpoint and batchId (a replay recomputes identical flags and
-    * skips the publish). The declared output is the streamed batches'
-    * flags READ BACK from the index itself — the proof that the arrivals
-    * were committed — and the tap carries those rows plus the touched
-    * seed members, so DuckDB re-derives the whole
-    * dominance leg.
+  /** A semdedup entry's probe: ingest the run's batch, tapped as
+    * (vec_id, cell, is_batch) over the batch and the touched members.
     */
-  private def semdedupStreamIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
-    val dir = scratchSemdedupCopy(seedDir, "graft_semdedup_stream")
-    graft.core.BoundedStream.appendStream(
-        graft.core.Tables.streamTable(spark, sfDir, "embeddings").filter(col("vec_id") >= cut)) {
-      (b, key) =>
-        semdedupIndexIngest(spark, dir, b, tau = 0.4, ingestKey = Some(key))
-          .queryExecution.toRdd.count()
-        ()
-    }
-    val members = spark.read.parquet(new java.io.File(dir, "members").getPath)
-    val streamed = PersistedIndex.readManifest(dir).batches.filter(_ != 0L)
+  private def semdedupIngest(r: Run, tap: Option[String]): DataFrame =
+    semdedupIndexIngest(r.spark, r.dir, r.batch, SemdedupTau, tap = tap)
+
+  /** The first id of q_semdedup_compact's second slice: the top decile's
+    * upper half.
+    */
+  private def semdedupMid(r: Run): Long =
+    r.cut + (embeddingsStats(r.spark, r.sfDir)._1 - r.cut) / 2
+
+  /** s_semdedup_ingest's probe: the streamed batches' flags READ BACK from
+    * the index (the proof that the arrivals were committed), tapped with
+    * the touched seed members.
+    */
+  private def streamedFlags(r: Run, tap: Option[String]): DataFrame = {
+    val members = r.spark.read.parquet(new java.io.File(r.dir, "members").getPath)
+    val streamed = PersistedIndex.readManifest(r.dir).batches.filter(_ != 0L)
     val batchRows = members.where(col("batch_id").isin(streamed: _*))
     val touched = batchRows.select(col("cell")).distinct()
     val seedMembers = members.where(col("batch_id") === 0L)
       .join(broadcast(touched), Seq("cell"))
-    OracleTap(spark, "s_semdedup_ingest_cells",
+    tap.foreach(OracleTap(r.spark, _,
       batchRows.select(col("vec_id"), col("cell"), lit(true).as("is_batch"))
         .unionByName(seedMembers.select(col("vec_id"), col("cell"),
-          lit(false).as("is_batch"))))
+          lit(false).as("is_batch")))))
     batchRows.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
       .orderBy("vec_id")
   }
 
-  private def scratchSemdedupCopy(seedDir: String, prefix: String): String =
-    Warehouse.scratchFromSeed(seedDir, prefix)
+  /** q_semdedup_delete's takedown: every committed member of the cells
+    * whose members suppressed batch rows (the contaminated-source shape).
+    * The cells come from a dry-run ingest against the seed, cached once
+    * per fixture.
+    */
+  private def purgeCells(r: Run): Seq[Long] = ensurePurgeCellsCache(r.spark, r.seed, r.batch)
 
-  /** The semdedup index's compaction lifecycle as an entry: scratch from
-    * the seed, ingest the arriving decile (a second batch_id dir),
-    * COMPACT the members into one batch, then ingest a SECOND small
-    * batch against the compacted index — its dominance flags are the
-    * declared output, and they only hash-match if compaction preserved
-    * every surviving member (the second ingest dominance-checks against
-    * the compacted read). The usual tap lets DuckDB re-derive the leg.
-    */
-  /** Derived template for q_semdedup_compact: seed + the first arriving
-    * slice (lower half of the top decile) ingested — the deterministic
-    * multi-batch pre-compaction state.
-    */
-  private[graft] def ensureIngestedSemdedupSeed(spark: SparkSession, sfDir: String): String = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
-    val mid = cut + (embeddingsStats(spark, sfDir)._1 - cut) / 2
-    Warehouse.ensureDerivedSeed(seedDir, "ingested1") { d =>
-      semdedupIndexIngest(spark, d,
-        e.filter(col("vec_id") >= cut && col("vec_id") < mid), tau = 0.4)
-        .queryExecution.toRdd.count()
-      ()
-    }
+  private val purgeTakedown = Takedown { r =>
+    val cells = purgeCells(r)
+    if (cells.isEmpty) None
+    else Some(r.spark.read.parquet(new java.io.File(r.dir, "members").getPath)
+      .where(col("cell").isin(cells: _*)).select(col("vec_id")))
   }
 
-  /** Derived template for q_semdedup_rebuild: seed + the victim keepers
-    * taken down (tombstones committed) — the deterministic state the
-    * rebuild remedies.
+  /** q_semdedup_rebuild's probe: the recomputed (vec_id, cell, removed) of
+    * every member of the rebuilt cells that hold a previously-suppressed
+    * id — exactly where resurrection can happen — tapped with all rows
+    * `is_batch`, so DuckDB re-derives every within-cell dominance pair.
     */
-  private[graft] def ensureVictimsDeletedSemdedupSeed(spark: SparkSession, sfDir: String): String = {
-    val (seedDir, _) = ensureSemdedupIndex(spark, sfDir)
-    val (vCachePath, _) = ensureRebuildCaches(spark, seedDir)
-    Warehouse.ensureDerivedSeed(seedDir, "victims-deleted") { d =>
-      SemdedupStore.delete(d, spark.read.parquet(vCachePath))
-    }
-  }
-
-  private def semdedupCompactEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (_, cut) = ensureSemdedupIndex(spark, sfDir)
-    // First arriving slice: the lower half of the top decile. Its ingest
-    // is fixture-deterministic SETUP (it only creates the multi-batch
-    // pre-compaction state), so it bakes once into a derived template
-    // (disclosed untimed seed economics); the timed region is what the
-    // entry is about — COMPACT, then the second ingest whose dominance
-    // flags only hash-match if compaction preserved every survivor.
-    val dir = scratchSemdedupCopy(
-      ensureIngestedSemdedupSeed(spark, sfDir), "graft_semdedup_compact")
-    val mid = cut + (embeddingsStats(spark, sfDir)._1 - cut) / 2
-    semdedupIndexCompact(spark, dir)
-    semdedupIndexIngest(spark, dir, e.filter(col("vec_id") >= mid), tau = 0.4,
-      tap = Some("semdedup_compact_cells"))
-  }
-
-  /** Takedown on the semdedup index: a discovery ingest on a THROWAWAY
-    * scratch copy finds which cells suppressed batch rows; a fresh copy
-    * then deletes EVERY committed member of those cells (the
-    * contaminated-source takedown shape) and re-runs the same ingest.
-    * Batch rows that were dominated only by taken-down members must come
-    * back KEPT; in-batch dominance still applies. The tap (post-delete
-    * members + batch) lets DuckDB re-derive the entire dominance leg —
-    * the deleted members' absence flows through the hash-match.
-    */
-  private def semdedupDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seedDir, cut) = ensureSemdedupIndex(spark, sfDir)
-    val batch = e.filter(col("vec_id") >= cut)
-    // Discovery is a DRY RUN straight against the immutable seed — no
-    // scratch copy, no publish: the flags are computed before the
-    // publish stage, so the planner pass costs one dominance check.
-    // The result is fixture-deterministic (immutable seed × fixed batch
-    // × fixed tau), so it is computed ONCE per fixture and cached beside
-    // the seed marker — the same disclosed untimed economics as the seed
-    // build itself (Bench warms it in its untimed seed section). The
-    // TIMED region is the operator: takedown + the resurrection-proving
-    // re-ingest.
-    val purgeCells = ensurePurgeCellsCache(spark, seedDir, batch)
-    val dir = scratchSemdedupCopy(seedDir, "graft_semdedup_del")
-    if (purgeCells.nonEmpty)
-      SemdedupStore.delete(dir,
-        spark.read.parquet(new java.io.File(dir, "members").getPath)
-          .where(col("cell").isin(purgeCells: _*)).select(col("vec_id")))
-    semdedupIndexIngest(spark, dir, batch, tau = 0.4,
-      tap = Some("semdedup_del_cells"))
-  }
-
-  /** The frozen-flags remedy as an entry (the semdedup twin of
-    * `q_ann_ivf_rebuild`): scratch from the seed, take down the smallest
-    * KEEPER of every cell that suppressed at least one member (the
-    * dominators a contaminated-source takedown would remove), then
-    * REBUILD — fresh quantizer, dominance flags recomputed from scratch
-    * over the surviving members, tombstones materialized, ledger reset.
-    * The declared output is the recomputed (vec_id, cell, removed) for
-    * every member of the rebuilt cells that contain a previously-
-    * suppressed id — exactly where resurrection can happen — and the tap
-    * (all rows, `is_batch=true`) lets DuckDB re-derive every within-cell
-    * dominance pair independently; the deleted dominators' absence flows
-    * through the hash-match. SemDedupSpec pins the resurrection
-    * semantics on a controlled corpus.
-    */
-  private def semdedupRebuild(spark: SparkSession, sfDir: String): DataFrame = {
-    val (seedDir, _) = ensureSemdedupIndex(spark, sfDir)
-    // Victim selection (smallest keeper of every suppressing cell) and
-    // the previously-suppressed id set are SEED-deterministic — computed
-    // once per fixture and cached beside the seed as parquet (no driver
-    // collect); the victim TAKEDOWN itself is equally deterministic
-    // SETUP, so it bakes into a derived template (disclosed untimed
-    // seed economics; Bench warms these in its untimed section). The
-    // TIMED region is the remedy the entry is about: the full rebuild —
-    // fresh quantizer, flags recomputed over survivors — plus the
-    // resurrection read-back.
-    val (_, rCachePath) = ensureRebuildCaches(spark, seedDir)
-    val prevRemoved = spark.read.parquet(rCachePath)
-    val dir = scratchSemdedupCopy(
-      ensureVictimsDeletedSemdedupSeed(spark, sfDir), "graft_semdedup_rebuild")
-    semdedupIndexRebuild(spark, dir, tau = 0.4)
-    val rebuilt = spark.read.parquet(new java.io.File(dir, "members").getPath)
+  private def rebuiltFlags(r: Run, tap: Option[String]): DataFrame = {
+    val prevRemoved = r.spark.read.parquet(ensureRebuildCaches(r.spark, r.seed)._2)
+    val rebuilt = r.spark.read.parquet(new java.io.File(r.dir, "members").getPath)
     val outCells = rebuilt.join(prevRemoved, Seq("vec_id"))
       .select(col("cell")).distinct()
     val out = rebuilt.join(broadcast(outCells), Seq("cell"))
       .select(col("vec_id"), col("cell"), col("removed"))
-    OracleTap(spark, "semdedup_rebuild_cells",
-      out.select(col("vec_id"), col("cell"), lit(true).as("is_batch")))
+    tap.foreach(OracleTap(r.spark, _,
+      out.select(col("vec_id"), col("cell"), lit(true).as("is_batch"))))
     out.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
       .orderBy("vec_id")
   }
@@ -1210,14 +1108,6 @@ object Similarity extends QueryModule {
     */
   private val FlatCellLimit = 256
 
-  /** The cluster stage: constant-target-size k-means cells (2 Lloyd
-    * iterations over deterministic lowest-id seeds). Split out so the
-    * spec's naive twin can prune the SAME cell assignment it verifies.
-    * Small corpora run the flat loop; past FlatCellLimit cells the build
-    * is hierarchical (coarse √k quantizer, then per-coarse-cell fine
-    * cells) — same constant-64 cell semantics, Θ(n^1.5) total instead of
-    * Θ(n²).
-    */
   /** Fine-cell count past which the two-level build assigns via the
     * CO-PARTITIONED JOIN instead of the closure map: k cells × Dim
     * floats at 2^18 cells is ~64 MB of fine centroids — past a sane
@@ -1226,6 +1116,14 @@ object Similarity extends QueryModule {
     */
   private[graft] val JoinAssignCellLimit = 1 << 18
 
+  /** The cluster stage: constant-target-size k-means cells (2 Lloyd
+    * iterations over deterministic lowest-id seeds). Split out so the
+    * spec's naive twin can prune the SAME cell assignment it verifies.
+    * Small corpora run the flat loop; past FlatCellLimit cells the build
+    * is hierarchical (coarse √k quantizer, then per-coarse-cell fine
+    * cells) — same constant-64 cell semantics, Θ(n^1.5) total instead of
+    * Θ(n²).
+    */
   private[graft] def semdedupCells(embeddings: DataFrame, targetCell: Int,
       forceJoinAssign: Boolean = false): DataFrame = {
     // Cached for the Lloyd loop (count + seed + 2 refine scans + the
@@ -1930,11 +1828,11 @@ object Similarity extends QueryModule {
       (e.agg(max(col("vec_id"))).head().getLong(0), vecOf(e, 0L))
     })
 
-  /** Marker-gated IMMUTABLE seed template for the ingest/compact entries:
-    * the IVF index over the corpus slice below the 90th-percentile
-    * vec_id (the slice both entries seed from), built ONCE per fixture
-    * and never mutated. Each run copies the template into a scratch dir
-    * and appends/streams/compacts/probes the COPY — runs stay
+  /** Marker-gated IMMUTABLE seed template for the IVF lifecycle entries
+    * ([[IvfIndex]]): the IVF index over the corpus slice below the
+    * 90th-percentile vec_id, built ONCE per fixture and never mutated.
+    * Each run copies the template (or one baked from it) into a scratch
+    * dir and appends/streams/compacts/probes the COPY — runs stay
     * deterministic (every run starts from byte-identical state) while
     * the seed build cost is paid once per fixture, outside the timed
     * region, same disclosed economics as the Derby/bucketed/blob seeds.
@@ -1950,21 +1848,6 @@ object Similarity extends QueryModule {
     (dir, cut)
   }
 
-  /** Copy the immutable seed template into a fresh scratch dir for one
-    * run's mutations (append/stream/compact). File copy only — no Spark
-    * jobs, no quantizer retrain.
-    */
-  private[graft] def scratchIvfFromSeed(seedDir: String, prefix: String): String = {
-    val dir = Warehouse.scratchFromSeed(seedDir, prefix)
-    scratchOrigin(dir) = seedDir
-    dir
-  }
-
-  /** Build the quantizer (over `train` if given, else over `e`) and write
-    * the full index layout: postings partitioned by (batch_id=0, cell_id),
-    * the centroid table, and the commit manifest — written LAST, so the
-    * manifest only ever references a complete layout.
-    */
   /** Metadata columns carried into the postings when the corpus has them
     * (filtered probes predicate on these inside pruned cells — parquet
     * row-group stats + dictionary pushdown make the in-cell filter
@@ -1972,6 +1855,11 @@ object Similarity extends QueryModule {
     */
   private val IndexMetaCols = Seq("label")
 
+  /** Build the quantizer (over `train` if given, else over `e`) and write
+    * the full index layout: postings partitioned by (batch_id=0, cell_id),
+    * the centroid table, and the commit manifest — written LAST, so the
+    * manifest only ever references a complete layout.
+    */
   private[graft] def writeIvfIndex(spark: SparkSession, dir: String, e: DataFrame,
       train: Option[DataFrame] = None,
       keepIngestKeys: Seq[String] = Seq.empty): Unit = {
@@ -2162,178 +2050,72 @@ object Similarity extends QueryModule {
         cellCounts = counts).core
     }
 
-  /** Build → append → compact → probe, end to end: the probe answers
-    * from the COMPACTED single-batch layout, and its scored candidates
-    * carry the oracle.
+  /** The IVF postings as an index family: the seed is the scratch seed
+    * below the 90th-percentile vec_id ([[ensureIvfScratchSeed]]), and a
+    * scratch copy resolves its quantizer through the template it was
+    * copied from ([[scratchOrigin]]).
     */
-  /** The immutable "seed + arriving decile appended" derived template —
-    * the multi-batch pre-compaction state both the compact and delete
-    * entries start from. The append is fixture-deterministic, so it is
-    * applied once per fixture (disclosed untimed seed economics, like
-    * the base seed); the entries then time their OPERATORS (compact /
-    * delete + probe) against per-run copies. Streamed appends stay
-    * timed in s_ann_ingest; a single batch append's price is in SURVEY
-    * §14 (round-8 addendum: 1.28 s for 2000 vectors into the 200k-vector
-    * index).
-    */
-  private[graft] def ensureAppendedIvfSeed(spark: SparkSession, sfDir: String): String = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
-    Warehouse.ensureDerivedSeed(seed, "appended") { d =>
-      ivfIndexAppend(spark, d, e.filter(col("vec_id") >= cut))
-    }
+  private[graft] object IvfIndex extends IndexFamily {
+    def store: PersistedIndex = IvfStore
+    val table = "embeddings"
+    def seed(spark: SparkSession, sfDir: String): (String, Long) = ensureIvfScratchSeed(spark, sfDir)
+    def write(dir: String, rows: DataFrame): Unit = writeIvfIndex(rows.sparkSession, dir, rows)
+    def append(spark: SparkSession, dir: String, rows: DataFrame,
+        ingestKey: Option[String]): Unit = ivfIndexAppend(spark, dir, rows, ingestKey)
+    def compact(spark: SparkSession, dir: String): Unit = ivfIndexCompact(spark, dir)
+    def rebuild(dir: String, corpus: DataFrame): Unit = ivfIndexRebuild(corpus.sparkSession, dir)
+    override def copied(scratch: String, template: String): Unit = scratchOrigin(scratch) = template
   }
 
-  private def annIvfCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val anchor = embeddingsStats(spark, sfDir)._2
-    // Per-run copy of the appended template; the timed region is what
-    // the entry is ABOUT: the compaction rewrite + the probe over the
-    // compacted single-batch layout.
-    val dir = scratchIvfFromSeed(ensureAppendedIvfSeed(spark, sfDir), "graft_ann_compact")
-    ivfIndexCompact(spark, dir)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, tap = Some("ann_ivf_compact_scored"))
-  }
+  /** An IVF entry's probe: the top `k` around vec 0 (excluded), nprobe 4. */
+  private def ivfProbe(k: Int)(r: Run, tap: Option[String]): DataFrame =
+    ivfQuery(Ivf.Stored(r.spark, r.dir), Ivf.Anchor(embeddingsStats(r.spark, r.sfDir)._2,
+      exclude = Some(0L)), Ivf.TopK(k), nprobe = 4, tap = tap)
 
-  /** Template copy → append → DELETE the probe's current top-3 → probe:
-    * the takedown lifecycle end to end. The deleted ids are exactly the
-    * pre-delete top hits, so the post-delete probe MUST re-rank onto
-    * the next-best neighbors — a tombstone filter that silently failed
-    * would surface the deleted ids in the tap and fail the oracle.
+  /** The multi-batch pre-compaction state the compact and delete entries
+    * start from: the seed plus the arriving decile.
     */
-  private def annIvfDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val anchor = embeddingsStats(spark, sfDir)._2
-    // Same appended template as the compact entry; timed region = the
-    // takedown lifecycle itself: discovery probe, tombstone publish,
-    // re-ranked probe.
-    val dir = scratchIvfFromSeed(ensureAppendedIvfSeed(spark, sfDir), "graft_ann_delete")
-    val top3 = ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)),
-      Ivf.TopK(3), nprobe = 4).collect().map(_.getLong(0)).toSeq
-    IvfStore.delete(dir, top3.toDF("vec_id"))
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, tap = Some("ann_ivf_delete_scored"))
+  private val ivfAppended = Bake("appended", Append(r => r.corpus.filter(r.slice(r.cut))))
+
+  /** q_ann_ivf_delete's takedown: the probe's current top 3. */
+  private val ivfTop3Takedown = Takedown { r =>
+    import r.spark.implicits._
+    Some(ivfProbe(3)(r, None).collect().map(_.getLong(0)).toSeq.toDF("vec_id"))
   }
 
-  // ---- Streaming ingest into the persisted index -----------------------
-
-  /** Continuous-ingest pipeline: seed the index from the corpus slice
-    * below `cut`, stream the rest in (`readStream` over the same parquet
-    * — the Kafka-topic stand-in every s_* entry uses), publish each
-    * micro-batch through [[ivfIndexAppend]]'s atomic commit protocol in
-    * `foreachBatch`, then answer a probe that must see the streamed rows.
-    * This is the embedding-corpus shape at 100 TB: vectors arrive
-    * continuously, the index is storage, and publication is effectively
-    * exactly-once: atomicity comes from the append's staged-rename +
-    * manifest commit (a micro-batch that crashes mid-append leaves an
-    * orphan no probe reads), and idempotency from keying each append on
-    * its checkpoint and `batchId` ([[graft.core.BoundedStream.appendStream]])
-    * — foreachBatch itself is only at-least-once, so a crash AFTER the
-    * manifest commit but BEFORE the streaming checkpoint records the
-    * offset replays the micro-batch, and the replay must (and does —
-    * ledger-gated, spec-pinned) land as a no-op instead of
-    * double-publishing the same vectors.
-    *
-    * The stream mutates a scratch dir per run so repeated runs are
-    * deterministic — a long-lived deployment would keep the checkpoint +
-    * index dir together and only ever pay per-batch appends. The seed
-    * index either builds inline (`seedFrom = None` — spec usage over
-    * ad-hoc corpora) or copies an immutable per-fixture template
-    * (`seedFrom = Some(dir)` — the registry entry), which keeps the
-    * same per-run determinism while paying the seed build once per
-    * fixture outside the timed region (disclosed seed economics, like
-    * the Derby/bucketed/blob seeds).
+  /** q_ann_ivf_rebuild's poisoning load: jittered copies of vec 1
+    * crowding a single cell. The poison scales with the index: C ≈ √n
+    * cells ⇒ median cell ≈ √n rows, and one crowded cell reads imbalance
+    * ≈ 1 + skew/√n — a FIXED 400 gave 3.98 at an 18k-row seed (sf1), one
+    * hair under the 4.0 sentinel (caught by the r12 bench failed-list).
+    * 6·√n keeps the tripped ratio ≈ 7 at every scale and leaves the
+    * sf0.1-and-below seeds byte-identical (400 floor).
     */
-  private[graft] def annIngestPipeline(spark: SparkSession, srcDir: String,
-      glob: String, cut: Long, anchor: Array[Float],
-      exclude: Option[Long] = None, tap: Option[String] = None,
-      seedFrom: Option[String] = None): DataFrame = {
-    val dir = seedFrom.fold(graft.core.TempDirs.create("graft_ann_ingest"))(
-      scratchIvfFromSeed(_, "graft_ann_ingest"))
-    // Layout-robust source: the table is a single FILE on driver
-    // fixtures, a DIRECTORY on ScaleGen replicas — the glob form matches
-    // zero leaves on a dir. The dispatch is Tables.batchAndStream, the
-    // SAME code path streamTable uses (r15: this used to be an inline
-    // twin, so the ScaleGen-directory bug class was fixed in two places).
-    val (stat, stream0) = graft.core.Tables.batchAndStream(spark, srcDir, glob)
-    if (seedFrom.isEmpty)
-      writeIvfIndex(spark, dir, stat.filter(col("vec_id") < cut),
-        train = Some(stat.filter(col("vec_id") < cut && col("vec_id") =!= 0)))
-    val stream = stream0.filter(col("vec_id") >= cut)
-    graft.core.BoundedStream.appendStream(stream) { (b, key) =>
-      ivfIndexAppend(spark, dir, b, ingestKey = Some(key))
-    }
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude), Ivf.TopK(10), nprobe = 4, tap = tap)
+  private def ivfPoison(r: Run): DataFrame = {
+    import r.spark.implicits._
+    val crowd = vecOf(r.corpus, 1L)
+    val rnd = new scala.util.Random(13)
+    val nSeed = r.corpus.filter(col("vec_id") < r.cut).count()
+    val skewN = math.max(400, 6 * math.sqrt(nSeed.toDouble).toInt)
+    (0 until skewN).map(10000000L + _).map(id =>
+      (id, crowd.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.01f)))
+      .toDF("vec_id", "embedding")
   }
 
-  private def annIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val anchor = embeddingsStats(spark, sfDir)._2
-    // Stream the top decile of vec_ids as the "arriving" vectors; the
-    // seed index below the cut comes from the immutable per-fixture
-    // template (untimed, marker-gated).
-    val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
-    annIngestPipeline(spark, sfDir, "embeddings.parquet", cut = cut,
-      anchor, exclude = Some(0L), tap = Some("s_ann_ingest_scored"),
-      seedFrom = Some(seed))
-  }
-
-  /** The full drift lifecycle in one entry: a skewed synthetic ingest
-    * (400 jittered copies of one corpus vector crowding a single cell)
-    * trips the drift sentinel; the poisoning load is taken down
-    * (`IvfStore.delete` — an O(batch) tombstone publish); then
-    * [[ivfIndexRebuild]] retrains quantizer + codebook from the index's
-    * own SURVIVING content — dropping the tombstoned rows physically —
-    * and the sentinel clears deterministically (the cleaned content is
-    * the balanced seed corpus). The probe answers top-k over the
-    * re-balanced index; its tapped candidates let the oracle re-derive
-    * the ranking independently.
+  /** The drift setup q_ann_ivf_rebuild bakes: the poisoning append, which
+    * must trip the sentinel, and its takedown.
     */
-  /** Derived template for q_ann_ivf_rebuild: seed + skewed poisoning
-    * append (sentinel tripped, asserted) + its takedown — the
-    * deterministic drift setup the rebuild remedies.
-    */
-  private[graft] def ensurePoisonedIvfSeed(spark: SparkSession, sfDir: String): String = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val (seed, cut) = ensureIvfScratchSeed(spark, sfDir)
-    Warehouse.ensureDerivedSeed(seed, "poisoned") { d =>
-      val crowd = vecOf(e, 1L)
-      val rnd = new scala.util.Random(13)
-      // The poison must scale with the index: C ≈ √n cells ⇒ median
-      // cell ≈ √n rows, and one crowded cell reads imbalance ≈
-      // 1 + skew/√n — a FIXED 400 gave 3.98 at an 18k-row seed (sf1),
-      // one hair under the 4.0 sentinel (caught by the r12 bench
-      // failed-list). 6·√n keeps the tripped ratio ≈ 7 at every scale
-      // and leaves the sf0.1-and-below seeds byte-identical (400 floor).
-      val nSeed = e.filter(col("vec_id") < cut).count()
-      val skewN = math.max(400, 6 * math.sqrt(nSeed.toDouble).toInt)
-      val skewIds = (0 until skewN).map(10000000L + _)
-      val skewed = {
-        import spark.implicits._
-        skewIds.map(id =>
-          (id, crowd.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.01f)))
-          .toDF("vec_id", "embedding")
-      }
-      ivfIndexAppend(spark, d, skewed)
-      require(readIvfManifest(d).rebuildNeeded,
-        "the skewed ingest did not trip the drift sentinel")
-      IvfStore.delete(d, skewed.select(col("vec_id")))
-    }
-  }
+  private val ivfPoisoned = Bake("poisoned", Append(_.batch), Takedown { r =>
+    require(readIvfManifest(r.dir).rebuildNeeded,
+      "the skewed ingest did not trip the drift sentinel")
+    Some(r.batch.select(col("vec_id")))
+  })
 
-  private def annIvfRebuild(spark: SparkSession, sfDir: String): DataFrame = {
-    val anchor = embeddingsStats(spark, sfDir)._2
-    // The drift SETUP — skewed synthetic append (trips the sentinel,
-    // asserted inside the derived-seed build) + takedown of the
-    // poisoning load — is fixture-deterministic, so it bakes once into
-    // a derived template (disclosed untimed seed economics). The timed
-    // region is the REMEDY the entry is about: the full retrain-from-
-    // surviving-content rebuild + the probe over the re-balanced index.
-    val dir = scratchIvfFromSeed(ensurePoisonedIvfSeed(spark, sfDir), "graft_ann_rebuild")
-    ivfIndexRebuild(spark, dir)
-    require(!readIvfManifest(dir).rebuildNeeded,
+  /** q_ann_ivf_rebuild's probe, over the re-balanced index. */
+  private def ivfRebuiltProbe(r: Run, tap: Option[String]): DataFrame = {
+    require(!readIvfManifest(r.dir).rebuildNeeded,
       "rebuild over the cleaned content did not clear the sentinel")
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, tap = Some("ann_ivf_rebuild_scored"))
+    ivfProbe(10)(r, tap)
   }
 
   /** ANN probe against the PERSISTED index: nearest-cell choice over the
@@ -2942,10 +2724,23 @@ object Similarity extends QueryModule {
       WHERE tb.is_batch
       ORDER BY tb.vec_id"""
 
+  private def ivfEntry(s: Scenario): QueryDef = QueryDef(s, Some(annOracle(s.tap, Ivf.TopK(10))))
+
+  private def semdedupEntry(s: Scenario): QueryDef = QueryDef(s, Some(semdedupTapOracle(s.tap)))
+
   override val defs: Map[String, QueryDef] = Map(
     "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annOracle("ann_ivf_probe_scored", Ivf.TopK(10)))),
     "q_ann_range" -> QueryDef(annRange, Some(annOracle("ann_range_scored", Ivf.Range(0.25)))),
-    "q_ann_ivf_rebuild" -> QueryDef(annIvfRebuild, Some(annOracle("ann_ivf_rebuild_scored", Ivf.TopK(10)))),
+    // The full drift lifecycle in one entry: a skewed synthetic ingest
+    // trips the drift sentinel, the poisoning load is taken down (an
+    // O(batch) tombstone publish) — both baked — then the rebuild
+    // retrains quantizer and codebook from the index's own SURVIVING
+    // content, dropping the tombstoned rows physically, and the sentinel
+    // clears deterministically (the cleaned content is the balanced seed
+    // corpus). The probe answers top-k over the re-balanced index; its
+    // tapped candidates let the oracle re-derive the ranking.
+    "q_ann_ivf_rebuild" -> ivfEntry(Scenario(IvfIndex, "ann_ivf_rebuild_scored", Seq(Rebuild),
+      ivfRebuiltProbe, batch = ivfPoison, bake = Some(ivfPoisoned))),
     "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annOracle("ann_range_batch_scored", Ivf.Range(0.25), batch = true))),
     "q_ann_range_pq" -> QueryDef(annRangePq, Some(annOracle("ann_range_pq_scored", Ivf.Range(0.25)))),
     "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annOracle("ann_ivf_batch_scored", Ivf.TopK(5), batch = true))),
@@ -3021,27 +2816,51 @@ object Similarity extends QueryModule {
     // the k-means leg; DuckDB re-derives the entire incremental
     // dominance check (lower-id same-cell pairs against batch rows,
     // independent cosine, removed flags) from the tap + embeddings.
-    "q_semdedup_incremental" -> QueryDef(semdedupIncremental, Some(semdedupTapOracle("semdedup_inc_cells"))),
-    // Partial oracle (the q_semdedup_incremental boundary): the tap is
-    // read back FROM THE INDEX after the stream — flags only hash-match
-    // if the micro-batches actually committed.
-    "s_semdedup_ingest" -> QueryDef(semdedupStreamIngest, Some(semdedupTapOracle("s_semdedup_ingest_cells"))),
+    // Each run ingests the arriving decile into a scratch copy, so
+    // repeated runs see the same pre-ingest state.
+    "q_semdedup_incremental" -> semdedupEntry(Scenario(SemdedupIndex, "semdedup_inc_cells", Nil,
+      semdedupIngest)),
+    // Partial oracle (the q_semdedup_incremental boundary): the arriving
+    // decile streams in, each micro-batch dominance-checked against the
+    // committed members and published idempotently on its checkpoint and
+    // batchId; the tap is read back FROM THE INDEX after the stream —
+    // flags only hash-match if the micro-batches actually committed.
+    "s_semdedup_ingest" -> semdedupEntry(Scenario(SemdedupIndex, "s_semdedup_ingest_cells",
+      Seq(Stream(r => r.slice(r.cut))), streamedFlags)),
+    // The compaction lifecycle: the seed plus the lower half of the
+    // arriving decile (baked: a second batch_id dir), COMPACTED into one
+    // batch, then the upper half ingested against the compacted index.
     // Partial oracle (the q_semdedup_incremental boundary): the tapped
     // members were read FROM THE COMPACTED layout — a member lost or
     // duplicated by compaction would change the dominance flags and
     // hash-mismatch.
-    "q_semdedup_compact" -> QueryDef(semdedupCompactEntry, Some(semdedupTapOracle("semdedup_compact_cells"))),
+    "q_semdedup_compact" -> semdedupEntry(Scenario(SemdedupIndex, "semdedup_compact_cells",
+      Seq(Compact), semdedupIngest, batch = r => r.corpus.filter(r.slice(semdedupMid(r))),
+      bake = Some(Bake("ingested1", Append(r => r.corpus.filter(r.slice(r.cut, semdedupMid(r)))))))),
+    // Takedown, then the arriving decile re-ingested: batch rows that
+    // were dominated only by taken-down members must come back KEPT;
+    // in-batch dominance still applies.
     // Partial oracle (the q_semdedup_incremental boundary): the tapped
     // members are POST-DELETE — DuckDB re-derives dominance over the
     // surviving set, so a taken-down member wrongly left in the read
     // would hash-mismatch.
-    "q_semdedup_delete" -> QueryDef(semdedupDelete, Some(semdedupTapOracle("semdedup_del_cells"))),
+    "q_semdedup_delete" -> semdedupEntry(Scenario(SemdedupIndex, "semdedup_del_cells",
+      Seq(purgeTakedown), semdedupIngest, caches = Seq(purgeCells(_)))),
+    // The frozen-flags remedy (the semdedup twin of q_ann_ivf_rebuild):
+    // the smallest KEEPER of every cell that suppressed a member is taken
+    // down (baked; the victims and the previously-suppressed ids are a
+    // cache beside the seed), then REBUILT — fresh quantizer, dominance
+    // flags recomputed over the survivors, tombstones materialized.
     // Partial oracle (the q_semdedup_incremental boundary): the tapped
     // members are POST-REBUILD, all is_batch=true, so DuckDB re-derives
     // EVERY within-cell dominance pair — the recomputed-from-scratch
     // flags (including resurrections) must match the independent
     // recomputation, and the deleted dominators' absence flows through.
-    "q_semdedup_rebuild" -> QueryDef(semdedupRebuild, Some(semdedupTapOracle("semdedup_rebuild_cells"))),
+    "q_semdedup_rebuild" -> semdedupEntry(Scenario(SemdedupIndex, "semdedup_rebuild_cells",
+      Seq(Rebuild), rebuiltFlags,
+      bake = Some(Bake("victims-deleted",
+        Takedown(r => Some(r.spark.read.parquet(ensureRebuildCaches(r.spark, r.seed)._1))))),
+      caches = Seq(r => ensureRebuildCaches(r.spark, r.seed)))),
     "q_edit_similarity" -> QueryDef(editSimilarity, Some("""
       WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 60)
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -3174,17 +2993,26 @@ object Similarity extends QueryModule {
       Some(annOracle("ann_filtered_pq_scored", Ivf.TopK(10), label = Some(3)))),
     "q_ann_filtered_batch" -> QueryDef(annFilteredBatch,
       Some(annOracle("ann_filtered_batch_scored", Ivf.TopK(5), batch = true, label = Some(3)))),
-    // Streaming ingest into the persisted ANN index; the probe's scored
+    // Streaming ingest into the persisted ANN index: the arriving decile
+    // streams in, each micro-batch an append keyed on its checkpoint and
+    // batchId (a replay is a ledger-gated no-op). The probe's scored
     // candidates are tapped, so the oracle independently re-scores them —
     // including the rows that arrived THROUGH the stream.
-    "s_ann_ingest" -> QueryDef(annIngest, Some(annOracle("s_ann_ingest_scored", Ivf.TopK(10)))),
-    "q_ann_ivf_compact" -> QueryDef(annIvfCompact,
-      Some(annOracle("ann_ivf_compact_scored", Ivf.TopK(10)))),
+    "s_ann_ingest" -> ivfEntry(Scenario(IvfIndex, "s_ann_ingest_scored",
+      Seq(Stream(r => r.slice(r.cut))), ivfProbe(10))),
+    // Compaction end to end: the probe answers from the COMPACTED
+    // single-batch layout, and its scored candidates carry the oracle.
+    "q_ann_ivf_compact" -> ivfEntry(Scenario(IvfIndex, "ann_ivf_compact_scored", Seq(Compact),
+      ivfProbe(10), bake = Some(ivfAppended))),
+    // The takedown lifecycle: DELETE the probe's current top 3, then
+    // probe. The post-delete probe MUST re-rank onto the next-best
+    // neighbors — a tombstone filter that silently failed would surface
+    // the deleted ids in the tap and fail the oracle.
     // Partial oracle: the post-delete scored candidates are tapped;
     // DuckDB re-scores + re-ranks them independently. The tombstoned
     // ids' invisibility (pre- AND post-compaction) is spec-pinned.
-    "q_ann_ivf_delete" -> QueryDef(annIvfDelete,
-      Some(annOracle("ann_ivf_delete_scored", Ivf.TopK(10)))),
+    "q_ann_ivf_delete" -> ivfEntry(Scenario(IvfIndex, "ann_ivf_delete_scored", Seq(ivfTop3Takedown),
+      ivfProbe(10), bake = Some(ivfAppended))),
     // Partial oracle: the tapped per-iteration centroid matrices are the
     // declared boundary (the Lloyd update has no SQL twin); the
     // convergence trace itself — per-vector best-assignment cosine,

@@ -213,19 +213,6 @@ object Joins extends QueryModule {
       .orderBy("user_id", "click_id", "view_id")
   }
 
-  /** Bloom-prefiltered join — the runtime-filter pattern made explicit:
-    * the selective dim side (high-balance customers, ~1/3 of the table)
-    * builds a bloom filter over its join keys (one distributed aggregate;
-    * the resulting bitset is a few KB), the filter rides to every fact
-    * scan task in the UDF closure, and fact rows that cannot match are
-    * dropped BEFORE the join's exchange. At 100 TB this is the difference
-    * between shuffling the whole fact table and shuffling the ~selectivity
-    * fraction that can join. False positives (fpp 1%) pass the prefilter
-    * but are eliminated by the exact join, so the result — and the oracle
-    * — are exactly the plain join's. Spark's own InjectRuntimeFilter does
-    * this automatically for suitable shapes; the explicit form works for
-    * any dim predicate and documents the mechanics.
-    */
   /** Bloom filter over `keyCol`, sized from the dim side's ACTUAL
     * cardinality (one cheap count action, same pattern as annPairs'
     * signature sizing): a constant capacity saturates once the dim
@@ -239,6 +226,19 @@ object Joins extends QueryModule {
     dim.stat.bloomFilter(keyCol, expectedNumItems = n, fpp = 0.01)
   }
 
+  /** Bloom-prefiltered join — the runtime-filter pattern made explicit:
+    * the selective dim side (high-balance customers, ~1/3 of the table)
+    * builds a bloom filter over its join keys (one distributed aggregate;
+    * the resulting bitset is a few KB), the filter rides to every fact
+    * scan task in the UDF closure, and fact rows that cannot match are
+    * dropped BEFORE the join's exchange. At 100 TB this is the difference
+    * between shuffling the whole fact table and shuffling the ~selectivity
+    * fraction that can join. False positives (fpp 1%) pass the prefilter
+    * but are eliminated by the exact join, so the result — and the oracle
+    * — are exactly the plain join's. Spark's own InjectRuntimeFilter does
+    * this automatically for suitable shapes; the explicit form works for
+    * any dim predicate and documents the mechanics.
+    */
   private def joinBloom(spark: SparkSession, sfDir: String): DataFrame = {
     val dim = Tables(spark, sfDir, "customer")
       .filter(col("c_acctbal") > 6000)

@@ -142,28 +142,6 @@ object Quality extends QueryModule {
   private val DriftBins = 10
   private val DriftBinWidth = 50.0
 
-  /** Population-stability-index drift monitor: per event_type, compare
-    * the `value` distribution of the current period against the baseline
-    * period over [[DriftBins]] fixed-width bins, PSI = Σ (p_b − p_a) ·
-    * ln(p_b / p_a) with add-one smoothing — the standard
-    * feature/label-drift gate a model-training pipeline runs before
-    * trusting a new data window.
-    *
-    * Scale shape: one scan; both periods' bin counts fold into ONE
-    * (type, bin) groupBy via conditional sums (no second pass, no
-    * self-join of the fact table), so the only row shuffle carries
-    * |types|·|bins| digests. The dense scaffold (types × bins — empty
-    * bins still contribute to PSI under smoothing when n_a ≠ n_b) and
-    * the per-type totals are bounded-size joins on the AGGREGATED frame,
-    * never on rows. Fixed-width bins (not quantiles) keep the monitor
-    * one-pass and cross-engine exact; the quantile-binned variant is
-    * q_quantile_bins' territory.
-    *
-    * Determinism: counts are exact longs; the 10-term PSI sum is IEEE
-    * double rounded to 6 dp, with the verdict CASE applied to the
-    * ROUNDED value so the classification can never straddle an engine's
-    * last ulp.
-    */
   /** One-scan fold of an events frame into exact (event_type, bin,
     * ca, cb) period bin counts — the mergeable state shared by the
     * batch entry and the streaming leg (`s_drift_monitor` accumulates
@@ -207,6 +185,28 @@ object Quality extends QueryModule {
       .orderBy("event_type")
   }
 
+  /** Population-stability-index drift monitor: per event_type, compare
+    * the `value` distribution of the current period against the baseline
+    * period over [[DriftBins]] fixed-width bins, PSI = Σ (p_b − p_a) ·
+    * ln(p_b / p_a) with add-one smoothing — the standard
+    * feature/label-drift gate a model-training pipeline runs before
+    * trusting a new data window.
+    *
+    * Scale shape: one scan; both periods' bin counts fold into ONE
+    * (type, bin) groupBy via conditional sums (no second pass, no
+    * self-join of the fact table), so the only row shuffle carries
+    * |types|·|bins| digests. The dense scaffold (types × bins — empty
+    * bins still contribute to PSI under smoothing when n_a ≠ n_b) and
+    * the per-type totals are bounded-size joins on the AGGREGATED frame,
+    * never on rows. Fixed-width bins (not quantiles) keep the monitor
+    * one-pass and cross-engine exact; the quantile-binned variant is
+    * q_quantile_bins' territory.
+    *
+    * Determinism: counts are exact longs; the 10-term PSI sum is IEEE
+    * double rounded to 6 dp, with the verdict CASE applied to the
+    * ROUNDED value so the classification can never straddle an engine's
+    * last ulp.
+    */
   private def dqDrift(spark: SparkSession, sfDir: String): DataFrame =
     driftPsi(spark, driftCounts(Tables(spark, sfDir, "events")))
 

@@ -152,8 +152,8 @@ object Windows extends QueryModule {
     * (neither strictly dominates). The oracle is the independent
     * NOT EXISTS dominance formulation, so the window rewrite is verified
     * against the definition itself.
-    */
-  /** Staged skyline over any (p_partkey, p_retailprice, p_size) frame —
+    *
+    * Staged skyline over any (p_partkey, p_retailprice, p_size) frame —
     * shared by the registry entry and the at-scale receipt.
     */
   private[graft] def skylineOn(part: DataFrame): DataFrame = {

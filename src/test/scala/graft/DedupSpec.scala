@@ -255,7 +255,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     assert(probe().isEmpty)
 
     // Append the ingest batch: the probe must now surface the match...
-    graft.ext.NearDup.MinhashIndex.append(dir, ingest1.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.append(spark, dir, ingest1.toDF("doc_id", "text"))
     assert(probe() == Seq((300L, 202L)))
 
     // ...identically to a full rebuild over the union (same postings
@@ -305,7 +305,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
 
     val dir = graft.core.TempDirs.create("graft_minhash_dupbatch")
     graft.ext.NearDup.MinhashIndex.write(dir, base.toDF("doc_id", "text"))
-    graft.ext.NearDup.MinhashIndex.append(dir, ingest.toDF("doc_id", "text"))
+    graft.ext.NearDup.MinhashIndex.append(spark, dir, ingest.toDF("doc_id", "text"))
     val rebuilt = graft.core.TempDirs.create("graft_minhash_dupbatch_rb")
     graft.ext.NearDup.MinhashIndex.write(rebuilt,
       (base ++ ingest).toDF("doc_id", "text"))
@@ -344,7 +344,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (!b.isEmpty) graft.ext.NearDup.MinhashIndex.append(dir, b,
+        if (!b.isEmpty) graft.ext.NearDup.MinhashIndex.append(spark, dir, b,
           ingestKey = Some(s"stream-$batchId"))
       }
       .option("checkpointLocation", graft.core.TempDirs.create("graft_minhash_stream_ckpt"))
@@ -364,7 +364,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // batch, no postings growth.
     val batchesBefore = graft.core.PersistedIndex.readManifest(dir).batches
     val postingsBefore = spark.read.parquet(s"$dir/postings").count()
-    graft.ext.NearDup.MinhashIndex.append(dir,
+    graft.ext.NearDup.MinhashIndex.append(spark, dir,
       arriving.take(2).toDF("doc_id", "text"), ingestKey = Some("stream-0"))
     assert(graft.core.PersistedIndex.readManifest(dir).batches == batchesBefore,
       "replayed ingestKey committed a duplicate batch")
@@ -372,7 +372,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     // The ledger survives compaction: a pre-compact micro-batch that
     // replays AFTER the compact is still recognized as committed.
     graft.ext.NearDup.MinhashIndex.compact(spark, dir)
-    graft.ext.NearDup.MinhashIndex.append(dir,
+    graft.ext.NearDup.MinhashIndex.append(spark, dir,
       arriving.drop(2).toDF("doc_id", "text"), ingestKey = Some("stream-1"))
     assert(spark.read.parquet(s"$dir/postings").count() == postingsBefore,
       "post-compaction replay re-committed a published batch")
@@ -392,7 +392,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       def ingest(src: String, ckpt: String): Unit =
         BoundedStream.appendStream(spark.readStream.schema("doc_id LONG, text STRING")
           .parquet(src), ckpt) { (b, key) =>
-          ix.append(dir, b, ingestKey = Some(key))
+          ix.append(spark, dir, b, ingestKey = Some(key))
         }
       def source(ids: Seq[Long]): String = {
         val src = TempDirs.create(s"${name}_src")
@@ -446,7 +446,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     assert(probe() == Set((301L, 5L)), s"deleted doc still matches: ${probe()}")
 
     // Appends preserve the ledger (no resurrection via manifest rewrite).
-    graft.ext.NearDup.MinhashIndex.append(dir,
+    graft.ext.NearDup.MinhashIndex.append(spark, dir,
       Seq((200L, docText(200))).toDF("doc_id", "text"))
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.nonEmpty,
       "append wiped the tombstone ledger")
@@ -473,11 +473,11 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     Seq(graft.ext.NearDup.MinhashIndex, graft.ext.NearDup.PhashIndex).foreach { ix =>
       val dir = graft.core.TempDirs.create(s"graft_${ix.store.name}_gcspare")
       ix.write(dir, base.toDF("doc_id", "text"))
-      ix.append(dir, ingest.toDF("doc_id", "text"))
+      ix.append(spark, dir, ingest.toDF("doc_id", "text"))
       // Simulate the in-flight appender: batch dir renamed into place,
       // manifest not yet swapped (ids 0,1 committed; 2 in flight).
       val inFlight = graft.core.PersistedIndex.readManifest(dir).batches
-      ix.append(dir, Seq((400L, docText(400))).toDF("doc_id", "text"))
+      ix.append(spark, dir, Seq((400L, docText(400))).toDF("doc_id", "text"))
       graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(inFlight)) // roll back the commit
       ix.compact(spark, dir)
       val dirs = Option(new java.io.File(dir, "postings").listFiles())

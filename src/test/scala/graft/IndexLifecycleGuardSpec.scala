@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * renames, batch-id allocation) lives only in core.PersistedIndex, the
   * bounded-stream run (writeStream, AvailableNow, checkpoint, await)
   * only in core.BoundedStream, the nearest-centroid argmax only in
-  * Similarity.argBest, and the 64-bit Hamming band slice and the
-  * document-postings index stores only in ext.NearDup, so no module can
-  * grow another hand-rolled copy of any of them.
+  * Similarity.argBest, the 64-bit Hamming band slice and the
+  * document-postings index stores only in ext.NearDup, and the
+  * lifecycle templates and scratch copies only in core.IndexLifecycle,
+  * so no module can grow another hand-rolled copy of any of them.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
 
@@ -77,6 +78,29 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
          (line, i) <- read(new java.io.File("src/main/scala/graft/ext", name)).linesIterator.zipWithIndex)
       assert(!line.contains("PersistedIndex("),
         s"$name:${i + 1} builds its own index store; document indexes are NearDup.DocIndex values")
+  }
+
+  private val Scenario = new java.io.File("src/main/scala/graft/core/IndexLifecycle.scala")
+
+  private val TemplateCalls = Seq("ensureDerivedSeed(", "scratchFromSeed(")
+
+  test("lifecycle templates and scratch copies are made only by the core scenario") {
+    for (f <- sources("src/main/scala/graft/ext"); (line, i) <- read(f).linesIterator.zipWithIndex;
+         p <- TemplateCalls)
+      assert(!line.contains(p),
+        s"${f.getName}:${i + 1} makes its own lifecycle template or copy ($p); declare a core.IndexLifecycle.Scenario")
+    TemplateCalls.foreach(p =>
+      assert(read(Scenario).contains(p), s"IndexLifecycle no longer contains $p"))
+  }
+
+  test("every index lifecycle entry is a core scenario, so Bench warms its seed, template and caches") {
+    val lifecycle = Set("q_minhash_incremental", "s_minhash_ingest", "q_minhash_compact",
+      "q_minhash_delete", "q_minhash_rebuild", "q_phash_incremental", "q_phash_delete",
+      "q_phash_compact", "q_phash_rebuild", "s_phash_ingest", "q_ann_ivf_compact",
+      "q_ann_ivf_delete", "q_ann_ivf_rebuild", "s_ann_ingest", "q_semdedup_incremental",
+      "s_semdedup_ingest", "q_semdedup_compact", "q_semdedup_delete", "q_semdedup_rebuild")
+    val scenarios = SparkEntry.queries.collect { case (n, _: graft.core.IndexLifecycle.Scenario) => n }
+    assert(scenarios.toSet == lifecycle)
   }
 
   test("the guarded patterns are the ones the template uses") {

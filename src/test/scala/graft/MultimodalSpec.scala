@@ -104,7 +104,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // append path: seed over A, append B
     val inc = mk("graft_phash_spec_inc")
     NearDup.PhashIndex.write(inc, a)
-    NearDup.PhashIndex.append(inc, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(spark, inc, b, ingestKey = Some("k1"))
     // rebuild path: one index over A union B
     val full = mk("graft_phash_spec_full")
     NearDup.PhashIndex.write(full, a.unionByName(b))
@@ -114,7 +114,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
 
     // replay no-op: same ingest key appends nothing
     val before = graft.core.PersistedIndex.readManifest(inc).batches
-    NearDup.PhashIndex.append(inc, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(spark, inc, b, ingestKey = Some("k1"))
     assert(graft.core.PersistedIndex.readManifest(inc).batches == before, "replay appended a batch")
     assert(pairs(inc) == incPairs, "replay changed probe results")
 
@@ -151,7 +151,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val dir = graft.core.TempDirs.create("graft_phash_spec_rb")
     NearDup.PhashIndex.write(dir, a)
-    NearDup.PhashIndex.append(dir, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(spark, dir, b, ingestKey = Some("k1"))
     val victim = pairs(dir).map(_._2).min
     NearDup.PhashIndex.store.delete(dir, Seq(victim).toDF("doc_id"))
     val before = pairs(dir)
@@ -167,7 +167,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTest {
     // ledger survival: a pre-rebuild replay stays a no-op
     assert(graft.core.PersistedIndex.readManifest(dir).ingestKeys.contains("k1"))
     val manifest = graft.core.PersistedIndex.readManifest(dir).batches
-    NearDup.PhashIndex.append(dir, b, ingestKey = Some("k1"))
+    NearDup.PhashIndex.append(spark, dir, b, ingestKey = Some("k1"))
     assert(graft.core.PersistedIndex.readManifest(dir).batches == manifest, "replay appended after rebuild")
     assert(pairs(dir) == before, "replay changed probe results after rebuild")
 

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{PersistedIndex, TempDirs, Warehouse}
+import graft.core.{IndexFamily, PersistedIndex, TempDirs, Warehouse}
 import graft.ext.{NearDup, Similarity}
 
-/** The shared index lifecycle, once per family: a rebuild that crashed
-  * mid-swap must be repaired before the next rebuild reads anything, so
-  * the surviving ids equal those of a twin index that never crashed.
-  * Also pins the manifest's on-disk format.
+/** The shared index lifecycle, once per family value: a mutation that
+  * crashed at any commit point — an append, delete or compaction, or a
+  * rebuild mid-swap — must leave an index the next mutators repair or
+  * ignore, so the surviving ids equal those of a twin index that never
+  * crashed. Also pins the manifest's on-disk format.
   */
 class PersistedIndexSpec extends AnyFunSuite with SparkTest {
 
@@ -20,48 +23,28 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
     (0L until 96L).map(i => (i, Array.fill(64)((rnd.nextDouble() * 2 - 1).toFloat)))
   }
 
-  /** One index family's mutators, driven over a fixed small corpus:
-    * `seed` writes ids below 64, `append` adds the rest.
-    */
-  private case class Family(name: String, store: PersistedIndex,
-      seed: String => Unit, append: String => Unit, delete: (String, Long) => Unit,
-      compact: String => Unit, rebuild: String => Unit)
+  private val families: Seq[IndexFamily] = Seq(NearDup.MinhashIndex, NearDup.PhashIndex,
+    Similarity.SemdedupIndex, Similarity.IvfIndex)
 
-  private def families: Seq[Family] = {
+  private def family(name: String): IndexFamily = families.find(_.store.name == name).get
+
+  /** A fixed small corpus of the family's table, ids 0 until 96. */
+  private def corpus(f: IndexFamily): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = (0L until 96L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
-    val emb = vecs.toDF("vec_id", "embedding")
-    Seq(
-      Family("minhash", NearDup.MinhashIndex.store,
-        d => NearDup.MinhashIndex.write(d, docs.filter(col("doc_id") < 64)),
-        d => NearDup.MinhashIndex.append(d, docs.filter(col("doc_id") >= 64)),
-        (d, id) => NearDup.MinhashIndex.store.delete(d, Seq(id).toDF("doc_id")),
-        d => NearDup.MinhashIndex.compact(spark, d),
-        d => NearDup.MinhashIndex.rebuild(d, docs)),
-      Family("phash", NearDup.PhashIndex.store,
-        d => NearDup.PhashIndex.write(d, docs.filter(col("doc_id") < 64)),
-        d => NearDup.PhashIndex.append(d, docs.filter(col("doc_id") >= 64)),
-        (d, id) => NearDup.PhashIndex.store.delete(d, Seq(id).toDF("doc_id")),
-        d => NearDup.PhashIndex.compact(spark, d),
-        d => NearDup.PhashIndex.rebuild(d, docs)),
-      Family("semdedup", Similarity.SemdedupStore,
-        d => Similarity.writeSemdedupIndex(spark, d, emb.filter(col("vec_id") < 64), tau = 0.9),
-        d => { Similarity.semdedupIndexIngest(spark, d, emb.filter(col("vec_id") >= 64),
-          tau = 0.9).collect(); () },
-        (d, id) => Similarity.SemdedupStore.delete(d, Seq(id).toDF("vec_id")),
-        d => Similarity.semdedupIndexCompact(spark, d),
-        d => Similarity.semdedupIndexRebuild(spark, d, tau = 0.9)),
-      Family("IVF", Similarity.IvfStore,
-        d => Similarity.writeIvfIndex(spark, d, emb.filter(col("vec_id") < 64)),
-        d => Similarity.ivfIndexAppend(spark, d, emb.filter(col("vec_id") >= 64)),
-        (d, id) => Similarity.IvfStore.delete(d, Seq(id).toDF("vec_id")),
-        d => Similarity.ivfIndexCompact(spark, d),
-        d => Similarity.ivfIndexRebuild(spark, d)))
+    if (f.table == "documents") (0L until 96L).map(i => (i, doc(i.toInt))).toDF("doc_id", "text")
+    else vecs.toDF("vec_id", "embedding")
+  }
+
+  private def rows(f: IndexFamily, from: Long, until: Long): DataFrame =
+    corpus(f).filter(col(f.store.idCol) >= from && col(f.store.idCol) < until)
+
+  private def delete(f: IndexFamily, dir: String, id: Long): Unit = {
+    import spark.implicits._
+    f.store.delete(dir, Seq(id).toDF(f.store.idCol))
   }
 
   /** The ids a probe can see: committed batches minus tombstones. */
-  private def liveIds(f: Family, dir: String): Set[Long] =
+  private def liveIds(f: IndexFamily, dir: String): Set[Long] =
     f.store.live(spark, dir, PersistedIndex.readManifest(dir))
       .select(f.store.idCol).distinct().collect().map(_.getLong(0)).toSet
 
@@ -70,28 +53,34 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
     ()
   }
 
+  private def copy(from: String, prefix: String): String = {
+    val dir = TempDirs.create(prefix)
+    Warehouse.copyRecursively(new java.io.File(from), new java.io.File(dir))
+    dir
+  }
+
   /** seed → append → delete id 5 → compact: the manifest lists one
     * batch k > 0, so a torn read of a batch-0 staged layout sees nothing.
     */
-  private def postCompaction(f: Family, prefix: String): String = {
+  private def postCompaction(f: IndexFamily, prefix: String): String = {
     val dir = TempDirs.create(prefix)
-    f.seed(dir); f.append(dir); f.delete(dir, 5L); f.compact(dir)
+    f.write(dir, rows(f, 0, 64)); f.append(spark, dir, rows(f, 64, 96))
+    delete(f, dir, 5L); f.compact(spark, dir)
     val m = PersistedIndex.readManifest(dir)
     assert(m.batches.size == 1 && m.batches.head > 0 && m.tombstones.isEmpty,
-      s"${f.name}: not in the post-compaction state: $m")
+      s"${f.store.name}: not in the post-compaction state: $m")
     dir
   }
 
   for (name <- Seq("minhash", "phash", "semdedup", "IVF"))
     test(s"$name: a rebuild after a rebuild that crashed mid-swap loses no ids") {
-      val f = families.find(_.name == name).get
+      val f = family(name)
       val twin = postCompaction(f, s"graft_pi_twin_$name")
       val dir = postCompaction(f, s"graft_pi_crash_$name")
       // The crashed rebuild's complete staged layout: the same rebuild,
       // built in a copy.
-      val built = TempDirs.create(s"graft_pi_built_$name")
-      Warehouse.copyRecursively(new java.io.File(dir), new java.io.File(built))
-      f.rebuild(built)
+      val built = copy(dir, s"graft_pi_built_$name")
+      f.rebuild(built, corpus(f))
       // The on-disk state of a crash mid-swap (as in StagedSwapSpec):
       // every live sub-dir moved aside, every staged one moved in, the
       // staged manifest not yet committed over the live one.
@@ -104,14 +93,98 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
         move(new java.io.File(dir, s), new java.io.File(aside, s))
         move(new java.io.File(stage, s), new java.io.File(dir, s))
       }
-      f.rebuild(dir)
-      f.rebuild(twin)
+      f.rebuild(dir, corpus(f))
+      f.rebuild(twin, corpus(f))
       val expect = liveIds(f, twin)
       assert(expect.size == 95 && !expect.contains(5L), s"$name twin: $expect")
       assert(liveIds(f, dir) == expect, s"$name: ids lost across the crashed rebuild")
       assert(new java.io.File(dir).listFiles().forall(!_.getName.startsWith(".rebuild")),
         s"$name: swap debris left behind")
     }
+
+  // ---- crash injection at the commit points of append, delete, compact ----
+  //
+  // Every mutator publishes one batch dir: written into a dot-dir,
+  // renamed to `batch_id=N`, then committed by the manifest swap. The
+  // crash states are built by hand from a twin that ran the same
+  // mutation to completion.
+
+  /** Seed (ids < 48), append [48, 64), delete id 5: two committed
+    * batches and one tombstone batch, so a compaction has work.
+    */
+  private def preState(f: IndexFamily, prefix: String): String = {
+    val dir = TempDirs.create(prefix)
+    f.write(dir, rows(f, 0, 48)); f.append(spark, dir, rows(f, 48, 64)); delete(f, dir, 5L)
+    dir
+  }
+
+  /** The mutation that crashes, by name, and the dot-dir its publish
+    * stages in.
+    */
+  private def crashing(f: IndexFamily, op: String): (String => Unit, String) = op match {
+    case "append" => (d => f.append(spark, d, rows(f, 64, 80)), "staging")
+    case "delete" => (d => delete(f, d, 7L), "tombstone")
+    case "compact" => (d => f.compact(spark, d), "compact")
+  }
+
+  /** What runs after the crash, in order, on the crashed index and on the
+    * twin that never crashed.
+    */
+  private def next(f: IndexFamily): Seq[(String, String => Unit)] = Seq(
+    "append" -> (d => f.append(spark, d, rows(f, 80, 96))),
+    "delete" -> (d => delete(f, d, 9L)),
+    "compact" -> (d => f.compact(spark, d)),
+    "rebuild" -> (d => f.rebuild(d, corpus(f))))
+
+  /** The twin's live ids after each [[next]] step, per family. */
+  private val twinIds = scala.collection.mutable.Map.empty[String, Seq[Set[Long]]]
+
+  private def batchDirs(root: java.io.File): Set[String] =
+    Option(root.list()).toSeq.flatten.filter(_.startsWith("batch_id=")).toSet
+
+  for (f <- families; op <- Seq("append", "delete", "compact")) {
+    val name = f.store.name
+    val states = Seq("staged", "renamed") ++ (if (op == "compact") Seq("uncollected") else Nil)
+    test(s"$name: the next append, delete, compact and rebuild recover from a crashed $op " +
+        s"(${states.mkString(", ")})") {
+      val expect = twinIds.getOrElseUpdate(name, {
+        val twin = preState(f, s"graft_pi_twin_$name")
+        next(f).map { case (_, step) => step(twin); liveIds(f, twin) }
+      })
+      assert(expect.last.size == 78 && !Seq(5L, 9L).exists(expect.last.contains),
+        s"$name twin: ${expect.last}")
+      val pre = preState(f, s"graft_pi_pre_$name")
+      // The batch dir the mutation publishes, from a copy that completed it.
+      val (mutate, staging) = crashing(f, op)
+      val built = copy(pre, s"graft_pi_built_$name")
+      mutate(built)
+      val root = if (op == "delete") "tombstones" else f.store.data
+      val Seq(batch) = (batchDirs(new java.io.File(built, root)) --
+        batchDirs(new java.io.File(pre, root))).toSeq
+      val published = new java.io.File(new java.io.File(built, root), batch)
+      for (state <- states) {
+        val dir = copy(pre, s"graft_pi_crash_$name")
+        state match {
+          case "staged" => Warehouse.copyRecursively(published,
+            new java.io.File(dir, s".${staging}_batch_${batch.stripPrefix("batch_id=")}"))
+          case "renamed" => Warehouse.copyRecursively(published,
+            new java.io.File(new java.io.File(dir, root), batch))
+          case "uncollected" =>
+            // Committed: the merged batch and its manifest are in, but
+            // the merged-away batch and tombstone dirs were not yet GC'd.
+            Warehouse.copyRecursively(published, new java.io.File(new java.io.File(dir, root), batch))
+            java.nio.file.Files.copy(new java.io.File(built, "manifest.json").toPath,
+              new java.io.File(dir, "manifest.json").toPath,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+        next(f).zip(expect).foreach { case ((step, run), ids) =>
+          run(dir)
+          assert(liveIds(f, dir) == ids,
+            s"$name, $op crashed $state: live ids after the next $step differ from the twin's")
+        }
+      }
+    }
+  }
 
   test("manifest format: a parent-written IVF record reads back, extra fields ride every commit") {
     val dir = TempDirs.create("graft_pi_manifest")

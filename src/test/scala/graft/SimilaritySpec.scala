@@ -502,19 +502,39 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("annIngestPipeline: rows that arrive through the stream are probe-visible") {
+  test("IVF lifecycle: rows that arrive through the stream step are probe-visible") {
     import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.col
+    import graft.core.IndexLifecycle.{Scenario, Stream}
     // Seed = the 500 base vectors; the 20 planted near-copies (ids
-    // 1000+) arrive THROUGH the streaming ingest. Probing with a planted
-    // copy's own vector must return the copy at rank 1 (cos 1.0) — which
-    // can only happen if the streamed micro-batch was committed into the
-    // index — and its original in the top 3.
-    val srcDir = graft.core.TempDirs.create("graft_ann_ingest_src")
-    corpus.toDF("vec_id", "embedding").coalesce(1)
-      .write.mode("overwrite").parquet(srcDir)
+    // 1000+) arrive THROUGH the scenario's stream step. Probing with a
+    // planted copy's own vector must return the copy at rank 1 (cos 1.0)
+    // — which can only happen if the streamed micro-batch was committed
+    // into the index — and its original in the top 3.
+    val sfDir = graft.core.TempDirs.create("graft_ann_ingest_src")
+    val df = corpus.toDF("vec_id", "embedding")
+    df.coalesce(1).write.mode("overwrite")
+      .parquet(new java.io.File(sfDir, "embeddings.parquet").getPath)
+    val seedDir = graft.core.TempDirs.create("graft_ann_ingest_seed")
+    Similarity.IvfIndex.write(seedDir, df.filter(col("vec_id") < 1000))
+    // The IVF family, seeded from this corpus instead of a fixture.
+    val ivf = Similarity.IvfIndex
+    val family = new graft.core.IndexFamily {
+      def store = ivf.store
+      val table = ivf.table
+      def seed(s: SparkSession, d: String) = (seedDir, 1000L)
+      def write(dir: String, rows: DataFrame) = ivf.write(dir, rows)
+      def append(s: SparkSession, dir: String, rows: DataFrame, key: Option[String]) =
+        ivf.append(s, dir, rows, key)
+      def compact(s: SparkSession, dir: String) = ivf.compact(s, dir)
+      def rebuild(dir: String, corpus: DataFrame) = ivf.rebuild(dir, corpus)
+      override def copied(scratch: String, template: String) = ivf.copied(scratch, template)
+    }
     val lookup = corpus.toMap
-    val got = graft.ext.Similarity
-      .annIngestPipeline(spark, srcDir, "*.parquet", cut = 1000L, lookup(1000L))
+    val got = Scenario(family, "unused", Seq(Stream(r => r.slice(r.cut))), (r, _) =>
+      Similarity.ivfQuery(Ivf.Stored(spark, r.dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(10),
+        nprobe = 4))(spark, sfDir)
       .collect().map(_.getLong(0)).toSeq
     assert(got.head == 1000L, s"streamed row not at rank 1: $got")
     assert(got.take(3).contains(0L), s"original of the planted copy missing: $got")

@@ -25,7 +25,7 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     java.nio.file.Files.write(lockOf(dir).toPath, "other 0".getBytes)
     val batch = Seq((100L, doc(100))).toDF("doc_id", "text")
     val eApp = intercept[IllegalStateException] {
-      NearDup.MinhashIndex.append(dir, batch)
+      NearDup.MinhashIndex.append(spark, dir, batch)
     }
     assert(eApp.getMessage.contains("single-writer"))
     intercept[IllegalStateException] {
@@ -34,7 +34,7 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     intercept[IllegalStateException] { NearDup.MinhashIndex.compact(spark, dir) }
     java.nio.file.Files.delete(lockOf(dir).toPath)
     // With the lease free, the append proceeds — and releases.
-    NearDup.MinhashIndex.append(dir, batch)
+    NearDup.MinhashIndex.append(spark, dir, batch)
     assert(!lockOf(dir).exists(), "lease not released after append")
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
@@ -49,7 +49,7 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     assert(lock.setLastModified(System.currentTimeMillis() - 11L * 60 * 1000))
     // Past the staleness bar the next writer takes over instead of
     // wedging forever.
-    NearDup.MinhashIndex.append(dir, Seq((100L, doc(100))).toDF("doc_id", "text"))
+    NearDup.MinhashIndex.append(spark, dir, Seq((100L, doc(100))).toDF("doc_id", "text"))
     assert(!lock.exists())
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 2)
   }
@@ -196,12 +196,12 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     NearDup.PhashIndex.write(phDir, docs)
     val ops: Seq[(String, Seq[String => Unit])] = Seq(
       mhDir -> Seq(
-        d => NearDup.MinhashIndex.append(d, batch),
+        d => NearDup.MinhashIndex.append(spark, d, batch),
         d => NearDup.MinhashIndex.store.delete(d, Seq(1L).toDF("doc_id")),
         d => NearDup.MinhashIndex.compact(spark, d),
         d => NearDup.MinhashIndex.rebuild(d, docs)),
       phDir -> Seq(
-        d => NearDup.PhashIndex.append(d, batch),
+        d => NearDup.PhashIndex.append(spark, d, batch),
         d => NearDup.PhashIndex.store.delete(d, Seq(1L).toDF("doc_id")),
         d => NearDup.PhashIndex.compact(spark, d),
         d => NearDup.PhashIndex.rebuild(d, docs)))
