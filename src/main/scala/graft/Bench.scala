@@ -54,15 +54,16 @@ object Bench {
   def burstNoisyVerdict(burstEntryCount: Int): Boolean = burstEntryCount >= 3
 
   /** THE pre-timing state: every untimed setup step Bench runs before
-    * its first timed measurement, in order. Extracted so Profile's
-    * SPARK_GRAFT_JITPASS mode calls THIS routine instead of maintaining
-    * a drifting copy (ADVICE r16 #3: the copy reproduced the r15
-    * protocol — sf0.001 warm-up, no ensure* steps — after r16 moved the
-    * real one to the measured fixture). One body, two callers, no drift
-    * — the same consolidation the session conf got in r14 (Harness).
-    * Per-step economics are documented inline below. */
+    * its first timed measurement, in order — the table warm-up, every
+    * seed the registry declares, the registry JIT pass. Profile's
+    * SPARK_GRAFT_JITPASS mode calls this same routine, so the two never
+    * drift. Seeds are declared by the entries that read them
+    * (`QueryDef.seeds`, and each lifecycle scenario's own); each seed's
+    * economics are documented on its value. A seed that throws is
+    * printed by name. Returns how many seeds were warmed.
+    */
   def warmPreTimingState(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      tag: String = "bench"): Unit = {
+      tag: String = "bench"): Int = {
     // Untimed warm-up: read every table once so footer caching, reader
     // JIT, and codegen infrastructure aren't billed to the first measured
     // query.
@@ -70,73 +71,13 @@ object Bench {
       try graft.core.Tables(spark, sfDir, t).queryExecution.toRdd.count()
       catch { case _: Throwable => () }
     }
-    // Untimed: q_jdbc_snapshot's embedded-Derby import runs once per sfDir
-    // and persists under /tmp; billing that one-time setup to the timed run
-    // would misstate the steady-state JDBC scan cost.
-    try SparkEntry.queries("q_jdbc_snapshot")(spark, sfDir).queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
-    // Untimed for the same reason: the bucketed tables' one-time LAYOUT
-    // write (seed) or catalog attach. Only the seed runs here — the
-    // bucketed JOIN itself is still timed cold like every other query.
-    try graft.ops.Bucketed.seed(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Untimed for the same reason: every index lifecycle entry's seed,
-    // baked template (the seed plus a fixture-deterministic setup
-    // mutation, e.g. q_ann_ivf_compact's appended decile) and discovery
-    // caches (q_semdedup_delete's purge cells, q_semdedup_rebuild's
-    // victims) — one-time per-fixture LAYOUT writes, marker-gated under
-    // /tmp (core.IndexLifecycle). The timed entries measure the
-    // operators (probe / append / stream / delete / compact / rebuild) on
-    // a per-run scratch copy, not the one-time setup a deployment pays
-    // once per corpus.
-    SparkEntry.queries.foreach {
-      case (_, s: graft.core.IndexLifecycle.Scenario) =>
-        try s.warm(spark, sfDir) catch { case _: Throwable => () }
-      case _ => ()
+    val warmed = SparkEntry.seeds.count { seed =>
+      try { seed.build(spark, sfDir); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] seed ${seed.name} FAILED: ${e.getClass.getSimpleName}")
+        false
+      }
     }
-    // Untimed, same economics: the probe entries' persisted IVF index.
-    try { graft.ext.Similarity.ensureIvfIndex(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed: q_graph_cc_incremental's persisted base labels — the
-    // one-time-per-fixture base labeling; the timed entry measures the
-    // incremental merge, which is the operator.
-    try { graft.ops.Graph.ensureCcLabelsSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed (r13, same economics): q_pagerank_incremental's persisted
-    // per-iteration base ranks.
-    try { graft.ops.Graph.ensurePrRanksSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed, same economics: q_lpa_incremental's persisted base labels;
-    // the timed entry measures the incremental rounds.
-    try { graft.ops.Graph.ensureLpaLabelsSeed(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed: q_binary_ingest's synthesized blob objects — the INPUT
-    // the entry ingests (production's objects exist before the
-    // pipeline runs); the timed entry measures the binaryFile read.
-    try { graft.ext.Multimodal.ensureBlobDir(spark, sfDir); () }
-    catch { case _: Throwable => () }
-    // Untimed: the session-memoized graph edge projections (production's
-    // materialized bucketed edge tables). Without this the FIRST graph
-    // entry in the sweep pays the shared one-time build inside its timed
-    // region — a cost that belongs to no single operator and that the
-    // warm-twin adjudication would otherwise strip as a "noise hit",
-    // attributing it to nothing at all.
-    try { graft.ops.Graph.warmEdgeMemos(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // Untimed (ADVICE r16 #1): the BPE merge-table memo — the encoder's
-    // one-time trained-tokenizer input artifact (production trains once,
-    // applies everywhere; training itself is timed as q_bpe_merges).
-    // Warmed EXPLICITLY here like the edge memos and index seeds so the
-    // registry JIT pass below keeps its compiles-classes-only contract.
-    try { graft.ext.TextAnalysis.ensureBpeMergeMemo(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // Untimed (r18): the Canal topic seed — s_cdc_canal's one-time
-    // per-fixture INPUT synthesis (the R1 broker stand-in; production's
-    // topic exists before the pipeline runs). Same economics as the
-    // Derby import above; warmed explicitly so the registry JIT pass
-    // below keeps its compiles-classes-only contract.
-    try { graft.stream.Streaming.ensureCanalTopic(spark, sfDir); () }
-    catch { case _: Throwable => () }
     // Untimed JIT warm-up (disclosed; applied from r7, moved to the
     // MEASURED fixture in r16): run the whole registry once against
     // sfDir before any timing. Rationale unchanged: the recorded number
@@ -159,8 +100,8 @@ object Bench {
     // lifecycle entry copies a fresh scratch clone per run, every
     // streaming entry starts from a fresh checkpoint, and every
     // one-time shared artifact (index seeds, edge memos, the BPE merge
-    // memo) is warmed by its OWN explicit ensure* step above — so this
-    // pass compiles classes and nothing else, and the timed pass
+    // memo) is a declared seed warmed above — so this pass compiles
+    // classes and nothing else, and the timed pass
     // re-pays the operator's full cost (the warm-twin pass always
     // re-ran the registry and never altered a primary).
     locally {
@@ -171,6 +112,7 @@ object Bench {
       }
       System.err.println(f"[$tag] JIT warm-up pass ($sfDir, untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
+    warmed
   }
 
   def main(args: Array[String]): Unit = {
@@ -200,7 +142,15 @@ object Bench {
     // The full untimed setup — table warm-up, one-time seeds/memos, the
     // registry JIT pass — lives in warmPreTimingState (one body, shared
     // with Profile's JITPASS mode; per-step economics documented there).
-    warmPreTimingState(spark, sfDir)
+    val seedsWarmed = warmPreTimingState(spark, sfDir)
+    // Seed hits and misses from here on are the timed sweep's: a miss is
+    // a one-time build inside a timed region, named in seed_misses.
+    def seedTotals(): (Long, Long) = {
+      val counts = graft.core.Warehouse.seedCounts.values
+      (counts.map(_.hits).sum, counts.map(_.misses).sum)
+    }
+    val (hits0, misses0) = seedTotals()
+    val seedMisses = scala.collection.mutable.LinkedHashSet.empty[String]
     // The warm map below remains the per-entry steady-state receipt.
     // toRdd.count() consumes the query's own physical plan, forcing every
     // output column to materialize — df.count() would let the optimizer
@@ -212,13 +162,16 @@ object Bench {
     // semantics are unchanged; the names now surface in the record.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def time(name: String): Double = {
+      val missesBefore = seedTotals()._2
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count() }
       catch { case e: Throwable =>
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}")
       }
-      (System.nanoTime() - t0) / 1e9
+      val dt = (System.nanoTime() - t0) / 1e9
+      if (seedTotals()._2 > missesBefore) seedMisses += name
+      dt
     }
     // Host-noise sentinel: one fixed canary timed immediately before and
     // after the sweep. A >1.5x divergence between its two timings can
@@ -365,6 +318,10 @@ object Bench {
       } else name -> dt
     }
     val total = adjudicated.map(_._2).sum
+    val (hits1, misses1) = seedTotals()
+    System.err.println(s"[bench] seeds: $seedsWarmed of ${SparkEntry.seeds.size} warmed; " +
+      s"timed sweep ${hits1 - hits0} hits, ${misses1 - misses0} misses" +
+      (if (seedMisses.isEmpty) "" else s" (${seedMisses.mkString(", ")})"))
     // Symmetric warm-up before the post-sweep measurement: the sweep's
     // ~160 distinct plans overflow Spark's bounded codegen cache (100
     // compiled classes), evicting the canary's generated code — without
@@ -400,6 +357,7 @@ object Bench {
           s"""},"failed":[${failed.map("\"" + _ + "\"").mkString(",")}],""" +
           s""""warm_failed":[${warmFailed.map("\"" + _ + "\"").mkString(",")}],""" +
           s""""burst_witnesses":[${burstWitnesses.map("\"" + _ + "\"").mkString(",")}],""" +
+          s""""seed_misses":[${seedMisses.map("\"" + _ + "\"").mkString(",")}],""" +
           s""""canary":{"before":$canaryBefore,"after":$canaryAfter},"noisy":$noisy,"sf":"$sfDir"}""")
     try {
       val w = new java.io.PrintWriter("bench_full.json")

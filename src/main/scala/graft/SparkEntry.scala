@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{QueryDef, QueryModule}
+import graft.core.{QueryDef, QueryModule, Seed}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -22,11 +22,24 @@ object SparkEntry {
     ext.Linkage,
     stream.Streaming)
 
-  private lazy val all: Map[String, QueryDef] = {
+  /** The registry in module order: no two entries share a name, nor do
+    * two different seeds.
+    */
+  private lazy val defs: Seq[(String, QueryDef)] = {
     val defs = modules.flatMap(_.defs.toSeq)
     require(defs.map(_._1).distinct.size == defs.size, "duplicate query name across modules")
-    defs.toMap
+    val seeds = seedsOf(defs)
+    require(seeds.map(_.name).distinct.size == seeds.size, "different seeds share a name")
+    defs
   }
+
+  private def seedsOf(defs: Seq[(String, QueryDef)]): Seq[Seed] =
+    defs.flatMap(_._2.allSeeds).distinct
+
+  private lazy val all: Map[String, QueryDef] = defs.toMap
+
+  /** Every seed an entry declares, in registry order, each once. */
+  lazy val seeds: Seq[Seed] = seedsOf(defs)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The CDC merge restore — the one query the whole reference exists to
@@ -43,5 +56,5 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    all.collect { case (name, QueryDef(_, Some(sql))) => name -> sql.trim }
+    all.collect { case (name, QueryDef(_, Some(sql), _)) => name -> sql.trim }
 }

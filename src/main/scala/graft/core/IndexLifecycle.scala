@@ -112,7 +112,7 @@ object IndexLifecycle {
     * and the probe tapped as `tap`. With no timed step the template
     * answers in place, unless answering writes. `batch` defaults to the
     * corpus from the cut on; `caches` are the marker-gated discovery
-    * results the steps read, which [[warm]] builds with the template.
+    * results the steps read, which [[seed]] builds with the template.
     */
   final case class Scenario(family: IndexFamily, tap: String, timed: Seq[Step],
       probe: (Run, Option[String]) => DataFrame,
@@ -132,11 +132,17 @@ object IndexLifecycle {
       })
     }
 
-    /** Build, untimed, everything a call reads but does not time. */
-    def warm(spark: SparkSession, sfDir: String): Unit = {
+    /** Everything a call reads but does not time: the family's seed, the
+      * baked template (e.g. q_ann_ivf_compact's appended decile) and the
+      * discovery caches (q_semdedup_delete's purge cells) — one-time
+      * per-fixture LAYOUT writes. A call times the operator (probe,
+      * append, stream, delete, compact, rebuild) on a per-run scratch
+      * copy, not the setup a deployment pays once per corpus.
+      */
+    val seed: Seed = Seed(s"${family.store.name} lifecycle $tap", { (spark, sfDir) =>
       val r = template(spark, sfDir)
       caches.foreach(_(r))
-    }
+    })
 
     def apply(spark: SparkSession, sfDir: String): DataFrame = {
       val t = template(spark, sfDir)

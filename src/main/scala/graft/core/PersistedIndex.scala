@@ -35,9 +35,16 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
   /** The dirs a complete layout comprises (manifest aside). */
   val subs: Seq[String] = data +: aux
 
+  /** Recover, then drop every publish dot-dir: under the lease, one can
+    * only be a crashed writer's. StagedSwap's `.rebuild*` and the
+    * lease's own files are not publish dirs.
+    */
   private def mutate[T](dir: String, op: String)(f: => T): T =
     WriterLease.withLease(dir, s"$name $op") {
       StagedSwap.recover(dir, subs)
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .filter(d => d.isDirectory && PublishKinds.exists(k => d.getName.startsWith(s".${k}_batch_")))
+        .foreach(Warehouse.deleteRecursively)
       f
     }
 
@@ -53,7 +60,6 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
       .map(_.getName.stripPrefix("batch_id=").toLong)
     val id = (onDisk :+ 0L).max + 1
     val staging = new java.io.File(dir, s".${kind}_batch_$id")
-    Warehouse.deleteRecursively(staging)
     val out = write(staging.getPath)
     java.nio.file.Files.move(staging.toPath,
       new java.io.File(r, s"batch_id=$id").toPath,
@@ -156,6 +162,11 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
 }
 
 object PersistedIndex {
+
+  /** The kinds of batch [[PersistedIndex.publish]] stages, each in a
+    * `.<kind>_batch_N` dot-dir.
+    */
+  private val PublishKinds = Seq("staging", "tombstone", "compact")
 
   /** Writes a batch under a staging path; returns the manifest to commit. */
   type Stage = (String, Manifest) => Manifest

@@ -86,15 +86,33 @@ object Warehouse {
       build(dir)
     }
 
+  /** How often [[ensureSeed]] found one seed dir marked (a hit) or
+    * built it (a miss).
+    */
+  final case class SeedCount(hits: Long, misses: Long)
+
+  private val seedCountsByDir =
+    new java.util.concurrent.ConcurrentHashMap[String, SeedCount]()
+
+  /** Every dir [[ensureSeed]] was called on in this JVM, with its counts. */
+  def seedCounts: Map[String, SeedCount] = {
+    import scala.jdk.CollectionConverters._
+    seedCountsByDir.asScala.toMap
+  }
+
   /** The marker-gated seed body every one-time seed shares: unless
     * `dir/_SEEDED` exists, clear `dir`, recreate it, run `build(dir)`,
     * and only then write the marker — so a crashed partial build is
     * redone on the next call. Returns `dir`'s path. The caller's `dir`
     * carries the fixture tag, so a regenerated fixture seeds afresh.
+    * Each call counts a hit or a miss for `dir` ([[seedCounts]]).
     */
   def ensureSeed(dir: java.io.File)(build: String => Unit): String = {
     val marker = new java.io.File(dir, "_SEEDED")
-    if (!marker.exists()) {
+    val hit = marker.exists()
+    seedCountsByDir.merge(dir.getPath, if (hit) SeedCount(1, 0) else SeedCount(0, 1),
+      (a, b) => SeedCount(a.hits + b.hits, a.misses + b.misses))
+    if (!hit) {
       deleteRecursively(dir)
       dir.mkdirs()
       build(dir.getPath)

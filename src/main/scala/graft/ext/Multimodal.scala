@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{IndexLifecycle, PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.{IndexLifecycle, PersistedIndex, QueryDef, QueryModule, Seed, Tables, Warehouse}
 import graft.core.IndexLifecycle.{Compact, Rebuild, Step}
 
 /** Multimodal columns: image/audio/video handled as opaque `binary`
@@ -153,7 +153,7 @@ object Multimodal extends QueryModule {
     * the object-store prefix the upstream media pipeline already wrote;
     * the operator under test is the READ side.
     */
-  private[graft] def ensureBlobDir(spark: SparkSession, sfDir: String): String = {
+  private def ensureBlobDir(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
     Warehouse.ensureSeed(new java.io.File(BlobRoot, blobTag(sfDir))) { path =>
       Tables(spark, sfDir, "documents")
@@ -170,6 +170,12 @@ object Multimodal extends QueryModule {
         }
     }
   }
+
+  /** The blob objects as a seed: the INPUT q_binary_ingest reads
+    * (production's objects exist before the pipeline runs), untimed; the
+    * entry times the binaryFile read.
+    */
+  val BlobSeed: Seed = Seed("blob dir", ensureBlobDir)
 
   /** Raw-file ingestion through Spark's `binaryFile` source — the real
     * scan path a multimodal lake uses for image/audio/video objects
@@ -426,7 +432,7 @@ object Multimodal extends QueryModule {
       ORDER BY da, db""")),
     "q_binary_ingest" -> QueryDef(binaryIngest, Some("""
       SELECT doc_id, n_chars AS n_bytes, md5(text) AS digest
-      FROM documents WHERE doc_id % 10 = 0 ORDER BY doc_id""")),
+      FROM documents WHERE doc_id % 10 = 0 ORDER BY doc_id"""), Seq(BlobSeed)),
     "q_mm_features" -> QueryDef(mmFeatures, Some("""
       WITH ch AS (
         SELECT doc_id, ord(c) AS v FROM (

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
+import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Seed, Tables, Warehouse}
 import graft.core.IndexLifecycle.{Append, Bake, Compact, Rebuild, Run, Scenario, Stream, Takedown}
 import graft.functions.SimHash64
 
@@ -1801,6 +1801,11 @@ object Similarity extends QueryModule {
     }
   }
 
+  /** The probe entries' persisted IVF index: a one-time per-fixture
+    * LAYOUT write, untimed; the entries time the probe.
+    */
+  val IvfProbeSeed: Seed = Seed("ivf probe index", ensureIvfIndex)
+
   private val IvfSeedRoot = "/tmp/graft_ivf_seed"
 
   /** Scratch dirs copied from an immutable seed template share that
@@ -2729,8 +2734,8 @@ object Similarity extends QueryModule {
   private def semdedupEntry(s: Scenario): QueryDef = QueryDef(s, Some(semdedupTapOracle(s.tap)))
 
   override val defs: Map[String, QueryDef] = Map(
-    "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annOracle("ann_ivf_probe_scored", Ivf.TopK(10)))),
-    "q_ann_range" -> QueryDef(annRange, Some(annOracle("ann_range_scored", Ivf.Range(0.25)))),
+    "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annOracle("ann_ivf_probe_scored", Ivf.TopK(10))), Seq(IvfProbeSeed)),
+    "q_ann_range" -> QueryDef(annRange, Some(annOracle("ann_range_scored", Ivf.Range(0.25))), Seq(IvfProbeSeed)),
     // The full drift lifecycle in one entry: a skewed synthetic ingest
     // trips the drift sentinel, the poisoning load is taken down (an
     // O(batch) tombstone publish) — both baked — then the rebuild
@@ -2741,12 +2746,12 @@ object Similarity extends QueryModule {
     // tapped candidates let the oracle re-derive the ranking.
     "q_ann_ivf_rebuild" -> ivfEntry(Scenario(IvfIndex, "ann_ivf_rebuild_scored", Seq(Rebuild),
       ivfRebuiltProbe, batch = ivfPoison, bake = Some(ivfPoisoned))),
-    "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annOracle("ann_range_batch_scored", Ivf.Range(0.25), batch = true))),
-    "q_ann_range_pq" -> QueryDef(annRangePq, Some(annOracle("ann_range_pq_scored", Ivf.Range(0.25)))),
-    "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annOracle("ann_ivf_batch_scored", Ivf.TopK(5), batch = true))),
+    "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annOracle("ann_range_batch_scored", Ivf.Range(0.25), batch = true)), Seq(IvfProbeSeed)),
+    "q_ann_range_pq" -> QueryDef(annRangePq, Some(annOracle("ann_range_pq_scored", Ivf.Range(0.25))), Seq(IvfProbeSeed)),
+    "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annOracle("ann_ivf_batch_scored", Ivf.TopK(5), batch = true)), Seq(IvfProbeSeed)),
     "q_ann_ivfpq" -> QueryDef(annIvfPq, Some(annOracle("ann_ivfpq_scored", Ivf.TopK(10)))),
-    "q_ann_ivfpq_probe" -> QueryDef(annIvfPqProbe, Some(annOracle("ann_ivfpq_probe_scored", Ivf.TopK(10)))),
-    "q_ann_ivfpq_batch" -> QueryDef(annIvfPqBatch, Some(annOracle("ann_ivfpq_batch_scored", Ivf.TopK(5), batch = true))),
+    "q_ann_ivfpq_probe" -> QueryDef(annIvfPqProbe, Some(annOracle("ann_ivfpq_probe_scored", Ivf.TopK(10))), Seq(IvfProbeSeed)),
+    "q_ann_ivfpq_batch" -> QueryDef(annIvfPqBatch, Some(annOracle("ann_ivfpq_batch_scored", Ivf.TopK(5), batch = true)), Seq(IvfProbeSeed)),
     "q_hybrid_rank" -> QueryDef(hybridRank, Some("""
       WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
@@ -2985,14 +2990,14 @@ object Similarity extends QueryModule {
     "q_ann_filtered" -> QueryDef(annFiltered,
       Some(annOracle("ann_filtered_scored", Ivf.TopK(10), label = Some(3)))),
     "q_ann_filtered_probe" -> QueryDef(annFilteredProbe,
-      Some(annOracle("ann_filtered_probe_scored", Ivf.TopK(10), label = Some(3)))),
+      Some(annOracle("ann_filtered_probe_scored", Ivf.TopK(10), label = Some(3))), Seq(IvfProbeSeed)),
     // Label-verifying oracle like the other filtered taps: DuckDB drops
     // any candidate whose label fails the predicate before re-scoring,
     // so a filter that leaked would hash-mismatch.
     "q_ann_filtered_pq" -> QueryDef(annFilteredPq,
-      Some(annOracle("ann_filtered_pq_scored", Ivf.TopK(10), label = Some(3)))),
+      Some(annOracle("ann_filtered_pq_scored", Ivf.TopK(10), label = Some(3))), Seq(IvfProbeSeed)),
     "q_ann_filtered_batch" -> QueryDef(annFilteredBatch,
-      Some(annOracle("ann_filtered_batch_scored", Ivf.TopK(5), batch = true, label = Some(3)))),
+      Some(annOracle("ann_filtered_batch_scored", Ivf.TopK(5), batch = true, label = Some(3))), Seq(IvfProbeSeed)),
     // Streaming ingest into the persisted ANN index: the arriving decile
     // streams in, each micro-batch an append keyed on its checkpoint and
     // batchId (a replay is a ledger-gated no-op). The probe's scored

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Seed, Tables}
 
 /** Iterative graph analytics on DataFrames — the family a lineage /
   * influence / link-analysis pass over a 100 TB corpus graph needs.
@@ -74,20 +74,21 @@ object Graph extends QueryModule {
       }
     }
 
-  /** Pre-materialize the session's edge projections (the production
-    * "already-bucketed edge tables"). Bench calls this in its untimed
-    * set-up so the first graph entry's timing measures the OPERATOR, not
-    * the one-time shared-table build — the same untimed-seed economics
-    * every persisted index family gets. Queries stay correct without it:
+  /** The session's edge projections pre-materialized (the production
+    * "already-bucketed edge tables"). Without this seed the FIRST graph
+    * entry in a sweep pays the shared one-time build inside its timed
+    * region — a cost that belongs to no single operator, which Bench's
+    * warm-twin adjudication would otherwise strip as a "noise hit",
+    * attributing it to nothing at all. Queries stay correct without it:
     * the first toucher builds lazily.
     */
-  def warmEdgeMemos(spark: SparkSession, sfDir: String): Unit = {
+  val EdgeMemoSeed: Seed = Seed("graph edge memos", { (spark, sfDir) =>
     bipartiteEdges(spark, sfDir)
     prBaseEdges(spark, sfDir)
     prBatchEdges(spark, sfDir)
     coSupplyEdges(spark, sfDir)
     ()
-  }
+  })
 
   /** The bipartite part↔supplier edge set projected from lineitem, both
     * directions — so every node has out-degree ≥ 1 and no dangling-mass
@@ -239,7 +240,7 @@ object Graph extends QueryModule {
     * region is the MERGE, which is the operator (same disclosed untimed
     * seed economics as [[ensureCcLabelsSeed]] and every index seed).
     */
-  private[graft] def ensurePrRanksSeed(spark: SparkSession, sfDir: String): String = {
+  private def ensurePrRanksSeed(spark: SparkSession, sfDir: String): String = {
     // "sparse-" prefix: versions the seed content rule (r13 switched the
     // base graph to the qty ≤ CcMaxQty subgraph) independently of ccTag.
     val dir = graft.core.Warehouse.ensureSeed(
@@ -256,6 +257,8 @@ object Graph extends QueryModule {
     }
     new java.io.File(dir, "ranks").getPath
   }
+
+  val PrRanksSeed: Seed = Seed("pagerank base ranks", ensurePrRanksSeed)
 
   /** The delta folds' one seed access ([[prMergeBatch]],
     * [[lpaMergeBatch]]): the seed's `node` plus `cols` (source → alias)
@@ -652,13 +655,15 @@ object Graph extends QueryModule {
     * untimed seed economics as every index seed. The incremental entry's
     * timed region is the MERGE, which is the operator.
     */
-  private[graft] def ensureCcLabelsSeed(spark: SparkSession, sfDir: String): String = {
+  private def ensureCcLabelsSeed(spark: SparkSession, sfDir: String): String = {
     val dir = graft.core.Warehouse.ensureSeed(new java.io.File(CcSeedRoot, ccTag(sfDir))) { d =>
       val (labels, _) = ccOnSparse(spark, sfDir)
       labels.write.mode("overwrite").parquet(new java.io.File(d, "labels").getPath)
     }
     new java.io.File(dir, "labels").getPath
   }
+
+  val CcLabelsSeed: Seed = Seed("cc base labels", ensureCcLabelsSeed)
 
   /** Incremental component merge: fold a batch of undirected edges
     * (`a`, `b` — endpoints may be previously-unseen nodes) into an
@@ -866,7 +871,7 @@ object Graph extends QueryModule {
     * because a delta fold's round k needs l_{k−1} for its
     * neighbor-label lookups and l_k to decide what actually changed.
     */
-  private[graft] def ensureLpaLabelsSeed(spark: SparkSession, sfDir: String): String = {
+  private def ensureLpaLabelsSeed(spark: SparkSession, sfDir: String): String = {
     val dir = graft.core.Warehouse.ensureSeed(
         new java.io.File(LpaSeedRoot, "sparse-" + ccTag(sfDir))) { d =>
       lpaSeedFrame(lpaRoundLabels(prBaseEdges(spark, sfDir), 3, eager = true))
@@ -874,6 +879,8 @@ object Graph extends QueryModule {
     }
     new java.io.File(dir, "labels").getPath
   }
+
+  val LpaLabelsSeed: Seed = Seed("lpa base labels", ensureLpaLabelsSeed)
 
   /** Zip per-round LPA labels into the (node, l1..lk) seed frame
     * [[lpaMergeBatch]] expects — THE implementation (r15: it used to
@@ -1078,8 +1085,8 @@ object Graph extends QueryModule {
   }
 
   override val defs: Map[String, QueryDef] = Map(
-    "q_graph_label_prop" -> QueryDef(labelProp, Some(lpaOracle)),
-    "q_lpa_incremental" -> QueryDef(lpaIncremental, Some(lpaIncOracle)),
+    "q_graph_label_prop" -> QueryDef(labelProp, Some(lpaOracle), Seq(EdgeMemoSeed)),
+    "q_lpa_incremental" -> QueryDef(lpaIncremental, Some(lpaIncOracle), Seq(EdgeMemoSeed, LpaLabelsSeed)),
     "q_graph_triangles" -> QueryDef(triangles, Some(s"""
       WITH ps AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
@@ -1101,7 +1108,7 @@ object Graph extends QueryModule {
       SELECT n_nodes, n_edges, n_wedges, n_triangles,
              round(CASE WHEN n_wedges > 0 THEN 3.0 * n_triangles / n_wedges
                         ELSE 0.0 END, 6) AS clustering
-      FROM w, ne, tri""")),
+      FROM w, ne, tri"""), Seq(EdgeMemoSeed)),
     "q_graph_cc_incremental" -> QueryDef(ccIncremental, Some(s"""
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
@@ -1119,7 +1126,7 @@ object Graph extends QueryModule {
       sizes AS (SELECT lbl, count(*) AS component_size FROM comp GROUP BY lbl)
       SELECT component_size, count(*) AS n_components,
              sum(lbl)::DECIMAL(38,0) AS sum_min_label
-      FROM sizes GROUP BY component_size ORDER BY component_size""")),
+      FROM sizes GROUP BY component_size ORDER BY component_size"""), Seq(CcLabelsSeed)),
     "q_graph_cc" -> QueryDef(ccHistogram, Some(s"""
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
@@ -1137,7 +1144,7 @@ object Graph extends QueryModule {
       sizes AS (SELECT lbl, count(*) AS component_size FROM comp GROUP BY lbl)
       SELECT component_size, count(*) AS n_components,
              sum(lbl)::DECIMAL(38,0) AS sum_min_label
-      FROM sizes GROUP BY component_size ORDER BY component_size""")),
+      FROM sizes GROUP BY component_size ORDER BY component_size"""), Seq(EdgeMemoSeed)),
     "q_graph_bfs" -> QueryDef(bfsLevels, Some(s"""
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
@@ -1158,7 +1165,7 @@ object Graph extends QueryModule {
       SELECT dist, count(*) AS n_nodes,
              count(*) FILTER (node >= $SuppBase)::BIGINT AS n_suppliers,
              sum(node)::DECIMAL(38,0) AS sum_node_id
-      FROM lv GROUP BY dist ORDER BY dist""")),
+      FROM lv GROUP BY dist ORDER BY dist"""), Seq(EdgeMemoSeed)),
     "q_pagerank_incremental" -> QueryDef(pagerankIncremental, Some(s"""
       WITH bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
@@ -1197,7 +1204,7 @@ object Graph extends QueryModule {
              round(r, 6) AS norm_rank
       FROM r3
       ORDER BY norm_rank DESC, node_type, node_id
-      LIMIT 100""")),
+      LIMIT 100"""), Seq(EdgeMemoSeed, PrRanksSeed)),
     "q_pagerank" -> QueryDef(pagerank, Some(s"""
       WITH bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
@@ -1238,5 +1245,5 @@ object Graph extends QueryModule {
              round(r * (SELECT n FROM nn), 6) AS norm_rank
       FROM r3
       ORDER BY norm_rank DESC, node_type, node_id
-      LIMIT 100""")))
+      LIMIT 100"""), Seq(EdgeMemoSeed)))
 }

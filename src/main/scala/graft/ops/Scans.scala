@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Seed, Tables}
 
 /** Scans, projections, filters, and row-shaping — generalizing the
   * reference's manual projection (HdfsSink.java:86-97) and DDL filter
@@ -88,7 +88,7 @@ object Scans extends QueryModule {
       FROM events ORDER BY event_id""")),
     "q_jdbc_snapshot" -> QueryDef(jdbcSnapshot, Some("""
       SELECT event_id, user_id, event_type, round(value, 2) AS value, ts
-      FROM events ORDER BY event_id""")))
+      FROM events ORDER BY event_id"""), Seq(Sources.DerbySeed)))
 }
 
 /** Source registry (R9/R15): config-driven source selection. JDBC in
@@ -130,6 +130,12 @@ object Sources {
     }
     ()
   }
+
+  /** The Derby import runs once per fixture and persists under /tmp;
+    * billing that one-time setup to q_jdbc_snapshot's timed run would
+    * misstate the steady-state JDBC scan cost.
+    */
+  val DerbySeed: Seed = Seed("derby import", seedDerby)
 
   /** R15 end to end: seed (once), then a partitioned parallel JDBC read —
     * 8 concurrent range queries over `event_id`, exactly the shape of a

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.cdc.Cdc
-import graft.core.{BoundedStream, QueryDef, QueryModule, SessionConf, TempDirs}
+import graft.core.{BoundedStream, QueryDef, QueryModule, Seed, SessionConf, TempDirs}
 
 /** Structured Streaming re-expression of the reference pipeline
   * (HdfsSink.java:34-127) plus the declared windowed-aggregation surface
@@ -86,11 +86,10 @@ object Streaming extends QueryModule {
     * broker that exists BEFORE the pipeline runs; paying to create the
     * entry's own input every run billed input synthesis to the operator.
     * Same disclosed untimed one-time-input economics as q_jdbc_snapshot's
-    * embedded-Derby import (the R15 endpoint stand-in); Bench warms it in
-    * its explicit ensure* section. Seed tag: core.Tables.fixtureTag over
-    * events.
+    * embedded-Derby import (the R15 endpoint stand-in), declared as
+    * [[CanalTopicSeed]]. Seed tag: core.Tables.fixtureTag over events.
     */
-  private[graft] def ensureCanalTopic(spark: SparkSession, sfDir: String): String = {
+  private def ensureCanalTopic(spark: SparkSession, sfDir: String): String = {
     graft.core.Warehouse.ensureSeed(new java.io.File("/tmp/graft_canal_topic",
         graft.core.Tables.fixtureTag("v1", sfDir, "events"))) { dir =>
       graft.core.Tables(spark, sfDir, "events")
@@ -109,6 +108,8 @@ object Streaming extends QueryModule {
         .write.mode("overwrite").text(dir)
     }
   }
+
+  val CanalTopicSeed: Seed = Seed("canal topic", ensureCanalTopic)
 
   /** The reference's EXACT loop on the EXACT envelope (HdfsSink.java:55-125):
     * Canal binlog JSON strings → parse envelope → drop isDdl=true (R2) →
@@ -760,7 +761,7 @@ object Streaming extends QueryModule {
       SELECT strftime(ts, '%Y%m%d') AS dt, count(*) AS n
       FROM events
       WHERE event_type <> 'error'
-      GROUP BY 1 ORDER BY 1""")),
+      GROUP BY 1 ORDER BY 1"""), Seq(CanalTopicSeed)),
     "q_tumbling_batch" -> QueryDef(tumblingBatch, Some(tumblingOracle)),
     "s_tumbling" -> QueryDef(tumblingStream, Some(tumblingOracle)),
     "s_sliding" -> QueryDef(slidingStream, Some("""

@@ -181,6 +181,10 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
           run(dir)
           assert(liveIds(f, dir) == ids,
             s"$name, $op crashed $state: live ids after the next $step differ from the twin's")
+          if (state == "staged" && step == "append") {
+            val debris = new java.io.File(dir).list().filter(_.matches("\\.(staging|tombstone|compact)_batch_.*"))
+            assert(debris.isEmpty, s"$name, $op crashed staged: ${debris.mkString(", ")} left after the next append")
+          }
         }
       }
     }

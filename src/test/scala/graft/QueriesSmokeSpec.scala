@@ -2,12 +2,27 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Warehouse
+
 /** Registry-wide smoke: every registered query runs on sf0.001 and
   * returns rows; every oracle key points at a registered query; the
   * flagship entry produces rows. The value-level correctness gate is the
   * driver's DuckDB compare (scripts/check.py locally).
+  *
+  * Also the seed drift guard: the declared seeds are warmed once before
+  * the sweep, and the sweep may touch no marker-gated seed dir the warm
+  * did not — an undeclared seed would be built inside Bench's timed
+  * region. Touched means counted by `Warehouse.ensureSeed`, hit or miss,
+  * so the guard holds whether or not the seeds already exist on disk.
   */
 class QueriesSmokeSpec extends AnyFunSuite with SparkTest {
+
+  private def touched(from: Map[String, Warehouse.SeedCount],
+      to: Map[String, Warehouse.SeedCount]): Set[String] =
+    to.keySet.filter(dir => from.get(dir) != to.get(dir))
+
+  private var warmed = Set.empty[String]
+  private var sweepFrom = Map.empty[String, Warehouse.SeedCount]
 
   test("oracleSql keys are a subset of queries") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -18,9 +33,21 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTest {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("the declared seeds warm") {
+    val before = Warehouse.seedCounts
+    SparkEntry.seeds.foreach(_.build(spark, sf))
+    sweepFrom = Warehouse.seedCounts
+    warmed = touched(before, sweepFrom)
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name returns rows on sf0.001") {
       assert(fn(spark, sf).count() > 0, s"$name returned 0 rows")
     }
+  }
+
+  test("the registry sweep touched no seed dir the declared seeds did not") {
+    val undeclared = touched(sweepFrom, Warehouse.seedCounts) -- warmed
+    assert(undeclared.isEmpty, s"undeclared seeds: ${undeclared.mkString(", ")}")
   }
 }

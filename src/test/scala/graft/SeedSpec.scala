@@ -43,13 +43,17 @@ class SeedSpec extends AnyFunSuite {
       java.nio.file.Files.write(new java.io.File(d, "data").toPath, "x".getBytes)
       ()
     }
+    def count = Warehouse.seedCounts(dir.getPath)
     assert(seed() == dir.getPath && builds == 1)
+    assert(count == Warehouse.SeedCount(hits = 0, misses = 1))
     assert(seed() == dir.getPath && builds == 1, "a marked seed was rebuilt")
+    assert(count == Warehouse.SeedCount(hits = 1, misses = 1))
     // A crashed build: debris, no marker — the next call starts clean.
     new java.io.File(dir, "_SEEDED").delete()
     java.nio.file.Files.write(new java.io.File(dir, "partial").toPath, "y".getBytes)
     seed()
     assert(builds == 2 && !new java.io.File(dir, "partial").exists())
     assert(new java.io.File(dir, "_SEEDED").exists())
+    assert(count == Warehouse.SeedCount(hits = 1, misses = 2))
   }
 }
