@@ -16,22 +16,23 @@ object Exchanges {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     // Session conf lives in core.Harness (one certified base for all
-    // mains). Exchanges' deltas: AQE off (static exchanges must stay
-    // visible), no streaming state store / codegen sizing (plan
-    // inspection over a handful of queries).
-    val spark = graft.core.Harness.session("32",
-      certifiedStreaming = false, codegenCache = None, staticPlans = true)
+    // mains); Exchanges adds no delta.
+    val spark = graft.core.Harness.session("32")
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.queryExecution.toRdd.count()
-      def walk(p: SparkPlan): Seq[SparkPlan] =
-        p +: (p.children ++ p.subqueries).flatMap(walk)
-      val exs = walk(df.queryExecution.executedPlan)
-        .collect { case e: ShuffleExchangeExec => e }
-      println(s"[exchanges] $name: ${exs.size} shuffles")
-      exs.foreach { e =>
-        val mb = e.metrics.get("dataSize").map(_.value / 1e6).getOrElse(-1.0)
-        println(f"[exchanges]   $mb%.2f MB  ${e.outputPartitioning}")
+      // AQE off per entry (as PlanGolden.fingerprint scopes it): the
+      // static plan's exchanges must stay visible and un-coalesced.
+      graft.core.SessionConf.scoped(spark, "spark.sql.adaptive.enabled", "false") {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.queryExecution.toRdd.count()
+        def walk(p: SparkPlan): Seq[SparkPlan] =
+          p +: (p.children ++ p.subqueries).flatMap(walk)
+        val exs = walk(df.queryExecution.executedPlan)
+          .collect { case e: ShuffleExchangeExec => e }
+        println(s"[exchanges] $name: ${exs.size} shuffles")
+        exs.foreach { e =>
+          val mb = e.metrics.get("dataSize").map(_.value / 1e6).getOrElse(-1.0)
+          println(f"[exchanges]   $mb%.2f MB  ${e.outputPartitioning}")
+        }
       }
     }
     spark.stop()

@@ -7,10 +7,8 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args(1).split(",").toSeq else Seq("q_join_full_merge")
     // Session conf lives in core.Harness (one certified base for all
-    // mains). Explain's deltas: 8 cores (plan inspection, not timing),
-    // no streaming state store / codegen sizing.
-    val spark = graft.core.Harness.session("8",
-      certifiedStreaming = false, codegenCache = None)
+    // mains). Explain runs 8 cores (plan inspection, not timing).
+    val spark = graft.core.Harness.session("8")
     names.foreach { n =>
       println(s"===== $n =====")
       val df = SparkEntry.queries(n)(spark, sfDir)

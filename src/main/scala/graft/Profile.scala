@@ -17,13 +17,9 @@ object Profile {
     // Session conf lives in core.Harness (one certified base for all
     // mains). Profile's deltas: big driver results (streaming entries
     // verify through a memory sink; at 100x an O(input)-output entry
-    // like s_scd2 trips the 1g collect cap), the measurement scratch,
-    // and the DEFAULT codegen cache: Profile times a handful of plans
-    // per run, far under the default 100, so the sweep-sized 2000 is
-    // Bench/Verify's concern, not Profile's.
+    // like s_scd2 trips the 1g collect cap) and the measurement scratch.
     val spark = graft.core.Harness.session("32",
       bigDriverResults = true,
-      codegenCache = None,
       measurementScratch = shm)
     // SPARK_GRAFT_JITPASS=1 replicates Bench's pre-timing state so a
     // first-timed-run cost seen ONLY inside Bench sweeps can be

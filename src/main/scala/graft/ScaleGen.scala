@@ -23,11 +23,9 @@ import org.apache.spark.sql.functions._
 object ScaleGen {
   def main(args: Array[String]): Unit = {
     // Session conf lives in core.Harness (one certified base for all
-    // mains). ScaleGen's deltas: no 4m split cap (it writes replicas;
-    // source-read split width is irrelevant), no streaming state store /
-    // codegen sizing.
-    val spark = graft.core.Harness.session("32",
-      splitSmallFiles = false, certifiedStreaming = false, codegenCache = None)
+    // mains). ScaleGen's delta: no 4m split cap (it writes replicas;
+    // source-read split width is irrelevant).
+    val spark = graft.core.Harness.session("32", splitSmallFiles = false)
     args(0) match {
       case "longdocs" =>
         val (out, nDocs, tokPerDoc) = (args(1), args(2).toLong, args(3).toInt)

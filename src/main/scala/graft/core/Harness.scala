@@ -28,6 +28,21 @@ import org.apache.spark.sql.SparkSession
   *    processes per micro-batch of the CDC sink. Hadoop caches a `FileSystem` per
   *    scheme and user, not per conf, so the first `file:` instance a
   *    JVM builds is the one every later caller gets.
+  *  - `spark.sql.codegen.cache.maxEntries=2000` (static conf, default
+  *    100): the registry compiles ~211 distinct plans, so the default
+  *    cache LRU-evicts across a sweep — the recompile class that forced
+  *    the Bench canary's own re-warm-up at >155 plans. Sweep totals
+  *    measured noise-dominated either way; this is the root-cause fix
+  *    for the eviction class, and how a production deployment running
+  *    this query surface would size the cache.
+  *  - The production state store: the RocksDB provider with changelog
+  *    checkpointing — the recommended production pairing, and what
+  *    keeps the provider's per-micro-batch constant cost flat at small
+  *    state sizes. RocksDB holds O(keys) state off-heap instead of
+  *    degrading the JVM heap (SURVEY §14: 54.4 s vs 117 s on the 100x
+  *    sessionization input). Every main runs it, so whatever a main
+  *    executes — streams included — runs the configuration you'd run
+  *    at scale.
   *  - `spark.sql.files.maxPartitionBytes=4m` unless disabled: the
   *    driver fixtures are single small parquet files; without a small
   *    split cap every scan is ONE task. Production overrides per
@@ -72,31 +87,12 @@ object Harness {
     * @param master `spark.master`.
     * @param partitions the shuffle width.
     * @param splitSmallFiles the 4m fixture split cap.
-    * @param certifiedStreaming production state store: RocksDB provider +
-    *   changelog checkpointing — the recommended production pairing, and
-    *   what keeps the provider's per-micro-batch constant cost flat at
-    *   small state sizes. RocksDB holds O(keys) state off-heap instead
-    *   of degrading the JVM heap (SURVEY §14: 54.4 s vs 117 s on the
-    *   100x sessionization input). Correctness (Verify, the specs) and
-    *   measurement (Bench/Profile) both run the configuration you'd run
-    *   at scale. Off for plan-inspection mains that never execute
-    *   streams (Exchanges, Explain, ScaleGen).
-    * @param codegenCache `spark.sql.codegen.cache.maxEntries` (static
-    *   conf, default 100): the registry compiles ~211 distinct plans, so
-    *   the default cache LRU-evicts across a sweep — the recompile class
-    *   that forced the Bench canary's own re-warm-up at >155 plans.
-    *   Sweep totals measured noise-dominated either way; this is the
-    *   root-cause fix for the eviction class, and how a production
-    *   deployment running this query surface would size the cache.
-    *   None = Spark default, for mains that touch a handful of plans.
     * @param bigDriverResults `spark.driver.maxResultSize=8g`: the
     *   streaming entries verify through a MEMORY sink (a driver table)
     *   by harness design; at 100x an O(input)-output entry like s_scd2
     *   emits ~10M rows, tripping the default 1g collect cap. A
     *   local-harness setting (128 GiB driver) — production sinks are
     *   files, not driver memory. Profile only.
-    * @param staticPlans AQE OFF, so the static plan's exchanges stay
-    *   visible and un-coalesced (Exchanges' semantics).
     * @param measurementScratch `spark.local.dir` root — Bench/Profile
     *   ride the RAM-backed measurement scratch (see
     *   TempDirs.enableMeasurementScratch's disclosure).
@@ -105,10 +101,7 @@ object Harness {
       master: String,
       partitions: Int,
       splitSmallFiles: Boolean = true,
-      certifiedStreaming: Boolean = true,
-      codegenCache: Option[String] = Some("2000"),
       bigDriverResults: Boolean = false,
-      staticPlans: Boolean = false,
       measurementScratch: Option[String] = None): Map[String, String] = {
     def when(on: Boolean)(kvs: (String, String)*) = if (on) kvs else Nil
     (Seq(
@@ -117,17 +110,15 @@ object Harness {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
       "spark.hadoop.fs.file.impl" -> classOf[LocalFileSystem].getName,
-      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs].getName) ++
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs].getName,
+      "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") ++
       when(splitSmallFiles)("spark.sql.files.maxPartitionBytes" -> "4m") ++
-      when(staticPlans)("spark.sql.adaptive.enabled" -> "false") ++
       when(bigDriverResults)("spark.driver.maxResultSize" -> "8g") ++
-      codegenCache.map("spark.sql.codegen.cache.maxEntries" -> _) ++
       when(LocalMaster.matches(master))("spark.buffer.pageSize" ->
         s"${pageSizeFor(Runtime.getRuntime.maxMemory) >> 20}m") ++
-      when(certifiedStreaming)(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") ++
       measurementScratch.map(r => "spark.local.dir" -> s"$r/spark_local")).toMap
   }
 
@@ -146,11 +137,8 @@ object Harness {
   def session(
       cpus: String,
       splitSmallFiles: Boolean = true,
-      certifiedStreaming: Boolean = true,
-      codegenCache: Option[String] = Some("2000"),
       bigDriverResults: Boolean = false,
-      staticPlans: Boolean = false,
       measurementScratch: Option[String] = None): SparkSession =
-    start(conf(s"local[$cpus]", cpus.toInt, splitSmallFiles, certifiedStreaming,
-      codegenCache, bigDriverResults, staticPlans, measurementScratch))
+    start(conf(s"local[$cpus]", cpus.toInt, splitSmallFiles, bigDriverResults,
+      measurementScratch))
 }

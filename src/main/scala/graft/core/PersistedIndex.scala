@@ -35,9 +35,13 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
   /** The dirs a complete layout comprises (manifest aside). */
   val subs: Seq[String] = data +: aux
 
-  /** Recover, then drop every publish dot-dir: under the lease, one can
-    * only be a crashed writer's. StagedSwap's `.rebuild*` and the
-    * lease's own files are not publish dirs.
+  /** Recover, then drop every publish dot-dir and every `batch_id=N` dir
+    * the manifest does not list: under the lease, a dot-dir can only be
+    * a crashed writer's, and an unlisted batch dir a crashed publish's
+    * rename or a committed compaction's uncollected input. Like
+    * compaction's own GC, this gives a reader still on an older
+    * manifest no grace. StagedSwap's `.rebuild*` and the lease's own
+    * files are not publish dirs.
     */
   private def mutate[T](dir: String, op: String)(f: => T): T =
     WriterLease.withLease(dir, s"$name $op") {
@@ -45,8 +49,18 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
       Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .filter(d => d.isDirectory && PublishKinds.exists(k => d.getName.startsWith(s".${k}_batch_")))
         .foreach(Warehouse.deleteRecursively)
+      val m = readManifest(dir)
+      for ((root, live) <- Seq(data -> m.batches, "tombstones" -> m.tombstones);
+           id <- batchIds(new java.io.File(dir, root)) if !live.contains(id))
+        Warehouse.deleteRecursively(new java.io.File(new java.io.File(dir, root), s"batch_id=$id"))
       f
     }
+
+  /** The ids of the `batch_id=N` dirs under `root`. */
+  private def batchIds(root: java.io.File): Seq[Long] =
+    Option(root.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+      .map(_.getName.stripPrefix("batch_id=").toLong)
 
   /** Stage `write(path)` as the next `batch_id=N` under `<dir>/<root>`;
     * returns N and what `write` returned. The caller commits.
@@ -55,10 +69,7 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
       write: String => T): (Long, T) = {
     val r = new java.io.File(dir, root)
     r.mkdirs()
-    val onDisk = Option(r.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong)
-    val id = (onDisk :+ 0L).max + 1
+    val id = (batchIds(r) :+ 0L).max + 1
     val staging = new java.io.File(dir, s".${kind}_batch_$id")
     val out = write(staging.getPath)
     java.nio.file.Files.move(staging.toPath,
@@ -109,8 +120,8 @@ final case class PersistedIndex(name: String, data: String, idCol: String,
   /** Merge the committed batches into one, dropping tombstoned rows:
     * `stage(rows, path, m)` writes `rows` (batch_id dropped) under
     * `path` and returns the manifest to commit. The old dirs are GC'd
-    * after the commit — only ids committed at start, so an in-flight
-    * append's renamed-but-uncommitted dir survives as an orphan.
+    * after the commit — only ids committed at start; a crashed
+    * publish's orphan goes in the next mutation's sweep.
     * No-op on a single batch with no tombstones.
     */
   def compact(spark: SparkSession, dir: String)(

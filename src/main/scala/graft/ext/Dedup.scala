@@ -506,17 +506,22 @@ object Dedup extends QueryModule {
     * MinHash banding), so rows-only here; DedupSpec pins equivalence
     * against a union-find ground truth over the emitted pair set.
     *
-    * Staging (the same trick as StagedDedup, applied to components):
-    * label propagation runs only on the REPRESENTATIVE graph — one node
+    * Staging (the same trick as StagedDedup, applied to components): the
+    * components are labeled only on the REPRESENTATIVE graph — one node
     * per distinct content, edges = verified rep pairs — and members
     * inherit their representative's cluster through the group table.
     * Within-group pairs never materialize: an exact-copy clique is BY
     * CONSTRUCTION one component, and rep = min(group) makes the
     * component's min rep id equal the min member id, so the inherited
-    * cluster_id is identical to propagating over the full pair graph.
+    * cluster_id is identical to labeling the full pair graph.
     * (The first version propagated over all member pairs; at 20x copy
     * factor that is ~1M clique edges for zero information — measured
     * 139 s vs a few seconds staged.)
+    *
+    * The labeling is [[graft.ops.Graph.ccOn]], the one connected-
+    * components kernel: pointer-jumping min-label rounds to the exact
+    * fixpoint, failing loudly past 64 rounds rather than emitting a
+    * half-propagated labeling.
     */
   private[graft] def dedupClusterGraph(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
@@ -527,54 +532,20 @@ object Dedup extends QueryModule {
     // graph reachability, which DuckDB re-derives with a recursive CTE
     // (min reachable label per node — the same fixpoint the distributed
     // propagation converges to) and hash-matches, member expansion and
-    // all. The propagation below consumes the READ-BACK tap, so the
+    // all. The labeling below consumes the READ-BACK tap, so the
     // emitted clusters provably derive from the rows the oracle reads.
     val repPairs = OracleTap(spark, "cluster_graph_edges",
       verifiedRepPairs(reps).select(col("doc_a"), col("doc_b")))
-    val repClusters = clusterByLabelPropagation(
-      groups.select(col("rep").as("doc_id")),
-      repPairs.select(col("doc_a"), col("doc_b")))
-    groups.select(col("rep").as("doc_id"), explode(col("ids")).as("member"))
-      .join(repClusters, "doc_id")
-      .select(col("member").as("doc_id"), col("cluster_id"))
-      .orderBy("doc_id")
-  }
-
-  /** Min-label propagation over an undirected edge list; returns
-    * (doc_id, cluster_id) for every node (singletons cluster to self).
-    * Converges in diameter rounds; near-dup components are small cliques
-    * so this is 1-3 in practice. A component with diameter > MaxRounds
-    * FAILS LOUDLY rather than silently emitting a half-propagated
-    * labeling (two members of one component with different cluster_ids).
-    */
-  private val MaxRounds = 30
-
-  private[graft] def clusterByLabelPropagation(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = nodes.select(col("doc_id").as("node"), col("doc_id").as("label")).persist()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < MaxRounds) {
-      val nbrMin = edges.join(labels, edges("src") === labels("node"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
-      val next = labels.join(nbrMin, labels("node") === nbrMin("dst"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .persist()
-      changed = next.alias("n").join(labels.alias("p"), "node")
-        .filter(col("n.label") < col("p.label")).count()
-      labels.unpersist()
-      labels = next
-      round += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"label propagation did not converge in $MaxRounds rounds " +
-          s"($changed labels still improving) — component diameter exceeds the bound")
-    edges.unpersist()
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    // ccOn labels the src side of a symmetric edge list. One self-edge
+    // per representative puts a rep with no verified pair in round 0
+    // too, and a self-edge never lowers a min label.
+    val edges = repPairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(repPairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .union(groups.select(col("rep").as("src"), col("rep").as("dst")))
+    val (repClusters, _) = graft.ops.Graph.ccOn(edges)
+    groups.select(col("rep").as("node"), explode(col("ids")).as("member"))
+      .join(repClusters, "node")
+      .select(col("member").as("doc_id"), col("lbl").as("cluster_id"))
       .orderBy("doc_id")
   }
 

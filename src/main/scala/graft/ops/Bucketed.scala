@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Seed, Tables}
+import graft.core.{QueryDef, QueryModule, Seed, Tables, Warehouse}
 
 /** Bucketed co-located join — the zero-shuffle join layout for repeated
   * large-fact joins at scale: both sides are written `bucketBy` the join
@@ -22,44 +22,49 @@ object Bucketed extends QueryModule {
   /** Per-fixture bucketed table name (core.Tables.fixtureTag over the
     * source table, `-` mapped to `_` to stay an identifier), so a
     * regenerated fixture at the same path never reuses stale buckets.
+    * Tag version v2: a v1 seed dir keeps its DDL in the marker and has
+    * no [[SchemaFile]], so it must not be re-attached.
     */
   private[graft] def tableName(sfDir: String, tbl: String): String =
-    s"${tbl}_bkt_" + Tables.fixtureTag("v1", sfDir, tbl).replace('-', '_')
+    s"${tbl}_bkt_" + Tables.fixtureTag("v2", sfDir, tbl).replace('-', '_')
+
+  /** The seed-time schema DDL, inside the seed dir. The `_` prefix keeps
+    * it out of the table's file listing.
+    */
+  private val SchemaFile = "_schema.ddl"
 
   /** Make `table` available as a bucketed table, paying the bucketed WRITE
-    * only on the first run per fixture per machine (marker-gated, same
-    * economics as the Derby seed in Scans): the files live under a
-    * persistent seed dir, and a later JVM — whose in-memory catalog is
-    * empty even though the files survived — re-attaches them with a
-    * metadata-only `CREATE TABLE ... CLUSTERED BY ... LOCATION` (bucket
-    * ids are carried in the file names, so no data moves). This is
-    * exactly a real bucketed fact table's cost model: one-time layout
-    * write, co-located reads for every query after.
+    * only on the first run per fixture per machine (a `Warehouse.ensureSeed`
+    * seed dir, same economics as the Derby seed in Scans): the files live
+    * under a persistent seed dir, and a later JVM — whose in-memory
+    * catalog is empty even though the files survived — re-attaches them
+    * with a metadata-only `CREATE TABLE ... CLUSTERED BY ... LOCATION`
+    * (bucket ids are carried in the file names, so no data moves). This
+    * is exactly a real bucketed fact table's cost model: one-time layout
+    * write, co-located reads for every query after. The seed runs before
+    * the catalog check, so every call counts a hit or a miss.
     */
   private def ensureBucketed(spark: SparkSession, table: String, key: String,
       src: => DataFrame): Unit = {
-    if (spark.catalog.tableExists(table)) return
-    val dir = new java.io.File(BktRoot, table)
-    val marker = new java.io.File(dir, "_SEEDED")
-    if (marker.exists()) {
-      // The marker carries the schema DDL from seed time, so the attach is
-      // two catalog calls and zero file reads (a footer read here cost
-      // ~0.8 s of the fresh-JVM path).
-      val ddl = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
+    val dir = Warehouse.ensureSeed(new java.io.File(BktRoot, table)) { d =>
+      val df = src
+      df.write.bucketBy(Buckets, key).sortBy(key)
+        .option("path", d)
+        .mode("overwrite").saveAsTable(table)
+      java.nio.file.Files.write(new java.io.File(d, SchemaFile).toPath,
+        df.schema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      ()
+    }
+    if (!spark.catalog.tableExists(table)) {
+      // The seed carries the schema DDL, so the attach is two catalog
+      // calls and zero file reads (a footer read here cost ~0.8 s of the
+      // fresh-JVM path).
+      val ddl = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(dir, SchemaFile).toPath), java.nio.charset.StandardCharsets.UTF_8)
       spark.sql(
         s"""CREATE TABLE `$table` ($ddl) USING parquet
            |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $Buckets BUCKETS
-           |LOCATION '${dir.getPath}'""".stripMargin)
-      ()
-    } else {
-      graft.core.Warehouse.deleteRecursively(dir)
-      val df = src
-      df.write.bucketBy(Buckets, key).sortBy(key)
-        .option("path", dir.getPath)
-        .mode("overwrite").saveAsTable(table)
-      java.nio.file.Files.write(marker.toPath,
-        df.schema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+           |LOCATION '$dir'""".stripMargin)
       ()
     }
   }

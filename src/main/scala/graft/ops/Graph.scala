@@ -922,19 +922,6 @@ object Graph extends QueryModule {
     val baseEdges = baseEdges0.persist()
     val batch = batch0.persist()
     val seed = seed0.persist()
-    // Parsed ONCE per batch with a validated boolean (ADVICE r16 #4):
-    // the raw .toBoolean it replaces threw a bare IllegalArgumentException
-    // from inside every merge round on a value like "1" or "yes", and
-    // re-read the conf once per round.
-    val broadcastFrontierFlag = {
-      val raw = seed0.sparkSession.conf.get("spark.graft.lpa.broadcastFrontier", "true")
-      raw.trim.toLowerCase match {
-        case "true"  => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.lpa.broadcastFrontier must be 'true' or 'false', got '$other'")
-      }
-    }
     val unionEdges = baseEdges.unionByName(batch)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("dst").orderBy(col("c").desc, col("lbl"))
@@ -962,20 +949,13 @@ object Graph extends QueryModule {
       // srcLbl is frontier-neighborhood-sized by the A_k contract:
       // broadcast it STRUCTURALLY so the vote join can never degrade to
       // a sort-merge that shuffles the edge side on a bad size estimate.
-      // HARD BOUND (ADVICE r15 #4): the structural hint removes the
-      // planner's shuffled-join fallback, so the frontier NEIGHBORHOOD
-      // (not just the batch) must fit the driver/broadcast limit — a
-      // hub inside Δ fans A_{k+1} out to its full adjacency, and a
-      // hub-dense batch that exceeds ~8GB/driver memory now fails fast
-      // (broadcast OOM) instead of degrading to a slow edge-shuffling
-      // SMJ. Deployments whose delta batches can touch such hubs set
-      // spark.graft.lpa.broadcastFrontier=false to restore the
-      // planner's estimate-based choice (slow-but-completing), or route
-      // the batch through the from-scratch labeling instead.
-      val srcLblSide =
-        if (broadcastFrontierFlag) broadcast(srcLbl)
-        else srcLbl
-      touched.join(srcLblSide, touched("src") === srcLbl("node"))
+      // HARD BOUND: with no shuffled-join fallback, the frontier
+      // NEIGHBORHOOD (not just the batch) must fit the broadcast limit,
+      // and nothing here checks it — a hub inside Δ fans A_{k+1} out to
+      // its full adjacency, so a hub-dense batch that exceeds driver
+      // memory fails fast (broadcast OOM). Route such a batch through
+      // the from-scratch labeling instead.
+      touched.join(broadcast(srcLbl), touched("src") === srcLbl("node"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)

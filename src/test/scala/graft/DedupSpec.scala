@@ -194,16 +194,6 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       "one stats row per document, including span-free docs")
   }
 
-  test("label propagation handles a chain (diameter > 1)") {
-    import spark.implicits._
-    // 5-4, 4-3, 3-2, 2-1: one chain component; min label 1 must reach 5.
-    val nodes = (1L to 6L).toDF("doc_id")
-    val pairs = Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L)).toDF("doc_a", "doc_b")
-    val got = graft.ext.Dedup.clusterByLabelPropagation(nodes, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 6L))
-  }
-
   // ---- Persisted incremental MinHash index ------------------------------
 
   /** 50 distinct words per doc, disjoint across seeds: word-set Jaccard
@@ -460,33 +450,5 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       .parquet(new java.io.File(dir, "postings").getPath)
       .select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(!remaining.contains(3L), "tombstoned doc's postings survived compaction")
-  }
-
-  test("minhashIndexCompact GC spares a renamed-but-uncommitted batch directory") {
-    import spark.implicits._
-    // ADVICE r9: GC used to delete every on-disk batch dir; an in-flight
-    // append that renamed its staging dir but hadn't committed the
-    // manifest would be destroyed. GC now touches only the ids that were
-    // committed at compact start. Both document-postings families.
-    val base = (0L until 10L).map(i => (i, docText(i.toInt)))
-    val ingest = (200L until 205L).map(i => (i, docText(i.toInt)))
-    Seq(graft.ext.NearDup.MinhashIndex, graft.ext.NearDup.PhashIndex).foreach { ix =>
-      val dir = graft.core.TempDirs.create(s"graft_${ix.store.name}_gcspare")
-      ix.write(dir, base.toDF("doc_id", "text"))
-      ix.append(spark, dir, ingest.toDF("doc_id", "text"))
-      // Simulate the in-flight appender: batch dir renamed into place,
-      // manifest not yet swapped (ids 0,1 committed; 2 in flight).
-      val inFlight = graft.core.PersistedIndex.readManifest(dir).batches
-      ix.append(spark, dir, Seq((400L, docText(400))).toDF("doc_id", "text"))
-      graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(inFlight)) // roll back the commit
-      ix.compact(spark, dir)
-      val dirs = Option(new java.io.File(dir, "postings").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName).sorted
-      // The compacted batch plus the spared in-flight dir — nothing else.
-      assert(dirs.length == 2 && dirs.contains("batch_id=2"),
-        s"${ix.store.name}: in-flight batch dir was GC'd (or old dirs leaked): ${dirs.mkString(",")}")
-    }
   }
 }

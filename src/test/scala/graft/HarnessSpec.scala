@@ -36,15 +36,8 @@ class HarnessSpec extends AnyFunSuite with SparkTest {
     val base = Harness.conf("local[2]", 2)
     assert(Harness.conf("local[2]", 2, splitSmallFiles = false) ==
       base - "spark.sql.files.maxPartitionBytes")
-    assert(Harness.conf("local[2]", 2, certifiedStreaming = false) ==
-      base - "spark.sql.streaming.stateStore.providerClass" -
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    assert(Harness.conf("local[2]", 2, codegenCache = None) ==
-      base - "spark.sql.codegen.cache.maxEntries")
     assert(Harness.conf("local[2]", 2, bigDriverResults = true) ==
       base + ("spark.driver.maxResultSize" -> "8g"))
-    assert(Harness.conf("local[2]", 2, staticPlans = true) ==
-      base + ("spark.sql.adaptive.enabled" -> "false"))
     assert(Harness.conf("local[2]", 2, measurementScratch = Some("/dev/shm/x")) ==
       base + ("spark.local.dir" -> "/dev/shm/x/spark_local"))
   }

@@ -181,6 +181,12 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
           run(dir)
           assert(liveIds(f, dir) == ids,
             s"$name, $op crashed $state: live ids after the next $step differ from the twin's")
+          // No orphan outlives the next mutation: the batch dirs on disk
+          // are exactly the manifest's.
+          val m = PersistedIndex.readManifest(dir)
+          for ((root, listed) <- Seq(f.store.data -> m.batches, "tombstones" -> m.tombstones))
+            assert(batchDirs(new java.io.File(dir, root)) == listed.map(id => s"batch_id=$id").toSet,
+              s"$name, $op crashed $state: $root dirs on disk after the next $step differ from the manifest's $listed")
           if (state == "staged" && step == "append") {
             val debris = new java.io.File(dir).list().filter(_.matches("\\.(staging|tombstone|compact)_batch_.*"))
             assert(debris.isEmpty, s"$name, $op crashed staged: ${debris.mkString(", ")} left after the next append")

@@ -713,31 +713,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(topIds().contains(100000L), "re-added id should be visible after compaction")
   }
 
-  test("ivfIndexCompact GC spares a renamed-but-uncommitted batch directory") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // ADVICE r9: GC used to delete every on-disk batch dir, including an
-    // in-flight append's renamed-but-uncommitted one. GC now touches only
-    // the ids committed at compact start.
-    val df = corpus.toDF("vec_id", "embedding")
-    val dir = graft.core.TempDirs.create("graft_ivf_gcspare")
-    Similarity.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 1000))
-    Similarity.ivfIndexAppend(spark, dir,
-      df.filter(col("vec_id") >= 1000 && col("vec_id") < 1500))
-    // Simulate the in-flight appender: dir renamed, commit rolled back.
-    val manifestPath = new java.io.File(dir, "manifest.json").toPath
-    val preAppend = java.nio.file.Files.readAllBytes(manifestPath)
-    Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 1500))
-    java.nio.file.Files.write(manifestPath, preAppend)
-    Similarity.ivfIndexCompact(spark, dir)
-    val dirs = Option(new java.io.File(dir, "postings").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName).sorted
-    assert(dirs.length == 2 && dirs.contains("batch_id=2"),
-      s"in-flight batch dir was GC'd (or old dirs leaked): ${dirs.mkString(",")}")
-  }
-
   test("quantizer-drift sentinel: skewed appends trip rebuild_needed; a rebuild clears it") {
     import spark.implicits._
     val a = corpus.toDF("vec_id", "embedding")
