@@ -3,6 +3,9 @@
 parquet in OUTDIR, run the matching oracle SQL from oracle_sql.json in
 DuckDB over SFDIR's tables and diff (schema, row count, values).
 
+An output dir that should be there and is not fails: every named query
+when names are given, else every query that has an oracle.
+
 Usage: check.py OUTDIR SFDIR [query ...]
 """
 import json, sys, glob, os
@@ -36,12 +39,12 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
 fails = []
-for name in sorted(os.listdir(outdir)):
+written = {n for n in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, n))}
+for name in sorted((only or set(oracles)) - written):
+    print(f"{name:24s} MISSING: no output dir")
+    fails.append(name)
+for name in sorted(written & only if only else written):
     d = os.path.join(outdir, name)
-    if not os.path.isdir(d):
-        continue
-    if only and name not in only:
-        continue
     got = con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
     if name not in oracles:
         print(f"{name:24s} rows-only: {len(got)} rows")

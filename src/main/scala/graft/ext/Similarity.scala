@@ -548,12 +548,17 @@ object Similarity extends QueryModule {
       .orderBy(col("cos_sim").desc, col("vec_a"), col("vec_b"))
       .limit(20)
 
-  /** Corpus size per fixture dir, counted once per JVM: the count only
+  /** Corpus size per fixture, counted once per JVM: the count only
     * sizes the LSH signature (index metadata, stable per fixture), so
     * re-running the query — the bench runs each entry 5 times — should
-    * not re-scan the corpus to relearn the same number.
+    * not re-scan the corpus to relearn the same number. Keyed by the
+    * fixture tag, so a fixture regenerated in place is counted afresh.
     */
   private val corpusN = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** `e`'s row count, memoized per fixture tag of `sfDir`'s embeddings. */
+  private[graft] def corpusSize(e: DataFrame, sfDir: String): Long =
+    corpusN.computeIfAbsent(ivfTag(sfDir), _ => e.count()).longValue()
 
   private def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
     // Report the globally top-20 most similar candidate pairs (the
@@ -562,7 +567,7 @@ object Similarity extends QueryModule {
     // Recall vs brute-force ground truth is pinned in SimilaritySpec on a
     // planted-near-duplicate corpus.
     val e = Tables(spark, sfDir, "embeddings")
-    val n = corpusN.computeIfAbsent(sfDir, _ => e.count()).longValue()
+    val n = corpusSize(e, sfDir)
     // Partial-oracle tap: the deduplicated candidate pairs with their
     // verified cosine. Only the seeded band generation stays outside;
     // DuckDB recomputes every tapped pair's cosine from the embeddings
@@ -1637,30 +1642,6 @@ object Similarity extends QueryModule {
   private def vecOf(e: DataFrame, id: Long): Array[Float] =
     e.filter(col("vec_id") === id).head().getSeq[Float](e.columns.indexOf("embedding")).toArray
 
-  private def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    // Probe with the anchor vector (vec 0), like q_similarity_topk but
-    // scanning only the probed cells. Recall is pinned in SimilaritySpec
-    // on the planted corpus.
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0)), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10),
-      nprobe = 4, tap = Some("ann_ivf_scored"))
-  }
-
-  /** Filtered ANN — a metadata predicate (label = v) composed with vector
-    * top-k, the retrieval shape every filtered-RAG pipeline runs, with
-    * the cost-based cutover of [[ivfQuery]]. label 3 ≈ 10% selectivity
-    * on the fixtures: sf0.01 lands on the selective branch (m ≈ 59 ≤
-    * 80), sf0.1+ on the widened probe — the driver's correctness gate
-    * certifies the exact branch, the bench + recall spec exercise the
-    * probe branch.
-    */
-  private def annFiltered(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val corpus = e.filter(col("vec_id") =!= 0)
-    ivfQuery(Ivf.Frame(corpus), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10), nprobe = 4,
-      filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_scored"))
-  }
-
   // ---- Persisted IVF index: build once, probe many ---------------------
 
   private val IvfRoot = "/tmp/graft_ivf"
@@ -2123,78 +2104,6 @@ object Similarity extends QueryModule {
     ivfProbe(10)(r, tap)
   }
 
-  /** ANN probe against the PERSISTED index: nearest-cell choice over the
-    * collected centroid table (bounded: C×Dim floats, ~8 MB at n=1e9),
-    * then a partition-pruned postings scan (PartitionFilters on cell_id,
-    * pinned in PlanSpec) + in-cell cosine top-k. Output is row-identical
-    * to the in-memory q_ann_ivf: the persisted quantizer is trained on
-    * the same anchor-excluded corpus (ensureIvfIndex), so centroids,
-    * probed cells, and in-cell candidates coincide — SimilaritySpec pins
-    * the equivalence, so the persisted layout inherits the planted ≥0.9
-    * recall pin. The anchor's own row is excluded inside the pruned scan
-    * (a filter before the top-k, not a second pass).
-    */
-  private def annIvfProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, tap = Some("ann_ivf_probe_scored"))
-  }
-
-  /** Range (radius) retrieval on the persisted index: everything with
-    * cosine ≥ 0.25 of the anchor within 8 probed cells. The driver
-    * fixture plants no near-twins of vec 0, so the threshold sits in the
-    * upper tail of the random-direction distribution — the result is a
-    * data-dependent handful of rows at every sf, which is exactly the
-    * shape distinguishing range search from top-k.
-    */
-  private def annRange(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.Range(0.25),
-      nprobe = 8, tap = Some("ann_range_scored"))
-  }
-
-  /** Filtered probe against the PERSISTED index — q_ann_filtered's
-    * cost-based strategy at the index layer, where the amortized-build
-    * economics actually hold. The selectivity (m of n) is measured with
-    * one count each against the source table; a production deployment
-    * reads it from table statistics.
-    */
-  private def annFilteredProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    val corpus = e.filter(col("vec_id") =!= 0)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_probe_scored"))
-  }
-
-  private def annRangeBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(e.filter(col("vec_id") < 8)), Ivf.Range(0.25),
-      nprobe = 8, tap = Some("ann_range_batch_scored"))
-  }
-
-  private def annIvfBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    // Query table: the 8 lowest vec_ids stand in for a retrieval batch.
-    val anchors = Tables(spark, sfDir, "embeddings").filter(col("vec_id") < 8)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
-      tap = Some("ann_ivf_batch_scored"))
-  }
-
-  /** Batched + filtered retrieval — the full production shape (a batch
-    * of queries, each under a metadata predicate) in one job.
-    */
-  private def annFilteredBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    val corpus = e.filter(col("vec_id") =!= 0)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(e.filter(col("vec_id") < 8)), Ivf.TopK(5),
-      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), tap = Some("ann_filtered_batch_scored"))
-  }
-
   // ---- IVF-PQ: product-quantized postings ------------------------------
   //
   // The memory/IO story IVF alone does not have. IVF prunes WHICH vectors
@@ -2530,59 +2439,6 @@ object Similarity extends QueryModule {
     */
   private[graft] val RangeIsinCap = 65536
 
-  private def annRangePq(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val anchor = embeddingsStats(spark, sfDir)._2
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, exclude = Some(0L)), Ivf.Range(0.25),
-      nprobe = 8, scorer = Ivf.Adc(), tap = Some("ann_range_pq_scored"))
-  }
-
-  /** Filtered ADC probe — the filtered × ADC corner of the retrieval
-    * matrix, and the shape a production filtered-RAG probe runs at
-    * 100 TB: the selective cutover as for the full-precision filtered
-    * probe, else all three prunes — partition, label predicate, and
-    * column (the candidate scan reads vec_id + code) — then the ADC
-    * shortlist and exact re-rank.
-    */
-  private def annFilteredPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    val corpus = e.filter(col("vec_id") =!= 0)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, filter = Some(Ivf.Label.of(corpus, 3)), scorer = Ivf.Adc(),
-      tap = Some("ann_filtered_pq_scored"))
-  }
-
-  /** q_ann_ivfpq_probe: the persisted twin of q_ann_ivfpq, probing the
-    * same marker-gated index q_ann_ivf_probe uses (one layout serves
-    * both precision modes — full-vector probes column-prune away `code`,
-    * ADC probes column-prune away `embedding`).
-    */
-  private def annIvfPqProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(vecOf(e, 0L), exclude = Some(0L)), Ivf.TopK(10),
-      nprobe = 4, scorer = Ivf.Adc(), tap = Some("ann_ivfpq_probe_scored"))
-  }
-
-  private def annIvfPqBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureIvfIndex(spark, sfDir)
-    val anchors = Tables(spark, sfDir, "embeddings").filter(col("vec_id") < 8)
-    ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
-      scorer = Ivf.Adc(), tap = Some("ann_ivfpq_batch_scored"))
-  }
-
-  private def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    // The PQ twin of q_ann_ivf: same anchor, same coarse quantizer (so
-    // the same cells are probed), but candidates are ADC-scored codes.
-    // With exact re-rank the top-k matches q_ann_ivf whenever the true
-    // neighbors survive ADC's k·refine cut — SimilaritySpec pins planted
-    // recall and the registry-level equivalence on the fixture.
-    val e = Tables(spark, sfDir, "embeddings")
-    ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0)), Ivf.Anchor(vecOf(e, 0L)), Ivf.TopK(10),
-      nprobe = 4, scorer = Ivf.Adc(), tap = Some("ann_ivfpq_scored"))
-  }
-
   // ---- SimHash near-dup over documents --------------------------------
 
   private val SimhashMaxHamming = 6
@@ -2729,13 +2585,83 @@ object Similarity extends QueryModule {
       WHERE tb.is_batch
       ORDER BY tb.vec_id"""
 
+  /** An IVF probe entry, declared once. The postings are the persisted
+    * [[IvfProbeSeed]] index with vec 0 excluded inside the pruned scan
+    * (`stored`), else an in-memory index over the corpus minus vec 0; the
+    * queries are the `vec_id < 8` table (`batch`), else the vec 0 anchor.
+    * A `label` predicate's selectivity is counted against the corpus minus
+    * vec 0 (a deployment reads it from table statistics). The query, its
+    * tap `<name minus q_>_scored`, the partial oracle and the seed all
+    * derive from these choices.
+    */
+  private def ivfProbeEntry(name: String, stored: Boolean, batch: Boolean, result: Ivf.Result,
+      nprobe: Int, label: Option[Int] = None, scorer: Ivf.Scorer = Ivf.Exact): (String, QueryDef) = {
+    val tap = name.stripPrefix("q_") + "_scored"
+    def probe(spark: SparkSession, sfDir: String): DataFrame = {
+      val e = Tables(spark, sfDir, "embeddings")
+      val corpus = e.filter(col("vec_id") =!= 0)
+      val postings = if (stored) Ivf.Stored(spark, ensureIvfIndex(spark, sfDir)) else Ivf.Frame(corpus)
+      val queries =
+        if (batch) Ivf.Anchors(e.filter(col("vec_id") < 8))
+        else Ivf.Anchor(vecOf(e, 0L), exclude = Option.when(stored)(0L))
+      ivfQuery(postings, queries, result, nprobe, label.map(Ivf.Label.of(corpus, _)), scorer,
+        Some(tap))
+    }
+    name -> QueryDef(probe, Some(annOracle(tap, result, batch, label)),
+      if (stored) Seq(IvfProbeSeed) else Nil)
+  }
+
   private def ivfEntry(s: Scenario): QueryDef = QueryDef(s, Some(annOracle(s.tap, Ivf.TopK(10))))
 
   private def semdedupEntry(s: Scenario): QueryDef = QueryDef(s, Some(semdedupTapOracle(s.tap)))
 
   override val defs: Map[String, QueryDef] = Map(
-    "q_ann_ivf_probe" -> QueryDef(annIvfProbe, Some(annOracle("ann_ivf_probe_scored", Ivf.TopK(10))), Seq(IvfProbeSeed)),
-    "q_ann_range" -> QueryDef(annRange, Some(annOracle("ann_range_scored", Ivf.Range(0.25))), Seq(IvfProbeSeed)),
+    // q_ann_ivf probes like q_similarity_topk but scans only the probed
+    // cells; SimilaritySpec pins its recall on a planted corpus.
+    ivfProbeEntry("q_ann_ivf", stored = false, batch = false, Ivf.TopK(10), nprobe = 4),
+    // The persisted index's quantizer is trained on the same
+    // anchor-excluded corpus (ensureIvfIndex), so centroids, probed cells
+    // and in-cell candidates coincide: the output is row-identical to
+    // q_ann_ivf (SimilaritySpec), and the planted recall pin carries over.
+    ivfProbeEntry("q_ann_ivf_probe", stored = true, batch = false, Ivf.TopK(10), nprobe = 4),
+    ivfProbeEntry("q_ann_ivf_batch", stored = true, batch = true, Ivf.TopK(5), nprobe = 4),
+    // The fixture plants no near-twins of vec 0, so cosine 0.25 sits in
+    // the upper tail of the random-direction distribution: the range
+    // answer is a data-dependent handful of rows at every sf, the shape
+    // that distinguishes range search from top-k.
+    ivfProbeEntry("q_ann_range", stored = true, batch = false, Ivf.Range(0.25), nprobe = 8),
+    ivfProbeEntry("q_ann_range_batch", stored = true, batch = true, Ivf.Range(0.25), nprobe = 8),
+    // label 3 ≈ 10% selectivity on the fixtures: sf0.01 lands on the
+    // selective (exact) branch of ivfQuery's cutover (m ≈ 59 ≤ 80),
+    // sf0.1+ on the widened probe — the sf0.01 oracle compare certifies
+    // the exact branch, the bench and the recall spec the probe branch.
+    ivfProbeEntry("q_ann_filtered", stored = false, batch = false, Ivf.TopK(10), nprobe = 4,
+      label = Some(3)),
+    ivfProbeEntry("q_ann_filtered_probe", stored = true, batch = false, Ivf.TopK(10), nprobe = 4,
+      label = Some(3)),
+    ivfProbeEntry("q_ann_filtered_batch", stored = true, batch = true, Ivf.TopK(5), nprobe = 4,
+      label = Some(3)),
+    // The PQ twins: the same coarse quantizer (so the same cells), but
+    // candidates are ADC-scored codes and the shortlist re-ranked exactly,
+    // so a top-k matches its exact twin whenever the true neighbors
+    // survive ADC's k·refine cut (SimilaritySpec pins planted recall and
+    // the equivalence on the fixture). One persisted layout serves both
+    // precision modes: exact probes column-prune away `code`, ADC probes
+    // `embedding`.
+    ivfProbeEntry("q_ann_ivfpq", stored = false, batch = false, Ivf.TopK(10), nprobe = 4,
+      scorer = Ivf.Adc()),
+    ivfProbeEntry("q_ann_ivfpq_probe", stored = true, batch = false, Ivf.TopK(10), nprobe = 4,
+      scorer = Ivf.Adc()),
+    ivfProbeEntry("q_ann_ivfpq_batch", stored = true, batch = true, Ivf.TopK(5), nprobe = 4,
+      scorer = Ivf.Adc()),
+    ivfProbeEntry("q_ann_range_pq", stored = true, batch = false, Ivf.Range(0.25), nprobe = 8,
+      scorer = Ivf.Adc()),
+    // The filtered × ADC corner, the shape a filtered-RAG probe runs at
+    // 100 TB: the selective cutover as for the exact filtered probe, else
+    // all three prunes (partition, label predicate, and column: the
+    // candidate scan reads vec_id + code), then the shortlist and re-rank.
+    ivfProbeEntry("q_ann_filtered_pq", stored = true, batch = false, Ivf.TopK(10), nprobe = 4,
+      label = Some(3), scorer = Ivf.Adc()),
     // The full drift lifecycle in one entry: a skewed synthetic ingest
     // trips the drift sentinel, the poisoning load is taken down (an
     // O(batch) tombstone publish) — both baked — then the rebuild
@@ -2746,12 +2672,6 @@ object Similarity extends QueryModule {
     // tapped candidates let the oracle re-derive the ranking.
     "q_ann_ivf_rebuild" -> ivfEntry(Scenario(IvfIndex, "ann_ivf_rebuild_scored", Seq(Rebuild),
       ivfRebuiltProbe, batch = ivfPoison, bake = Some(ivfPoisoned))),
-    "q_ann_range_batch" -> QueryDef(annRangeBatch, Some(annOracle("ann_range_batch_scored", Ivf.Range(0.25), batch = true)), Seq(IvfProbeSeed)),
-    "q_ann_range_pq" -> QueryDef(annRangePq, Some(annOracle("ann_range_pq_scored", Ivf.Range(0.25))), Seq(IvfProbeSeed)),
-    "q_ann_ivf_batch" -> QueryDef(annIvfBatch, Some(annOracle("ann_ivf_batch_scored", Ivf.TopK(5), batch = true)), Seq(IvfProbeSeed)),
-    "q_ann_ivfpq" -> QueryDef(annIvfPq, Some(annOracle("ann_ivfpq_scored", Ivf.TopK(10)))),
-    "q_ann_ivfpq_probe" -> QueryDef(annIvfPqProbe, Some(annOracle("ann_ivfpq_probe_scored", Ivf.TopK(10))), Seq(IvfProbeSeed)),
-    "q_ann_ivfpq_batch" -> QueryDef(annIvfPqBatch, Some(annOracle("ann_ivfpq_batch_scored", Ivf.TopK(5), batch = true)), Seq(IvfProbeSeed)),
     "q_hybrid_rank" -> QueryDef(hybridRank, Some("""
       WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
@@ -2982,22 +2902,6 @@ object Similarity extends QueryModule {
                FROM terms GROUP BY vec_a, vec_b)
       SELECT vec_a, vec_b, round(c, 4) + 0 AS cos_sim FROM sims
       ORDER BY round(c, 4) DESC, vec_a, vec_b LIMIT 20""")),
-    "q_ann_ivf" -> QueryDef(annIvf, Some(annOracle("ann_ivf_scored", Ivf.TopK(10)))),
-    // Partial oracle: tapped scored candidates, re-scored independently —
-    // and additionally VERIFIED against the predicate (the join keeps
-    // only label-3 candidates, so an out-of-predicate row the engine let
-    // into its top-k would hash-mismatch, not just re-rank).
-    "q_ann_filtered" -> QueryDef(annFiltered,
-      Some(annOracle("ann_filtered_scored", Ivf.TopK(10), label = Some(3)))),
-    "q_ann_filtered_probe" -> QueryDef(annFilteredProbe,
-      Some(annOracle("ann_filtered_probe_scored", Ivf.TopK(10), label = Some(3))), Seq(IvfProbeSeed)),
-    // Label-verifying oracle like the other filtered taps: DuckDB drops
-    // any candidate whose label fails the predicate before re-scoring,
-    // so a filter that leaked would hash-mismatch.
-    "q_ann_filtered_pq" -> QueryDef(annFilteredPq,
-      Some(annOracle("ann_filtered_pq_scored", Ivf.TopK(10), label = Some(3))), Seq(IvfProbeSeed)),
-    "q_ann_filtered_batch" -> QueryDef(annFilteredBatch,
-      Some(annOracle("ann_filtered_batch_scored", Ivf.TopK(5), batch = true, label = Some(3))), Seq(IvfProbeSeed)),
     // Streaming ingest into the persisted ANN index: the arriving decile
     // streams in, each micro-batch an append keyed on its checkpoint and
     // batchId (a replay is a ledger-gated no-op). The probe's scored

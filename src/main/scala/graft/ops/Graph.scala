@@ -544,8 +544,10 @@ object Graph extends QueryModule {
   private[graft] def ccOn(edges0: DataFrame, maxRounds: Int = 64): (DataFrame, Int) = {
     val edges = edges0.persist()
     // Pointer jump: besides the neighbor propagation, adopt the label OF
-    // the current label (always a valid node — labels are mins over node
-    // ids). Doubles the compression distance per round, so rounds =
+    // the new label, read from the round's input frame `l` (every label
+    // is a round-0 node id, and every node stays in the frame), so the
+    // aggregate is planned once per round, not again as the join's second
+    // side. Doubles the compression distance per round, so rounds =
     // O(log diameter) instead of O(diameter); a fixpoint of the combined
     // operator is pointwise ≤ the plain propagation's, hence still the
     // exact component minimum. The step also carries each node's previous
@@ -558,8 +560,8 @@ object Graph extends QueryModule {
           lit(null).cast(l.schema("lbl").dataType).as("old"))
       val m = l.select(col("node"), col("lbl"), col("lbl").as("old")).unionByName(prop)
         .groupBy("node").agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
-      val m2 = m.select(col("node").as("jnode"), col("lbl").as("jlbl"))
-      m.join(m2, m("lbl") === m2("jnode"))
+      val jump = l.select(col("node").as("jnode"), col("lbl").as("jlbl"))
+      m.join(jump, m("lbl") === jump("jnode"))
         .select(m("node"), least(m("lbl"), col("jlbl")).as("lbl"), m("old"))
     }
     // Materialize a (node, lbl[, old]) frame, counting the rows where

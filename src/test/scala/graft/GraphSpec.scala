@@ -183,10 +183,11 @@ class GraphSpec extends AnyFunSuite with SparkTest {
   test("ccOn: the stop test rides inside each round's job (fewer jobs per round)") {
     import spark.implicits._
     // A 64-node path takes 7 rounds. Each round is one checkpoint job plus
-    // the broadcast and shuffle-map jobs AQE submits for its exchanges: 6
-    // here, 44 jobs in all. A separate label-sum action per round (one
-    // shuffle-map job plus one result job under AQE) made it 8 per round,
-    // 60 in all.
+    // the broadcast and shuffle-map jobs AQE submits for its exchanges:
+    // 37 jobs in all. Planning the round's aggregate twice (a pointer jump
+    // through a second projection of it) makes 44, and a separate
+    // label-sum action per round (one shuffle-map job plus one result job
+    // under AQE) 60; the bound fails both.
     val path = (0L until 63L).map(i => (i, i + 1L))
     val edges = path.flatMap(e => Seq(e, e.swap)).toDF("src", "dst").localCheckpoint(true)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -205,7 +206,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     } finally sc.removeSparkListener(listener)
     assert(labels.select("lbl").distinct().as[Long].collect().toSeq == Seq(0L))
     assert(rounds == 7)
-    assert(jobs.get().toDouble / rounds < 7.0, s"${jobs.get()} jobs over $rounds rounds")
+    assert(jobs.get().toDouble / rounds < 5.5, s"${jobs.get()} jobs over $rounds rounds")
   }
 
   test("id checksums sum node ids from 2^62 exactly, past 2^63") {

@@ -1190,4 +1190,17 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val allNaN = Seq(ScoredId(Double.NaN, 5L), ScoredId(Double.NaN, 2L), ScoredId(Double.NaN, 9L))
     assert(run(allNaN).map(_._2) == Seq(2L, 5L, 9L))
   }
+
+  test("q_ann_lsh's corpus size is counted afresh when the fixture is rewritten in place") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.create("graft_corpus_size")
+    val path = s"$dir/embeddings.parquet"
+    def writeAndCount(n: Int): Long = {
+      (0 until n).map(i => (i.toLong, Array.fill(4)(i.toFloat))).toDF("vec_id", "embedding")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+      Similarity.corpusSize(spark.read.parquet(path), dir)
+    }
+    assert(writeAndCount(3) == 3)
+    assert(writeAndCount(7) == 7)
+  }
 }
