@@ -341,32 +341,40 @@ object Cdc extends QueryModule {
       .select(col("event_id"), col("dt"), col("event_type"), col("user_id"))
       .orderBy("event_id")
 
-  override val defs: Map[String, QueryDef] = Map(
-    "q_join_full_merge" -> QueryDef(fullMerge, Some(s"""
+  /** The oracles' [[latestState]] rank: 1 on each user's latest event. */
+  private val LatestRn =
+    "row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn"
+
+  /** DuckDB twin of [[latestState]] over `events` rows matching `where`. */
+  private def latestOracle(where: String): String =
+    s"""SELECT * FROM (
+          SELECT e.*, $LatestRn
+          FROM events e$where) WHERE rn = 1"""
+
+  /** DuckDB twin of [[fullMerge]], then `where` on the merged rows: the
+    * oracle of q_join_full_merge, q_snapshot_overwrite (the same answer,
+    * served from the overwritten table) and q_merge_apply_deletes.
+    */
+  private def fullMergeOracle(where: String): String = s"""
       WITH snap AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts < TIMESTAMP '$cutoff') WHERE rn = 1),
+        ${latestOracle(s" WHERE ts < TIMESTAMP '$cutoff'")}),
       delta AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts >= TIMESTAMP '$cutoff') WHERE rn = 1)
+        ${latestOracle(s" WHERE ts >= TIMESTAMP '$cutoff'")})
       SELECT COALESCE(t2.user_id, t1.user_id) AS user_id,
              COALESCE(t2.event_id, t1.event_id) AS event_id,
              COALESCE(t2.event_type, t1.event_type) AS event_type,
              round(COALESCE(t2.value, t1.value), 2) AS value,
              COALESCE(t2.ts, t1.ts) AS ts
-      FROM snap t1 FULL OUTER JOIN delta t2 ON t1.user_id = t2.user_id
-      ORDER BY user_id""")),
+      FROM snap t1 FULL OUTER JOIN delta t2 ON t1.user_id = t2.user_id$where
+      ORDER BY user_id"""
+
+  override val defs: Map[String, QueryDef] = Map(
+    "q_join_full_merge" -> QueryDef(fullMerge, Some(fullMergeOracle(""))),
     "q_time_travel" -> QueryDef(timeTravelDiff, Some(s"""
       WITH v2 AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts < TIMESTAMP '$cutoff') WHERE rn = 1),
+        ${latestOracle(s" WHERE ts < TIMESTAMP '$cutoff'")}),
       v3 AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e) WHERE rn = 1)
+        ${latestOracle("")})
       SELECT v3.user_id,
              CASE WHEN v2.user_id IS NULL THEN 'added' ELSE 'updated' END AS change,
              v2.event_id AS event_id_v2, v3.event_id AS event_id_v3,
@@ -381,45 +389,15 @@ object Cdc extends QueryModule {
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
       FROM events
       ORDER BY user_id, valid_from, event_id""")),
-    "q_merge_apply_deletes" -> QueryDef(mergeApplyDeletes, Some(s"""
-      WITH snap AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts < TIMESTAMP '$cutoff') WHERE rn = 1),
-      delta AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts >= TIMESTAMP '$cutoff') WHERE rn = 1)
-      SELECT COALESCE(t2.user_id, t1.user_id) AS user_id,
-             COALESCE(t2.event_id, t1.event_id) AS event_id,
-             COALESCE(t2.event_type, t1.event_type) AS event_type,
-             round(COALESCE(t2.value, t1.value), 2) AS value,
-             COALESCE(t2.ts, t1.ts) AS ts
-      FROM snap t1 FULL OUTER JOIN delta t2 ON t1.user_id = t2.user_id
-      WHERE COALESCE(t2.event_type, t1.event_type) <> 'error'
-      ORDER BY user_id""")),
+    "q_merge_apply_deletes" -> QueryDef(mergeApplyDeletes, Some(fullMergeOracle(
+      "\n      WHERE COALESCE(t2.event_type, t1.event_type) <> 'error'"))),
     // Same relational answer as q_join_full_merge, but served from the
     // OVERWRITTEN managed table (R14) — the oracle is identical on purpose.
-    "q_snapshot_overwrite" -> QueryDef(snapshotOverwrite, Some(s"""
-      WITH snap AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts < TIMESTAMP '$cutoff') WHERE rn = 1),
-      delta AS (
-        SELECT * FROM (
-          SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e WHERE ts >= TIMESTAMP '$cutoff') WHERE rn = 1)
-      SELECT COALESCE(t2.user_id, t1.user_id) AS user_id,
-             COALESCE(t2.event_id, t1.event_id) AS event_id,
-             COALESCE(t2.event_type, t1.event_type) AS event_type,
-             round(COALESCE(t2.value, t1.value), 2) AS value,
-             COALESCE(t2.ts, t1.ts) AS ts
-      FROM snap t1 FULL OUTER JOIN delta t2 ON t1.user_id = t2.user_id
-      ORDER BY user_id""")),
-    "q_latest_state" -> QueryDef(latestStateQuery, Some("""
+    "q_snapshot_overwrite" -> QueryDef(snapshotOverwrite, Some(fullMergeOracle(""))),
+    "q_latest_state" -> QueryDef(latestStateQuery, Some(s"""
       SELECT user_id, event_id, event_type, round(value, 2) AS value, ts
       FROM (
-        SELECT e.*, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        SELECT e.*, $LatestRn
         FROM events e) WHERE rn = 1
       ORDER BY user_id""")),
     "q_cdc_ddl_filter" -> QueryDef(ddlFilterQuery, Some("""

@@ -90,24 +90,9 @@ object CosineSim {
   }
 
   /** Register `cosine_sim(a, b)` for `expr(...)` / `spark.sql(...)`.
-    * Idempotent; falls back to a UDF over materialized arrays only if the
-    * registry surface is unavailable.
+    * Idempotent.
     */
   def register(spark: SparkSession): Unit =
-    try spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-    catch {
-      case _: Throwable =>
-        spark.udf.register("cosine_sim", (a: Array[Float], b: Array[Float]) => {
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var i = 0
-          val n = math.min(a.length, b.length)
-          while (i < n) {
-            val x = a(i).toDouble; val y = b(i).toDouble
-            dot += x * y; na += x * x; nb += y * y
-            i += 1
-          }
-          dot / (math.sqrt(na) * math.sqrt(nb))
-        })
-    }
 }

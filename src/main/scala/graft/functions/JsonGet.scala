@@ -56,19 +56,10 @@ case class JsonGet(left: Expression, right: Expression) extends BinaryExpression
 
 object JsonGet {
 
-  /** Register `json_get(json, key)`; idempotent, UDF fallback. */
+  /** Register `json_get(json, key)`; idempotent. */
   def register(spark: SparkSession): Unit =
-    try spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "json_get", exprs => JsonGet(exprs.head, exprs(1)), "built-in")
-    catch {
-      case _: Throwable =>
-        spark.udf.register("json_get", (j: String, k: String) =>
-          if (j == null || k == null) null
-          else {
-            val r = extract(UTF8String.fromString(j), UTF8String.fromString(k))
-            if (r == null) null else r.toString
-          })
-    }
 
   /** Public + JVM-static (via companion forwarder) for generated code.
     * Malformed escapes surface as NumberFormatException from `unescape`;

@@ -75,19 +75,11 @@ object SimHash64 {
     out
   }
 
-  /** Register `simhash64(str)` so it is usable from `expr(...)` and
-    * `spark.sql(...)`. Idempotent. Prefers the native Catalyst expression
-    * (no UDF serialization boundary, NULL handling from UnaryExpression);
-    * falls back to a Scala UDF over the same hash kernel if the registry
-    * surface is unavailable on some session implementation.
+  /** Register `simhash64(str)` as the native Catalyst expression (no
+    * UDF serialization boundary, NULL handling from UnaryExpression) so
+    * it is usable from `expr(...)` and `spark.sql(...)`. Idempotent.
     */
   def register(spark: SparkSession): Unit =
-    try spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    catch {
-      case _: Throwable =>
-        spark.udf.register("simhash64", (s: String) =>
-          if (s == null) null.asInstanceOf[java.lang.Long]
-          else java.lang.Long.valueOf(hashUtf8(UTF8String.fromString(s))))
-    }
 }

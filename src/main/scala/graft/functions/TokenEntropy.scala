@@ -46,16 +46,10 @@ object TokenEntropy {
 
   private val Space = UTF8String.fromString(" ")
 
-  /** Register `token_entropy(text)`; idempotent, UDF fallback. */
+  /** Register `token_entropy(text)`; idempotent. */
   def register(spark: SparkSession): Unit =
-    try spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "token_entropy", exprs => TokenEntropy(exprs.head), "built-in")
-    catch {
-      case _: Throwable =>
-        spark.udf.register("token_entropy", (s: String) =>
-          if (s == null) null.asInstanceOf[java.lang.Double]
-          else java.lang.Double.valueOf(entropy(UTF8String.fromString(s))))
-    }
 
   /** Public + JVM-static for generated code. */
   def entropy(s: UTF8String): Double = {

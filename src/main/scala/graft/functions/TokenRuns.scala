@@ -39,18 +39,10 @@ case class TokenRuns(child: Expression) extends UnaryExpression {
 
 object TokenRuns {
 
-  /** Register `token_runs(text)`; idempotent, UDF fallback. */
+  /** Register `token_runs(text)`; idempotent. */
   def register(spark: SparkSession): Unit =
-    try spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "token_runs", exprs => TokenRuns(exprs.head), "built-in")
-    catch {
-      case _: Throwable =>
-        // Boxed return type: a `if (null) null else Long` lambda infers
-        // Any, which spark.udf.register rejects at runtime.
-        spark.udf.register("token_runs", (s: String) =>
-          if (s == null) null.asInstanceOf[java.lang.Long]
-          else java.lang.Long.valueOf(count(UTF8String.fromString(s))))
-    }
 
   /** Public + JVM-static for generated code. */
   def count(s: UTF8String): Long = {

@@ -90,18 +90,29 @@ object Graph extends QueryModule {
     ()
   })
 
+  /** The distinct (p = part, s = supplier) pairs of the lineitem rows
+    * `keep` selects (every row when `None`).
+    */
+  private def partSupp(spark: SparkSession, sfDir: String, keep: Option[Column] = None): DataFrame = {
+    val li = Tables(spark, sfDir, "lineitem")
+    keep.fold(li)(k => li.filter(k))
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
+      .distinct()
+  }
+
+  /** (p, s) pairs as the symmetric bipartite edge set: p → SuppBase+s
+    * and back, so every node has out-degree ≥ 1.
+    */
+  private def symmetrize(pairs: DataFrame): DataFrame =
+    pairs.select(col("p").as("src"), (col("s") + lit(SuppBase)).as("dst"))
+      .unionByName(pairs.select((col("s") + lit(SuppBase)).as("src"), col("p").as("dst")))
+
   /** The bipartite part↔supplier edge set projected from lineitem, both
     * directions — so every node has out-degree ≥ 1 and no dangling-mass
     * correction is needed.
     */
   private[graft] def bipartiteEdges(spark: SparkSession, sfDir: String): DataFrame =
-    memoEdges(spark, sfDir, "bipartite") {
-      val bip = Tables(spark, sfDir, "lineitem")
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
-      bip.select(col("p").as("src"), (col("s") + lit(SuppBase)).as("dst"))
-        .unionByName(bip.select((col("s") + lit(SuppBase)).as("src"), col("p").as("dst")))
-    }
+    memoEdges(spark, sfDir, "bipartite")(symmetrize(partSupp(spark, sfDir)))
 
   /** PageRank over the part↔supplier bipartite graph projected from
     * lineitem (both directions, so every node has out-degree ≥ 1 and no
@@ -204,12 +215,7 @@ object Graph extends QueryModule {
     */
   private[graft] def prBaseEdges(spark: SparkSession, sfDir: String): DataFrame =
     memoEdges(spark, sfDir, "sparse") {
-      val bip = Tables(spark, sfDir, "lineitem")
-        .filter(col("l_quantity") <= CcMaxQty)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
-      bip.select(col("p").as("src"), (col("s") + lit(SuppBase)).as("dst"))
-        .unionByName(bip.select((col("s") + lit(SuppBase)).as("src"), col("p").as("dst")))
+      symmetrize(partSupp(spark, sfDir, Some(col("l_quantity") <= CcMaxQty)))
     }
 
   /** The arrival batch (qty = [[PrBatchQty]], every [[PrBatchMod]]th
@@ -220,43 +226,65 @@ object Graph extends QueryModule {
     */
   private[graft] def prBatchEdges(spark: SparkSession, sfDir: String): DataFrame =
     memoEdges(spark, sfDir, "sparse_batch") {
-      val basePairs = Tables(spark, sfDir, "lineitem")
-        .filter(col("l_quantity") <= CcMaxQty)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
-      val pairs = Tables(spark, sfDir, "lineitem")
-        .filter(col("l_quantity") === PrBatchQty && col("l_partkey") % PrBatchMod === 0)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
-        .join(basePairs, Seq("p", "s"), "left_anti")
-      pairs.select(col("p").as("src"), (col("s") + lit(SuppBase)).as("dst"))
-        .unionByName(pairs.select((col("s") + lit(SuppBase)).as("src"), col("p").as("dst")))
+      symmetrize(partSupp(spark, sfDir,
+          Some(col("l_quantity") === PrBatchQty && col("l_partkey") % PrBatchMod === 0))
+        .join(partSupp(spark, sfDir, Some(col("l_quantity") <= CcMaxQty)), Seq("p", "s"),
+          "left_anti"))
     }
 
-  private val PrSeedRoot = "/tmp/graft_pr"
-
-  /** Marker-gated persisted base ranks — (node, outdeg, r1..r3) over the
-    * base graph, computed once per fixture; the incremental entry's timed
-    * region is the MERGE, which is the operator (same disclosed untimed
-    * seed economics as [[ensureCcLabelsSeed]] and every index seed).
+  /** Fixture tag for the persisted graph seeds (cc, pagerank, lpa) —
+    * all derived from lineitem.
     */
-  private def ensurePrRanksSeed(spark: SparkSession, sfDir: String): String = {
-    // "sparse-" prefix: versions the seed content rule (r13 switched the
-    // base graph to the qty ≤ CcMaxQty subgraph) independently of ccTag.
-    val dir = graft.core.Warehouse.ensureSeed(
-        new java.io.File(PrSeedRoot, "sparse-" + ccTag(sfDir))) { d =>
-      val base = prBaseEdges(spark, sfDir)
-      val Seq(r1, r2, r3) = prUnnormRanks(base, 3, eager = true)
-      val deg = base.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-        .select(col("src").as("node"), col("outdeg"))
-      deg
-        .join(r1.select(col("node"), col("r").as("r1")), "node")
-        .join(r2.select(col("node"), col("r").as("r2")), "node")
-        .join(r3.select(col("node"), col("r").as("r3")), "node")
-        .write.mode("overwrite").parquet(new java.io.File(d, "ranks").getPath)
+  private def ccTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "lineitem")
+
+  /** The one marker-gated body of the three graph seeds (pagerank, cc,
+    * lpa): `frame` written once per lineitem fixture to
+    * `<root>/<prefix><ccTag>/<leaf>`, untimed — the incremental entries'
+    * timed region is the MERGE, which is the operator (the same disclosed
+    * seed economics as every index seed). Returns the parquet path. The
+    * "sparse-" prefix of the pagerank and lpa seeds versions their content
+    * rule (r13 switched their base graph to the qty ≤ CcMaxQty subgraph)
+    * independently of ccTag.
+    */
+  private def ensureGraphSeed(root: String, prefix: String, leaf: String, sfDir: String)(
+      frame: => DataFrame): String = {
+    val dir = graft.core.Warehouse.ensureSeed(new java.io.File(root, prefix + ccTag(sfDir))) { d =>
+      frame.write.mode("overwrite").parquet(new java.io.File(d, leaf).getPath)
     }
-    new java.io.File(dir, "ranks").getPath
+    new java.io.File(dir, leaf).getPath
   }
+
+  /** Per-round frames of `value` as (node, <prefix>1..<prefix>k) columns,
+    * the layout of the per-round seeds.
+    */
+  private def roundColumns(frames: Seq[DataFrame], value: String, prefix: String): Seq[DataFrame] =
+    frames.zipWithIndex.map { case (f, i) => f.select(col("node"), col(value).as(s"$prefix${i + 1}")) }
+
+  /** The number of rounds a per-round seed holds: its `<prefix>1..<prefix>k`
+    * columns. The delta folds run exactly that many rounds.
+    */
+  private def seedRounds(seed: DataFrame, prefix: String): Int = {
+    val k = Iterator.from(1).takeWhile(i => seed.columns.contains(s"$prefix$i")).size
+    require(k > 0, s"seed has no ${prefix}1 column: ${seed.columns.mkString(", ")}")
+    k
+  }
+
+  /** The pagerank seed (node, outdeg, r1..r_rounds) over `base` — what
+    * [[prMergeBatch]] folds into; the [[lpaSeedFrame]] twin. Ranks are
+    * computed eagerly (the frame joins every round, see [[prUnnormRanks]]).
+    */
+  private[graft] def prSeedFrame(base: DataFrame, rounds: Int): DataFrame = {
+    val ranks = prUnnormRanks(base, rounds, eager = true)
+    val deg = base.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
+      .select(col("src").as("node"), col("outdeg"))
+    (deg +: roundColumns(ranks, "r", "r")).reduce(_.join(_, "node"))
+  }
+
+  /** Persisted base ranks over the sparse base graph. */
+  private def ensurePrRanksSeed(spark: SparkSession, sfDir: String): String =
+    ensureGraphSeed("/tmp/graft_pr", "sparse-", "ranks", sfDir) {
+      prSeedFrame(prBaseEdges(spark, sfDir), Iters)
+    }
 
   val PrRanksSeed: Seed = Seed("pagerank base ranks", ensurePrRanksSeed)
 
@@ -307,7 +335,8 @@ object Graph extends QueryModule {
     * and S_k = (nodes whose r_{k−1} changed) ∪ (batch sources — their
     * out-degree changed, so every one of their old contributions moved).
     * Nodes outside the push frontier keep their persisted rank bits —
-    * nothing else is touched. For a previously-unseen node the old-side
+    * nothing else is touched. The fold runs one round per `r<k>` column
+    * of the seed. For a previously-unseen node the old-side
     * sum is empty and r_k(v) ≔ the teleport constant, so the same
     * `coalesce(seed, 1−d) + d·Δ` expression covers both cases.
     *
@@ -337,8 +366,9 @@ object Graph extends QueryModule {
     val tSrcs = bdeg.select("node").persist()
     // The batch-sources seed lookup is FIXED across rounds — probe once
     // (one broadcast for the whole merge) and checkpoint the tiny result.
+    val rounds = seedRounds(seed0, "r")
     val tLook = seedLookup(seed, tSrcs,
-      "outdeg" -> "outdeg", "r1" -> "r1", "r2" -> "r2", "r3" -> "r3")
+      ("outdeg" -> "outdeg") +: (1 to rounds).map(k => s"r$k" -> s"r$k"): _*)
       .localCheckpoint(true)
     // Previously-unseen endpoints (batch srcs absent from the seed): they
     // ride every round's changed set so their rank overrides "absent".
@@ -411,10 +441,10 @@ object Graph extends QueryModule {
     // the plan at one round; the frames are batch-frontier-sized. The
     // round actions run sequentially, so the persisted edge/batch caches
     // materialize once at round 1 without an explicit count().
-    val chg1 = pushRound(s1, "r1").localCheckpoint(true)
-    val chg2 = pushRound(srcSet(chg1, "r1"), "r2").localCheckpoint(true)
-    val chg3 = pushRound(srcSet(chg2, "r2"), "r3").localCheckpoint(true)
-    overrideSeed(seed, "r3", chg3.select(col("node"), col("rp").as("r")),
+    val last = (1 to rounds).foldLeft(s1) { (chg, k) =>
+      pushRound(if (k == 1) s1 else srcSet(chg, s"r${k - 1}"), s"r$k").localCheckpoint(true)
+    }
+    overrideSeed(seed, s"r$rounds", last.select(col("node"), col("rp").as("r")),
       baseEdges, batch, tSrcs)
   }
 
@@ -645,25 +675,11 @@ object Graph extends QueryModule {
         idSum(col("lbl")).as("sum_min_label"))
       .orderBy("component_size")
 
-  private val CcSeedRoot = "/tmp/graft_cc"
-
-  /** Fixture tag for the persisted graph seeds (cc, pagerank, lpa) —
-    * all derived from lineitem.
+  /** Persisted base labels: the qty≤[[CcMaxQty]] subgraph's fixpoint
+    * labels.
     */
-  private def ccTag(sfDir: String): String = Tables.fixtureTag("v1", sfDir, "lineitem")
-
-  /** Marker-gated persisted base labels: the qty≤[[CcMaxQty]] subgraph's
-    * fixpoint labels, computed once per fixture — the same disclosed
-    * untimed seed economics as every index seed. The incremental entry's
-    * timed region is the MERGE, which is the operator.
-    */
-  private def ensureCcLabelsSeed(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.core.Warehouse.ensureSeed(new java.io.File(CcSeedRoot, ccTag(sfDir))) { d =>
-      val (labels, _) = ccOnSparse(spark, sfDir)
-      labels.write.mode("overwrite").parquet(new java.io.File(d, "labels").getPath)
-    }
-    new java.io.File(dir, "labels").getPath
-  }
+  private def ensureCcLabelsSeed(spark: SparkSession, sfDir: String): String =
+    ensureGraphSeed("/tmp/graft_cc", "", "labels", sfDir)(ccOnSparse(spark, sfDir)._1)
 
   val CcLabelsSeed: Seed = Seed("cc base labels", ensureCcLabelsSeed)
 
@@ -783,10 +799,7 @@ object Graph extends QueryModule {
     */
   private[graft] def coSupplyEdges(spark: SparkSession, sfDir: String): DataFrame =
     memoEdges(spark, sfDir, "cosupply") {
-      val ps = Tables(spark, sfDir, "lineitem")
-        .filter(col("l_quantity") <= TriMaxQty)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
+      val ps = partSupp(spark, sfDir, Some(col("l_quantity") <= TriMaxQty))
       val a = ps.select(col("p"), col("s").as("u"))
       val b = ps.select(col("p").as("p2"), col("s").as("v"))
       a.join(b, a("p") === b("p2") && col("u") < col("v"))
@@ -863,36 +876,24 @@ object Graph extends QueryModule {
       .select(col("u").as("src"), col("v").as("dst")))
   }
 
-  private val LpaSeedRoot = "/tmp/graft_lpa"
-
-  /** Marker-gated persisted per-round LPA labels (node, l1..l3) over the
-    * sparse base graph — the lpa leg of the incremental-graph seed
-    * family ([[ensurePrRanksSeed]], [[ensureCcLabelsSeed]]): computed
-    * once per fixture, untimed; the incremental entry's timed region is
-    * the MERGE. Round-k labels (not just the fixpoint) are persisted
-    * because a delta fold's round k needs l_{k−1} for its
-    * neighbor-label lookups and l_k to decide what actually changed.
+  /** Persisted per-round LPA labels (node, l1..l_[[LpaRounds]]) over the
+    * sparse base graph. Round-k labels (not just the last) are persisted
+    * because a delta fold's round k needs l_{k−1} for its neighbor-label
+    * lookups and l_k to decide what actually changed.
     */
-  private def ensureLpaLabelsSeed(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.core.Warehouse.ensureSeed(
-        new java.io.File(LpaSeedRoot, "sparse-" + ccTag(sfDir))) { d =>
-      lpaSeedFrame(lpaRoundLabels(prBaseEdges(spark, sfDir), 3, eager = true))
-        .write.mode("overwrite").parquet(new java.io.File(d, "labels").getPath)
+  private def ensureLpaLabelsSeed(spark: SparkSession, sfDir: String): String =
+    ensureGraphSeed("/tmp/graft_lpa", "sparse-", "labels", sfDir) {
+      lpaSeedFrame(prBaseEdges(spark, sfDir), LpaRounds)
     }
-    new java.io.File(dir, "labels").getPath
-  }
 
   val LpaLabelsSeed: Seed = Seed("lpa base labels", ensureLpaLabelsSeed)
 
-  /** Zip per-round LPA labels into the (node, l1..lk) seed frame
-    * [[lpaMergeBatch]] expects — THE implementation (r15: it used to
-    * exist in three copies — [[ensureLpaLabelsSeed]], a ring-graph
-    * receipt, GraphSpec's in-memory twin).
+  /** The lpa seed (node, l1..l_rounds) over the symmetric `base` — what
+    * [[lpaMergeBatch]] folds into; the [[prSeedFrame]] twin. Labels are
+    * computed eagerly (the frame joins every round).
     */
-  private[graft] def lpaSeedFrame(labels: Seq[DataFrame]): DataFrame =
-    labels.zipWithIndex.map { case (l, i) =>
-      l.select(col("node"), col("lbl").as(s"l${i + 1}"))
-    }.reduce(_.join(_, "node"))
+  private[graft] def lpaSeedFrame(base: DataFrame, rounds: Int): DataFrame =
+    roundColumns(lpaRoundLabels(base, rounds, eager = true), "lbl", "l").reduce(_.join(_, "node"))
 
   /** Delta LPA: fold a SYMMETRIC edge batch (new edges only — LPA votes
     * count multiplicity, so the batch must be pre-deduped against the
@@ -906,7 +907,8 @@ object Graph extends QueryModule {
     * where Δ_{k−1} = nodes whose recomputed l_{k−1} differs from the
     * seed (new nodes always — they have no seed row). Recomputing
     * exactly A_k each round with neighbor labels
-    * coalesce(Δ_{k−1}, seed.l_{k−1}) therefore equals the full rerun;
+    * coalesce(Δ_{k−1}, seed.l_{k−1}) for each `l<k>` column of the seed
+    * therefore equals the full rerun at the seed's round count;
     * the DuckDB oracle recomputes all rounds from scratch over the
     * union graph and must hash-match.
     *
@@ -934,6 +936,7 @@ object Graph extends QueryModule {
     // the lazy cache computes it inside round 1's job instead (the
     // prMergeBatch tSrcs discipline; r15 barrier trim).
     val tEnds = batch.select(col("src").as("node")).distinct().persist()
+    val rounds = seedRounds(seed0, "l")
     // Recompute round k's labels for exactly the affected set.
     def recompute(affected: DataFrame, delta: DataFrame, kPrev: Int): DataFrame = {
       val aB = broadcast(affected.select("node"))
@@ -987,10 +990,10 @@ object Graph extends QueryModule {
         .distinct()
     }
     val empty = tEnds.select(col("node"), col("node").as("lbl")).limit(0)
-    val d1 = diff(recompute(tEnds, empty, 0), 1)
-    val d2 = diff(recompute(nextAffected(d1), d1, 1), 2)
-    val d3 = diff(recompute(nextAffected(d2), d2, 2), 3)
-    overrideSeed(seed, "l3", d3, baseEdges, batch, tEnds)
+    val last = (1 to rounds).foldLeft(empty) { (delta, k) =>
+      diff(recompute(if (k == 1) tEnds else nextAffected(delta), delta, k - 1), k)
+    }
+    overrideSeed(seed, s"l$rounds", last, baseEdges, batch, tEnds)
   }
 
   /** The incremental entry: persisted per-round base labels + the same
@@ -1010,6 +1013,30 @@ object Graph extends QueryModule {
     }
     lpaHistogram(labels)
   }
+
+  /** The oracles' symmetric bipartite `edges` CTE over a `bip (p, s)`
+    * CTE — the SQL twin of [[symmetrize]].
+    */
+  private val bipEdgesCte: String = s"""edges AS (
+        SELECT p AS src, $SuppBase + s AS dst FROM bip
+        UNION ALL
+        SELECT $SuppBase + s AS src, p AS dst FROM bip)"""
+
+  /** `rounds` chained PageRank rounds as DuckDB CTEs over `nodes`,
+    * `edges`, `deg` and `r0` — the [[lpaRoundCtes]] twin, shared by the
+    * full and incremental oracles. `teleport` is the SQL each round adds
+    * to the damped inflow, up to and including its `+`.
+    */
+  private def prRoundCtes(rounds: Int, teleport: String): String =
+    (1 to rounds).map { k =>
+      s"""r$k AS (SELECT nodes.node,
+                    ${teleport}0.85 * coalesce(sum(r${k - 1}.r / deg.outdeg), 0) AS r
+             FROM nodes
+             LEFT JOIN edges ON edges.dst = nodes.node
+             LEFT JOIN r${k - 1} ON r${k - 1}.node = edges.src
+             LEFT JOIN deg ON deg.src = edges.src
+             GROUP BY nodes.node)"""
+    }.mkString(",\n      ")
 
   /** [[LpaRounds]] chained LPA rounds as DuckDB CTEs — generated so the
     * per-round SQL cannot drift from the Spark iteration. Shared by the
@@ -1095,10 +1122,7 @@ object Graph extends QueryModule {
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
         WHERE l_quantity <= $CcMaxQty OR l_quantity = 3.0),
-      edges AS (
-        SELECT p AS src, $SuppBase + s AS dst FROM bip
-        UNION ALL
-        SELECT $SuppBase + s AS src, p AS dst FROM bip),
+      $bipEdgesCte,
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       reach(a, b) AS (
         SELECT node, node FROM nodes
@@ -1113,10 +1137,7 @@ object Graph extends QueryModule {
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
         WHERE l_quantity <= $CcMaxQty),
-      edges AS (
-        SELECT p AS src, $SuppBase + s AS dst FROM bip
-        UNION ALL
-        SELECT $SuppBase + s AS src, p AS dst FROM bip),
+      $bipEdgesCte,
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       reach(a, b) AS (
         SELECT node, node FROM nodes
@@ -1130,10 +1151,7 @@ object Graph extends QueryModule {
     "q_graph_bfs" -> QueryDef(bfsLevels, Some(s"""
       WITH RECURSIVE bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-      edges AS (
-        SELECT p AS src, $SuppBase + s AS dst FROM bip
-        UNION ALL
-        SELECT $SuppBase + s AS src, p AS dst FROM bip),
+      $bipEdgesCte,
       bfs(node, dist) AS (
         SELECT (SELECT min(l_partkey) FROM lineitem), 0
         UNION
@@ -1153,79 +1171,30 @@ object Graph extends QueryModule {
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
         WHERE l_quantity <= $CcMaxQty
            OR (l_quantity = $PrBatchQty AND l_partkey % $PrBatchMod = 0)),
-      edges AS (
-        SELECT p AS src, $SuppBase + s AS dst FROM bip
-        UNION ALL
-        SELECT $SuppBase + s AS src, p AS dst FROM bip),
+      $bipEdgesCte,
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       deg AS (SELECT src, count(*)::DOUBLE AS outdeg FROM edges GROUP BY src),
       r0 AS (SELECT node, 1.0 AS r FROM nodes),
-      r1 AS (SELECT nodes.node,
-                    0.15 + 0.85 * coalesce(sum(r0.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r0 ON r0.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node),
-      r2 AS (SELECT nodes.node,
-                    0.15 + 0.85 * coalesce(sum(r1.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r1 ON r1.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node),
-      r3 AS (SELECT nodes.node,
-                    0.15 + 0.85 * coalesce(sum(r2.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r2 ON r2.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node)
+      ${prRoundCtes(Iters, "0.15 + ")}
       SELECT CASE WHEN node >= $SuppBase THEN 'supplier' ELSE 'part' END AS node_type,
              CASE WHEN node >= $SuppBase THEN node - $SuppBase ELSE node END AS node_id,
              round(r, 6) AS norm_rank
-      FROM r3
+      FROM r$Iters
       ORDER BY norm_rank DESC, node_type, node_id
       LIMIT 100"""), Seq(EdgeMemoSeed, PrRanksSeed)),
     "q_pagerank" -> QueryDef(pagerank, Some(s"""
       WITH bip AS (
         SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-      edges AS (
-        SELECT p AS src, $SuppBase + s AS dst FROM bip
-        UNION ALL
-        SELECT $SuppBase + s AS src, p AS dst FROM bip),
+      $bipEdgesCte,
       nodes AS (SELECT DISTINCT src AS node FROM edges),
       nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
       deg AS (SELECT src, count(*)::DOUBLE AS outdeg FROM edges GROUP BY src),
       r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS r FROM nodes),
-      r1 AS (SELECT nodes.node,
-                    0.15 / (SELECT n FROM nn) +
-                    0.85 * coalesce(sum(r0.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r0 ON r0.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node),
-      r2 AS (SELECT nodes.node,
-                    0.15 / (SELECT n FROM nn) +
-                    0.85 * coalesce(sum(r1.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r1 ON r1.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node),
-      r3 AS (SELECT nodes.node,
-                    0.15 / (SELECT n FROM nn) +
-                    0.85 * coalesce(sum(r2.r / deg.outdeg), 0) AS r
-             FROM nodes
-             LEFT JOIN edges ON edges.dst = nodes.node
-             LEFT JOIN r2 ON r2.node = edges.src
-             LEFT JOIN deg ON deg.src = edges.src
-             GROUP BY nodes.node)
+      ${prRoundCtes(Iters, "0.15 / (SELECT n FROM nn) +\n" + " " * 20)}
       SELECT CASE WHEN node >= $SuppBase THEN 'supplier' ELSE 'part' END AS node_type,
              CASE WHEN node >= $SuppBase THEN node - $SuppBase ELSE node END AS node_id,
              round(r * (SELECT n FROM nn), 6) AS norm_rank
-      FROM r3
+      FROM r$Iters
       ORDER BY norm_rank DESC, node_type, node_id
       LIMIT 100"""), Seq(EdgeMemoSeed)))
 }

@@ -7,8 +7,9 @@ import graft.ops.Graph
 /** Graph family pins: PageRank's power iteration equals an independent
   * local reference on controlled graphs and conserves mass on the fixture
   * graph; BFS, cc and LPA match plain-Scala twins; the delta folds equal
-  * their from-scratch recomputes; ccOn's stop test costs no job of its
-  * own; id checksums are exact past 2^63.
+  * their from-scratch recomputes at the seed's round count; ccOn's stop
+  * test costs no job of its own; id checksums are exact past 2^63; and
+  * Graph.scala writes each round count only as Iters / LpaRounds.
   */
 class GraphSpec extends AnyFunSuite with SparkTest {
 
@@ -351,26 +352,13 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     assert(rows.forall(r => !r.getDouble(1).isNaN && r.getDouble(1) > 0))
   }
 
-  /** Build the (node, outdeg, r1, r2, r3) seed frame prMergeBatch expects
-    * from a base edge frame — the in-memory twin of ensurePrRanksSeed.
-    */
-  private def prSeedOf(base: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val Seq(r1, r2, r3) = Graph.prUnnormRanks(base, 3)
-    base.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-      .select(col("src").as("node"), col("outdeg"))
-      .join(r1.select(col("node"), col("r").as("r1")), "node")
-      .join(r2.select(col("node"), col("r").as("r2")), "node")
-      .join(r3.select(col("node"), col("r").as("r3")), "node")
-  }
-
   test("prMergeBatch: new edges, new nodes, and untouched nodes all equal the full recompute") {
     import spark.implicits._
     // Two disjoint clusters plus a far-away pair the batch never touches.
     val base = Seq((1L, 2L), (2L, 3L), (4L, 5L), (100L, 101L))
       .flatMap(e => Seq(e, e.swap))
     val baseDf = base.toDF("src", "dst")
-    val seed = prSeedOf(baseDf).persist()
+    val seed = Graph.prSeedFrame(baseDf, 3).persist()
     // Batch: bridge the clusters (3-4) and attach a brand-new pair (9,10)
     // to node 1 — degree changes, rank pushes, and unseen nodes at once.
     val batch = Seq((3L, 4L), (9L, 1L), (9L, 10L)).flatMap(e => Seq(e, e.swap))
@@ -393,7 +381,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L)).flatMap(e => Seq(e, e.swap))
     val baseDf = base.toDF("src", "dst")
-    val seed = prSeedOf(baseDf)
+    val seed = Graph.prSeedFrame(baseDf, 3)
     val got = Graph.prMergeBatch(seed, baseDf,
       Seq.empty[(Long, Long)].toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -419,13 +407,6 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     assert(got.length == 100 && got.sameElements(expect))
   }
 
-  /** Build the (node, l1, l2, l3) seed frame lpaMergeBatch expects —
-    * the in-memory twin of ensureLpaLabelsSeed, through the SAME
-    * lpaSeedFrame zip (r15: this used to be a third inline copy).
-    */
-  private def lpaSeedOf(base: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Graph.lpaSeedFrame(Graph.lpaRoundLabels(base, 3))
-
   test("lpaMergeBatch: new edges, new nodes, and untouched nodes all equal the full rerun") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -434,7 +415,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (5L, 6L), (6L, 7L), (100L, 101L))
       .flatMap(e => Seq(e, e.swap))
     val baseDf = base.toDF("src", "dst")
-    val seed = lpaSeedOf(baseDf).persist()
+    val seed = Graph.lpaSeedFrame(baseDf, 3).persist()
     // Batch: bridge the communities (3-5), attach a brand-new pair
     // (9,10) to node 1 — vote-multiset changes, label pushes, and
     // previously-unseen nodes at once.
@@ -455,7 +436,7 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions._
     val base = Seq((1L, 2L), (2L, 3L)).flatMap(e => Seq(e, e.swap))
     val baseDf = base.toDF("src", "dst")
-    val seed = lpaSeedOf(baseDf)
+    val seed = Graph.lpaSeedFrame(baseDf, 3)
     val got = Graph.lpaMergeBatch(seed, baseDf,
       Seq.empty[(Long, Long)].toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -471,5 +452,53 @@ class GraphSpec extends AnyFunSuite with SparkTest {
     val expect = Graph.labelPropOn(union).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2)))
     assert(got.nonEmpty && got.sameElements(expect))
+  }
+
+  test("the delta folds run the seed's round count: a 2-round pagerank and a 4-round lpa seed") {
+    import spark.implicits._
+    val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (5L, 6L), (6L, 7L), (100L, 101L))
+      .flatMap(e => Seq(e, e.swap))
+    val batch = Seq((3L, 5L), (9L, 1L), (9L, 10L)).flatMap(e => Seq(e, e.swap))
+    val baseDf = base.toDF("src", "dst")
+    val batchDf = batch.toDF("src", "dst")
+    val union = (base ++ batch).toDF("src", "dst")
+    def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // The round count decides the answer on this graph: the 2-round ranks
+    // are not the 3-round ones, and the 2-node pair's labels swap every
+    // round, so the 4-round labels are not the 3-round ones.
+    val pr2 = ranksOf(Graph.prUnnormRanks(union, 2).last)
+    assert(pr2 != ranksOf(Graph.prUnnormRanks(union, 3).last))
+    val lpa4 = labelsOf(Graph.lpaRoundLabels(union, 4).last)
+    assert(lpa4 != labelsOf(Graph.lpaRoundLabels(union, 3).last))
+    val prSeed = Graph.prSeedFrame(baseDf, 2)
+    assert(prSeed.columns.toSeq == Seq("node", "outdeg", "r1", "r2"))
+    val pr = ranksOf(Graph.prMergeBatch(prSeed, baseDf, batchDf))
+    assert(pr.keySet == pr2.keySet)
+    pr2.foreach { case (n, r) =>
+      assert(math.abs(pr(n) - r) < 1e-9, s"node $n: merged ${pr(n)} vs full $r")
+    }
+    val lpaSeed = Graph.lpaSeedFrame(baseDf, 4)
+    assert(lpaSeed.columns.toSeq == Seq("node", "l1", "l2", "l3", "l4"))
+    assert(labelsOf(Graph.lpaMergeBatch(lpaSeed, baseDf, batchDf)) == lpa4)
+  }
+
+  test("Graph.scala writes no round count outside Iters and LpaRounds") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/Graph.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    // A round column named by a literal ("r3", "l1"), and a round call
+    // given a literal round count (one level of nested parentheses).
+    val roundColumn = "\"[rl][0-9]+\"".r
+    val roundCall = """\b(prUnnormRanks|lpaRoundLabels|prSeedFrame|lpaSeedFrame|prRoundCtes|lpaRoundCtes)\(""".r
+    val literalRounds = (roundCall.regex + """(?:[^()]|\([^()]*\))*?,\s*[0-9]+\s*[,)]""").r
+    val lines = src.linesIterator.toSeq
+    for ((line, i) <- lines.zipWithIndex) {
+      assert(roundColumn.findFirstIn(line).isEmpty, s"Graph.scala:${i + 1} names a round column: ${line.trim}")
+      assert(literalRounds.findFirstIn(line).isEmpty, s"Graph.scala:${i + 1} passes a literal round count: ${line.trim}")
+    }
+    assert(lines.exists(roundCall.findFirstIn(_).isDefined), "the round calls are gone; update the guard")
   }
 }
