@@ -72,44 +72,30 @@ object Bench {
       catch { case _: Throwable => () }
     }
     val warmed = SparkEntry.seeds.count { seed =>
-      try { seed.build(spark, sfDir); true }
+      try { graft.core.CacheScope.scoped(spark)(seed.build(spark, sfDir)); true }
       catch { case e: Throwable =>
         System.err.println(s"[$tag] seed ${seed.name} FAILED: ${e.getClass.getSimpleName}")
         false
       }
     }
-    // Untimed JIT warm-up (disclosed; applied from r7, moved to the
-    // MEASURED fixture in r16): run the whole registry once against
-    // sfDir before any timing. Rationale unchanged: the recorded number
-    // should measure operator THROUGHPUT, not first-call compilation
-    // (committed records showed identical queries at 2.5 s first-call
-    // vs 0.45 s steady-state purely from JIT — q_agg_rollup). Through
-    // r15 this pass ran at sf0.001, but plan shapes are SCALE-DEPENDENT
-    // (AQE picks different join strategies / stage splits per input
-    // size), so the tiny-fixture pass compiled classes the measured
-    // queries never ran and left the measured shapes to compile inside
-    // the first timed pass — receipted in SURVEY §29: with the sf0.001
-    // pass done, q_pagerank's FIRST sf0.1 run reads 3.86 s and its
-    // steady state 0.92 s, a repeatable ~3 s compilation bill that two
-    // independent sweeps (the driver's BENCH_r15 window and the r16
-    // boundary sweep) recorded in value_first and the adjudication then
-    // had to strip as if it were host noise. Warming at the measured
-    // fixture strips exactly the class this warm-up always existed to
-    // strip. It warms no DATA cache the table warm-up above hasn't
-    // already warmed, and per-entry work is NOT pre-done: every
-    // lifecycle entry copies a fresh scratch clone per run, every
-    // streaming entry starts from a fresh checkpoint, and every
-    // one-time shared artifact (index seeds, edge memos, the BPE merge
-    // memo) is a declared seed warmed above — so this pass compiles
-    // classes and nothing else, and the timed pass
-    // re-pays the operator's full cost (the warm-twin pass always
-    // re-ran the registry and never altered a primary).
+    // Untimed JIT warm-up (disclosed; at the MEASURED fixture since
+    // r16): run the whole registry once against sfDir before any timing,
+    // so the recorded numbers measure operator throughput, not first-call
+    // compilation (q_agg_rollup: 2.5 s first call vs 0.45 s steady). Plan
+    // shapes are scale-dependent under AQE, so a pass at a smaller fixture
+    // left the measured shapes to compile inside the first timed pass
+    // (SURVEY §29: q_pagerank 3.86 s first vs 0.92 s steady at sf0.1).
+    // The pass warms no DATA cache the table warm-up above hasn't already
+    // warmed, because every call runs through the entry runner
+    // (SparkEntry.run), which releases each Spark cache entry and
+    // persisted frame the call left behind; only the session memos'
+    // frames stay, and those are declared seeds warmed above. Lifecycle
+    // entries copy a fresh scratch clone per run and streaming entries
+    // start from a fresh checkpoint, so this pass compiles classes and
+    // nothing else, and the timed pass re-pays the operator's full cost.
     locally {
       val t0 = System.nanoTime()
-      SparkEntry.queries.foreach { case (name, fn) =>
-        try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
+      SparkEntry.names.foreach(SparkEntry.timed(spark, _, sfDir))
       System.err.println(f"[$tag] JIT warm-up pass ($sfDir, untimed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     warmed
@@ -152,9 +138,7 @@ object Bench {
     val (hits0, misses0) = seedTotals()
     val seedMisses = scala.collection.mutable.LinkedHashSet.empty[String]
     // The warm map below remains the per-entry steady-state receipt.
-    // toRdd.count() consumes the query's own physical plan, forcing every
-    // output column to materialize — df.count() would let the optimizer
-    // prune the projections being measured.
+    // Every timing is one SparkEntry.timed call (toRdd.count(), see there).
     // Entries whose execution THREW (any timing attempt): a swallowed
     // failure used to record as a fast no-op — the sf1 sweeps through
     // r11 carried ~0.05 s timings for streaming entries that silently
@@ -163,15 +147,13 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def time(name: String): Double = {
       val missesBefore = seedTotals()._2
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case e: Throwable =>
+      val ran = SparkEntry.timed(spark, name, sfDir)
+      ran.result.failed.foreach { e =>
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}")
       }
-      val dt = (System.nanoTime() - t0) / 1e9
       if (seedTotals()._2 > missesBefore) seedMisses += name
-      dt
+      ran.seconds
     }
     // Host-noise sentinel: one fixed canary timed immediately before and
     // after the sweep. A >1.5x divergence between its two timings can
@@ -194,7 +176,7 @@ object Bench {
     timeCanary() // untimed steady-state warm-up of the canary itself
     val canaryBefore = timeCanary()
     System.err.println(f"[bench] canary (pre-sweep)     $canaryBefore%8.2f s")
-    val first = SparkEntry.queries.keys.toSeq.map { name =>
+    val first = SparkEntry.names.map { name =>
       val dt = time(name)
       System.err.println(f"[bench] $name%-24s $dt%8.2f s")
       name -> dt
@@ -232,23 +214,12 @@ object Bench {
       name -> best
     }
     val totalFirst = results.map(_._2).sum
-    // Built-in noise marker (VERDICT r6 #7): one extra WARM timing per
-    // entry, recorded alongside the primary number. The warm value is the
-    // per-entry retime receipt, taken automatically: a primary number far
-    // above its own warm twin on an untouched operator is a noise-window
-    // hit, not a regression — judges can make that call from this file
-    // alone instead of asking for a manual isolated-retime round. Since
-    // r14 the warm twin is also the TRIGGER for the adjudication pass
-    // below, which can replace a demonstrated noise hit's primary; the
-    // longstanding first-timing semantics live on as "value_first"
-    // (recorded in BOTH the stdout line and bench_full.json), and that is
-    // the number to compare across rounds until a re-baseline (ADVICE
-    // r14 #2).
-    // Warm-pass throws must not mark the SWEEP failed when the recorded
-    // primary succeeded (ADVICE r15 #3): snapshot the failed set, route
-    // warm-only failures to a separate warm_failed marker in the
-    // sidecar, and skip adjudication for those entries — a crash
-    // elapsed time is not a warm receipt to band against.
+    // Warm twin (VERDICT r6 #7): one more timing per entry, recorded
+    // beside the primary as its noise receipt and the trigger of the
+    // adjudication below. "value_first" keeps the first-timing total, the
+    // number to compare across rounds until a re-baseline. A warm pass
+    // that throws goes to warm_failed, not failed, and its entry is not
+    // adjudicated: a crash elapsed time is no receipt.
     val failedPrimary = failed.toSet
     val warm = results.map { case (name, _) =>
       val dt = time(name)
@@ -258,30 +229,15 @@ object Bench {
     val warmFailed = failed.filterNot(failedPrimary.contains).toVector
     warmFailed.foreach(failed -= _)
     warmFailed.foreach(n => System.err.println(s"[bench] $n warm pass threw (primary kept; recorded in warm_failed)"))
-    // Noise-hit adjudication (r14; guards hardened r15 per ADVICE): the
-    // warm twin exists as the per-entry noise receipt (VERDICT r6 #7) —
-    // a primary far above its own warm twin on an untouched operator is
-    // a noise-window hit, not the operator's cost, and every round's
-    // adjudication has re-timed such entries manually (isolated
-    // quiet-host retime, min-of-runs). This applies that same protocol
-    // mechanically: any entry whose primary exceeds 1.3x its warm twin
-    // re-times ONCE, and the retime replaces the primary ONLY when it
-    // lands back near the warm twin (<=1.5x warm — the acceptance band
-    // is slightly wider than the 1.3x trigger because the single retime
-    // carries its own jitter; observed: warm 1.88 s, primary 22.4 s in
-    // a noise window, retime 2.77 s — a confirmed noise hit that a
-    // trigger-width acceptance would have rejected). A retime that is
-    // itself well above the warm band is evidence of repeatable
-    // first-run cost (fresh checkpoint dirs / scratch clones), so the
-    // primary stands: the adjudication may only strip demonstrated
-    // noise, never residual real cost (the unconditional min() it
-    // replaces could, because the retime runs at sweep end when the
-    // process is maximally warm). Entries whose
-    // primary FAILED are skipped outright — min() over two crash
-    // elapsed times is not a timing. The warm value itself is never
-    // recorded as the primary. Both totals are recorded ("value" =
-    // adjudicated, "value_first" = pre-adjudication first semantics) so
-    // the semantics change is visible, not silent.
+    // Noise-hit adjudication: an entry whose primary exceeds 1.3x its
+    // warm twin re-times once, and the retime replaces the primary only
+    // when it lands within 1.5x of the warm twin (the single retime has
+    // its own jitter: warm 1.88 s, primary 22.4 s, retime 2.77 s was a
+    // confirmed noise hit). A retime above that band is repeatable
+    // first-run cost, so the primary stands: adjudication strips
+    // demonstrated noise only. Failed primaries are skipped, and the
+    // warm value is never recorded as a primary. "value" is the
+    // adjudicated total, "value_first" the first one.
     val noiseRetimed = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val adjudicated = results.map { case (name, dt) =>
       val band = math.max(0.3, 1.3 * warm.getOrElse(name, dt))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shuffle-size receipt tool: run queries with AQE OFF (so the static
@@ -22,17 +21,16 @@ object Exchanges {
       // AQE off per entry (as PlanGolden.fingerprint scopes it): the
       // static plan's exchanges must stay visible and un-coalesced.
       graft.core.SessionConf.scoped(spark, "spark.sql.adaptive.enabled", "false") {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        def walk(p: SparkPlan): Seq[SparkPlan] =
-          p +: (p.children ++ p.subqueries).flatMap(walk)
-        val exs = walk(df.queryExecution.executedPlan)
-          .collect { case e: ShuffleExchangeExec => e }
-        println(s"[exchanges] $name: ${exs.size} shuffles")
-        exs.foreach { e =>
-          val mb = e.metrics.get("dataSize").map(_.value / 1e6).getOrElse(-1.0)
-          println(f"[exchanges]   $mb%.2f MB  ${e.outputPartitioning}")
-        }
+        SparkEntry.run(spark, name, sfDir) { df =>
+          df.queryExecution.toRdd.count()
+          val exs = PlanGolden.walk(df.queryExecution.executedPlan)
+            .collect { case e: ShuffleExchangeExec => e }
+          println(s"[exchanges] $name: ${exs.size} shuffles")
+          exs.foreach { e =>
+            val mb = e.metrics.get("dataSize").map(_.value / 1e6).getOrElse(-1.0)
+            println(f"[exchanges]   $mb%.2f MB  ${e.outputPartitioning}")
+          }
+        }.get
       }
     }
     spark.stop()

@@ -39,7 +39,8 @@ object PlanGolden {
     private def b(v: Boolean): String = if (v) "1" else "0"
   }
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] =
+  /** A plan's nodes, its subqueries' included. */
+  private[graft] def walk(p: SparkPlan): Seq[SparkPlan] =
     p +: (p.children ++ p.subqueries).flatMap(walk)
 
   /** Plan (but do not execute) the named registry entry and fingerprint
@@ -50,49 +51,42 @@ object PlanGolden {
     */
   def fingerprint(spark: SparkSession, name: String, sfDir: String): Fp =
     SessionConf.scoped(spark, "spark.sql.adaptive.enabled", "false") {
-      // Fingerprint from a cache-free planner state: the graph entries
-      // persist shared frames (edges, label chains) inside one action,
-      // and a still-cached frame from ANY earlier query in the same JVM
-      // matches later plans as InMemoryRelation — accurate small stats
-      // flip SortMergeJoin→Broadcast and the fingerprint becomes a
-      // function of suite ORDER (caught r12 running the smoke suite
-      // before this spec; the alphabetical full-suite order had hidden
-      // it). Clearing per entry pins the canonical cold plan.
+      // Fingerprint from a cache-free planner state: a frame still cached
+      // by code that ran outside the entry runner in this JVM (a spec, say)
+      // matches later plans as InMemoryRelation, whose accurate small
+      // stats flip SortMergeJoin→Broadcast, so the fingerprint would
+      // depend on suite ORDER (caught r12). The runner releases what the
+      // entry itself caches.
       spark.catalog.clearCache()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val nodes = walk(df.queryExecution.executedPlan)
-      Fp(
-        shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
-        broadcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
-        joins = nodes.collect {
-          case j: BaseJoinExec => s"${j.getClass.getSimpleName.stripSuffix("Exec")}(${j.joinType})"
-        },
-        takeOrdered = nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
-        partialAgg = nodes.exists {
-          case a: BaseAggregateExec =>
-            a.aggregateExpressions.exists(e => e.mode == Partial || e.mode == PartialMerge)
-          case _ => false
-        },
-        // Unpartitioned (single-partition) windows: legitimate ONLY over
-        // frames that are metadata-scale by construction (a reduced
-        // per-category counts table, a ≤100-row retrieved list). The
-        // golden pins the count per entry, so an accidental global
-        // window over a data-sized frame FAILS PlanGoldenSpec instead of
-        // scrolling by as a WindowExec log warning (which the shared
-        // test session silences for exactly this reason — see SparkTest).
-        globalWindows = nodes.count {
-          case w: org.apache.spark.sql.execution.window.WindowExec =>
-            w.partitionSpec.isEmpty
-          case _ => false
-        })
+      SparkEntry.run(spark, name, sfDir) { df =>
+        val nodes = walk(df.queryExecution.executedPlan)
+        Fp(
+          shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+          broadcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
+          joins = nodes.collect {
+            case j: BaseJoinExec => s"${j.getClass.getSimpleName.stripSuffix("Exec")}(${j.joinType})"
+          },
+          takeOrdered = nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+          partialAgg = nodes.exists {
+            case a: BaseAggregateExec =>
+              a.aggregateExpressions.exists(e => e.mode == Partial || e.mode == PartialMerge)
+            case _ => false
+          },
+          // Unpartitioned (single-partition) windows: legitimate ONLY over
+          // frames that are metadata-scale by construction (a reduced
+          // per-category counts table, a ≤100-row retrieved list). The
+          // golden pins the count per entry, so an accidental global
+          // window over a data-sized frame FAILS PlanGoldenSpec instead of
+          // scrolling by as a WindowExec log warning (which the shared
+          // test session silences for exactly this reason — see SparkTest).
+          globalWindows = nodes.count {
+            case w: org.apache.spark.sql.execution.window.WindowExec =>
+              w.partitionSpec.isEmpty
+            case _ => false
+          })
+      }.get
     }
 
   def renderAll(spark: SparkSession, sfDir: String): Seq[(String, String)] =
-    SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      try name -> fingerprint(spark, name, sfDir).render
-      catch {
-        case e: Throwable =>
-          throw new RuntimeException(s"fingerprinting $name failed: ${e.getMessage}", e)
-      }
-    }
+    SparkEntry.names.sorted.map(name => name -> fingerprint(spark, name, sfDir).render)
 }

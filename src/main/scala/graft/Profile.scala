@@ -2,6 +2,8 @@ package graft
 
 /** Local profiling harness (not part of the driver contract): time selected
   * queries twice (cold/warm) to separate JIT/IO warmup from plan cost.
+  * Each run is one `SparkEntry.timed` call, as in Bench, so the warm run
+  * finds no cache the cold run left behind.
   * Usage: runMain graft.Profile <sfDir> <query>[,query...]
   */
 object Profile {
@@ -21,22 +23,14 @@ object Profile {
     val spark = graft.core.Harness.session("32",
       bigDriverResults = true,
       measurementScratch = shm)
-    // SPARK_GRAFT_JITPASS=1 replicates Bench's pre-timing state so a
-    // first-timed-run cost seen ONLY inside Bench sweeps can be
-    // reproduced and decomposed in isolation. It CALLS Bench's own
-    // warmPreTimingState (ADVICE r16 #3: an inline copy had drifted from
-    // the real protocol); one body, no drift.
+    // SPARK_GRAFT_JITPASS=1 replicates Bench's pre-timing state (through
+    // Bench's own warmPreTimingState), so a first-timed-run cost seen
+    // only inside Bench sweeps can be reproduced in isolation.
     if (sys.env.contains("SPARK_GRAFT_JITPASS"))
       Bench.warmPreTimingState(spark, sfDir, tag = "profile")
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        // toRdd.count() forces every output column (df.count() lets the
-        // optimizer prune the work being measured) — same as Bench.
-        val n = fn(spark, sfDir).queryExecution.toRdd.count()
-        println(f"[profile] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
+    for (name <- names; i <- 1 to 2) {
+      val ran = SparkEntry.timed(spark, name, sfDir)
+      println(f"[profile] $name run$i: ${ran.seconds}%.2f s (${ran.get} rows)")
     }
     spark.stop()
   }

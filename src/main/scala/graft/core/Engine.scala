@@ -63,19 +63,18 @@ object Tables {
     * re-deriving it on every query construction is driver-side work a
     * production metastore never repays. DataFrames are immutable plans,
     * safe to share across queries in a session. Keyed by (session, dir,
-    * table): the driver fixtures are read-only, spec fixtures write to
-    * a FRESH TempDir per planting (a (dir, table) pair never changes
-    * content within a session), and a regenerated /tmp scale replica is
-    * only read by short-lived receipt JVMs. Entries are evicted when
+    * table, [[fixtureTag]]): a table rewritten in place has a new tag,
+    * so it is resolved afresh instead of being read through a stale file
+    * listing (the tag costs a file stat per call). Entries are evicted when
     * their session's context stops (SessionCache's stop listener) — the
     * weak keying this replaces could never collect anything, because
     * each cached plan strongly referenced the session it was keyed by
     * (ADVICE r14).
     */
-  private val catalog = new SessionCache[(String, String), DataFrame]
+  private val catalog = new SessionCache[(String, String, String), DataFrame]
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    catalog.getOrBuild(spark, (sfDir, name)) {
+    catalog.getOrBuild(spark, (sfDir, name, fixtureTag("", sfDir, name))) {
       // events.ts has shipped in different physical layouts across fixture
       // generations: TIMESTAMP(NANOS) (readable only as raw long via
       // nanosAsLong — Spark's vectorized reader rejects nanos outright) and

@@ -1,28 +1,28 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-session memo of session-bound values (resolved DataFrames and
   * similar plan-shaped state).
   *
-  * Why not a WeakHashMap keyed on the session: the cached values
-  * strongly reference their SparkSession (a DataFrame pins it through
-  * its QueryExecution/SessionState), so the weak key stays strongly
-  * reachable FROM ITS OWN VALUE and is never collectable — a
-  * session-cycling JVM would grow monotonically despite the weak keys
-  * (ADVICE r14). Eviction is therefore explicit instead of GC-driven:
-  * the first touch per session registers a context-stop listener, and
-  * the stop event evicts every entry whose session rides a stopped
-  * context. `SparkSession.stop()` stops the shared SparkContext, so
-  * `newSession()` clones are evicted together with their parent —
-  * correct, since their cached plans are unusable after stop anyway.
-  * Sessions abandoned without `stop()` keep their entries exactly as
-  * the weak map (ineffectively) did; no regression on that path.
+  * Not a WeakHashMap keyed on the session: a cached DataFrame strongly
+  * references its session, so a weak key would never be collected
+  * (ADVICE r14). The first touch per session registers a context-stop
+  * listener instead, and the stop event evicts every entry whose session
+  * rides a stopped context (`newSession()` clones go with their parent).
+  *
+  * A memo value is meant to outlive the call that built it, so the
+  * entry runner's release ([[CacheScope]]) keeps every persisted RDD a
+  * memoized DataFrame reads ([[SessionCache.pinnedRdds]]).
   */
 final class SessionCache[K, V] {
   private val maps = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, java.util.concurrent.ConcurrentHashMap[K, V]]()
+  SessionCache.all.add(this)
 
   private def perSession(spark: SparkSession) =
     maps.computeIfAbsent(spark, s => {
@@ -75,4 +75,19 @@ final class SessionCache[K, V] {
     maps.forEach((_, m) => n += m.size())
     n
   }
+}
+
+object SessionCache {
+  private val all = new java.util.concurrent.ConcurrentLinkedQueue[SessionCache[_, _]]()
+
+  /** Ids of the persisted RDDs that the memoized DataFrames of
+    * `spark`'s context read: the RDDs behind their `localCheckpoint`s.
+    */
+  private[graft] def pinnedRdds(spark: SparkSession): Set[Int] =
+    all.asScala.flatMap(_.maps.asScala.collect {
+      case (s, m) if s.sparkContext eq spark.sparkContext => m.values.asScala
+    }.flatten).flatMap {
+      case df: Dataset[_] => df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+      case _ => Nil
+    }.toSet
 }

@@ -111,7 +111,6 @@ object Similarity extends QueryModule {
     val sims = a.join(broadcast(b), col("ida") =!= col("idb"))
       .select(col("ida"), col("idb"), round(cosineUdf(col("ea"), col("eb")), 4).as("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    shortlist.unpersist()
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
     val remaining = scala.collection.mutable.SortedSet.empty[Long] ++ rels.keys
     var rank = 1L
@@ -1133,20 +1132,18 @@ object Similarity extends QueryModule {
       forceJoinAssign: Boolean = false): DataFrame = {
     // Cached for the Lloyd loop (count + seed + 2 refine scans + the
     // final assignment all read the same vectors — same treatment as
-    // kmeansRefineQuery); materialize the assigned cells before dropping
-    // the cache so the prune stage never re-reads the source.
+    // kmeansRefineQuery); the assigned cells are materialized before the
+    // prune stage plans over them. The entry runner releases both caches.
     val e = embeddings.select(col("vec_id"), col("embedding")).persist()
-    try {
-      val n = e.count()
-      val k = math.max(1, math.ceil(n.toDouble / targetCell).toInt)
-      if (k <= FlatCellLimit) {
-        val (cents, _) = kmeansRefine(e, seedCentroidsK(e, k), iters = 2)
-        val cells = ivfBuildWith(e, cents).cells
-        cells.count()
-        cells
-      } else hierarchicalCells(e, k, targetCell,
-        joinAssign = forceJoinAssign || k > JoinAssignCellLimit)
-    } finally { e.unpersist(); () }
+    val n = e.count()
+    val k = math.max(1, math.ceil(n.toDouble / targetCell).toInt)
+    if (k <= FlatCellLimit) {
+      val (cents, _) = kmeansRefine(e, seedCentroidsK(e, k), iters = 2)
+      val cells = ivfBuildWith(e, cents).cells
+      cells.count()
+      cells
+    } else hierarchicalCells(e, k, targetCell,
+      joinAssign = forceJoinAssign || k > JoinAssignCellLimit)
   }
 
   /** Two-level cell build: a coarse √k quantizer (trained like the flat
@@ -1181,24 +1178,22 @@ object Similarity extends QueryModule {
     val (coarse, _) = kmeansRefine(e, seedCentroidsK(e, k1), iters = 2)
     val assigned = e.withColumn("ccell", udf(nearestCellOf(coarse)).apply(col("embedding")))
       .persist()
-    try {
-      val w = Window.partitionBy("ccell").orderBy("vec_id")
-      val seedDf = assigned
-        .withColumn("rn", row_number().over(w))
-        .filter((col("rn") - 1) % targetCell === 0)
-        .select(col("ccell"),
-          ((col("rn") - 1) / targetCell).cast(IntegerType).as("fcell"),
-          col("embedding").as("centroid"))
-      if (joinAssign) hierarchicalCellsJoin(assigned, seedDf)
-      else {
-        val seeds = seedDf.collect().groupBy(_.getInt(0)).map { case (c, rows) =>
-          c -> rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
-        }
-        val (fine, _) = kmeansRefineBy(assigned, Some("ccell"), seeds, 2, None)
-        combinedCells(assigned.withColumn("fcell",
-          nearestInGroupUdf(fine)(col("ccell"), col("embedding"))("_1")))
+    val w = Window.partitionBy("ccell").orderBy("vec_id")
+    val seedDf = assigned
+      .withColumn("rn", row_number().over(w))
+      .filter((col("rn") - 1) % targetCell === 0)
+      .select(col("ccell"),
+        ((col("rn") - 1) / targetCell).cast(IntegerType).as("fcell"),
+        col("embedding").as("centroid"))
+    if (joinAssign) hierarchicalCellsJoin(assigned, seedDf)
+    else {
+      val seeds = seedDf.collect().groupBy(_.getInt(0)).map { case (c, rows) =>
+        c -> rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
       }
-    } finally { assigned.unpersist(); () }
+      val (fine, _) = kmeansRefineBy(assigned, Some("ccell"), seeds, 2, None)
+      combinedCells(assigned.withColumn("fcell",
+        nearestInGroupUdf(fine)(col("ccell"), col("embedding"))("_1")))
+    }
   }
 
   /** Persisted (vec_id, embedding, cell) with the combined cell id:
@@ -1258,9 +1253,7 @@ object Similarity extends QueryModule {
       fineDf.unpersist()
       fineDf = next
     }
-    val cells = combinedCells(assignDf(fineDf))
-    fineDf.unpersist()
-    cells
+    combinedCells(assignDf(fineDf))
   }
 
   /** The dominance test over a pair aliased `a` (lower id) and `b`.
@@ -1310,18 +1303,16 @@ object Similarity extends QueryModule {
     // is the local-fixture convenience, not the semantic).
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding")).persist()
-    try {
-      val (_, hist) = kmeansRefine(e, seedCentroids(e), iters = 4,
-        tap = Some("kmeans_cents"))
-      // Convergence trace — mean assignment cosine per iteration. The
-      // Lloyd property (non-decreasing quality, spec-pinned on the
-      // planted corpus) is the output; truncation keeps partition-order
-      // double-sum jitter out of the dump.
-      hist.zipWithIndex
-        .map { case (q, i) => (i.toLong, math.floor(q * 1000) / 1000) }
-        .toDF("iter", "avg_cos")
-        .orderBy("iter")
-    } finally { e.unpersist(); () }
+    val (_, hist) = kmeansRefine(e, seedCentroids(e), iters = 4,
+      tap = Some("kmeans_cents"))
+    // Convergence trace — mean assignment cosine per iteration. The
+    // Lloyd property (non-decreasing quality, spec-pinned on the
+    // planted corpus) is the output; truncation keeps partition-order
+    // double-sum jitter out of the dump.
+    hist.zipWithIndex
+      .map { case (q, i) => (i.toLong, math.floor(q * 1000) / 1000) }
+      .toDF("iter", "avg_cos")
+      .orderBy("iter")
   }
 
   // ---- One IVF query builder -------------------------------------------
@@ -1476,7 +1467,7 @@ object Similarity extends QueryModule {
     }
     def labelled(df: DataFrame) = filter.fold(df)(l => df.filter(col("label") === l.value))
     val byCos = Seq(col("cos_sim").desc, col("vec_id"))
-    val out = queries match {
+    queries match {
       case Ivf.Anchor(vec, exclude) =>
         val brute = result match {
           case Ivf.TopK(k) => filter.exists(_.m <= FilteredBruteFactor * k)
@@ -1580,14 +1571,12 @@ object Similarity extends QueryModule {
             tapped.filter(col("cos_sim") >= tau).orderBy(col("query_id") +: byCos: _*)
         }
     }
-    live.release(out, tap.isDefined)
   }
 
   /** One query's read of its postings: the quantizer, the live postings
     * (`vec_id`, `cell_id`, `embedding`, plus `code` and `label` where the
     * layout has them) restricted to the probed cells (None = every
-    * cell), the ADC range margin, and the cleanup once the answer stands
-    * alone.
+    * cell), and the ADC range margin.
     */
   private trait IvfLive {
     def spark: SparkSession
@@ -1595,7 +1584,6 @@ object Similarity extends QueryModule {
     def codebook: PqCodebook
     def scan(cells: Option[Seq[Int]]): DataFrame
     def adcMargin(tau: Double): Double
-    def release(out: DataFrame, tapped: Boolean): DataFrame
   }
 
   private def openIvf(postings: Ivf.Postings, adc: Boolean, keep: Seq[String]): IvfLive =
@@ -1608,7 +1596,6 @@ object Similarity extends QueryModule {
         def scan(cells: Option[Seq[Int]]) =
           IvfStore.live(s, dir, manifest.core, cells.map(c => col("cell_id").isin(c: _*)))
         def adcMargin(tau: Double) = adcMarginFor(manifest, tau)
-        def release(out: DataFrame, tapped: Boolean) = out
       }
       case f: Ivf.Frame => new IvfLive {
         val spark = f.corpus.sparkSession
@@ -1628,13 +1615,6 @@ object Similarity extends QueryModule {
         }
         def adcMargin(tau: Double) =
           throw new UnsupportedOperationException("ADC range search needs a persisted, audited index")
-        // Tapped answers are already materialized to the tap path; untapped
-        // ones pin their rows eagerly before the cell table goes.
-        def release(out: DataFrame, tapped: Boolean) = built.fold(out) { table =>
-          val freed = if (tapped) out else out.localCheckpoint(true)
-          table.unpersist()
-          freed
-        }
       }
     }
 

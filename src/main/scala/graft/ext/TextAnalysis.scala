@@ -394,15 +394,17 @@ object TextAnalysis extends QueryModule {
     * everywhere, so [[bpeEncode]]'s timed region is the application scan,
     * not the training (which [[bpeMerges]] measures as its own entry;
     * [[BpeMergeSeed]] builds this memo untimed, the same disclosed
-    * economics as the graph edge memos and index seeds). Racy variant:
-    * the build runs a Spark job (the vocab scan) and must not hold a
-    * cache bin lock.
+    * economics as the graph edge memos and index seeds). Keyed by the
+    * documents fixture tag, so a corpus rewritten in place is mined
+    * afresh. Racy variant: the build runs a Spark job (the vocab scan)
+    * and must not hold a cache bin lock.
     */
   private val bpeMergeMemo =
     new graft.core.SessionCache[String, Seq[(Int, Int, Int)]]
 
-  private def bpeLearnedMerges(spark: SparkSession, sfDir: String): Seq[(Int, Int, Int)] =
-    bpeMergeMemo.getOrBuildRacy(spark, sfDir)(bpeMine(spark, sfDir)._2)
+  private[graft] def bpeLearnedMerges(spark: SparkSession, sfDir: String): Seq[(Int, Int, Int)] =
+    bpeMergeMemo.getOrBuildRacy(spark, Tables.fixtureTag("v1", sfDir, "documents"))(
+      bpeMine(spark, sfDir)._2)
 
   /** The merge-table memo as a seed: the encoder's one-time trained-
     * tokenizer input (production trains once, applies everywhere;

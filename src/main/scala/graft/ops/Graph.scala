@@ -46,12 +46,11 @@ object Graph extends QueryModule {
     * already-materialized bucketed edge tables — not per-query distinct
     * scans. The first entry touching a (session, fixture, kind) key
     * pays the projection once (eager localCheckpoint, edge-sized,
-    * lineage-free); the rest of the sweep reuses it. Entries are evicted
-    * when their session's context stops (SessionCache's stop listener) —
-    * the weak keying this replaces could never collect anything, because
-    * each cached frame strongly referenced the session it was keyed by
-    * (ADVICE r14); the checkpointed blocks die with the context either
-    * way, the map entry now goes with them.
+    * lineage-free); the rest of the sweep reuses it, and the entry
+    * runner's release keeps it (SessionCache pins it). The fixture is
+    * keyed by its lineitem tag ([[ccTag]]), so a lineitem rewritten in
+    * place is projected afresh. Entries go when their session's context
+    * stops (SessionCache's stop listener).
     */
   private val edgeMemo = new graft.core.SessionCache[(String, String), DataFrame]
 
@@ -65,7 +64,7 @@ object Graph extends QueryModule {
     // AQE on, shielding it from any caller's scoped confs (the
     // incremental merges scope partitions=8 / AQE-off around their
     // rounds).
-    edgeMemo.getOrBuildRacy(spark, (sfDir, kind)) {
+    edgeMemo.getOrBuildRacy(spark, (ccTag(sfDir), kind)) {
       graft.core.SessionConf.scoped(spark,
           "spark.sql.shuffle.partitions", ccPartitionsFor(spark, sfDir).toString) {
         graft.core.SessionConf.scoped(spark, "spark.sql.adaptive.enabled", "true") {
@@ -194,12 +193,6 @@ object Graph extends QueryModule {
       if (eager) ranks = ranks.localCheckpoint(true)
       out += ranks
     }
-    // Eager mode: every returned frame is a checkpoint, so the edge
-    // caches have served their purpose — release them now instead of
-    // letting them ride the rest of the session. Lazy mode returns
-    // unevaluated chains that still reference the caches, which the
-    // caller's action reads.
-    if (eager) Seq(edges, nodes, edgesDeg).foreach(_.unpersist(blocking = false))
     out.result()
   }
 
@@ -308,19 +301,12 @@ object Graph extends QueryModule {
 
   /** A delta fold's result: the seed's last-round column `seedCol`,
     * overridden by `delta` (node, value) wherever the fold recomputed a
-    * node. Every round is checkpointed by now, so the fold's caches (the
-    * seed's and `caches`) are fully consumed — RELEASE them instead of
-    * letting them ride the rest of a 200+-entry sweep session. The
-    * returned frame references the seed exactly once, so dropping its
-    * cache costs one re-read of the node-sized parquet at action time, and
-    * it stays lazy so the broadcast-anti override remains visible to the
-    * plan golden (an eager checkpoint here would hide it). The override
-    * itself: the seed streams once against the broadcast delta, nothing
-    * shuffles.
+    * node. It stays lazy so the broadcast-anti override remains visible
+    * to the plan golden (an eager checkpoint here would hide it). The
+    * override itself: the seed streams once against the broadcast
+    * delta, nothing shuffles.
     */
-  private def overrideSeed(seed: DataFrame, seedCol: String, delta: DataFrame,
-      caches: DataFrame*): DataFrame = {
-    (seed +: caches).foreach(_.unpersist(blocking = false))
+  private def overrideSeed(seed: DataFrame, seedCol: String, delta: DataFrame): DataFrame = {
     seed.select(col("node"), col(seedCol).as(delta.columns(1)))
       .join(broadcast(delta), Seq("node"), "left_anti")
       .unionByName(delta)
@@ -444,8 +430,7 @@ object Graph extends QueryModule {
     val last = (1 to rounds).foldLeft(s1) { (chg, k) =>
       pushRound(if (k == 1) s1 else srcSet(chg, s"r${k - 1}"), s"r$k").localCheckpoint(true)
     }
-    overrideSeed(seed, s"r$rounds", last.select(col("node"), col("rp").as("r")),
-      baseEdges, batch, tSrcs)
+    overrideSeed(seed, s"r$rounds", last.select(col("node"), col("rp").as("r")))
   }
 
   private def pagerankIncremental(spark: SparkSession, sfDir: String): DataFrame = {
@@ -845,8 +830,8 @@ object Graph extends QueryModule {
     * prUnnormRanks twin): round k adopts each node's most frequent
     * neighbor label from round k−1, ties to the smallest label. Lazy by
     * default (single-consumer chains compile to one plan); `eager`
-    * checkpoints each round and releases the edge cache for consumers
-    * that join several round frames afterwards (the seed build).
+    * caches the edges and checkpoints each round, for consumers that
+    * join several round frames afterwards (the seed build).
     */
   private[graft] def lpaRoundLabels(sym0: DataFrame, rounds: Int,
       eager: Boolean = false): Seq[DataFrame] = {
@@ -865,7 +850,6 @@ object Graph extends QueryModule {
       if (eager) labels = labels.localCheckpoint(true)
       out += labels
     }
-    if (eager) sym.unpersist(blocking = false)
     out.result()
   }
 
@@ -993,7 +977,7 @@ object Graph extends QueryModule {
     val last = (1 to rounds).foldLeft(empty) { (delta, k) =>
       diff(recompute(if (k == 1) tEnds else nextAffected(delta), delta, k - 1), k)
     }
-    overrideSeed(seed, s"l$rounds", last, baseEdges, batch, tEnds)
+    overrideSeed(seed, s"l$rounds", last)
   }
 
   /** The incremental entry: persisted per-round base labels + the same

@@ -50,4 +50,32 @@ class SessionCacheSpec extends AnyFunSuite with SparkTest {
     assert(cache.size == 1)
     assert(cache.getOrBuild(spark, "x")(fail("evicted a live session's entry")) == "v")
   }
+
+  test("the table catalog and the edge memo re-read a lineitem rewritten in place") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.create("graft_memo_rewrite")
+    def lineitem(pairs: (Long, Long)*): Unit =
+      pairs.map { case (p, s) => (p, s, 1.0) }.toDF("l_partkey", "l_suppkey", "l_quantity")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    lineitem(1L -> 1L)
+    assert(graft.ops.Graph.bipartiteEdges(spark, dir).count() == 2)
+    lineitem(1L -> 1L, 2L -> 1L)
+    assert(graft.ops.Graph.bipartiteEdges(spark, dir).count() == 4)
+  }
+
+  test("the table catalog and the BPE merge memo re-read a documents rewritten in place") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.create("graft_memo_rewrite")
+    def documents(texts: String*): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def firstMerge: (Int, Int) = {
+      val (l, r, _) = graft.ext.TextAnalysis.bpeLearnedMerges(spark, dir).head
+      (l, r)
+    }
+    documents("abab abab")
+    assert(firstMerge == ('a'.toInt, 'b'.toInt))
+    documents("xy xy xy")
+    assert(firstMerge == ('x'.toInt, 'y'.toInt))
+  }
 }
