@@ -20,7 +20,7 @@ object SparkEntry {
     ops.Scans, ops.Joins, ops.Aggregates, ops.Windows, ops.SetOps, ops.Scalars,
     ops.AsofJoin, ops.Reshape, ops.Bucketed, ops.Formats, ops.Subqueries,
     ops.Behavior, ops.Graph, ops.Quality,
-    ext.Dedup, ext.Similarity, ext.TextAnalysis, ext.Multimodal, ext.Corpus,
+    ext.Dedup, ext.Similarity, ext.Ivf, ext.SemDedup, ext.TextAnalysis, ext.Multimodal, ext.Corpus,
     ext.Linkage,
     stream.Streaming)
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{IndexFamily, PersistedIndex, TempDirs, Warehouse}
-import graft.ext.{NearDup, Similarity}
+import graft.ext.{Ivf, NearDup, SemDedup}
 
 /** The shared index lifecycle, once per family value: a mutation that
   * crashed at any commit point — an append, delete or compaction, or a
@@ -24,7 +24,7 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
   }
 
   private val families: Seq[IndexFamily] = Seq(NearDup.MinhashIndex, NearDup.PhashIndex,
-    Similarity.SemdedupIndex, Similarity.IvfIndex)
+    SemDedup.SemdedupIndex, Ivf.IvfIndex)
 
   private def family(name: String): IndexFamily = families.find(_.store.name == name).get
 
@@ -207,12 +207,12 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
     val m = PersistedIndex.readManifest(dir)
     assert(m.batches == Seq(0L, 3L) && m.tombstones == Seq(2L))
     assert(m.ingestKeys == Seq("stream-0", "stream-1"))
-    val ivf = Similarity.readIvfManifest(dir)
-    assert(ivf == Similarity.IvfManifest(Seq(0L, 3L), 1.37, rebuildNeeded = false,
+    val ivf = Ivf.readIvfManifest(dir)
+    assert(ivf == Ivf.IvfManifest(Seq(0L, 3L), 1.37, rebuildNeeded = false,
       Map(0 -> 56L, 1 -> 36L), Seq("stream-0", "stream-1"), Seq(2L), 0.3831,
       Seq((0.0, 0.3831), (0.25, 0.2831))))
     PersistedIndex.writeManifest(dir, m.copy(batches = m.batches :+ 4L))
-    assert(Similarity.readIvfManifest(dir) == ivf.copy(batches = Seq(0L, 3L, 4L)))
+    assert(Ivf.readIvfManifest(dir) == ivf.copy(batches = Seq(0L, 3L, 4L)))
     // Without extra fields the record is byte-identical to the minhash,
     // pHash and semdedup manifests written before the template.
     PersistedIndex.writeManifest(dir, PersistedIndex.Manifest(Seq(0L, 1L), Seq(2L), Seq("k1")))

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity.Ivf
+import graft.ext.Ivf
 
 /** Physical-plan assertions — the properties that decide 100 TB behavior,
   * pinned so a refactor cannot silently regress them:
@@ -484,11 +484,11 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     // the whole index is a full corpus scan per query. Top-k stays
     // TakeOrderedAndProject (never a global sort of the probed cells).
     import org.apache.spark.sql.functions.col
-    val dir = graft.ext.Similarity.ensureIvfIndex(spark, sf)
+    val dir = graft.ext.Ivf.ensureIvfIndex(spark, sf)
     val e = graft.core.Tables(spark, sf, "embeddings")
     val anchor = e.filter(col("vec_id") === 0)
       .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    val p = graft.ext.Similarity
+    val p = graft.ext.Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(0L)), Ivf.TopK(10), nprobe = 4)
       .queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
@@ -505,9 +505,9 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     // plans as WindowGroupLimit, cutting to Q*k rows group-locally
     // before any exchange.
     import org.apache.spark.sql.functions.col
-    val dir = graft.ext.Similarity.ensureIvfIndex(spark, sf)
+    val dir = graft.ext.Ivf.ensureIvfIndex(spark, sf)
     val anchors = graft.core.Tables(spark, sf, "embeddings").filter(col("vec_id") < 8)
-    val p = graft.ext.Similarity
+    val p = graft.ext.Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4)
       .queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
@@ -523,9 +523,9 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     // code stream. The embedding column appears only in the bounded
     // shortlist re-rank scan.
     import org.apache.spark.sql.functions.col
-    val dir = graft.ext.Similarity.ensureIvfIndex(spark, sf)
+    val dir = graft.ext.Ivf.ensureIvfIndex(spark, sf)
     val anchors = graft.core.Tables(spark, sf, "embeddings").filter(col("vec_id") < 8)
-    val p = graft.ext.Similarity
+    val p = graft.ext.Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(anchors), Ivf.TopK(5), nprobe = 4,
         scorer = Ivf.Adc())
       .queryExecution.executedPlan.toString

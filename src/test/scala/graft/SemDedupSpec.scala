@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity
+import graft.ext.{SemDedup, Similarity}
 
 /** SemDeDup semantics gate (q_semdedup is a no-oracle entry — the k-means
   * cells have no SQL twin, so the contract is pinned here instead):
@@ -66,8 +66,8 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     val bSelf = Seq((5200L, bFresh.head._2.map(v => v + 1e-4f))) // dominated by 5100
     val b = b0 ++ bFresh ++ bSelf
     val dir = graft.core.TempDirs.create("graft_semdedup_ingest")
-    Similarity.writeSemdedupIndex(spark, dir, a.toDF("vec_id", "embedding"), tau = Tau)
-    val got = Similarity.semdedupIndexIngest(spark, dir,
+    SemDedup.writeSemdedupIndex(spark, dir, a.toDF("vec_id", "embedding"), tau = Tau)
+    val got = SemDedup.semdedupIndexIngest(spark, dir,
         b.toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
 
@@ -77,7 +77,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       .orderBy("cell").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     val fullCells = Similarity.ivfBuildWith((a ++ b).toDF("vec_id", "embedding"), cents).cells
-    val full = Similarity.semdedupPruneCells(fullCells, Tau)
+    val full = SemDedup.semdedupPruneCells(fullCells, Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     fullCells.unpersist()
     val batchIds = b.map(_._1).toSet
@@ -94,7 +94,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // FRESH batch-1 unique 5100 (which matches nothing in the seed) must
     // be dominated by it.
     val freshContent = bFresh.head._2
-    val got2 = Similarity.semdedupIndexIngest(spark, dir,
+    val got2 = SemDedup.semdedupIndexIngest(spark, dir,
         Seq((6000L, freshContent.map(v => v + 1e-4f))).toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(got2(6000L), "second ingest must see the first batch's members")
@@ -103,7 +103,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // ORPHAN. Another 5100-copy is still dominated — by batch 1's 5100,
     // which is committed...
     graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L, 1L)))
-    val got3 = Similarity.semdedupIndexIngest(spark, dir,
+    val got3 = SemDedup.semdedupIndexIngest(spark, dir,
         Seq((7000L, freshContent.map(v => v + 2e-4f))).toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(got3(7000L))
@@ -111,7 +111,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // next 5100-copy must SURVIVE: if orphaned batch dirs leaked into the
     // member read, 5100/6000/7000 would dominate it.
     graft.core.PersistedIndex.writeManifest(dir, graft.core.PersistedIndex.Manifest(Seq(0L)))
-    val got4 = Similarity.semdedupIndexIngest(spark, dir,
+    val got4 = SemDedup.semdedupIndexIngest(spark, dir,
         Seq((8000L, freshContent.map(v => v + 3e-4f))).toDF("vec_id", "embedding"), tau = Tau)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(!got4(8000L),
@@ -123,14 +123,14 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     val rnd = new scala.util.Random(53)
     val a = corpus
     val seedDir = graft.core.TempDirs.create("graft_semdedup_del_seed")
-    Similarity.writeSemdedupIndex(spark, seedDir, a.toDF("vec_id", "embedding"), tau = Tau)
+    SemDedup.writeSemdedupIndex(spark, seedDir, a.toDF("vec_id", "embedding"), tau = Tau)
     def copyOf(prefix: String): String = {
       val d = graft.core.TempDirs.create(prefix)
       graft.core.Warehouse.copyRecursively(new java.io.File(seedDir), new java.io.File(d))
       d
     }
     def ingest(dir: String, rows: Seq[(Long, Array[Float])]) =
-      Similarity.semdedupIndexIngest(spark, dir, rows.toDF("vec_id", "embedding"), tau = Tau)
+      SemDedup.semdedupIndexIngest(spark, dir, rows.toDF("vec_id", "embedding"), tau = Tau)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     val copy20 = Seq((5000L, a(20)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 1e-4f)))
     val copy21 = Seq((6000L, a(21)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 1e-4f)))
@@ -141,7 +141,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // Take down members 20 and 21: their copies must now SURVIVE — the
     // tombstoned members no longer dominate.
     val dir = copyOf("graft_semdedup_del_live")
-    Similarity.SemdedupStore.delete(dir, Seq(20L, 21L).toDF("vec_id"))
+    SemDedup.SemdedupStore.delete(dir, Seq(20L, 21L).toDF("vec_id"))
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.size == 1)
     assert(!ingest(dir, copy20)(5000L),
       "copy of the taken-down member 20 was still suppressed")
@@ -152,7 +152,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // Compaction: members physically dropped, ledger cleared, batches
     // merged — and a post-compaction ingest still sees the takedown.
     val memBefore = spark.read.parquet(s"$dir/members").count()
-    Similarity.semdedupIndexCompact(spark, dir)
+    SemDedup.semdedupIndexCompact(spark, dir)
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1)
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty, "ledger not cleared")
     val mem = spark.read.parquet(s"$dir/members")
@@ -173,7 +173,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     val rnd = new scala.util.Random(71)
     val a = corpus
     val dir = graft.core.TempDirs.create("graft_semdedup_stream_spec")
-    Similarity.writeSemdedupIndex(spark, dir, a.toDF("vec_id", "embedding"), tau = Tau)
+    SemDedup.writeSemdedupIndex(spark, dir, a.toDF("vec_id", "embedding"), tau = Tau)
     // Two files + maxFilesPerTrigger=1 => two real micro-batches with
     // MONOTONE ids (the documented ingest invariant): batch 1 carries a
     // near-copy of member 30 (must be suppressed) and a fresh unique;
@@ -192,7 +192,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       .writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         if (!b.isEmpty) {
-          Similarity.semdedupIndexIngest(spark, dir, b, tau = Tau,
+          SemDedup.semdedupIndexIngest(spark, dir, b, tau = Tau,
             ingestKey = Some(s"stream-$batchId")).queryExecution.toRdd.count()
           ()
         }
@@ -219,7 +219,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // re-published (no new batch dir, member count unchanged).
     val batchesBefore = graft.core.PersistedIndex.readManifest(dir).batches
     val membersBefore = spark.read.parquet(s"$dir/members").count()
-    val replayed = Similarity.semdedupIndexIngest(spark, dir,
+    val replayed = SemDedup.semdedupIndexIngest(spark, dir,
         b1.toDF("vec_id", "embedding"), tau = Tau, ingestKey = Some("stream-0"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(replayed == Map(5000L -> true, 5001L -> false),
@@ -231,10 +231,10 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
 
   test("distributed prune matches the naive dominance rule on the same cells") {
     import spark.implicits._
-    val cells = Similarity.semdedupCells(corpus.toDF("vec_id", "embedding"),
+    val cells = SemDedup.semdedupCells(corpus.toDF("vec_id", "embedding"),
       targetCell = 64).persist()
     try {
-      val staged = Similarity.semdedupPruneCells(cells, Tau)
+      val staged = SemDedup.semdedupPruneCells(cells, Tau)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
 
       val assigned = cells.collect()
@@ -252,7 +252,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
 
   test("planted near-duplicates are removed, originals kept") {
     import spark.implicits._
-    val result = Similarity
+    val result = SemDedup
       .semdedupPrune(corpus.toDF("vec_id", "embedding"), Tau, targetCell = 64)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(result.size == NBase + NPlanted)
@@ -281,7 +281,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     val big = base ++ (0 until NPlanted).map { i =>
       (2000L + i, base(i)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.02f))
     }
-    val cells = Similarity.semdedupCells(big.toDF("vec_id", "embedding"),
+    val cells = SemDedup.semdedupCells(big.toDF("vec_id", "embedding"),
       targetCell = 2).persist()
     try {
       val assigned = cells.collect()
@@ -289,7 +289,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       assert(assigned.length == big.size)
       assert(assigned.map(_._1).distinct.length == assigned.length)
 
-      val staged = Similarity.semdedupPruneCells(cells, Tau)
+      val staged = SemDedup.semdedupPruneCells(cells, Tau)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
       val naive = assigned.map { case (id, emb, cell) =>
         id -> assigned.exists { case (id2, emb2, cell2) =>
@@ -322,8 +322,8 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       (2000L + i, base(i)._2.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.02f))
     } :+ zero
     val df = big.toDF("vec_id", "embedding")
-    val closure = Similarity.semdedupCells(df, targetCell = 2).persist()
-    val joined = Similarity.semdedupCells(df, targetCell = 2,
+    val closure = SemDedup.semdedupCells(df, targetCell = 2).persist()
+    val joined = SemDedup.semdedupCells(df, targetCell = 2,
       forceJoinAssign = true).persist()
     try {
       val cMap = closure.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -334,7 +334,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       // dominance rule (the same end-to-end contract the closure test pins).
       val assigned = joined.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getLong(2)))
-      val staged = Similarity.semdedupPruneCells(joined, Tau)
+      val staged = SemDedup.semdedupPruneCells(joined, Tau)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
       val naive = assigned.map { case (id, emb, cell) =>
         id -> assigned.exists { case (id2, emb2, cell2) =>
@@ -357,16 +357,16 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     }.toDF("vec_id", "embedding")
     val seed = new java.io.File(TempDirs.create("graft_semdedup_caches"), "seed")
     Warehouse.ensureSeed(seed) { d =>
-      Similarity.writeSemdedupIndex(spark, d, corpus.toDF("vec_id", "embedding"), tau = Tau)
+      SemDedup.writeSemdedupIndex(spark, d, corpus.toDF("vec_id", "embedding"), tau = Tau)
     }
-    val expected = Similarity.semdedupIndexIngest(spark, seed.getPath, batch, tau = Tau,
+    val expected = SemDedup.semdedupIndexIngest(spark, seed.getPath, batch, tau = Tau,
         dryRun = true)
       .filter(col("removed")).select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(expected.nonEmpty, "the planted copies must be suppressed somewhere")
-    val cells = Similarity.ensurePurgeCellsCache(spark, seed.getPath, batch)
+    val cells = SemDedup.ensurePurgeCellsCache(spark, seed.getPath, batch)
     assert(cells.toSet == expected)
-    val (victims, prevRemoved) = Similarity.ensureRebuildCaches(spark, seed.getPath)
+    val (victims, prevRemoved) = SemDedup.ensureRebuildCaches(spark, seed.getPath)
     def ids(path: String): Set[Long] = spark.read.parquet(path).collect().map(_.getLong(0)).toSet
     val (v0, r0) = (ids(victims), ids(prevRemoved))
     assert(r0.nonEmpty && v0.nonEmpty)
@@ -378,20 +378,20 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     val purgeDir = new java.io.File(seed.getPath + "-purge-cells")
     new java.io.File(purgeDir, "_SEEDED").delete()
     java.nio.file.Files.write(new java.io.File(purgeDir, "cells").toPath, "7".getBytes)
-    assert(Similarity.ensurePurgeCellsCache(spark, seed.getPath, batch).toSet == expected)
+    assert(SemDedup.ensurePurgeCellsCache(spark, seed.getPath, batch).toSet == expected)
     val rebuildDir = new java.io.File(seed.getPath + "-rebuild-caches")
     new java.io.File(rebuildDir, "_SEEDED").delete()
     Warehouse.deleteRecursively(new java.io.File(victims))
-    val (victims2, prevRemoved2) = Similarity.ensureRebuildCaches(spark, seed.getPath)
+    val (victims2, prevRemoved2) = SemDedup.ensureRebuildCaches(spark, seed.getPath)
     assert(ids(victims2) == v0 && ids(prevRemoved2) == r0)
   }
 
   test("survivors are pairwise non-duplicate within every cell") {
     import spark.implicits._
-    val cells = Similarity.semdedupCells(corpus.toDF("vec_id", "embedding"),
+    val cells = SemDedup.semdedupCells(corpus.toDF("vec_id", "embedding"),
       targetCell = 64).persist()
     try {
-      val kept = Similarity.semdedupPruneCells(cells, Tau)
+      val kept = SemDedup.semdedupPruneCells(cells, Tau)
         .filter(!col("removed")).collect().map(_.getLong(0)).toSet
       val assigned = cells.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
@@ -412,15 +412,15 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // bare `>= tau` would remove 2 and 3.
     def vec(xs: Float*): Array[Float] = xs.toArray ++ Array.fill(Dim - xs.size)(0f)
     val (v1, v2, v3) = ((1L, vec(1f, 0f)), (2L, vec(0f, 0f)), (3L, vec(0f, 1f)))
-    val pruned = Similarity.semdedupPruneCells(Seq(v1, v2, v3)
+    val pruned = SemDedup.semdedupPruneCells(Seq(v1, v2, v3)
         .map { case (id, e) => (id, e, 0) }.toDF("vec_id", "embedding", "cell"), 0.4)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(pruned == Map(1L -> false, 2L -> false, 3L -> false))
     // The ingest path: a one-vector seed trains the one centroid (1,0),
     // so the batch lands in the seed's cell.
     val dir = graft.core.TempDirs.create("graft_semdedup_zero_norm")
-    Similarity.writeSemdedupIndex(spark, dir, Seq(v1).toDF("vec_id", "embedding"), tau = 0.4)
-    val ingested = Similarity.semdedupIndexIngest(spark, dir,
+    SemDedup.writeSemdedupIndex(spark, dir, Seq(v1).toDF("vec_id", "embedding"), tau = 0.4)
+    val ingested = SemDedup.semdedupIndexIngest(spark, dir,
         Seq(v2, v3).toDF("vec_id", "embedding"), tau = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(ingested.toSet == Set((2L, 0L, false), (3L, 0L, false)))

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Similarity
-import graft.ext.Similarity.Ivf
+import graft.ext.Ivf
 
 /** ANN LSH quality gate: on a corpus with PLANTED near-duplicate vectors
   * the banded multi-probe pipeline must recover (nearly) all of them —
@@ -135,7 +135,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // nearest centroid.
     val index = Ivf.Frame(df)
     val found = (0 until NPlanted).count { i =>
-      val hits = Similarity
+      val hits = Ivf
         .ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4)
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
@@ -160,7 +160,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val lookup = corpus.toMap
     val index = Ivf.Frame(df, Some(refined))
     val found = (0 until NPlanted).count { i =>
-      val hits = Similarity.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4)
+      val hits = Ivf.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4)
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
     }
@@ -184,14 +184,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   test("widenedNprobe widens by inverse selectivity and clamps to the cell count") {
     // s = 0.1 → 10× the base width: same expected in-predicate candidate
     // budget as the unfiltered probe.
-    assert(Similarity.widenedNprobe(4, 1000L, 100L, 1000) == 40)
+    assert(Ivf.widenedNprobe(4, 1000L, 100L, 1000) == 40)
     // s = 1 (no-op predicate) → base width.
-    assert(Similarity.widenedNprobe(4, 1000L, 1000L, 1000) == 4)
+    assert(Ivf.widenedNprobe(4, 1000L, 1000L, 1000) == 4)
     // ultra-selective predicate clamps to the cell count (full sweep —
     // though the cutover sends this case to the exact branch anyway).
-    assert(Similarity.widenedNprobe(4, 1000000L, 10L, 300) == 300)
+    assert(Ivf.widenedNprobe(4, 1000000L, 10L, 300) == 300)
     // empty predicate: degenerate, stays at base (result is empty).
-    assert(Similarity.widenedNprobe(4, 1000L, 0L, 300) == 4)
+    assert(Ivf.widenedNprobe(4, 1000L, 0L, 300) == 4)
   }
 
   test("annFilteredSearch selective branch equals driver-side filtered brute force") {
@@ -205,7 +205,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val df = labeled.toDF("vec_id", "embedding", "label")
     val anchor = corpus.head._2 // vec 0
     val rest = df.filter(col("vec_id") =!= 0)
-    val got = Similarity
+    val got = Ivf
       .ivfQuery(Ivf.Frame(rest), Ivf.Anchor(anchor), Ivf.TopK(10), nprobe = 4,
         filter = Some(Ivf.Label.of(rest, 3)))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
@@ -217,7 +217,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(got == truth, s"filtered exact branch diverged:\n  got:   $got\n  truth: $truth")
     // Every returned row satisfies the predicate by construction of the
     // ground truth — and the exact branch marks cell = -1 (no quantizer).
-    assert(Similarity
+    assert(Ivf
       .ivfQuery(Ivf.Frame(rest), Ivf.Anchor(anchor), Ivf.TopK(10), 4,
         filter = Some(Ivf.Label.of(rest, 3)))
       .collect().forall(_.getInt(1) == -1))
@@ -237,7 +237,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val evens = (0 until NPlanted).filter(_ % 2 == 0)
     var found = 0
     evens.foreach { i =>
-      val rows = Similarity
+      val rows = Ivf
         .ivfQuery(Ivf.Frame(df), Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4,
           filter = Some(Ivf.Label.of(df, 3)))
         .collect()
@@ -286,10 +286,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val e = graft.core.Tables(spark, sf, "embeddings")
     val anchor = e.filter(col("vec_id") === 0)
       .head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-    val dir = Similarity.ensureIvfIndex(spark, sf)
+    val dir = Ivf.ensureIvfIndex(spark, sf)
     val cents = spark.read.parquet(s"$dir/centroids").orderBy("cell_id").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    val mem = Similarity
+    val mem = Ivf
       .ivfQuery(Ivf.Frame(e.filter(col("vec_id") =!= 0), Some(cents)),
         Ivf.Anchor(anchor), Ivf.TopK(10), nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
@@ -308,7 +308,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_range")
-    Similarity.writeIvfIndex(spark, dir, df)
+    Ivf.writeIvfIndex(spark, dir, df)
     val lookup = corpus.toMap
     val anchor = lookup(3L)
     val cents = spark.read.parquet(s"$dir/centroids").count().toInt
@@ -317,7 +317,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // rounds HALF_UP to 4 dp; the twin must too).
     def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     val tau = 0.25
-    val got = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
+    val got = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
         Ivf.Range(tau), nprobe = cents)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val brute = corpus.filter(_._1 != 3L)
@@ -329,7 +329,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // Recall: the planted twin (cos ~0.998) is the ONLY vector above 0.9,
     // and a narrow 4-cell probe must still surface it (same cell as its
     // near-identical source).
-    val tight = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
+    val tight = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor, Some(3L)),
         Ivf.Range(0.9), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     assert(tight == Seq(1003L),
@@ -341,13 +341,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivfpq_range")
-    Similarity.writeIvfIndex(spark, dir, df)
-    val cb = Similarity.readIvfCodebook(spark, dir)
+    Ivf.writeIvfIndex(spark, dir, df)
+    val cb = Ivf.readIvfCodebook(spark, dir)
     val lookup = corpus.toMap
     // Empirical margin audit: the codes-only pre-filter at tau - margin
     // keeps every true match iff per-pair |ADC - exact| < margin. Audit
     // the WHOLE corpus against 5 anchors.
-    val cents = Similarity.readIvfCentroids(spark, dir)
+    val cents = Ivf.readIvfCentroids(spark, dir)
     val rows = spark.read.parquet(s"$dir/postings")
       .select(col("vec_id"), col("embedding"), col("code"),
         col("cell_id").cast("int")).collect()
@@ -360,7 +360,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       rows.foreach { case (_, emb, code, cell) =>
         val exact = cos(a, emb)
         val err = math.abs(
-          Similarity.adcApproxResidual(cb, cents, cell, a, code) - exact)
+          Ivf.adcApproxResidual(cb, cents, cell, a, code) - exact)
         if (err > maxErr) maxErr = err
         if (exact >= 0.25 && err > maxErrQuarter) maxErrQuarter = err
       }
@@ -371,7 +371,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // so the tightest applicable ladder bound governs. The whole-corpus
     // worst TRUE-MATCH-side error must sit inside the derived margin,
     // or the pre-filter could drop a true match.
-    val manifest = Similarity.readIvfManifest(dir)
+    val manifest = Ivf.readIvfManifest(dir)
     assert(manifest.adcErr > 0.0 && manifest.adcErr < 1.0,
       s"build did not commit a sane audited ADC error: ${manifest.adcErr}")
     assert(manifest.adcErrLadder.nonEmpty, "no conditioned ladder committed")
@@ -383,31 +383,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       case _ =>
     }
     assert(manifest.adcErrLadder.forall(_._2 <= manifest.adcErr))
-    val margin = Similarity.adcMarginFor(manifest, tau = 0.25)
-    assert(margin >= Similarity.AdcRangeMargin)
+    val margin = Ivf.adcMarginFor(manifest, tau = 0.25)
+    assert(margin >= Ivf.AdcRangeMargin)
     assert(maxErrQuarter < margin,
       f"ADC error $maxErrQuarter%.4f (exact>=0.25 pairs) exceeds the derived margin $margin%.4f")
     // A negative tau falls back to the unconditional (all-pairs) bound.
-    assert(Similarity.adcMarginFor(manifest, tau = -0.5) >=
-      manifest.adcErr * Similarity.AdcMarginHeadroom)
+    assert(Ivf.adcMarginFor(manifest, tau = -0.5) >=
+      manifest.adcErr * Ivf.AdcMarginHeadroom)
     // A synthetic high-error audit (a distribution this codebook fits
     // badly) must WIDEN the margin rather than silently dropping matches.
-    assert(Similarity.adcMarginFor(
+    assert(Ivf.adcMarginFor(
       manifest.copy(adcErrLadder = Seq(0.0 -> 0.5, 0.25 -> 0.5)), tau = 0.25) >= 0.85)
     // Ledger invariant: mutators carry the audit forward — only a
     // retrain (rebuild) may change it.
-    Similarity.ivfIndexAppend(spark, dir,
+    Ivf.ivfIndexAppend(spark, dir,
       Seq((9001L, lookup(0L).map(x => (x * 0.99f)))).toDF("vec_id", "embedding"))
-    assert(Similarity.readIvfManifest(dir).adcErr == manifest.adcErr,
+    assert(Ivf.readIvfManifest(dir).adcErr == manifest.adcErr,
       "append did not preserve the audited ADC error")
     // With every error inside the margin, the ADC range is COMPLETE: it
     // must equal the full-precision range row-for-row, at a broad tau
     // (data-sized result) and at the planted-twin tau.
     Seq(0.25, 0.9).foreach { tau =>
-      val adc = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
+      val adc = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
           Ivf.Range(tau), nprobe = 8, scorer = Ivf.Adc())
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-      val full = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
+      val full = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(3L), Some(3L)),
           Ivf.Range(tau), nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
       assert(adc == full,
@@ -420,10 +420,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_range_batch")
-    Similarity.writeIvfIndex(spark, dir, df)
+    Ivf.writeIvfIndex(spark, dir, df)
     val nAnchors = 5
     val tau = 0.25
-    val batchOut = Similarity
+    val batchOut = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
         Ivf.Range(tau), nprobe = 8)
       .collect()
@@ -433,7 +433,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       }
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
-      val single = Similarity
+      val single = Ivf
         .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
           Ivf.Range(tau), nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
@@ -450,9 +450,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_batch")
-    Similarity.writeIvfIndex(spark, dir, df)
+    Ivf.writeIvfIndex(spark, dir, df)
     val nAnchors = 5
-    val batchOut = Similarity
+    val batchOut = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
         Ivf.TopK(5), nprobe = 4)
       .collect()
@@ -462,7 +462,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       }
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
-      val single = Similarity
+      val single = Ivf
         .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
           Ivf.TopK(5), nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
@@ -479,10 +479,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val labeled = corpus.map { case (id, emb) => (id, emb, if (id % 2 == 0) 3 else 1) }
     val df = labeled.toDF("vec_id", "embedding", "label")
     val dir = graft.core.TempDirs.create("graft_ivf_fbatch")
-    Similarity.writeIvfIndex(spark, dir, df)
+    Ivf.writeIvfIndex(spark, dir, df)
     val (n, m) = (520L, 260L)
     val nAnchors = 5
-    val batchOut = Similarity
+    val batchOut = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
         Ivf.TopK(5), nprobe = 4, filter = Some(Ivf.Label(3, n, m)))
       .collect()
@@ -492,7 +492,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       }
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
-      val single = Similarity
+      val single = Ivf
         .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
           Ivf.TopK(5), nprobe = 4, filter = Some(Ivf.Label(3, n, m)))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
@@ -517,9 +517,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     df.coalesce(1).write.mode("overwrite")
       .parquet(new java.io.File(sfDir, "embeddings.parquet").getPath)
     val seedDir = graft.core.TempDirs.create("graft_ann_ingest_seed")
-    Similarity.IvfIndex.write(seedDir, df.filter(col("vec_id") < 1000))
+    Ivf.IvfIndex.write(seedDir, df.filter(col("vec_id") < 1000))
     // The IVF family, seeded from this corpus instead of a fixture.
-    val ivf = Similarity.IvfIndex
+    val ivf = Ivf.IvfIndex
     val family = new graft.core.IndexFamily {
       def store = ivf.store
       val table = ivf.table
@@ -533,7 +533,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     }
     val lookup = corpus.toMap
     val got = Scenario(family, "unused", Seq(Stream(r => r.slice(r.cut))), (r, _) =>
-      Similarity.ivfQuery(Ivf.Stored(spark, r.dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(10),
+      Ivf.ivfQuery(Ivf.Stored(spark, r.dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(10),
         nprobe = 4))(spark, sfDir)
       .collect().map(_.getLong(0)).toSeq
     assert(got.head == 1000L, s"streamed row not at rank 1: $got")
@@ -546,19 +546,19 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_compact")
     // Seed + two appends → three committed batches.
-    Similarity.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 400))
-    Similarity.ivfIndexAppend(spark, dir,
+    Ivf.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 400))
+    Ivf.ivfIndexAppend(spark, dir,
       df.filter(col("vec_id") >= 400 && col("vec_id") < 1000))
-    Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 1000))
+    Ivf.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 1000))
     val lookup = corpus.toMap
-    def probe(i: Int) = Similarity
+    def probe(i: Int) = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(5), nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     def batchDirs() = Option(new java.io.File(dir, "postings").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id=")).map(_.getName).sorted
     val before = (0 until 5).map(probe)
-    assert(Similarity.readIvfManifest(dir).batches.size == 3)
+    assert(Ivf.readIvfManifest(dir).batches.size == 3)
     assert(batchDirs().length == 3)
 
     // Crash window: a staged compact dir present but no manifest swap —
@@ -568,14 +568,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert((0 until 5).map(probe) == before)
     graft.core.Warehouse.deleteRecursively(orphan)
 
-    Similarity.ivfIndexCompact(spark, dir)
+    Ivf.ivfIndexCompact(spark, dir)
     // One referenced batch, old dirs GC'd, probes row-identical.
-    val m = Similarity.readIvfManifest(dir)
+    val m = Ivf.readIvfManifest(dir)
     assert(m.batches.size == 1, s"manifest still lists ${m.batches}")
     assert(batchDirs().length == 1, s"old batch dirs not GC'd: ${batchDirs().mkString(",")}")
     assert((0 until 5).map(probe) == before, "compaction changed probe output")
     // Idempotent on a single-batch index.
-    Similarity.ivfIndexCompact(spark, dir)
+    Ivf.ivfIndexCompact(spark, dir)
     assert((0 until 5).map(probe) == before)
   }
 
@@ -592,13 +592,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .map { case (id, v) => (100000L + id, v.map(x => x * 0.999f)) }
       .toSeq.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_crash")
-    Similarity.writeIvfIndex(spark, dir, a)
+    Ivf.writeIvfIndex(spark, dir, a)
     val manifestPath = new java.io.File(dir, "manifest.json").toPath
     val preAppend = java.nio.file.Files.readAllBytes(manifestPath)
-    Similarity.ivfIndexAppend(spark, dir, batch)
+    Ivf.ivfIndexAppend(spark, dir, batch)
     val postAppend = java.nio.file.Files.readAllBytes(manifestPath)
     val lookup = corpus.toMap
-    def hits() = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
+    def hits() = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits().contains(100000L), "committed append row should be visible")
     java.nio.file.Files.write(manifestPath, preAppend)
@@ -621,31 +621,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .map { case (id, v) => (100000L + id, v.map(x => x * 0.999f)) }
       .toSeq.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_idem")
-    Similarity.writeIvfIndex(spark, dir, a)
-    Similarity.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
-    val m1 = Similarity.readIvfManifest(dir)
+    Ivf.writeIvfIndex(spark, dir, a)
+    Ivf.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
+    val m1 = Ivf.readIvfManifest(dir)
     assert(m1.ingestKeys == Seq("stream-7"))
     val lookup = corpus.toMap
-    def topIds() = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
+    def topIds() = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     val before = topIds()
     // Replay the SAME micro-batch (same key): everything must be unchanged.
-    Similarity.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
-    val m2 = Similarity.readIvfManifest(dir)
+    Ivf.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
+    val m2 = Ivf.readIvfManifest(dir)
     assert(m2 == m1, s"replayed append mutated the manifest: $m1 -> $m2")
     assert(topIds() == before)
     assert(topIds().distinct == topIds(), "duplicate vec_ids in top-k after replay")
     // A NEW key still appends; keys survive compaction so later replays
     // of either batch stay no-ops.
-    Similarity.ivfIndexAppend(spark, dir,
+    Ivf.ivfIndexAppend(spark, dir,
       batch.withColumn("vec_id", col("vec_id") + 10), ingestKey = Some("stream-8"))
-    assert(Similarity.readIvfManifest(dir).batches.size == 3)
-    Similarity.ivfIndexCompact(spark, dir)
-    val mc = Similarity.readIvfManifest(dir)
+    assert(Ivf.readIvfManifest(dir).batches.size == 3)
+    Ivf.ivfIndexCompact(spark, dir)
+    val mc = Ivf.readIvfManifest(dir)
     assert(mc.batches.size == 1 && mc.ingestKeys == Seq("stream-7", "stream-8"),
       s"ingest-key ledger lost across compaction: $mc")
     val afterCompact = topIds()
-    Similarity.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
+    Ivf.ivfIndexAppend(spark, dir, batch, ingestKey = Some("stream-7"))
     assert(topIds() == afterCompact, "post-compaction replay was not a no-op")
   }
 
@@ -659,10 +659,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       (100000L + i, corpus.head._2.map(x => x * (0.999f - i * 0.0001f)))
     }.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_delete")
-    Similarity.writeIvfIndex(spark, dir, a)
-    Similarity.ivfIndexAppend(spark, dir, twins)
+    Ivf.writeIvfIndex(spark, dir, a)
+    Ivf.ivfIndexAppend(spark, dir, twins)
     val lookup = corpus.toMap
-    def topIds(k: Int = 5) = Similarity
+    def topIds(k: Int = 5) = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L), Some(0L)), Ivf.TopK(k), nprobe = 4)
       .collect().map(_.getLong(0)).toSeq
     val before = topIds()
@@ -673,7 +673,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // swapped) must not affect probes.
     val manifestPath = new java.io.File(dir, "manifest.json").toPath
     val preDelete = java.nio.file.Files.readAllBytes(manifestPath)
-    Similarity.IvfStore.delete(dir, Seq(100000L, 100001L).toDF("vec_id"))
+    Ivf.IvfStore.delete(dir, Seq(100000L, 100001L).toDF("vec_id"))
     val postDelete = java.nio.file.Files.readAllBytes(manifestPath)
     java.nio.file.Files.write(manifestPath, preDelete)
     assert(topIds() == before, "uncommitted tombstones leaked into a probe")
@@ -686,7 +686,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(after.head == 100002L && after.length == 5,
       s"next-best should lead and k stay filled: $after")
     // ADC probes honor tombstones too.
-    val adc = Similarity
+    val adc = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L), Some(0L)), Ivf.TopK(5), nprobe = 4,
         scorer = Ivf.Adc())
       .collect().map(_.getLong(0)).toSeq
@@ -695,9 +695,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
 
     // Compaction materializes the deletion: probes identical, ledger
     // cleared, tombstone dirs GC'd, counts shrink by the dropped rows.
-    val preCounts = Similarity.readIvfManifest(dir).cellCounts.values.sum
-    Similarity.ivfIndexCompact(spark, dir)
-    val m = Similarity.readIvfManifest(dir)
+    val preCounts = Ivf.readIvfManifest(dir).cellCounts.values.sum
+    Ivf.ivfIndexCompact(spark, dir)
+    val m = Ivf.readIvfManifest(dir)
     assert(m.tombstoneBatches.isEmpty, s"ledger not cleared: $m")
     assert(m.cellCounts.values.sum == preCounts - 2,
       s"sentinel counts should drop by the 2 deleted rows: $preCounts -> ${m.cellCounts.values.sum}")
@@ -708,7 +708,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
 
     // The documented resurrect contract: append AFTER compaction makes
     // the id visible again.
-    Similarity.ivfIndexAppend(spark, dir,
+    Ivf.ivfIndexAppend(spark, dir,
       Seq((100000L, corpus.head._2.map(x => x * 0.999f))).toDF("vec_id", "embedding"))
     assert(topIds().contains(100000L), "re-added id should be visible after compaction")
   }
@@ -717,8 +717,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val a = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_drift")
-    Similarity.writeIvfIndex(spark, dir, a)
-    val m0 = Similarity.readIvfManifest(dir)
+    Ivf.writeIvfIndex(spark, dir, a)
+    val m0 = Ivf.readIvfManifest(dir)
     assert(!m0.rebuildNeeded,
       s"fresh index over the near-uniform corpus must start balanced: $m0")
     // Drifted ingest: many near-copies of ONE vector — every row lands in
@@ -730,19 +730,19 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val skewed = (0 until 400).map { i =>
       (200000L + i, src.map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.01f))
     }.toDF("vec_id", "embedding")
-    Similarity.ivfIndexAppend(spark, dir, skewed)
-    val m1 = Similarity.readIvfManifest(dir)
+    Ivf.ivfIndexAppend(spark, dir, skewed)
+    val m1 = Ivf.readIvfManifest(dir)
     assert(m1.imbalance > m0.imbalance && m1.rebuildNeeded,
       s"skewed append should trip the drift sentinel: before=$m0 after=$m1")
     // The operator response: retrain the quantizer over the full corpus.
     // Balance must be restored (the 400-copy cluster now gets cells of
     // its own) and the index stays correct (planted hit still surfaces).
-    Similarity.writeIvfIndex(spark, dir, a.unionByName(skewed))
-    val m2 = Similarity.readIvfManifest(dir)
+    Ivf.writeIvfIndex(spark, dir, a.unionByName(skewed))
+    val m2 = Ivf.readIvfManifest(dir)
     assert(m2.imbalance < m1.imbalance && !m2.rebuildNeeded,
       s"rebuild should restore balance: drifted=$m1 rebuilt=$m2")
     val lookup = corpus.toMap
-    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
+    val hits = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(0L), s"rebuilt index lost the planted neighbor of vec 1000: $hits")
   }
@@ -752,20 +752,20 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivf_rebuild")
-    Similarity.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 400))
-    Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 400),
+    Ivf.writeIvfIndex(spark, dir, df.filter(col("vec_id") < 400))
+    Ivf.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 400),
       ingestKey = Some("k1"))
-    Similarity.IvfStore.delete(dir, Seq(7L).toDF("vec_id"))
+    Ivf.IvfStore.delete(dir, Seq(7L).toDF("vec_id"))
     val lookup = corpus.toMap
     val rnd = new scala.util.Random(17)
     val skew = (0 until 400).map { i =>
       (300000L + i, lookup(3L).map(v => v + (rnd.nextDouble() * 2 - 1).toFloat * 0.01f))
     }.toDF("vec_id", "embedding")
-    Similarity.ivfIndexAppend(spark, dir, skew)
-    assert(Similarity.readIvfManifest(dir).rebuildNeeded,
+    Ivf.ivfIndexAppend(spark, dir, skew)
+    assert(Ivf.readIvfManifest(dir).rebuildNeeded,
       "skewed append should have tripped the sentinel")
-    Similarity.ivfIndexRebuild(spark, dir)
-    val m = Similarity.readIvfManifest(dir)
+    Ivf.ivfIndexRebuild(spark, dir)
+    val m = Ivf.readIvfManifest(dir)
     assert(!m.rebuildNeeded, s"rebuild left the sentinel tripped: $m")
     assert(m.batches == Seq(0L), s"rebuild should leave one batch: ${m.batches}")
     assert(m.tombstoneBatches.isEmpty, "rebuild should clear the tombstone ledger")
@@ -777,12 +777,12 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(!ids.contains(7L), "tombstoned id survived the rebuild")
     assert(ids.size == corpus.size + 400 - 1)
     // A pre-rebuild micro-batch replay stays a no-op.
-    Similarity.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 400),
+    Ivf.ivfIndexAppend(spark, dir, df.filter(col("vec_id") >= 400),
       ingestKey = Some("k1"))
-    assert(Similarity.readIvfManifest(dir).batches == Seq(0L),
+    assert(Ivf.readIvfManifest(dir).batches == Seq(0L),
       "replayed ingestKey re-appended after rebuild")
     // Planted recall preserved by the retrained quantizer.
-    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
+    val hits = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(1000L)), Ivf.TopK(3), nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(0L), s"rebuilt index lost the planted neighbor: $hits")
   }
@@ -800,18 +800,18 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .map { case (id, v) => (100000L + id, v.map(x => (x * 0.999f))) }
       .toSeq.toDF("vec_id", "embedding") // near-copies of planted vectors, new ids
     val dir = graft.core.TempDirs.create("graft_ivf_append")
-    Similarity.writeIvfIndex(spark, dir, a)
-    Similarity.ivfIndexAppend(spark, dir, batch)
-    val cents = Similarity.readIvfCentroids(spark, dir)
+    Ivf.writeIvfIndex(spark, dir, a)
+    Ivf.ivfIndexAppend(spark, dir, batch)
+    val cents = Ivf.readIvfCentroids(spark, dir)
     val full = a.unionByName(batch)
     val lookup = corpus.toMap
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     (0 until 5).foreach { i =>
       val anchor = lookup(i.toLong)
-      val appended = rows(Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor),
+      val appended = rows(Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(anchor),
         Ivf.TopK(5), nprobe = 4))
-      val rebuilt = rows(Similarity.ivfQuery(Ivf.Frame(full, Some(cents)), Ivf.Anchor(anchor),
+      val rebuilt = rows(Ivf.ivfQuery(Ivf.Frame(full, Some(cents)), Ivf.Anchor(anchor),
         Ivf.TopK(5), nprobe = 4))
       assert(appended == rebuilt,
         s"probe $i diverged after append:\n  appended: $appended\n  rebuilt: $rebuilt")
@@ -872,7 +872,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   // ---- IVF-PQ ----------------------------------------------------------
 
   test("pqShortlist scales with probe width and is unchanged at the tuned default") {
-    import Similarity.{pqShortlist, PqRefine}
+    import Ivf.{pqShortlist, PqRefine}
     // Default width: exactly the historical k·refine — registry outputs,
     // goldens, and oracles are untouched by the scaling.
     assert(pqShortlist(10, PqRefine, 4) == 40)
@@ -899,25 +899,25 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val df = corpus.toDF("vec_id", "embedding")
     val cents = Similarity.seedCentroids(df)
-    val sample = Similarity.seedCentroidsK(df, Similarity.PqSample)
+    val sample = Similarity.seedCentroidsK(df, Ivf.PqSample)
     (cents, sample, corpus.map { case (id, v) => id -> Similarity.nearestCell(cents, v) }.toMap)
   }
 
   test("pqTrainResidual is deterministic and codes are M bytes") {
     val (cents, sample, cellOf) = residualSetup()
-    val cb1 = Similarity.pqTrainResidual(sample, cents)
-    val cb2 = Similarity.pqTrainResidual(sample, cents)
-    assert(cb1.m == Similarity.PqM && cb1.dsub == Dim / Similarity.PqM)
+    val cb1 = Ivf.pqTrainResidual(sample, cents)
+    val cb2 = Ivf.pqTrainResidual(sample, cents)
+    assert(cb1.m == Ivf.PqM && cb1.dsub == Dim / Ivf.PqM)
     (0 until cb1.m).foreach { sub =>
       cb1.cents(sub).zip(cb2.cents(sub)).foreach { case (a, b) =>
         assert(a.sameElements(b), s"codebook sub-space $sub not deterministic")
       }
     }
     val (id, v) = corpus.head
-    val code = Similarity.pqEncodeResidual(cb1, cents(cellOf(id)), v)
-    assert(code.length == Similarity.PqM,
-      s"code must be ${Similarity.PqM} bytes, got ${code.length}")
-    assert(Similarity.pqEncodeResidual(cb1, cents(cellOf(id)), v).sameElements(code),
+    val code = Ivf.pqEncodeResidual(cb1, cents(cellOf(id)), v)
+    assert(code.length == Ivf.PqM,
+      s"code must be ${Ivf.PqM} bytes, got ${code.length}")
+    assert(Ivf.pqEncodeResidual(cb1, cents(cellOf(id)), v).sameElements(code),
       "encoding must be deterministic")
   }
 
@@ -930,15 +930,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // wrong table indexing) fails here even though exact re-rank would
     // mask it downstream.
     val (cents, sample, cellOf) = residualSetup()
-    val cb = Similarity.pqTrainResidual(sample, cents)
+    val cb = Ivf.pqTrainResidual(sample, cents)
     val codes = corpus.map { case (id, v) =>
-      id -> Similarity.pqEncodeResidual(cb, cents(cellOf(id)), v)
+      id -> Ivf.pqEncodeResidual(cb, cents(cellOf(id)), v)
     }
     val lookup = corpus.toMap
     val found = (0 until NPlanted).count { i =>
       val q = lookup(1000L + i)
       val top = codes.filter(_._1 != 1000L + i)
-        .map { case (id, c) => (id, Similarity.adcApproxResidual(cb, cents, cellOf(id), q, c)) }
+        .map { case (id, c) => (id, Ivf.adcApproxResidual(cb, cents, cellOf(id), q, c)) }
         .sortBy { case (id, s) => (-s, id) }.take(3).map(_._1)
       top.contains(i.toLong)
     }
@@ -952,7 +952,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val index = Ivf.Frame(df)
     val lookup = corpus.toMap
     val found = (0 until NPlanted).count { i =>
-      val hits = Similarity.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4,
+      val hits = Ivf.ivfQuery(index, Ivf.Anchor(lookup(1000L + i)), Ivf.TopK(3), nprobe = 4,
           scorer = Ivf.Adc())
         .collect().map(_.getLong(0)).toSet
       hits.contains(i.toLong)
@@ -979,9 +979,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivfpq_batch")
-    Similarity.writeIvfIndex(spark, dir, df)
+    Ivf.writeIvfIndex(spark, dir, df)
     val nAnchors = 5
-    val batchOut = Similarity
+    val batchOut = Ivf
       .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchors(df.filter(col("vec_id") < nAnchors)),
         Ivf.TopK(5), nprobe = 4, scorer = Ivf.Adc())
       .collect()
@@ -991,7 +991,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       }
     val lookup = corpus.toMap
     (0 until nAnchors).foreach { i =>
-      val single = Similarity
+      val single = Ivf
         .ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(i.toLong), Some(i.toLong)),
           Ivf.TopK(5), nprobe = 4, scorer = Ivf.Adc())
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
@@ -1007,10 +1007,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .map { case (id, v) => (300000L + id, v.map(x => x * 0.999f)) }
       .toSeq.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivfpq_append")
-    Similarity.writeIvfIndex(spark, dir, a)
-    Similarity.ivfIndexAppend(spark, dir, batch)
+    Ivf.writeIvfIndex(spark, dir, a)
+    Ivf.ivfIndexAppend(spark, dir, batch)
     val lookup = corpus.toMap
-    val hits = Similarity.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4,
+    val hits = Ivf.ivfQuery(Ivf.Stored(spark, dir), Ivf.Anchor(lookup(0L)), Ivf.TopK(5), nprobe = 4,
         scorer = Ivf.Adc())
       .collect().map(_.getLong(0)).toSet
     assert(hits.contains(300000L),

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{NearDup, Similarity}
+import graft.ext.{Ivf, NearDup, SemDedup}
 
 /** Single-writer enforcement on the persisted index layouts: a live
   * concurrent writer fails fast, a crashed writer's stale lock is
@@ -168,23 +168,23 @@ class WriterLeaseSpec extends AnyFunSuite with SparkTest {
     val vecs = (0L until 64L).map(i =>
       (i, Array.fill(64)((rnd.nextDouble() * 2 - 1).toFloat)))
     val ivfDir = graft.core.TempDirs.create("graft_lease_ivf")
-    Similarity.writeIvfIndex(spark, ivfDir, vecs.toDF("vec_id", "embedding"))
+    Ivf.writeIvfIndex(spark, ivfDir, vecs.toDF("vec_id", "embedding"))
     java.nio.file.Files.write(lockOf(ivfDir).toPath, "other 0".getBytes)
     intercept[IllegalStateException] {
-      Similarity.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
+      Ivf.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
     }
     java.nio.file.Files.delete(lockOf(ivfDir).toPath)
-    Similarity.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
+    Ivf.IvfStore.delete(ivfDir, Seq(1L).toDF("vec_id"))
     assert(!lockOf(ivfDir).exists())
 
     val sdDir = graft.core.TempDirs.create("graft_lease_semdedup")
-    Similarity.writeSemdedupIndex(spark, sdDir, vecs.toDF("vec_id", "embedding"), tau = 0.9)
+    SemDedup.writeSemdedupIndex(spark, sdDir, vecs.toDF("vec_id", "embedding"), tau = 0.9)
     java.nio.file.Files.write(lockOf(sdDir).toPath, "other 0".getBytes)
     intercept[IllegalStateException] {
-      Similarity.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
+      SemDedup.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
     }
     java.nio.file.Files.delete(lockOf(sdDir).toPath)
-    Similarity.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
+    SemDedup.SemdedupStore.delete(sdDir, Seq(1L).toDF("vec_id"))
     assert(!lockOf(sdDir).exists())
 
     // The MinHash and pHash families: every mutator, rebuild included.
