@@ -20,8 +20,8 @@ object SparkEntry {
     ops.Scans, ops.Joins, ops.Aggregates, ops.Windows, ops.SetOps, ops.Scalars,
     ops.AsofJoin, ops.Reshape, ops.Bucketed, ops.Formats, ops.Subqueries,
     ops.Behavior, ops.Graph, ops.Quality,
-    ext.Dedup, ext.Similarity, ext.Ivf, ext.SemDedup, ext.TextAnalysis, ext.Multimodal, ext.Corpus,
-    ext.Linkage,
+    ext.Dedup, ext.Similarity, ext.Ivf, ext.SemDedup, ext.TextAnalysis, ext.Multimodal,
+    ext.Corpus, ext.Linkage,
     stream.Streaming)
 
   /** The registry in module order: no two entries share a name, nor do

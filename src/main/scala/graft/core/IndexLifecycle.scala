@@ -39,9 +39,6 @@ trait IndexFamily {
     */
   def rebuild(dir: String, corpus: DataFrame): Unit
 
-  /** Told of each scratch copy and the template it was copied from. */
-  def copied(scratch: String, template: String): Unit = ()
-
   /** Whether answering publishes (semdedup's answers are ingests), so that
     * even an entry with no timed step answers on a scratch copy.
     */
@@ -147,10 +144,8 @@ object IndexLifecycle {
     def apply(spark: SparkSession, sfDir: String): DataFrame = {
       val t = template(spark, sfDir)
       val r = if (timed.isEmpty && !family.answerWrites) t else {
-        val dir = Warehouse.scratchFromSeed(t.dir,
-          s"graft_${family.store.name.toLowerCase}_lifecycle")
-        family.copied(dir, t.dir)
-        new Run(spark, sfDir, t.seed, t.cut, dir, this)
+        new Run(spark, sfDir, t.seed, t.cut, Warehouse.scratchFromSeed(t.dir,
+          s"graft_${family.store.name.toLowerCase}_lifecycle"), this)
       }
       timed.foreach(run(r, _))
       r.probe(Some(tap))

@@ -45,9 +45,7 @@ object Corpus extends QueryModule {
   private def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     // spread (r17): the 8-gram digest explode is scan-side on both legs.
     val d = Tables.spread(spark, sfDir, "documents").withColumn("w", split(col("text"), " "))
-    val grams = d.select(col("doc_id"), explode(expr(
-      "transform(sequence(0, greatest(size(w) - 8, 0)), " +
-        "i -> xxhash64(concat_ws(' ', slice(w, i + 1, 8))))")).as("gh"))
+    val grams = d.select(col("doc_id"), explode(Dedup.gramDigests(8)).as("gh"))
     val evalGrams = grams.filter(col("doc_id") % 50 === 0).select("gh").distinct()
     val hits = grams.filter(col("doc_id") % 50 =!= 0)
       .join(evalGrams, "gh")

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -170,13 +170,13 @@ object Dedup extends QueryModule {
     * decontamination convention (ext/Corpus.scala); production runs ~50
     * tokens (Lee et al.), but the operator is width-independent integer
     * arithmetic and the fixture's ~100-token docs need a width the oracle
-    * actually exercises. The registry entry uses this default; spansOf /
-    * spansOfNaive take the width as a parameter — DedupSpec pins
+    * actually exercises. The registry entry uses this default; spansOf and
+    * DedupSpec's naive twin take the width as a parameter — it pins
     * staged==naive and exact boundaries at width 50, and SURVEY §14
     * ("Production-width span dedup receipt") records the production width
     * over the long-document fixture `ScaleGen longdocs` writes.
     */
-  private val SpanGram = 8
+  private[graft] val SpanGram = 8
 
   /** Substring-span dedup — the last dedup granularity below document
     * level (Lee et al., "Deduplicating Training Data Makes Language
@@ -212,21 +212,26 @@ object Dedup extends QueryModule {
   private def dedupSpans(spark: SparkSession, sfDir: String): DataFrame =
     spansOf(Tables(spark, sfDir, "documents"))
 
+  /** The digests of the `width`-word shingles of the word array column
+    * `w`, in start order: xxhash64 of the space-joined words. A document
+    * shorter than `width` words has one, its whole text. Span dedup and
+    * decontamination shingle through it, so widening the digest is one edit.
+    */
+  private[graft] def gramDigests(width: Int): Column = expr(s"transform(sequence(0, " +
+    s"greatest(size(w) - $width, 0)), i -> xxhash64(concat_ws(' ', slice(w, i + 1, $width))))")
+
   /** Gram-index span detection over the given docs, emitting hit
     * positions only for docs in `emitFor` (islands merged into maximal
     * spans). Shared by the naive twin (all docs) and the staged path
     * (representatives only).
     */
-  private def spanIslands(docs: DataFrame, emitFor: DataFrame, width: Int = SpanGram): DataFrame = {
+  private[graft] def spanIslands(docs: DataFrame, emitFor: DataFrame, width: Int = SpanGram): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
     val grams = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= width)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, size(w) - $width), " +
-          s"i -> xxhash64(concat_ws(' ', slice(w, i + 1, $width))))"))
-        .as(Seq("pos", "gh")))
+      .select(col("doc_id"), posexplode(gramDigests(width)).as(Seq("pos", "gh")))
     val dupDigests = grams.groupBy("gh")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)
@@ -245,15 +250,6 @@ object Dedup extends QueryModule {
         (max(col("pos")) + width - min(col("pos"))).cast(LongType).as("tok_len"),
         count(lit(1)).as("n_grams"))
   }
-
-  /** Naive twin (gram index over EVERY doc) — the reference
-    * implementation DedupSpec pins the staged path against. On a corpus
-    * with exact-copy cliques the hit set is copy-factor-sized: every
-    * position of every copy rides the shuffle and the island window
-    * (measured 41 s warm at 20x vs 2-4 s staged).
-    */
-  private[graft] def spansOfNaive(docs: DataFrame, width: Int = SpanGram): DataFrame =
-    spanIslands(docs, docs.select("doc_id"), width).orderBy("doc_id", "span_id")
 
   /** Staged spansOf — the 100 TB path, output-identical to the naive twin
     * (DedupSpec pins this). Same staging argument as StagedDedup, applied
@@ -402,28 +398,6 @@ object Dedup extends QueryModule {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-  }
-
-  /** Naive single-stage pipeline (reference implementation, used by the
-    * equivalence spec at sf0.001): signatures → LSH candidates → exact
-    * Jaccard verify on every candidate pair. Correct but pays a word-array
-    * shuffle + verify per pair — on corpora with exact-duplicate cliques
-    * (the common case) a k-copy group alone yields k(k-1)/2 verified
-    * pairs.
-    */
-  private[graft] def minhashNearDupNaive(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables(spark, sfDir, "documents")
-    val cands = lshCandidates(minhashSignatures(docs))
-    val words = docs.select(col("doc_id"),
-      array_distinct(split(col("text"), " ")).as("w"))
-    cands
-      .join(words.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("w", "wa"), "doc_a")
-      .join(words.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("w", "wb"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        round(size(array_intersect(col("wa"), col("wb"))).cast(DoubleType) /
-          size(array_union(col("wa"), col("wb"))), 4).as("jaccard"))
-      .filter(col("jaccard") >= 0.8)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Exact word-set Jaccard >= 0.8 verification of an explicit candidate
@@ -626,7 +600,7 @@ object Dedup extends QueryModule {
     */
   private def minhashTapOracle(tapName: String): String = s"""
       WITH cand AS (SELECT doc_id, dup_of
-                    FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
+                    FROM read_parquet('${OracleTap.Root}/$tapName/*.parquet')),
       w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS w
             FROM documents),
       v AS (
@@ -677,13 +651,13 @@ object Dedup extends QueryModule {
     // verified edge list, via recursive-CTE reachability (min reachable
     // rep per node == the propagation fixpoint), expanded to members
     // through the exact md5 groups.
-    "q_dedup_cluster_graph" -> QueryDef(dedupClusterGraph, Some("""
+    "q_dedup_cluster_graph" -> QueryDef(dedupClusterGraph, Some(s"""
       WITH RECURSIVE
       g AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
             FROM documents),
       nodes AS (SELECT DISTINCT rep FROM g),
       e0 AS (SELECT doc_a, doc_b
-             FROM read_parquet('/tmp/graft_oracle_aux/cluster_graph_edges/*.parquet')),
+             FROM read_parquet('${OracleTap.Root}/cluster_graph_edges/*.parquet')),
       edges AS (SELECT doc_a AS src, doc_b AS dst FROM e0
                 UNION ALL SELECT doc_b AS src, doc_a AS dst FROM e0),
       reach(node, lbl) AS (
@@ -851,7 +825,7 @@ object Dedup extends QueryModule {
     // verification + threshold, member expansion, ordering — from that
     // tap plus the documents table. Only the MinHash kernel itself stays
     // outside the oracle (it has its own staged==naive equivalence spec).
-    "q_minhash_near_dup" -> QueryDef(minhashNearDup, Some("""
+    "q_minhash_near_dup" -> QueryDef(minhashNearDup, Some(s"""
       WITH g AS (
         SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
         FROM documents),
@@ -865,7 +839,7 @@ object Dedup extends QueryModule {
         SELECT c.doc_a, c.doc_b,
                round(CAST(len(list_filter(list_distinct(wa.w), x -> list_contains(wb.w, x))) AS DOUBLE)
                      / len(list_distinct(wa.w || wb.w)), 4) AS jaccard
-        FROM read_parquet('/tmp/graft_oracle_aux/minhash_rep_candidates/*.parquet') c
+        FROM read_parquet('${OracleTap.Root}/minhash_rep_candidates/*.parquet') c
         JOIN w wa ON c.doc_a = wa.doc_id
         JOIN w wb ON c.doc_b = wb.doc_id),
       expanded AS (

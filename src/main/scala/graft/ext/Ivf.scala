@@ -1,13 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Seed, Tables, Warehouse}
 import graft.core.IndexLifecycle.{Append, Bake, Compact, Rebuild, Run, Scenario, Stream, Takedown}
-import graft.functions.SimHash64
 
 /** IVF (inverted-file) vector search over `embeddings`: the one query
   * builder every IVF entry probes through, the persisted IVF index
@@ -15,6 +14,7 @@ import graft.functions.SimHash64
   */
 object Ivf extends QueryModule {
   import Similarity._
+  import VectorIndex._
 
   // ---- One IVF query builder -------------------------------------------
   //
@@ -290,8 +290,8 @@ object Ivf extends QueryModule {
     postings match {
       case Ivf.Stored(s, dir) => new IvfLive {
         val spark = s
-        lazy val centroids = readIvfCentroids(s, dir)
-        lazy val codebook = readIvfCodebook(s, dir)
+        lazy val centroids = IvfCentroids.read(s, dir)
+        lazy val codebook = Codebooks.read(s, dir)
         lazy val manifest = readIvfManifest(dir)
         def scan(cells: Option[Seq[Int]]) =
           IvfStore.live(s, dir, manifest.core, cells.map(c => col("cell_id").isin(c: _*)))
@@ -318,11 +318,6 @@ object Ivf extends QueryModule {
       }
     }
 
-  /** Row `id`'s embedding, read from the table. */
-  private def vecOf(e: DataFrame, id: Long): Array[Float] =
-    e.filter(col("vec_id") === id).head().getSeq[Float](e.columns.indexOf("embedding")).toArray
-
-
   // ---- Persisted IVF index: build once, probe many ---------------------
 
   private val IvfRoot = "/tmp/graft_ivf"
@@ -331,17 +326,6 @@ object Ivf extends QueryModule {
     * manifest flags the quantizer for rebuild — see [[IvfManifest]].
     */
   private[graft] val IvfDriftThreshold = 4.0
-
-  /** Per-fixture seed tag (core.Tables.fixtureTag over embeddings).
-    * "v6": PQ codes are RESIDUAL-encoded (IVFADC, r11) — probes against a
-    * v5 whole-vector-coded layout would ADC-score garbage. Earlier: v5
-    * added the manifest's build-time audited ADC error (the range margin
-    * derives from it), v4 moved PQ codes to the Ks=256 codebook, v3 added
-    * metadata columns (label) for filtered probes, v2 the PQ `code`
-    * column + `codebooks/`. The version prefix keeps an earlier seeded
-    * dir from being adopted with the wrong schema/codebook.
-    */
-  private[graft] def ivfTag(sfDir: String): String = Tables.fixtureTag("v6", sfDir, "embeddings")
 
   /** The IVF view of the postings layout's commit record
     * ([[PersistedIndex.Manifest]] — batches, tombstones and ingest keys
@@ -375,6 +359,12 @@ object Ivf extends QueryModule {
           "adc_err" -> adcErr.toString,
           "adc_err_ladder" -> pairs(adcErrLadder)))
     }
+
+    /** This manifest over per-cell postings `counts`, the sentinel restamped. */
+    def counted(counts: Map[Int, Long]): IvfManifest = {
+      val imb = cellImbalance(counts.values)
+      copy(imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold, cellCounts = counts)
+    }
   }
 
   object IvfManifest {
@@ -396,17 +386,10 @@ object Ivf extends QueryModule {
   private[graft] def readIvfManifest(dir: String): IvfManifest =
     IvfManifest.of(PersistedIndex.readManifest(dir))
 
-  /** Per-cell postings counts of an assigned corpus (bounded collect: C
-    * rows — the sentinel's unit of account).
-    */
-  private def cellCountsOf(cells: DataFrame): Map[Int, Long] =
-    cells.groupBy(col("cell")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
   /** Per-cell postings counts of a JUST-WRITTEN `cell_id=N` partition
     * layout, from the parquet FOOTERS (exact row counts, written by the
     * writer) — a driver-side metadata walk over the batch's own files,
-    * zero Spark jobs. This is how the append keeps its sentinel
+    * zero Spark jobs. This is how a write keeps its sentinel
     * bookkeeping O(batch files) without a second pass over the rows it
     * just wrote.
     */
@@ -440,7 +423,7 @@ object Ivf extends QueryModule {
 
   /** One-time persisted IVF index (marker-gated, untimed economics like
     * the Derby/bucketed/blob seeds): the cell-assigned corpus written
-    * `partitionBy("batch_id", "cell_id")` — so a probe is a
+    * by (batch_id, cell_id) ([[VectorIndex.ByCell]]) — so a probe is a
     * PARTITION-PRUNED scan that never opens unprobed cells' files — plus
     * the centroid table and the commit manifest. This is the ANN shape a
     * 100 TB pipeline actually runs: q_ann_ivf's build-then-probe
@@ -457,7 +440,7 @@ object Ivf extends QueryModule {
     * same-quantizer-equivalent.
     */
   private[graft] def ensureIvfIndex(spark: SparkSession, sfDir: String): String = {
-    Warehouse.ensureSeed(new java.io.File(IvfRoot, ivfTag(sfDir))) { dir =>
+    Warehouse.ensureSeed(new java.io.File(IvfRoot, tag(sfDir))) { dir =>
       val e = Tables(spark, sfDir, "embeddings")
       writeIvfIndex(spark, dir, e, train = Some(e.filter(col("vec_id") =!= 0)))
     }
@@ -469,51 +452,6 @@ object Ivf extends QueryModule {
   val IvfProbeSeed: Seed = Seed("ivf probe index", ensureIvfIndex)
 
   private val IvfSeedRoot = "/tmp/graft_ivf_seed"
-
-  /** Scratch dirs copied from an immutable seed template share that
-    * template's centroid table and codebook BYTE-FOR-BYTE (appends and
-    * compaction never retrain; only [[writeIvfIndex]] does, and it
-    * drops the origin mapping). Resolving quantizer reads through this
-    * origin map + per-template caches makes the per-append / per-probe
-    * centroid+codebook loads zero Spark jobs at steady state — the
-    * same "read the quantizer once per job, not once per batch" a
-    * 1000-executor ingest job would do with a broadcast.
-    */
-  private val scratchOrigin = new scala.collection.concurrent.TrieMap[String, String]()
-  private val centroidCache = new scala.collection.concurrent.TrieMap[String, Array[Array[Float]]]()
-  private val codebookCache = new scala.collection.concurrent.TrieMap[String, PqCodebook]()
-
-  /** Fixture-constant embeddings metadata (max vec_id + the vec 0 probe
-    * anchor), cached per fixture TAG — mtime+length-keyed, so a
-    * regenerated fixture never serves stale stats.
-    */
-  private val fixtureStatCache = new scala.collection.concurrent.TrieMap[String, (Long, Array[Float])]()
-
-  private[graft] def embeddingsStats(spark: SparkSession, sfDir: String): (Long, Array[Float]) =
-    fixtureStatCache.getOrElseUpdate(ivfTag(sfDir), {
-      val e = Tables(spark, sfDir, "embeddings")
-      (e.agg(max(col("vec_id"))).head().getLong(0), vecOf(e, 0L))
-    })
-
-  /** Marker-gated IMMUTABLE seed template for the IVF lifecycle entries
-    * ([[IvfIndex]]): the IVF index over the corpus slice below the
-    * 90th-percentile vec_id, built ONCE per fixture and never mutated.
-    * Each run copies the template (or one baked from it) into a scratch
-    * dir and appends/streams/compacts/probes the COPY — runs stay
-    * deterministic (every run starts from byte-identical state) while
-    * the seed build cost is paid once per fixture, outside the timed
-    * region, same disclosed economics as the Derby/bucketed/blob seeds.
-    */
-  private[graft] def ensureIvfScratchSeed(spark: SparkSession, sfDir: String): (String, Long) = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val maxId = embeddingsStats(spark, sfDir)._1
-    val cut = maxId * 9 / 10
-    val dir = Warehouse.ensureSeed(new java.io.File(IvfSeedRoot, ivfTag(sfDir) + s"-cut$cut")) {
-      writeIvfIndex(spark, _, e.filter(col("vec_id") < cut),
-        train = Some(e.filter(col("vec_id") < cut && col("vec_id") =!= 0)))
-    }
-    (dir, cut)
-  }
 
   /** Metadata columns carried into the postings when the corpus has them
     * (filtered probes predicate on these inside pruned cells — parquet
@@ -530,10 +468,6 @@ object Ivf extends QueryModule {
   private[graft] def writeIvfIndex(spark: SparkSession, dir: String, e: DataFrame,
       train: Option[DataFrame] = None,
       keepIngestKeys: Seq[String] = Seq.empty): Unit = {
-    // A retrain in place invalidates any template-shared quantizer: this
-    // dir no longer mirrors its origin, so reads must hit disk again.
-    scratchOrigin.remove(dir)
-    import spark.implicits._
     val trainDf = train.getOrElse(e)
     val idx = ivfBuildWith(e, seedCentroids(trainDf),
       keep = IndexMetaCols.filter(e.columns.contains))
@@ -550,71 +484,22 @@ object Ivf extends QueryModule {
     // r = l2norm(x) − centroid(cell) — see the residual-encoding block.
     val cb = pqTrainResidual(trainSample, idx.centroids)
     val (auditedErr, auditedLadder) = pqAuditErr(cb, idx.centroids, trainSample)
-    val postings = new java.io.File(dir, "postings").getPath
-    idx.cells
-      .withColumn("code",
-        pqEncodeResidualUdf(cb, idx.centroids)(col("embedding"), col("cell")))
-      .withColumn("batch_id", lit(0L))
-      .withColumnRenamed("cell", "cell_id")
-      .write.mode("overwrite").partitionBy("batch_id", "cell_id")
-      .parquet(postings)
-    val counts = cellCountsOf(idx.cells) // while still cached
+    val postings = new java.io.File(dir, "postings")
+    ByCell.write(coded(idx.cells, cb, idx.centroids), postings.getPath, batch = Some(0L), shuffle = false)
     idx.cells.unpersist()
-    idx.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell_id", "centroid")
-      .write.mode("overwrite")
-      .parquet(new java.io.File(dir, "centroids").getPath)
-    writeIvfCodebook(spark, dir, cb)
-    val imb = cellImbalance(counts.values)
-    PersistedIndex.writeManifest(dir, IvfManifest(Seq(0L), imb, imb > IvfDriftThreshold,
-      counts, ingestKeys = keepIngestKeys, adcErr = auditedErr,
-      adcErrLadder = auditedLadder).core)
+    IvfCentroids.write(spark, dir, idx.centroids)
+    Codebooks.write(spark, dir, cb)
+    PersistedIndex.writeManifest(dir, IvfManifest(Seq(0L), 1.0, rebuildNeeded = false, Map.empty,
+      ingestKeys = keepIngestKeys, adcErr = auditedErr, adcErrLadder = auditedLadder)
+      .counted(cellCountsFromLayout(spark, new java.io.File(postings, "batch_id=0"))).core)
   }
 
-  private def writeIvfCodebook(spark: SparkSession, dir: String, cb: PqCodebook): Unit = {
-    import spark.implicits._
-    cb.cents.zipWithIndex.flatMap { case (cs, sub) =>
-      cs.zipWithIndex.map { case (cent, code) => (sub, code, cent.toSeq) }
-    }.toSeq
-      .toDF("sub", "code", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(new java.io.File(dir, "codebooks").getPath)
-  }
-
-  /** Read the persisted PQ codebook back (bounded: M·Ks rows of dsub
-    * floats — 4 KB).
+  /** Postings rows of assigned `cells`: the residual PQ code added and
+    * the cell renamed to the layout's `cell_id`.
     */
-  private[graft] def readIvfCodebook(spark: SparkSession, dir: String): PqCodebook =
-    scratchOrigin.get(dir) match {
-      case Some(origin) => codebookCache.getOrElseUpdate(origin, loadIvfCodebook(spark, dir))
-      case None => loadIvfCodebook(spark, dir)
-    }
-
-  private def loadIvfCodebook(spark: SparkSession, dir: String): PqCodebook = {
-    val rows = spark.read.parquet(new java.io.File(dir, "codebooks").getPath)
-      .orderBy("sub", "code").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val cents = Array.tabulate(m) { sub =>
-      rows.filter(_.getInt(0) == sub).map(_.getSeq[Float](2).toArray)
-    }
-    PqCodebook(m, cents.head.head.length, cents)
-  }
-
-  /** Read the persisted centroid table back as the quantizer matrix
-    * (bounded: C×Dim floats — the same collect budget as an in-memory probe).
-    */
-  private[graft] def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
-    scratchOrigin.get(dir) match {
-      case Some(origin) => centroidCache.getOrElseUpdate(origin, loadIvfCentroids(spark, dir))
-      case None => loadIvfCentroids(spark, dir)
-    }
-
-  private def loadIvfCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
-    spark.read.parquet(new java.io.File(dir, "centroids").getPath)
-      .orderBy("cell_id").collect()
-      .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
+  private def coded(cells: DataFrame, cb: PqCodebook, cents: Array[Array[Float]]): DataFrame =
+    cells.withColumn("code", pqEncodeResidualUdf(cb, cents)(col("embedding"), col("cell")))
+      .withColumnRenamed("cell", "cell_id")
 
   /** Incremental index refresh — the ANN twin of q_dedup_incremental's
     * digest-index append: assign a NEW ingest batch against the EXISTING
@@ -630,7 +515,7 @@ object Ivf extends QueryModule {
   private[graft] def ivfIndexAppend(spark: SparkSession, dir: String, batch: DataFrame,
       ingestKey: Option[String] = None): Unit =
     IvfStore.append(dir, ingestKey) { (path, m) =>
-      val cents = readIvfCentroids(spark, dir)
+      val cents = IvfCentroids.read(spark, dir)
       val assigned = ivfBuildWith(batch, cents,
         keep = IndexMetaCols.filter(batch.columns.contains))
       // Codes use the PERSISTED codebook — fixed between rebuilds exactly
@@ -638,12 +523,7 @@ object Ivf extends QueryModule {
       // distribution shift that skews cells also degrades the codebook,
       // and the remedy is the same full retrain). Residual-encoded
       // against the batch's own assigned cells.
-      val cb = readIvfCodebook(spark, dir)
-      assigned.cells
-        .withColumn("code", pqEncodeResidualUdf(cb, cents)(col("embedding"), col("cell")))
-        .withColumnRenamed("cell", "cell_id")
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(path)
+      ByCell.write(coded(assigned.cells, Codebooks.read(spark, dir), cents), path, shuffle = false)
       // Incremental sentinel: count ONLY the batch (O(batch + C)) and
       // merge into the manifest's running counts — never a committed-
       // postings re-scan, which would be O(n) per ingest batch. Counts
@@ -652,12 +532,9 @@ object Ivf extends QueryModule {
       val batchCounts = cellCountsFromLayout(spark, new java.io.File(path))
       assigned.cells.unpersist()
       val manifest = IvfManifest.of(m)
-      val merged = (manifest.cellCounts.keySet ++ batchCounts.keySet).map { c =>
-        c -> (manifest.cellCounts.getOrElse(c, 0L) + batchCounts.getOrElse(c, 0L))
-      }.toMap
-      val imb = cellImbalance(merged.values)
-      manifest.copy(imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold,
-        cellCounts = merged).core
+      manifest.counted(batchCounts.foldLeft(manifest.cellCounts) { case (acc, (c, n)) =>
+        acc.updated(c, acc.getOrElse(c, 0L) + n)
+      }).core
     }
 
   /** Full quantizer retrain from the index's OWN committed content — the
@@ -670,12 +547,7 @@ object Ivf extends QueryModule {
     IvfStore.rebuild(spark, dir) { live =>
       live.select((Seq("vec_id", "embedding") ++
         IndexMetaCols.filter(live.columns.contains)).map(col): _*)
-    } { (content, stage, keys) =>
-      // A retrain invalidates any template-shared quantizer/codebook for
-      // the LIVE dir (writeIvfIndex only clears the stage path).
-      scratchOrigin.remove(dir)
-      writeIvfIndex(spark, stage, content, keepIngestKeys = keys)
-    }
+    } { (content, stage, keys) => writeIvfIndex(spark, stage, content, keepIngestKeys = keys) }
 
   /** The postings index on the shared lifecycle: `postings/` partitioned
     * by (batch_id, cell_id) beside the quantizer tables, tombstones keyed
@@ -687,7 +559,7 @@ object Ivf extends QueryModule {
     * materializes the deletion physically.
     */
   private[graft] val IvfStore =
-    PersistedIndex("IVF", "postings", "vec_id", aux = Seq("centroids", "codebooks"))
+    PersistedIndex("IVF", "postings", "vec_id", aux = Seq(IvfCentroids.name, Codebooks.name))
 
   /** Compact the committed batches into ONE batch partition — the index
     * lifecycle operation append-heavy ingest eventually needs: every
@@ -706,32 +578,30 @@ object Ivf extends QueryModule {
     */
   private[graft] def ivfIndexCompact(spark: SparkSession, dir: String): Unit =
     IvfStore.compact(spark, dir) { (rows, path, m) =>
-      rows.repartition(col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(path)
+      ByCell.write(rows, path)
       // Post-drop sentinel counts from the staged footers (exact, driver-
       // side — deletions change the per-cell sizes the drift stat reads).
-      val counts = cellCountsFromLayout(spark, new java.io.File(path))
-      val imb = cellImbalance(counts.values)
-      IvfManifest.of(m).copy(imbalance = imb, rebuildNeeded = imb > IvfDriftThreshold,
-        cellCounts = counts).core
+      IvfManifest.of(m).counted(cellCountsFromLayout(spark, new java.io.File(path))).core
     }
 
   /** The IVF postings as an index family: the seed is the scratch seed
-    * below the 90th-percentile vec_id ([[ensureIvfScratchSeed]]), and a
-    * scratch copy resolves its quantizer through the template it was
-    * copied from ([[scratchOrigin]]).
+    * below the 90th-percentile vec_id (its quantizer trained without the
+    * vec 0 anchor), and a scratch copy reads its template's quantizer
+    * through the store's cache ([[VectorIndex.QuantizerTable]]).
     */
   private[graft] object IvfIndex extends IndexFamily {
     def store: PersistedIndex = IvfStore
     val table = "embeddings"
-    def seed(spark: SparkSession, sfDir: String): (String, Long) = ensureIvfScratchSeed(spark, sfDir)
+    def seed(spark: SparkSession, sfDir: String): (String, Long) =
+      cutSeed(spark, sfDir, IvfSeedRoot) { (dir, e, cut) =>
+        writeIvfIndex(spark, dir, e.filter(col("vec_id") < cut),
+          train = Some(e.filter(col("vec_id") < cut && col("vec_id") =!= 0)))
+      }
     def write(dir: String, rows: DataFrame): Unit = writeIvfIndex(rows.sparkSession, dir, rows)
     def append(spark: SparkSession, dir: String, rows: DataFrame,
         ingestKey: Option[String]): Unit = ivfIndexAppend(spark, dir, rows, ingestKey)
     def compact(spark: SparkSession, dir: String): Unit = ivfIndexCompact(spark, dir)
     def rebuild(dir: String, corpus: DataFrame): Unit = ivfIndexRebuild(corpus.sparkSession, dir)
-    override def copied(scratch: String, template: String): Unit = scratchOrigin(scratch) = template
   }
 
   /** An IVF entry's probe: the top `k` around vec 0 (excluded), nprobe 4. */
@@ -926,7 +796,7 @@ object Ivf extends QueryModule {
     * per-cell constant of the residual decomposition (bounded: nprobe
     * doubles, rides in the scoring closure beside the table).
     */
-  private def centDots(cents: Array[Array[Float]], probed: Seq[Int],
+  private[graft] def centDots(cents: Array[Array[Float]], probed: Seq[Int],
       query: Array[Float]): Map[Int, Double] = {
     val qn = l2Normalize(query)
     probed.map { c =>
@@ -940,7 +810,7 @@ object Ivf extends QueryModule {
   /** The ADC kernel: `base` plus one table lookup per sub-space code —
     * M byte-indexed adds per posting instead of a Dim-float dot product.
     */
-  private def adcSum(table: Array[Array[Double]], base: Double, code: Array[Byte]): Double = {
+  private[graft] def adcSum(table: Array[Array[Double]], base: Double, code: Array[Byte]): Double = {
     var s = base; var sub = 0
     while (sub < code.length) { s += table(sub)(code(sub) & 0xFF); sub += 1 }
     s
@@ -949,14 +819,6 @@ object Ivf extends QueryModule {
   private def adcResidualScoreUdf(table: Array[Array[Double]],
       dots: Map[Int, Double]) =
     udf { (cell: Int, code: Array[Byte]) => adcSum(table, dots(cell), code) }
-
-  /** Residual-ADC approximate cosine of one coded posting — the spec's
-    * unit handle on IVFADC quantization error.
-    */
-  private[graft] def adcApproxResidual(cb: PqCodebook, cents: Array[Array[Float]],
-      cell: Int, query: Array[Float], code: Array[Byte]): Double =
-    adcSum(adcTable(cb, query), centDots(cents, Seq(cell), query)(cell), code)
-
 
   /** ADC lookup table for one query: `table(sub)(code)` = inner product of
     * the normalized query's sub-vector with that code's centroid, so

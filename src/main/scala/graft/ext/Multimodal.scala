@@ -392,7 +392,7 @@ object Multimodal extends QueryModule {
     */
   private def phashProbeOracle(tapName: String): String = s"""
       WITH s AS (SELECT doc_id, ph, side
-                 FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet'))
+                 FROM read_parquet('${OracleTap.Root}/$tapName/*.parquet'))
       SELECT p.doc_id, i.doc_id AS dup_of,
              CAST(bit_count(xor(p.ph, i.ph)) AS BIGINT) AS hamming
       FROM s p JOIN s i ON p.side = 'probe' AND i.side = 'index'
@@ -424,7 +424,7 @@ object Multimodal extends QueryModule {
     "s_phash_ingest" -> phashEntry("s_phash_ingest", NearDup.StreamIn),
     "q_mm_phash_dedup" -> QueryDef(mmPhashDedup, Some(s"""
       WITH s AS (SELECT doc_id, ph
-                 FROM read_parquet('/tmp/graft_oracle_aux/mm_phash/*.parquet'))
+                 FROM read_parquet('${OracleTap.Root}/mm_phash/*.parquet'))
       SELECT a.doc_id AS da, b.doc_id AS db,
              CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
       FROM s a JOIN s b ON a.doc_id < b.doc_id

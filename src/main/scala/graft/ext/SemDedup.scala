@@ -5,16 +5,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Seed, Tables, Warehouse}
+import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Tables, Warehouse}
 import graft.core.IndexLifecycle.{Append, Bake, Compact, Rebuild, Run, Scenario, Stream, Takedown}
-import graft.functions.SimHash64
 
 /** SemDeDup over `embeddings`: cluster-bounded semantic deduplication
   * and its persisted incremental index (members, fixed quantizer).
   */
 object SemDedup extends QueryModule {
   import Similarity._
-  import Ivf.{embeddingsStats, ivfTag}
+  import VectorIndex._
 
   // ---- SemDeDup: cluster-bounded semantic deduplication -----------------
 
@@ -66,29 +65,18 @@ object SemDedup extends QueryModule {
   // ingest-stream invariant; a violating batch still gets correct flags
   // for itself, but historical flags are frozen until a full rebuild).
 
-  /** Partition-group count for the members layout: cells hash into
-    * [[SemdedupCellGroups]] directory partitions (`cell_grp = cell %
-    * 128`) instead of one directory per cell — k = n/64 cells would mean
-    * tasks × k tiny files per batch (measured 90k files at 200k
-    * vectors); grouping bounds the layout at 128 dirs while ingest reads
-    * still partition-prune to the batch's touched GROUPS and the
-    * dominance join handles cell exactness.
-    */
-  private[graft] val SemdedupCellGroups = 128
-
   /** Build + persist the semdedup index over `e`: `centroids/` (the
     * fixed flat quantizer, k = n/targetCell — trained with two Lloyd
     * refinements while the n·k scans are affordable, raw min-wise-sample
     * seeds past [[CoarseScanLimit]] cells where balance tuning is not
     * worth a quadratic pass), `members/` partitioned by (batch_id,
-    * cell_grp) carrying (vec_id, embedding, cell, removed), and the
-    * batches manifest (written last — ingests read only committed
-    * batches).
+    * cell_grp) ([[VectorIndex.ByCellGroup]]) carrying (vec_id,
+    * embedding, cell, removed), and the batches manifest (written last —
+    * ingests read only committed batches).
     */
   private[graft] def writeSemdedupIndex(spark: SparkSession, dir: String,
       e: DataFrame, tau: Double, targetCell: Int = 64,
       keepIngestKeys: Seq[String] = Seq.empty): Unit = {
-    import spark.implicits._
     val ec = e.select(col("vec_id"), col("embedding")).persist()
     try {
       val n = ec.count()
@@ -113,18 +101,9 @@ object SemDedup extends QueryModule {
         }
       val cells = ivfBuildWith(ec, cents).cells
       try {
-        val flags = semdedupPruneCells(cells, tau)
-          .select(col("vec_id"), col("removed"))
-        cells.join(flags, Seq("vec_id"))
-          .withColumn("batch_id", lit(0L))
-          .withColumn("cell_grp", pmod(col("cell"), lit(SemdedupCellGroups)))
-          .repartition(col("cell_grp"))
-          .write.mode("overwrite").partitionBy("batch_id", "cell_grp")
-          .parquet(new java.io.File(dir, "members").getPath)
-        cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(dir, "centroids").getPath)
+        ByCellGroup.write(flagged(cells, dominated(cells, cells, tau)),
+          new java.io.File(dir, "members").getPath, batch = Some(0L))
+        SemdedupCentroids.write(spark, dir, cents)
         PersistedIndex.writeManifest(dir,
           PersistedIndex.Manifest(Seq(0L), ingestKeys = keepIngestKeys))
       } finally { cells.unpersist(); () }
@@ -158,17 +137,14 @@ object SemDedup extends QueryModule {
       batch: DataFrame, tau: Double, tap: Option[String] = None,
       ingestKey: Option[String] = None, dryRun: Boolean = false): DataFrame = {
     def run(publish: Option[PersistedIndex.Stage => Unit]): DataFrame = {
-    val cents = spark.read.parquet(new java.io.File(dir, "centroids").getPath)
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    val assigned = ivfBuildWith(batch, cents).cells
+    val assigned = ivfBuildWith(batch, SemdedupCentroids.read(spark, dir)).cells
     try {
       val touched: Seq[Int] = assigned.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq
       // Partition-prune to the touched cell GROUPS; cell exactness falls
       // out of the dominance join itself, and the pruned rows that
       // survive here but belong to untouched cells never match a pair.
-      val touchedGrps = touched.map(c => math.floorMod(c, SemdedupCellGroups)).distinct
+      val touchedGrps = touched.map(c => math.floorMod(c, CellGroups)).distinct
       // Committed tombstones drop out of the member read BEFORE any
       // dominance pair forms: a taken-down member must not dominate
       // (suppress) newly arriving vectors.
@@ -176,36 +152,13 @@ object SemDedup extends QueryModule {
           Some(col("cell_grp").isin(touchedGrps: _*)))
         .join(broadcast(assigned.select(col("cell")).distinct()), Seq("cell"))
         .select(col("vec_id"), col("embedding"), col("cell"))
-      def dominated(lower: DataFrame, upper: DataFrame): DataFrame =
-        lower.alias("a").join(upper.alias("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-          .where(semdedupDup(tau))
-          .select(col("b.vec_id").as("vec_id")).distinct()
-      val removedIds = dominated(members, assigned)
-        .unionByName(dominated(assigned, assigned)).distinct()
-      val out = assigned
-        .join(removedIds.withColumn("removed", lit(true)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          coalesce(col("removed"), lit(false)).as("removed"))
-      tap.foreach(n => OracleTap(spark, n,
-        members.select(col("vec_id"), col("cell"), lit(false).as("is_batch"))
-          .unionByName(assigned.select(col("vec_id"), col("cell"),
-            lit(true).as("is_batch")))))
+      val out = flagged(assigned, dominated(members, assigned, tau)
+        .unionByName(dominated(assigned, assigned, tau)).distinct())
+      tapCells(spark, tap, members -> false, assigned -> true)
       // Publish the batch (all members, removed or not — dominance reads
       // every lower-id member, exactly like the full recompute).
-      publish.foreach(_ { (path, m) =>
-        assigned.join(removedIds.withColumn("removed", lit(true)), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("embedding"), col("cell"),
-            coalesce(col("removed"), lit(false)).as("removed"))
-          .withColumn("cell_grp", pmod(col("cell"), lit(SemdedupCellGroups)))
-          .repartition(col("cell_grp"))
-          .write.mode("overwrite").partitionBy("cell_grp")
-          .parquet(path)
-        m
-      })
-      out.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
-        .orderBy("vec_id")
-        .localCheckpoint(true)
+      publish.foreach(_ { (path, m) => ByCellGroup.write(out, path); m })
+      byId(out).localCheckpoint(true)
     } finally { assigned.unpersist(); () }
     }
     // A dry run mutates nothing — no lease, no publish (it must be
@@ -224,20 +177,7 @@ object SemDedup extends QueryModule {
     * materializes the drop.
     */
   private[graft] val SemdedupStore =
-    PersistedIndex("semdedup", "members", "vec_id", aux = Seq("centroids"))
-
-  /** Compact the semdedup index: all committed member batches into ONE
-    * (cell_grp-partitioned like every batch), tombstoned members dropped.
-    * Ingests are dominance-identical before/after (same surviving
-    * member set; SemDedupSpec pins it).
-    */
-  private[graft] def semdedupIndexCompact(spark: SparkSession, dir: String): Unit =
-    SemdedupStore.compact(spark, dir) { (rows, path, m) =>
-      rows.repartition(col("cell_grp"))
-        .write.mode("overwrite").partitionBy("cell_grp")
-        .parquet(path)
-      m
-    }
+    PersistedIndex("semdedup", "members", "vec_id", aux = Seq(SemdedupCentroids.name))
 
   /** Full retrain of the semdedup index from its own surviving content —
     * the remedy the ingest/delete docstrings promise for the frozen-
@@ -267,12 +207,10 @@ object SemDedup extends QueryModule {
       val cells = semdedupIndexIngest(spark, seedDir, batch, SemdedupTau, dryRun = true)
         .filter(col("removed")).select(col("cell")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      java.nio.file.Files.write(new java.io.File(d, "cells").toPath,
-        cells.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(new java.io.File(d, "cells").toPath, cells.mkString(","))
       ()
     }
-    val s = new String(java.nio.file.Files.readAllBytes(new java.io.File(dir, "cells").toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim
+    val s = java.nio.file.Files.readString(new java.io.File(dir, "cells").toPath).trim
     if (s.isEmpty) Seq.empty else s.split(',').map(_.toLong).toSeq
   }
 
@@ -302,16 +240,6 @@ object SemDedup extends QueryModule {
   /** The dominance threshold of every semdedup registry entry. */
   private val SemdedupTau = 0.4
 
-  private[graft] def ensureSemdedupIndex(spark: SparkSession, sfDir: String): (String, Long) = {
-    val e = Tables(spark, sfDir, "embeddings")
-    val maxId = embeddingsStats(spark, sfDir)._1
-    val cut = maxId * 9 / 10
-    val dir = Warehouse.ensureSeed(new java.io.File(SemdedupRoot, ivfTag(sfDir) + s"-cut$cut")) {
-      writeSemdedupIndex(spark, _, e.filter(col("vec_id") < cut), tau = SemdedupTau)
-    }
-    (dir, cut)
-  }
-
   /** The semdedup members as an index family: the seed holds the corpus
     * below the 90th-percentile vec_id. An answer is an ingest that
     * publishes, so every entry answers on a scratch copy; a replayed
@@ -321,16 +249,23 @@ object SemDedup extends QueryModule {
     def store: PersistedIndex = SemdedupStore
     val table = "embeddings"
     override val answerWrites = true
-    def seed(spark: SparkSession, sfDir: String): (String, Long) = ensureSemdedupIndex(spark, sfDir)
+    def seed(spark: SparkSession, sfDir: String): (String, Long) =
+      cutSeed(spark, sfDir, SemdedupRoot) { (dir, e, cut) =>
+        writeSemdedupIndex(spark, dir, e.filter(col("vec_id") < cut), tau = SemdedupTau)
+      }
     def write(dir: String, rows: DataFrame): Unit =
       writeSemdedupIndex(rows.sparkSession, dir, rows, SemdedupTau)
-    def append(spark: SparkSession, dir: String, rows: DataFrame,
-        ingestKey: Option[String]): Unit = {
-      semdedupIndexIngest(spark, dir, rows, SemdedupTau, ingestKey = ingestKey)
-        .queryExecution.toRdd.count()
-      ()
+    /** The ingest's answer is checkpointed as it publishes: nothing left to run. */
+    def append(spark: SparkSession, dir: String, rows: DataFrame, ingestKey: Option[String]): Unit = {
+      semdedupIndexIngest(spark, dir, rows, SemdedupTau, ingestKey = ingestKey); ()
     }
-    def compact(spark: SparkSession, dir: String): Unit = semdedupIndexCompact(spark, dir)
+    /** All committed member batches into ONE (cell_grp-partitioned like
+      * every batch), tombstoned members dropped. Ingests are
+      * dominance-identical before/after (same surviving member set;
+      * SemDedupSpec pins it).
+      */
+    def compact(spark: SparkSession, dir: String): Unit =
+      SemdedupStore.compact(spark, dir) { (rows, path, m) => ByCellGroup.write(rows, path); m }
     def rebuild(dir: String, corpus: DataFrame): Unit =
       semdedupIndexRebuild(corpus.sparkSession, dir, SemdedupTau)
   }
@@ -358,12 +293,8 @@ object SemDedup extends QueryModule {
     val touched = batchRows.select(col("cell")).distinct()
     val seedMembers = members.where(col("batch_id") === 0L)
       .join(broadcast(touched), Seq("cell"))
-    tap.foreach(OracleTap(r.spark, _,
-      batchRows.select(col("vec_id"), col("cell"), lit(true).as("is_batch"))
-        .unionByName(seedMembers.select(col("vec_id"), col("cell"),
-          lit(false).as("is_batch")))))
-    batchRows.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
-      .orderBy("vec_id")
+    tapCells(r.spark, tap, batchRows -> true, seedMembers -> false)
+    byId(batchRows)
   }
 
   /** q_semdedup_delete's takedown: every committed member of the cells
@@ -392,11 +323,19 @@ object SemDedup extends QueryModule {
       .select(col("cell")).distinct()
     val out = rebuilt.join(broadcast(outCells), Seq("cell"))
       .select(col("vec_id"), col("cell"), col("removed"))
-    tap.foreach(OracleTap(r.spark, _,
-      out.select(col("vec_id"), col("cell"), lit(true).as("is_batch"))))
-    out.select(col("vec_id"), col("cell").cast(LongType), col("removed"))
-      .orderBy("vec_id")
+    tapCells(r.spark, tap, out -> true)
+    byId(out)
   }
+
+  /** Taps the (vec_id, cell, is_batch) rows [[semdedupTapOracle]] reads. */
+  private def tapCells(spark: SparkSession, tap: Option[String], parts: (DataFrame, Boolean)*): Unit =
+    tap.foreach(OracleTap(spark, _, parts.map { case (rows, isBatch) =>
+      rows.select(col("vec_id"), col("cell"), lit(isBatch).as("is_batch"))
+    }.reduce(_ unionByName _)))
+
+  /** A semdedup answer: (vec_id, cell, removed) in id order. */
+  private def byId(flags: DataFrame): DataFrame =
+    flags.select(col("vec_id"), col("cell").cast(LongType), col("removed")).orderBy("vec_id")
 
   /** Above this many cells the flat Lloyd loop's ASSIGNMENT step (n·k
     * distances per scan — Θ(n²/targetCell) when k = n/targetCell) costs
@@ -567,20 +506,21 @@ object SemDedup extends QueryModule {
     !isnan(c) && round(c, 4) >= tau
   }
 
-  /** The prune stage over an assigned-cell corpus (dominance rule). */
-  private[graft] def semdedupPruneCells(cells: DataFrame, tau: Double)
-      : DataFrame = {
-    val dup = cells.alias("a")
-      .join(cells.alias("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+  /** The ids of `upper` rows a lower-id same-cell row of `lower` dominates. */
+  private def dominated(lower: DataFrame, upper: DataFrame, tau: Double): DataFrame =
+    lower.alias("a").join(upper.alias("b"),
+      col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .where(semdedupDup(tau))
       .select(col("b.vec_id").as("vec_id")).distinct()
-    cells
-      .join(dup.withColumn("removed", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell").cast(LongType),
-        coalesce(col("removed"), lit(false)).as("removed"))
-      .orderBy("vec_id")
-  }
+
+  /** `rows` with `removed`: whether `ids` lists the row's id. */
+  private def flagged(rows: DataFrame, ids: DataFrame): DataFrame =
+    rows.join(ids.withColumn("removed", lit(true)), Seq("vec_id"), "left")
+      .withColumn("removed", coalesce(col("removed"), lit(false)))
+
+  /** The prune stage over an assigned-cell corpus (dominance rule). */
+  private[graft] def semdedupPruneCells(cells: DataFrame, tau: Double): DataFrame =
+    byId(flagged(cells, dominated(cells, cells, tau)))
 
   private def semdedup(spark: SparkSession, sfDir: String): DataFrame =
     // Fixture embeddings are near-orthogonal (max pair cos ~0.51), so the
@@ -602,7 +542,7 @@ object SemDedup extends QueryModule {
     */
   private def semdedupTapOracle(tapName: String): String = s"""
       WITH t AS (SELECT vec_id, cell, is_batch
-                 FROM read_parquet('/tmp/graft_oracle_aux/$tapName/*.parquet')),
+                 FROM read_parquet('${OracleTap.Root}/$tapName/*.parquet')),
       pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb
                 FROM t a JOIN t b
                   ON a.cell = b.cell AND a.vec_id < b.vec_id AND b.is_batch),
@@ -629,9 +569,9 @@ object SemDedup extends QueryModule {
     // boundary; the dominance prune (within-cell pairs → independent
     // cosine from embeddings → removed-if-dominated-by-lower-id) is
     // recomputed wholesale by DuckDB.
-    "q_semdedup" -> QueryDef(semdedup, Some("""
+    "q_semdedup" -> QueryDef(semdedup, Some(s"""
       WITH cells AS (SELECT vec_id, cell
-                     FROM read_parquet('/tmp/graft_oracle_aux/semdedup_cells/*.parquet')),
+                     FROM read_parquet('${OracleTap.Root}/semdedup_cells/*.parquet')),
       pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb
                 FROM cells a JOIN cells b
                   ON a.cell = b.cell AND a.vec_id < b.vec_id),

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{IndexFamily, PersistedIndex, QueryDef, QueryModule, Seed, Tables, Warehouse}
-import graft.core.IndexLifecycle.{Append, Bake, Compact, Rebuild, Run, Scenario, Stream, Takedown}
+import graft.core.{QueryDef, QueryModule, Tables}
 import graft.functions.SimHash64
 
 /** Similarity search over `embeddings` (64-dim float vectors) and
@@ -417,7 +416,8 @@ object Similarity extends QueryModule {
 
   /** Identity-keyed cache of group indexes per centroid matrix (weak
     * keys: dies with the matrix; scratch copies share cached matrices
-    * via [[readIvfCentroids]], so repeated probes build the index once).
+    * via [[VectorIndex.QuantizerTable]], so repeated probes build the
+    * index once).
     */
   private val coarseIndexCache =
     java.util.Collections.synchronizedMap(
@@ -595,7 +595,7 @@ object Similarity extends QueryModule {
 
   /** `e`'s row count, memoized per fixture tag of `sfDir`'s embeddings. */
   private[graft] def corpusSize(e: DataFrame, sfDir: String): Long =
-    corpusN.computeIfAbsent(Ivf.ivfTag(sfDir), _ => e.count()).longValue()
+    corpusN.computeIfAbsent(VectorIndex.tag(sfDir), _ => e.count()).longValue()
 
   private def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
     // Report the globally top-20 most similar candidate pairs (the
@@ -780,18 +780,7 @@ object Similarity extends QueryModule {
 
   // ---- SimHash near-dup over documents --------------------------------
 
-  private val SimhashMaxHamming = 6
-
-  /** Naive single-stage SimHash pipeline (reference implementation for
-    * the equivalence spec): band + verify every doc, including exact
-    * copies.
-    */
-  private[graft] def simhashNearDupNaive(spark: SparkSession, sfDir: String): DataFrame = {
-    SimHash64.register(spark)
-    NearDup.hammingPairs(Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr("simhash64(text)").as("sh")), "sh", SimhashMaxHamming)
-      .orderBy("doc_a", "doc_b")
-  }
+  private[graft] val SimhashMaxHamming = 6
 
   private def simhashNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     // Staged (see StagedDedup): byte-identical texts have identical
@@ -915,7 +904,7 @@ object Similarity extends QueryModule {
       short AS (
         SELECT vec_id, rel FROM rel ORDER BY rel DESC, vec_id LIMIT $MmrShort),
       ord AS (SELECT mmr_rank, vec_id
-              FROM read_parquet('/tmp/graft_oracle_aux/mmr_order/*.parquet')),
+              FROM read_parquet('${OracleTap.Root}/mmr_order/*.parquet')),
       pterms AS (
         SELECT sa.vec_id AS ida, sb.vec_id AS idb,
                CAST(ea.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
@@ -994,9 +983,9 @@ object Similarity extends QueryModule {
     // DuckDB recomputes each pair's cosine from the embeddings table
     // independently (verifying the Spark kernel's values as well as the
     // ranking) and re-derives the top-20.
-    "q_ann_lsh" -> QueryDef(annLsh, Some("""
+    "q_ann_lsh" -> QueryDef(annLsh, Some(s"""
       WITH cand AS (SELECT vec_a, vec_b
-                    FROM read_parquet('/tmp/graft_oracle_aux/ann_lsh_pairs/*.parquet')),
+                    FROM read_parquet('${OracleTap.Root}/ann_lsh_pairs/*.parquet')),
       terms AS (
         SELECT c.vec_a, c.vec_b,
                CAST(ea.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
@@ -1014,9 +1003,9 @@ object Similarity extends QueryModule {
     // convergence trace itself — per-vector best-assignment cosine,
     // averaged per iteration, floor-truncated — is recomputed wholesale
     // by DuckDB from the embeddings table.
-    "q_kmeans_refine" -> QueryDef(kmeansRefineQuery, Some("""
+    "q_kmeans_refine" -> QueryDef(kmeansRefineQuery, Some(s"""
       WITH cents AS (SELECT iter, cell, centroid
-                     FROM read_parquet('/tmp/graft_oracle_aux/kmeans_cents/*.parquet')),
+                     FROM read_parquet('${OracleTap.Root}/kmeans_cents/*.parquet')),
       terms AS (SELECT c.iter, c.cell, e.vec_id,
                        CAST(e.embedding[CAST(i AS INTEGER)] AS DOUBLE) AS x,
                        CAST(c.centroid[CAST(i AS INTEGER)] AS DOUBLE) AS y
@@ -1033,7 +1022,7 @@ object Similarity extends QueryModule {
     // member expansion, and ordering from the tap + documents.
     // (sh >> n) & 65535 == shiftrightunsigned-then-mask: the mask keeps
     // only the low 16 bits, where arithmetic and logical shifts agree.
-    "q_simhash_near_dup" -> QueryDef(simhashNearDup, Some("""
+    "q_simhash_near_dup" -> QueryDef(simhashNearDup, Some(s"""
       WITH g AS (
         SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
         FROM documents),
@@ -1042,7 +1031,7 @@ object Similarity extends QueryModule {
         FROM g a JOIN g b ON a.rep = b.rep AND a.doc_id < b.doc_id),
       s AS (
         SELECT doc_id, sh
-        FROM read_parquet('/tmp/graft_oracle_aux/simhash_rep_sigs/*.parquet')),
+        FROM read_parquet('${OracleTap.Root}/simhash_rep_sigs/*.parquet')),
       chunks AS (
         SELECT doc_id, sh, c.chunk, (sh >> (c.chunk * 16)) & 65535 AS cv
         FROM s CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS chunk) c),

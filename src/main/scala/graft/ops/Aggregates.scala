@@ -332,9 +332,9 @@ object Aggregates extends QueryModule {
     // WHERE enforces both the exact n_days and a 5% estimate envelope —
     // a breach drops the row and fails the row/hash compare. The timed
     // entry never runs the exact path.
-    "q_hll_union" -> QueryDef(hllUnion, Some("""
+    "q_hll_union" -> QueryDef(hllUnion, Some(s"""
       WITH est AS (SELECT n_days, est_users
-                   FROM read_parquet('/tmp/graft_oracle_aux/hll_union_est/*.parquet')),
+                   FROM read_parquet('${graft.ext.OracleTap.Root}/hll_union_est/*.parquet')),
       exact AS (SELECT count(DISTINCT strftime(ts, '%Y%m%d')) AS exact_days,
                        count(DISTINCT user_id) AS exact_users
                 FROM events)
@@ -387,9 +387,9 @@ object Aggregates extends QueryModule {
     // exact distinct counts and ENFORCES the 5% envelope in its WHERE —
     // an out-of-envelope group vanishes from the oracle output and the
     // row/hash compare fails. The timed entry never runs the exact path.
-    "q_agg_approx_distinct" -> QueryDef(aggApproxDistinct, Some("""
+    "q_agg_approx_distinct" -> QueryDef(aggApproxDistinct, Some(s"""
       WITH est AS (SELECT l_returnflag, approx_parts
-                   FROM read_parquet('/tmp/graft_oracle_aux/approx_distinct_est/*.parquet')),
+                   FROM read_parquet('${graft.ext.OracleTap.Root}/approx_distinct_est/*.parquet')),
       exact AS (SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts
                 FROM lineitem GROUP BY l_returnflag)
       SELECT e.l_returnflag, e.approx_parts

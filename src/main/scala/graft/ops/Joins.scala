@@ -143,17 +143,6 @@ object Joins extends QueryModule {
       .orderBy("s_suppkey", "c_custkey")
   }
 
-  /** The naive pure-theta twin (BroadcastNestedLoopJoin) — the O(n·m)
-    * baseline q_join_range_binned must match row-for-row (JoinsSpec).
-    */
-  private[graft] def joinRangeNaive(spark: SparkSession, sfDir: String): DataFrame =
-    Tables(spark, sfDir, "supplier").select(col("s_suppkey"), col("s_acctbal"))
-      .join(Tables(spark, sfDir, "customer").select(col("c_custkey"), col("c_acctbal")),
-        abs(col("s_acctbal") - col("c_acctbal")) < RangeBinW)
-      .select(col("s_suppkey"), col("c_custkey"),
-        round(abs(col("s_acctbal") - col("c_acctbal")), 2).as("gap"))
-      .orderBy("s_suppkey", "c_custkey")
-
   private def joinBroadcast(spark: SparkSession, sfDir: String): DataFrame = {
     // Dim tables pinned broadcast: no shuffle of the fact side at all.
     val c = Tables(spark, sfDir, "customer")

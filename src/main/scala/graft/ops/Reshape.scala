@@ -343,7 +343,7 @@ object Reshape extends QueryModule {
     "q_quantile_bins" -> QueryDef(quantileBins, Some(s"""
       WITH b AS (
         SELECT bnds
-        FROM read_parquet('/tmp/graft_oracle_aux/quantile_bins_bnds/*.parquet')),
+        FROM read_parquet('${graft.ext.OracleTap.Root}/quantile_bins_bnds/*.parquet')),
       x AS (
         SELECT ${(1 to 9).map(i =>
           s"quantile_cont(l_extendedprice, 0.${i}) AS e$i").mkString(", ")}
@@ -380,9 +380,9 @@ object Reshape extends QueryModule {
     // percentiles and ENFORCES the 1% envelope in its WHERE — an
     // out-of-envelope group vanishes from the oracle output and the
     // row/hash compare fails. The timed entry never runs the exact path.
-    "q_approx_percentiles" -> QueryDef(approxPercentiles, Some("""
+    "q_approx_percentiles" -> QueryDef(approxPercentiles, Some(s"""
       WITH est AS (SELECT l_returnflag, p50, p90, p99
-                   FROM read_parquet('/tmp/graft_oracle_aux/approx_pct_est/*.parquet')),
+                   FROM read_parquet('${graft.ext.OracleTap.Root}/approx_pct_est/*.parquet')),
       exact AS (SELECT l_returnflag,
                        round(quantile_cont(l_extendedprice, 0.5), 4) AS e50,
                        round(quantile_cont(l_extendedprice, 0.9), 4) AS e90,

@@ -821,10 +821,10 @@ object Streaming extends QueryModule {
     // trusting the engine's drop. The update-mode re-emissions collapse
     // to the final per-window count, which is exactly the count of
     // accepted rows per window.
-    "s_watermark_late" -> QueryDef(watermarkLate, Some("""
+    "s_watermark_late" -> QueryDef(watermarkLate, Some(s"""
       WITH inp AS (
         SELECT ts, batch
-        FROM read_parquet('/tmp/graft_oracle_aux/watermark_late_input/*.parquet')),
+        FROM read_parquet('${graft.ext.OracleTap.Root}/watermark_late_input/*.parquet')),
       wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM inp WHERE batch = 1),
       kept AS (
         SELECT date_trunc('hour', ts) AS window_start FROM inp

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bounded-stream run (writeStream, AvailableNow, checkpoint, await)
   * only in core.BoundedStream, the nearest-centroid argmax only in
   * Similarity.argBest, the 64-bit Hamming band slice and the
-  * document-postings index stores only in ext.NearDup, and the
-  * lifecycle templates and scratch copies only in core.IndexLifecycle,
+  * document-postings index stores only in ext.NearDup, the quantizer
+  * tables and the cell-partitioned layouts only in ext.VectorIndex, and
+  * the lifecycle templates and scratch copies only in core.IndexLifecycle,
   * so no module can grow another hand-rolled copy of any of them.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
@@ -78,6 +79,20 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
          (line, i) <- read(new java.io.File("src/main/scala/graft/ext", name)).linesIterator.zipWithIndex)
       assert(!line.contains("PersistedIndex("),
         s"$name:${i + 1} builds its own index store; document indexes are NearDup.DocIndex values")
+  }
+
+  private val Store = new java.io.File("src/main/scala/graft/ext/VectorIndex.scala")
+
+  /** A quantizer table path (`centroids/`, `codebooks/`), or a partitioned write keyed by a cell. */
+  private val QuantizerOrCellLayout = """"(centroids|codebooks)"|(?<!Window)\.partitionBy\([^)]*"cell""".r
+
+  test("only the vector index store reads or writes a quantizer table or writes a cell-partitioned layout") {
+    val store = read(Store)
+    assert(Seq("\"centroids\"", "\"codebooks\"", ".partitionBy(").forall(store.contains),
+      "VectorIndex no longer holds the quantizer store and the cell-layout writer")
+    for (f <- sources("src/main/scala") if f != Store; (line, i) <- read(f).linesIterator.zipWithIndex)
+      assert(QuantizerOrCellLayout.findFirstIn(line).isEmpty,
+        s"${f.getName}:${i + 1} reads or writes an index's quantizer or cell layout itself: ${line.trim}")
   }
 
   private val Scenario = new java.io.File("src/main/scala/graft/core/IndexLifecycle.scala")

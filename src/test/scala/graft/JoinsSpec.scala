@@ -28,7 +28,7 @@ class JoinsSpec extends AnyFunSuite with SparkTest {
   test("binned range join is pair-identical to the naive theta join, with no nested loop") {
     val sfDir = "/root/testdata/sf0.01"
     val binned = graft.ops.Joins.joinRangeBinned(spark, sfDir)
-    val naive = graft.ops.Joins.joinRangeNaive(spark, sfDir)
+    val naive = JoinsSpec.joinRangeNaive(spark, sfDir)
     // Zero false dismissals, zero duplicates: exactly the naive pair set.
     val b = binned.collect().map(_.toString).toSeq
     val nv = naive.collect().map(_.toString).toSeq
@@ -70,4 +70,23 @@ class JoinsSpec extends AnyFunSuite with SparkTest {
     } yield (si.toLong, ci.toLong)).toSet
     assert(got == want, s"missing=${want -- got} extra=${got -- want}")
   }
+}
+
+object JoinsSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions._
+
+  import graft.core.Tables
+  import graft.ops.Joins.RangeBinW
+
+  /** The naive pure-theta twin (BroadcastNestedLoopJoin) — the O(n·m)
+    * baseline q_join_range_binned must match row-for-row (JoinsSpec).
+    */
+  def joinRangeNaive(spark: SparkSession, sfDir: String): DataFrame =
+    Tables(spark, sfDir, "supplier").select(col("s_suppkey"), col("s_acctbal"))
+      .join(Tables(spark, sfDir, "customer").select(col("c_custkey"), col("c_acctbal")),
+        abs(col("s_acctbal") - col("c_acctbal")) < RangeBinW)
+      .select(col("s_suppkey"), col("c_custkey"),
+        round(abs(col("s_acctbal") - col("c_acctbal")), 2).as("gap"))
+      .orderBy("s_suppkey", "c_custkey")
 }

@@ -118,6 +118,64 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
       "orphaned batches leaked into the member read (manifest gate broken)")
   }
 
+  /** The `centroids/` table of `dir`, read straight from disk. */
+  private def centroidsOnDisk(dir: String): Seq[Seq[Float]] =
+    spark.read.parquet(new java.io.File(dir, "centroids").getPath)
+      .orderBy("cell").collect()
+      .map(r => r.getSeq[Float](r.fieldIndex("centroid"))).toSeq
+
+  test("an ingest on a scratch copy reads the template's quantizer with no Spark job") {
+    import spark.implicits._
+    import graft.core.Warehouse
+    import graft.ext.VectorIndex.SemdedupCentroids
+    val template = graft.core.TempDirs.create("graft_semdedup_qstore")
+    SemDedup.writeSemdedupIndex(spark, template, corpus.toDF("vec_id", "embedding"), tau = Tau)
+    def jobs[T](body: => T): Int = org.apache.spark.JobCounter.count(spark.sparkContext)(body)._2
+    def ingest(dir: String): Int = jobs(SemDedup.semdedupIndexIngest(spark, dir,
+      Seq((5000L, corpus.head._2.map(_ + 1e-4f))).toDF("vec_id", "embedding"), tau = Tau))
+    // A copy whose table files carry other names is a cache miss: its
+    // ingest pays the quantizer read a copy of the template does not.
+    def renamedCopy(): String = {
+      val d = Warehouse.scratchFromSeed(template, "graft_semdedup_qstore_renamed")
+      new java.io.File(d, "centroids").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => assert(f.renameTo(new java.io.File(f.getParentFile, s"r${System.nanoTime}-${f.getName}"))))
+      d
+    }
+    // Only reads fill the cache: the template's first read runs jobs, a
+    // copy's read then hits its entry.
+    assert(jobs(SemdedupCentroids.read(spark, template)) > 0)
+    val copy = Warehouse.scratchFromSeed(template, "graft_semdedup_qstore_copy")
+    assert(jobs(SemdedupCentroids.read(spark, copy)) == 0)
+    assert(SemdedupCentroids.read(spark, copy).map(_.toSeq).toSeq == centroidsOnDisk(template))
+    val readJobs = jobs(SemdedupCentroids.read(spark, renamedCopy()))
+    assert(readJobs > 0)
+    assert(ingest(renamedCopy()) - ingest(copy) == readJobs,
+      "the ingest on a scratch copy ran Spark jobs to read centroids/")
+  }
+
+  test("a rebuilt scratch copy ingests against its fresh quantizer, not the template's") {
+    import spark.implicits._
+    import graft.ext.VectorIndex.SemdedupCentroids
+    val template = graft.core.TempDirs.create("graft_semdedup_qstore_rebuild")
+    SemDedup.writeSemdedupIndex(spark, template,
+      corpus.filter(_._1 < 200).toDF("vec_id", "embedding"), tau = Tau)
+    val old = SemdedupCentroids.read(spark, template).map(_.toSeq).toSeq
+    val copy = graft.core.Warehouse.scratchFromSeed(template, "graft_semdedup_qstore_rebuilt")
+    SemDedup.semdedupIndexIngest(spark, copy,
+      corpus.filter(_._1 >= 200).toDF("vec_id", "embedding"), tau = Tau).count()
+    SemDedup.semdedupIndexRebuild(spark, copy, Tau)
+    val fresh = SemdedupCentroids.read(spark, copy)
+    assert(fresh.map(_.toSeq).toSeq == centroidsOnDisk(copy))
+    assert(fresh.map(_.toSeq).toSeq != old, "the rebuild kept the template's quantizer")
+    assert(SemdedupCentroids.read(spark, template).map(_.toSeq).toSeq == old)
+    // The ingest assigns every batch row to its nearest FRESH cell.
+    val batch = (0 until 20).map(i => (9000L + i, corpus(i * 7)._2.map(_ * 1.01f)))
+    val cells = SemDedup.semdedupIndexIngest(spark, copy, batch.toDF("vec_id", "embedding"), Tau)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((id, v) <- batch)
+      assert(cells(id) == Similarity.nearestCell(fresh, v).toLong, s"vec $id")
+  }
+
   test("semdedupIndexDelete: a taken-down member stops dominating; compaction materializes the drop") {
     import spark.implicits._
     val rnd = new scala.util.Random(53)
@@ -152,7 +210,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     // Compaction: members physically dropped, ledger cleared, batches
     // merged — and a post-compaction ingest still sees the takedown.
     val memBefore = spark.read.parquet(s"$dir/members").count()
-    SemDedup.semdedupIndexCompact(spark, dir)
+    SemDedup.SemdedupIndex.compact(spark, dir)
     assert(graft.core.PersistedIndex.readManifest(dir).batches.size == 1)
     assert(graft.core.PersistedIndex.readManifest(dir).tombstones.isEmpty, "ledger not cleared")
     val mem = spark.read.parquet(s"$dir/members")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.Similarity
-import graft.ext.Ivf
+import graft.ext.{Ivf, VectorIndex}
 
 /** ANN LSH quality gate: on a corpus with PLANTED near-duplicate vectors
   * the banded multi-probe pipeline must recover (nearly) all of them —
@@ -342,12 +342,12 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val df = corpus.toDF("vec_id", "embedding")
     val dir = graft.core.TempDirs.create("graft_ivfpq_range")
     Ivf.writeIvfIndex(spark, dir, df)
-    val cb = Ivf.readIvfCodebook(spark, dir)
+    val cb = VectorIndex.Codebooks.read(spark, dir)
     val lookup = corpus.toMap
     // Empirical margin audit: the codes-only pre-filter at tau - margin
     // keeps every true match iff per-pair |ADC - exact| < margin. Audit
     // the WHOLE corpus against 5 anchors.
-    val cents = Ivf.readIvfCentroids(spark, dir)
+    val cents = VectorIndex.IvfCentroids.read(spark, dir)
     val rows = spark.read.parquet(s"$dir/postings")
       .select(col("vec_id"), col("embedding"), col("code"),
         col("cell_id").cast("int")).collect()
@@ -360,7 +360,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       rows.foreach { case (_, emb, code, cell) =>
         val exact = cos(a, emb)
         val err = math.abs(
-          Ivf.adcApproxResidual(cb, cents, cell, a, code) - exact)
+          SimilaritySpec.adcApproxResidual(cb, cents, cell, a, code) - exact)
         if (err > maxErr) maxErr = err
         if (exact >= 0.25 && err > maxErrQuarter) maxErrQuarter = err
       }
@@ -529,7 +529,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         ivf.append(s, dir, rows, key)
       def compact(s: SparkSession, dir: String) = ivf.compact(s, dir)
       def rebuild(dir: String, corpus: DataFrame) = ivf.rebuild(dir, corpus)
-      override def copied(scratch: String, template: String) = ivf.copied(scratch, template)
     }
     val lookup = corpus.toMap
     val got = Scenario(family, "unused", Seq(Stream(r => r.slice(r.cut))), (r, _) =>
@@ -538,6 +537,38 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .collect().map(_.getLong(0)).toSeq
     assert(got.head == 1000L, s"streamed row not at rank 1: $got")
     assert(got.take(3).contains(0L), s"original of the planted copy missing: $got")
+  }
+
+  test("a rebuilt scratch copy probes with its fresh quantizer, not the template's") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import VectorIndex.IvfCentroids
+    val df = corpus.toDF("vec_id", "embedding")
+    val template = graft.core.TempDirs.create("graft_ivf_qstore")
+    Ivf.writeIvfIndex(spark, template, df.filter(col("vec_id") < 300))
+    val old = IvfCentroids.read(spark, template)
+    val copy = graft.core.Warehouse.scratchFromSeed(template, "graft_ivf_qstore_copy")
+    // Before the rebuild the copy shares the template's cached quantizer.
+    assert(IvfCentroids.read(spark, copy) eq old)
+    Ivf.ivfIndexAppend(spark, copy, df.filter(col("vec_id") >= 300))
+    Ivf.ivfIndexRebuild(spark, copy)
+    def onDisk(table: String, order: String) =
+      spark.read.parquet(new java.io.File(copy, table).getPath).orderBy(order).collect()
+    val fresh = IvfCentroids.read(spark, copy)
+    assert(fresh.map(_.toSeq).toSeq ==
+      onDisk("centroids", "cell_id").map(_.getSeq[Float](1)).toSeq)
+    assert(fresh.length != old.length || fresh.map(_.toSeq).toSeq != old.map(_.toSeq).toSeq,
+      "the rebuild kept the template's quantizer")
+    assert(VectorIndex.Codebooks.read(spark, copy).cents.flatten.map(_.toSeq).toSeq ==
+      onDisk("codebooks", "sub").sortBy(r => (r.getInt(0), r.getInt(1)))
+        .map(_.getSeq[Float](2)).toSeq)
+    assert(IvfCentroids.read(spark, template) eq old)
+    // The probe chooses its cells from the FRESH quantizer.
+    val q = corpus.toMap.apply(1000L)
+    val probed = Similarity.chooseCells(fresh, q, 4).toSet
+    val got = Ivf.ivfQuery(Ivf.Stored(spark, copy), Ivf.Anchor(q), Ivf.TopK(10), nprobe = 4)
+      .collect().map(_.getInt(1))
+    assert(got.nonEmpty && got.forall(probed), s"cells ${got.toSeq} outside $probed")
   }
 
   test("ivfIndexCompact merges batches probe-identically, crash-safely, and GCs old dirs") {
@@ -802,7 +833,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val dir = graft.core.TempDirs.create("graft_ivf_append")
     Ivf.writeIvfIndex(spark, dir, a)
     Ivf.ivfIndexAppend(spark, dir, batch)
-    val cents = Ivf.readIvfCentroids(spark, dir)
+    val cents = VectorIndex.IvfCentroids.read(spark, dir)
     val full = a.unionByName(batch)
     val lookup = corpus.toMap
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -938,7 +969,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val found = (0 until NPlanted).count { i =>
       val q = lookup(1000L + i)
       val top = codes.filter(_._1 != 1000L + i)
-        .map { case (id, c) => (id, Ivf.adcApproxResidual(cb, cents, cellOf(id), q, c)) }
+        .map { case (id, c) => (id, SimilaritySpec.adcApproxResidual(cb, cents, cellOf(id), q, c)) }
         .sortBy { case (id, s) => (-s, id) }.take(3).map(_._1)
       top.contains(i.toLong)
     }
@@ -1203,4 +1234,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(writeAndCount(3) == 3)
     assert(writeAndCount(7) == 7)
   }
+}
+
+object SimilaritySpec {
+  import graft.ext.Ivf.{adcSum, adcTable, centDots, PqCodebook}
+
+  /** Residual-ADC approximate cosine of one coded posting — the spec's
+    * unit handle on IVFADC quantization error.
+    */
+  def adcApproxResidual(cb: PqCodebook, cents: Array[Array[Float]],
+      cell: Int, query: Array[Float], code: Array[Byte]): Double =
+    adcSum(adcTable(cb, query), centDots(cents, Seq(cell), query)(cell), code)
 }
