@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{QueryDef, QueryModule, Tables, Versions}
 
 /** The reference's CDC spine, Spark-first.
   *
@@ -252,73 +252,29 @@ object Cdc extends QueryModule {
   }
 
   /** Multi-version snapshot lineage + time travel — the history the
-    * reference's INSERT OVERWRITE snapshot (README.md:222) throws away,
-    * kept the lakehouse way: each snapshot version commits as an
-    * immutable `version=N` directory under an atomically-replaced
-    * versions manifest (staged-rename write, manifest LAST — the same
-    * crash-safe commit protocol as the ANN/minhash index batches, so a
-    * crashed writer's half-written version is invisible to readers and
-    * "AS OF v" resolves only committed versions). Three latest-state
-    * snapshots commit at growing ts cutoffs; the entry then time-travels
-    * — reads AS OF v2 and AS OF v3 through the manifest — and emits the
-    * per-entity CHANGES between them (first-appearing vs updated
-    * entities with both versions' state): the audit a reproducibility
-    * check ("what did training snapshot v2 contain, and what changed
-    * since?") actually runs. At 100 TB each version dir is partitioned/
+    * reference's INSERT OVERWRITE snapshot (README.md:222) throws away:
+    * three latest-state snapshots at growing ts cutoffs commit as
+    * core.Versions 1-3 (a crashed writer's version is invisible), then
+    * the entry reads AS OF v2 and v3 and emits the per-entity CHANGES
+    * between them (added vs updated entities with both versions' state):
+    * the audit a reproducibility check ("what did training snapshot v2
+    * contain, and what changed since?") runs. At 100 TB each version is
     * bucketed on the merge key and the diff is a co-partitioned join;
-    * storage dedup across versions (shared unchanged files) is the
-    * format-level concern the manifest pointer design leaves open.
+    * sharing unchanged files across versions is left to the format.
     */
   private val ttCut1 = "2024-01-11 00:00:00"
-
-  private[graft] def writeVersionsManifest(dir: String, versions: Seq[Int]): Unit = {
-    val tmp = new java.io.File(dir, ".manifest.tmp").toPath
-    java.nio.file.Files.write(tmp,
-      s"""{"versions":[${versions.mkString(",")}]}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, new java.io.File(dir, "manifest.json").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  private[graft] def committedVersions(dir: String): Seq[Int] = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "manifest.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    "\\[([0-9,]*)\\]".r.findFirstMatchIn(s).map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').map(_.toInt).toSeq).getOrElse(Seq.empty)
-  }
-
-  /** Manifest-gated as-of read: only committed versions resolve. */
-  private[graft] def readAsOf(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    require(committedVersions(dir).contains(version),
-      s"time travel to uncommitted version $version of $dir")
-    spark.read.parquet(new java.io.File(dir, s"version=$version").getPath)
-  }
-
-  /** Commit one snapshot version: staged write, atomic rename into
-    * `version=N`, manifest replaced LAST — the single commit point.
-    */
-  private[graft] def commitVersion(dir: String, version: Int, df: DataFrame): Unit = {
-    val staging = new java.io.File(dir, s".version_$version")
-    df.write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.move(staging.toPath,
-      new java.io.File(dir, s"version=$version").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeVersionsManifest(dir, 1 to version)
-  }
 
   def timeTravelDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.core.TempDirs.create("graft_time_travel")
     val ev = Tables(spark, sfDir, "events")
     Seq(Some(ttCut1), Some(cutoff), None).zipWithIndex.foreach { case (cut, i) =>
       val slice = cut.fold(ev)(c => ev.filter(col("ts") < lit(c).cast(TimestampType)))
-      commitVersion(dir, i + 1,
+      Versions.commit(dir, i + 1,
         latestState(slice, "user_id", "ts", "event_id")
           .select(col("user_id") +: mergeCols.map(col): _*))
     }
-    val v2 = readAsOf(spark, dir, 2).alias("old")
-    val v3 = readAsOf(spark, dir, 3).alias("new")
+    val v2 = Versions.read(spark, dir, 2).alias("old")
+    val v3 = Versions.read(spark, dir, 3).alias("new")
     v3.join(v2, col("new.user_id") === col("old.user_id"), "left")
       .filter(col("old.user_id").isNull || col("old.event_id") =!= col("new.event_id"))
       .select(col("new.user_id").as("user_id"),

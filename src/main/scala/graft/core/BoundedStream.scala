@@ -70,37 +70,23 @@ object BoundedStream {
       f: (DataFrame, Long) => Unit): Unit =
     run(df, checkpoint, width)(_.outputMode(mode).foreachBatch(f))
 
-  private val Version = "v(\\d+)".r
-
-  /** The newest complete snapshot under `root` older than batch `below`. */
-  private def newest(root: String, below: Long): Option[Long] =
-    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .collect { case Version(k) if k.toLong < below => k.toLong }
-      .maxOption
-
-  /** Fold each micro-batch into a versioned snapshot under `root`;
-    * returns the last one. Batch N writes `v<N>` = `merge(v<k>,
-    * delta(batch))` for the newest complete `v<k>` with k < N (just the
-    * delta if none). State lives on disk, so a restart from `checkpoint`
-    * resumes, and a replayed batch rebuilds `v<N>` from the same `v<k>`
-    * without double counting. `v<N>` is complete once renamed from its
-    * `.v<N>` staging dir.
+  /** Fold each micro-batch into a [[Versions]] snapshot under `root`;
+    * returns the last one. Batch N commits version N = `merge(v<k>,
+    * delta(batch))` for the newest committed k < N (just the delta if
+    * none). State lives on disk, so a restart from `checkpoint` resumes,
+    * and a replayed batch rebuilds version N from the same k without
+    * double counting.
     */
   def foldSnapshots(df: DataFrame, root: String = TempDirs.create("graft_fold"),
       checkpoint: String = freshCheckpoint())(
       delta: DataFrame => DataFrame)(merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    def path(k: Long): String = new java.io.File(root, s"v$k").getPath
     eachBatch(df, checkpoint) { (batch, n) =>
       val d = delta(batch)
-      val next = newest(root, n).fold(d)(k => merge(batch.sparkSession.read.parquet(path(k)), d))
-      val staging = new java.io.File(root, s".v$n")
-      next.write.mode("overwrite").parquet(staging.getPath)
-      Warehouse.deleteRecursively(new java.io.File(path(n)))
-      java.nio.file.Files.move(staging.toPath, java.nio.file.Paths.get(path(n)),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Versions.commit(root, n, Versions.newest(root, n)
+        .fold(d)(k => merge(Versions.read(batch.sparkSession, root, k), d)))
     }
-    df.sparkSession.read.parquet(
-      path(newest(root, Long.MaxValue).getOrElse(sys.error("no batch ran"))))
+    Versions.read(df.sparkSession, root,
+      Versions.newest(root).getOrElse(sys.error("no batch ran")))
   }
 
   /** Stream `df` into a persisted index: `append(batch, ingestKey)` runs

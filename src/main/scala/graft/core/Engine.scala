@@ -129,14 +129,14 @@ object Tables {
   /** Parquet row groups backing a fixture table — the unit the parquet
     * reader cannot split (a row group is assigned whole to the split
     * holding its midpoint). Footer metadata only, no data scan;
-    * memoized per (dir, table) since the fixture files are immutable
-    * within a session (same contract as the resolved-table catalog).
+    * memoized per (dir, table, [[fixtureTag]]) like the resolved-table
+    * catalog, so a table rewritten in place is counted afresh.
     */
   private val rowGroupMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), Int]
+    new scala.collection.concurrent.TrieMap[(String, String, String), Int]
 
   private[graft] def rowGroupCount(spark: SparkSession, sfDir: String, name: String): Int =
-    rowGroupMemo.getOrElseUpdate((sfDir, name), {
+    rowGroupMemo.getOrElseUpdate((sfDir, name, fixtureTag("", sfDir, name)), {
       val f = new java.io.File(sfDir, s"$name.parquet")
       val files =
         if (f.isDirectory)

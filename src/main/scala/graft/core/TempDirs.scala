@@ -44,24 +44,26 @@ object TempDirs {
       val r = "/dev/shm/graft_bench"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(r))
       // A crashed run's scratch would pin RAM until reboot (the exit
-      // hook never fired); sweep entries idle for >2 h. Idle = the
-      // NEWEST mtime anywhere in the entry's tree — a directory's own
-      // mtime freezes once writes move into nested subdirs (POSIX), so
-      // the top-level timestamp alone would misread a live long run as
-      // idle and delete its state stores mid-sweep. The recursive walk
-      // is cheap: this is a RAM fs and crashed trees are sweep-sized.
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      def newestMtime(f: java.io.File): Long = {
-        val own = f.lastModified()
-        val kids = Option(f.listFiles()).getOrElse(Array.empty)
-        if (kids.isEmpty) own else math.max(own, kids.map(newestMtime).max)
-      }
-      Option(new java.io.File(r).listFiles()).getOrElse(Array.empty)
-        .filter(newestMtime(_) < cutoff)
-        .foreach(Warehouse.deleteRecursively)
+      // hook never fired); sweep entries idle for >2 h.
+      sweepIdle(new java.io.File(r), System.currentTimeMillis() - 2L * 3600 * 1000)(_ => true)
       System.setProperty("graft.tmp.root", r)
       Some(r)
     } else None
+  }
+
+  /** Delete each entry of `base` that `sweepable` admits and that is idle
+    * since before `cutoff`. Idle = the NEWEST mtime anywhere in the
+    * entry's tree — a directory's own mtime freezes once writes move into
+    * nested subdirs (POSIX), so the top-level timestamp alone would
+    * misread a live long run as idle and delete its files mid-sweep.
+    */
+  private[graft] def sweepIdle(base: java.io.File, cutoff: Long)(
+      sweepable: java.io.File => Boolean): Unit = {
+    def newestMtime(f: java.io.File): Long =
+      (f.lastModified() +: Option(f.listFiles()).toSeq.flatten.map(newestMtime)).max
+    Option(base.listFiles()).toSeq.flatten
+      .filter(f => sweepable(f) && newestMtime(f) < cutoff)
+      .foreach(Warehouse.deleteRecursively)
   }
 
   /** Create a temp directory registered for recursive delete on JVM exit. */

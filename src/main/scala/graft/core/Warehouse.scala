@@ -22,11 +22,18 @@ object Warehouse {
       if (wh.getScheme == null) wh.toString else wh.getPath, table))
   }
 
-  /** Clone an immutable marker-gated seed template into a fresh scratch
-    * dir for one run's mutations, dropping the `_SEEDED` marker so the
-    * copy is never mistaken for a template. No Spark jobs. Its one
-    * caller is [[IndexLifecycle.Scenario]], which copies a template per
-    * call for the lifecycle entries of every index family.
+  /** [[cloneTemplate]] into a fresh scratch dir for one run's mutations,
+    * with no Spark job; [[IndexLifecycle.Scenario]] makes one per call.
+    */
+  def scratchFromSeed(seedDir: String, prefix: String): String = {
+    val dir = TempDirs.create(prefix)
+    cloneTemplate(seedDir, dir)
+    dir
+  }
+
+  /** Clone the template `src` into `dst` and drop the `_SEEDED` marker,
+    * so the clone is never mistaken for a template: the one clone of
+    * both scratch copies and derived templates.
     *
     * HARDLINKS, not byte copies (r13 bench reclaim): every index
     * mutation (core.PersistedIndex) writes NEW files — appends and
@@ -39,15 +46,14 @@ object Warehouse {
     * template cannot be corrupted through a link. Falls back to a byte
     * copy per file if the filesystem refuses links.
     */
-  def scratchFromSeed(seedDir: String, prefix: String): String = {
-    val dir = TempDirs.create(prefix)
-    linkRecursively(new java.io.File(seedDir), new java.io.File(dir))
-    new java.io.File(dir, "_SEEDED").delete()
-    dir
+  private def cloneTemplate(src: String, dst: String): Unit = {
+    linkRecursively(new java.io.File(src), new java.io.File(dst))
+    new java.io.File(dst, "_SEEDED").delete()
+    ()
   }
 
   /** Recursive hardlink tree (copy fallback per file). */
-  def linkRecursively(src: java.io.File, dst: java.io.File): Unit = {
+  private def linkRecursively(src: java.io.File, dst: java.io.File): Unit = {
     if (src.isDirectory) {
       dst.mkdirs()
       val children = src.listFiles()
@@ -66,23 +72,16 @@ object Warehouse {
     }
   }
 
-  /** Marker-gated DERIVED seed: a base seed template plus a fixture-
-    * deterministic mutation sequence, applied ONCE and cached as a
-    * sibling template (`<base>-<suffix>`) — the same disclosed untimed
-    * seed economics as the base. Its one caller is
-    * [[IndexLifecycle.Scenario]], whose baked steps land here: an entry
-    * whose operator under test comes AFTER a deterministic setup
-    * mutation (e.g. "append then COMPACT", "poison+takedown then
-    * REBUILD") copies this derived template per run, so the timed region
-    * is the operator itself, not the setup replayed identically every
-    * run. The base tag already
-    * carries fixture mtime+length, so staleness invalidates derived
-    * templates exactly as it invalidates bases.
+  /** Marker-gated DERIVED seed: the base template `baseSeedDir`, cloned
+    * ([[cloneTemplate]]) into the sibling `<base>-<suffix>` and mutated
+    * ONCE by `build` — the untimed seed economics of the base. Its one
+    * caller is [[IndexLifecycle.Scenario]], whose baked steps (e.g.
+    * "append then COMPACT") land here, so a timed call runs its operator,
+    * not the setup. The base's fixture tag invalidates it with the base.
     */
   def ensureDerivedSeed(baseSeedDir: String, suffix: String)(build: String => Unit): String =
     ensureSeed(new java.io.File(baseSeedDir + "-" + suffix)) { dir =>
-      copyRecursively(new java.io.File(baseSeedDir), new java.io.File(dir))
-      new java.io.File(dir, "_SEEDED").delete()
+      cloneTemplate(baseSeedDir, dir)
       build(dir)
     }
 
@@ -129,22 +128,5 @@ object Warehouse {
     }
     f.delete()
     ()
-  }
-
-  /** Recursive file-tree copy (used to clone seeded index layouts into
-    * scratch dirs so experiments never mutate a marker-gated canonical
-    * directory).
-    */
-  def copyRecursively(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      val children = src.listFiles()
-      if (children != null)
-        children.foreach(c => copyRecursively(c, new java.io.File(dst, c.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
   }
 }

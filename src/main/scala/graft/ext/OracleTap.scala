@@ -15,27 +15,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * upgrades those entries from rows-only to hash-matched on everything
   * but the hash kernel itself (whose bit-identity has its own spec).
   *
-  * The path is FIXED (oracleSql is a static map with no sfDir parameter):
-  * each query run overwrites the tap, and the driver runs the oracle
-  * immediately after Verify's dump, so the tap always reflects the
+  * The path is fixed per JVM (oracleSql is a static map with no sfDir
+  * parameter): each query run overwrites the tap, and the driver runs the
+  * oracle immediately after Verify's dump, so the tap always reflects the
   * verified run. Tap writes are tiny — candidates are rep-level
   * (distinct-content) pairs, signatures one row per rep.
   */
 object OracleTap {
 
-  val Root = "/tmp/graft_oracle_aux"
+  private[graft] val Base = "/tmp/graft_oracle_aux"
+
+  /** This JVM's tap dir, `Base/<pid>`: two engine JVMs on one host (two
+    * spec runs, a spec beside a Verify) never share a tap.
+    */
+  val Root: String = s"$Base/${ProcessHandle.current().pid()}"
+
+  private val SweepAgeMs = 24L * 60 * 60 * 1000
+
+  /** Delete every `<pid>` dir under `base` whose process is dead and that
+    * is idle for [[SweepAgeMs]], so a finished Verify's taps stay until
+    * `check.py` reads them. A JVM sweeps on its first tap write.
+    */
+  private[graft] def sweep(base: java.io.File, nowMs: Long): Unit =
+    graft.core.TempDirs.sweepIdle(base, nowMs - SweepAgeMs)(_.getName.toLongOption
+      .exists(pid => pid > 0 && !ProcessHandle.of(pid).filter(_.isAlive).isPresent))
+
+  private lazy val swept: Unit = sweep(new java.io.File(Base), System.currentTimeMillis())
 
   /** `-Dgraft.tap.disabled=true` (set ONLY by Bench, disclosed there and
-    * in SURVEY round-11 continuation 4): taps are verification plumbing — parquet artifacts
-    * that exist solely so the driver's DuckDB oracle can re-derive a
-    * leg it cannot recompute. A production run of the operator writes
-    * no tap, so the benchmark measures the production form; Verify
-    * (the correctness gate) always runs with taps ON. The disabled
-    * path substitutes a lazy localCheckpoint, which preserves the tap's
-    * two PLAN-level effects — the tapped intermediate is materialized
-    * once (consumers that iterate over it, e.g. the cluster-graph
-    * propagation, must not recompute it) and its lineage is truncated —
-    * while skipping only the parquet round-trip.
+    * in SURVEY round-11 continuation 4): a production run writes no tap,
+    * so the benchmark measures that form; Verify always runs with taps
+    * ON. The disabled path substitutes a lazy localCheckpoint, which keeps
+    * the tap's two PLAN-level effects — the tapped intermediate is
+    * materialized once (the cluster-graph propagation iterates over it)
+    * and its lineage is truncated — and skips only the parquet round-trip.
     */
   private def disabled: Boolean =
     sys.props.get("graft.tap.disabled").contains("true")
@@ -49,6 +62,7 @@ object OracleTap {
   def apply(spark: SparkSession, name: String, df: DataFrame,
       single: Boolean = true): DataFrame = {
     if (disabled) return df.localCheckpoint(false)
+    swept
     val path = s"$Root/$name"
     (if (single) df.coalesce(1) else df).write.mode("overwrite").parquet(path)
     spark.read.parquet(path)

@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * only in core.BoundedStream, the nearest-centroid argmax only in
   * Similarity.argBest, the 64-bit Hamming band slice and the
   * document-postings index stores only in ext.NearDup, the quantizer
-  * tables and the cell-partitioned layouts only in ext.VectorIndex, and
-  * the lifecycle templates and scratch copies only in core.IndexLifecycle,
-  * so no module can grow another hand-rolled copy of any of them.
+  * tables and the cell-partitioned layouts only in ext.VectorIndex, the
+  * lifecycle templates and scratch copies only in core.IndexLifecycle,
+  * atomic renames only in graft/core and snapshot version dirs only in
+  * core.Versions, so no module can grow another hand-rolled copy of any
+  * of them.
   */
 class IndexLifecycleGuardSpec extends AnyFunSuite {
 
@@ -93,6 +95,28 @@ class IndexLifecycleGuardSpec extends AnyFunSuite {
     for (f <- sources("src/main/scala") if f != Store; (line, i) <- read(f).linesIterator.zipWithIndex)
       assert(QuantizerOrCellLayout.findFirstIn(line).isEmpty,
         s"${f.getName}:${i + 1} reads or writes an index's quantizer or cell layout itself: ${line.trim}")
+  }
+
+  private val Core = new java.io.File("src/main/scala/graft/core")
+
+  private val VersionStore = new java.io.File("src/main/scala/graft/core/Versions.scala")
+
+  /** A snapshot version dir: `File(root, s"v$n")` or its staging
+    * `s".v$n"`, a path ending in `/v$n`, the `"v(\\d+)"` parse, or a
+    * `version=N` / `.version_N` name.
+    */
+  private val VersionLayout = """File\([^)]*s"\.?v\$|/\.?v\$|"\.?v\(\\\\d|"\.?version[=_]""".r
+
+  test("atomic renames stay in graft/core, and only core.Versions names a snapshot version dir") {
+    val store = read(VersionStore)
+    assert(VersionLayout.findAllIn(store).size >= 3, "Versions no longer names the version layout")
+    for (f <- sources("src/main/scala"); (line, i) <- read(f).linesIterator.zipWithIndex) {
+      if (line.contains("ATOMIC_MOVE"))
+        assert(f.getParentFile == Core, s"${f.getName}:${i + 1} renames atomically outside graft/core")
+      if (f != VersionStore)
+        assert(VersionLayout.findFirstIn(line).isEmpty,
+          s"${f.getName}:${i + 1} names a snapshot version dir; commit through core.Versions: ${line.trim}")
+    }
   }
 
   private val Scenario = new java.io.File("src/main/scala/graft/core/IndexLifecycle.scala")

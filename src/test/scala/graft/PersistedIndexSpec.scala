@@ -14,6 +14,7 @@ import graft.ext.{Ivf, NearDup, SemDedup}
   * crashed. Also pins the manifest's on-disk format.
   */
 class PersistedIndexSpec extends AnyFunSuite with SparkTest {
+  import PersistedIndexSpec._
 
   private def doc(i: Int): String =
     (0 until 60).map(j => s"w${(i * 31 + j * 7) % 97}").mkString(" ")
@@ -55,7 +56,7 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
 
   private def copy(from: String, prefix: String): String = {
     val dir = TempDirs.create(prefix)
-    Warehouse.copyRecursively(new java.io.File(from), new java.io.File(dir))
+    copyRecursively(new java.io.File(from), new java.io.File(dir))
     dir
   }
 
@@ -88,7 +89,7 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
       val aside = new java.io.File(dir, ".rebuild-old.deadbeef")
       aside.mkdirs()
       (f.store.subs :+ "manifest.json").foreach(s =>
-        Warehouse.copyRecursively(new java.io.File(built, s), new java.io.File(stage, s)))
+        copyRecursively(new java.io.File(built, s), new java.io.File(stage, s)))
       f.store.subs.foreach { s =>
         move(new java.io.File(dir, s), new java.io.File(aside, s))
         move(new java.io.File(stage, s), new java.io.File(dir, s))
@@ -165,14 +166,14 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
       for (state <- states) {
         val dir = copy(pre, s"graft_pi_crash_$name")
         state match {
-          case "staged" => Warehouse.copyRecursively(published,
+          case "staged" => copyRecursively(published,
             new java.io.File(dir, s".${staging}_batch_${batch.stripPrefix("batch_id=")}"))
-          case "renamed" => Warehouse.copyRecursively(published,
+          case "renamed" => copyRecursively(published,
             new java.io.File(new java.io.File(dir, root), batch))
           case "uncollected" =>
             // Committed: the merged batch and its manifest are in, but
             // the merged-away batch and tombstone dirs were not yet GC'd.
-            Warehouse.copyRecursively(published, new java.io.File(new java.io.File(dir, root), batch))
+            copyRecursively(published, new java.io.File(new java.io.File(dir, root), batch))
             java.nio.file.Files.copy(new java.io.File(built, "manifest.json").toPath,
               new java.io.File(dir, "manifest.json").toPath,
               java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -195,6 +196,21 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
       }
     }
   }
+
+  for (name <- Seq("minhash", "phash", "semdedup", "IVF"))
+    test(s"$name: a bake on a linked template clone leaves its base template's files unchanged") {
+      val f = family(name)
+      val root = TempDirs.create(s"graft_pi_bake_$name")
+      val base = Warehouse.ensureSeed(new java.io.File(root, "seed"))(f.write(_, rows(f, 0, 48)))
+      val before = contents(new java.io.File(base))
+      val baked = Warehouse.ensureDerivedSeed(base, "baked") { d =>
+        f.append(spark, d, rows(f, 48, 64)); delete(f, d, 5L)
+        f.compact(spark, d); f.rebuild(d, corpus(f))
+      }
+      assert(contents(new java.io.File(base)) == before,
+        s"$name: the bake changed a name, size or byte of its base template")
+      assert(liveIds(f, baked) == (0L until 64L).toSet - 5L, s"$name: the bake lost ids")
+    }
 
   test("manifest format: a parent-written IVF record reads back, extra fields ride every commit") {
     val dir = TempDirs.create("graft_pi_manifest")
@@ -219,5 +235,34 @@ class PersistedIndexSpec extends AnyFunSuite with SparkTest {
     assert(new String(java.nio.file.Files.readAllBytes(
       new java.io.File(dir, "manifest.json").toPath)) ==
       """{"batches":[0,1],"tombstone_batches":[2],"ingest_keys":"k1"}""")
+  }
+}
+
+object PersistedIndexSpec {
+
+  /** Recursive byte copy: a copy that shares no file with `src`. */
+  def copyRecursively(src: java.io.File, dst: java.io.File): Unit =
+    if (src.isDirectory) {
+      dst.mkdirs()
+      Option(src.listFiles()).toSeq.flatten
+        .foreach(c => copyRecursively(c, new java.io.File(dst, c.getName)))
+    } else {
+      java.nio.file.Files.copy(src.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      ()
+    }
+
+  /** Every path under `dir`, relative, with its size and SHA-256 (a dir: -1, ""). */
+  def contents(dir: java.io.File): Map[String, (Long, String)] = {
+    def walk(f: java.io.File, rel: String): Seq[(String, (Long, String))] =
+      if (f.isDirectory)
+        (rel -> (-1L, "")) +: Option(f.listFiles()).toSeq.flatten
+          .flatMap(c => walk(c, s"$rel/${c.getName}"))
+      else {
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+        Seq(rel -> (f.length(), sha))
+      }
+    walk(dir, ".").toMap
   }
 }

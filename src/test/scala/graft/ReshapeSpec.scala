@@ -72,7 +72,7 @@ class ReshapeSpec extends AnyFunSuite with SparkTest {
   test("q_quantile_bins: rollup derives exactly from the tapped boundaries, inside the envelope") {
     val got = SparkEntry.queries("q_quantile_bins")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val bnds = spark.read.parquet("/tmp/graft_oracle_aux/quantile_bins_bnds")
+    val bnds = spark.read.parquet(s"${graft.ext.OracleTap.Root}/quantile_bins_bnds")
       .collect().head.getSeq[Double](0)
     assert(bnds.length == 9 && bnds == bnds.sorted)
     // Envelope vs the exact builtin.

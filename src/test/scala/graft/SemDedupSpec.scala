@@ -184,7 +184,7 @@ class SemDedupSpec extends AnyFunSuite with SparkTest {
     SemDedup.writeSemdedupIndex(spark, seedDir, a.toDF("vec_id", "embedding"), tau = Tau)
     def copyOf(prefix: String): String = {
       val d = graft.core.TempDirs.create(prefix)
-      graft.core.Warehouse.copyRecursively(new java.io.File(seedDir), new java.io.File(d))
+      PersistedIndexSpec.copyRecursively(new java.io.File(seedDir), new java.io.File(d))
       d
     }
     def ingest(dir: String, rows: Seq[(Long, Array[Float])]) =

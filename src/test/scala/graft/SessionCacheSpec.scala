@@ -54,13 +54,18 @@ class SessionCacheSpec extends AnyFunSuite with SparkTest {
   test("the table catalog and the edge memo re-read a lineitem rewritten in place") {
     import spark.implicits._
     val dir = graft.core.TempDirs.create("graft_memo_rewrite")
-    def lineitem(pairs: (Long, Long)*): Unit =
-      pairs.map { case (p, s) => (p, s, 1.0) }.toDF("l_partkey", "l_suppkey", "l_quantity")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    /** One file (one row group) per given pair. */
+    def lineitem(pairs: (Long, Long)*): Unit = pairs.zipWithIndex.foreach { case ((p, s), i) =>
+      Seq((p, s, 1.0)).toDF("l_partkey", "l_suppkey", "l_quantity").coalesce(1).write
+        .mode(if (i == 0) "overwrite" else "append").parquet(s"$dir/lineitem.parquet")
+    }
+    def rowGroups: Int = graft.core.Tables.rowGroupCount(spark, dir, "lineitem")
     lineitem(1L -> 1L)
     assert(graft.ops.Graph.bipartiteEdges(spark, dir).count() == 2)
+    assert(rowGroups == 1)
     lineitem(1L -> 1L, 2L -> 1L)
     assert(graft.ops.Graph.bipartiteEdges(spark, dir).count() == 4)
+    assert(rowGroups == 2, "the row-group memo kept the count of the file it replaced")
   }
 
   test("the table catalog and the BPE merge memo re-read a documents rewritten in place") {

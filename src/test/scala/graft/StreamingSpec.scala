@@ -300,7 +300,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     mv.run() // life 1: MV v0 = {click: (2, 3.0), view: (1, 5.0)}, then "dies"
     writeFile(Seq(("click", 10.0), ("buy", 7.0)), "f2")
     mv.run() // life 2: must merge ONLY f2 into the recovered v0
-    val got = spark.read.parquet(latestMv().get)
+    val got = latestMv()
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == Set(("click", 3L, 13.0), ("view", 1L, 5.0), ("buy", 1L, 7.0)),
       s"MV after restart must equal the full recompute; got $got")
@@ -325,7 +325,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     new java.io.File(lastCommit.getParentFile, s".${lastCommit.getName}.crc").delete()
     mv.run() // replays batch 1
     assert(lastCommit.exists(), "the replay did not re-commit batch 1")
-    val got = spark.read.parquet(latestMv().get)
+    val got = latestMv()
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == Set(("click", 3L, 13.0), ("view", 1L, 5.0), ("buy", 1L, 7.0)),
       s"MV after a replay must equal the full recompute; got $got")
@@ -346,12 +346,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     def writeFile(rows: Seq[(String, Double)], name: String): Unit =
       rows.toDF("event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$in/$name")
-    def latestMv(): Option[String] = {
-      val vs = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      if (vs.isEmpty) None
-      else Some(vs.maxBy(_.getName.drop(1).toLong).getAbsolutePath)
-    }
+    def latestMv(): org.apache.spark.sql.DataFrame =
+      graft.core.Versions.read(spark, root, graft.core.Versions.newest(root).get)
     def run(): Unit =
       graft.core.BoundedStream.foldSnapshots(
           spark.readStream.schema(schema).parquet(s"$in/*"), root, ckpt)(
